@@ -1,14 +1,14 @@
 package graft.ext
 
-import graft.ops.Stage
+import graft.ops.{Family, Stage}
 import org.apache.spark.sql.SparkSession
 
 /** Cross-family CAMPAIGN snapshots: one name pinning several persisted
   * indexes at ONE logical instant.
   *
-  * The per-family pins ([[Search.snapshotTextIndex]],
-  * [[Dedup.snapshotMinhashManifest]], [[Corpus.snapshotLm]],
-  * [[Similarity.snapshotIvfIndex]]) are each internally consistent —
+  * The per-family pins ([[graft.ops.Family.snapshot]] over
+  * [[Search.TextIndex]], [[Dedup.MinhashManifest]], [[Corpus.Lm]],
+  * [[Similarity.IvfIndex]], ...) are each internally consistent —
   * every component of one family moves together under its root lease.
   * But a production pipeline serves SEVERAL families built from the same
   * corpus (the text index it retrieves with, the dedup manifest it
@@ -48,23 +48,9 @@ import org.apache.spark.sql.SparkSession
   */
 object Campaign {
 
-  /** A campaign member: one persisted index root, tagged with its
-    * family so the campaign knows which components to pin. */
-  sealed trait Member { def path: String }
-  /** A [[Search.saveTextIndex]] root (postings, doclens, stats). */
-  final case class TextIndex(path: String) extends Member
-  /** A [[Dedup.saveMinhashManifest]] root (docs, bands). */
-  final case class MinhashManifest(path: String) extends Member
-  /** A [[Corpus.saveLm]] root (bigrams, vocab). */
-  final case class Lm(path: String) extends Member
-  /** A [[Similarity.saveIvfIndex]] root (lists). */
-  final case class IvfIndex(path: String) extends Member
-  /** A [[Similarity.savePqIndex]] root (codes). */
-  final case class PqIndex(path: String) extends Member
-  /** A [[Similarity.saveBinaryIndex]] root (sig). */
-  final case class BinaryIndex(path: String) extends Member
-  /** A [[Dedup.saveWinnowManifest]] root (fps). */
-  final case class WinnowManifest(path: String) extends Member
+  /** A campaign member: one persisted index root and the family whose
+    * components live under it. */
+  final case class Member(family: Family, path: String)
 
   /** Pin every member under `name` at one logical instant — all member
     * root leases held (in sorted-path order) for the duration of all
@@ -93,19 +79,20 @@ object Campaign {
         // the capture→overwrite→restore window.
         val prior: Map[(String, String), Option[String]] =
           ordered.flatMap { m =>
-            val (_, comps) = componentsOf(spark, m)
-            comps.map(c => (m.path, c) ->
+            m.family.components(spark, m.path).map(c => (m.path, c) ->
               Stage.rawSnapshotPin(spark, s"${m.path}/$c", name))
           }.toMap
-        try ordered.foreach(pin(spark, name, _))
+        // each member's own family pin runs under the already-held root
+        // lease (reentrancy passes it through), so the family-level
+        // consistency guarantees apply inside the campaign's instant
+        try ordered.foreach(m => m.family.snapshot(spark, m.path, name))
         catch {
           case scala.util.control.NonFatal(e) =>
             // never leave a partial campaign behind the name: restore
             // each component's prior pin where one existed, drop where
             // none did (best-effort), then surface the original failure
             ordered.foreach { m =>
-              val (_, comps) = componentsOf(spark, m)
-              comps.foreach { c =>
+              m.family.components(spark, m.path).foreach { c =>
                 try prior.getOrElse((m.path, c), None) match {
                   case Some(bytes) => Stage.restoreRawSnapshotPin(
                     spark, s"${m.path}/$c", name, bytes)
@@ -142,53 +129,28 @@ object Campaign {
     val ordered = members.sortBy(_.path).toList
     def nest(rest: List[Member]): Unit = rest match {
       case Nil =>
-        val missing = ordered.filterNot(hasPin(spark, name, _))
+        val missing = ordered.filter(m =>
+          m.family.unpinned(spark, m.path, name).nonEmpty)
         require(missing.isEmpty,
           s"campaign '$name' does not pin member(s) " +
             s"${missing.map(_.path).mkString(", ")} — nothing restored")
-        ordered.foreach(restoreMember(spark, name, _))
+        ordered.foreach(m => m.family.restore(spark, m.path, name))
       case m :: tail =>
         Stage.withWriterLease(spark, m.path)(nest(tail))
     }
     nest(ordered)
   }
 
-  /** Does every component of `m` carry the pin `name`? */
-  private def hasPin(spark: SparkSession, name: String, m: Member): Boolean = {
-    val (_, comps) = componentsOf(spark, m)
-    comps.forall(c =>
-      Stage.resolveSnapshot(spark, s"${m.path}/$c", name).isDefined)
-  }
-
-  private def restoreMember(spark: SparkSession, name: String,
-                            m: Member): Unit = m match {
-    case TextIndex(p)       => Search.restoreTextIndex(spark, p, name)
-    case MinhashManifest(p) => Dedup.restoreMinhashManifest(spark, p, name)
-    case Lm(p)              => Corpus.restoreLm(spark, p, name)
-    case IvfIndex(p)        => Similarity.restoreIvfIndex(spark, p, name)
-    case PqIndex(p)         => Similarity.restorePqIndex(spark, p, name)
-    case BinaryIndex(p)     => Similarity.restoreBinaryIndex(spark, p, name)
-    case WinnowManifest(p)  => Dedup.restoreWinnowManifest(spark, p, name)
-  }
-
   /** Release every member's pin under `name`. The pinned versions become
     * ordinary GC candidates at each family's next publish — or
     * immediately via [[vacuum]]. Idempotent (unknown names no-op). */
   def drop(spark: SparkSession, name: String, members: Seq[Member]): Unit =
-    members.foreach(dropMember(spark, name, _))
+    members.foreach(m => m.family.dropSnapshot(spark, m.path, name))
 
   /** Reclaim every member's stale versions now — the storage release
     * after [[drop]], without waiting for each family's next publish. */
   def vacuum(spark: SparkSession, members: Seq[Member]): Unit =
-    members.foreach {
-      case TextIndex(p)       => Search.vacuumTextIndex(spark, p)
-      case MinhashManifest(p) => Dedup.vacuumMinhashManifest(spark, p)
-      case Lm(p)              => Corpus.vacuumLm(spark, p)
-      case IvfIndex(p)        => Similarity.vacuumIvfIndex(spark, p)
-      case PqIndex(p)         => Similarity.vacuumPqIndex(spark, p)
-      case BinaryIndex(p)     => Similarity.vacuumBinaryIndex(spark, p)
-      case WinnowManifest(p)  => Dedup.vacuumWinnowManifest(spark, p)
-    }
+    members.foreach(m => m.family.vacuum(spark, m.path))
 
   /** One operational dashboard for the whole campaign: every member's
     * [[Stage.healthReport]] rows (live version, file/byte counts,
@@ -203,49 +165,9 @@ object Campaign {
     require(members.nonEmpty, "a campaign needs at least one member")
     import org.apache.spark.sql.functions.{col, lit}
     members.map { m =>
-      val (family, comps) = componentsOf(spark, m)
-      val r = Stage.healthReport(spark, m.path, comps)
-      r.select(lit(family).as("family") +: lit(m.path).as("root") +:
+      val r = m.family.health(spark, m.path)
+      r.select(lit(m.family.name).as("family") +: lit(m.path).as("root") +:
         r.columns.map(col): _*)
     }.reduce(_ unionByName _)
-  }
-
-  private def componentsOf(spark: SparkSession,
-                           m: Member): (String, Seq[String]) = m match {
-    // the text set is DYNAMIC: +positions when the phrase component
-    // exists ([[Search.textComponents]] — pins and health must cover it)
-    case TextIndex(p)       => ("text_index", Search.textComponents(spark, p))
-    case MinhashManifest(_) => ("minhash_manifest", Seq("docs", "bands"))
-    case Lm(_)              => ("lm", Seq("bigrams", "vocab"))
-    case IvfIndex(_)        => ("ivf_index", Seq("lists"))
-    case PqIndex(_)         => ("pq_index", Seq("codes"))
-    case BinaryIndex(_)     => ("binary_index", Seq("sig"))
-    case WinnowManifest(_)  => ("winnow_manifest", Seq("fps"))
-  }
-
-  /** The member's own family pin — runs under the already-held root
-    * lease (the family surfaces lease the same root; reentrancy passes
-    * them through), so the family-level consistency guarantees apply
-    * unchanged inside the campaign's wider instant. */
-  private def pin(spark: SparkSession, name: String, m: Member): Unit =
-    m match {
-      case TextIndex(p)       => Search.snapshotTextIndex(spark, p, name)
-      case MinhashManifest(p) => Dedup.snapshotMinhashManifest(spark, p, name)
-      case Lm(p)              => Corpus.snapshotLm(spark, p, name)
-      case IvfIndex(p)        => Similarity.snapshotIvfIndex(spark, p, name)
-      case PqIndex(p)         => Similarity.snapshotPqIndex(spark, p, name)
-      case BinaryIndex(p)     => Similarity.snapshotBinaryIndex(spark, p, name)
-      case WinnowManifest(p)  => Dedup.snapshotWinnowManifest(spark, p, name)
-    }
-
-  private def dropMember(spark: SparkSession, name: String,
-                         m: Member): Unit = m match {
-    case TextIndex(p)       => Search.dropTextIndexSnapshot(spark, p, name)
-    case MinhashManifest(p) => Dedup.dropMinhashManifestSnapshot(spark, p, name)
-    case Lm(p)              => Corpus.dropLmSnapshot(spark, p, name)
-    case IvfIndex(p)        => Similarity.dropIvfIndexSnapshot(spark, p, name)
-    case PqIndex(p)         => Similarity.dropPqIndexSnapshot(spark, p, name)
-    case BinaryIndex(p)     => Similarity.dropBinaryIndexSnapshot(spark, p, name)
-    case WinnowManifest(p)  => Dedup.dropWinnowManifestSnapshot(spark, p, name)
   }
 }

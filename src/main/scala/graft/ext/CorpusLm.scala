@@ -488,7 +488,7 @@ trait CorpusLm extends CorpusTokenizers {
     // BETWEEN the two flips would pair the new corpus's bigrams with
     // the old corpus's vocab — V wrong for every unseen-bigram score
     graft.ops.Stage.withWriterLease(spark, path) {
-      // BORN VERSIONED (like the IVF lists): [[snapshotLm]] pins need a
+      // BORN VERSIONED (like the IVF lists): [[Lm]] pins need a
       // version from the first build. publishREBUILD, not publishRewrite:
       // rebuilding over an existing model must give the OLD corpus's
       // counts no previous-version grace — the rebuild boundary resets
@@ -524,7 +524,7 @@ trait CorpusLm extends CorpusTokenizers {
     // the pending op ids loudly so the operator retries (same id) first;
     // metadata-only (one ledger + two component listings).
     val pending = graft.ops.Stage.pendingOps(spark, path,
-      Seq("bigrams", "vocab"))
+      Lm.components(spark, path))
     if (pending.nonEmpty)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
         s"LM at $path has UNCOMMITTED maintenance ops " +
@@ -584,7 +584,7 @@ trait CorpusLm extends CorpusTokenizers {
                             idCol: String, batchId: Long): Unit = {
     val (cbD, vD) = lmDeltas(batch, textCol, idCol, sign = 1)
     graft.ops.Stage.appendExactlyOnce(batch.sparkSession, path, batchId,
-      Seq("bigrams", "vocab"))(writeLmDeltas(cbD, vD))
+      Lm.components(batch.sparkSession, path))(writeLmDeltas(cbD, vD))
   }
 
   /** Delete documents from a [[saveLm]] model — exact subtraction, now as
@@ -617,7 +617,7 @@ trait CorpusLm extends CorpusTokenizers {
                             path: String, opId: String,
                             cbD: DataFrame, vD: DataFrame): Unit =
     graft.ops.Stage.publishOnce(spark, path, opId,
-      Seq("bigrams", "vocab"))(writeLmDeltas(cbD, vD))
+      Lm.components(spark, path))(writeLmDeltas(cbD, vD))
 
   /** The ONE staged layout for a paired (bigrams, vocab) delta, shared
     * by the streaming and maintenance publish paths so their on-disk
@@ -642,7 +642,8 @@ trait CorpusLm extends CorpusTokenizers {
     import graft.ops.Stage.{compactionPartitions, publishRewrite, resolve}
     // crashed-mid-publish batch leavings must not fold (see
     // Stage.sweepUncommitted — the replay would double their counts)
-    graft.ops.Stage.sweepUncommitted(spark, path, Seq("bigrams", "vocab"))
+    graft.ops.Stage.sweepUncommitted(spark, path,
+      Lm.components(spark, path))
     val nB = compactionPartitions(spark, s"$path/bigrams")
     publishRewrite(spark, s"$path/bigrams",
       spark.read.parquet(resolve(spark, s"$path/bigrams"))
@@ -663,7 +664,7 @@ trait CorpusLm extends CorpusTokenizers {
   def autoCompactLm(spark: org.apache.spark.sql.SparkSession, path: String,
                     maxFilesPerComponent: Int = 64): Boolean = {
     val go = graft.ops.Stage.shouldCompact(spark, path,
-      Seq("bigrams", "vocab"), maxFilesPerComponent)
+      Lm.components(spark, path), maxFilesPerComponent)
     if (go) compactLm(spark, path)
     go
   }
@@ -722,68 +723,23 @@ trait CorpusLm extends CorpusTokenizers {
         col("bits_x100"), col("ppl_bucket"))
   }
 
-  /** FREEZE the model under a named snapshot ([[graft.ops.Stage.snapshot]]
-    * on both count components, under the root lease so the pair captures
-    * one state). Because the pin records FILE LISTS and the LM maintains
-    * by additive delta — appends/deletes land new delta files, never
-    * rewrite old ones — a pinned model stays scoreable bit-identically
-    * while ingest continues: the frozen-model contract an eval pipeline
-    * needs (today's quality scores must not drift because tonight's
-    * crawl landed). This is NOT version time-travel (the LM deliberately
-    * has none — reverting an op is a negated-delta publish, see
-    * [[saveLm]]); it is a reproducibility pin. [[compactLm]] REWRITES the
-    * components, after which the pin keeps serving the pre-compaction
-    * state it captured (the pinned version survives GC until dropped).
-    */
-  def snapshotLm(spark: org.apache.spark.sql.SparkSession,
-                 path: String, name: String): Unit =
-    graft.ops.Stage.withWriterLease(spark, path) {
-      // a crashed batch's doomed partials must not be pinned (the pin
-      // records file lists; a later sweep would dangle them)
-      graft.ops.Stage.sweepUncommitted(spark, path, Seq("bigrams", "vocab"))
-      Seq("bigrams", "vocab").foreach(c =>
-        graft.ops.Stage.snapshot(spark, s"$path/$c", name))
-    }
+  /** The LM's lifecycle descriptor: named-snapshot pin, restore, drop,
+    * vacuum and health over the (bigrams, vocab) count pair. Because a
+    * pin records FILE LISTS and the LM maintains by additive delta —
+    * appends/deletes land new delta files, never rewrite old ones — a
+    * pinned model stays scoreable bit-identically
+    * ([[lmPerplexityIndexedSnapshot]]) while ingest continues: the
+    * frozen-model contract an eval pipeline needs (today's quality
+    * scores must not drift because tonight's crawl landed). This is NOT
+    * version time-travel (the LM deliberately has none — reverting ONE
+    * op is a negated-delta publish, see [[saveLm]]); restore undoes a
+    * whole campaign of deltas in one bytes-of-the-pin copy.
+    * [[compactLm]] REWRITES the components, after which the pin keeps
+    * serving the pre-compaction state it captured. */
+  val Lm: graft.ops.Family =
+    graft.ops.Family("lm", (_, _) => Seq("bigrams", "vocab"))
 
-  /** ROLL the live LM BACK to a [[snapshotLm]] pin
-    * ([[graft.ops.Stage.restoreSnapshot]] per component, under the root
-    * lease so bigrams and vocab flip as ONE state) — the undo for an
-    * ingest the scores say was poison. Where reverting ONE op is a
-    * negated-delta publish (see [[saveLm]]), restore undoes a whole
-    * campaign of deltas in one bytes-of-the-pin copy. Both components
-    * are checked for the pin BEFORE either is restored. The ledger is
-    * kept, so replays of rolled-back ingest batches stay no-ops —
-    * re-ingesting that content needs new batch/op ids (see
-    * [[Search.restoreTextIndex]] for the shared contract). */
-  def restoreLm(spark: org.apache.spark.sql.SparkSession,
-                path: String, name: String): Unit =
-    graft.ops.Stage.withWriterLease(spark, path) {
-      val comps = Seq("bigrams", "vocab")
-      val missing = comps.filter(c =>
-        graft.ops.Stage.resolveSnapshot(spark, s"$path/$c", name).isEmpty)
-      require(missing.isEmpty,
-        s"snapshot '$name' does not pin component(s) " +
-          s"${missing.mkString(", ")} of $path — nothing restored")
-      comps.foreach(c =>
-        graft.ops.Stage.restoreSnapshot(spark, s"$path/$c", name))
-    }
-
-  /** Release a [[snapshotLm]] pin; its versions become ordinary GC
-    * candidates at the next publish — or immediately via [[vacuumLm]]. */
-  def dropLmSnapshot(spark: org.apache.spark.sql.SparkSession,
-                     path: String, name: String): Unit =
-    Seq("bigrams", "vocab").foreach(c =>
-      graft.ops.Stage.dropSnapshot(spark, s"$path/$c", name))
-
-  /** Reclaim the model's stale count versions now
-    * ([[graft.ops.Stage.vacuum]] per component) — the storage release
-    * after dropping a pin, without waiting for the next compaction. */
-  def vacuumLm(spark: org.apache.spark.sql.SparkSession,
-               path: String): Unit =
-    Seq("bigrams", "vocab").foreach(c =>
-      graft.ops.Stage.vacuum(spark, s"$path/$c"))
-
-  /** [[lmPerplexityIndexed]] against a [[snapshotLm]] pin — the frozen
+  /** [[lmPerplexityIndexed]] against an [[Lm]] pin — the frozen
     * model's counts, whatever has been appended or deleted since.
     * Fails loudly on an unknown name. */
   def lmPerplexityIndexedSnapshot(score: DataFrame, path: String,
@@ -794,7 +750,7 @@ trait CorpusLm extends CorpusTokenizers {
       .readSnapshot(spark, s"$path/$c", name)
       .getOrElse(throw new IllegalStateException(
         s"$path/$c has no snapshot named '$name' — pin one with " +
-          "snapshotLm before scoring against it"))
+          "Corpus.Lm.snapshot before scoring against it"))
     val (cb, cu, v) = loadLmFrames(pinned("bigrams"), pinned("vocab"))
     scoreAgainstLm(score, cb, cu, v, textCol, idCol)
   }

@@ -366,7 +366,7 @@ trait DedupMinhash extends DedupExactOps {
   def appendToMinhashManifest(newDf: DataFrame, textCol: String,
                               idCol: String, path: String): Unit =
     // root lease, like the exactly-once variant: an unleased append
-    // racing a [[snapshotMinhashManifest]] pin could hand the pin a
+    // racing a [[MinhashManifest]] pin could hand the pin a
     // torn (partially committed) file list
     graft.ops.Stage.withWriterLease(newDf.sparkSession, path) {
       val meta = newDf.sparkSession.read.parquet(
@@ -396,7 +396,7 @@ trait DedupMinhash extends DedupExactOps {
     val meta = spark.read.parquet(
       graft.ops.Stage.resolve(spark, s"$path/meta")).head()
     graft.ops.Stage.appendExactlyOnce(spark, path, batchId,
-      Seq("docs", "bands")) { staging =>
+      MinhashManifest.components(spark, path)) { staging =>
       writeManifestTables(newDf, textCol, idCol, staging,
         meta.getAs[Int]("k"), meta.getAs[Int]("bands"), "overwrite")
     }
@@ -422,7 +422,8 @@ trait DedupMinhash extends DedupExactOps {
     graft.ops.Stage.withWriterLease(spark, path) {
     // like every compacting rewrite: a crashed batch's uncommitted
     // b<id>-* files must not fold (the replay would double them)
-    graft.ops.Stage.sweepUncommitted(spark, path, Seq("docs", "bands"))
+    graft.ops.Stage.sweepUncommitted(spark, path,
+      MinhashManifest.components(spark, path))
     // materialized: consumed by BOTH component rewrites below — without
     // it each anti-join re-runs the deleted batch's tokenize pass
     def ckpt(d: DataFrame): DataFrame = graft.ops.Tables.materialize(d)
@@ -508,7 +509,8 @@ trait DedupMinhash extends DedupExactOps {
     import graft.ops.Stage.{compactionPartitions, publishRewrite, resolve}
     // crashed-mid-publish batch leavings must not fold (see
     // Stage.sweepUncommitted — the replay would double them)
-    graft.ops.Stage.sweepUncommitted(spark, path, Seq("docs", "bands"))
+    graft.ops.Stage.sweepUncommitted(spark, path,
+      MinhashManifest.components(spark, path))
     val snap = graft.ops.Stage.tombstoneSnapshot(spark, path)
     val tomb = snap.map(_._1)
     val removed = tomb match {
@@ -548,8 +550,8 @@ trait DedupMinhash extends DedupExactOps {
   def autoCompactMinhashManifest(spark: org.apache.spark.sql.SparkSession,
                                  path: String,
                                  maxFilesPerComponent: Int = 64): Boolean = {
-    val go = graft.ops.Stage.shouldCompact(spark, path, Seq("docs", "bands"),
-      maxFilesPerComponent)
+    val go = graft.ops.Stage.shouldCompact(spark, path,
+      MinhashManifest.components(spark, path), maxFilesPerComponent)
     if (go) compactMinhashManifest(spark, path)
     go
   }
@@ -634,63 +636,16 @@ trait DedupMinhash extends DedupExactOps {
       .orderBy(idCol)
   }
 
-  /** Pin the manifest's current (docs, bands) versions under a NAMED
-    * snapshot — retention beyond the one-cycle previous window
-    * ([[graft.ops.Stage.snapshot]] per component, one shared name; the
-    * text index's `snapshotTextIndex` is the same pin there). Meta is
-    * frozen at build. Requires versioned components — any maintenance
-    * op (compaction, content delete) migrates a fresh manifest. */
-  def snapshotMinhashManifest(spark: org.apache.spark.sql.SparkSession,
-                              path: String, name: String): Unit =
-    // root lease: both pins must capture ONE maintenance state (see
-    // Search.snapshotTextIndex — a concurrent forget landing between
-    // them would freeze a mixed docs/bands pair)
-    graft.ops.Stage.withWriterLease(spark, path) {
-      // a crashed batch's doomed partials must not be pinned (the pin
-      // records file lists; a later sweep would dangle them)
-      graft.ops.Stage.sweepUncommitted(spark, path, Seq("docs", "bands"))
-      Seq("docs", "bands").foreach(c =>
-        graft.ops.Stage.snapshot(spark, s"$path/$c", name))
-    }
-
-  /** ROLL the live manifest BACK to a [[snapshotMinhashManifest]] pin
-    * ([[graft.ops.Stage.restoreSnapshot]] per component, under the root
-    * lease so docs and bands flip as ONE maintenance state) — the undo
-    * for a forget/ingest campaign [[incrementalNearDupsDiff]] flagged
-    * as wrong. Both components are checked for the pin BEFORE either is
-    * restored (a typo'd name must not leave a mixed docs/bands pair).
-    * The pin survives; see [[Search.restoreTextIndex]] for the shared
-    * tombstone/ledger contract — in particular, a content-forget whose
-    * tombstone was already compacted away is resurrected by restoring a
-    * pre-forget pin and must be re-issued if it is to hold. */
-  def restoreMinhashManifest(spark: org.apache.spark.sql.SparkSession,
-                             path: String, name: String): Unit =
-    graft.ops.Stage.withWriterLease(spark, path) {
-      val comps = Seq("docs", "bands")
-      val missing = comps.filter(c =>
-        graft.ops.Stage.resolveSnapshot(spark, s"$path/$c", name).isEmpty)
-      require(missing.isEmpty,
-        s"snapshot '$name' does not pin component(s) " +
-          s"${missing.mkString(", ")} of $path — nothing restored")
-      comps.foreach(c =>
-        graft.ops.Stage.restoreSnapshot(spark, s"$path/$c", name))
-    }
-
-  /** Release a [[snapshotMinhashManifest]] pin; the pinned versions
-    * become ordinary GC candidates at the next publish — or immediately
-    * via [[vacuumMinhashManifest]]. */
-  def dropMinhashManifestSnapshot(spark: org.apache.spark.sql.SparkSession,
-                                  path: String, name: String): Unit =
-    Seq("docs", "bands").foreach(c =>
-      graft.ops.Stage.dropSnapshot(spark, s"$path/$c", name))
-
-  /** Reclaim the manifest's stale versions now
-    * ([[graft.ops.Stage.vacuum]] per component) — the storage release
-    * after dropping a pin, without waiting for the next publish. */
-  def vacuumMinhashManifest(spark: org.apache.spark.sql.SparkSession,
-                            path: String): Unit =
-    Seq("docs", "bands").foreach(c =>
-      graft.ops.Stage.vacuum(spark, s"$path/$c"))
+  /** The manifest's lifecycle descriptor: named-snapshot pin, restore,
+    * drop, vacuum and health over the (docs, bands) pair. A pin outlives
+    * the one-cycle previous window and serves through
+    * [[incrementalNearDupsSnapshot]]; restore is the undo for a
+    * forget/ingest campaign [[incrementalNearDupsDiff]] flagged as wrong.
+    * Meta is frozen at build. Requires versioned components — any
+    * maintenance op (compaction, content delete) migrates a fresh
+    * manifest. */
+  val MinhashManifest: graft.ops.Family =
+    graft.ops.Family("minhash_manifest", (_, _) => Seq("docs", "bands"))
 
   /** [[incrementalNearDups]] probed against a NAMED manifest snapshot —
     * identical verdict contract over the pinned (docs, bands) pair, any
@@ -788,7 +743,7 @@ trait DedupMinhash extends DedupExactOps {
         .readSnapshot(spark, s"$manifestPath/$c", name)
         .getOrElse(throw new IllegalStateException(
           s"$manifestPath/$c has no snapshot named '$name' — pin one " +
-            "with snapshotMinhashManifest before probing it"))
+            "with Dedup.MinhashManifest.snapshot before probing it"))
       case None if previous => spark.read.parquet(graft.ops.Stage
         .resolvePrevious(spark, s"$manifestPath/$c")
         .getOrElse(throw new IllegalStateException(

@@ -331,7 +331,8 @@ trait DedupWinnow extends DedupSimhash {
                                         batchId: Long): Unit = {
     val spark = newDf.sparkSession
     if (graft.ops.Stage.alreadyPublished(spark, path, batchId)) return
-    graft.ops.Stage.appendExactlyOnce(spark, path, batchId, Seq("fps")) {
+    graft.ops.Stage.appendExactlyOnce(spark, path, batchId,
+      WinnowManifest.components(spark, path)) {
       staging =>
         // meta (n, w) is read INSIDE the lease-held stage callback — a
         // concurrent saveWinnowManifest rebuild with different (n, w)
@@ -356,7 +357,8 @@ trait DedupWinnow extends DedupSimhash {
                                path: String, ids: DataFrame,
                                idCol: String = "doc_id"): Unit =
     graft.ops.Stage.withWriterLease(spark, path) {
-      graft.ops.Stage.sweepUncommitted(spark, path, Seq("fps"))
+      graft.ops.Stage.sweepUncommitted(spark, path,
+        WinnowManifest.components(spark, path))
       val del = ids.select(col(idCol).as("doc")).distinct()
       graft.ops.Stage.publishRewrite(spark, s"$path/fps",
         spark.read.parquet(graft.ops.Stage.resolve(spark, s"$path/fps"))
@@ -388,7 +390,8 @@ trait DedupWinnow extends DedupSimhash {
   def compactWinnowManifest(spark: org.apache.spark.sql.SparkSession,
                             path: String): Unit =
     graft.ops.Stage.withWriterLease(spark, path) {
-      graft.ops.Stage.sweepUncommitted(spark, path, Seq("fps"))
+      graft.ops.Stage.sweepUncommitted(spark, path,
+        WinnowManifest.components(spark, path))
       val snap = graft.ops.Stage.tombstoneSnapshot(spark, path)
       val fps = spark.read
         .parquet(graft.ops.Stage.resolve(spark, s"$path/fps"))
@@ -411,40 +414,18 @@ trait DedupWinnow extends DedupSimhash {
   def autoCompactWinnowManifest(spark: org.apache.spark.sql.SparkSession,
                                 path: String,
                                 maxFiles: Int = 64): Boolean = {
-    val go = graft.ops.Stage.shouldCompact(spark, path, Seq("fps"), maxFiles)
+    val go = graft.ops.Stage.shouldCompact(spark, path,
+      WinnowManifest.components(spark, path), maxFiles)
     if (go) compactWinnowManifest(spark, path)
     go
   }
 
-  /** Pin / roll back the winnow manifest's state under a NAMED snapshot
-    * ([[graft.ops.Stage.snapshot]] / [[graft.ops.Stage.restoreSnapshot]]
-    * on the fps component, under the root lease) — the same
-    * campaign-grade undo surface as the other index families. */
-  def snapshotWinnowManifest(spark: org.apache.spark.sql.SparkSession,
-                             path: String, name: String): Unit =
-    graft.ops.Stage.withWriterLease(spark, path) {
-      graft.ops.Stage.sweepUncommitted(spark, path, Seq("fps"))
-      graft.ops.Stage.snapshot(spark, s"$path/fps", name)
-    }
-
-  /** Restore the [[snapshotWinnowManifest]] pin (atomic pointer flip;
-    * the pin survives). */
-  def restoreWinnowManifest(spark: org.apache.spark.sql.SparkSession,
-                            path: String, name: String): Unit =
-    graft.ops.Stage.withWriterLease(spark, path) {
-      graft.ops.Stage.restoreSnapshot(spark, s"$path/fps", name)
-    }
-
-  /** Release a [[snapshotWinnowManifest]] pin; the pinned version
-    * becomes an ordinary GC candidate at the next publish. */
-  def dropWinnowManifestSnapshot(spark: org.apache.spark.sql.SparkSession,
-                                 path: String, name: String): Unit =
-    graft.ops.Stage.dropSnapshot(spark, s"$path/fps", name)
-
-  /** Reclaim the manifest's stale versions now. */
-  def vacuumWinnowManifest(spark: org.apache.spark.sql.SparkSession,
-                           path: String): Unit =
-    graft.ops.Stage.vacuum(spark, s"$path/fps")
+  /** The winnow manifest's lifecycle descriptor: named-snapshot pin,
+    * restore, drop, vacuum and health over the fps component — the same
+    * campaign-grade undo surface as the other index families; pins
+    * serve through [[probeWinnowOverlapSnapshot]]. */
+  val WinnowManifest: graft.ops.Family =
+    graft.ops.Family("winnow_manifest", (_, _) => Seq("fps"))
 
   /** Probe an ingest batch against a persisted [[saveWinnowManifest]]
     * manifest: per batch document, its strongest partial-overlap match
@@ -468,11 +449,11 @@ trait DedupWinnow extends DedupSimhash {
                          idCol: String = "doc_id",
                          textCol: String = "text", minShared: Int = 2,
                          maxDf: Int = 20): DataFrame =
-    probeWinnowImpl(batch, path,
-      graft.ops.Stage.resolve(batch.sparkSession, s"$path/fps"),
+    probeWinnowImpl(batch, path, batch.sparkSession.read.parquet(
+      graft.ops.Stage.resolve(batch.sparkSession, s"$path/fps")),
       idCol, textCol, minShared, maxDf)
 
-  /** [[probeWinnowOverlap]] against a [[snapshotWinnowManifest]] pin —
+  /** [[probeWinnowOverlap]] against a [[WinnowManifest]] pin —
     * the frozen-corpus read (validation probes, reproducible reports)
     * while the live manifest keeps maintaining. */
   def probeWinnowOverlapSnapshot(batch: DataFrame, path: String,
@@ -480,8 +461,11 @@ trait DedupWinnow extends DedupSimhash {
                                  textCol: String = "text",
                                  minShared: Int = 2,
                                  maxDf: Int = 20): DataFrame =
+    // the pinned FILE LIST, not the version directory: appends publish
+    // into the live version dir, so a directory read of a pin taken on
+    // the live version would absorb every post-pin batch
     probeWinnowImpl(batch, path,
-      graft.ops.Stage.resolveSnapshot(batch.sparkSession, s"$path/fps", name)
+      graft.ops.Stage.readSnapshot(batch.sparkSession, s"$path/fps", name)
         .getOrElse(throw new IllegalStateException(
           s"$path/fps has no snapshot '$name' to probe")),
       idCol, textCol, minShared, maxDf)
@@ -497,11 +481,11 @@ trait DedupWinnow extends DedupSimhash {
                                  textCol: String = "text",
                                  minShared: Int = 2,
                                  maxDf: Int = 20): DataFrame =
-    probeWinnowImpl(batch, path,
+    probeWinnowImpl(batch, path, batch.sparkSession.read.parquet(
       graft.ops.Stage.resolvePrevious(batch.sparkSession, s"$path/fps")
         .getOrElse(throw new IllegalStateException(
           s"$path/fps has no previous snapshot to probe — time travel " +
-            "needs at least two publishes")),
+            "needs at least two publishes"))),
       idCol, textCol, minShared, maxDf)
 
   /** Maintenance DIFF of the winnow manifest's two serveable states —
@@ -539,18 +523,18 @@ trait DedupWinnow extends DedupSimhash {
   }
 
   private def probeWinnowImpl(batch: DataFrame, path: String,
-                              fpsDir: String, idCol: String,
+                              fps: DataFrame, idCol: String,
                               textCol: String, minShared: Int,
                               maxDf: Int): DataFrame = {
     require(minShared >= 1, s"minShared >= 1, got $minShared")
     require(maxDf >= 1, s"maxDf >= 1, got $maxDf")
     val spark = batch.sparkSession
     // (n, w) from the stamp on the fps rows this probe ACTUALLY reads
-    // (fpsDir is already resolved — live, snapshot, or previous), never
+    // (fps is already resolved — live, snapshot, or previous), never
     // from meta/, whose read could race a rebuild that changes the
     // parameters (silently-empty overlap verdicts). Empty manifest →
     // meta fallback: any parameters probe zero fingerprints identically.
-    val (n, w) = spark.read.parquet(fpsDir).select(col("n"), col("w"))
+    val (n, w) = fps.select(col("n"), col("w"))
       .limit(1).collect().headOption
       .map(r => (r.getInt(0), r.getInt(1)))
       .getOrElse {
@@ -568,7 +552,7 @@ trait DedupWinnow extends DedupSimhash {
     // reads included (right-to-be-forgotten holds for validation reads
     // — the family rule)
     val tomb = graft.ops.Stage.pendingTombstones(spark, path)
-    val mfAll = spark.read.parquet(fpsDir).select(col("doc"), col("h"))
+    val mfAll = fps.select(col("doc"), col("h"))
     // No forced broadcast hints anywhere below: the batch-derived
     // relations (bf, cappedHs, bk) are "batch-sized" by contract but a
     // production ingest batch — a day of crawl — makes its winnowed

@@ -218,7 +218,7 @@ object Search {
     * build over the union. Batch-sized work only; the one-row stats
     * update is the only driver-side read (constant by construction).
     * Under the ROOT writer lease, like the exactly-once variant: an
-    * unleased append racing a [[snapshotTextIndex]] pin could hand the
+    * unleased append racing a [[TextIndex]] pin could hand the
     * pin a torn (partially committed) file list.
     */
   def appendToTextIndex(batch: DataFrame, path: String,
@@ -522,73 +522,18 @@ object Search {
       tomb, terms, k, idCol, k1, b)
   }
 
-  /** Pin the index's current state under a NAMED snapshot — retention
-    * beyond [[bm25TopKIndexedPrevious]]'s one-publish-cycle validation
-    * window ([[graft.ops.Stage.snapshot]] per component, one shared
-    * name). The pinned versions survive every later maintenance op's GC
-    * until [[dropTextIndexSnapshot]] releases them, so an operator can
-    * hold the pre-campaign state across a whole run of deletes and
-    * compactions and keep diffing against it. Components move together
-    * under the single-writer contract, so one name pins a CONSISTENT
-    * (postings, doclens, stats) triple. Requires a versioned layout —
-    * snapshot after the first maintenance op (or compact once first).
-    */
-  def snapshotTextIndex(spark: org.apache.spark.sql.SparkSession,
-                        path: String, name: String): Unit =
-    // root lease: the three pins must capture ONE maintenance state — a
-    // concurrent delete landing between pins would freeze a mixed
-    // (pre-op postings, post-op doclens) triple that scores wrong
-    graft.ops.Stage.withWriterLease(spark, path) {
-      val comps = textComponents(spark, path)
-      // a crashed batch's doomed partials must not be pinned (the pin
-      // records file lists; a later sweep would dangle them)
-      graft.ops.Stage.sweepUncommitted(spark, path, comps)
-      comps.foreach(c =>
-        graft.ops.Stage.snapshot(spark, s"$path/$c", name))
-    }
-
-  /** ROLL the live index BACK to a [[snapshotTextIndex]] pin
-    * ([[graft.ops.Stage.restoreSnapshot]] per component, under the root
-    * lease so the three components flip as ONE maintenance state) — the
-    * undo for a delete/compaction campaign [[bm25MaintenanceDiff]]
-    * flagged as wrong. All three components are checked for the pin
-    * BEFORE any is restored, so a typo'd name fails loudly instead of
-    * leaving a mixed (restored postings, live doclens) index. The pin
-    * survives (restore consumes nothing); pending tombstones keep
-    * masking (a post-pin forget still holds), but a forget whose
-    * tombstone was already COMPACTED away is resurrected — re-issue it
-    * if it must outlive the rollback. A crash mid-restore leaves some
-    * components rolled back and others not; rerunning the restore
-    * converges (each component restore is an atomic pointer flip).
-    */
-  def restoreTextIndex(spark: org.apache.spark.sql.SparkSession,
-                       path: String, name: String): Unit =
-    graft.ops.Stage.withWriterLease(spark, path) {
-      val comps = textComponents(spark, path)
-      val missing = comps.filter(c =>
-        graft.ops.Stage.resolveSnapshot(spark, s"$path/$c", name).isEmpty)
-      require(missing.isEmpty,
-        s"snapshot '$name' does not pin component(s) " +
-          s"${missing.mkString(", ")} of $path — nothing restored")
-      comps.foreach(c =>
-        graft.ops.Stage.restoreSnapshot(spark, s"$path/$c", name))
-    }
-
-  /** Release a [[snapshotTextIndex]] pin; the pinned versions become
-    * ordinary GC candidates at the next publish — or immediately via
-    * [[vacuumTextIndex]]. */
-  def dropTextIndexSnapshot(spark: org.apache.spark.sql.SparkSession,
-                            path: String, name: String): Unit =
-    textComponents(spark, path).foreach(c =>
-      graft.ops.Stage.dropSnapshot(spark, s"$path/$c", name))
-
-  /** Reclaim the index's stale versions now ([[graft.ops.Stage.vacuum]]
-    * per component) — the storage release after dropping a pin, without
-    * waiting for the next maintenance op's publish. */
-  def vacuumTextIndex(spark: org.apache.spark.sql.SparkSession,
-                      path: String): Unit =
-    textComponents(spark, path).foreach(c =>
-      graft.ops.Stage.vacuum(spark, s"$path/$c"))
+  /** The text index's lifecycle descriptor: named-snapshot pin,
+    * restore, drop, vacuum and health over its LIVE component set
+    * ([[textComponents]] — the positional component moves with the
+    * triple). A pin outlives [[bm25TopKIndexedPrevious]]'s
+    * one-publish-cycle window, so an operator can hold the pre-campaign
+    * state across a whole run of deletes and compactions, serve it with
+    * [[bm25TopKIndexedSnapshot]], and restore it when
+    * [[bm25MaintenanceDiff]] flags the campaign as wrong. Requires a
+    * versioned layout — pin after the first maintenance op (or compact
+    * once first). */
+  val TextIndex: graft.ops.Family =
+    graft.ops.Family("text_index", textComponents)
 
   /** Maintenance DIFF of the index's two serveable states: PREVIOUS
     * (the snapshot the last maintenance op superseded) vs LIVE, as one
@@ -641,7 +586,7 @@ object Search {
       .readSnapshot(spark, s"$path/$c", name)
       .getOrElse(throw new IllegalStateException(
         s"$path/$c has no snapshot named '$name' — pin one with " +
-          "snapshotTextIndex before serving it"))
+          "Search.TextIndex.snapshot before serving it"))
     serveBm25Frames(snap("postings"), snap("doclens"), snap("stats"),
       tomb, terms, k, idCol, k1, b)
   }
@@ -718,7 +663,7 @@ object Search {
       .readSnapshot(spark, s"$path/postings", name)
       .getOrElse(throw new IllegalStateException(
         s"$path/postings has no snapshot named '$name' — pin one with " +
-          "snapshotTextIndex before serving it"))
+          "Search.TextIndex.snapshot before serving it"))
     serveConjunctiveFrames(postings, tomb, terms, idCol)
   }
 
@@ -768,8 +713,8 @@ object Search {
     *
     * SNAPSHOT-PIN CONSEQUENCE (documented behavior change): enabling the
     * positional component makes [[textComponents]] — and therefore
-    * [[restoreTextIndex]]'s all-components-pinned check — include
-    * `positions`, so a [[snapshotTextIndex]] pin taken BEFORE the
+    * [[TextIndex]]'s all-components-pinned restore check — include
+    * `positions`, so a [[TextIndex]] pin taken BEFORE the
     * component existed (a triple-only pin) becomes unrestorable once
     * positions exist: restore fails loudly rather than roll back a mixed
     * (pinned triple, live positions) state. Re-pin after enabling
@@ -786,7 +731,7 @@ object Search {
       // pins deliberately SURVIVE this rebuild (unlike saveLm/savePqIndex,
       // which clear them): positions is a self-contained re-derivation of
       // the same index's corpus, restorable only TOGETHER with the triple
-      // through restoreTextIndex — SearchSpec pins the
+      // through TextIndex.restore — SearchSpec pins the
       // pin→rebuild→restore round trip. The cross-CORPUS stale-pin hazard
       // is closed at the true rebuild boundary instead: saveTextIndex
       // deletes the positional component outright.

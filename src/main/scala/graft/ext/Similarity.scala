@@ -896,7 +896,7 @@ object Similarity {
       return
     val (dim, cb) = loadPqMeta(newVecs.sparkSession, path)
     graft.ops.Stage.appendExactlyOnce(newVecs.sparkSession, path, batchId,
-      Seq("codes")) { staging =>
+      PqIndex.components(newVecs.sparkSession, path)) { staging =>
       pqCodes(newVecs, dim, cb, idCol, vecCol)
         .withColumnRenamed(idCol, "vec_id")
         .write.mode("overwrite").parquet(s"$staging/codes")
@@ -912,7 +912,8 @@ object Similarity {
                         path: String, ids: DataFrame,
                         idCol: String = "vec_id"): Unit =
     graft.ops.Stage.withWriterLease(spark, path) {
-      graft.ops.Stage.sweepUncommitted(spark, path, Seq("codes"))
+      graft.ops.Stage.sweepUncommitted(spark, path,
+        PqIndex.components(spark, path))
       val del = ids.select(col(idCol).as("vec_id")).distinct()
       graft.ops.Stage.publishRewrite(spark, s"$path/codes",
         spark.read.parquet(graft.ops.Stage.resolve(spark, s"$path/codes"))
@@ -946,7 +947,7 @@ object Similarity {
     val codes = graft.ops.Stage.readSnapshot(spark, s"$path/codes", name)
       .getOrElse(throw new IllegalStateException(
         s"$path/codes has no snapshot named '$name' — pin one with " +
-          "snapshotPqIndex before serving it"))
+          "Similarity.PqIndex.snapshot before serving it"))
     pqServeCodes(codes.withColumnRenamed("vec_id", "neighbor_id"),
       queries, k, dim, cb, idCol, vecCol)
   }
@@ -993,7 +994,8 @@ object Similarity {
   def compactPqIndex(spark: org.apache.spark.sql.SparkSession,
                      path: String): Unit =
     graft.ops.Stage.withWriterLease(spark, path) {
-      graft.ops.Stage.sweepUncommitted(spark, path, Seq("codes"))
+      graft.ops.Stage.sweepUncommitted(spark, path,
+        PqIndex.components(spark, path))
       val n = graft.ops.Stage.compactionPartitions(spark, s"$path/codes")
       graft.ops.Stage.publishRewrite(spark, s"$path/codes",
         spark.read.parquet(graft.ops.Stage.resolve(spark, s"$path/codes"))
@@ -1006,8 +1008,8 @@ object Similarity {
   def autoCompactPqIndex(spark: org.apache.spark.sql.SparkSession,
                          path: String,
                          maxFilesPerComponent: Int = 64): Boolean = {
-    val go = graft.ops.Stage.shouldCompact(spark, path, Seq("codes"),
-      maxFilesPerComponent)
+    val go = graft.ops.Stage.shouldCompact(spark, path,
+      PqIndex.components(spark, path), maxFilesPerComponent)
     if (go) compactPqIndex(spark, path)
     go
   }
@@ -1055,32 +1057,11 @@ object Similarity {
       .orderBy("query_id", "neighbor_id")
   }
 
-  /** Pin / restore / release / reclaim for the PQ codes component —
-    * the standard [[graft.ops.Stage.snapshot]] lifecycle under the root
-    * lease. */
-  def snapshotPqIndex(spark: org.apache.spark.sql.SparkSession,
-                      path: String, name: String): Unit =
-    graft.ops.Stage.withWriterLease(spark, path) {
-      graft.ops.Stage.sweepUncommitted(spark, path, Seq("codes"))
-      graft.ops.Stage.snapshot(spark, s"$path/codes", name)
-    }
-
-  def restorePqIndex(spark: org.apache.spark.sql.SparkSession,
-                     path: String, name: String): Unit =
-    graft.ops.Stage.withWriterLease(spark, path) {
-      require(graft.ops.Stage
-          .resolveSnapshot(spark, s"$path/codes", name).isDefined,
-        s"snapshot '$name' does not pin $path/codes — nothing restored")
-      graft.ops.Stage.restoreSnapshot(spark, s"$path/codes", name)
-    }
-
-  def dropPqIndexSnapshot(spark: org.apache.spark.sql.SparkSession,
-                          path: String, name: String): Unit =
-    graft.ops.Stage.dropSnapshot(spark, s"$path/codes", name)
-
-  def vacuumPqIndex(spark: org.apache.spark.sql.SparkSession,
-                    path: String): Unit =
-    graft.ops.Stage.vacuum(spark, s"$path/codes")
+  /** The PQ index's lifecycle descriptor: named-snapshot pin, restore,
+    * drop, vacuum and health over the codes component (codebooks are
+    * frozen at build); pins serve through [[pqTopKIndexedSnapshot]]. */
+  val PqIndex: graft.ops.Family =
+    graft.ops.Family("pq_index", (_, _) => Seq("codes"))
 
   // ------------------------------------------------ binary index persistence
 
@@ -1175,7 +1156,8 @@ object Similarity {
                                      vecCol: String = "embedding"): Unit = {
     val spark = newVecs.sparkSession
     if (graft.ops.Stage.alreadyPublished(spark, path, batchId)) return
-    graft.ops.Stage.appendExactlyOnce(spark, path, batchId, Seq("sig")) {
+    graft.ops.Stage.appendExactlyOnce(spark, path, batchId,
+      BinaryIndex.components(spark, path)) {
       staging =>
         val dim = spark.read.parquet(
           graft.ops.Stage.resolve(spark, s"$path/meta")).head()
@@ -1193,7 +1175,8 @@ object Similarity {
                             path: String, ids: DataFrame,
                             idCol: String = "vec_id"): Unit =
     graft.ops.Stage.withWriterLease(spark, path) {
-      graft.ops.Stage.sweepUncommitted(spark, path, Seq("sig"))
+      graft.ops.Stage.sweepUncommitted(spark, path,
+        BinaryIndex.components(spark, path))
       val del = ids.select(col(idCol).as("vec_id")).distinct()
       graft.ops.Stage.publishRewrite(spark, s"$path/sig",
         spark.read.parquet(graft.ops.Stage.resolve(spark, s"$path/sig"))
@@ -1228,7 +1211,7 @@ object Similarity {
     val sigs = graft.ops.Stage.readSnapshot(spark, s"$path/sig", name)
       .getOrElse(throw new IllegalStateException(
         s"$path/sig has no snapshot named '$name' — pin one with " +
-          "snapshotBinaryIndex before serving it"))
+          "Similarity.BinaryIndex.snapshot before serving it"))
       .withColumnRenamed("vec_id", "neighbor_id")
     binaryServeSigs(sigs, queries, corpus, k, overfetch,
       binaryIndexDim(spark, path, sigs), idCol, vecCol)
@@ -1285,7 +1268,8 @@ object Similarity {
   def compactBinaryIndex(spark: org.apache.spark.sql.SparkSession,
                          path: String): Unit =
     graft.ops.Stage.withWriterLease(spark, path) {
-      graft.ops.Stage.sweepUncommitted(spark, path, Seq("sig"))
+      graft.ops.Stage.sweepUncommitted(spark, path,
+        BinaryIndex.components(spark, path))
       val n = graft.ops.Stage.compactionPartitions(spark, s"$path/sig")
       graft.ops.Stage.publishRewrite(spark, s"$path/sig",
         spark.read.parquet(graft.ops.Stage.resolve(spark, s"$path/sig"))
@@ -1298,38 +1282,17 @@ object Similarity {
   def autoCompactBinaryIndex(spark: org.apache.spark.sql.SparkSession,
                              path: String,
                              maxFilesPerComponent: Int = 64): Boolean = {
-    val go = graft.ops.Stage.shouldCompact(spark, path, Seq("sig"),
-      maxFilesPerComponent)
+    val go = graft.ops.Stage.shouldCompact(spark, path,
+      BinaryIndex.components(spark, path), maxFilesPerComponent)
     if (go) compactBinaryIndex(spark, path)
     go
   }
 
-  /** Pin / restore / release / reclaim for the sig component — the
-    * standard [[graft.ops.Stage.snapshot]] lifecycle under the root
-    * lease. */
-  def snapshotBinaryIndex(spark: org.apache.spark.sql.SparkSession,
-                          path: String, name: String): Unit =
-    graft.ops.Stage.withWriterLease(spark, path) {
-      graft.ops.Stage.sweepUncommitted(spark, path, Seq("sig"))
-      graft.ops.Stage.snapshot(spark, s"$path/sig", name)
-    }
-
-  def restoreBinaryIndex(spark: org.apache.spark.sql.SparkSession,
-                         path: String, name: String): Unit =
-    graft.ops.Stage.withWriterLease(spark, path) {
-      require(graft.ops.Stage
-          .resolveSnapshot(spark, s"$path/sig", name).isDefined,
-        s"snapshot '$name' does not pin $path/sig — nothing restored")
-      graft.ops.Stage.restoreSnapshot(spark, s"$path/sig", name)
-    }
-
-  def dropBinaryIndexSnapshot(spark: org.apache.spark.sql.SparkSession,
-                              path: String, name: String): Unit =
-    graft.ops.Stage.dropSnapshot(spark, s"$path/sig", name)
-
-  def vacuumBinaryIndex(spark: org.apache.spark.sql.SparkSession,
-                        path: String): Unit =
-    graft.ops.Stage.vacuum(spark, s"$path/sig")
+  /** The binary index's lifecycle descriptor: named-snapshot pin,
+    * restore, drop, vacuum and health over the sig component; pins
+    * serve through [[binaryTopKIndexedSnapshot]]. */
+  val BinaryIndex: graft.ops.Family =
+    graft.ops.Family("binary_index", (_, _) => Seq("sig"))
 
   /** SEMANTIC DECONTAMINATION: for every train vector, its maximum
     * cosine against a held-out probe/eval set, the probe that attains
@@ -2084,7 +2047,7 @@ object Similarity {
                        idCol: String = "vec_id",
                        vecCol: String = "embedding"): Unit =
     // root lease, like the exactly-once variant: an unleased append
-    // racing a [[snapshotIvfIndex]] pin could hand the pin a torn
+    // racing an [[IvfIndex]] pin could hand the pin a torn
     // (partially committed) file list
     graft.ops.Stage.withWriterLease(newVecs.sparkSession, path) {
       val (scale, cents) = loadIvfMeta(newVecs.sparkSession, path)
@@ -2117,7 +2080,7 @@ object Similarity {
       return
     val (scale, cents) = loadIvfMeta(newVecs.sparkSession, path)
     graft.ops.Stage.appendExactlyOnce(newVecs.sparkSession, path, batchId,
-      Seq("lists")) { staging =>
+      IvfIndex.components(newVecs.sparkSession, path)) { staging =>
       writeIvfLists(newVecs, cents, scale, idCol, vecCol, s"$staging/lists",
         "overwrite")
     }
@@ -2140,7 +2103,8 @@ object Similarity {
       graft.ops.Stage.withWriterLease(spark, path) {
     // like every compacting rewrite: a crashed batch's uncommitted
     // b<id>-* files must not fold (the replay would double them)
-    graft.ops.Stage.sweepUncommitted(spark, path, Seq("lists"))
+    graft.ops.Stage.sweepUncommitted(spark, path,
+      IvfIndex.components(spark, path))
     val del = ids.select(col(idCol).as("vec_id")).distinct()
     graft.ops.Stage.publishRewrite(spark, s"$path/lists") { versionDir =>
       spark.read.parquet(graft.ops.Stage.resolve(spark, s"$path/lists"))
@@ -2198,7 +2162,8 @@ object Similarity {
     import graft.ops.Stage.{compactionPartitions, publishRewrite, resolve}
     // crashed-mid-publish batch leavings must not fold (see
     // Stage.sweepUncommitted — the replay would double them)
-    graft.ops.Stage.sweepUncommitted(spark, path, Seq("lists"))
+    graft.ops.Stage.sweepUncommitted(spark, path,
+      IvfIndex.components(spark, path))
     val n = compactionPartitions(spark, s"$path/lists")
     // pending tombstones FOLD here (physical delete), then exactly the
     // consumed tombstone files reset (keys appended mid-fold stay)
@@ -2221,8 +2186,8 @@ object Similarity {
   def autoCompactIvfIndex(spark: org.apache.spark.sql.SparkSession,
                           path: String,
                           maxFilesPerComponent: Int = 64): Boolean = {
-    val go = graft.ops.Stage.shouldCompact(spark, path, Seq("lists"),
-      maxFilesPerComponent)
+    val go = graft.ops.Stage.shouldCompact(spark, path,
+      IvfIndex.components(spark, path), maxFilesPerComponent)
     if (go) compactIvfIndex(spark, path)
     go
   }
@@ -2307,51 +2272,20 @@ object Similarity {
     serveIvf(spark, queries, path, listsDir, tomb, k, nProbe, idCol, vecCol)
   }
 
-  /** Pin the index's current lists version under a NAMED snapshot —
-    * retention beyond [[topKIvfIndexedPrevious]]'s one-cycle validation
-    * window ([[graft.ops.Stage.snapshot]]; the text index's
-    * [[graft.ext.Search.snapshotTextIndex]] is the same pin there).
-    * Centroids and meta are frozen after the build, so `lists/` is the
-    * only component with versions to pin. Requires the lists to be
-    * versioned — [[saveIvfIndex]] writes them born-versioned, so any
-    * saved index qualifies immediately. */
-  def snapshotIvfIndex(spark: org.apache.spark.sql.SparkSession,
-                       path: String, name: String): Unit =
-    graft.ops.Stage.withWriterLease(spark, path) {
-      // a crashed batch's doomed partials must not be pinned (the pin
-      // records file lists; a later sweep would dangle them)
-      graft.ops.Stage.sweepUncommitted(spark, path, Seq("lists"))
-      graft.ops.Stage.snapshot(spark, s"$path/lists", name)
-    }
-
-  /** ROLL the live lists BACK to a [[snapshotIvfIndex]] pin
-    * ([[graft.ops.Stage.restoreSnapshot]]) — the undo for an
-    * append/forget campaign [[ivfMaintenanceDiff]] flagged as wrong.
-    * Centroids and meta are frozen at build, so restoring `lists/`
-    * restores the whole serveable state; the restored partition
-    * directories byte-match the pin, so dynamic partition pruning and
-    * the dequantization parameters serve exactly as at pin time. The
-    * pin survives; see [[Search.restoreTextIndex]] for the shared
-    * tombstone/ledger contract. */
-  def restoreIvfIndex(spark: org.apache.spark.sql.SparkSession,
-                      path: String, name: String): Unit =
-    graft.ops.Stage.withWriterLease(spark, path) {
-      graft.ops.Stage.restoreSnapshot(spark, s"$path/lists", name)
-    }
-
-  /** Release a [[snapshotIvfIndex]] pin; the pinned version becomes an
-    * ordinary GC candidate at the next publish — or immediately via
-    * [[vacuumIvfIndex]]. */
-  def dropIvfIndexSnapshot(spark: org.apache.spark.sql.SparkSession,
-                           path: String, name: String): Unit =
-    graft.ops.Stage.dropSnapshot(spark, s"$path/lists", name)
-
-  /** Reclaim the index's stale list versions now
-    * ([[graft.ops.Stage.vacuum]]) — the storage release after dropping a
-    * pin, without waiting for the next maintenance op's publish. */
-  def vacuumIvfIndex(spark: org.apache.spark.sql.SparkSession,
-                     path: String): Unit =
-    graft.ops.Stage.vacuum(spark, s"$path/lists")
+  /** The IVF index's lifecycle descriptor: named-snapshot pin, restore,
+    * drop, vacuum and health over the lists component. Centroids and
+    * meta are frozen after the build, so `lists/` is the only component
+    * with versions to pin, and restoring it restores the whole
+    * serveable state: the restored partition directories byte-match the
+    * pin, so dynamic partition pruning and the dequantization parameters
+    * serve exactly as at pin time. A pin outlives
+    * [[topKIvfIndexedPrevious]]'s one-cycle validation window and
+    * serves through [[topKIvfIndexedSnapshot]]; restore is the undo for
+    * an append/forget campaign [[ivfMaintenanceDiff]] flagged as wrong.
+    * [[saveIvfIndex]] writes the lists born-versioned, so any saved
+    * index is pinnable immediately. */
+  val IvfIndex: graft.ops.Family =
+    graft.ops.Family("ivf_index", (_, _) => Seq("lists"))
 
   /** [[topKIvfIndexed]] served from a NAMED snapshot — identical ranking
     * over the pinned lists, any number of maintenance ops later. Pending
@@ -2369,7 +2303,7 @@ object Similarity {
       .readSnapshot(spark, s"$path/lists", name)
       .getOrElse(throw new IllegalStateException(
         s"$path/lists has no snapshot named '$name' — pin one with " +
-          "snapshotIvfIndex before serving it"))
+          "Similarity.IvfIndex.snapshot before serving it"))
     serveIvfFrames(spark, queries, path, lists, tomb, k, nProbe, idCol,
       vecCol)
   }

@@ -366,8 +366,8 @@ object Stage {
     * silently absorb them. Snapshot reads therefore go through
     * [[readSnapshot]]/[[resolveSnapshotFiles]], which serve exactly the
     * files present at pin time. Callers that can see the index root
-    * should [[sweepUncommitted]] first (the family-level `snapshot*`
-    * surfaces do), so a crashed batch's doomed partials are not pinned.
+    * should [[sweepUncommitted]] first ([[Family.snapshot]] does), so a
+    * crashed batch's doomed partials are not pinned.
     */
   def snapshot(spark: SparkSession, dir: String, name: String): Unit = {
     require(name.matches(SnapshotNameRe),
@@ -380,8 +380,8 @@ object Stage {
     // lease, which this component lease does NOT serialize with — a
     // caller pinning a component of such an index must hold the root
     // lease too, or the pin can record half of an in-flight batch.
-    // Every family-level `snapshot*` wrapper does exactly that; go
-    // through them rather than calling this raw on a component.
+    // [[Family.snapshot]] does exactly that; go through a family
+    // descriptor rather than calling this raw on a component.
     withWriterLease(spark, dir) {
       val rootPath = new Path(dir)
       val fs = fsFor(spark, rootPath)

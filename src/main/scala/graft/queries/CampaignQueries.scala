@@ -78,8 +78,9 @@ object CampaignQueries {
       buildFamilies(s, docs, split, text, mani, lm)
       // ONE pin, one instant, all three families — every member root
       // lease held (sorted order) while the per-family pins land
-      val members = Seq(Campaign.TextIndex(text),
-        Campaign.MinhashManifest(mani), Campaign.Lm(lm))
+      val members = Seq(Campaign.Member(Search.TextIndex, text),
+        Campaign.Member(Dedup.MinhashManifest, mani),
+        Campaign.Member(Corpus.Lm, lm))
       Campaign.snapshot(s, "release_pin", members)
       // maintenance lands on ALL THREE after the pin — each family's
       // live state diverges from the pin in its own way
@@ -128,8 +129,9 @@ object CampaignQueries {
       val lm = s"target/graft-campaign-spot-lm-$sf"
       val split = Corpus.splitAssign(docs, "text")
       buildFamilies(s, docs, split, text, mani, lm)
-      val members = Seq(Campaign.TextIndex(text),
-        Campaign.MinhashManifest(mani), Campaign.Lm(lm))
+      val members = Seq(Campaign.Member(Search.TextIndex, text),
+        Campaign.Member(Dedup.MinhashManifest, mani),
+        Campaign.Member(Corpus.Lm, lm))
       Campaign.snapshot(s, "release_pin", members)
       maintainFamilies(s, docs, split, text, mani, lm)
       val bm = Search.bm25TopKIndexedSnapshot(s, text, "release_pin",
@@ -172,8 +174,9 @@ object CampaignQueries {
       val lm = s"target/graft-campaign-rb-lm-$sf"
       val split = Corpus.splitAssign(docs, "text")
       buildFamilies(s, docs, split, text, mani, lm)
-      val members = Seq(Campaign.TextIndex(text),
-        Campaign.MinhashManifest(mani), Campaign.Lm(lm))
+      val members = Seq(Campaign.Member(Search.TextIndex, text),
+        Campaign.Member(Dedup.MinhashManifest, mani),
+        Campaign.Member(Corpus.Lm, lm))
       Campaign.snapshot(s, "release_pin", members)
       maintainFamilies(s, docs, split, text, mani, lm)
       Campaign.restore(s, "release_pin", members)

@@ -601,7 +601,7 @@ object CorpusQueries {
       val path = s"target/graft-lm-frozen-${sfTag(d)}"
       Corpus.saveLm(docs.where(col("split") === "train"), "text", "doc_id",
         path)
-      Corpus.snapshotLm(s, path, "eval_pin")
+      Corpus.Lm.snapshot(s, path, "eval_pin")
       Corpus.appendToLm(docs.where(col("split") === "val"), path,
         "text", "doc_id", opId = "grow_val")
       Corpus.lmPerplexityIndexedSnapshot(

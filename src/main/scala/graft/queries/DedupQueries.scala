@@ -632,7 +632,7 @@ object DedupQueries {
       val docs = t(s, d, "documents")
       Dedup.saveWinnowManifest(
         docs.where(pmod(col("doc_id"), lit(2)) === 0), "text", "doc_id", path)
-      Dedup.snapshotWinnowManifest(s, path, "pre_forget")
+      Dedup.WinnowManifest.snapshot(s, path, "pre_forget")
       Dedup.deleteFromWinnowManifest(s, path,
         docs.where(pmod(col("doc_id"), lit(8)) === 0).select("doc_id"))
       Dedup.probeWinnowOverlap(

@@ -169,7 +169,7 @@ object SearchQueries {
       val docs = t(s, d, "documents")
       Search.saveTextIndex(docs, path)
       Search.compactTextIndex(s, path)
-      Search.snapshotTextIndex(s, path, "pre_campaign")
+      Search.TextIndex.snapshot(s, path, "pre_campaign")
       Search.deleteFromTextIndex(s, path,
         docs.where(pmod(col("doc_id"), lit(10)) === 3).select("doc_id"))
       Search.compactTextIndex(s, path)
@@ -189,7 +189,7 @@ object SearchQueries {
       val docs = t(s, d, "documents")
       Search.saveTextIndex(docs, path)
       Search.compactTextIndex(s, path)
-      Search.snapshotTextIndex(s, path, "pre_campaign")
+      Search.TextIndex.snapshot(s, path, "pre_campaign")
       Search.deleteFromTextIndex(s, path,
         docs.where(pmod(col("doc_id"), lit(10)) === 3).select("doc_id"))
       Search.compactTextIndex(s, path)
@@ -210,11 +210,11 @@ object SearchQueries {
       val docs = t(s, d, "documents")
       Search.saveTextIndex(docs, path)
       Search.compactTextIndex(s, path)
-      Search.snapshotTextIndex(s, path, "pre_campaign")
+      Search.TextIndex.snapshot(s, path, "pre_campaign")
       Search.deleteFromTextIndex(s, path,
         docs.where(pmod(col("doc_id"), lit(10)) === 3).select("doc_id"))
       Search.compactTextIndex(s, path)
-      Search.restoreTextIndex(s, path, "pre_campaign")
+      Search.TextIndex.restore(s, path, "pre_campaign")
       Search.bm25TopKIndexed(s, path, bmTerms, k = 20, k1 = k1, b = b)
     }),
 
@@ -334,11 +334,11 @@ object SearchQueries {
       val docs = t(s, d, "documents")
       Search.saveTextIndex(docs, path)
       Search.compactTextIndex(s, path)
-      Search.snapshotTextIndex(s, path, "pre_campaign")
+      Search.TextIndex.snapshot(s, path, "pre_campaign")
       Search.deleteFromTextIndex(s, path,
         docs.where(pmod(col("doc_id"), lit(10)) === 3).select("doc_id"))
       Search.compactTextIndex(s, path)
-      Search.restoreTextIndex(s, path, "pre_campaign")
+      Search.TextIndex.restore(s, path, "pre_campaign")
       Search.bm25MaintenanceDiff(s, path, bmTerms, k = 20, k1 = k1, b = b)
     }),
 

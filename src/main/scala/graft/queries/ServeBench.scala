@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.ext.{Corpus, Dedup, Search, Similarity}
+import graft.ext.{Campaign, Corpus, Dedup, Search, Similarity}
 import graft.ops.Tables.{sfTag, t}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -54,7 +54,7 @@ object ServeBench {
       // (s14) reads a maintained component, not a fresh build
       Search.savePositionalIndex(docs, p)
       Search.compactTextIndex(s, p)
-      Search.snapshotTextIndex(s, p, "bench_pin")
+      Search.TextIndex.snapshot(s, p, "bench_pin")
       Search.deleteFromTextIndex(s, p,
         docs.where(pmod(col("doc_id"), lit(10)) === 3).select("doc_id"))
     }),
@@ -65,7 +65,7 @@ object ServeBench {
         docs.where(pmod(col("doc_id"), lit(10)) < 5), "text", "doc_id",
         p, k = 32, bands = 16) // q84's parameters, so serve == its tail
       Dedup.compactMinhashManifest(s, p)
-      Dedup.snapshotMinhashManifest(s, p, "bench_pin")
+      Dedup.MinhashManifest.snapshot(s, p, "bench_pin")
       Dedup.deleteContentFromMinhashManifest(
         docs.where(pmod(col("doc_id"), lit(10)) === 1), "text", p)
     }),
@@ -75,7 +75,7 @@ object ServeBench {
       Similarity.saveIvfIndex(emb, p, nCentroids = 16, dim = 64,
         quantScale = 200.0,
         centroidsIn = Similarity.sampleCentroids(deq(emb), 16))
-      Similarity.snapshotIvfIndex(s, p, "bench_pin")
+      Similarity.IvfIndex.snapshot(s, p, "bench_pin")
       Similarity.deleteFromIvfIndex(s, p,
         emb.where(pmod(col("vec_id"), lit(10)) === 7).select("vec_id"))
     }),
@@ -84,7 +84,7 @@ object ServeBench {
       val p = lmPath(d)
       Corpus.saveLm(split.where(col("split") === "train"), "text",
         "doc_id", p)
-      Corpus.snapshotLm(s, p, "bench_pin")
+      Corpus.Lm.snapshot(s, p, "bench_pin")
       Corpus.appendToLm(split.where(col("split") === "val"), p,
         "text", "doc_id", opId = "bench_grow")
     }),
@@ -123,10 +123,10 @@ object ServeBench {
       Corpus.saveLm(split.where(col("split") === "train"), "text",
         "doc_id", cLmPath(d))
       val members = Seq(
-        graft.ext.Campaign.TextIndex(cTextPath(d)),
-        graft.ext.Campaign.MinhashManifest(cManiPath(d)),
-        graft.ext.Campaign.Lm(cLmPath(d)))
-      graft.ext.Campaign.snapshot(s, "bench_campaign", members)
+        Campaign.Member(Search.TextIndex, cTextPath(d)),
+        Campaign.Member(Dedup.MinhashManifest, cManiPath(d)),
+        Campaign.Member(Corpus.Lm, cLmPath(d)))
+      Campaign.snapshot(s, "bench_campaign", members)
       Search.deleteFromTextIndex(s, cTextPath(d),
         docs.where(pmod(col("doc_id"), lit(10)) === 3).select("doc_id"))
       Dedup.deleteContentFromMinhashManifest(
@@ -134,7 +134,7 @@ object ServeBench {
         cManiPath(d))
       Corpus.appendToLm(split.where(col("split") === "val"), cLmPath(d),
         "text", "doc_id", opId = "bench_campaign_grow")
-      graft.ext.Campaign.restore(s, "bench_campaign", members)
+      Campaign.restore(s, "bench_campaign", members)
     })
   )
 

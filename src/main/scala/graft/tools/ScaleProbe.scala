@@ -456,9 +456,10 @@ object ScaleProbe {
       Dedup.saveMinhashManifest(docs, "text", "doc_id", mani)
       Dedup.compactMinhashManifest(spark, mani)
       graft.ext.Corpus.saveLm(docs, "text", "doc_id", lm)
-      val members = Seq(graft.ext.Campaign.TextIndex(text),
-        graft.ext.Campaign.MinhashManifest(mani),
-        graft.ext.Campaign.Lm(lm))
+      val members = Seq(
+        graft.ext.Campaign.Member(graft.ext.Search.TextIndex, text),
+        graft.ext.Campaign.Member(Dedup.MinhashManifest, mani),
+        graft.ext.Campaign.Member(graft.ext.Corpus.Lm, lm))
       time(s"${k}x campaign-pin(3 families)") {
         graft.ext.Campaign.snapshot(spark, "probe_pin", members); "pinned"
       }
@@ -701,9 +702,10 @@ object ScaleProbe {
         Dedup.compactMinhashManifest(spark, cmani)
         graft.ext.Corpus.saveLm(docs1, "text", "doc_id", clm); "built"
       }
-      val members = Seq(graft.ext.Campaign.TextIndex(ctext),
-        graft.ext.Campaign.MinhashManifest(cmani),
-        graft.ext.Campaign.Lm(clm))
+      val members = Seq(
+        graft.ext.Campaign.Member(graft.ext.Search.TextIndex, ctext),
+        graft.ext.Campaign.Member(Dedup.MinhashManifest, cmani),
+        graft.ext.Campaign.Member(graft.ext.Corpus.Lm, clm))
       timed1("campaign-snapshot(pin)") {
         graft.ext.Campaign.snapshot(spark, "sf1_probe", members); "pinned"
       }

@@ -1,6 +1,7 @@
 package graft
 
-import graft.ext.{Campaign, Corpus, Dedup, Search}
+import graft.ext.{Campaign, Corpus, Dedup, Search, Similarity}
+import graft.ext.Campaign.Member
 import graft.ops.Stage
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
@@ -42,8 +43,8 @@ class CampaignSpec extends AnyFunSuite {
       "text", "doc_id", mani, k = 16, bands = 8)
     Dedup.compactMinhashManifest(spark, mani) // → versioned
     Corpus.saveLm(docs.where(col("doc_id") <= 4), "text", "doc_id", lm)
-    val members = Seq(Campaign.TextIndex(text),
-      Campaign.MinhashManifest(mani), Campaign.Lm(lm))
+    val members = Seq(Member(Search.TextIndex, text),
+      Member(Dedup.MinhashManifest, mani), Member(Corpus.Lm, lm))
     val probe = docs.where(col("doc_id") >= 5)
     def served() = (
       Search.bm25TopKIndexedSnapshot(spark, text, "rel", Seq("spark"), 10)
@@ -95,8 +96,8 @@ class CampaignSpec extends AnyFunSuite {
       "text", "doc_id", mani, k = 16, bands = 8)
     Dedup.compactMinhashManifest(spark, mani)
     Corpus.saveLm(docs.where(col("doc_id") <= 4), "text", "doc_id", lm)
-    val members = Seq(Campaign.TextIndex(text),
-      Campaign.MinhashManifest(mani), Campaign.Lm(lm))
+    val members = Seq(Member(Search.TextIndex, text),
+      Member(Dedup.MinhashManifest, mani), Member(Corpus.Lm, lm))
     val probe = docs.where(col("doc_id") >= 5)
     // the LIVE serve paths — what production reads between campaigns
     def servedLive() = (
@@ -140,7 +141,7 @@ class CampaignSpec extends AnyFunSuite {
     Search.saveTextIndex(docs, text2)
     Search.compactTextIndex(spark, text2)
     // pin only ONE member under the name
-    Campaign.snapshot(spark, "rel", Seq(Campaign.TextIndex(text)))
+    Campaign.snapshot(spark, "rel", Seq(Member(Search.TextIndex, text)))
     Search.deleteFromTextIndex(spark, text, Seq(1L).toDF("doc_id"))
     Search.compactTextIndex(spark, text)
     def live() = Search.bm25TopKIndexed(spark, text, Seq("spark"), 10)
@@ -149,12 +150,12 @@ class CampaignSpec extends AnyFunSuite {
     // restoring a campaign that CLAIMS both members must fail up front —
     // and the member that DOES carry the pin must not be restored
     val boom = intercept[IllegalArgumentException] {
-      Campaign.restore(spark, "rel",
-        Seq(Campaign.TextIndex(text), Campaign.TextIndex(text2)))
+      Campaign.restore(spark, "rel", Seq(Member(Search.TextIndex, text),
+        Member(Search.TextIndex, text2)))
     }
     assert(boom.getMessage.contains(text2))
     assert(live() == Set(2L, 3L, 5L)) // text untouched by the failed restore
-    Campaign.drop(spark, "rel", Seq(Campaign.TextIndex(text)))
+    Campaign.drop(spark, "rel", Seq(Member(Search.TextIndex, text)))
   }
 
   test("a failed member pin rolls back the whole campaign") {
@@ -169,8 +170,8 @@ class CampaignSpec extends AnyFunSuite {
     Search.saveTextIndex(docs, text)
     Dedup.saveMinhashManifest(docs, "text", "doc_id", mani, 16, 8)
     intercept[IllegalStateException] {
-      Campaign.snapshot(spark, "rel", Seq(
-        Campaign.TextIndex(text), Campaign.MinhashManifest(mani)))
+      Campaign.snapshot(spark, "rel", Seq(Member(Search.TextIndex, text),
+        Member(Dedup.MinhashManifest, mani)))
     }
     // ...and the manifest pin taken before the failure is rolled back:
     // the name resolves NOWHERE (never a partial campaign)
@@ -189,7 +190,7 @@ class CampaignSpec extends AnyFunSuite {
     Dedup.saveMinhashManifest(docs.where(col("doc_id") <= 4),
       "text", "doc_id", mani, 16, 8)
     // campaign v1 over the manifest alone, name 'rel'
-    Campaign.snapshot(spark, "rel", Seq(Campaign.MinhashManifest(mani)))
+    Campaign.snapshot(spark, "rel", Seq(Member(Dedup.MinhashManifest, mani)))
     val probe = docs.where(col("doc_id") >= 5)
     val v1 = Dedup.incrementalNearDupsSnapshot(probe, mani, "rel",
       "text", "doc_id").collect().map(_.toSeq).toSeq
@@ -204,14 +205,14 @@ class CampaignSpec extends AnyFunSuite {
     Search.saveTextIndex(docs, text) // never compacted → plain → unpinnable
     intercept[IllegalStateException] {
       Campaign.snapshot(spark, "rel", Seq(
-        Campaign.MinhashManifest(mani), Campaign.TextIndex(text)))
+        Member(Dedup.MinhashManifest, mani), Member(Search.TextIndex, text)))
     }
     val after = Dedup.incrementalNearDupsSnapshot(probe, mani, "rel",
       "text", "doc_id").collect().map(_.toSeq).toSeq
     assert(after == v1, "prior campaign pin must survive a failed refresh")
     // the member that never had the pin stays unpinned
     assert(Stage.resolveSnapshot(spark, s"$text/postings", "rel").isEmpty)
-    Campaign.drop(spark, "rel", Seq(Campaign.MinhashManifest(mani)))
+    Campaign.drop(spark, "rel", Seq(Member(Dedup.MinhashManifest, mani)))
   }
 
   test("member order does not matter: acquisition is by sorted path") {
@@ -226,13 +227,15 @@ class CampaignSpec extends AnyFunSuite {
     // two campaigns over the same members in OPPOSITE declaration order
     // both succeed (same sorted acquisition order — no lock inversion)
     Campaign.snapshot(spark, "x", Seq(
-      Campaign.TextIndex(a), Campaign.TextIndex(b)))
+      Member(Search.TextIndex, a), Member(Search.TextIndex, b)))
     Campaign.snapshot(spark, "y", Seq(
-      Campaign.TextIndex(b), Campaign.TextIndex(a)))
+      Member(Search.TextIndex, b), Member(Search.TextIndex, a)))
     assert(Search.bm25TopKIndexedSnapshot(spark, a, "y", Seq("spark"), 10)
       .count() > 0)
-    Campaign.drop(spark, "x", Seq(Campaign.TextIndex(a), Campaign.TextIndex(b)))
-    Campaign.drop(spark, "y", Seq(Campaign.TextIndex(a), Campaign.TextIndex(b)))
+    Campaign.drop(spark, "x", Seq(
+      Member(Search.TextIndex, a), Member(Search.TextIndex, b)))
+    Campaign.drop(spark, "y", Seq(
+      Member(Search.TextIndex, a), Member(Search.TextIndex, b)))
   }
 
   test("a pin racing live exactly-once ingest never records a torn file set") {
@@ -249,26 +252,31 @@ class CampaignSpec extends AnyFunSuite {
     Search.compactTextIndex(spark, idx) // versioned → pinnable
     val stopIngest = new java.util.concurrent.atomic.AtomicBoolean(false)
     val ingestErr = new java.util.concurrent.atomic.AtomicReference[Throwable]
+    val committed = new java.util.concurrent.atomic.AtomicLong(0L)
     val ingester = new Thread(() => {
-      var b = 0L
-      try while (!stopIngest.get && b < 60) {
+      try while (!stopIngest.get && committed.get < 60) {
+        val b = committed.get
         // losing the root lease to a pin is the designed outcome —
         // retry the same batch, exactly as a streaming sink would. Two
         // messages express it: "concurrent maintenance" (lease refused at
-        // acquire) and the commit-point fencing rejection (lease acquired,
-        // then the heartbeat starved past the staleness window under CPU
-        // contention and the pin reclaimed it mid-publish — the rejected
-        // batch's markerless files are swept, the ledger never committed,
-        // so replaying the same batchId stays exactly-once)
+        // acquire) and the lease-reclaim fencing rejection (lease
+        // acquired, then the heartbeat starved past the staleness window
+        // under CPU contention and the pin reclaimed it mid-publish — the
+        // rejected batch's markerless files are swept, the ledger never
+        // committed, so replaying the same batchId stays exactly-once).
+        // The OTHER fencing rejection — a commit fence already claimed by
+        // a different writer — would mean a double commit by this single
+        // ingester, so it is not tolerated.
         try {
           Search.appendToTextIndexExactlyOnce(
             Seq((100L + b, s"spark batchtok$b")).toDF("doc_id", "text"),
             idx, batchId = b)
-          b += 1
+          committed.incrementAndGet()
         } catch {
           case e: IllegalStateException
             if e.getMessage.contains("concurrent maintenance") ||
-               e.getMessage.contains("fencing check failed at commit") => ()
+               e.getMessage.contains(
+                 "no longer carries this writer's acquire token") => ()
         }
       } catch { case e: Throwable => ingestErr.set(e) }
     })
@@ -279,6 +287,7 @@ class CampaignSpec extends AnyFunSuite {
         .filter(_.startsWith("b")).map(_.takeWhile(_ != '-')).toSet
     }
     ingester.start()
+    var pins = 0
     try {
       for (k <- 0 until 12) {
         val name = s"race_$k"
@@ -286,20 +295,30 @@ class CampaignSpec extends AnyFunSuite {
         // IllegalStateException "concurrent maintenance" is an allowed
         // outcome (the lease refusing to interleave) — a torn pin is not
         try {
-          Search.snapshotTextIndex(spark, idx, name)
+          Search.TextIndex.snapshot(spark, idx, name)
           val p = batchIds("postings", name)
           val d = batchIds("doclens", name)
           val s = batchIds("stats", name)
           assert(p == d && d == s,
             s"torn pin $name: postings=$p doclens=$d stats=$s")
-          Search.dropTextIndexSnapshot(spark, idx, name)
+          Search.TextIndex.dropSnapshot(spark, idx, name)
+          pins += 1
         } catch {
           case e: IllegalStateException
             if e.getMessage.contains("concurrent maintenance") => ()
         }
       }
+      // twelve metadata-only pins can all finish before the first ingest
+      // job does: let the ingester land a batch before it is stopped
+      val deadline = System.nanoTime() + 120L * 1000000000L
+      while (committed.get < 1 && ingestErr.get == null &&
+             System.nanoTime() < deadline) Thread.sleep(50)
     } finally { stopIngest.set(true); ingester.join() }
     assert(ingestErr.get == null, s"ingest died: ${ingestErr.get}")
+    // the torn-pin checks above are vacuous unless both sides made
+    // progress: some batch committed and some pin landed
+    assert(committed.get >= 1, "no ingest batch ever committed")
+    assert(pins >= 1, "none of the 12 pins succeeded")
   }
 
   test("an IVF member pins and serves with the rest of the campaign") {
@@ -318,7 +337,8 @@ class CampaignSpec extends AnyFunSuite {
       centroidsIn = graft.ext.Similarity.sampleCentroids(deq, 8))
     Search.saveTextIndex(docRows.toDF("doc_id", "text"), text)
     Search.compactTextIndex(spark, text)
-    val members = Seq(Campaign.IvfIndex(ivf), Campaign.TextIndex(text))
+    val members = Seq(Member(Similarity.IvfIndex, ivf),
+      Member(Search.TextIndex, text))
     Campaign.snapshot(spark, "rel", members)
     val qset = deq.where(col("vec_id") < 3)
     def pinned() = graft.ext.Similarity
@@ -344,7 +364,8 @@ class CampaignSpec extends AnyFunSuite {
     graft.ext.Similarity.savePqIndex(emb, pq, m = 8, nCent = 16, dim = 64)
     Search.saveTextIndex(docRows.toDF("doc_id", "text"), text)
     Search.compactTextIndex(spark, text)
-    val members = Seq(Campaign.PqIndex(pq), Campaign.TextIndex(text))
+    val members = Seq(Member(Similarity.PqIndex, pq),
+      Member(Search.TextIndex, text))
     Campaign.snapshot(spark, "rel", members)
     val qset = emb.where(col("vec_id") < 3)
     def pinned() = graft.ext.Similarity
@@ -375,7 +396,8 @@ class CampaignSpec extends AnyFunSuite {
     graft.ext.Similarity.saveBinaryIndex(emb, bi, dim = 64)
     Search.saveTextIndex(docRows.toDF("doc_id", "text"), text)
     Search.compactTextIndex(spark, text)
-    val members = Seq(Campaign.BinaryIndex(bi), Campaign.TextIndex(text))
+    val members = Seq(Member(Similarity.BinaryIndex, bi),
+      Member(Search.TextIndex, text))
     Campaign.snapshot(spark, "rel", members)
     val qset = emb.where(col("vec_id") < 3)
     def pinned() = graft.ext.Similarity
@@ -409,7 +431,8 @@ class CampaignSpec extends AnyFunSuite {
     graft.ext.Dedup.saveWinnowManifest(corpus, "text", "doc_id", wm)
     Search.saveTextIndex(docRows.toDF("doc_id", "text"), text)
     Search.compactTextIndex(spark, text)
-    val members = Seq(Campaign.WinnowManifest(wm), Campaign.TextIndex(text))
+    val members = Seq(Member(Dedup.WinnowManifest, wm),
+      Member(Search.TextIndex, text))
     Campaign.snapshot(spark, "rel", members)
     def pinned() = graft.ext.Dedup
       .probeWinnowOverlapSnapshot(probe, wm, "rel")
@@ -440,7 +463,7 @@ class CampaignSpec extends AnyFunSuite {
     Search.saveTextIndex(docs, text)
     Corpus.saveLm(docs.where(col("doc_id") <= 4), "text", "doc_id", lm)
     val rep = Campaign.healthReport(spark, Seq(
-      Campaign.TextIndex(text), Campaign.Lm(lm)))
+      Member(Search.TextIndex, text), Member(Corpus.Lm, lm)))
     // one row per (member, component): 3 text components + 2 LM
     val rows = rep.collect()
     assert(rows.length == 5)
@@ -456,7 +479,8 @@ class CampaignSpec extends AnyFunSuite {
   test("campaign members with duplicate roots are rejected loudly") {
     intercept[IllegalArgumentException] {
       Campaign.snapshot(spark, "rel", Seq(
-        Campaign.TextIndex("target/x"), Campaign.TextIndex("target/x")))
+        Member(Search.TextIndex, "target/x"),
+        Member(Search.TextIndex, "target/x")))
     }
   }
 }

@@ -606,7 +606,7 @@ class CorpusSpec extends AnyFunSuite {
     val batch = Seq((10L, "a b c")).toDF("doc_id", "text")
     val path = "target/graft-test-lm-frozen"
     Corpus.saveLm(train, "text", "doc_id", path)
-    Corpus.snapshotLm(spark, path, "pin")
+    Corpus.Lm.snapshot(spark, path, "pin")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("doc_id").as[(Long, Long, Long, Long)].collect().toList
     val atPin = rows(Corpus.lmPerplexityIndexed(batch, path, "text", "doc_id"))
@@ -624,7 +624,7 @@ class CorpusSpec extends AnyFunSuite {
     assert(rows(Corpus.lmPerplexityIndexed(batch, path, "text", "doc_id"))
       == live)
     // dropped pin stops resolving
-    Corpus.dropLmSnapshot(spark, path, "pin")
+    Corpus.Lm.dropSnapshot(spark, path, "pin")
     intercept[IllegalStateException] {
       Corpus.lmPerplexityIndexedSnapshot(batch, path, "pin", "text", "doc_id")
     }

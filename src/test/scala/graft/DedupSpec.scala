@@ -719,7 +719,7 @@ class DedupSpec extends AnyFunSuite {
     val full = verdicts(
       Dedup.incrementalNearDups(batch, path, "text", "doc_id"))
     Dedup.compactMinhashManifest(spark, path) // migrate plain → v1
-    Dedup.snapshotMinhashManifest(spark, path, "pre_campaign")
+    Dedup.MinhashManifest.snapshot(spark, path, "pre_campaign")
     // TWO maintenance ops later — the second would GC v1 unpinned
     Dedup.deleteContentFromMinhashManifest(
       Seq((99L, base)).toDF("doc_id", "text"), "text", path) // → v2
@@ -735,7 +735,7 @@ class DedupSpec extends AnyFunSuite {
       Dedup.incrementalNearDupsSnapshot(
         batch, path, "nope", "text", "doc_id").collect()
     }
-    Dedup.dropMinhashManifestSnapshot(spark, path, "pre_campaign")
+    Dedup.MinhashManifest.dropSnapshot(spark, path, "pre_campaign")
     intercept[IllegalStateException] {
       Dedup.incrementalNearDupsSnapshot(
         batch, path, "pre_campaign", "text", "doc_id").collect()
@@ -1129,12 +1129,12 @@ class DedupSpec extends AnyFunSuite {
     assert(verdicts(path) == after)
     // forget doc 1: its quote verdict vanishes; the pinned pre-forget
     // state restores it (born-versioned: the pin works off the build)
-    graft.ext.Dedup.snapshotWinnowManifest(spark, path, "pre_forget")
+    graft.ext.Dedup.WinnowManifest.snapshot(spark, path, "pre_forget")
     graft.ext.Dedup.deleteFromWinnowManifest(spark, path,
       Seq(1L).toDF("doc_id"))
     val forgotten = verdicts(path).find(_._1 == 3L).get
     assert(forgotten._3 == -1L && forgotten._4 == 0L && !forgotten._6)
-    graft.ext.Dedup.restoreWinnowManifest(spark, path, "pre_forget")
+    graft.ext.Dedup.WinnowManifest.restore(spark, path, "pre_forget")
     assert(verdicts(path) == after)
     // the BATCHED forget: a tombstone masks immediately, the fold turns
     // it physical, and verdicts are identical at every point

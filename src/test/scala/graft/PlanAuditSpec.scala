@@ -485,7 +485,7 @@ class PlanAuditSpec extends AnyFunSuite {
     graft.ext.Similarity.saveIvfIndex(emb, idx, nCentroids = 8, dim = 64,
       quantScale = 200.0,
       centroidsIn = graft.ext.Similarity.sampleCentroids(deq, 8))
-    graft.ext.Similarity.snapshotIvfIndex(spark, idx, "audit")
+    graft.ext.Similarity.IvfIndex.snapshot(spark, idx, "audit")
     val df = graft.ext.Similarity.topKIvfIndexedSnapshot(spark,
       deq.where(col("vec_id") < 3), idx, "audit", k = 5)
     df.collect() // force execution so the adaptive plan finalizes

@@ -325,11 +325,11 @@ class SearchSpec extends AnyFunSuite {
 
     // a pin covers positions; compaction folds a pending tombstone out
     // of them; restore rolls the positional lists back with the triple
-    Search.snapshotTextIndex(spark, idx, "pre_forget")
+    Search.TextIndex.snapshot(spark, idx, "pre_forget")
     Search.tombstoneFromTextIndex(spark, idx, Seq(3L).toDF("doc_id"))
     Search.compactTextIndex(spark, idx)
     assert(phrase("x", "y") == Seq((2L, 1), (4L, 1)))
-    Search.restoreTextIndex(spark, idx, "pre_forget")
+    Search.TextIndex.restore(spark, idx, "pre_forget")
     assert(phrase("x", "y") == Seq((2L, 1), (3L, 2), (4L, 1)))
 
     // bag-of-words serving stayed consistent with the same history
@@ -351,11 +351,11 @@ class SearchSpec extends AnyFunSuite {
     assert(phrase() == Seq((1L, 1), (2L, 1)))
     // all four components are born versioned → a pin works BEFORE any
     // compaction, and keeps serving the birth state across later growth
-    Search.snapshotTextIndex(spark, idx, "birth")
+    Search.TextIndex.snapshot(spark, idx, "birth")
     Search.appendToTextIndexExactlyOnce(
       Seq((3L, "p q p q")).toDF("doc_id", "text"), idx, 6L)
     assert(phrase() == Seq((1L, 1), (2L, 1), (3L, 2)))
-    Search.restoreTextIndex(spark, idx, "birth")
+    Search.TextIndex.restore(spark, idx, "birth")
     assert(phrase() == Seq((1L, 1), (2L, 1)))
   }
 
@@ -401,7 +401,7 @@ class SearchSpec extends AnyFunSuite {
     // migrate the triple to versioned (delete is a compacting rewrite),
     // then pin the whole four-component state
     Search.deleteFromTextIndex(spark, idx, Seq(1L).toDF("doc_id"))
-    Search.snapshotTextIndex(spark, idx, "pre_rebuild")
+    Search.TextIndex.snapshot(spark, idx, "pre_rebuild")
     // REBUILD the positional component in place over a different corpus
     // slice — before the publishRebuild change this mode-overwrite wiped
     // positions/' versioned history and dangled the pin
@@ -409,7 +409,7 @@ class SearchSpec extends AnyFunSuite {
     assert(phrase() == Seq((2L, 1)))
     // the pin survived the rebuild: restore rolls positions back with
     // the triple and serves the pre-rebuild state
-    Search.restoreTextIndex(spark, idx, "pre_rebuild")
+    Search.TextIndex.restore(spark, idx, "pre_rebuild")
     assert(phrase() == Seq((2L, 1), (3L, 2)))
   }
 

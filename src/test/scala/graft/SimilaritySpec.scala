@@ -113,7 +113,7 @@ class SimilaritySpec extends AnyFunSuite {
     assert(serve() == inline)
     // pin, delete a slice, compact: the live serve equals a fresh build
     // over the survivors; the pin keeps serving the pre-delete state
-    Similarity.snapshotBinaryIndex(spark, path, "pre_del")
+    Similarity.BinaryIndex.snapshot(spark, path, "pre_del")
     val atPin = serve()
     Similarity.deleteFromBinaryIndex(spark, path,
       vecs.where(pmod(col("vec_id"), lit(10)) === 7).select("vec_id"))
@@ -135,7 +135,7 @@ class SimilaritySpec extends AnyFunSuite {
       .collect().map(r =>
         (r.getLong(0), r.getInt(4)) -> ((r.getLong(1), r.getLong(2)))).toMap
     assert(pinned == atPin)
-    Similarity.dropBinaryIndexSnapshot(spark, path, "pre_del")
+    Similarity.BinaryIndex.dropSnapshot(spark, path, "pre_del")
   }
 
   test("DotProduct is null-safe and handles empty arrays") {
@@ -783,7 +783,7 @@ class SimilaritySpec extends AnyFunSuite {
       .select("query_id", "neighbor_id", "cos_sim", "rank")
       .as[(Long, Long, Double, Int)].collect().toSet
     val full = rows(Similarity.topKIvfIndexed(spark, qset, idx, k = 5))
-    Similarity.snapshotIvfIndex(spark, idx, "pre_campaign") // pins v1
+    Similarity.IvfIndex.snapshot(spark, idx, "pre_campaign") // pins v1
     // TWO maintenance ops — the second would GC v1 unpinned
     Similarity.deleteFromIvfIndex(spark, idx,
       emb.where(pmod(col("vec_id"), lit(3)) === 1).select("vec_id")) // → v2
@@ -793,14 +793,14 @@ class SimilaritySpec extends AnyFunSuite {
     assert(rows(Similarity.topKIvfIndexed(spark, qset, idx, k = 5))
       .forall(r => r._2 % 3 != 1))
     // dropped pin stops resolving
-    Similarity.dropIvfIndexSnapshot(spark, idx, "pre_campaign")
+    Similarity.IvfIndex.dropSnapshot(spark, idx, "pre_campaign")
     intercept[IllegalStateException] {
       Similarity.topKIvfIndexedSnapshot(
         spark, qset, idx, "pre_campaign", k = 5)
     }
     // REBUILD clears pins (the clearLedger/clearTombstones rule): a
     // stale name must not keep serving the old corpus's lists
-    Similarity.snapshotIvfIndex(spark, idx, "stale_pin")
+    Similarity.IvfIndex.snapshot(spark, idx, "stale_pin")
     Similarity.saveIvfIndex(emb, idx, nCentroids = 16, dim = 64,
       quantScale = 200.0, centroidsIn = cents)
     intercept[IllegalStateException] {
@@ -911,7 +911,7 @@ class SimilaritySpec extends AnyFunSuite {
     assert(rows(Similarity.pqTopKIndexed(spark, queries, idx, k = 5))
       == rows(Similarity.pqTopK(queries, emb, k = 5, dim = 64, cbEven)))
     // pin, delete, serve: live == survivors, pin == pre-delete state
-    Similarity.snapshotPqIndex(spark, idx, "pre_del")
+    Similarity.PqIndex.snapshot(spark, idx, "pre_del")
     Similarity.deleteFromPqIndex(spark, idx,
       emb.where(pmod(col("vec_id"), lit(10)) === 3).select("vec_id"))
     val live = rows(Similarity.pqTopKIndexed(spark, queries, idx, k = 5))
@@ -922,7 +922,7 @@ class SimilaritySpec extends AnyFunSuite {
       "pre_del", k = 5))
       == rows(Similarity.pqTopK(queries, emb, k = 5, dim = 64, cbEven)))
     // restore rolls the codes back; the pin survives
-    Similarity.restorePqIndex(spark, idx, "pre_del")
+    Similarity.PqIndex.restore(spark, idx, "pre_del")
     assert(rows(Similarity.pqTopKIndexed(spark, queries, idx, k = 5))
       == rows(Similarity.pqTopK(queries, emb, k = 5, dim = 64, cbEven)))
   }
@@ -1029,7 +1029,7 @@ class SimilaritySpec extends AnyFunSuite {
       .select("query_id", "neighbor_id", "cos_sim", "rank")
       .as[(Long, Long, Double, Int)].collect().toSet
     val atPin = live()
-    Similarity.snapshotIvfIndex(spark, idx, "pre_campaign")
+    Similarity.IvfIndex.snapshot(spark, idx, "pre_campaign")
     // destructive campaign, fully compacted — nothing pending masks
     Similarity.deleteFromIvfIndex(spark, idx,
       emb.where(pmod(col("vec_id"), lit(3)) === 1).select("vec_id"))
@@ -1037,11 +1037,11 @@ class SimilaritySpec extends AnyFunSuite {
     assert(live() != atPin)
     // centroids/meta are frozen at build, so restoring lists/ restores
     // the whole serveable state — scores bit-match the pre-campaign serve
-    Similarity.restoreIvfIndex(spark, idx, "pre_campaign")
+    Similarity.IvfIndex.restore(spark, idx, "pre_campaign")
     assert(live() == atPin)
     // a typo'd name fails loudly, live state untouched
     intercept[IllegalArgumentException] {
-      Similarity.restoreIvfIndex(spark, idx, "nope")
+      Similarity.IvfIndex.restore(spark, idx, "nope")
     }
     assert(live() == atPin)
   }

@@ -733,7 +733,7 @@ class StageSpec extends AnyFunSuite {
       idx, batchId = 0L)
     assert(Stage.resolve(spark, s"$idx/postings") ==
       s"$idx/postings/v00000001")
-    Search.snapshotTextIndex(spark, idx, "at_birth")
+    Search.TextIndex.snapshot(spark, idx, "at_birth")
     def pinned() = Search
       .bm25TopKIndexedSnapshot(spark, idx, "at_birth", Seq("spark"), 10)
       .collect().map(_.toSeq).toSeq
@@ -790,7 +790,7 @@ class StageSpec extends AnyFunSuite {
       (1L, "spark join spark"),
       (2L, "stream window table")).toDF("doc_id", "text"), idx)
     Search.compactTextIndex(spark, idx) // migrate → v1
-    Search.snapshotTextIndex(spark, idx, "pinned")
+    Search.TextIndex.snapshot(spark, idx, "pinned")
     def serveSnap() = Search
       .bm25TopKIndexedSnapshot(spark, idx, "pinned", Seq("spark"), 10)
       .collect().map(_.toSeq).toSeq
@@ -869,12 +869,12 @@ class StageSpec extends AnyFunSuite {
       (2L, "stream window table"),
       (3L, "spark stream join")).toDF("doc_id", "text"), idx)
     Search.compactTextIndex(spark, idx) // migrate → versioned
-    Search.snapshotTextIndex(spark, idx, "pin")
+    Search.TextIndex.snapshot(spark, idx, "pin")
     def live() = Search.bm25TopKIndexed(spark, idx, Seq("spark"), 10)
       .collect().map(_.getLong(0)).toSet
     // a typo'd name fails BEFORE any component is restored
     val boom = intercept[IllegalArgumentException] {
-      Search.restoreTextIndex(spark, idx, "npie")
+      Search.TextIndex.restore(spark, idx, "npie")
     }
     assert(boom.getMessage.contains("postings"))
     assert(live() == Set(1L, 3L))
@@ -883,11 +883,11 @@ class StageSpec extends AnyFunSuite {
     // (restore touches versioned components, never the tombstone dir)
     Search.tombstoneFromTextIndex(spark, idx, Seq(1L).toDF("doc_id"))
     assert(live() == Set(3L))
-    Search.restoreTextIndex(spark, idx, "pin")
+    Search.TextIndex.restore(spark, idx, "pin")
     assert(live() == Set(3L)) // doc 1 stays masked
     // ...but a COMPACTED (consumed) forget is resurrected by the pin
     Search.compactTextIndex(spark, idx) // consume the tombstone
-    Search.restoreTextIndex(spark, idx, "pin")
+    Search.TextIndex.restore(spark, idx, "pin")
     assert(live() == Set(1L, 3L))
   }
 
