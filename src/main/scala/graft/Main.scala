@@ -184,13 +184,8 @@ object Main {
     // reuse a live session (tests, notebooks); own-and-stop otherwise
     val existing = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
     val spark = existing.getOrElse {
-      SparkSession.builder()
+      LocalSpark.builder(sys.props.getOrElse("graft.master", "local[*]"), 32)
         .appName("graft-job")
-        .master(sys.props.getOrElse("graft.master", "local[*]"))
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
         .getOrCreate()
     }
     try run(spark, conf)

@@ -41,8 +41,9 @@ import org.apache.spark.sql.SparkSession
   * campaign), fresh pins are dropped — so a campaign name never
   * resolves to a partial or mixed member set.
   *
-  * Serving reads nothing new: each family's existing `*Snapshot` serve
-  * path takes the campaign name (q133 serves all three from one pin).
+  * Serving reads nothing new: each family's serve takes the campaign
+  * name as `at = Family.Pinned(name)` (q133 serves all three from one
+  * pin).
   * [[drop]] releases every member's pin; [[vacuum]] reclaims the
   * storage immediately ([[Stage.vacuum]] per member component).
   */

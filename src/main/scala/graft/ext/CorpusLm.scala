@@ -462,8 +462,9 @@ trait CorpusLm extends CorpusTokenizers {
     * trail on the maintenance schedule.
     *
     * TIME TRAVEL: the version-flip previous-serve the text and IVF
-    * indexes offer (`bm25TopKIndexedPrevious` / `topKIvfIndexedPrevious`)
-    * deliberately has no LM counterpart. Those families maintain by
+    * indexes offer (`at = Family.Previous` on `bm25TopKIndexed` /
+    * `topKIvfIndexed`) deliberately has no LM counterpart
+    * ([[lmPerplexityIndexed]] rejects it). Those families maintain by
     * REWRITE (each op publishes a full new version, so "the state the op
     * superseded" is a directory that already exists); the LM maintains
     * by DELTA — an append/delete lands rows, and only [[compactLm]]
@@ -508,43 +509,38 @@ trait CorpusLm extends CorpusTokenizers {
     }
   }
 
-  /** The model relations of a persisted LM: summed positive bigram
-    * counts, prefix counts derived from them, and the one-row vocab size.
-    * ONE loader so every consumer agrees on the fold. The groupBy's
-    * exchange doubles as the scoring join's (p, w) partitioning, so
-    * folding deltas at load adds no extra shuffle over pre-aggregated
-    * tables.
+  /** The model relations of a persisted LM at version `at` (live or
+    * pinned): summed positive bigram counts, prefix counts derived from
+    * them, and the one-row vocab size. ONE loader so every consumer
+    * agrees on the fold. The groupBy's exchange doubles as the scoring
+    * join's (p, w) partitioning, so folding deltas at load adds no extra
+    * shuffle over pre-aggregated tables.
     */
-  private def loadLm(spark: org.apache.spark.sql.SparkSession,
-                     path: String): (DataFrame, DataFrame, DataFrame) = {
-    import graft.ops.Stage.resolve
-    // enforce publishOnce's retry contract at the one place every LM
-    // consumer passes through: a crashed-unretried delete/append is
+  private def loadLm(spark: org.apache.spark.sql.SparkSession, path: String,
+                     at: graft.ops.Family.At)
+      : (DataFrame, DataFrame, DataFrame) = {
+    // enforce publishOnce's retry contract at the one place every live
+    // LM consumer passes through: a crashed-unretried delete/append is
     // SERVING but not durable — the next compaction reverts it. Surface
     // the pending op ids loudly so the operator retries (same id) first;
-    // metadata-only (one ledger + two component listings).
-    val pending = graft.ops.Stage.pendingOps(spark, path,
-      Lm.components(spark, path))
-    if (pending.nonEmpty)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"LM at $path has UNCOMMITTED maintenance ops " +
-          s"[${pending.mkString(", ")}]: their deltas serve now but are " +
-          "not durable — retry each op with its original id BEFORE any " +
-          "compaction, or the compaction will revert it")
-    loadLmFrames(spark.read.parquet(resolve(spark, s"$path/bigrams")),
-      spark.read.parquet(resolve(spark, s"$path/vocab")))
-  }
-
-  /** [[loadLm]]'s fold over already-materialized delta relations — the
-    * layer snapshot scoring enters at (pinned FILE LISTS, not
-    * directories — see [[graft.ops.Stage.snapshot]]). */
-  private def loadLmFrames(bigrams: DataFrame, vocab: DataFrame)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val cb = bigrams
+    // metadata-only (one ledger + two component listings). A pin's file
+    // list is frozen, so only live reads can serve a pending op.
+    if (at == graft.ops.Family.Live) {
+      val pending = graft.ops.Stage.pendingOps(spark, path,
+        Lm.components(spark, path))
+      if (pending.nonEmpty)
+        org.slf4j.LoggerFactory.getLogger(getClass).warn(
+          s"LM at $path has UNCOMMITTED maintenance ops " +
+            s"[${pending.mkString(", ")}]: their deltas serve now but are " +
+            "not durable — retry each op with its original id BEFORE any " +
+            "compaction, or the compaction will revert it")
+    }
+    val read = Lm.read(spark, path, at) _
+    val cb = read("bigrams")
       .groupBy("p", "w").agg(sum(col("cb")).as("cb"))
       .where(col("cb") > 0)
     val cu = cb.groupBy("p").agg(sum(col("cb")).as("cu"))
-    val v = vocab
+    val v = read("vocab")
       .groupBy("tok").agg(sum(col("c")).as("c"))
       .agg(count(when(col("c") > 0, lit(1))).as("v"))
     (cb, cu, v)
@@ -672,10 +668,22 @@ trait CorpusLm extends CorpusTokenizers {
   /** [[lmPerplexity]] scoring against a [[saveLm]] model on disk: the
     * training pass is skipped entirely — per-batch cost is the batch's
     * bigram explode plus the count-relation joins over the loaded model.
+    * `at` is live or an [[Lm]] pin — the frozen model's counts,
+    * whatever has been appended or deleted since. `Previous` throws
+    * IllegalArgumentException: the LM maintains by delta, so it has no
+    * superseded version to serve — revert one op by publishing its
+    * deltas negated (see [[saveLm]]).
     */
   def lmPerplexityIndexed(score: DataFrame, path: String, textCol: String,
-                          idCol: String): DataFrame = {
-    val (cb, cu, v) = loadLm(score.sparkSession, path)
+                          idCol: String,
+                          at: graft.ops.Family.At = graft.ops.Family.Live)
+      : DataFrame = {
+    require(at != graft.ops.Family.Previous,
+      s"the LM at $path has no previous version to serve: it maintains " +
+        "by delta, not by version flip — revert an op by publishing its " +
+        "deltas negated, or pin the model (Corpus.Lm.snapshot) and serve " +
+        "at = Pinned(name)")
+    val (cb, cu, v) = loadLm(score.sparkSession, path, at)
     scoreAgainstLm(score, cb, cu, v, textCol, idCol)
   }
 
@@ -728,32 +736,17 @@ trait CorpusLm extends CorpusTokenizers {
     * pin records FILE LISTS and the LM maintains by additive delta —
     * appends/deletes land new delta files, never rewrite old ones — a
     * pinned model stays scoreable bit-identically
-    * ([[lmPerplexityIndexedSnapshot]]) while ingest continues: the
-    * frozen-model contract an eval pipeline needs (today's quality
-    * scores must not drift because tonight's crawl landed). This is NOT
-    * version time-travel (the LM deliberately has none — reverting ONE
-    * op is a negated-delta publish, see [[saveLm]]); restore undoes a
+    * (`lmPerplexityIndexed(…, at = Pinned(name))`) while ingest
+    * continues: the frozen-model contract an eval pipeline needs
+    * (today's quality scores must not drift because tonight's crawl
+    * landed). This is NOT version time-travel (the LM deliberately has
+    * none — reverting ONE op is a negated-delta publish, see
+    * [[saveLm]]); restore undoes a
     * whole campaign of deltas in one bytes-of-the-pin copy.
     * [[compactLm]] REWRITES the components, after which the pin keeps
     * serving the pre-compaction state it captured. */
   val Lm: graft.ops.Family =
     graft.ops.Family("lm", (_, _) => Seq("bigrams", "vocab"))
-
-  /** [[lmPerplexityIndexed]] against an [[Lm]] pin — the frozen
-    * model's counts, whatever has been appended or deleted since.
-    * Fails loudly on an unknown name. */
-  def lmPerplexityIndexedSnapshot(score: DataFrame, path: String,
-                                  name: String, textCol: String,
-                                  idCol: String): DataFrame = {
-    val spark = score.sparkSession
-    def pinned(c: String) = graft.ops.Stage
-      .readSnapshot(spark, s"$path/$c", name)
-      .getOrElse(throw new IllegalStateException(
-        s"$path/$c has no snapshot named '$name' — pin one with " +
-          "Corpus.Lm.snapshot before scoring against it"))
-    val (cb, cu, v) = loadLmFrames(pinned("bigrams"), pinned("vocab"))
-    scoreAgainstLm(score, cb, cu, v, textCol, idCol)
-  }
 
   /** Sentence-level decontamination: per eval document, how many of its
     * distinct sentences (split on `[.!?]+` runs, trimmed, at least

@@ -572,28 +572,23 @@ trait DedupMinhash extends DedupExactOps {
     * surviving candidates. New-vs-new duplication is deliberately out of
     * scope (that is the batch-level [[minhashPairs]]/[[minhashClusters]]
     * pass); this operator answers "is it already in the corpus".
+    *
+    * `at` picks the (docs, bands) version probed
+    * ([[graft.ops.Family.read]]): live; PREVIOUS — the state a content
+    * delete or compaction superseded, kept one publish cycle, the
+    * validation read that diffs a forget operation's verdict changes
+    * before trusting it; or a PINNED [[MinhashManifest]] snapshot, any
+    * number of maintenance ops later. Meta (k, bands) is frozen at
+    * build; pending tombstones mask every version (right-to-be-forgotten
+    * holds for validation reads).
     */
   def incrementalNearDups(newDf: DataFrame, manifestPath: String,
                           textCol: String, idCol: String,
-                          threshold: Double = 0.9): DataFrame =
-    incrementalNearDupsImpl(newDf, manifestPath, textCol, idCol, threshold,
-      previous = false)
-
-  /** [[incrementalNearDups]] against the PREVIOUS manifest snapshot — the
-    * state a content delete or compaction superseded, kept one publish
-    * cycle by the versioned publish ([[graft.ops.Stage.resolvePrevious]];
-    * the text index's `bm25TopKIndexedPrevious` and the IVF's
-    * `topKIvfIndexedPrevious` are the same read in their families). The
-    * validation use: diff a forget operation's verdict changes before
-    * trusting it. Meta (k, bands) is frozen at build, so only docs/bands
-    * resolve to their prior versions; pending tombstones still mask the
-    * snapshot (right-to-be-forgotten holds for validation reads).
-    */
-  def incrementalNearDupsPrevious(newDf: DataFrame, manifestPath: String,
-                                  textCol: String, idCol: String,
-                                  threshold: Double = 0.9): DataFrame =
-    incrementalNearDupsImpl(newDf, manifestPath, textCol, idCol, threshold,
-      previous = true)
+                          threshold: Double = 0.9,
+                          at: graft.ops.Family.At = graft.ops.Family.Live)
+      : DataFrame =
+    probePrepared(prepareProbe(newDf, textCol, idCol), idCol, manifestPath,
+      threshold, at)
 
   /** Maintenance DIFF of the manifest's two probeable states: PREVIOUS
     * (the snapshot the last forget/compaction superseded) vs LIVE, one
@@ -617,11 +612,11 @@ trait DedupMinhash extends DedupExactOps {
     // doubled the batch's tokenize/collapse cost for nothing
     val p = prepareProbe(newDf, textCol, idCol)
     val before = probePrepared(p, idCol, manifestPath, threshold,
-        previous = true, snapshotName = None)
+        graft.ops.Family.Previous)
       .select(col(idCol), col("near_jaccard").as("jaccard_before"),
         col("is_near_dup").as("dup_before"))
     val after = probePrepared(p, idCol, manifestPath, threshold,
-        previous = false, snapshotName = None)
+        graft.ops.Family.Live)
       .select(col(idCol), col("near_jaccard").as("jaccard_after"),
         col("is_near_dup").as("dup_after"))
     // both relations emit one row per newDf document (left-join +
@@ -639,34 +634,13 @@ trait DedupMinhash extends DedupExactOps {
   /** The manifest's lifecycle descriptor: named-snapshot pin, restore,
     * drop, vacuum and health over the (docs, bands) pair. A pin outlives
     * the one-cycle previous window and serves through
-    * [[incrementalNearDupsSnapshot]]; restore is the undo for a
+    * `incrementalNearDups(…, at = Pinned(name))`; restore is the undo for a
     * forget/ingest campaign [[incrementalNearDupsDiff]] flagged as wrong.
     * Meta is frozen at build. Requires versioned components — any
     * maintenance op (compaction, content delete) migrates a fresh
     * manifest. */
   val MinhashManifest: graft.ops.Family =
     graft.ops.Family("minhash_manifest", (_, _) => Seq("docs", "bands"))
-
-  /** [[incrementalNearDups]] probed against a NAMED manifest snapshot —
-    * identical verdict contract over the pinned (docs, bands) pair, any
-    * number of maintenance ops later. Pending tombstones still mask it;
-    * fails loudly on an unknown name. */
-  def incrementalNearDupsSnapshot(newDf: DataFrame, manifestPath: String,
-                                  name: String, textCol: String,
-                                  idCol: String,
-                                  threshold: Double = 0.9): DataFrame =
-    incrementalNearDupsImpl(newDf, manifestPath, textCol, idCol, threshold,
-      previous = false, snapshotName = Some(name))
-
-  private def incrementalNearDupsImpl(newDf: DataFrame, manifestPath: String,
-                                      textCol: String, idCol: String,
-                                      threshold: Double,
-                                      previous: Boolean,
-                                      snapshotName: Option[String] = None)
-      : DataFrame = {
-    val p = prepareProbe(newDf, textCol, idCol)
-    probePrepared(p, idCol, manifestPath, threshold, previous, snapshotName)
-  }
 
   /** The probe batch's (ids, tokenized docs, exact classes, class
     * representatives), built once so the single probes and the DIFF
@@ -691,10 +665,10 @@ trait DedupMinhash extends DedupExactOps {
 
   private def probePrepared(p: PreparedProbe, idCol: String,
                             manifestPath: String,
-                            threshold: Double, previous: Boolean,
-                            snapshotName: Option[String]): DataFrame = {
+                            threshold: Double,
+                            at: graft.ops.Family.At): DataFrame = {
     val verdicts = manifestMatchRows(p.repDocs, manifestPath, threshold,
-        previous = previous, snapshotName = snapshotName)
+        at = at)
       .groupBy("doc_n").agg(max(col("jaccard")).as("near_jaccard"))
     // rep verdicts fan out over exact-class members; docs outside `members`
     // (null text) and unmatched reps flag false with a null jaccard
@@ -725,33 +699,20 @@ trait DedupMinhash extends DedupExactOps {
     *    banding explode and candidate join — `bands`× duplication of one
     *    document's token hashes, the price of keeping every stream-side
     *    step a stateless projection or stream-static equi-join.
+    *
+    * `at` picks the (docs, bands) version ([[graft.ops.Family.read]]).
     */
   private[graft] def manifestMatchRows(probe: DataFrame, manifestPath: String,
                                        threshold: Double,
                                        carryTokens: Boolean = false,
-                                       previous: Boolean = false,
-                                       snapshotName: Option[String] = None)
+                                       at: graft.ops.Family.At =
+                                         graft.ops.Family.Live)
       : DataFrame = {
     val spark = probe.sparkSession
     // tombstones BEFORE the data resolves (the linearizable ordering —
     // see Stage.tombstoneSnapshot)
     val tomb = graft.ops.Stage.pendingTombstones(spark, manifestPath)
-    // named snapshots read their pinned FILE LISTS, not directories —
-    // appends publish into the live version dir (see Stage.snapshot)
-    def data(c: String): DataFrame = snapshotName match {
-      case Some(name) => graft.ops.Stage
-        .readSnapshot(spark, s"$manifestPath/$c", name)
-        .getOrElse(throw new IllegalStateException(
-          s"$manifestPath/$c has no snapshot named '$name' — pin one " +
-            "with Dedup.MinhashManifest.snapshot before probing it"))
-      case None if previous => spark.read.parquet(graft.ops.Stage
-        .resolvePrevious(spark, s"$manifestPath/$c")
-        .getOrElse(throw new IllegalStateException(
-          s"$manifestPath/$c has no previous snapshot to probe — " +
-            "previous-probing needs at least two publishes")))
-      case None => spark.read.parquet(
-        graft.ops.Stage.resolve(spark, s"$manifestPath/$c"))
-    }
+    val data = MinhashManifest.read(spark, manifestPath, at) _
     val manBands = data("bands")
     // banding parameters come from the stamp on the bands rows the probe
     // ACTUALLY READS — never from meta/, whose read could race a rebuild
@@ -1042,7 +1003,7 @@ trait DedupMinhash extends DedupExactOps {
     // the id tie-break rides the struct field's own ordering, so STRING
     // ids work too (negating the id — the old encoding — casts strings
     // to null under ANSI and silently elects no keeper; the same hazard
-    // probeWinnowImpl documents and avoids). NULL scores negate to NULL,
+    // probeWinnowOverlap documents and avoids). NULL scores negate to NULL,
     // and a null struct field sorts SMALLEST under ascending struct
     // comparison — the bare argmin would elect a null-scored document
     // over every real-scored one. Coalescing the negated score to +Inf

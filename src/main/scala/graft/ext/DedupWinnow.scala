@@ -423,7 +423,7 @@ trait DedupWinnow extends DedupSimhash {
   /** The winnow manifest's lifecycle descriptor: named-snapshot pin,
     * restore, drop, vacuum and health over the fps component — the same
     * campaign-grade undo surface as the other index families; pins
-    * serve through [[probeWinnowOverlapSnapshot]]. */
+    * serve through `probeWinnowOverlap(…, at = Pinned(name))`. */
   val WinnowManifest: graft.ops.Family =
     graft.ops.Family("winnow_manifest", (_, _) => Seq("fps"))
 
@@ -444,96 +444,33 @@ trait DedupWinnow extends DedupSimhash {
     * manifest size. No join is hint-forced: AQE broadcasts the batch
     * side when the batch is actually small and shuffles a day-of-crawl
     * batch instead of OOMing it into broadcast memory.
+    *
+    * `at` picks the fps version ([[graft.ops.Family.read]]): live, the
+    * PREVIOUS version the last forget/compaction superseded (the
+    * time-travel validation probe run before trusting it), or a
+    * [[WinnowManifest]] pin's file list — the frozen-corpus read while
+    * the live manifest keeps maintaining.
     */
   def probeWinnowOverlap(batch: DataFrame, path: String,
                          idCol: String = "doc_id",
                          textCol: String = "text", minShared: Int = 2,
-                         maxDf: Int = 20): DataFrame =
-    probeWinnowImpl(batch, path, batch.sparkSession.read.parquet(
-      graft.ops.Stage.resolve(batch.sparkSession, s"$path/fps")),
-      idCol, textCol, minShared, maxDf)
-
-  /** [[probeWinnowOverlap]] against a [[WinnowManifest]] pin —
-    * the frozen-corpus read (validation probes, reproducible reports)
-    * while the live manifest keeps maintaining. */
-  def probeWinnowOverlapSnapshot(batch: DataFrame, path: String,
-                                 name: String, idCol: String = "doc_id",
-                                 textCol: String = "text",
-                                 minShared: Int = 2,
-                                 maxDf: Int = 20): DataFrame =
-    // the pinned FILE LIST, not the version directory: appends publish
-    // into the live version dir, so a directory read of a pin taken on
-    // the live version would absorb every post-pin batch
-    probeWinnowImpl(batch, path,
-      graft.ops.Stage.readSnapshot(batch.sparkSession, s"$path/fps", name)
-        .getOrElse(throw new IllegalStateException(
-          s"$path/fps has no snapshot '$name' to probe")),
-      idCol, textCol, minShared, maxDf)
-
-  /** [[probeWinnowOverlap]] against the PREVIOUS fps snapshot — the
-    * state the last maintenance op superseded, kept for one publish
-    * cycle by the versioned publish ([[graft.ops.Stage.resolvePrevious]];
-    * the minhash family's [[incrementalNearDupsPrevious]] is the same
-    * read) — the time-travel validation probe run before trusting a
-    * forget/compaction. Pending tombstones still mask it. */
-  def probeWinnowOverlapPrevious(batch: DataFrame, path: String,
-                                 idCol: String = "doc_id",
-                                 textCol: String = "text",
-                                 minShared: Int = 2,
-                                 maxDf: Int = 20): DataFrame =
-    probeWinnowImpl(batch, path, batch.sparkSession.read.parquet(
-      graft.ops.Stage.resolvePrevious(batch.sparkSession, s"$path/fps")
-        .getOrElse(throw new IllegalStateException(
-          s"$path/fps has no previous snapshot to probe — time travel " +
-            "needs at least two publishes"))),
-      idCol, textCol, minShared, maxDf)
-
-  /** Maintenance DIFF of the winnow manifest's two serveable states —
-    * PREVIOUS (what the last forget/compaction superseded) vs LIVE —
-    * as one per-probe-document report: both sides' best match and
-    * shared count plus a status — `lost` (overlap verdict vanished:
-    * its evidence was forgotten), `appeared`, `rematched` (a different
-    * corpus doc now wins), `changed` (same match, shared moved),
-    * `held`. The validate-before-trust workflow for a forget batch, as
-    * a first-class operator (the minhash family's
-    * [[incrementalNearDupsDiff]] shape). Cost: two batch-sized probes
-    * plus one batch-row join. */
-  def winnowMaintenanceDiff(batch: DataFrame, path: String,
-                            idCol: String = "doc_id",
-                            textCol: String = "text", minShared: Int = 2,
-                            maxDf: Int = 20): DataFrame = {
-    val prev = probeWinnowOverlapPrevious(batch, path, idCol, textCol,
-      minShared, maxDf)
-      .select(col(idCol), col("best_match").as("prev_match"),
-        col("shared").as("prev_shared"), col("flagged").as("prev_flagged"))
-    val live = probeWinnowOverlap(batch, path, idCol, textCol,
-      minShared, maxDf)
-      .select(col(idCol), col("best_match").as("live_match"),
-        col("shared").as("live_shared"), col("flagged").as("live_flagged"))
-    prev.join(live, Seq(idCol))
-      .select(col(idCol), col("prev_match"), col("prev_shared"),
-        col("live_match"), col("live_shared"),
-        when(col("prev_flagged") && !col("live_flagged"), lit("lost"))
-          .when(!col("prev_flagged") && col("live_flagged"),
-            lit("appeared"))
-          .when(col("prev_flagged") && col("live_flagged") &&
-            !(col("prev_match") <=> col("live_match")), lit("rematched"))
-          .when(col("prev_shared") =!= col("live_shared"), lit("changed"))
-          .otherwise(lit("held")).as("status"))
-  }
-
-  private def probeWinnowImpl(batch: DataFrame, path: String,
-                              fps: DataFrame, idCol: String,
-                              textCol: String, minShared: Int,
-                              maxDf: Int): DataFrame = {
+                         maxDf: Int = 20,
+                         at: graft.ops.Family.At = graft.ops.Family.Live)
+      : DataFrame = {
     require(minShared >= 1, s"minShared >= 1, got $minShared")
     require(maxDf >= 1, s"maxDf >= 1, got $maxDf")
     val spark = batch.sparkSession
+    // tombstones BEFORE the fps resolve (the linearizable ordering — see
+    // Stage.tombstoneSnapshot); pending tombstones mask every version,
+    // pinned and previous reads included (right-to-be-forgotten holds
+    // for validation reads — the family rule)
+    val tomb = graft.ops.Stage.pendingTombstones(spark, path)
+    val fps = WinnowManifest.read(spark, path, at)("fps")
     // (n, w) from the stamp on the fps rows this probe ACTUALLY reads
-    // (fps is already resolved — live, snapshot, or previous), never
-    // from meta/, whose read could race a rebuild that changes the
-    // parameters (silently-empty overlap verdicts). Empty manifest →
-    // meta fallback: any parameters probe zero fingerprints identically.
+    // (at its version), never from meta/, whose read could race a
+    // rebuild that changes the parameters (silently-empty overlap
+    // verdicts). Empty manifest → meta fallback: any parameters probe
+    // zero fingerprints identically.
     val (n, w) = fps.select(col("n"), col("w"))
       .limit(1).collect().headOption
       .map(r => (r.getInt(0), r.getInt(1)))
@@ -548,10 +485,6 @@ trait DedupWinnow extends DedupSimhash {
     val bf = graft.ops.Tables.materialize(
       winnowFingerprints(batch, textCol, idCol, n, w)
         .select(col(idCol).as("bdoc"), col("h")).distinct())
-    // pending tombstones mask every probe path immediately, snapshot
-    // reads included (right-to-be-forgotten holds for validation reads
-    // — the family rule)
-    val tomb = graft.ops.Stage.pendingTombstones(spark, path)
     val mfAll = fps.select(col("doc"), col("h"))
     // No forced broadcast hints anywhere below: the batch-derived
     // relations (bf, cappedHs, bk) are "batch-sized" by contract but a
@@ -600,6 +533,40 @@ trait DedupWinnow extends DedupSimhash {
           expr("coalesce(shared, 0L) * 1000000L div n_fp"))
           .otherwise(lit(0L)).as("containment_ppm"),
         (coalesce(col("shared"), lit(0L)) >= minShared).as("flagged"))
+  }
+
+  /** Maintenance DIFF of the winnow manifest's two serveable states —
+    * PREVIOUS (what the last forget/compaction superseded) vs LIVE —
+    * as one per-probe-document report: both sides' best match and
+    * shared count plus a status — `lost` (overlap verdict vanished:
+    * its evidence was forgotten), `appeared`, `rematched` (a different
+    * corpus doc now wins), `changed` (same match, shared moved),
+    * `held`. The validate-before-trust workflow for a forget batch, as
+    * a first-class operator (the minhash family's
+    * [[incrementalNearDupsDiff]] shape). Cost: two batch-sized probes
+    * plus one batch-row join. */
+  def winnowMaintenanceDiff(batch: DataFrame, path: String,
+                            idCol: String = "doc_id",
+                            textCol: String = "text", minShared: Int = 2,
+                            maxDf: Int = 20): DataFrame = {
+    val prev = probeWinnowOverlap(batch, path, idCol, textCol,
+      minShared, maxDf, graft.ops.Family.Previous)
+      .select(col(idCol), col("best_match").as("prev_match"),
+        col("shared").as("prev_shared"), col("flagged").as("prev_flagged"))
+    val live = probeWinnowOverlap(batch, path, idCol, textCol,
+      minShared, maxDf)
+      .select(col(idCol), col("best_match").as("live_match"),
+        col("shared").as("live_shared"), col("flagged").as("live_flagged"))
+    prev.join(live, Seq(idCol))
+      .select(col(idCol), col("prev_match"), col("prev_shared"),
+        col("live_match"), col("live_shared"),
+        when(col("prev_flagged") && !col("live_flagged"), lit("lost"))
+          .when(!col("prev_flagged") && col("live_flagged"),
+            lit("appeared"))
+          .when(col("prev_flagged") && col("live_flagged") &&
+            !(col("prev_match") <=> col("live_match")), lit("rematched"))
+          .when(col("prev_shared") =!= col("live_shared"), lit("changed"))
+          .otherwise(lit("held")).as("status"))
   }
 
   def winnowNearDupPairs(df: DataFrame, textCol: String, idCol: String,

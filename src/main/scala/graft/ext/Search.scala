@@ -479,56 +479,41 @@ object Search {
     * per-query cost is the query terms' posting lists plus the doc-length
     * relation, never a corpus tokenization. Pending tombstones are
     * excluded from postings, doclens, and the corpus stats.
+    *
+    * `at` picks the (postings, doclens, stats) version
+    * ([[graft.ops.Family.read]]): LIVE; PREVIOUS — the state the last
+    * maintenance op (delete, compaction) superseded, the validation read
+    * served next to the live index before trusting the op (its window is
+    * ONE publish cycle, and the single-writer history moves all
+    * components together); or a PINNED [[TextIndex]] snapshot, any
+    * number of maintenance ops later. PENDING tombstones mask every
+    * version alike — a right-to-be-forgotten request holds for previous
+    * and pinned reads too (only already-FOLDED deletes are visible
+    * again: they are part of the superseded physical state).
     */
   def bm25TopKIndexed(spark: org.apache.spark.sql.SparkSession, path: String,
                       terms: Seq[String], k: Int, idCol: String = "doc_id",
-                      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+                      k1: Double = 1.2, b: Double = 0.75,
+                      at: graft.ops.Family.At = graft.ops.Family.Live)
+      : DataFrame = {
     // tombstones BEFORE the data resolve (the linearizable ordering —
     // see Stage.tombstoneSnapshot)
     val tomb = graft.ops.Stage.pendingTombstones(spark, path)
-    def live(c: String) = graft.ops.Stage.resolve(spark, s"$path/$c")
-    serveBm25(spark, live("postings"), live("doclens"), live("stats"),
-      tomb, terms, k, idCol, k1, b)
-  }
-
-  /** [[bm25TopKIndexed]] from the PREVIOUS index snapshot — the version a
-    * maintenance op (delete, compaction) superseded, which the versioned
-    * publish keeps for one cycle anyway ([[graft.ops.Stage.resolvePrevious]]).
-    * The validation read of the maintenance story: serve the pre-op
-    * snapshot next to the live index and diff before trusting the op —
-    * at zero extra storage, because the grace version already exists for
-    * in-flight readers. Fails loudly when any component lacks a previous
-    * version (plain layout, or only one publish so far), and the window
-    * is ONE publish cycle — the next maintenance op GCs the snapshot.
-    *
-    * PENDING tombstones still apply: a right-to-be-forgotten request
-    * must hold for snapshot reads too, so the anti-join filters the
-    * previous snapshot exactly as it filters the live one (only
-    * already-FOLDED deletes are visible again — they are part of the
-    * superseded physical state this read exists to inspect).
-    */
-  def bm25TopKIndexedPrevious(spark: org.apache.spark.sql.SparkSession,
-                              path: String, terms: Seq[String], k: Int,
-                              idCol: String = "doc_id", k1: Double = 1.2,
-                              b: Double = 0.75): DataFrame = {
-    val tomb = graft.ops.Stage.pendingTombstones(spark, path)
-    def prev(c: String) = graft.ops.Stage
-      .resolvePrevious(spark, s"$path/$c")
-      .getOrElse(throw new IllegalStateException(
-        s"$path/$c has no previous snapshot to serve — previous-serving " +
-          "needs at least two publishes (the single-writer maintenance " +
-          "history moves all components together)"))
-    serveBm25(spark, prev("postings"), prev("doclens"), prev("stats"),
-      tomb, terms, k, idCol, k1, b)
+    val read = TextIndex.read(spark, path, at) _
+    val tf = minusTombstoned(
+      read("postings").where(col("token").isInCollection(terms)), tomb, idCol)
+    val dl = minusTombstoned(read("doclens"), tomb, idCol)
+    scoreBm25(tf, dl, readStats(read("stats"), tomb.map(_ => dl)), terms,
+      k, idCol, k1, b)
   }
 
   /** The text index's lifecycle descriptor: named-snapshot pin,
     * restore, drop, vacuum and health over its LIVE component set
     * ([[textComponents]] — the positional component moves with the
-    * triple). A pin outlives [[bm25TopKIndexedPrevious]]'s
-    * one-publish-cycle window, so an operator can hold the pre-campaign
-    * state across a whole run of deletes and compactions, serve it with
-    * [[bm25TopKIndexedSnapshot]], and restore it when
+    * triple). A pin outlives the one-publish-cycle window of
+    * `bm25TopKIndexed(…, at = Previous)`, so an operator can hold the
+    * pre-campaign state across a whole run of deletes and compactions,
+    * serve it with `at = Pinned(name)`, and restore it when
     * [[bm25MaintenanceDiff]] flags the campaign as wrong. Requires a
     * versioned layout — pin after the first maintenance op (or compact
     * once first). */
@@ -552,131 +537,26 @@ object Search {
   def bm25MaintenanceDiff(spark: org.apache.spark.sql.SparkSession,
                           path: String, terms: Seq[String], k: Int,
                           idCol: String = "doc_id", k1: Double = 1.2,
-                          b: Double = 0.75): DataFrame = {
-    val before = bm25TopKIndexedPrevious(spark, path, terms, k, idCol, k1, b)
-      .select(col(idCol), col("score").as("score_before"),
-        col("rank").as("rank_before"))
-    val after = bm25TopKIndexed(spark, path, terms, k, idCol, k1, b)
-      .select(col(idCol), col("score").as("score_after"),
-        col("rank").as("rank_after"))
-    before.join(after, Seq(idCol), "full_outer")
-      .withColumn("status",
-        when(col("rank_after").isNull, lit("dropped"))
-          .when(col("rank_before").isNull, lit("entered"))
-          .when(col("rank_before") =!= col("rank_after"), lit("moved"))
-          .otherwise(lit("held")))
-      .orderBy(idCol)
-  }
-
-  /** [[bm25TopKIndexed]] served from a NAMED snapshot — identical scoring
-    * over the pinned (postings, doclens, stats) triple, any number of
-    * maintenance ops later. Pending tombstones still apply, as in
-    * previous-serving: a right-to-be-forgotten request holds for
-    * snapshot reads too. Fails loudly on an unknown name.
-    */
-  def bm25TopKIndexedSnapshot(spark: org.apache.spark.sql.SparkSession,
-                              path: String, name: String, terms: Seq[String],
-                              k: Int, idCol: String = "doc_id",
-                              k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val tomb = graft.ops.Stage.pendingTombstones(spark, path)
-    // pinned FILE LISTS, not directories: appends publish into the live
-    // version dir, so a dir read of a pinned live version would absorb
-    // post-pin batches (Stage.snapshot's whole point)
-    def snap(c: String) = graft.ops.Stage
-      .readSnapshot(spark, s"$path/$c", name)
-      .getOrElse(throw new IllegalStateException(
-        s"$path/$c has no snapshot named '$name' — pin one with " +
-          "Search.TextIndex.snapshot before serving it"))
-    serveBm25Frames(snap("postings"), snap("doclens"), snap("stats"),
-      tomb, terms, k, idCol, k1, b)
-  }
-
-  /** The shared indexed-serve body over RESOLVED component directories —
-    * live ([[bm25TopKIndexed]]), previous-snapshot
-    * ([[bm25TopKIndexedPrevious]]), and named-snapshot
-    * ([[bm25TopKIndexedSnapshot]]) serving must score identically, so
-    * they share everything after version resolution.
-    */
-  private def serveBm25(spark: org.apache.spark.sql.SparkSession,
-                        postingsDir: String, doclensDir: String,
-                        statsDir: String, tomb: Option[DataFrame],
-                        terms: Seq[String], k: Int, idCol: String,
-                        k1: Double, b: Double): DataFrame =
-    serveBm25Frames(spark.read.parquet(postingsDir),
-      spark.read.parquet(doclensDir), spark.read.parquet(statsDir),
-      tomb, terms, k, idCol, k1, b)
-
-  /** [[serveBm25]] over already-materialized component relations — the
-    * layer snapshot serving enters at (pinned FILE LISTS, not
-    * directories, carry a snapshot's data — see
-    * [[graft.ops.Stage.snapshot]]). */
-  private def serveBm25Frames(postings: DataFrame, doclens: DataFrame,
-                              statsRows: DataFrame, tomb: Option[DataFrame],
-                              terms: Seq[String], k: Int, idCol: String,
-                              k1: Double, b: Double): DataFrame = {
-    val tf = minusTombstoned(
-      postings.where(col("token").isInCollection(terms)), tomb, idCol)
-    val dl = minusTombstoned(doclens, tomb, idCol)
-    scoreBm25(tf, dl, readStats(statsRows, tomb.map(_ => dl)), terms,
-      k, idCol, k1, b)
-  }
+                          b: Double = 0.75): DataFrame =
+    graft.ops.Family.rankDiff(
+      bm25TopKIndexed(spark, path, terms, k, idCol, k1, b, _),
+      Seq(idCol), "score", "score")
 
   /** Conjunctive (AND-semantics) search from the same index: documents
     * containing EVERY query term, with match statistics. Pure posting-
     * list work — the distinct (token, doc) postings make the term count
-    * a plain row count per document.
+    * a plain row count per document. `at` picks the postings version as
+    * in [[bm25TopKIndexed]] (only postings are read; pending tombstones
+    * mask every version).
     */
   def conjunctiveSearch(spark: org.apache.spark.sql.SparkSession, path: String,
-                        terms: Seq[String], idCol: String = "doc_id"): DataFrame = {
+                        terms: Seq[String], idCol: String = "doc_id",
+                        at: graft.ops.Family.At = graft.ops.Family.Live)
+      : DataFrame = {
     // tombstones BEFORE the data resolve (the linearizable ordering —
     // see Stage.tombstoneSnapshot)
     val tomb = graft.ops.Stage.pendingTombstones(spark, path)
-    serveConjunctive(spark,
-      graft.ops.Stage.resolve(spark, s"$path/postings"), tomb, terms, idCol)
-  }
-
-  /** [[conjunctiveSearch]] from the PREVIOUS index snapshot — the same
-    * validation read as [[bm25TopKIndexedPrevious]], for the index's
-    * other serve path (only postings resolve back; pending tombstones
-    * still mask the snapshot). */
-  def conjunctiveSearchPrevious(spark: org.apache.spark.sql.SparkSession,
-                                path: String, terms: Seq[String],
-                                idCol: String = "doc_id"): DataFrame = {
-    val tomb = graft.ops.Stage.pendingTombstones(spark, path)
-    val postingsDir = graft.ops.Stage
-      .resolvePrevious(spark, s"$path/postings")
-      .getOrElse(throw new IllegalStateException(
-        s"$path/postings has no previous snapshot to serve — " +
-          "previous-serving needs at least two publishes"))
-    serveConjunctive(spark, postingsDir, tomb, terms, idCol)
-  }
-
-  /** [[conjunctiveSearch]] from a NAMED snapshot — the same pinned-file
-    * read as [[bm25TopKIndexedSnapshot]], for the index's other serve
-    * path (only postings pin back; pending tombstones still mask). */
-  def conjunctiveSearchSnapshot(spark: org.apache.spark.sql.SparkSession,
-                                path: String, name: String,
-                                terms: Seq[String],
-                                idCol: String = "doc_id"): DataFrame = {
-    val tomb = graft.ops.Stage.pendingTombstones(spark, path)
-    val postings = graft.ops.Stage
-      .readSnapshot(spark, s"$path/postings", name)
-      .getOrElse(throw new IllegalStateException(
-        s"$path/postings has no snapshot named '$name' — pin one with " +
-          "Search.TextIndex.snapshot before serving it"))
-    serveConjunctiveFrames(postings, tomb, terms, idCol)
-  }
-
-  private def serveConjunctive(spark: org.apache.spark.sql.SparkSession,
-                               postingsDir: String, tomb: Option[DataFrame],
-                               terms: Seq[String], idCol: String): DataFrame =
-    serveConjunctiveFrames(spark.read.parquet(postingsDir), tomb, terms,
-      idCol)
-
-  private def serveConjunctiveFrames(postings: DataFrame,
-                                     tomb: Option[DataFrame],
-                                     terms: Seq[String],
-                                     idCol: String): DataFrame = {
+    val postings = TextIndex.read(spark, path, at)("postings")
     require(terms.nonEmpty && terms.size == terms.distinct.size,
       "conjunctiveSearch needs a non-empty, duplicate-free term set")
     minusTombstoned(

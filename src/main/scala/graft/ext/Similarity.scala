@@ -165,8 +165,8 @@ object Similarity {
       queries, corpus, k, overfetch, dim, idCol, vecCol)
 
   /** The ONE binary serve tail shared by the inline [[binaryTopK]] and
-    * every persisted-index serve ([[binaryTopKIndexed]] live / snapshot
-    * / previous), so they answer bit-identically over the same
+    * every persisted-index serve ([[binaryTopKIndexed]] at any
+    * version), so they answer bit-identically over the same
     * effective signature relation. `sigs` is (neighbor_id, words);
     * reranking reads raw vectors from `corpus` — the index never
     * duplicates them (the pqTopKRerankIndexed convention). */
@@ -289,8 +289,8 @@ object Similarity {
     val tomb = graft.ops.Stage.pendingTombstones(spark, path)
     val listsDir = graft.ops.Stage.resolve(spark, s"$path/lists")
     val (scale, _) = loadIvfMeta(spark, path)
-    val served = serveIvf(spark, queries, path, listsDir, tomb, fetch,
-      nProbe, idCol, vecCol)
+    val served = serveIvfLists(spark, queries, path,
+      spark.read.parquet(listsDir), tomb, fetch, nProbe, idCol, vecCol)
       .select(col("query_id"), col("neighbor_id"), col("cos_sim"))
     val cvec = if (scale > 0) dequantize(col("code"), scale)
       else col("code")
@@ -327,8 +327,8 @@ object Similarity {
     val tomb = graft.ops.Stage.pendingTombstones(spark, path)
     val listsDir = graft.ops.Stage.resolve(spark, s"$path/lists")
     val (scale, _) = loadIvfMeta(spark, path)
-    val served = serveIvf(spark, queries, path, listsDir, tomb, fetch,
-      nProbe, idCol, vecCol)
+    val served = serveIvfLists(spark, queries, path,
+      spark.read.parquet(listsDir), tomb, fetch, nProbe, idCol, vecCol)
     val qL = queries.select(col(idCol).as("query_id"),
       col(labelCol).as("query_label"))
     val nL = labels.select(col(idCol).as("neighbor_id"),
@@ -923,32 +923,20 @@ object Similarity {
   /** ADC top-k served from a persisted [[savePqIndex]] index: the scan
     * is the 8-byte-code relation, the query side stays exact —
     * bit-identical to [[pqTopK]] over the same effective corpus (shared
-    * serve tail). */
+    * serve tail). `at` picks the codes version
+    * ([[graft.ops.Family.read]]): live, the PREVIOUS version the last
+    * maintenance op superseded (fails loudly after a fresh build — a
+    * rebuild severs the grace), or a [[PqIndex]] pin's file list. */
   def pqTopKIndexed(spark: org.apache.spark.sql.SparkSession,
                     queries: DataFrame, path: String, k: Int,
                     idCol: String = "vec_id",
-                    vecCol: String = "embedding"): DataFrame = {
+                    vecCol: String = "embedding",
+                    at: graft.ops.Family.At = graft.ops.Family.Live)
+      : DataFrame = {
     val (dim, cb) = loadPqMeta(spark, path)
     pqServeCodes(
-      spark.read.parquet(graft.ops.Stage.resolve(spark, s"$path/codes"))
+      PqIndex.read(spark, path, at)("codes")
         .withColumnRenamed("vec_id", "neighbor_id"),
-      queries, k, dim, cb, idCol, vecCol)
-  }
-
-  /** [[pqTopKIndexed]] from a NAMED snapshot's pinned file list — the
-    * retention serve ([[graft.ops.Stage.snapshot]] semantics; appends
-    * land new files beside pinned ones, so the pin records files, not
-    * the directory). */
-  def pqTopKIndexedSnapshot(spark: org.apache.spark.sql.SparkSession,
-                            queries: DataFrame, path: String, name: String,
-                            k: Int, idCol: String = "vec_id",
-                            vecCol: String = "embedding"): DataFrame = {
-    val (dim, cb) = loadPqMeta(spark, path)
-    val codes = graft.ops.Stage.readSnapshot(spark, s"$path/codes", name)
-      .getOrElse(throw new IllegalStateException(
-        s"$path/codes has no snapshot named '$name' — pin one with " +
-          "Similarity.PqIndex.snapshot before serving it"))
-    pqServeCodes(codes.withColumnRenamed("vec_id", "neighbor_id"),
       queries, k, dim, cb, idCol, vecCol)
   }
 
@@ -1014,25 +1002,6 @@ object Similarity {
     go
   }
 
-  /** [[pqTopKIndexed]] from the PREVIOUS codes snapshot — the version
-    * the last maintenance op superseded, kept for one publish cycle
-    * ([[graft.ops.Stage.resolvePrevious]]). Fails loudly when no
-    * previous version exists (fresh build, or a rebuild severed the
-    * grace). */
-  def pqTopKIndexedPrevious(spark: org.apache.spark.sql.SparkSession,
-                            queries: DataFrame, path: String, k: Int,
-                            idCol: String = "vec_id",
-                            vecCol: String = "embedding"): DataFrame = {
-    val (dim, cb) = loadPqMeta(spark, path)
-    val prev = graft.ops.Stage.resolvePrevious(spark, s"$path/codes")
-      .getOrElse(throw new IllegalStateException(
-        s"$path/codes has no previous snapshot to serve — previous-" +
-          "serving needs at least two publishes"))
-    pqServeCodes(
-      spark.read.parquet(prev).withColumnRenamed("vec_id", "neighbor_id"),
-      queries, k, dim, cb, idCol, vecCol)
-  }
-
   /** Maintenance DIFF of the PQ index's two serveable states — PREVIOUS
     * vs LIVE top-k per query with both ranks and a status, the same
     * validation read as [[ivfMaintenanceDiff]]. Codebooks are frozen,
@@ -1041,25 +1010,14 @@ object Similarity {
   def pqMaintenanceDiff(spark: org.apache.spark.sql.SparkSession,
                         queries: DataFrame, path: String, k: Int,
                         idCol: String = "vec_id",
-                        vecCol: String = "embedding"): DataFrame = {
-    val before = pqTopKIndexedPrevious(spark, queries, path, k, idCol, vecCol)
-      .select(col("query_id"), col("neighbor_id"),
-        col("approx_sim").as("sim_before"), col("rank").as("rank_before"))
-    val after = pqTopKIndexed(spark, queries, path, k, idCol, vecCol)
-      .select(col("query_id"), col("neighbor_id"),
-        col("approx_sim").as("sim_after"), col("rank").as("rank_after"))
-    before.join(after, Seq("query_id", "neighbor_id"), "full_outer")
-      .withColumn("status",
-        when(col("rank_after").isNull, lit("dropped"))
-          .when(col("rank_before").isNull, lit("entered"))
-          .when(col("rank_before") =!= col("rank_after"), lit("moved"))
-          .otherwise(lit("held")))
-      .orderBy("query_id", "neighbor_id")
-  }
+                        vecCol: String = "embedding"): DataFrame =
+    graft.ops.Family.rankDiff(
+      pqTopKIndexed(spark, queries, path, k, idCol, vecCol, _),
+      Seq("query_id", "neighbor_id"), "approx_sim", "sim")
 
   /** The PQ index's lifecycle descriptor: named-snapshot pin, restore,
     * drop, vacuum and health over the codes component (codebooks are
-    * frozen at build); pins serve through [[pqTopKIndexedSnapshot]]. */
+    * frozen at build); pins serve through `pqTopKIndexed(…, at)`. */
   val PqIndex: graft.ops.Family =
     graft.ops.Family("pq_index", (_, _) => Seq("codes"))
 
@@ -1188,48 +1146,18 @@ object Similarity {
     * words, the rerank reads raw vectors from `corpus` (the raw-vector
     * side stays wherever the vectors live — the index never duplicates
     * them). Bit-identical to [[binaryTopK]] over the same effective
-    * corpus (shared serve tail). */
+    * corpus (shared serve tail). `at` picks the sig version as in
+    * [[pqTopKIndexed]]; the dim comes from the stamp on the rows it
+    * reads, so a pinned or previous serve packs its queries against its
+    * own generation. */
   def binaryTopKIndexed(spark: org.apache.spark.sql.SparkSession,
                         queries: DataFrame, corpus: DataFrame,
                         path: String, k: Int, overfetch: Int = 16,
                         idCol: String = "vec_id",
-                        vecCol: String = "embedding"): DataFrame = {
-    val sigs = spark.read.parquet(
-        graft.ops.Stage.resolve(spark, s"$path/sig"))
-      .withColumnRenamed("vec_id", "neighbor_id")
-    binaryServeSigs(sigs, queries, corpus, k, overfetch,
-      binaryIndexDim(spark, path, sigs), idCol, vecCol)
-  }
-
-  /** [[binaryTopKIndexed]] from a NAMED snapshot's pinned file list. */
-  def binaryTopKIndexedSnapshot(spark: org.apache.spark.sql.SparkSession,
-                                queries: DataFrame, corpus: DataFrame,
-                                path: String, name: String, k: Int,
-                                overfetch: Int = 16,
-                                idCol: String = "vec_id",
-                                vecCol: String = "embedding"): DataFrame = {
-    val sigs = graft.ops.Stage.readSnapshot(spark, s"$path/sig", name)
-      .getOrElse(throw new IllegalStateException(
-        s"$path/sig has no snapshot named '$name' — pin one with " +
-          "Similarity.BinaryIndex.snapshot before serving it"))
-      .withColumnRenamed("vec_id", "neighbor_id")
-    binaryServeSigs(sigs, queries, corpus, k, overfetch,
-      binaryIndexDim(spark, path, sigs), idCol, vecCol)
-  }
-
-  /** [[binaryTopKIndexed]] from the PREVIOUS sig snapshot — the state
-    * the last maintenance op superseded, kept for one publish cycle
-    * ([[graft.ops.Stage.resolvePrevious]]). */
-  def binaryTopKIndexedPrevious(spark: org.apache.spark.sql.SparkSession,
-                                queries: DataFrame, corpus: DataFrame,
-                                path: String, k: Int, overfetch: Int = 16,
-                                idCol: String = "vec_id",
-                                vecCol: String = "embedding"): DataFrame = {
-    val prev = graft.ops.Stage.resolvePrevious(spark, s"$path/sig")
-      .getOrElse(throw new IllegalStateException(
-        s"$path/sig has no previous snapshot to serve — previous-" +
-          "serving needs at least two publishes"))
-    val sigs = spark.read.parquet(prev)
+                        vecCol: String = "embedding",
+                        at: graft.ops.Family.At = graft.ops.Family.Live)
+      : DataFrame = {
+    val sigs = BinaryIndex.read(spark, path, at)("sig")
       .withColumnRenamed("vec_id", "neighbor_id")
     binaryServeSigs(sigs, queries, corpus, k, overfetch,
       binaryIndexDim(spark, path, sigs), idCol, vecCol)
@@ -1244,23 +1172,11 @@ object Similarity {
                             queries: DataFrame, corpus: DataFrame,
                             path: String, k: Int, overfetch: Int = 16,
                             idCol: String = "vec_id",
-                            vecCol: String = "embedding"): DataFrame = {
-    val before = binaryTopKIndexedPrevious(spark, queries, corpus, path,
-        k, overfetch, idCol, vecCol)
-      .select(col("query_id"), col("neighbor_id"),
-        col("cos_sim").as("sim_before"), col("rank").as("rank_before"))
-    val after = binaryTopKIndexed(spark, queries, corpus, path, k,
-        overfetch, idCol, vecCol)
-      .select(col("query_id"), col("neighbor_id"),
-        col("cos_sim").as("sim_after"), col("rank").as("rank_after"))
-    before.join(after, Seq("query_id", "neighbor_id"), "full_outer")
-      .withColumn("status",
-        when(col("rank_after").isNull, lit("dropped"))
-          .when(col("rank_before").isNull, lit("entered"))
-          .when(col("rank_before") =!= col("rank_after"), lit("moved"))
-          .otherwise(lit("held")))
-      .orderBy("query_id", "neighbor_id")
-  }
+                            vecCol: String = "embedding"): DataFrame =
+    graft.ops.Family.rankDiff(
+      binaryTopKIndexed(spark, queries, corpus, path, k, overfetch, idCol,
+        vecCol, _),
+      Seq("query_id", "neighbor_id"), "cos_sim", "sim")
 
   /** Compact a [[saveBinaryIndex]] index after a run of per-batch
     * appends; serving before and after is identical (the sig multiset
@@ -1290,7 +1206,7 @@ object Similarity {
 
   /** The binary index's lifecycle descriptor: named-snapshot pin,
     * restore, drop, vacuum and health over the sig component; pins
-    * serve through [[binaryTopKIndexedSnapshot]]. */
+    * serve through `binaryTopKIndexed(…, at)`. */
   val BinaryIndex: graft.ops.Family =
     graft.ops.Family("binary_index", (_, _) => Seq("sig"))
 
@@ -1985,7 +1901,7 @@ object Similarity {
     // `centroid=N/` and version directories — unreadable as a fresh scan
     // (see Stage.resolvePrevious). publishREBUILD, not publishRewrite:
     // on a rebuild over an existing index the old corpus's version must
-    // get NO previous-serving grace — topKIvfIndexedPrevious right after
+    // get NO previous-serving grace — a Previous serve right after
     // a rebuild would otherwise silently dequantize OLD-corpus lists
     // with the NEW meta's quantScale/centroids. The rebuild boundary
     // resets the whole history (ledger/tombstones/snapshots above, and
@@ -2197,17 +2113,27 @@ object Similarity {
     * the corpus side is the prebuilt inverted lists — no training, no
     * assignment, and only the probed `nProbe`/k fraction of index
     * partitions read.
+    *
+    * `at` picks the lists version ([[graft.ops.Family.read]]): live, the
+    * PREVIOUS version a delete or compaction superseded (kept one publish
+    * cycle), or an [[IvfIndex]] pin's file list (`basePath` keeps the
+    * centroid partition column inferable from the pinned paths).
+    * Centroids and meta are FROZEN after the build — every maintenance op
+    * rewrites only `lists/` — so every version ranks against the same
+    * geometry. Pending tombstones mask every version alike
+    * (right-to-be-forgotten holds for validation reads).
     */
   def topKIvfIndexed(spark: org.apache.spark.sql.SparkSession,
                      queries: DataFrame, path: String, k: Int, nProbe: Int = 4,
                      idCol: String = "vec_id",
-                     vecCol: String = "embedding"): DataFrame = {
+                     vecCol: String = "embedding",
+                     at: graft.ops.Family.At = graft.ops.Family.Live)
+      : DataFrame = {
     // tombstones BEFORE the lists resolve (the linearizable ordering —
     // see Stage.tombstoneSnapshot)
     val tomb = graft.ops.Stage.pendingTombstones(spark, path)
-    serveIvf(spark, queries, path,
-      graft.ops.Stage.resolve(spark, s"$path/lists"), tomb, k, nProbe,
-      idCol, vecCol)
+    val lists = IvfIndex.read(spark, path, at)("lists")
+    serveIvfLists(spark, queries, path, lists, tomb, k, nProbe, idCol, vecCol)
   }
 
   /** [[hardNegatives]]' SCALE PATH, made concrete: mine cross-label hard
@@ -2251,62 +2177,20 @@ object Similarity {
       .withColumn("rank", row_number().over(w)).where(col("rank") <= k)
   }
 
-  /** [[topKIvfIndexed]] from the PREVIOUS lists snapshot — the version a
-    * delete or compaction superseded, kept for one publish cycle by the
-    * versioned publish ([[graft.ops.Stage.resolvePrevious]]; the text
-    * index's [[graft.ext.Search.bm25TopKIndexedPrevious]] is the same
-    * read applied there). Centroids and meta are FROZEN after the build
-    * (every maintenance op rewrites only `lists/`), so the previous
-    * snapshot needs only the lists' prior version. Pending tombstones
-    * still mask it — right-to-be-forgotten holds for validation reads.
-    */
-  def topKIvfIndexedPrevious(spark: org.apache.spark.sql.SparkSession,
-                             queries: DataFrame, path: String, k: Int,
-                             nProbe: Int = 4, idCol: String = "vec_id",
-                             vecCol: String = "embedding"): DataFrame = {
-    val tomb = graft.ops.Stage.pendingTombstones(spark, path)
-    val listsDir = graft.ops.Stage.resolvePrevious(spark, s"$path/lists")
-      .getOrElse(throw new IllegalStateException(
-        s"$path/lists has no previous snapshot to serve — previous-serving " +
-          "needs at least two publishes"))
-    serveIvf(spark, queries, path, listsDir, tomb, k, nProbe, idCol, vecCol)
-  }
-
   /** The IVF index's lifecycle descriptor: named-snapshot pin, restore,
     * drop, vacuum and health over the lists component. Centroids and
     * meta are frozen after the build, so `lists/` is the only component
     * with versions to pin, and restoring it restores the whole
     * serveable state: the restored partition directories byte-match the
     * pin, so dynamic partition pruning and the dequantization parameters
-    * serve exactly as at pin time. A pin outlives
-    * [[topKIvfIndexedPrevious]]'s one-cycle validation window and
-    * serves through [[topKIvfIndexedSnapshot]]; restore is the undo for
+    * serve exactly as at pin time. A pin outlives the one-cycle
+    * validation window of `topKIvfIndexed(…, at = Previous)` and serves
+    * through `at = Pinned(name)`; restore is the undo for
     * an append/forget campaign [[ivfMaintenanceDiff]] flagged as wrong.
     * [[saveIvfIndex]] writes the lists born-versioned, so any saved
     * index is pinnable immediately. */
   val IvfIndex: graft.ops.Family =
     graft.ops.Family("ivf_index", (_, _) => Seq("lists"))
-
-  /** [[topKIvfIndexed]] served from a NAMED snapshot — identical ranking
-    * over the pinned lists, any number of maintenance ops later. Pending
-    * tombstones still mask it; fails loudly on an unknown name. */
-  def topKIvfIndexedSnapshot(spark: org.apache.spark.sql.SparkSession,
-                             queries: DataFrame, path: String, name: String,
-                             k: Int, nProbe: Int = 4,
-                             idCol: String = "vec_id",
-                             vecCol: String = "embedding"): DataFrame = {
-    val tomb = graft.ops.Stage.pendingTombstones(spark, path)
-    // pinned FILE LIST, not the directory: appends publish into the
-    // live version dir (see Stage.snapshot); basePath keeps the
-    // centroid partition column inferable from the pinned paths
-    val lists = graft.ops.Stage
-      .readSnapshot(spark, s"$path/lists", name)
-      .getOrElse(throw new IllegalStateException(
-        s"$path/lists has no snapshot named '$name' — pin one with " +
-          "Similarity.IvfIndex.snapshot before serving it"))
-    serveIvfFrames(spark, queries, path, lists, tomb, k, nProbe, idCol,
-      vecCol)
-  }
 
   /** Maintenance DIFF of the index's two serveable states: PREVIOUS
     * (the lists snapshot the last maintenance op superseded) vs LIVE,
@@ -2315,48 +2199,27 @@ object Similarity {
     * candidate-set change), `entered`, `moved`, `held`. Centroids and
     * codes are frozen, so a pair present on both sides keeps its exact
     * cos_sim — only membership and rank can move. The first-class form
-    * of the validation read ([[topKIvfIndexedPrevious]]'s purpose);
+    * of the validation read (the purpose of `topKIvfIndexed(…, at =
+    * Previous)`);
     * cost is two probes plus a full outer join of two k-per-query
     * relations. q129 pins it against a DuckDB replay of both rankings.
     */
   def ivfMaintenanceDiff(spark: org.apache.spark.sql.SparkSession,
                          queries: DataFrame, path: String, k: Int,
                          nProbe: Int = 4, idCol: String = "vec_id",
-                         vecCol: String = "embedding"): DataFrame = {
-    val before = topKIvfIndexedPrevious(spark, queries, path, k, nProbe,
-        idCol, vecCol)
-      .select(col("query_id"), col("neighbor_id"),
-        col("cos_sim").as("cos_before"), col("rank").as("rank_before"))
-    val after = topKIvfIndexed(spark, queries, path, k, nProbe, idCol, vecCol)
-      .select(col("query_id"), col("neighbor_id"),
-        col("cos_sim").as("cos_after"), col("rank").as("rank_after"))
-    before.join(after, Seq("query_id", "neighbor_id"), "full_outer")
-      .withColumn("status",
-        when(col("rank_after").isNull, lit("dropped"))
-          .when(col("rank_before").isNull, lit("entered"))
-          .when(col("rank_before") =!= col("rank_after"), lit("moved"))
-          .otherwise(lit("held")))
-      .orderBy("query_id", "neighbor_id")
-  }
+                         vecCol: String = "embedding"): DataFrame =
+    graft.ops.Family.rankDiff(
+      topKIvfIndexed(spark, queries, path, k, nProbe, idCol, vecCol, _),
+      Seq("query_id", "neighbor_id"), "cos_sim", "cos")
 
-  /** The shared IVF serve body over a RESOLVED lists directory — live,
-    * previous-snapshot, and named-snapshot serving must rank
-    * identically. */
-  private def serveIvf(spark: org.apache.spark.sql.SparkSession,
-                       queries: DataFrame, path: String, listsDir: String,
-                       tomb: Option[DataFrame], k: Int, nProbe: Int,
-                       idCol: String, vecCol: String): DataFrame =
-    serveIvfFrames(spark, queries, path, spark.read.parquet(listsDir),
-      tomb, k, nProbe, idCol, vecCol)
-
-  /** [[serveIvf]] over an already-materialized lists relation — the
-    * layer snapshot serving enters at (pinned FILE LISTS, not
-    * directories — see [[graft.ops.Stage.snapshot]]). */
-  private def serveIvfFrames(spark: org.apache.spark.sql.SparkSession,
-                             queries: DataFrame, path: String,
-                             lists: DataFrame, tomb: Option[DataFrame],
-                             k: Int, nProbe: Int, idCol: String,
-                             vecCol: String): DataFrame = {
+  /** The shared IVF serve body over a lists relation already read at
+    * one version — [[topKIvfIndexed]] at any `at`, and the MMR serves
+    * that share one lists resolve with their redundancy-vector read. */
+  private def serveIvfLists(spark: org.apache.spark.sql.SparkSession,
+                            queries: DataFrame, path: String,
+                            lists: DataFrame, tomb: Option[DataFrame],
+                            k: Int, nProbe: Int, idCol: String,
+                            vecCol: String): DataFrame = {
     val (scale, cents) = loadIvfMeta(spark, path)
     val cvec = if (scale > 0) dequantize(col("code"), scale)
       else col("code")

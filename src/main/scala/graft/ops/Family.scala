@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, lit, when}
 
 /** One persisted-index FAMILY: a name and the versioned components that
   * live under each of its roots. The named-snapshot lifecycle is the
@@ -36,6 +37,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - [[dropSnapshot]] releases the pin: the pinned versions become
   *    ordinary GC candidates at the next publish — or now, via
   *    [[vacuum]], the storage release that does not wait for a publish.
+  *
+  * The read side is shared too: every indexed serve takes a trailing
+  * `at: Family.At` (default [[Family.Live]]) and reads its components
+  * through [[read]], so the live, previous and pinned serves of a family
+  * are one code path that differs only in which version it reads.
   */
 final case class Family(name: String,
                         components: (SparkSession, String) => Seq[String]) {
@@ -85,4 +91,73 @@ final case class Family(name: String,
   /** [[Stage.healthReport]] over the family's components at `path`. */
   def health(spark: SparkSession, path: String): DataFrame =
     Stage.healthReport(spark, path, components(spark, path))
+
+  /** Component `component` of the family at `path`, read at version `at`:
+    *  - [[Family.Live]]: the `_current` version ([[Stage.resolve]]) — no
+    *    snapshot or previous-pointer probe;
+    *  - [[Family.Previous]]: the version the last publish superseded
+    *    ([[Stage.resolvePrevious]]), kept for ONE publish cycle;
+    *  - [[Family.Pinned]]: the snapshot's pinned FILE LIST
+    *    ([[Stage.readSnapshot]]) — not the version directory, which
+    *    absorbs every append published after the pin.
+    * Throws IllegalStateException naming the component path and the
+    * family when the requested version does not exist. Serves read
+    * [[Stage.pendingTombstones]] BEFORE calling this (the linearizable
+    * order), and the tombstones mask every version alike: a forget
+    * issued after a pin still holds for the pinned read. */
+  def read(spark: SparkSession, path: String, at: Family.At)(
+      component: String): DataFrame = {
+    val dir = s"$path/$component"
+    at match {
+      case Family.Live => spark.read.parquet(Stage.resolve(spark, dir))
+      case Family.Previous => spark.read.parquet(
+        Stage.resolvePrevious(spark, dir).getOrElse(
+          throw new IllegalStateException(s"$dir has no previous version " +
+            s"to serve — $name previous-serving needs at least two " +
+            "publishes since the last rebuild")))
+      case Family.Pinned(pin) => Stage.readSnapshot(spark, dir, pin)
+        .getOrElse(throw new IllegalStateException(s"$dir has no " +
+          s"snapshot named '$pin' — pin the $name family with its " +
+          "snapshot before serving it"))
+    }
+  }
+}
+
+object Family {
+
+  /** Which version of a family's state a serve reads ([[Family.read]]). */
+  sealed trait At
+
+  /** The live state: the default of every serve. */
+  case object Live extends At
+
+  /** The state the last maintenance publish (delete, compaction)
+    * superseded — the validate-before-trust read, at zero extra storage
+    * because the versioned publish keeps it one cycle for in-flight
+    * readers. */
+  case object Previous extends At
+
+  /** The state pinned under snapshot `name` ([[Family.snapshot]]), any
+    * number of maintenance ops later. */
+  final case class Pinned(name: String) extends At
+
+  /** Maintenance DIFF of a ranked serve's two states: `serve(Previous)`
+    * vs `serve(Live)` full-outer-joined on `keys`, each side's `score`
+    * column renamed `<as>_before`/`<as>_after` beside its
+    * `rank_before`/`rank_after`, plus a status — `dropped` (left the
+    * top-k: deleted, or displaced), `entered`, `moved`, `held` —
+    * ordered by `keys`. */
+  private[graft] def rankDiff(serve: At => DataFrame, keys: Seq[String],
+                              score: String, as: String): DataFrame = {
+    def side(at: At, tag: String) = serve(at).select(
+      keys.map(col) :+ col(score).as(s"${as}_$tag") :+
+        col("rank").as(s"rank_$tag"): _*)
+    side(Previous, "before").join(side(Live, "after"), keys, "full_outer")
+      .withColumn("status",
+        when(col("rank_after").isNull, lit("dropped"))
+          .when(col("rank_before").isNull, lit("entered"))
+          .when(col("rank_before") =!= col("rank_after"), lit("moved"))
+          .otherwise(lit("held")))
+      .orderBy(keys.map(col): _*)
+  }
 }

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.ext.{Campaign, Corpus, Dedup, Search}
+import graft.ops.Family
 import graft.ops.Tables.{sfTag, t}
 import org.apache.spark.sql.functions._
 
@@ -90,22 +91,23 @@ object CampaignQueries {
       // metrics (bm25: score/rank/dl; neardup: jaccard/verdict/—;
       // lm: bits_x100/n_bigrams/total_bits), each replayed exactly by
       // the UNION oracle below
-      val bm = Search.bm25TopKIndexedSnapshot(s, text, "release_pin",
-          SearchQueries.bmTerms, k = 20,
-          k1 = SearchQueries.k1, b = SearchQueries.b)
+      val bm = Search.bm25TopKIndexed(s, text, SearchQueries.bmTerms,
+          k = 20, k1 = SearchQueries.k1, b = SearchQueries.b,
+          at = Family.Pinned("release_pin"))
         .select(lit("bm25").as("family"), col("doc_id"),
           col("score").as("v1"), col("rank").cast("double").as("v2"),
           col("dl").cast("double").as("v3"))
-      val nd = Dedup.incrementalNearDupsSnapshot(
+      val nd = Dedup.incrementalNearDups(
           docs.where(pmod(col("doc_id"), lit(10)) >= 5), mani,
-          "release_pin", "text", "doc_id", threshold = 0.9)
+          "text", "doc_id", threshold = 0.9,
+          at = Family.Pinned("release_pin"))
         .select(lit("neardup").as("family"), col("doc_id"),
           col("near_jaccard").as("v1"),
           col("is_near_dup").cast("double").as("v2"),
           lit(null).cast("double").as("v3"))
-      val lmScores = Corpus.lmPerplexityIndexedSnapshot(
+      val lmScores = Corpus.lmPerplexityIndexed(
           split.where(col("split") === "test" && col("text").isNotNull),
-          lm, "release_pin", "text", "doc_id")
+          lm, "text", "doc_id", at = Family.Pinned("release_pin"))
         .select(lit("lm").as("family"), col("doc_id"),
           col("bits_x100").cast("double").as("v1"),
           col("n_bigrams").cast("double").as("v2"),
@@ -134,23 +136,24 @@ object CampaignQueries {
         Campaign.Member(Corpus.Lm, lm))
       Campaign.snapshot(s, "release_pin", members)
       maintainFamilies(s, docs, split, text, mani, lm)
-      val bm = Search.bm25TopKIndexedSnapshot(s, text, "release_pin",
-          SearchQueries.bmTerms, k = 20,
-          k1 = SearchQueries.k1, b = SearchQueries.b)
+      val bm = Search.bm25TopKIndexed(s, text, SearchQueries.bmTerms,
+          k = 20, k1 = SearchQueries.k1, b = SearchQueries.b,
+          at = Family.Pinned("release_pin"))
         .select(lit("bm25").as("family"), col("doc_id"),
           col("score").as("v1"), col("rank").cast("double").as("v2"),
           col("dl").cast("double").as("v3"))
-      val nd = Dedup.incrementalNearDupsSnapshot(
+      val nd = Dedup.incrementalNearDups(
           docs.where(pmod(col("doc_id"), lit(10)) >= 5 &&
             col("doc_id") < 400), mani,
-          "release_pin", "text", "doc_id", threshold = 0.9)
+          "text", "doc_id", threshold = 0.9,
+          at = Family.Pinned("release_pin"))
         .select(lit("neardup").as("family"), col("doc_id"),
           col("near_jaccard").as("v1"),
           col("is_near_dup").cast("double").as("v2"),
           lit(null).cast("double").as("v3"))
-      val lmScores = Corpus.lmPerplexityIndexedSnapshot(
+      val lmScores = Corpus.lmPerplexityIndexed(
           split.where(col("split") === "test" && col("text").isNotNull),
-          lm, "release_pin", "text", "doc_id")
+          lm, "text", "doc_id", at = Family.Pinned("release_pin"))
         .select(lit("lm").as("family"), col("doc_id"),
           col("bits_x100").cast("double").as("v1"),
           col("n_bigrams").cast("double").as("v2"),

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.ext.Corpus
+import graft.ops.Family
 import graft.ops.Tables.{sfTag, t}
 import org.apache.spark.sql.functions._
 
@@ -604,9 +605,9 @@ object CorpusQueries {
       Corpus.Lm.snapshot(s, path, "eval_pin")
       Corpus.appendToLm(docs.where(col("split") === "val"), path,
         "text", "doc_id", opId = "grow_val")
-      Corpus.lmPerplexityIndexedSnapshot(
+      Corpus.lmPerplexityIndexed(
         docs.where(col("split") === "test" && col("text").isNotNull),
-        path, "eval_pin", "text", "doc_id")
+        path, "text", "doc_id", at = Family.Pinned("eval_pin"))
         .orderBy("doc_id")
     }),
 

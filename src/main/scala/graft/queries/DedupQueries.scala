@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.ext.Dedup
+import graft.ops.Family
 import graft.ops.Tables.{sfTag, t}
 import org.apache.spark.sql.functions._
 
@@ -76,9 +77,9 @@ object DedupQueries {
       Dedup.compactMinhashManifest(s, path)
       Dedup.deleteContentFromMinhashManifest(
         manifest.where(pmod(col("doc_id"), lit(7)) === 2), "text", path)
-      Dedup.incrementalNearDupsPrevious(
+      Dedup.incrementalNearDups(
         docs.where(pmod(col("doc_id"), lit(10)) >= 5), path,
-        "text", "doc_id", threshold = 0.9)
+        "text", "doc_id", threshold = 0.9, at = Family.Previous)
         .orderBy("doc_id")
     }),
 
@@ -534,8 +535,9 @@ object DedupQueries {
         docs.where(pmod(col("doc_id"), lit(2)) === 0), "text", "doc_id", path)
       Dedup.deleteFromWinnowManifest(s, path,
         docs.where(pmod(col("doc_id"), lit(8)) === 0).select("doc_id"))
-      Dedup.probeWinnowOverlapPrevious(
-        docs.where(pmod(col("doc_id"), lit(2)) === 1), path)
+      Dedup.probeWinnowOverlap(
+        docs.where(pmod(col("doc_id"), lit(2)) === 1), path,
+        at = Family.Previous)
         .orderBy("doc_id")
     }),
 

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.ext.Search
-import graft.ops.Num
+import graft.ops.{Family, Num}
 import graft.ops.Tables.{sfTag, t}
 import org.apache.spark.sql.functions._
 
@@ -161,7 +161,7 @@ object SearchQueries {
     "q132_conjunctive_snapshot" -> ((s, d) => {
       // the index's OTHER serve path from a named pin: q127's fixture
       // shape (compact → pin → delete + compact), served through
-      // conjunctiveSearchSnapshot — must equal fresh AND-search over the
+      // conjunctiveSearch at the pin — must equal fresh AND-search over the
       // FULL corpus, q103's oracle verbatim. Shares q127's fixture path
       // deliberately: two serve paths, one pinned state.
       val sf = sfTag(d)
@@ -173,7 +173,8 @@ object SearchQueries {
       Search.deleteFromTextIndex(s, path,
         docs.where(pmod(col("doc_id"), lit(10)) === 3).select("doc_id"))
       Search.compactTextIndex(s, path)
-      Search.conjunctiveSearchSnapshot(s, path, "pre_campaign", bmTerms)
+      Search.conjunctiveSearch(s, path, bmTerms,
+        at = Family.Pinned("pre_campaign"))
     }),
 
     "q127_index_named_snapshot" -> ((s, d) => {
@@ -193,8 +194,8 @@ object SearchQueries {
       Search.deleteFromTextIndex(s, path,
         docs.where(pmod(col("doc_id"), lit(10)) === 3).select("doc_id"))
       Search.compactTextIndex(s, path)
-      Search.bm25TopKIndexedSnapshot(s, path, "pre_campaign", bmTerms,
-        k = 20, k1 = k1, b = b)
+      Search.bm25TopKIndexed(s, path, bmTerms, k = 20, k1 = k1, b = b,
+        at = Family.Pinned("pre_campaign"))
     }),
 
     "q143_index_rollback" -> ((s, d) => {
@@ -375,7 +376,8 @@ object SearchQueries {
       Search.compactTextIndex(s, path)
       Search.deleteFromTextIndex(s, path,
         docs.where(pmod(col("doc_id"), lit(10)) === 3).select("doc_id"))
-      Search.bm25TopKIndexedPrevious(s, path, bmTerms, k = 20, k1 = k1, b = b)
+      Search.bm25TopKIndexed(s, path, bmTerms, k = 20, k1 = k1, b = b,
+        at = Family.Previous)
     }),
 
     "q117_bm25_index_tombstone" -> ((s, d) => {

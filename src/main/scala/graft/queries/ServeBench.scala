@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.ext.{Campaign, Corpus, Dedup, Search, Similarity}
+import graft.ops.Family
 import graft.ops.Tables.{sfTag, t}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -154,34 +155,24 @@ object ServeBench {
     val split = Corpus.splitAssign(docs, "text")
     val probe = docs.where(pmod(col("doc_id"), lit(10)) >= 5)
     val test = split.where(col("split") === "test" && col("text").isNotNull)
-    val bm = (pin match {
-      case Some(n) => Search.bm25TopKIndexedSnapshot(s, cTextPath(d), n,
-        SearchQueries.bmTerms, k = 20,
-        k1 = SearchQueries.k1, b = SearchQueries.b)
-      case None => Search.bm25TopKIndexed(s, cTextPath(d),
-        SearchQueries.bmTerms, k = 20,
-        k1 = SearchQueries.k1, b = SearchQueries.b)
-    }).select(lit("bm25").as("family"), col("doc_id"),
-      col("score").as("v1"), col("rank").cast("double").as("v2"),
-      col("dl").cast("double").as("v3"))
-    val nd = (pin match {
-      case Some(n) => Dedup.incrementalNearDupsSnapshot(probe, cManiPath(d),
-        n, "text", "doc_id", threshold = 0.9)
-      case None => Dedup.incrementalNearDups(probe, cManiPath(d),
-        "text", "doc_id", threshold = 0.9)
-    }).select(lit("neardup").as("family"), col("doc_id"),
-      col("near_jaccard").as("v1"),
-      col("is_near_dup").cast("double").as("v2"),
-      lit(null).cast("double").as("v3"))
-    val lm = (pin match {
-      case Some(n) => Corpus.lmPerplexityIndexedSnapshot(test, cLmPath(d),
-        n, "text", "doc_id")
-      case None => Corpus.lmPerplexityIndexed(test, cLmPath(d),
-        "text", "doc_id")
-    }).select(lit("lm").as("family"), col("doc_id"),
-      col("bits_x100").cast("double").as("v1"),
-      col("n_bigrams").cast("double").as("v2"),
-      col("total_bits").cast("double").as("v3"))
+    val at = pin.fold[Family.At](Family.Live)(Family.Pinned)
+    val bm = Search.bm25TopKIndexed(s, cTextPath(d), SearchQueries.bmTerms,
+        k = 20, k1 = SearchQueries.k1, b = SearchQueries.b, at = at)
+      .select(lit("bm25").as("family"), col("doc_id"),
+        col("score").as("v1"), col("rank").cast("double").as("v2"),
+        col("dl").cast("double").as("v3"))
+    val nd = Dedup.incrementalNearDups(probe, cManiPath(d), "text",
+        "doc_id", threshold = 0.9, at = at)
+      .select(lit("neardup").as("family"), col("doc_id"),
+        col("near_jaccard").as("v1"),
+        col("is_near_dup").cast("double").as("v2"),
+        lit(null).cast("double").as("v3"))
+    val lm = Corpus.lmPerplexityIndexed(test, cLmPath(d), "text", "doc_id",
+        at = at)
+      .select(lit("lm").as("family"), col("doc_id"),
+        col("bits_x100").cast("double").as("v1"),
+        col("n_bigrams").cast("double").as("v2"),
+        col("total_bits").cast("double").as("v3"))
     bm.unionByName(nd).unionByName(lm)
   }
 
@@ -196,25 +187,26 @@ object ServeBench {
     "s02_conjunctive" -> ((s, d) =>
       Search.conjunctiveSearch(s, textPath(d), SearchQueries.bmTerms)),
     "s03_bm25_snapshot" -> ((s, d) =>
-      Search.bm25TopKIndexedSnapshot(s, textPath(d), "bench_pin",
-        SearchQueries.bmTerms, k = 20,
-        k1 = SearchQueries.k1, b = SearchQueries.b)),
+      Search.bm25TopKIndexed(s, textPath(d), SearchQueries.bmTerms, k = 20,
+        k1 = SearchQueries.k1, b = SearchQueries.b,
+        at = Family.Pinned("bench_pin"))),
     "s04_conjunctive_snapshot" -> ((s, d) =>
-      Search.conjunctiveSearchSnapshot(s, textPath(d), "bench_pin",
-        SearchQueries.bmTerms)),
+      Search.conjunctiveSearch(s, textPath(d), SearchQueries.bmTerms,
+        at = Family.Pinned("bench_pin"))),
     "s05_bm25_diff" -> ((s, d) =>
       Search.bm25MaintenanceDiff(s, textPath(d), SearchQueries.bmTerms,
         k = 20, k1 = SearchQueries.k1, b = SearchQueries.b)),
-    // manifest family: live probe (q84 tail), pinned probe (the
-    // incrementalNearDupsSnapshot serve), diff (q130 tail)
+    // manifest family: live probe (q84 tail), pinned probe, diff (q130
+    // tail)
     "s06_neardup_probe" -> ((s, d) =>
       Dedup.incrementalNearDups(
         t(s, d, "documents").where(pmod(col("doc_id"), lit(10)) >= 5),
         maniPath(d), "text", "doc_id", threshold = 0.9)),
     "s07_neardup_snapshot" -> ((s, d) =>
-      Dedup.incrementalNearDupsSnapshot(
+      Dedup.incrementalNearDups(
         t(s, d, "documents").where(pmod(col("doc_id"), lit(10)) >= 5),
-        maniPath(d), "bench_pin", "text", "doc_id", threshold = 0.9)),
+        maniPath(d), "text", "doc_id", threshold = 0.9,
+        at = Family.Pinned("bench_pin"))),
     "s08_neardup_diff" -> ((s, d) =>
       Dedup.incrementalNearDupsDiff(
         t(s, d, "documents").where(pmod(col("doc_id"), lit(10)) >= 5),
@@ -226,9 +218,9 @@ object ServeBench {
         deq(t(s, d, "embeddings")).where(col("vec_id") < 10),
         ivfPath(d), k = 10)),
     "s10_ivf_snapshot" -> ((s, d) =>
-      Similarity.topKIvfIndexedSnapshot(s,
+      Similarity.topKIvfIndexed(s,
         deq(t(s, d, "embeddings")).where(col("vec_id") < 10),
-        ivfPath(d), "bench_pin", k = 10)),
+        ivfPath(d), k = 10, at = Family.Pinned("bench_pin"))),
     "s11_ivf_diff" -> ((s, d) =>
       Similarity.ivfMaintenanceDiff(s,
         deq(t(s, d, "embeddings")).where(col("vec_id") < 10),
@@ -240,10 +232,10 @@ object ServeBench {
           .where(col("split") === "test" && col("text").isNotNull),
         lmPath(d), "text", "doc_id")),
     "s13_lm_snapshot" -> ((s, d) =>
-      Corpus.lmPerplexityIndexedSnapshot(
+      Corpus.lmPerplexityIndexed(
         Corpus.splitAssign(t(s, d, "documents"), "text")
           .where(col("split") === "test" && col("text").isNotNull),
-        lmPath(d), "bench_pin", "text", "doc_id")),
+        lmPath(d), "text", "doc_id", at = Family.Pinned("bench_pin"))),
     // phrase serve over the maintained positional component (q151/q155
     // tail): slot-filtered pruned scans + the shifted intersection
     "s14_phrase_search" -> ((s, d) =>

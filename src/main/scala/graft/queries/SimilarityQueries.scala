@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.ext.Similarity
+import graft.ops.Family
 import graft.ops.Tables.{sfTag, t}
 import org.apache.spark.sql.functions._
 
@@ -372,8 +373,8 @@ object SimilarityQueries {
       Similarity.compactIvfIndex(s, path)
       Similarity.deleteFromIvfIndex(s, path,
         emb.where(pmod(col("vec_id"), lit(10)) === 7).select("vec_id"))
-      Similarity.topKIvfIndexedPrevious(s, deq.where(col("vec_id") < 10),
-        path, k = 10)
+      Similarity.topKIvfIndexed(s, deq.where(col("vec_id") < 10),
+        path, k = 10, at = Family.Previous)
         .orderBy("query_id", "rank")
     }),
 

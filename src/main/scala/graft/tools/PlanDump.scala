@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: dump `explain("formatted")` for a comma-separated list of
   * queries to `<outDir>/<query>_<tag>.txt` — the committed plan evidence
@@ -17,14 +16,10 @@ object PlanDump {
     val outDir = args(1)
     val tag = args(2)
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = {
+      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+      graft.LocalSpark.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
+    }
     spark.sparkContext.setLogLevel("WARN")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { name =>

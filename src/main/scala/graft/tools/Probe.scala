@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: run one named query N times, print timings and the formatted
   * physical plan. `runMain graft.tools.Probe <query> [sfDir] [reps]`.
@@ -11,14 +10,10 @@ object Probe {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = {
+      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+      graft.LocalSpark.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
+    }
     spark.sparkContext.setLogLevel("WARN")
     val fn = SparkEntry.queries(name)
     println(s"== plan for $name ==")

@@ -1,18 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Probe: the streaming memory-sink query must be re-runnable in one
   * session (name reuse) — Bench/Verify may both hit it. */
 object ProbeStream {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      // the events footer probe must read NANOS-encoded testdata like
-      // every other entry point
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.LocalSpark.builder("local[8]", 8).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val d = "/root/testdata/sf0.001"
     val n1 = graft.streaming.EventStreams.hourlyWindowed(spark, d).count()

@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.ext.{Dedup, Similarity}
 import graft.ops.Tables.t
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: compare LSH-candidate operators against their exact
@@ -17,14 +16,10 @@ import org.apache.spark.sql.functions._
 object RecallCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = {
+      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+      graft.LocalSpark.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
+    }
     spark.sparkContext.setLogLevel("WARN")
 
     // ---- minhashPairs vs exact unigram-Jaccard self-join (threshold 0.9)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** The STANDING sf1 scale gate. Round 16 produced the scale-evidence
   * class (a one-off sf1 bench + spot oracles); this tool makes it a
@@ -94,12 +93,7 @@ object ScaleGate {
     val runs = sys.env.getOrElse("SPARK_GRAFT_SF1_RUNS", "3").toInt.max(1)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = graft.LocalSpark.builder(s"local[$cpus]", cpus.toInt)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -2,7 +2,7 @@ package graft
 
 import graft.ext.{Campaign, Corpus, Dedup, Search, Similarity}
 import graft.ext.Campaign.Member
-import graft.ops.Stage
+import graft.ops.{Family, Stage}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -47,12 +47,13 @@ class CampaignSpec extends AnyFunSuite {
       Member(Dedup.MinhashManifest, mani), Member(Corpus.Lm, lm))
     val probe = docs.where(col("doc_id") >= 5)
     def served() = (
-      Search.bm25TopKIndexedSnapshot(spark, text, "rel", Seq("spark"), 10)
+      Search.bm25TopKIndexed(spark, text, Seq("spark"), 10,
+        at = Family.Pinned("rel"))
         .collect().map(_.toSeq).toSeq,
-      Dedup.incrementalNearDupsSnapshot(probe, mani, "rel", "text",
-        "doc_id").collect().map(_.toSeq).toSeq,
-      Corpus.lmPerplexityIndexedSnapshot(probe, lm, "rel", "text",
-        "doc_id").collect().map(_.toSeq).toSeq)
+      Dedup.incrementalNearDups(probe, mani, "text",
+        "doc_id", at = Family.Pinned("rel")).collect().map(_.toSeq).toSeq,
+      Corpus.lmPerplexityIndexed(probe, lm, "text",
+        "doc_id", at = Family.Pinned("rel")).collect().map(_.toSeq).toSeq)
     Campaign.snapshot(spark, "rel", members)
     val atPin = served()
     assert(atPin._1.nonEmpty && atPin._2.nonEmpty && atPin._3.nonEmpty)
@@ -80,7 +81,8 @@ class CampaignSpec extends AnyFunSuite {
     Campaign.drop(spark, "rel", members)
     Campaign.vacuum(spark, members)
     intercept[IllegalStateException] {
-      Search.bm25TopKIndexedSnapshot(spark, text, "rel", Seq("spark"), 10)
+      Search.bm25TopKIndexed(spark, text, Seq("spark"), 10,
+        at = Family.Pinned("rel"))
     }
   }
 
@@ -192,8 +194,8 @@ class CampaignSpec extends AnyFunSuite {
     // campaign v1 over the manifest alone, name 'rel'
     Campaign.snapshot(spark, "rel", Seq(Member(Dedup.MinhashManifest, mani)))
     val probe = docs.where(col("doc_id") >= 5)
-    val v1 = Dedup.incrementalNearDupsSnapshot(probe, mani, "rel",
-      "text", "doc_id").collect().map(_.toSeq).toSeq
+    val v1 = Dedup.incrementalNearDups(probe, mani,
+      "text", "doc_id", at = Family.Pinned("rel")).collect().map(_.toSeq).toSeq
     // maintenance moves the live state past the pin
     Dedup.deleteContentFromMinhashManifest(
       docs.where(col("doc_id") === 1), "text", mani)
@@ -207,8 +209,8 @@ class CampaignSpec extends AnyFunSuite {
       Campaign.snapshot(spark, "rel", Seq(
         Member(Dedup.MinhashManifest, mani), Member(Search.TextIndex, text)))
     }
-    val after = Dedup.incrementalNearDupsSnapshot(probe, mani, "rel",
-      "text", "doc_id").collect().map(_.toSeq).toSeq
+    val after = Dedup.incrementalNearDups(probe, mani,
+      "text", "doc_id", at = Family.Pinned("rel")).collect().map(_.toSeq).toSeq
     assert(after == v1, "prior campaign pin must survive a failed refresh")
     // the member that never had the pin stays unpinned
     assert(Stage.resolveSnapshot(spark, s"$text/postings", "rel").isEmpty)
@@ -230,7 +232,8 @@ class CampaignSpec extends AnyFunSuite {
       Member(Search.TextIndex, a), Member(Search.TextIndex, b)))
     Campaign.snapshot(spark, "y", Seq(
       Member(Search.TextIndex, b), Member(Search.TextIndex, a)))
-    assert(Search.bm25TopKIndexedSnapshot(spark, a, "y", Seq("spark"), 10)
+    assert(Search.bm25TopKIndexed(spark, a, Seq("spark"), 10,
+      at = Family.Pinned("y"))
       .count() > 0)
     Campaign.drop(spark, "x", Seq(
       Member(Search.TextIndex, a), Member(Search.TextIndex, b)))
@@ -342,7 +345,7 @@ class CampaignSpec extends AnyFunSuite {
     Campaign.snapshot(spark, "rel", members)
     val qset = deq.where(col("vec_id") < 3)
     def pinned() = graft.ext.Similarity
-      .topKIvfIndexedSnapshot(spark, qset, ivf, "rel", k = 5)
+      .topKIvfIndexed(spark, qset, ivf, k = 5, at = Family.Pinned("rel"))
       .collect().map(_.toSeq).toSet
     val atPin = pinned()
     assert(atPin.nonEmpty)
@@ -369,7 +372,7 @@ class CampaignSpec extends AnyFunSuite {
     Campaign.snapshot(spark, "rel", members)
     val qset = emb.where(col("vec_id") < 3)
     def pinned() = graft.ext.Similarity
-      .pqTopKIndexedSnapshot(spark, qset, pq, "rel", k = 5)
+      .pqTopKIndexed(spark, qset, pq, k = 5, at = Family.Pinned("rel"))
       .collect().map(_.toSeq).toSet
     val atPin = pinned()
     assert(atPin.nonEmpty)
@@ -401,7 +404,7 @@ class CampaignSpec extends AnyFunSuite {
     Campaign.snapshot(spark, "rel", members)
     val qset = emb.where(col("vec_id") < 3)
     def pinned() = graft.ext.Similarity
-      .binaryTopKIndexedSnapshot(spark, qset, emb, bi, "rel", k = 5)
+      .binaryTopKIndexed(spark, qset, emb, bi, k = 5, at = Family.Pinned("rel"))
       .collect().map(_.toSeq).toSet
     val atPin = pinned()
     assert(atPin.nonEmpty)
@@ -435,7 +438,7 @@ class CampaignSpec extends AnyFunSuite {
       Member(Search.TextIndex, text))
     Campaign.snapshot(spark, "rel", members)
     def pinned() = graft.ext.Dedup
-      .probeWinnowOverlapSnapshot(probe, wm, "rel")
+      .probeWinnowOverlap(probe, wm, at = Family.Pinned("rel"))
       .collect().map(_.toSeq).toSet
     val atPin = pinned()
     assert(atPin.nonEmpty)

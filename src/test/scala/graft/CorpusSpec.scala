@@ -1,6 +1,7 @@
 package graft
 
 import graft.ext.Corpus
+import graft.ops.Family
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -615,18 +616,19 @@ class CorpusSpec extends AnyFunSuite {
     Corpus.appendToLm(grow, path, "text", "doc_id", opId = "spec_grow")
     val live = rows(Corpus.lmPerplexityIndexed(batch, path, "text", "doc_id"))
     assert(live != atPin, "the append must actually change live scores")
-    assert(rows(Corpus.lmPerplexityIndexedSnapshot(
-      batch, path, "pin", "text", "doc_id")) == atPin)
+    assert(rows(Corpus.lmPerplexityIndexed(
+      batch, path, "text", "doc_id", at = Family.Pinned("pin"))) == atPin)
     // compaction REWRITES the components; the pin keeps its state
     Corpus.compactLm(spark, path)
-    assert(rows(Corpus.lmPerplexityIndexedSnapshot(
-      batch, path, "pin", "text", "doc_id")) == atPin)
+    assert(rows(Corpus.lmPerplexityIndexed(
+      batch, path, "text", "doc_id", at = Family.Pinned("pin"))) == atPin)
     assert(rows(Corpus.lmPerplexityIndexed(batch, path, "text", "doc_id"))
       == live)
     // dropped pin stops resolving
     Corpus.Lm.dropSnapshot(spark, path, "pin")
     intercept[IllegalStateException] {
-      Corpus.lmPerplexityIndexedSnapshot(batch, path, "pin", "text", "doc_id")
+      Corpus.lmPerplexityIndexed(batch, path, "text", "doc_id",
+        at = Family.Pinned("pin"))
     }
   }
 

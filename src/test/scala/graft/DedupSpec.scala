@@ -2,6 +2,7 @@ package graft
 
 import graft.ext.Dedup
 import graft.functions.SetExpressions
+import graft.ops.Family
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -685,7 +686,8 @@ class DedupSpec extends AnyFunSuite {
       df.collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
     // a freshly built plain manifest has no snapshot history
     intercept[IllegalStateException] {
-      Dedup.incrementalNearDupsPrevious(batch, path, "text", "doc_id")
+      Dedup.incrementalNearDups(batch, path, "text", "doc_id",
+        at = Family.Previous)
         .collect()
     }
     val full = verdicts(
@@ -699,7 +701,8 @@ class DedupSpec extends AnyFunSuite {
       Dedup.incrementalNearDups(batch, path, "text", "doc_id"))
       == Map(10L -> false, 11L -> true, 12L -> false))
     assert(verdicts(
-      Dedup.incrementalNearDupsPrevious(batch, path, "text", "doc_id"))
+      Dedup.incrementalNearDups(batch, path, "text", "doc_id",
+        at = Family.Previous))
       == full)
   }
 
@@ -725,20 +728,22 @@ class DedupSpec extends AnyFunSuite {
       Seq((99L, base)).toDF("doc_id", "text"), "text", path) // → v2
     Dedup.compactMinhashManifest(spark, path) // → v3
     // the previous window has moved past v1, but the pin still serves it
-    assert(verdicts(Dedup.incrementalNearDupsSnapshot(
-      batch, path, "pre_campaign", "text", "doc_id")) == full)
+    assert(verdicts(Dedup.incrementalNearDups(
+      batch, path, "text", "doc_id",
+        at = Family.Pinned("pre_campaign"))) == full)
     assert(verdicts(
       Dedup.incrementalNearDups(batch, path, "text", "doc_id"))
       == Map(10L -> false, 11L -> true, 12L -> false))
     // unknown names fail loudly, and a dropped pin stops resolving
     intercept[IllegalStateException] {
-      Dedup.incrementalNearDupsSnapshot(
-        batch, path, "nope", "text", "doc_id").collect()
+      Dedup.incrementalNearDups(
+        batch, path, "text", "doc_id", at = Family.Pinned("nope")).collect()
     }
     Dedup.MinhashManifest.dropSnapshot(spark, path, "pre_campaign")
     intercept[IllegalStateException] {
-      Dedup.incrementalNearDupsSnapshot(
-        batch, path, "pre_campaign", "text", "doc_id").collect()
+      Dedup.incrementalNearDups(
+        batch, path, "text", "doc_id",
+          at = Family.Pinned("pre_campaign")).collect()
     }
   }
 

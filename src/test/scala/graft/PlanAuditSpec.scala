@@ -486,8 +486,9 @@ class PlanAuditSpec extends AnyFunSuite {
       quantScale = 200.0,
       centroidsIn = graft.ext.Similarity.sampleCentroids(deq, 8))
     graft.ext.Similarity.IvfIndex.snapshot(spark, idx, "audit")
-    val df = graft.ext.Similarity.topKIvfIndexedSnapshot(spark,
-      deq.where(col("vec_id") < 3), idx, "audit", k = 5)
+    val df = graft.ext.Similarity.topKIvfIndexed(spark,
+      deq.where(col("vec_id") < 3), idx, k = 5,
+      at = graft.ops.Family.Pinned("audit"))
     df.collect() // force execution so the adaptive plan finalizes
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("dynamicpruningexpression"), plan.take(4000))

@@ -1,6 +1,7 @@
 package graft
 
 import graft.ext.{Search, Similarity}
+import graft.ops.Family
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -198,18 +199,18 @@ class SearchSpec extends AnyFunSuite {
     Search.saveTextIndex(docs, idx)
     // a freshly built plain index has no snapshot history — loud failure
     intercept[IllegalStateException] {
-      Search.bm25TopKIndexedPrevious(spark, idx, terms, 10)
+      Search.bm25TopKIndexed(spark, idx, terms, 10, at = Family.Previous)
     }
     Search.compactTextIndex(spark, idx) // migrate plain → v1
     // the MIGRATING publish's previous snapshot is the plain layout
     // itself (its files stay in place for the grace cycle) — and the
     // compaction preserved content, so it serves the same full corpus
-    assert(Search.bm25TopKIndexedPrevious(spark, idx, terms, 10)
+    assert(Search.bm25TopKIndexed(spark, idx, terms, 10, at = Family.Previous)
       .collect().map(_.toSeq).toSeq ==
       Search.bm25TopK(docs, terms, 10).collect().map(_.toSeq).toSeq)
     Search.deleteFromTextIndex(spark, idx, Seq(1L).toDF("doc_id")) // → v2
     // previous-serve == fresh compute over the FULL corpus, bit-identical
-    assert(Search.bm25TopKIndexedPrevious(spark, idx, terms, 10)
+    assert(Search.bm25TopKIndexed(spark, idx, terms, 10, at = Family.Previous)
       .collect().map(_.toSeq).toSeq ==
       Search.bm25TopK(docs, terms, 10).collect().map(_.toSeq).toSeq)
     // while the live index serves the survivors
@@ -219,14 +220,15 @@ class SearchSpec extends AnyFunSuite {
         .collect().map(_.toSeq).toSeq)
     // the index's other serve path reads the same snapshot: conjunctive
     // search over the previous postings equals pre-delete results
-    assert(Search.conjunctiveSearchPrevious(spark, idx, Seq("spark"))
+    assert(Search.conjunctiveSearch(spark, idx, Seq("spark"),
+      at = Family.Previous)
       .collect().map(_.getLong(0)).toSeq == Seq(1L, 3L))
     assert(Search.conjunctiveSearch(spark, idx, Seq("spark"))
       .collect().map(_.getLong(0)).toSeq == Seq(3L))
     // PENDING tombstones mask the snapshot too (right-to-be-forgotten
     // holds for validation reads)
     Search.tombstoneFromTextIndex(spark, idx, Seq(2L).toDF("doc_id"))
-    assert(!Search.bm25TopKIndexedPrevious(spark, idx, terms, 10)
+    assert(!Search.bm25TopKIndexed(spark, idx, terms, 10, at = Family.Previous)
       .collect().map(_.getLong(0)).contains(2L))
   }
 

@@ -2,6 +2,7 @@ package graft
 
 import graft.ext.Similarity
 import graft.functions.VectorExpressions
+import graft.ops.Family
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -130,8 +131,8 @@ class SimilaritySpec extends AnyFunSuite {
       .collect().map(r =>
         (r.getLong(0), r.getInt(4)) -> ((r.getLong(1), r.getLong(2)))).toMap
     assert(serve() == fresh)
-    val pinned = Similarity.binaryTopKIndexedSnapshot(spark, queries, vecs,
-        path, "pre_del", k = 5, overfetch = 3)
+    val pinned = Similarity.binaryTopKIndexed(spark, queries, vecs,
+        path, k = 5, overfetch = 3, at = Family.Pinned("pre_del"))
       .collect().map(r =>
         (r.getLong(0), r.getInt(4)) -> ((r.getLong(1), r.getLong(2)))).toMap
     assert(pinned == atPin)
@@ -754,14 +755,15 @@ class SimilaritySpec extends AnyFunSuite {
       .as[(Long, Long, Double, Int)].collect().toSet
     // born-versioned with a single publish: no history yet — loud failure
     intercept[IllegalStateException] {
-      Similarity.topKIvfIndexedPrevious(spark, qset, idx, k = 5)
+      Similarity.topKIvfIndexed(spark, qset, idx, k = 5, at = Family.Previous)
     }
     val full = rows(Similarity.topKIvfIndexed(spark, qset, idx, k = 5))
     Similarity.compactIvfIndex(spark, idx) // v1 → v2
     Similarity.deleteFromIvfIndex(spark, idx,
       emb.where(pmod(col("vec_id"), lit(3)) === 1).select("vec_id")) // → v3
     // previous-serve == the pre-delete (full corpus) ranking
-    assert(rows(Similarity.topKIvfIndexedPrevious(spark, qset, idx, k = 5))
+    assert(rows(Similarity.topKIvfIndexed(spark, qset, idx, k = 5,
+      at = Family.Previous))
       == full)
     // while the live index excludes the deleted ids
     assert(rows(Similarity.topKIvfIndexed(spark, qset, idx, k = 5))
@@ -788,15 +790,15 @@ class SimilaritySpec extends AnyFunSuite {
     Similarity.deleteFromIvfIndex(spark, idx,
       emb.where(pmod(col("vec_id"), lit(3)) === 1).select("vec_id")) // → v2
     Similarity.compactIvfIndex(spark, idx) // → v3
-    assert(rows(Similarity.topKIvfIndexedSnapshot(
-      spark, qset, idx, "pre_campaign", k = 5)) == full)
+    assert(rows(Similarity.topKIvfIndexed(
+      spark, qset, idx, k = 5, at = Family.Pinned("pre_campaign"))) == full)
     assert(rows(Similarity.topKIvfIndexed(spark, qset, idx, k = 5))
       .forall(r => r._2 % 3 != 1))
     // dropped pin stops resolving
     Similarity.IvfIndex.dropSnapshot(spark, idx, "pre_campaign")
     intercept[IllegalStateException] {
-      Similarity.topKIvfIndexedSnapshot(
-        spark, qset, idx, "pre_campaign", k = 5)
+      Similarity.topKIvfIndexed(
+        spark, qset, idx, k = 5, at = Family.Pinned("pre_campaign"))
     }
     // REBUILD clears pins (the clearLedger/clearTombstones rule): a
     // stale name must not keep serving the old corpus's lists
@@ -804,7 +806,8 @@ class SimilaritySpec extends AnyFunSuite {
     Similarity.saveIvfIndex(emb, idx, nCentroids = 16, dim = 64,
       quantScale = 200.0, centroidsIn = cents)
     intercept[IllegalStateException] {
-      Similarity.topKIvfIndexedSnapshot(spark, qset, idx, "stale_pin", k = 5)
+      Similarity.topKIvfIndexed(spark, qset, idx, k = 5,
+        at = Family.Pinned("stale_pin"))
     }
   }
 
@@ -918,8 +921,8 @@ class SimilaritySpec extends AnyFunSuite {
     assert(live == rows(Similarity.pqTopK(queries,
       emb.where(pmod(col("vec_id"), lit(10)) =!= 3), k = 5, dim = 64,
       cbEven)))
-    assert(rows(Similarity.pqTopKIndexedSnapshot(spark, queries, idx,
-      "pre_del", k = 5))
+    assert(rows(Similarity.pqTopKIndexed(spark, queries, idx, k = 5,
+      at = Family.Pinned("pre_del")))
       == rows(Similarity.pqTopK(queries, emb, k = 5, dim = 64, cbEven)))
     // restore rolls the codes back; the pin survives
     Similarity.PqIndex.restore(spark, idx, "pre_del")
@@ -1160,7 +1163,8 @@ class SimilaritySpec extends AnyFunSuite {
     // same-corpus maintenance establishes previous-serving...
     Similarity.deleteFromIvfIndex(spark, idx,
       emb.where(pmod(col("vec_id"), lit(3)) === 1).select("vec_id"))
-    assert(Similarity.topKIvfIndexedPrevious(spark, qset, idx, k = 5)
+    assert(Similarity.topKIvfIndexed(spark, qset, idx, k = 5,
+      at = Family.Previous)
       .count() > 0)
     // ...but a REBUILD (new quantScale = new geometry) must NOT leave
     // the old corpus's lists as "the previous version": serving them
@@ -1169,7 +1173,7 @@ class SimilaritySpec extends AnyFunSuite {
     Similarity.saveIvfIndex(emb, idx, nCentroids = 8, dim = 64,
       quantScale = 100.0, centroidsIn = cents)
     intercept[IllegalStateException] {
-      Similarity.topKIvfIndexedPrevious(spark, qset, idx, k = 5)
+      Similarity.topKIvfIndexed(spark, qset, idx, k = 5, at = Family.Previous)
     }
     // live serving over the rebuilt index is intact
     assert(Similarity.topKIvfIndexed(spark, qset, idx, k = 5).count() > 0)

@@ -1,7 +1,7 @@
 package graft
 
 import graft.ext.Search
-import graft.ops.Stage
+import graft.ops.{Family, Stage}
 import org.apache.hadoop.fs.Path
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -735,7 +735,8 @@ class StageSpec extends AnyFunSuite {
       s"$idx/postings/v00000001")
     Search.TextIndex.snapshot(spark, idx, "at_birth")
     def pinned() = Search
-      .bm25TopKIndexedSnapshot(spark, idx, "at_birth", Seq("spark"), 10)
+      .bm25TopKIndexed(spark, idx, Seq("spark"), 10,
+        at = Family.Pinned("at_birth"))
       .collect().map(_.toSeq).toSeq
     val atPin = pinned()
     assert(atPin.nonEmpty)
@@ -792,7 +793,8 @@ class StageSpec extends AnyFunSuite {
     Search.compactTextIndex(spark, idx) // migrate → v1
     Search.TextIndex.snapshot(spark, idx, "pinned")
     def serveSnap() = Search
-      .bm25TopKIndexedSnapshot(spark, idx, "pinned", Seq("spark"), 10)
+      .bm25TopKIndexed(spark, idx, Seq("spark"), 10,
+        at = Family.Pinned("pinned"))
       .collect().map(_.toSeq).toSeq
     val atPin = serveSnap()
     // the append publishes INTO v1 — the directory a naive pin would
