@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.ops.Tables
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -642,12 +643,12 @@ trait CorpusLm extends CorpusTokenizers {
       Lm.components(spark, path))
     val nB = compactionPartitions(spark, s"$path/bigrams")
     publishRewrite(spark, s"$path/bigrams",
-      spark.read.parquet(resolve(spark, s"$path/bigrams"))
+      Tables.parquet(spark, resolve(spark, s"$path/bigrams"))
         .groupBy("p", "w").agg(sum(col("cb")).as("cb"))
         .where(col("cb") > 0).repartition(nB))
     val nV = compactionPartitions(spark, s"$path/vocab")
     publishRewrite(spark, s"$path/vocab",
-      spark.read.parquet(resolve(spark, s"$path/vocab"))
+      Tables.parquet(spark, resolve(spark, s"$path/vocab"))
         .groupBy("tok").agg(sum(col("c")).as("c"))
         .where(col("c") > 0).repartition(nV))
     graft.ops.Stage.compactLedger(spark, path)

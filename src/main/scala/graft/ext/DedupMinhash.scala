@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.ops.Tables
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -287,7 +288,7 @@ trait DedupMinhash extends DedupExactOps {
       // band keys it had already computed (the set-sim postings fix,
       // applied here; bandsRows only reads (doc, ntok, keys), all of
       // which the docs component persists)
-      val publishedDocs = spark.read.parquet(
+      val publishedDocs = Tables.parquet(spark,
         graft.ops.Stage.resolve(spark, s"$path/docs"))
       graft.ops.Stage.publishRebuild(spark, s"$path/bands")(vd =>
         bandsRows(publishedDocs, k, bands).write.mode("overwrite").parquet(vd))
@@ -308,16 +309,13 @@ trait DedupMinhash extends DedupExactOps {
       .withColumnRenamed("col", "band_key")
       .withColumn("k", lit(k)).withColumn("bands", lit(bands))
 
-  /** The shared docs/bands pipeline of [[saveMinhashManifest]] (overwrite)
-    * and [[appendToMinhashManifest]] (append): tokenize, exact-collapse to
-    * class representatives, sign and band. ONE implementation on purpose —
-    * build and append must stay join-compatible, and a schema or collapse
-    * change applied to only one of them would silently corrupt every probe
-    * of a mixed manifest.
+  /** The shared tokenize → exact-collapse → sign pipeline of
+    * [[saveMinhashManifest]] (overwrite) and [[appendToMinhashManifest]]
+    * (append), whose bands [[bandsRows]] derives. ONE implementation on
+    * purpose — build and append must stay join-compatible, and a schema
+    * or collapse change applied to only one of them would silently
+    * corrupt every probe of a mixed manifest.
     */
-  /** The shared tokenize → exact-collapse → sign pipeline — build and
-    * append MUST derive from this one implementation so a schema or
-    * collapse change cannot silently corrupt a mixed manifest. */
   private def manifestKeyed(df: DataFrame, textCol: String, idCol: String,
                             k: Int, bands: Int): DataFrame = {
     val docs = df.select(col(idCol).as("doc"), tokenHashes(col(textCol)).as("toks"))
@@ -346,7 +344,7 @@ trait DedupMinhash extends DedupExactOps {
     // read-back would duplicate them into bands — keep the lineage there
     // (plain appends are batch-sized by contract).
     val bandsSource =
-      if (mode == "overwrite") spark.read.parquet(docsPath) else keyed
+      if (mode == "overwrite") Tables.parquet(spark, docsPath) else keyed
     bandsRows(bandsSource, k, bands)
       .write.mode(mode).parquet(graft.ops.Stage.resolve(spark, s"$path/bands"))
   }
@@ -369,7 +367,7 @@ trait DedupMinhash extends DedupExactOps {
     // racing a [[MinhashManifest]] pin could hand the pin a
     // torn (partially committed) file list
     graft.ops.Stage.withWriterLease(newDf.sparkSession, path) {
-      val meta = newDf.sparkSession.read.parquet(
+      val meta = Tables.parquet(newDf.sparkSession,
         graft.ops.Stage.resolve(newDf.sparkSession, s"$path/meta")).head()
       writeManifestTables(newDf, textCol, idCol, path,
         meta.getAs[Int]("k"), meta.getAs[Int]("bands"), "append")
@@ -393,7 +391,7 @@ trait DedupMinhash extends DedupExactOps {
     // replay no-op BEFORE the meta head() job (appendExactlyOnce
     // rechecks — this is the cheap fast exit)
     if (graft.ops.Stage.alreadyPublished(spark, path, batchId)) return
-    val meta = spark.read.parquet(
+    val meta = Tables.parquet(spark,
       graft.ops.Stage.resolve(spark, s"$path/meta")).head()
     graft.ops.Stage.appendExactlyOnce(spark, path, batchId,
       MinhashManifest.components(spark, path)) { staging =>
@@ -430,7 +428,7 @@ trait DedupMinhash extends DedupExactOps {
     val delKeys = ckpt(deleted.where(col(textCol).isNotNull)
       .select(xxhash64(tokenHashes(col(textCol))).as("seth")).distinct())
     import graft.ops.Stage.{publishRewrite, resolve}
-    val live = spark.read.parquet(resolve(spark, s"$path/docs"))
+    val live = Tables.parquet(spark, resolve(spark, s"$path/docs"))
       .withColumn("seth", xxhash64(col("toks")))
     val removed = live.join(delKeys, Seq("seth")).select("doc")
     // independent component rewrites run CONCURRENTLY (guide §2.6 — the
@@ -439,7 +437,7 @@ trait DedupMinhash extends DedupExactOps {
     // so the bands thunk's anti-join input is stable either way
     graft.ops.Par.run(
       () => publishRewrite(spark, s"$path/bands",
-        spark.read.parquet(resolve(spark, s"$path/bands"))
+        Tables.parquet(spark, resolve(spark, s"$path/bands"))
           .join(removed, Seq("doc"), "left_anti")),
       () => publishRewrite(spark, s"$path/docs",
         live.join(delKeys, Seq("seth"), "left_anti").drop("seth")))
@@ -514,13 +512,13 @@ trait DedupMinhash extends DedupExactOps {
     val snap = graft.ops.Stage.tombstoneSnapshot(spark, path)
     val tomb = snap.map(_._1)
     val removed = tomb match {
-      case Some(t) => spark.read.parquet(resolve(spark, s"$path/docs"))
+      case Some(t) => Tables.parquet(spark, resolve(spark, s"$path/docs"))
         .withColumn("seth", xxhash64(col("toks")))
         .join(t, Seq("seth")).select("doc")
       // the empty relation derives from the manifest's OWN doc column —
       // spark.range(0)'s LONG would coerce a string-id manifest's
       // anti-join key (ANSI runtime cast error on a routine compaction)
-      case None => spark.read.parquet(resolve(spark, s"$path/docs"))
+      case None => Tables.parquet(spark, resolve(spark, s"$path/docs"))
         .select("doc").limit(0)
     }
     // independent component rewrites run CONCURRENTLY (guide §2.6 — the
@@ -532,11 +530,11 @@ trait DedupMinhash extends DedupExactOps {
     val nDocs = compactionPartitions(spark, s"$path/docs")
     graft.ops.Par.run(
       () => publishRewrite(spark, s"$path/bands",
-        spark.read.parquet(resolve(spark, s"$path/bands"))
+        Tables.parquet(spark, resolve(spark, s"$path/bands"))
           .join(removed, Seq("doc"), "left_anti")
           .repartition(nBands, col("band"), col("band_key"))),
       () => publishRewrite(spark, s"$path/docs",
-        minusTombstoned(spark.read.parquet(resolve(spark, s"$path/docs")),
+        minusTombstoned(Tables.parquet(spark, resolve(spark, s"$path/docs")),
           tomb).repartition(nDocs)))
     graft.ops.Stage.resetTombstones(spark, path,
       snap.map(_._2).getOrElse(Nil))
@@ -726,7 +724,7 @@ trait DedupMinhash extends DedupExactOps {
       .limit(1).collect().headOption
       .map(r => (r.getInt(0), r.getInt(1)))
       .getOrElse {
-        val meta = spark.read.parquet(
+        val meta = Tables.parquet(spark,
           graft.ops.Stage.resolve(spark, s"$manifestPath/meta")).head()
         (meta.getAs[Int]("k"), meta.getAs[Int]("bands"))
       }

@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.ops.Tables
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -303,7 +304,7 @@ trait DedupSetSim extends DedupWinnow {
       // posting explode funnels through a single task
       graft.ops.Stage.publishRebuild(spark, s"$path/postings")(vd =>
         setSimPostings(graft.ops.Tables.spreadAmplified(
-            spark.read.parquet(setsDir), col("doc")))
+            Tables.parquet(spark, setsDir), col("doc")))
           .write.mode("overwrite").parquet(vd))
     }
   }
@@ -399,8 +400,8 @@ trait DedupSetSim extends DedupWinnow {
     // one resolve per component, shared by candidates and verification —
     // the torn-read rule (a concurrent rebuild must not split a probe
     // across generations)
-    val postings = spark.read.parquet(resolve(spark, s"$path/postings"))
-    val corpusSets = spark.read.parquet(resolve(spark, s"$path/sets"))
+    val postings = Tables.parquet(spark, resolve(spark, s"$path/postings"))
+    val corpusSets = Tables.parquet(spark, resolve(spark, s"$path/sets"))
     def ckpt(df: DataFrame): DataFrame = graft.ops.Tables.materialize(df)
     val bSets = ckpt(setSimSets(batch, textCol, idCol, shingle))
     val bGrams = bSets.select(col("doc"), col("l"),
@@ -453,7 +454,7 @@ trait DedupSetSim extends DedupWinnow {
         .select(xxhash64(graft.functions.TextExpressions
           .hashedWordNgrams(col(textCol), shingle)).as("seth"))
         .distinct()
-      val live = spark.read.parquet(resolve(spark, s"$path/sets"))
+      val live = Tables.parquet(spark, resolve(spark, s"$path/sets"))
         .withColumn("seth", xxhash64(col("grams")))
       val removed = live.join(delKeys, Seq("seth")).select("doc")
       // independent component rewrites run CONCURRENTLY (guide §2.6 —
@@ -462,7 +463,7 @@ trait DedupSetSim extends DedupWinnow {
       // cycle, so the postings thunk's anti-join input is stable
       graft.ops.Par.run(
         () => publishRewrite(spark, s"$path/postings",
-          spark.read.parquet(resolve(spark, s"$path/postings"))
+          Tables.parquet(spark, resolve(spark, s"$path/postings"))
             .join(removed, Seq("doc"), "left_anti")),
         () => publishRewrite(spark, s"$path/sets",
           live.join(delKeys, Seq("seth"), "left_anti").drop("seth")))

@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.ops.Tables
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -315,7 +316,7 @@ trait DedupWinnow extends DedupSimhash {
   def appendToWinnowManifest(newDf: DataFrame, textCol: String,
                              idCol: String, path: String): Unit =
     graft.ops.Stage.withWriterLease(newDf.sparkSession, path) {
-      val meta = newDf.sparkSession.read.parquet(
+      val meta = Tables.parquet(newDf.sparkSession,
         graft.ops.Stage.resolve(newDf.sparkSession, s"$path/meta")).head()
       writeWinnowTables(newDf, textCol, idCol, path,
         meta.getAs[Int]("n"), meta.getAs[Int]("w"), "append")
@@ -338,7 +339,7 @@ trait DedupWinnow extends DedupSimhash {
         // concurrent saveWinnowManifest rebuild with different (n, w)
         // must not race the read and land join-incompatible fingerprints
         // (the appendToTextIndexExactlyOnce rule)
-        val meta = spark.read.parquet(
+        val meta = Tables.parquet(spark,
           graft.ops.Stage.resolve(spark, s"$path/meta")).head()
         writeWinnowTables(newDf, textCol, idCol, staging,
           meta.getAs[Int]("n"), meta.getAs[Int]("w"), "overwrite")
@@ -361,7 +362,7 @@ trait DedupWinnow extends DedupSimhash {
         WinnowManifest.components(spark, path))
       val del = ids.select(col(idCol).as("doc")).distinct()
       graft.ops.Stage.publishRewrite(spark, s"$path/fps",
-        spark.read.parquet(graft.ops.Stage.resolve(spark, s"$path/fps"))
+        Tables.parquet(spark, graft.ops.Stage.resolve(spark, s"$path/fps"))
           .join(del, Seq("doc"), "left_anti"))
     }
 
@@ -393,8 +394,7 @@ trait DedupWinnow extends DedupSimhash {
       graft.ops.Stage.sweepUncommitted(spark, path,
         WinnowManifest.components(spark, path))
       val snap = graft.ops.Stage.tombstoneSnapshot(spark, path)
-      val fps = spark.read
-        .parquet(graft.ops.Stage.resolve(spark, s"$path/fps"))
+      val fps = Tables.parquet(spark, graft.ops.Stage.resolve(spark, s"$path/fps"))
       val live = snap.map(_._1) match {
         case Some(t) => fps.join(t, Seq("doc"), "left_anti")
         case None    => fps
@@ -475,7 +475,7 @@ trait DedupWinnow extends DedupSimhash {
       .limit(1).collect().headOption
       .map(r => (r.getInt(0), r.getInt(1)))
       .getOrElse {
-        val meta = spark.read.parquet(
+        val meta = Tables.parquet(spark,
           graft.ops.Stage.resolve(spark, s"$path/meta")).head()
         (meta.getAs[Int]("n"), meta.getAs[Int]("w"))
       }

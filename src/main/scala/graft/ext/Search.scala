@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.ops.Tables
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -106,25 +107,6 @@ object Search {
       .orderBy("rank")
   }
 
-  /** Persist the retrieval index [[bm25TopKIndexed]] and
-    * [[conjunctiveSearch]] serve from, so query batches never re-tokenize
-    * the corpus — the build is one corpus pass, amortized over every
-    * later query (the q82-IVF / q91-LM "build once, serve many" shape,
-    * applied to text retrieval). Layout (all parquet):
-    *
-    *  - `postings/`: (token, doc_id, tf) sorted by token within files, so
-    *    a term-filtered read prunes row groups on the token min/max and
-    *    the scan carries only the query terms' posting lists;
-    *  - `doclens/`: (doc_id, dl);
-    *  - `stats/`: ADDITIVE rows summing to (n_docs, total_tokens) — a
-    *    fresh build writes one; each appended batch adds one. Serving
-    *    sums them ([[readStats]]), so growing the index never
-    *    read-modify-writes a stats file (the step a replayed batch would
-    *    double-count).
-    *
-    * df needs no table of its own: postings rows are distinct (token,
-    * doc) pairs, so df(t) is a count over the already-filtered postings.
-    */
   /** The index's LIVE component set: the base (postings, doclens, stats)
     * triple, plus `positions` when the positional component
     * ([[savePositionalIndex]]) exists at this path. Every maintenance op
@@ -178,6 +160,25 @@ object Search {
       .select(col(idCol),
         TextAnalysis.tokenCount(col(textCol)).cast("long").as("dl"))
 
+  /** Persist the retrieval index [[bm25TopKIndexed]] and
+    * [[conjunctiveSearch]] serve from, so query batches never re-tokenize
+    * the corpus — the build is one corpus pass, amortized over every
+    * later query (the q82-IVF / q91-LM "build once, serve many" shape,
+    * applied to text retrieval). Layout (all parquet):
+    *
+    *  - `postings/`: (token, doc_id, tf) sorted by token within files, so
+    *    a term-filtered read prunes row groups on the token min/max and
+    *    the scan carries only the query terms' posting lists;
+    *  - `doclens/`: (doc_id, dl);
+    *  - `stats/`: ADDITIVE rows summing to (n_docs, total_tokens) — a
+    *    fresh build writes one; each appended batch adds one. Serving
+    *    sums them ([[readStats]]), so growing the index never
+    *    read-modify-writes a stats file (the step a replayed batch would
+    *    double-count).
+    *
+    * df needs no table of its own: postings rows are distinct (token,
+    * doc) pairs, so df(t) is a count over the already-filtered postings.
+    */
   def saveTextIndex(docs: DataFrame, path: String,
                     idCol: String = "doc_id", textCol: String = "text"): Unit = {
     // a rebuild starts a fresh streaming lineage: stale exactly-once
@@ -391,17 +392,17 @@ object Search {
       compactionPartitions(spark, s"$path/positions") else 0
     val postingsThunk = () =>
       publishRewrite(spark, s"$path/postings") { versionDir =>
-        minusTombstoned(spark.read.parquet(resolve(spark, s"$path/postings")),
+        minusTombstoned(Tables.parquet(spark, resolve(spark, s"$path/postings")),
           tomb, idCol)
           .repartition(nPost, col("token")).sortWithinPartitions("token", idCol)
           .write.mode("overwrite").parquet(versionDir)
       }
     val lensStatsThunk = () => {
       publishRewrite(spark, s"$path/doclens",
-        minusTombstoned(spark.read.parquet(resolve(spark, s"$path/doclens")),
+        minusTombstoned(Tables.parquet(spark, resolve(spark, s"$path/doclens")),
           tomb, idCol).repartition(nLens))
       publishRewrite(spark, s"$path/stats",
-        spark.read.parquet(resolve(spark, s"$path/doclens")) // post-fold lens
+        Tables.parquet(spark, resolve(spark, s"$path/doclens")) // post-fold lens
           .agg(count(lit(1)).as("n_docs"),
             coalesce(sum(col("dl")), lit(0L)).as("total_tokens"))
           .repartition(1))
@@ -412,7 +413,7 @@ object Search {
       val positionsThunk = () =>
         publishRewrite(spark, s"$path/positions") { versionDir =>
           minusTombstoned(
-            spark.read.parquet(resolve(spark, s"$path/positions")),
+            Tables.parquet(spark, resolve(spark, s"$path/positions")),
             tomb, idCol)
             .repartition(nPos, col("token")).sortWithinPartitions("token", idCol)
             .write.mode("overwrite").parquet(versionDir)
@@ -654,8 +655,7 @@ object Search {
                           idCol: String = "doc_id"): DataFrame = {
     require(phrase.nonEmpty, "phrase search needs at least one term")
     val tomb = graft.ops.Stage.pendingTombstones(spark, path)
-    val positions = spark.read.parquet(
-      graft.ops.Stage.resolve(spark, s"$path/positions"))
+    val positions = TextIndex.read(spark, path, graft.ops.Family.Live)("positions")
     // one aliased, term-filtered relation per phrase SLOT (not per
     // distinct term): the pushed filter prunes token-sorted row groups
     val slots = phrase.zipWithIndex.map { case (t, i) =>
@@ -699,8 +699,7 @@ object Search {
     require(termA != termB, "proximity needs two distinct terms")
     require(maxDist >= 1, s"maxDist must be positive: $maxDist")
     val tomb = graft.ops.Stage.pendingTombstones(spark, path)
-    val positions = spark.read.parquet(
-      graft.ops.Stage.resolve(spark, s"$path/positions"))
+    val positions = TextIndex.read(spark, path, graft.ops.Family.Live)("positions")
     def side(t: String, as: String) = positions.where(col("token") === t)
       .select(col(idCol), col("positions").as(as))
     val joined = side(termA, "pa").join(side(termB, "pb"), Seq(idCol))

@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.ops.Tables
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -290,11 +291,11 @@ object Similarity {
     val listsDir = graft.ops.Stage.resolve(spark, s"$path/lists")
     val (scale, _) = loadIvfMeta(spark, path)
     val served = serveIvfLists(spark, queries, path,
-      spark.read.parquet(listsDir), tomb, fetch, nProbe, idCol, vecCol)
+      Tables.parquet(spark, listsDir), tomb, fetch, nProbe, idCol, vecCol)
       .select(col("query_id"), col("neighbor_id"), col("cos_sim"))
     val cvec = if (scale > 0) dequantize(col("code"), scale)
       else col("code")
-    val vecs = spark.read.parquet(listsDir)
+    val vecs = Tables.parquet(spark, listsDir)
       .select(col("vec_id").as("neighbor_id"), cvec.as("vec"))
       .withColumn("nrm", norm(col("vec")))
     mmrGreedy(vecs.join(broadcast(served), Seq("neighbor_id")), k, lam)
@@ -328,7 +329,7 @@ object Similarity {
     val listsDir = graft.ops.Stage.resolve(spark, s"$path/lists")
     val (scale, _) = loadIvfMeta(spark, path)
     val served = serveIvfLists(spark, queries, path,
-      spark.read.parquet(listsDir), tomb, fetch, nProbe, idCol, vecCol)
+      Tables.parquet(spark, listsDir), tomb, fetch, nProbe, idCol, vecCol)
     val qL = queries.select(col(idCol).as("query_id"),
       col(labelCol).as("query_label"))
     val nL = labels.select(col(idCol).as("neighbor_id"),
@@ -340,7 +341,7 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"), col("cos_sim"))
     val cvec = if (scale > 0) dequantize(col("code"), scale)
       else col("code")
-    val vecs = spark.read.parquet(listsDir)
+    val vecs = Tables.parquet(spark, listsDir)
       .select(col("vec_id").as("neighbor_id"), cvec.as("vec"))
       .withColumn("nrm", norm(col("vec")))
     mmrGreedy(vecs.join(broadcast(cross), Seq("neighbor_id")), k, lam)
@@ -851,11 +852,11 @@ object Similarity {
     * Only m×nCent×subDim doubles reach the driver. */
   private def loadPqMeta(spark: org.apache.spark.sql.SparkSession,
                          path: String): (Int, Array[Array[Array[Double]]]) = {
-    val meta = spark.read.parquet(
+    val meta = Tables.parquet(spark,
       graft.ops.Stage.resolve(spark, s"$path/meta")).head()
     val m = meta.getAs[Int]("m"); val nCent = meta.getAs[Int]("n_cent")
     val cb = Array.fill(m, nCent)(Array.empty[Double])
-    spark.read.parquet(graft.ops.Stage.resolve(spark, s"$path/codebooks"))
+    Tables.parquet(spark, graft.ops.Stage.resolve(spark, s"$path/codebooks"))
       .collect()
       .foreach(r => cb(r.getInt(0))(r.getInt(1)) =
         r.getSeq[Double](2).toArray)
@@ -916,7 +917,7 @@ object Similarity {
         PqIndex.components(spark, path))
       val del = ids.select(col(idCol).as("vec_id")).distinct()
       graft.ops.Stage.publishRewrite(spark, s"$path/codes",
-        spark.read.parquet(graft.ops.Stage.resolve(spark, s"$path/codes"))
+        Tables.parquet(spark, graft.ops.Stage.resolve(spark, s"$path/codes"))
           .join(del, Seq("vec_id"), "left_anti"))
     }
 
@@ -986,7 +987,7 @@ object Similarity {
         PqIndex.components(spark, path))
       val n = graft.ops.Stage.compactionPartitions(spark, s"$path/codes")
       graft.ops.Stage.publishRewrite(spark, s"$path/codes",
-        spark.read.parquet(graft.ops.Stage.resolve(spark, s"$path/codes"))
+        Tables.parquet(spark, graft.ops.Stage.resolve(spark, s"$path/codes"))
           .repartition(n))
       graft.ops.Stage.compactLedger(spark, path)
     }
@@ -1081,7 +1082,7 @@ object Similarity {
                              path: String, sigs: DataFrame): Int =
     sigs.select(col("dim")).limit(1).collect().headOption
       .map(_.getInt(0))
-      .getOrElse(spark.read.parquet(
+      .getOrElse(Tables.parquet(spark,
         graft.ops.Stage.resolve(spark, s"$path/meta")).head().getAs[Int]("dim"))
 
   /** Append new vectors to a persisted [[saveBinaryIndex]] index:
@@ -1095,7 +1096,7 @@ object Similarity {
                           vecCol: String = "embedding"): Unit =
     graft.ops.Stage.withWriterLease(newVecs.sparkSession, path) {
       val spark = newVecs.sparkSession
-      val dim = spark.read.parquet(
+      val dim = Tables.parquet(spark,
         graft.ops.Stage.resolve(spark, s"$path/meta")).head().getAs[Int]("dim")
       binarySigRows(newVecs, dim, idCol, vecCol)
         .write.mode("append")
@@ -1117,7 +1118,7 @@ object Similarity {
     graft.ops.Stage.appendExactlyOnce(spark, path, batchId,
       BinaryIndex.components(spark, path)) {
       staging =>
-        val dim = spark.read.parquet(
+        val dim = Tables.parquet(spark,
           graft.ops.Stage.resolve(spark, s"$path/meta")).head()
           .getAs[Int]("dim")
         binarySigRows(newVecs, dim, idCol, vecCol)
@@ -1137,7 +1138,7 @@ object Similarity {
         BinaryIndex.components(spark, path))
       val del = ids.select(col(idCol).as("vec_id")).distinct()
       graft.ops.Stage.publishRewrite(spark, s"$path/sig",
-        spark.read.parquet(graft.ops.Stage.resolve(spark, s"$path/sig"))
+        Tables.parquet(spark, graft.ops.Stage.resolve(spark, s"$path/sig"))
           .join(del, Seq("vec_id"), "left_anti"))
     }
 
@@ -1188,7 +1189,7 @@ object Similarity {
         BinaryIndex.components(spark, path))
       val n = graft.ops.Stage.compactionPartitions(spark, s"$path/sig")
       graft.ops.Stage.publishRewrite(spark, s"$path/sig",
-        spark.read.parquet(graft.ops.Stage.resolve(spark, s"$path/sig"))
+        Tables.parquet(spark, graft.ops.Stage.resolve(spark, s"$path/sig"))
           .repartition(n))
       graft.ops.Stage.compactLedger(spark, path)
     }
@@ -1918,9 +1919,9 @@ object Similarity {
     */
   private def loadIvfMeta(spark: org.apache.spark.sql.SparkSession,
                           path: String): (Double, Array[Array[Double]]) = {
-    val meta = spark.read.parquet(
+    val meta = Tables.parquet(spark,
       graft.ops.Stage.resolve(spark, s"$path/meta")).head()
-    val cents = spark.read.parquet(
+    val cents = Tables.parquet(spark,
         graft.ops.Stage.resolve(spark, s"$path/centroids")).orderBy("centroid")
       .select("vec").collect().map(_.getSeq[Double](0).toArray)
     (meta.getAs[Double]("quant_scale"), cents)
@@ -2023,7 +2024,7 @@ object Similarity {
       IvfIndex.components(spark, path))
     val del = ids.select(col(idCol).as("vec_id")).distinct()
     graft.ops.Stage.publishRewrite(spark, s"$path/lists") { versionDir =>
-      spark.read.parquet(graft.ops.Stage.resolve(spark, s"$path/lists"))
+      Tables.parquet(spark, graft.ops.Stage.resolve(spark, s"$path/lists"))
         .join(del, Seq("vec_id"), "left_anti")
         .write.mode("overwrite").partitionBy("centroid").parquet(versionDir)
     }
@@ -2085,7 +2086,7 @@ object Similarity {
     // consumed tombstone files reset (keys appended mid-fold stay)
     val snap = graft.ops.Stage.tombstoneSnapshot(spark, path)
     publishRewrite(spark, s"$path/lists") { versionDir =>
-      minusTombstoned(spark.read.parquet(resolve(spark, s"$path/lists")),
+      minusTombstoned(Tables.parquet(spark, resolve(spark, s"$path/lists")),
         snap.map(_._1))
         .repartition(n, col("centroid"))
         .write.mode("overwrite").partitionBy("centroid").parquet(versionDir)

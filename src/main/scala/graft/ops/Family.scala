@@ -109,8 +109,8 @@ final case class Family(name: String,
       component: String): DataFrame = {
     val dir = s"$path/$component"
     at match {
-      case Family.Live => spark.read.parquet(Stage.resolve(spark, dir))
-      case Family.Previous => spark.read.parquet(
+      case Family.Live => Tables.parquet(spark, Stage.resolve(spark, dir))
+      case Family.Previous => Tables.parquet(spark,
         Stage.resolvePrevious(spark, dir).getOrElse(
           throw new IllegalStateException(s"$dir has no previous version " +
             s"to serve — $name previous-serving needs at least two " +

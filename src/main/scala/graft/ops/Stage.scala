@@ -498,7 +498,7 @@ object Stage {
       if (files.isEmpty) throw new IllegalStateException(
         s"snapshot '$name' of $dir pinned no data files — the component " +
           "was empty at pin time; nothing can serve from it")
-      spark.read.option("basePath", base).parquet(files: _*)
+      Tables.parquetFiles(spark, base, files)
     }
 
   /** ROLL BACK: make a named snapshot's pinned file set the LIVE state
@@ -1353,7 +1353,7 @@ object Stage {
       val consumed = consumedNames(fs, p)
       val fl = files(p).filterNot(f => consumed.contains(f.getName))
       if (fl.isEmpty) None
-      else Some((spark.read.parquet(fl.map(_.toString): _*).distinct(), fl))
+      else Some((Tables.parquet(spark, fl.map(_.toString): _*).distinct(), fl))
     }
   }
 

@@ -1,7 +1,12 @@
 package graft.ops
 
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Source registry.
   *
@@ -16,25 +21,20 @@ import org.apache.spark.sql.functions._
   * the scan, and prunes partitions. A JDBC source should always set
   * `partitionColumn`/`numPartitions` (the reference's single-partition JDBC
   * scans are its main scalability bug — SURVEY.md §3).
+  *
+  * Schema on the driver: every parquet read in `src/main` goes through
+  * [[parquet]], which reads the one footer Spark's inference would read
+  * on the DRIVER and hands Spark the result as the read schema. A plain
+  * `spark.read.parquet` starts a one-task Spark job for that footer —
+  * per table, per index component, per report. The schema is Spark's
+  * own (same file, same converter, same session flags); anything the
+  * helper cannot match exactly falls back to Spark's inference.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Read one testdata table from a scale-factor directory.
-    *
-    * `events.ts` has shipped in two encodings across driver testdata
-    * generations: parquet TIMESTAMP(NANOS) — which Spark 4 rejects unless
-    * `spark.sql.legacy.parquet.nanosAsLong=true` turns it into a LONG —
-    * and parquet timestamp[us] (isAdjustedToUTC=false, read as
-    * TIMESTAMP_NTZ). Branch on the footer's actual type and normalize both
-    * to a session-TZ TimestampType column, keeping the declared schema
-    * stable for downstream operators. Entry points set the session TZ to
-    * UTC, so the NTZ→LTZ cast is value-preserving. Mutating session conf
-    * per read call would surprise concurrent users of a shared session,
-    * hence the build-time nanosAsLong requirement documented here.
-    */
   /** Filesystem-safe tag from a dataset directory's name — the suffix the
     * persisted-index fixture paths use so concurrent scale-factor runs
     * don't collide. Sanitized in ONE place: a dataset dir with unusual
@@ -95,9 +95,22 @@ object Tables {
       df.checkpoint()
     else df.localCheckpoint()
 
+  /** Read one testdata table from a scale-factor directory.
+    *
+    * `events.ts` has shipped in two encodings across testdata
+    * generations: parquet TIMESTAMP(NANOS) — which Spark 4 rejects unless
+    * `spark.sql.legacy.parquet.nanosAsLong=true` turns it into a LONG —
+    * and parquet timestamp[us] (isAdjustedToUTC=false, read as
+    * TIMESTAMP_NTZ). Branch on the footer's actual type and normalize both
+    * to a session-TZ TimestampType column, keeping the declared schema
+    * stable for downstream operators. Entry points set the session TZ to
+    * UTC, so the NTZ→LTZ cast is value-preserving. Mutating session conf
+    * per read call would surprise concurrent users of a shared session,
+    * hence the build-time nanosAsLong requirement documented here.
+    */
   def t(spark: SparkSession, sfDir: String, name: String): DataFrame =
     if (name == "events") {
-      val raw = spark.read.parquet(s"$sfDir/$name.parquet")
+      val raw = parquet(spark, s"$sfDir/$name.parquet")
       val ts = raw.schema("ts").dataType match {
         // integer div: ns → µs (double division loses precision at 1e18)
         case org.apache.spark.sql.types.LongType =>
@@ -109,8 +122,112 @@ object Tables {
       raw.withColumn("ts", ts)
         .select("event_id", "ts", "user_id", "event_type", "value", "props")
     } else {
-      spark.read.parquet(s"$sfDir/$name.parquet")
+      parquet(spark, s"$sfDir/$name.parquet")
     }
+
+  /** `spark.read.parquet` of `paths` with the schema read on the driver:
+    * the same DataFrame, schema, plan and errors, without the one-task
+    * inference job Spark starts to read a footer. The ONE parquet read
+    * path of `src/main` (a lint test keeps it so); readers that already
+    * pass `.schema(...)` need no inference and stay as they are.
+    *
+    * The footer read is the one Spark's inference would read — the first
+    * data file by full path string among the files the read lists:
+    *  - a file path is itself; a directory's own files, skipping the
+    *    names Spark's listing skips (`_x`, `.x`, `x._COPYING_`), so the
+    *    version directories beside a plain-layout root stay invisible;
+    *  - a directory of Hive partitions (`list=3/`) is descended in path
+    *    order until the first data file, listing no more directories than
+    *    that takes;
+    *  - globs expand as Spark expands them.
+    * Spark's inference runs instead (the helper returns exactly
+    * `spark.read.parquet`) when no data file is found, a path is missing,
+    * a listed directory holds a `_metadata`/`_common_metadata` summary,
+    * `spark.sql.parquet.mergeSchema` is on, a data column shares a
+    * partition column's name, or the layout is one this walk does not
+    * cover (files beside partition directories; several paths whose
+    * least is not a data file) — so every error and exception type is
+    * Spark's own.
+    */
+  def parquet(spark: SparkSession, paths: String*): DataFrame =
+    read(spark, None, paths)
+
+  /** [[parquet]] of a pinned FILE list, Hive-partition columns inferred
+    * relative to `basePath` (Spark's `basePath` read option). */
+  def parquetFiles(spark: SparkSession, basePath: String,
+                   files: Seq[String]): DataFrame =
+    read(spark, Some(basePath), files)
+
+  /** The schema of [[parquet]]`(spark, paths: _*)` — the schema-only
+    * probe (streaming sources, encoding checks) that starts no job. */
+  def parquetSchema(spark: SparkSession, paths: String*): StructType =
+    parquet(spark, paths: _*).schema
+
+  private def read(spark: SparkSession, basePath: Option[String],
+                   paths: Seq[String]): DataFrame = {
+    val reader = basePath.fold(spark.read)(spark.read.option("basePath", _))
+    footerSchema(spark, basePath, paths)
+      .fold(reader)(reader.schema).parquet(paths: _*)
+  }
+
+  /** The data schema Spark's inference would give `paths`, read from one
+    * footer on the driver; None where Spark must infer it itself. */
+  private def footerSchema(spark: SparkSession, basePath: Option[String],
+                           paths: Seq[String]): Option[StructType] =
+    if (paths.isEmpty || GraftParquetBridge.mergesSchemas(spark)) None
+    else try {
+      val conf = GraftParquetBridge.hadoopConf(spark)
+      val roots = paths.flatMap { p =>
+        val path = new Path(p)
+        val fs = path.getFileSystem(conf)
+        val q = fs.makeQualified(path)
+        if (!GraftParquetBridge.isGlob(q)) Seq(fs -> q)
+        else Option(fs.globStatus(q)).toSeq.flatten.map(fs -> _.getPath)
+      }.sortBy(_._2.toString)
+      roots.headOption.flatMap { case (fs, first) =>
+        // several roots (pinned files): the least path is the answer when
+        // it is a data file itself — a directory's files sort after it
+        val file =
+          if (roots.size == 1 && basePath.isEmpty) firstDataFile(fs, first, top = true)
+          else Some(fs.getFileStatus(first)).filter(s =>
+            s.isFile && !s.getPath.getName.startsWith("_") &&
+              !GraftParquetBridge.hiddenName(s.getPath.getName))
+        file.flatMap { f =>
+          // partition columns are the `k=v` directories below the base
+          val base = basePath.map(b => fs.makeQualified(new Path(b))).getOrElse(
+            if (f.getPath == first) f.getPath.getParent else first)
+          val partCols = Iterator.iterate(f.getPath.getParent)(_.getParent)
+            .takeWhile(d => d != null && d != base).map(_.getName)
+            .filter(_.contains("=")).map(_.takeWhile(_ != '=')).toSeq
+          // Spark keeps a data column that is also a partition column at
+          // its data position; a given schema would move it last
+          Some(GraftParquetBridge.footerSchema(spark, conf, f)).filterNot(
+            _.fieldNames.exists(n => partCols.exists(_.equalsIgnoreCase(n))))
+        }
+      }
+    } catch { case NonFatal(_) => None }
+
+  /** The least data file by full path string that Spark's listing of
+    * the root `dir` includes (see [[parquet]]); None when there is none
+    * or the layout needs Spark's own inference. Below the `top` root,
+    * the walk is inside a partitioned root, where every file is listed. */
+  private def firstDataFile(fs: FileSystem, dir: Path, top: Boolean): Option[FileStatus] = {
+    val kids = fs.listStatus(dir).toSeq.filterNot(s =>
+      GraftParquetBridge.hiddenName(s.getPath.getName))
+    def partition(s: FileStatus) = s.isDirectory && s.getPath.getName.contains("=")
+    def firstIn(entries: Seq[FileStatus]) = entries
+      .sortBy(s => s.getPath.toString + (if (s.isDirectory) "/" else ""))
+      .iterator.map(s => if (s.isFile) Some(s) else firstDataFile(fs, s.getPath, top = false))
+      .collectFirst { case Some(f) => f }
+    val (files, dirs) = kids.partition(_.isFile)
+    // `_metadata` / `_common_metadata` summaries take precedence in Spark
+    if (files.exists(_.getPath.getName.startsWith("_"))) None
+    else if (!top) firstIn(kids)
+    // a file root lists as itself; a plain root reads only its own files
+    else if (files.nonEmpty) if (dirs.exists(partition)) None else firstIn(files)
+    else if (dirs.nonEmpty && dirs.forall(partition)) firstIn(dirs)
+    else None
+  }
 
   /** The NTZ→session-TZ timestamp cast is only VALUE-preserving when the
     * session TZ is UTC; on any other setting every event silently shifts.

@@ -294,7 +294,7 @@ object ParityQueries {
         .select("l_orderkey", "l_partkey", "l_quantity", "l_extendedprice")
       val path = s"target/graft-zorder-${graft.ops.Tables.sfTag(d)}"
       graft.ops.Layout.zorderWrite(li, "l_orderkey", "l_partkey", path)
-      s.read.parquet(path)
+      Tables.parquet(s, path)
         .where(col("l_partkey") >= 100 && col("l_partkey") < 180 &&
           col("l_orderkey") >= 2000 && col("l_orderkey") < 9000)
         .orderBy("l_orderkey", "l_partkey", "l_quantity", "l_extendedprice")
@@ -309,7 +309,7 @@ object ParityQueries {
       val path = s"target/graft-zorder3-${graft.ops.Tables.sfTag(d)}"
       graft.ops.Layout.zorderWriteN(li,
         Seq("l_orderkey", "l_partkey", "l_suppkey"), path)
-      s.read.parquet(path)
+      Tables.parquet(s, path)
         .where(col("l_suppkey") >= 20 && col("l_suppkey") < 40 &&
           col("l_orderkey") >= 2000 && col("l_orderkey") < 9000)
         .orderBy("l_orderkey", "l_partkey", "l_suppkey", "l_quantity")
@@ -323,7 +323,7 @@ object ParityQueries {
         .select("l_orderkey", "l_partkey", "l_quantity", "l_extendedprice")
       val path = s"target/graft-hilbert-${graft.ops.Tables.sfTag(d)}"
       graft.ops.Layout.hilbertWrite(li, "l_orderkey", "l_partkey", path)
-      s.read.parquet(path)
+      Tables.parquet(s, path)
         .where(col("l_partkey") >= 100 && col("l_partkey") < 180 &&
           col("l_orderkey") >= 2000 && col("l_orderkey") < 9000)
         .orderBy("l_orderkey", "l_partkey", "l_quantity", "l_extendedprice")

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.ext.Search
-import graft.ops.{Family, Num}
+import graft.ops.{Family, Num, Tables}
 import graft.ops.Tables.{sfTag, t}
 import org.apache.spark.sql.functions._
 
@@ -414,7 +414,7 @@ object SearchQueries {
       val path = s"target/graft-part-docs-$sf"
       t(s, d, "documents").write.mode("overwrite")
         .partitionBy("lang").parquet(path)
-      s.read.parquet(path).where(col("lang") === "en")
+      Tables.parquet(s, path).where(col("lang") === "en")
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
         .orderBy("source")

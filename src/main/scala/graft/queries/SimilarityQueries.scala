@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.ext.Similarity
-import graft.ops.Family
+import graft.ops.{Family, Tables}
 import graft.ops.Tables.{sfTag, t}
 import org.apache.spark.sql.functions._
 
@@ -473,7 +473,7 @@ object SimilarityQueries {
         codebooksIn = Similarity.pqCodebooks(emb, m = 8, nCent = 16,
           dim = 64))
       val vecs = s.readStream
-        .schema(s.read.parquet(s"$d/embeddings.parquet").schema)
+        .schema(Tables.parquetSchema(s, s"$d/embeddings.parquet"))
         .parquet(s"$d/embeddings.*")
       val q = vecs.writeStream
         .option("checkpointLocation", s"$path.ckpt")
@@ -565,7 +565,7 @@ object SimilarityQueries {
       }
       Similarity.saveBinaryIndex(emb.where(lit(false)), path, dim = 64)
       val vecs = s.readStream
-        .schema(s.read.parquet(s"$d/embeddings.parquet").schema)
+        .schema(Tables.parquetSchema(s, s"$d/embeddings.parquet"))
         .parquet(s"$d/embeddings.*")
       val q = vecs.writeStream
         .option("checkpointLocation", s"$path.ckpt")
@@ -696,7 +696,7 @@ object SimilarityQueries {
         dim = 64, quantScale = 200.0,
         centroidsIn = Similarity.sampleCentroids(deq, 16))
       val vecs = s.readStream
-        .schema(s.read.parquet(s"$d/embeddings.parquet").schema)
+        .schema(Tables.parquetSchema(s, s"$d/embeddings.parquet"))
         .parquet(s"$d/embeddings.*")
       val q = vecs.writeStream
         .option("checkpointLocation", s"$path.ckpt")

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.ext.{Corpus, TextAnalysis}
+import graft.ops.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -238,7 +239,7 @@ object DocumentStreams {
                               queryName: String = "graft_stream_embdrift")
       : DataFrame = {
     val vecs = spark.readStream
-      .schema(spark.read.parquet(s"$sfDir/embeddings.parquet").schema)
+      .schema(Tables.parquetSchema(spark, s"$sfDir/embeddings.parquet"))
       .parquet(s"$sfDir/embeddings.*")
     val hist = graft.ext.Similarity.centroidHistogram(
       vecs.where(newFilter), centroidsIn, "n_b")
@@ -275,7 +276,7 @@ object DocumentStreams {
                             queryName: String = "graft_stream_decontam")
       : DataFrame = {
     val vecs = spark.readStream
-      .schema(spark.read.parquet(s"$sfDir/embeddings.parquet").schema)
+      .schema(Tables.parquetSchema(spark, s"$sfDir/embeddings.parquet"))
       .parquet(s"$sfDir/embeddings.*")
     val scored = graft.ext.Similarity.semanticDecontamScores(
       vecs.where(newFilter), probe, threshold)

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.ops.Tables
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -40,7 +41,7 @@ object EventStreams {
     * long-nanos contract of [[rawSchema]] — the encoding files WE write.
     */
   private[graft] def tsTypeOnDisk(spark: SparkSession, path: String): DataType =
-    try spark.read.parquet(path).schema("ts").dataType
+    try Tables.parquetSchema(spark, path)("ts").dataType
     catch {
       case _: org.apache.spark.sql.AnalysisException => LongType
     }

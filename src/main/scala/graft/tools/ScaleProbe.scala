@@ -1,6 +1,7 @@
 package graft.tools
 
 import graft.ext.Dedup
+import graft.ops.Tables
 import org.apache.spark.sql.functions._
 
 /** Scale probe (diagnostic, not driver-run): replicate the sf0.1 documents
@@ -31,7 +32,7 @@ object ScaleProbe {
     def sel(section: String): Boolean =
       sectionsOnly.forall(_.exists(section.contains))
 
-    val base = spark.read.parquet(s"$sfDir/documents.parquet")
+    val base = Tables.parquet(spark, s"$sfDir/documents.parquet")
       .select("doc_id", "text")
     def replicated(k: Int) =
       (0 until k).map(i => base.select(
@@ -198,7 +199,7 @@ object ScaleProbe {
     // map-only HOF fold — wall should be LINEAR in train rows (no
     // shuffle to go super-linear, no pair relation to go quadratic)
     if (sel("semdecon")) for (k <- Seq(1, n)) {
-      val embBase = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      val embBase = Tables.parquet(spark, s"$sfDir/embeddings.parquet")
         .select("vec_id", "embedding")
       val probeSet = embBase.where(pmod(col("vec_id"), lit(20)) === 7)
         .localCheckpoint()
@@ -484,7 +485,7 @@ object ScaleProbe {
     //    ~linearly and stragglers must stay near the mean (AQE-split
     //    checkpointed rounds, no global collect anywhere).
     if (sel("graph")) {
-      val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
+      val li = Tables.parquet(spark, s"$sfDir/lineitem.parquet")
         .select("l_orderkey", "l_partkey", "l_quantity")
       def liRep(k: Int, disjoint: Boolean) =
         (0 until k).map(i => li.select(
@@ -646,7 +647,7 @@ object ScaleProbe {
     // partition carries the composite and the 10× step scaled by luck.
     if (sel("sf1lifecycle")) {
       val sf1 = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "/tmp/graft_sf1")
-      val docs1 = spark.read.parquet(s"$sf1/documents.parquet")
+      val docs1 = Tables.parquet(spark, s"$sf1/documents.parquet")
         .select("doc_id", "text").localCheckpoint()
       spark.sparkContext.addSparkListener(listener)
       def timed1(op: String)(f: => Any): Unit = {
@@ -720,7 +721,7 @@ object ScaleProbe {
     // first operator to hit the wall.
     if (sel("sf3memory")) {
       val sf1 = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "/tmp/graft_sf1")
-      val base1 = spark.read.parquet(s"$sf1/documents.parquet")
+      val base1 = Tables.parquet(spark, s"$sf1/documents.parquet")
         .select("doc_id", "text")
       val docs3 = (0 until 3).map { j =>
         val shifted = base1.select(

@@ -17,6 +17,18 @@ class PlanAuditSpec extends AnyFunSuite {
     df.queryExecution.executedPlan.toString
   }
 
+  test("etl_reports queries build their DataFrames without a Spark job") {
+    // every schema is read on the driver (graft.ops.Tables.parquet), so
+    // building a report starts no job; only its sink may run any
+    val names = ((1 to 13) ++ (15 to 19)).map(i => f"q$i%02d_").map(p =>
+      SparkEntry.queries.keys.find(_.startsWith(p)).getOrElse(fail(s"no query $p")))
+    assert(names.size == 18)
+    names.foreach { q =>
+      val (_, jobs) = JobCount(spark)(SparkEntry.queries(q)(spark, sf))
+      assert(jobs == 0, s"$q started $jobs Spark job(s) while building its DataFrame")
+    }
+  }
+
   test("q01: filter and projection are pushed into the parquet scan") {
     val plan = planOf("q01_scan_filter_project")
     assert(plan.contains("PushedFilters: ["), plan.take(2000))
