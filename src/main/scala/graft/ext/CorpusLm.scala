@@ -459,8 +459,8 @@ trait CorpusLm extends CorpusTokenizers {
     * Prefix counts and the vocab size are DERIVED at load ([[loadLm]]) —
     * c(p) = Σ_w c(p,w) exactly as training derives it, V = tokens with a
     * positive summed count — so growing or shrinking the model never
-    * read-modify-writes an aggregate row. [[compactLm]] folds the delta
-    * trail on the maintenance schedule.
+    * read-modify-writes an aggregate row. [[Lm]]'s `compact` folds the
+    * delta trail on the maintenance schedule.
     *
     * TIME TRAVEL: the version-flip previous-serve the text and IVF
     * indexes offer (`at = Family.Previous` on `bm25TopKIndexed` /
@@ -468,7 +468,7 @@ trait CorpusLm extends CorpusTokenizers {
     * ([[lmPerplexityIndexed]] rejects it). Those families maintain by
     * REWRITE (each op publishes a full new version, so "the state the op
     * superseded" is a directory that already exists); the LM maintains
-    * by DELTA — an append/delete lands rows, and only [[compactLm]]
+    * by DELTA — an append/delete lands rows, and only a compaction
     * publishes a version, so the pre-op state is not a version but "the
     * trail minus the op's rows". Reverting an op here is the delta
     * design's native move instead: publish the op's deltas negated
@@ -562,85 +562,67 @@ trait CorpusLm extends CorpusTokenizers {
     * every model statistic is a count, so ingest is exact addition — the
     * batch's bigram/token counts land as new delta rows, batch-sized work
     * only. Scoring afterwards equals a fresh train over the union
-    * (CorpusSpec pins it).
+    * (CorpusSpec pins it). `batchId = Some(id)` is the EXACTLY-ONCE
+    * stream path: a replayed plain append would double the batch's counts
+    * and CHANGE every later score — counts are the model, so the LM is as
+    * exposed to at-least-once replay as the IVF lists. Otherwise the
+    * deltas publish under `add_<opId>` (a fresh id when `opId` is empty).
     */
   def appendToLm(batch: DataFrame, path: String, textCol: String,
-                 idCol: String, opId: String): Unit = {
-    val (cbD, vD) = lmDeltas(batch, textCol, idCol, sign = 1)
-    stageLmDeltas(batch.sparkSession, path, s"add_$opId", cbD, vD)
-  }
-
-  /** [[appendToLm]] with EXACTLY-ONCE semantics for streaming ingest, via
-    * the shared ledger protocol ([[graft.ops.Stage.appendExactlyOnce]]).
-    * A replayed plain append would double the batch's counts and CHANGE
-    * every later score — counts are the model, so the LM is as exposed to
-    * at-least-once replay as the IVF lists. Batch ids are only meaningful
-    * relative to one durable checkpoint lineage.
-    */
-  def appendToLmExactlyOnce(batch: DataFrame, path: String, textCol: String,
-                            idCol: String, batchId: Long): Unit = {
-    val (cbD, vD) = lmDeltas(batch, textCol, idCol, sign = 1)
-    graft.ops.Stage.appendExactlyOnce(batch.sparkSession, path, batchId,
-      Lm.components(batch.sparkSession, path))(writeLmDeltas(cbD, vD))
-  }
+                 idCol: String, opId: String = "",
+                 batchId: Option[Long] = None): Unit =
+    publishLmDeltas(batch, path, textCol, idCol, sign = 1, "add", opId,
+      batchId)
 
   /** Delete documents from a [[saveLm]] model — exact subtraction, now as
     * NEGATIVE delta rows (their text must be supplied; the contract is
     * `deleted` ⊆ the trained corpus, each document passed exactly once).
     * BATCH-sized work: where the earlier design anti-join-rewrote every
     * count table per delete (index-sized — the manifest's pre-tombstone
-    * problem), the delta append defers the physical fold to [[compactLm]]
-    * while [[loadLm]]'s positive-sum fold makes scoring reflect the
-    * deletion immediately. Scoring afterwards is bit-identical to a fresh
-    * train over the survivors (the q107 oracle and CorpusSpec pin it):
-    * counts sum to exactly the survivor counts, zeroed bigrams drop from
-    * the model, V counts only tokens with surviving occurrences.
+    * problem), the delta append defers the physical fold to [[Lm]]'s
+    * `compact` while [[loadLm]]'s positive-sum fold makes scoring reflect
+    * the deletion immediately. Scoring afterwards is bit-identical to a
+    * fresh train over the survivors (the q107 oracle and CorpusSpec pin
+    * it): counts sum to exactly the survivor counts, zeroed bigrams drop
+    * from the model, V counts only tokens with surviving occurrences.
     */
   def deleteFromLm(deleted: DataFrame, path: String, textCol: String,
-                   idCol: String, opId: String): Unit = {
-    val (cbD, vD) = lmDeltas(deleted, textCol, idCol, sign = -1)
-    stageLmDeltas(deleted.sparkSession, path, s"del_$opId", cbD, vD)
-  }
+                   idCol: String, opId: String): Unit =
+    publishLmDeltas(deleted, path, textCol, idCol, sign = -1, "del", opId,
+      None)
 
   /** One atomic, retry-idempotent publish of a paired (bigrams, vocab)
-    * delta — [[graft.ops.Stage.publishOnce]] under the caller's op id.
-    * The counts ARE the model, so the two tables must move together: a
-    * crash between two plain appends left vocab counting tokens whose
-    * bigrams were already subtracted (V too high, every unseen-bigram
-    * score off), and a retry would double-apply the half that landed.
-    * Staged + marker-protected, a retry with the same op id republishes
-    * exactly once or no-ops. */
-  private def stageLmDeltas(spark: org.apache.spark.sql.SparkSession,
-                            path: String, opId: String,
-                            cbD: DataFrame, vD: DataFrame): Unit =
-    graft.ops.Stage.publishOnce(spark, path, opId,
-      Lm.components(spark, path))(writeLmDeltas(cbD, vD))
-
-  /** The ONE staged layout for a paired (bigrams, vocab) delta, shared
-    * by the streaming and maintenance publish paths so their on-disk
-    * formats can never diverge. */
-  private def writeLmDeltas(cbD: DataFrame, vD: DataFrame)
-                           (staging: String): Unit = {
-    cbD.write.mode("overwrite").parquet(s"$staging/bigrams")
-    vD.write.mode("overwrite").parquet(s"$staging/vocab")
+    * delta through [[Lm]]'s `append` — under `<kind>_<opId>` (a caller's
+    * retry-stable id) or the stream's batch id. The counts ARE the
+    * model, so the two tables must move together: a crash between two
+    * plain appends left vocab counting tokens whose bigrams were already
+    * subtracted (V too high, every unseen-bigram score off), and a retry
+    * would double-apply the half that landed. Staged + marker-protected,
+    * a retry with the same id republishes exactly once or no-ops. */
+  private def publishLmDeltas(df: DataFrame, path: String, textCol: String,
+                              idCol: String, sign: Int, kind: String,
+                              opId: String, batchId: Option[Long]): Unit = {
+    val (cbD, vD) = lmDeltas(df, textCol, idCol, sign)
+    Lm.append(df.sparkSession, path, batchId,
+      if (opId.isEmpty) "" else s"${kind}_$opId") { (staging, _) =>
+      cbD.write.mode("overwrite").parquet(s"$staging/bigrams")
+      vD.write.mode("overwrite").parquet(s"$staging/vocab")
+    }
   }
 
-  /** Compact a [[saveLm]] model's delta trail: fold the additive rows to
-    * one positive row per key (dropping zeroed bigrams/tokens — folded
-    * deletes physically disappear here), coalesced to
+  /** [[Lm]]'s compaction fold over the delta trail: the additive rows
+    * fold to one positive row per key (dropping zeroed bigrams/tokens —
+    * folded deletes physically disappear here), coalesced to
     * [[graft.ops.Stage.compactionPartitions]] files. Scoring before and
     * after is identical ([[loadLm]] sums either representation to the
     * same counts); publish is atomic, so a crash mid-compaction leaves
-    * the delta trail serving.
+    * the delta trail serving. The LM keeps no tombstones (it deletes by
+    * negated delta), so `tomb` is always None.
     */
-  def compactLm(spark: org.apache.spark.sql.SparkSession,
-                path: String): Unit =
-      graft.ops.Stage.withWriterLease(spark, path) {
+  private def foldLm(spark: org.apache.spark.sql.SparkSession,
+                     path: String, comps: Seq[String],
+                     tomb: Option[DataFrame]): Unit = {
     import graft.ops.Stage.{compactionPartitions, publishRewrite, resolve}
-    // crashed-mid-publish batch leavings must not fold (see
-    // Stage.sweepUncommitted — the replay would double their counts)
-    graft.ops.Stage.sweepUncommitted(spark, path,
-      Lm.components(spark, path))
     val nB = compactionPartitions(spark, s"$path/bigrams")
     publishRewrite(spark, s"$path/bigrams",
       Tables.parquet(spark, resolve(spark, s"$path/bigrams"))
@@ -651,19 +633,6 @@ trait CorpusLm extends CorpusTokenizers {
       Tables.parquet(spark, resolve(spark, s"$path/vocab"))
         .groupBy("tok").agg(sum(col("c")).as("c"))
         .where(col("c") > 0).repartition(nV))
-    graft.ops.Stage.compactLedger(spark, path)
-  }
-
-  /** [[compactLm]] when the delta trail has fragmented past
-    * `maxFilesPerComponent` live files ([[graft.ops.Stage.shouldCompact]]);
-    * otherwise a metadata-only listing. The self-maintenance hook for
-    * streaming ingest sinks. Returns whether a compaction ran. */
-  def autoCompactLm(spark: org.apache.spark.sql.SparkSession, path: String,
-                    maxFilesPerComponent: Int = 64): Boolean = {
-    val go = graft.ops.Stage.shouldCompact(spark, path,
-      Lm.components(spark, path), maxFilesPerComponent)
-    if (go) compactLm(spark, path)
-    go
   }
 
   /** [[lmPerplexity]] scoring against a [[saveLm]] model on disk: the
@@ -744,10 +713,10 @@ trait CorpusLm extends CorpusTokenizers {
     * none — reverting ONE op is a negated-delta publish, see
     * [[saveLm]]); restore undoes a
     * whole campaign of deltas in one bytes-of-the-pin copy.
-    * [[compactLm]] REWRITES the components, after which the pin keeps
-    * serving the pre-compaction state it captured. */
+    * Its `compact` ([[foldLm]]) REWRITES the components, after which the
+    * pin keeps serving the pre-compaction state it captured. */
   val Lm: graft.ops.Family =
-    graft.ops.Family("lm", (_, _) => Seq("bigrams", "vocab"))
+    graft.ops.Family("lm", (_, _) => Seq("bigrams", "vocab"), foldLm)
 
   /** Sentence-level decontamination: per eval document, how many of its
     * distinct sentences (split on `[.!?]+` runs, trimmed, at least

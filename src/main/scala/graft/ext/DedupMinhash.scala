@@ -295,7 +295,7 @@ trait DedupMinhash extends DedupExactOps {
     }
   }
 
-  /** The ONE bands projection shared by build and both appends — the
+  /** The ONE bands projection shared by build and append — the
     * exploded LSH buckets PLUS the (k, bands) stamp columns probes derive
     * their banding parameters from. Stamping the parameters onto the data
     * itself (two RLE-compressed int constants per row) is what makes a
@@ -310,11 +310,11 @@ trait DedupMinhash extends DedupExactOps {
       .withColumn("k", lit(k)).withColumn("bands", lit(bands))
 
   /** The shared tokenize → exact-collapse → sign pipeline of
-    * [[saveMinhashManifest]] (overwrite) and [[appendToMinhashManifest]]
-    * (append), whose bands [[bandsRows]] derives. ONE implementation on
-    * purpose — build and append must stay join-compatible, and a schema
-    * or collapse change applied to only one of them would silently
-    * corrupt every probe of a mixed manifest.
+    * [[saveMinhashManifest]] and [[appendToMinhashManifest]], whose bands
+    * [[bandsRows]] derives. ONE implementation on purpose — build and
+    * append must stay join-compatible, and a schema or collapse change
+    * applied to only one of them would silently corrupt every probe of a
+    * mixed manifest.
     */
   private def manifestKeyed(df: DataFrame, textCol: String, idCol: String,
                             k: Int, bands: Int): DataFrame = {
@@ -328,30 +328,9 @@ trait DedupMinhash extends DedupExactOps {
     keyedSignatures(reps, k, bands, keepToks = true)
   }
 
-  private def writeManifestTables(df: DataFrame, textCol: String,
-                                  idCol: String, path: String, k: Int,
-                                  bands: Int, mode: String): Unit = {
-    val spark = df.sparkSession
-    val keyed = manifestKeyed(df, textCol, idCol, k, bands)
-    val docsPath = graft.ops.Stage.resolve(spark, s"$path/docs")
-    keyed.select(col("doc"), col("toks"), col("ntok"), col("keys"))
-      .write.mode(mode).parquet(docsPath)
-    // overwrite mode = a private staging dir (exactly-once appends) or a
-    // fresh target: the just-written docs parquet IS this batch's keyed
-    // rows, so bands derive from it instead of re-running the tokenize →
-    // collapse → sign lineage (saveMinhashManifest's recompute fix). In
-    // append mode the live docs dir holds OTHER batches' rows too, so the
-    // read-back would duplicate them into bands — keep the lineage there
-    // (plain appends are batch-sized by contract).
-    val bandsSource =
-      if (mode == "overwrite") Tables.parquet(spark, docsPath) else keyed
-    bandsRows(bandsSource, k, bands)
-      .write.mode(mode).parquet(graft.ops.Stage.resolve(spark, s"$path/bands"))
-  }
-
   /** Append a batch to a persisted [[saveMinhashManifest]] manifest
     * WITHOUT rebuilding: signatures/bands are computed for the batch
-    * against the manifest's own (k, bands) parameters and appended to
+    * against the manifest's own (k, bands) parameters and land in
     * `docs/` and `bands/`. The intended ingest loop is
     * [[incrementalNearDups]] → filter survivors → append THEM, so the
     * manifest stays near-dup-free by construction; appending an
@@ -360,43 +339,29 @@ trait DedupMinhash extends DedupExactOps {
     * identically — but wasted bytes). The batch is exact-collapsed
     * within itself, like the builder. The dedup analogue of
     * Similarity.appendToIvfIndex.
+    *
+    * Staged through [[MinhashManifest]]'s `append`, with (k, bands) read
+    * inside the stager under the root lease. The staged docs parquet IS
+    * this batch's keyed rows, so bands derive from it instead of
+    * re-running the tokenize → collapse → sign lineage (the
+    * saveMinhashManifest recompute fix). `batchId = Some(id)` is the
+    * exactly-once stream path: a replayed plain append would not change
+    * probe VERDICTS, but it would double the replayed batch's bytes in
+    * both tables and its rows in every later candidate join.
     */
   def appendToMinhashManifest(newDf: DataFrame, textCol: String,
-                              idCol: String, path: String): Unit =
-    // root lease, like the exactly-once variant: an unleased append
-    // racing a [[MinhashManifest]] pin could hand the pin a
-    // torn (partially committed) file list
-    graft.ops.Stage.withWriterLease(newDf.sparkSession, path) {
-      val meta = Tables.parquet(newDf.sparkSession,
-        graft.ops.Stage.resolve(newDf.sparkSession, s"$path/meta")).head()
-      writeManifestTables(newDf, textCol, idCol, path,
-        meta.getAs[Int]("k"), meta.getAs[Int]("bands"), "append")
-    }
-
-  /** [[appendToMinhashManifest]] with EXACTLY-ONCE semantics for
-    * streaming ingest, via the shared ledger protocol
-    * ([[graft.ops.Stage.appendExactlyOnce]]): the batch's docs/bands rows
-    * are staged against the manifest's own (k, bands) parameters, then
-    * published under deterministic `b<batchId>-*` names. A replayed plain
-    * append would not change probe VERDICTS (identical token sets band
-    * identically), but it doubles the replayed batch's bytes in both
-    * tables and its rows in every later candidate join — this keeps a
-    * crash-looping ingest from quietly bloating the manifest. Batch ids
-    * are only meaningful relative to one durable checkpoint lineage.
-    */
-  def appendToMinhashManifestExactlyOnce(newDf: DataFrame, textCol: String,
-                                         idCol: String, path: String,
-                                         batchId: Long): Unit = {
+                              idCol: String, path: String,
+                              batchId: Option[Long] = None): Unit = {
     val spark = newDf.sparkSession
-    // replay no-op BEFORE the meta head() job (appendExactlyOnce
-    // rechecks — this is the cheap fast exit)
-    if (graft.ops.Stage.alreadyPublished(spark, path, batchId)) return
-    val meta = Tables.parquet(spark,
-      graft.ops.Stage.resolve(spark, s"$path/meta")).head()
-    graft.ops.Stage.appendExactlyOnce(spark, path, batchId,
-      MinhashManifest.components(spark, path)) { staging =>
-      writeManifestTables(newDf, textCol, idCol, staging,
-        meta.getAs[Int]("k"), meta.getAs[Int]("bands"), "overwrite")
+    MinhashManifest.append(spark, path, batchId) { (staging, _) =>
+      val meta = Tables.parquet(spark,
+        graft.ops.Stage.resolve(spark, s"$path/meta")).head()
+      val k = meta.getAs[Int]("k"); val bands = meta.getAs[Int]("bands")
+      manifestKeyed(newDf, textCol, idCol, k, bands)
+        .select(col("doc"), col("toks"), col("ntok"), col("keys"))
+        .write.mode("overwrite").parquet(s"$staging/docs")
+      bandsRows(Tables.parquet(spark, s"$staging/docs"), k, bands)
+        .write.mode("overwrite").parquet(s"$staging/bands")
     }
   }
 
@@ -408,52 +373,27 @@ trait DedupMinhash extends DedupExactOps {
     * means operationally: this content must no longer be recognized as
     * "known" (new arrivals of it probe as fresh). Every manifest entry
     * whose token set equals a deleted document's token set is dropped
-    * from both tables via anti-join + atomic publish
-    * ([[graft.ops.Stage.publishRewrite]]; bands first — its removed-id
-    * relation derives from the still-live docs table). Probing afterwards
-    * equals probing a manifest built without that content (the q108
-    * oracle pins it).
+    * from both tables: the content's keys land as tombstones, then
+    * [[MinhashManifest]]'s `compact` folds them ([[foldManifest]]).
+    * Probing afterwards equals probing a manifest built without that
+    * content (the q108 oracle pins it).
     */
   def deleteContentFromMinhashManifest(deleted: DataFrame, textCol: String,
                                        path: String): Unit = {
-    val spark = deleted.sparkSession
-    graft.ops.Stage.withWriterLease(spark, path) {
-    // like every compacting rewrite: a crashed batch's uncommitted
-    // b<id>-* files must not fold (the replay would double them)
-    graft.ops.Stage.sweepUncommitted(spark, path,
-      MinhashManifest.components(spark, path))
-    // materialized: consumed by BOTH component rewrites below — without
-    // it each anti-join re-runs the deleted batch's tokenize pass
-    def ckpt(d: DataFrame): DataFrame = graft.ops.Tables.materialize(d)
-    val delKeys = ckpt(deleted.where(col(textCol).isNotNull)
-      .select(xxhash64(tokenHashes(col(textCol))).as("seth")).distinct())
-    import graft.ops.Stage.{publishRewrite, resolve}
-    val live = Tables.parquet(spark, resolve(spark, s"$path/docs"))
-      .withColumn("seth", xxhash64(col("toks")))
-    val removed = live.join(delKeys, Seq("seth")).select("doc")
-    // independent component rewrites run CONCURRENTLY (guide §2.6 — the
-    // compactTextIndex overlap note); `live` listed the docs files at
-    // construction and the docs flip keeps that version one grace cycle,
-    // so the bands thunk's anti-join input is stable either way
-    graft.ops.Par.run(
-      () => publishRewrite(spark, s"$path/bands",
-        Tables.parquet(spark, resolve(spark, s"$path/bands"))
-          .join(removed, Seq("doc"), "left_anti")),
-      () => publishRewrite(spark, s"$path/docs",
-        live.join(delKeys, Seq("seth"), "left_anti").drop("seth")))
-    }
+    tombstoneContentInMinhashManifest(deleted, textCol, path)
+    MinhashManifest.compact(deleted.sparkSession, path)
   }
 
   /** TOMBSTONE content in a persisted manifest — the batched alternative
-    * to [[deleteContentFromMinhashManifest]], whose anti-join rewrite
-    * pays manifest-sized work PER CALL: under a drip-feed of daily
+    * to [[deleteContentFromMinhashManifest]], whose immediate fold pays
+    * manifest-sized work PER CALL: under a drip-feed of daily
     * right-to-be-forgotten requests that is index-sized work every day.
     * This instead appends the deleted content's token-set keys to a
     * `tombstones/` table (batch-sized work), probes consult the pending
     * tombstones (the docs relation is anti-joined on the same key before
     * verification, so tombstoned content probes as fresh — candidates
     * from its still-present bands rows die in the verification join), and
-    * [[compactMinhashManifest]] folds the tombstones into a physical
+    * [[MinhashManifest]]'s `compact` folds the tombstones into a physical
     * delete on the compaction schedule. Verdict-equivalent to the
     * immediate delete at every point (DedupSpec pins it).
     *
@@ -480,37 +420,26 @@ trait DedupMinhash extends DedupExactOps {
       case None => docs
     }
 
-  /** Compact a [[saveMinhashManifest]] manifest after a run of per-batch
-    * appends: every ingest batch leaves its own `b<batchId>-*` (or plain
-    * part) files in `docs/` and `bands/`, so after thousands of batches a
-    * probe pays file-listing and tiny-row-group overhead proportional to
-    * batch count. One manifest-sized rewrite per table coalesces to
-    * [[graft.ops.Stage.compactionPartitions]] files (live bytes /
-    * `maxPartitionBytes`); bands repartitions on its join key
+  /** [[MinhashManifest]]'s compaction fold, after a run of per-batch
+    * appends: every ingest batch leaves its own `b<batchId>-*` (or
+    * `o<opId>-*`) files in `docs/` and `bands/`, so after thousands of
+    * batches a probe pays file-listing and tiny-row-group overhead
+    * proportional to batch count. One manifest-sized rewrite per table
+    * coalesces to [[graft.ops.Stage.compactionPartitions]] files (live
+    * bytes / `maxPartitionBytes`); bands repartitions on its join key
     * (band, band_key) so each bucket's rows co-locate in one file's row
     * groups. Pending [[tombstoneContentInMinhashManifest]] tombstones are
-    * FOLDED by the same pass — matching docs and their bands rows drop,
-    * then the tombstone table resets — so the drip-feed of deletes pays
-    * index-sized work once per compaction, not once per delete. Probe
-    * verdicts are unchanged at every point (DedupSpec pins it; bands
-    * rewrites first, like the immediate delete, so its removed-id
-    * relation derives from the still-live docs table). Publishes
-    * atomically ([[graft.ops.Stage.publishRewrite]]): a crash
-    * mid-compaction leaves a fragmented-but-correct manifest serving —
-    * tombstones stay pending until the final reset, so a crash between
-    * the table rewrites and the reset only re-folds an already-clean
-    * manifest next time.
+    * FOLDED by the same pass — matching docs and their bands rows drop —
+    * so the drip-feed of deletes pays index-sized work once per
+    * compaction, not once per delete. Probe verdicts are unchanged at
+    * every point (DedupSpec pins it): tombstones stay pending until the
+    * reset after the fold, so a crash between the table rewrites and the
+    * reset only re-folds an already-clean manifest next time.
     */
-  def compactMinhashManifest(spark: org.apache.spark.sql.SparkSession,
-                             path: String): Unit =
-      graft.ops.Stage.withWriterLease(spark, path) {
+  private def foldManifest(spark: org.apache.spark.sql.SparkSession,
+                           path: String, comps: Seq[String],
+                           tomb: Option[DataFrame]): Unit = {
     import graft.ops.Stage.{compactionPartitions, publishRewrite, resolve}
-    // crashed-mid-publish batch leavings must not fold (see
-    // Stage.sweepUncommitted — the replay would double them)
-    graft.ops.Stage.sweepUncommitted(spark, path,
-      MinhashManifest.components(spark, path))
-    val snap = graft.ops.Stage.tombstoneSnapshot(spark, path)
-    val tomb = snap.map(_._1)
     val removed = tomb match {
       case Some(t) => Tables.parquet(spark, resolve(spark, s"$path/docs"))
         .withColumn("seth", xxhash64(col("toks")))
@@ -522,7 +451,7 @@ trait DedupMinhash extends DedupExactOps {
         .select("doc").limit(0)
     }
     // independent component rewrites run CONCURRENTLY (guide §2.6 — the
-    // compactTextIndex overlap note). `removed`'s docs scan listed its
+    // text fold's overlap note). `removed`'s docs scan listed its
     // files at plan construction above, and the docs flip keeps that
     // version for one grace cycle, so the bands rewrite reads a stable
     // pre-fold docs snapshot whichever thunk publishes first.
@@ -536,22 +465,6 @@ trait DedupMinhash extends DedupExactOps {
       () => publishRewrite(spark, s"$path/docs",
         minusTombstoned(Tables.parquet(spark, resolve(spark, s"$path/docs")),
           tomb).repartition(nDocs)))
-    graft.ops.Stage.resetTombstones(spark, path,
-      snap.map(_._2).getOrElse(Nil))
-    graft.ops.Stage.compactLedger(spark, path)
-  }
-
-  /** [[compactMinhashManifest]] when either table has fragmented past
-    * `maxFilesPerComponent` live files ([[graft.ops.Stage.shouldCompact]]);
-    * otherwise a metadata-only listing. The self-maintenance hook for
-    * streaming ingest sinks. Returns whether a compaction ran. */
-  def autoCompactMinhashManifest(spark: org.apache.spark.sql.SparkSession,
-                                 path: String,
-                                 maxFilesPerComponent: Int = 64): Boolean = {
-    val go = graft.ops.Stage.shouldCompact(spark, path,
-      MinhashManifest.components(spark, path), maxFilesPerComponent)
-    if (go) compactMinhashManifest(spark, path)
-    go
   }
 
   /** Incremental NEAR-dup detection of an ingest batch against a persisted
@@ -629,8 +542,9 @@ trait DedupMinhash extends DedupExactOps {
       .orderBy(idCol)
   }
 
-  /** The manifest's lifecycle descriptor: named-snapshot pin, restore,
-    * drop, vacuum and health over the (docs, bands) pair. A pin outlives
+  /** The manifest's lifecycle descriptor: staged append, compaction
+    * ([[foldManifest]]), named-snapshot pin, restore, drop, vacuum and
+    * health over the (docs, bands) pair. A pin outlives
     * the one-cycle previous window and serves through
     * `incrementalNearDups(…, at = Pinned(name))`; restore is the undo for a
     * forget/ingest campaign [[incrementalNearDupsDiff]] flagged as wrong.
@@ -638,7 +552,8 @@ trait DedupMinhash extends DedupExactOps {
     * maintenance op (compaction, content delete) migrates a fresh
     * manifest. */
   val MinhashManifest: graft.ops.Family =
-    graft.ops.Family("minhash_manifest", (_, _) => Seq("docs", "bands"))
+    graft.ops.Family("minhash_manifest", (_, _) => Seq("docs", "bands"),
+      foldManifest)
 
   /** The probe batch's (ids, tokenized docs, exact classes, class
     * representatives), built once so the single probes and the DIFF

@@ -328,6 +328,10 @@ trait DedupSetSim extends DedupWinnow {
     sets.select(col("doc"), col("l"), explode(col("grams")).as("g"))
       .select(col("g"), col("doc"), col("l"))
 
+  /** The set-sim index's two components: every staged append, sweep and
+    * content delete moves both. */
+  private val SetSimComponents = Seq("sets", "postings")
+
   /** Append a batch to a [[saveSetSimIndex]] index (root lease; both
     * components gain the batch's rows — full postings are append-stable,
     * see the save scaladoc). The index's shingle width must match.
@@ -342,37 +346,26 @@ trait DedupSetSim extends DedupWinnow {
     * both components commit together or the next maintenance sweep reverts
     * both. Pass a stable `opId` to make a caller-side retry idempotent;
     * the default fresh id gives at-least-once (a retry re-appends whole,
-    * never torn). */
+    * never torn). `batchId = Some(id)` is the EXACTLY-ONCE stream path
+    * (the shared ledger protocol — a replayed batch would double its rows
+    * in both components and every later candidate join). */
   def appendToSetSimIndex(newDf: DataFrame, textCol: String, idCol: String,
                           path: String, shingle: Int = 3,
-                          opId: String = ""): Unit = {
+                          opId: String = "",
+                          batchId: Option[Long] = None): Unit = {
     val spark = newDf.sparkSession
-    val id = if (opId.nonEmpty) opId
-      else "ssappend" + java.util.UUID.randomUUID().toString.replace("-", "")
-    graft.ops.Stage.publishOnce(spark, path, id,
-      Seq("sets", "postings")) { staging =>
+    def stage(staging: String): Unit = {
       val sets = setSimSets(newDf, textCol, idCol, shingle)
       sets.write.mode("overwrite").parquet(s"$staging/sets")
       setSimPostings(sets).write.mode("overwrite")
         .parquet(s"$staging/postings")
     }
-  }
-
-  /** [[appendToSetSimIndex]] with EXACTLY-ONCE semantics for streaming
-    * ingest (the shared ledger protocol — a replayed batch would double
-    * its rows in both components and every later candidate join). */
-  def appendToSetSimIndexExactlyOnce(newDf: DataFrame, textCol: String,
-                                     idCol: String, path: String,
-                                     batchId: Long,
-                                     shingle: Int = 3): Unit = {
-    val spark = newDf.sparkSession
-    if (graft.ops.Stage.alreadyPublished(spark, path, batchId)) return
-    graft.ops.Stage.appendExactlyOnce(spark, path, batchId,
-      Seq("sets", "postings")) { staging =>
-      val sets = setSimSets(newDf, textCol, idCol, shingle)
-      sets.write.mode("overwrite").parquet(s"$staging/sets")
-      setSimPostings(sets).write.mode("overwrite")
-        .parquet(s"$staging/postings")
+    batchId match {
+      case Some(id) =>
+        graft.ops.Stage.appendExactlyOnce(spark, path, id, SetSimComponents)(stage)
+      case None =>
+        val id = if (opId.nonEmpty) opId else graft.ops.Stage.freshOpId()
+        graft.ops.Stage.publishOnce(spark, path, id, SetSimComponents)(stage)
     }
   }
 
@@ -448,7 +441,7 @@ trait DedupSetSim extends DedupWinnow {
                                    path: String, shingle: Int = 3): Unit = {
     val spark = deleted.sparkSession
     graft.ops.Stage.withWriterLease(spark, path) {
-      graft.ops.Stage.sweepUncommitted(spark, path, Seq("sets", "postings"))
+      graft.ops.Stage.sweepUncommitted(spark, path, SetSimComponents)
       import graft.ops.Stage.{publishRewrite, resolve}
       val delKeys = deleted.where(col(textCol).isNotNull)
         .select(xxhash64(graft.functions.TextExpressions
@@ -458,7 +451,7 @@ trait DedupSetSim extends DedupWinnow {
         .withColumn("seth", xxhash64(col("grams")))
       val removed = live.join(delKeys, Seq("seth")).select("doc")
       // independent component rewrites run CONCURRENTLY (guide §2.6 —
-      // the compactTextIndex overlap note); `live` listed the sets files
+      // the text fold's overlap note); `live` listed the sets files
       // at construction and the sets flip keeps that version one grace
       // cycle, so the postings thunk's anti-join input is stable
       graft.ops.Par.run(

@@ -291,8 +291,8 @@ trait DedupWinnow extends DedupSimhash {
     }
   }
 
-  /** The ONE fps pipeline shared by build and both appends, so they
-    * stay join-compatible (the [[writeManifestTables]] rule). The (n, w)
+  /** The ONE fps pipeline shared by build and append, so they stay
+    * join-compatible (the [[manifestKeyed]] rule). The (n, w)
     * stamp columns ride on every row (RLE-compressed constants) so
     * probes band with the parameters of the data they read, not with a
     * meta/ read that can race a rebuild. */
@@ -303,46 +303,25 @@ trait DedupWinnow extends DedupSimhash {
       .repartition(col("h")).sortWithinPartitions("h", "doc", "pos")
       .withColumn("n", lit(n)).withColumn("w", lit(w))
 
-  private def writeWinnowTables(df: DataFrame, textCol: String,
-                                idCol: String, path: String, n: Int,
-                                w: Int, mode: String): Unit =
-    winnowFps(df, textCol, idCol, n, w).write.mode(mode)
-      .parquet(graft.ops.Stage.resolve(df.sparkSession, s"$path/fps"))
-
   /** Append a batch's fingerprints to a [[saveWinnowManifest]] manifest
     * without rebuilding — batch-sized work against the manifest's own
     * (n, w); new documents' rows are per-doc disjoint, so they land as
-    * new files. Under the root writer lease, like every manifest append. */
+    * new files. Staged through [[WinnowManifest]]'s `append`
+    * (`batchId = Some(id)` is the exactly-once stream path: a replayed
+    * batch does not double its fingerprint rows, which would inflate
+    * every later probe's shared counts for that content). Meta (n, w)
+    * is read INSIDE the stager, under the root lease — a concurrent
+    * saveWinnowManifest rebuild with different (n, w) must not race the
+    * read and land join-incompatible fingerprints. */
   def appendToWinnowManifest(newDf: DataFrame, textCol: String,
-                             idCol: String, path: String): Unit =
-    graft.ops.Stage.withWriterLease(newDf.sparkSession, path) {
-      val meta = Tables.parquet(newDf.sparkSession,
-        graft.ops.Stage.resolve(newDf.sparkSession, s"$path/meta")).head()
-      writeWinnowTables(newDf, textCol, idCol, path,
-        meta.getAs[Int]("n"), meta.getAs[Int]("w"), "append")
-    }
-
-  /** [[appendToWinnowManifest]] with EXACTLY-ONCE semantics for
-    * streaming ingest ([[graft.ops.Stage.appendExactlyOnce]] — marker
-    * check, staged publish under `b<batchId>-*`): a replayed batch does
-    * not double its fingerprint rows (a double would inflate every
-    * later probe's shared counts for that content). */
-  def appendToWinnowManifestExactlyOnce(newDf: DataFrame, textCol: String,
-                                        idCol: String, path: String,
-                                        batchId: Long): Unit = {
+                             idCol: String, path: String,
+                             batchId: Option[Long] = None): Unit = {
     val spark = newDf.sparkSession
-    if (graft.ops.Stage.alreadyPublished(spark, path, batchId)) return
-    graft.ops.Stage.appendExactlyOnce(spark, path, batchId,
-      WinnowManifest.components(spark, path)) {
-      staging =>
-        // meta (n, w) is read INSIDE the lease-held stage callback — a
-        // concurrent saveWinnowManifest rebuild with different (n, w)
-        // must not race the read and land join-incompatible fingerprints
-        // (the appendToTextIndexExactlyOnce rule)
-        val meta = Tables.parquet(spark,
-          graft.ops.Stage.resolve(spark, s"$path/meta")).head()
-        writeWinnowTables(newDf, textCol, idCol, staging,
-          meta.getAs[Int]("n"), meta.getAs[Int]("w"), "overwrite")
+    WinnowManifest.append(spark, path, batchId) { (staging, _) =>
+      val meta = Tables.parquet(spark,
+        graft.ops.Stage.resolve(spark, s"$path/meta")).head()
+      winnowFps(newDf, textCol, idCol, meta.getAs[Int]("n"),
+        meta.getAs[Int]("w")).write.mode("overwrite").parquet(s"$staging/fps")
     }
   }
 
@@ -350,21 +329,16 @@ trait DedupWinnow extends DedupSimhash {
     * right-to-be-forgotten path, ID-keyed (unlike the MinHash
     * manifest's content-keyed delete: that one stores exact-collapse
     * REPRESENTATIVES, so ids under-delete there; winnow fps are plain
-    * per-document rows, so the id IS the right key). One anti-join +
-    * atomic publish ([[graft.ops.Stage.publishRewrite]] — a crash
-    * mid-rewrite leaves the old manifest serving); probing afterwards
+    * per-document rows, so the id IS the right key). The ids land as
+    * tombstones (probes mask them at once), then [[WinnowManifest]]'s
+    * `compact` folds them out in one atomic publish; probing afterwards
     * equals probing a manifest built without those documents. */
   def deleteFromWinnowManifest(spark: org.apache.spark.sql.SparkSession,
                                path: String, ids: DataFrame,
-                               idCol: String = "doc_id"): Unit =
-    graft.ops.Stage.withWriterLease(spark, path) {
-      graft.ops.Stage.sweepUncommitted(spark, path,
-        WinnowManifest.components(spark, path))
-      val del = ids.select(col(idCol).as("doc")).distinct()
-      graft.ops.Stage.publishRewrite(spark, s"$path/fps",
-        Tables.parquet(spark, graft.ops.Stage.resolve(spark, s"$path/fps"))
-          .join(del, Seq("doc"), "left_anti"))
-    }
+                               idCol: String = "doc_id"): Unit = {
+    tombstoneFromWinnowManifest(spark, path, ids, idCol)
+    WinnowManifest.compact(spark, path)
+  }
 
   /** TOMBSTONE documents in the winnow manifest — the batched
     * alternative to [[deleteFromWinnowManifest]]'s per-call
@@ -372,60 +346,41 @@ trait DedupWinnow extends DedupSimhash {
     * [[tombstoneContentInMinhashManifest]]): append the doc ids to the
     * shared `tombstones/` table (batch-sized), probes mask pending ids
     * immediately (the fps relation anti-joins before anything else),
-    * and [[compactWinnowManifest]] folds them into a physical delete on
-    * the compaction schedule. ID-keyed like the family's delete. */
+    * and [[WinnowManifest]]'s `compact` folds them into a physical delete
+    * on the compaction schedule. ID-keyed like the family's delete. */
   def tombstoneFromWinnowManifest(spark: org.apache.spark.sql.SparkSession,
                                   path: String, ids: DataFrame,
                                   idCol: String = "doc_id"): Unit =
     graft.ops.Stage.appendTombstones(
       ids.select(col(idCol).as("doc")), path)
 
-  /** Fold the winnow manifest's per-batch file trail into one fresh,
-    * h-sorted version ([[graft.ops.Stage.publishRewrite]] — atomic, old
-    * version keeps serving through a crash): streaming ingest lands one
-    * file set per micro-batch, and probe-side row-group pruning wants
-    * the h-sort restored. Pending tombstones fold into the rewrite as a
-    * physical delete, then retire with the standard one-cycle reader
-    * grace ([[graft.ops.Stage.resetTombstones]]). Manifest-sized work,
-    * no corpus re-winnowing. */
-  def compactWinnowManifest(spark: org.apache.spark.sql.SparkSession,
-                            path: String): Unit =
-    graft.ops.Stage.withWriterLease(spark, path) {
-      graft.ops.Stage.sweepUncommitted(spark, path,
-        WinnowManifest.components(spark, path))
-      val snap = graft.ops.Stage.tombstoneSnapshot(spark, path)
-      val fps = Tables.parquet(spark, graft.ops.Stage.resolve(spark, s"$path/fps"))
-      val live = snap.map(_._1) match {
-        case Some(t) => fps.join(t, Seq("doc"), "left_anti")
-        case None    => fps
-      }
-      graft.ops.Stage.publishRewrite(spark, s"$path/fps",
-        live.repartition(col("h")).sortWithinPartitions("h", "doc", "pos"))
-      graft.ops.Stage.resetTombstones(spark, path,
-        snap.map(_._2).getOrElse(Nil))
-      graft.ops.Stage.compactLedger(spark, path)
+  /** [[WinnowManifest]]'s compaction fold: the per-batch file trail
+    * becomes one fresh, h-sorted version ([[graft.ops.Stage.publishRewrite]]
+    * — atomic, old version keeps serving through a crash): streaming
+    * ingest lands one file set per micro-batch, and probe-side row-group
+    * pruning wants the h-sort restored. Pending tombstones fold into the
+    * rewrite as a physical delete. Manifest-sized work, no corpus
+    * re-winnowing. */
+  private def foldFps(spark: org.apache.spark.sql.SparkSession,
+                      path: String, comps: Seq[String],
+                      tomb: Option[DataFrame]): Unit = {
+    val fps = Tables.parquet(spark, graft.ops.Stage.resolve(spark, s"$path/fps"))
+    val live = tomb match {
+      case Some(t) => fps.join(t.withColumnRenamed(t.columns.head, "doc"),
+        Seq("doc"), "left_anti")
+      case None => fps
     }
-
-  /** [[compactWinnowManifest]] when the fps component has fragmented
-    * past `maxFiles` live files ([[graft.ops.Stage.shouldCompact]]);
-    * otherwise a metadata-only listing — the self-maintenance hook for
-    * streaming ingest sinks, like [[autoCompactMinhashManifest]].
-    * Returns whether a compaction ran. */
-  def autoCompactWinnowManifest(spark: org.apache.spark.sql.SparkSession,
-                                path: String,
-                                maxFiles: Int = 64): Boolean = {
-    val go = graft.ops.Stage.shouldCompact(spark, path,
-      WinnowManifest.components(spark, path), maxFiles)
-    if (go) compactWinnowManifest(spark, path)
-    go
+    graft.ops.Stage.publishRewrite(spark, s"$path/fps",
+      live.repartition(col("h")).sortWithinPartitions("h", "doc", "pos"))
   }
 
-  /** The winnow manifest's lifecycle descriptor: named-snapshot pin,
-    * restore, drop, vacuum and health over the fps component — the same
+  /** The winnow manifest's lifecycle descriptor: staged append,
+    * compaction ([[foldFps]]), named-snapshot pin, restore, drop, vacuum
+    * and health over the fps component — the same
     * campaign-grade undo surface as the other index families; pins
     * serve through `probeWinnowOverlap(…, at = Pinned(name))`. */
   val WinnowManifest: graft.ops.Family =
-    graft.ops.Family("winnow_manifest", (_, _) => Seq("fps"))
+    graft.ops.Family("winnow_manifest", (_, _) => Seq("fps"), foldFps)
 
   /** Probe an ingest batch against a persisted [[saveWinnowManifest]]
     * manifest: per batch document, its strongest partial-overlap match

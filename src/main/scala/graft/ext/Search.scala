@@ -214,42 +214,44 @@ object Search {
 
   /** Append a new ingest batch to a [[saveTextIndex]] index without
     * rebuilding: document postings are per-doc disjoint, so the batch's
-    * lists land as new files (append mode) and BM25's corpus statistics
-    * are plain sums — the grown index serves bit-identically to a fresh
-    * build over the union. Batch-sized work only; the one-row stats
-    * update is the only driver-side read (constant by construction).
-    * Under the ROOT writer lease, like the exactly-once variant: an
-    * unleased append racing a [[TextIndex]] pin could hand the
-    * pin a torn (partially committed) file list.
+    * lists land as new files and BM25's corpus statistics are plain sums
+    * — the grown index serves bit-identically to a fresh build over the
+    * union. Batch-sized work only; stats are ADDITIVE rows (the batch
+    * contributes one more, and serving sums them in [[readStats]]), so no
+    * read-modify-write. The positional component, when present, gains
+    * the batch's rows by the same per-doc-disjoint argument. On the FIRST
+    * batch of a streaming ingest this append also CREATES the index
+    * (born versioned, so snapshot pins work from the first batch).
+    *
+    * Staged through [[TextIndex]]'s `append`: `batchId = Some(id)` is
+    * the EXACTLY-ONCE stream path (a replayed batch is a no-op; batch
+    * ids are only meaningful relative to ONE durable checkpoint lineage,
+    * like [[graft.ops.Sinks.streamJdbcExactlyOnce]]); `None` publishes
+    * under a fresh op id, so a batch that fails between two component
+    * writes publishes nothing. The component probe runs under the root
+    * lease, so a concurrent [[enablePositionalIndex]] cannot race it.
+    * Scale: the batch-sized plan plus one listing + |files| renames per
+    * component — metadata work, no second data pass.
     */
   def appendToTextIndex(batch: DataFrame, path: String,
-                        idCol: String = "doc_id",
-                        textCol: String = "text"): Unit = {
-    val spark = batch.sparkSession
-    graft.ops.Stage.withWriterLease(spark, path) {
-    val comps = textComponents(spark, path)
-    // like the streaming shells, an index CREATED by this append is born
-    // versioned, so snapshot pins work from the first batch
-    comps.foreach(c =>
-      graft.ops.Stage.ensureVersioned(spark, s"$path/$c"))
-    postingsOf(batch, idCol, textCol)
-      .write.mode("append").parquet(graft.ops.Stage.resolve(spark, s"$path/postings"))
-    doclensOf(batch, idCol, textCol)
-      .write.mode("append").parquet(graft.ops.Stage.resolve(spark, s"$path/doclens"))
-    // stats are ADDITIVE rows: the batch contributes one more, and
-    // serving sums ([[readStats]]) — no read-modify-write, no collect.
-    // On the FIRST batch of a streaming ingest this append also CREATES
-    // the index.
-    batchStats(batch, textCol).write.mode("append")
-      .parquet(graft.ops.Stage.resolve(spark, s"$path/stats"))
-    // positional component, when present: new documents' posting rows
-    // are disjoint from existing ones, so the batch lands as new files —
-    // the same per-doc-disjoint argument as postings
-    if (comps.contains("positions"))
-      positionalPostings(batch, idCol, textCol).write.mode("append")
-        .parquet(graft.ops.Stage.resolve(spark, s"$path/positions"))
+                        idCol: String = "doc_id", textCol: String = "text",
+                        batchId: Option[Long] = None): Unit =
+    TextIndex.append(batch.sparkSession, path, batchId) { (staging, comps) =>
+      postingsOf(batch, idCol, textCol)
+        .write.mode("overwrite").parquet(s"$staging/postings")
+      doclensOf(batch, idCol, textCol)
+        .write.mode("overwrite").parquet(s"$staging/doclens")
+      batchStats(batch, textCol).write.mode("overwrite")
+        .parquet(s"$staging/stats")
+      if (comps.contains("positions"))
+        positionalPostings(batch, idCol, textCol).write.mode("overwrite")
+          .parquet(s"$staging/positions")
     }
-  }
+
+  /** kept for perfbench/ */
+  def appendToTextIndexExactlyOnce(batch: DataFrame, path: String,
+                                   batchId: Long): Unit =
+    appendToTextIndex(batch, path, batchId = Some(batchId))
 
   /** One additive stats row for a batch (coalesce: zero docs must still
     * produce a (0, 0) row, and sum() over nothing is NULL). */
@@ -282,41 +284,6 @@ object Search {
             sum(col("total_tokens")).as("total_tokens"))
     }
 
-  /** [[appendToTextIndex]] with EXACTLY-ONCE semantics for streaming
-    * ingest, via the shared ledger protocol
-    * ([[graft.ops.Stage.appendExactlyOnce]] — marker check, batch-scoped
-    * staging, deterministic `b<batchId>-*` publish; every crash window
-    * replays safely, see its scaladoc). Like
-    * [[graft.ops.Sinks.streamJdbcExactlyOnce]], batch ids are only
-    * meaningful relative to ONE durable checkpoint lineage.
-    *
-    * Scale: identical plan to [[appendToTextIndex]] (batch-sized), plus
-    * one file listing + |files| renames per component — metadata work,
-    * no second data pass.
-    */
-  def appendToTextIndexExactlyOnce(batch: DataFrame, path: String,
-                                   batchId: Long, idCol: String = "doc_id",
-                                   textCol: String = "text"): Unit = {
-    // LAZY so the component-existence probe first runs INSIDE the writer
-    // lease appendExactlyOnce acquires (its `components` param is by-name)
-    // — probing before the lease would let a concurrent
-    // enablePositionalIndex race the probe, violating textComponents'
-    // documented under-the-lease invariant
-    lazy val comps = textComponents(batch.sparkSession, path)
-    graft.ops.Stage.appendExactlyOnce(batch.sparkSession, path, batchId,
-      comps) { staging =>
-      postingsOf(batch, idCol, textCol)
-        .write.mode("overwrite").parquet(s"$staging/postings")
-      doclensOf(batch, idCol, textCol)
-        .write.mode("overwrite").parquet(s"$staging/doclens")
-      batchStats(batch, textCol).write.mode("overwrite")
-        .parquet(s"$staging/stats")
-      if (comps.contains("positions"))
-        positionalPostings(batch, idCol, textCol).write.mode("overwrite")
-          .parquet(s"$staging/positions")
-    }
-  }
-
   /** Delete documents from a [[saveTextIndex]] index — the
     * right-to-be-forgotten path, IMMEDIATE form: the ids land as
     * tombstones first (batch-sized, atomic append) and a compaction
@@ -337,13 +304,22 @@ object Search {
                           idCol: String = "doc_id"): Unit = {
     tombstoneFromTextIndex(spark, path, ids.select(col(idCol)).distinct(),
       idCol)
-    compactTextIndex(spark, path, idCol)
+    TextIndex.compact(spark, path)
   }
 
-  /** Compact a [[saveTextIndex]] index after a run of per-batch appends.
+  /** kept for perfbench/ */
+  def compactTextIndex(spark: org.apache.spark.sql.SparkSession,
+                       path: String): Unit = TextIndex.compact(spark, path)
+
+  /** kept for perfbench/ */
+  def autoCompactTextIndex(spark: org.apache.spark.sql.SparkSession,
+                           path: String): Boolean =
+    TextIndex.autoCompact(spark, path)
+
+  /** [[TextIndex]]'s compaction fold, after a run of per-batch appends.
     * Streaming ingest accumulates one file set per micro-batch
-    * (`b<batchId>-*` from the exactly-once publish, plain part files from
-    * batch appends): after thousands of micro-batches every query pays
+    * (`b<batchId>-*` from the exactly-once publish, `o<opId>-*` from
+    * plain appends): after thousands of micro-batches every query pays
     * file-listing over thousands of entries and reads tiny row groups
     * whose token min/max prune poorly. One index-sized rewrite restores
     * the fresh-build layout:
@@ -356,33 +332,24 @@ object Search {
     *  - stats: the additive rows FOLD INTO ONE — [[readStats]] sums them,
     *    so the fold is exact (long addition) and serving is unchanged.
     *
-    * Each component publishes atomically ([[graft.ops.Stage.publishRewrite]]):
-    * a crash mid-compaction leaves the fragmented-but-correct index
-    * serving. Serving before and after is bit-identical (per-document
-    * scores are fixed-order expressions over per-(doc, term) rows whose
-    * multiset the rewrite preserves — SearchSpec pins it).
+    * Pending tombstones FOLD here: postings/doclens drop the tombstoned
+    * documents and stats recompute from the surviving doclens (the
+    * immediate-delete recipe). The id column is read from the doclens
+    * schema (doclens is (id, dl)). Serving before and after is
+    * bit-identical (per-document scores are fixed-order expressions over
+    * per-(doc, term) rows whose multiset the rewrite preserves —
+    * SearchSpec pins it).
     */
-  def compactTextIndex(spark: org.apache.spark.sql.SparkSession,
-                       path: String, idCol: String = "doc_id"): Unit =
-      graft.ops.Stage.withWriterLease(spark, path) {
+  private def foldText(spark: org.apache.spark.sql.SparkSession,
+                       path: String, comps: Seq[String],
+                       tomb: Option[DataFrame]): Unit = {
     import graft.ops.Stage.{compactionPartitions, publishRewrite, resolve}
-    val comps = textComponents(spark, path)
-    // partial leavings of a crashed mid-publish batch must NOT fold —
-    // anonymized into part files, the replay's prefix sweep couldn't
-    // remove them and the batch would land twice
-    graft.ops.Stage.sweepUncommitted(spark, path, comps)
-    // pending tombstones FOLD here: postings/doclens drop the tombstoned
-    // documents, stats recompute from the surviving doclens (the
-    // immediate-delete recipe), then exactly the consumed tombstone
-    // files reset (keys appended mid-fold stay pending)
-    val snap = graft.ops.Stage.tombstoneSnapshot(spark, path)
-    val tomb = snap.map(_._1)
     // The per-component rewrites are INDEPENDENT (disjoint component
-    // roots, each under its own component lease; inputs resolved inside
-    // each thunk against the still-live versions, which a sibling's flip
-    // cannot GC — the pointer keeps one previous-version grace cycle), so
-    // they run CONCURRENTLY (guide §2.6, the campaign-trio overlap applied
-    // inside one family): sequential publishes serialized ~0.3–0.5 s of
+    // roots, each under its own component lease; inputs resolved against
+    // the still-live versions, which a sibling's flip cannot GC — the
+    // pointer keeps one previous-version grace cycle), so they run
+    // CONCURRENTLY (guide §2.6, the campaign-trio overlap applied inside
+    // one family): sequential publishes serialized ~0.3–0.5 s of
     // per-publish job latency each. Only stats → doclens is ordered (the
     // stats recompute must read the POST-fold doclens), so it rides the
     // doclens thunk.
@@ -390,6 +357,8 @@ object Search {
     val nLens = compactionPartitions(spark, s"$path/doclens")
     val nPos = if (comps.contains("positions"))
       compactionPartitions(spark, s"$path/positions") else 0
+    val lens = Tables.parquet(spark, resolve(spark, s"$path/doclens"))
+    val idCol = lens.columns.head
     val postingsThunk = () =>
       publishRewrite(spark, s"$path/postings") { versionDir =>
         minusTombstoned(Tables.parquet(spark, resolve(spark, s"$path/postings")),
@@ -399,8 +368,7 @@ object Search {
       }
     val lensStatsThunk = () => {
       publishRewrite(spark, s"$path/doclens",
-        minusTombstoned(Tables.parquet(spark, resolve(spark, s"$path/doclens")),
-          tomb, idCol).repartition(nLens))
+        minusTombstoned(lens, tomb, idCol).repartition(nLens))
       publishRewrite(spark, s"$path/stats",
         Tables.parquet(spark, resolve(spark, s"$path/doclens")) // post-fold lens
           .agg(count(lit(1)).as("n_docs"),
@@ -420,40 +388,19 @@ object Search {
         }
       graft.ops.Par.run(postingsThunk, lensStatsThunk, positionsThunk)
     } else graft.ops.Par.run(postingsThunk, lensStatsThunk)
-    graft.ops.Stage.resetTombstones(spark, path,
-      snap.map(_._2).getOrElse(Nil))
-    graft.ops.Stage.compactLedger(spark, path)
-  }
-
-  /** [[compactTextIndex]] when the index has fragmented past
-    * `maxFilesPerComponent` live files in any component
-    * ([[graft.ops.Stage.shouldCompact]]); otherwise a metadata-only
-    * listing. The self-maintenance hook for long-running streaming
-    * ingest — each exactly-once batch publishes ≥1 file per component,
-    * so a `foreachBatch` sink calls this after its append and file
-    * counts stay bounded without an operator remembering to compact.
-    * Returns whether a compaction ran.
-    */
-  def autoCompactTextIndex(spark: org.apache.spark.sql.SparkSession,
-                           path: String, maxFilesPerComponent: Int = 64,
-                           idCol: String = "doc_id"): Boolean = {
-    val go = graft.ops.Stage.shouldCompact(spark, path,
-      textComponents(spark, path), maxFilesPerComponent)
-    if (go) compactTextIndex(spark, path, idCol)
-    go
   }
 
   /** TOMBSTONE documents in a [[saveTextIndex]] index — the batched
-    * alternative to [[deleteFromTextIndex]], whose anti-join rewrite pays
+    * alternative to [[deleteFromTextIndex]], whose immediate fold pays
     * index-sized work per call (the manifest's pre-tombstone problem,
     * here). The delete appends its id set to `tombstones/` (batch-sized);
     * serving consults the pending ids — postings and doclens anti-join
     * them (broadcast — the filtered posting lists are already
     * query-term-sized), and corpus stats subtract the tombstoned
     * documents' doclens contribution ([[readStats]]), so BM25 idf/avgdl
-    * reflect the deletion immediately and exactly. [[compactTextIndex]]
-    * folds the tombstones into a physical delete on the compaction
-    * schedule. Serve-equivalent to the immediate delete at every point
+    * reflect the deletion immediately and exactly. [[TextIndex]]'s
+    * `compact` folds the tombstones into a physical delete on the
+    * compaction schedule. Serve-equivalent to the immediate delete at every point
     * (SearchSpec pins it; q117 pins it against q105's oracle).
     */
   def tombstoneFromTextIndex(spark: org.apache.spark.sql.SparkSession,
@@ -508,18 +455,18 @@ object Search {
       k, idCol, k1, b)
   }
 
-  /** The text index's lifecycle descriptor: named-snapshot pin,
-    * restore, drop, vacuum and health over its LIVE component set
-    * ([[textComponents]] — the positional component moves with the
-    * triple). A pin outlives the one-publish-cycle window of
-    * `bm25TopKIndexed(…, at = Previous)`, so an operator can hold the
-    * pre-campaign state across a whole run of deletes and compactions,
-    * serve it with `at = Pinned(name)`, and restore it when
-    * [[bm25MaintenanceDiff]] flags the campaign as wrong. Requires a
-    * versioned layout — pin after the first maintenance op (or compact
-    * once first). */
+  /** The text index's lifecycle descriptor: staged append, compaction
+    * ([[foldText]]), named-snapshot pin, restore, drop, vacuum and health
+    * over its LIVE component set ([[textComponents]] — the positional
+    * component moves with the triple). A pin outlives the
+    * one-publish-cycle window of `bm25TopKIndexed(…, at = Previous)`, so
+    * an operator can hold the pre-campaign state across a whole run of
+    * deletes and compactions, serve it with `at = Pinned(name)`, and
+    * restore it when [[bm25MaintenanceDiff]] flags the campaign as wrong.
+    * Requires a versioned layout — pin after the first maintenance op
+    * (or compact once first). */
   val TextIndex: graft.ops.Family =
-    graft.ops.Family("text_index", textComponents)
+    graft.ops.Family("text_index", textComponents, foldText)
 
   /** Maintenance DIFF of the index's two serveable states: PREVIOUS
     * (the snapshot the last maintenance op superseded) vs LIVE, as one

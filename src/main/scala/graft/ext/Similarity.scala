@@ -814,10 +814,9 @@ object Similarity {
     * codebooks), so append/delete (frozen codebooks) leave the index
     * bit-identical in content to a fresh build over the effective
     * corpus — the invariant the q161 oracle and SimilaritySpec pin.
-    * Deletes are immediate anti-join rewrites, deliberately: the codes
-    * relation is ~32× smaller than raw vectors by construction, so the
-    * rewrite costs what a tombstone COMPACTION would — the pending-
-    * tombstone machinery would buy nothing here.
+    * A delete is tombstones plus an immediate fold ([[deleteFromPqIndex]]):
+    * the codes relation is ~32× smaller than raw vectors, so the fold is
+    * cheap per delete and serves need not mask pending tombstones.
     */
   def savePqIndex(corpus: DataFrame, path: String, m: Int, nCent: Int,
                   dim: Int, trainIters: Int = 0, idCol: String = "vec_id",
@@ -867,59 +866,33 @@ object Similarity {
     * codebooks stay frozen, arrivals encode with the same argmin
     * geometry and land as new code files — batch-sized work, and the
     * grown index serves bit-identically to a fresh build over the union
-    * with the same codebooks. Under the root writer lease (the torn-pin
-    * argument of every other append). */
+    * with the same codebooks. Staged through [[PqIndex]]'s `append`
+    * (`batchId = Some(id)` is the exactly-once stream path: a replayed
+    * batch never surfaces duplicated vectors as duplicate top-k
+    * candidates); the codebooks load inside the stager, under the root
+    * lease, so they cannot race a rebuild. */
   def appendToPqIndex(newVecs: DataFrame, path: String,
-                      idCol: String = "vec_id",
-                      vecCol: String = "embedding"): Unit =
-    graft.ops.Stage.withWriterLease(newVecs.sparkSession, path) {
-      val spark = newVecs.sparkSession
+                      idCol: String = "vec_id", vecCol: String = "embedding",
+                      batchId: Option[Long] = None): Unit = {
+    val spark = newVecs.sparkSession
+    PqIndex.append(spark, path, batchId) { (staging, _) =>
       val (dim, cb) = loadPqMeta(spark, path)
-      pqCodes(newVecs, dim, cb, idCol, vecCol)
-        .withColumnRenamed(idCol, "vec_id")
-        .write.mode("append")
-        .parquet(graft.ops.Stage.resolve(spark, s"$path/codes"))
-    }
-
-  /** [[appendToPqIndex]] with EXACTLY-ONCE semantics for streaming
-    * ingest, via the shared ledger protocol
-    * ([[graft.ops.Stage.appendExactlyOnce]]): the batch encodes with
-    * the frozen codebooks into staging, then publishes under a
-    * batchId-deterministic name — a replayed batch is a no-op, so
-    * duplicated vectors never surface as duplicate top-k candidates
-    * (the [[appendToIvfIndexExactlyOnce]] argument, applied to codes).
-    */
-  def appendToPqIndexExactlyOnce(newVecs: DataFrame, path: String,
-                                 batchId: Long, idCol: String = "vec_id",
-                                 vecCol: String = "embedding"): Unit = {
-    // replay fast-exit before the metadata load, like the IVF variant
-    if (graft.ops.Stage.alreadyPublished(newVecs.sparkSession, path, batchId))
-      return
-    val (dim, cb) = loadPqMeta(newVecs.sparkSession, path)
-    graft.ops.Stage.appendExactlyOnce(newVecs.sparkSession, path, batchId,
-      PqIndex.components(newVecs.sparkSession, path)) { staging =>
       pqCodes(newVecs, dim, cb, idCol, vecCol)
         .withColumnRenamed(idCol, "vec_id")
         .write.mode("overwrite").parquet(s"$staging/codes")
     }
   }
 
-  /** Delete vectors from a [[savePqIndex]] index — an immediate
-    * anti-join rewrite of the codes relation (see [[savePqIndex]] on
-    * why PQ skips pending tombstones), atomically published; codebooks
-    * and meta stay frozen, so the shrunk index equals a fresh build
-    * over the survivors. */
+  /** Delete vectors from a [[savePqIndex]] index: the ids land as
+    * tombstones, then [[PqIndex]]'s `compact` folds them out of the codes
+    * relation in one atomic publish; codebooks and meta stay frozen, so
+    * the shrunk index equals a fresh build over the survivors. */
   def deleteFromPqIndex(spark: org.apache.spark.sql.SparkSession,
                         path: String, ids: DataFrame,
-                        idCol: String = "vec_id"): Unit =
-    graft.ops.Stage.withWriterLease(spark, path) {
-      graft.ops.Stage.sweepUncommitted(spark, path,
-        PqIndex.components(spark, path))
-      val del = ids.select(col(idCol).as("vec_id")).distinct()
-      graft.ops.Stage.publishRewrite(spark, s"$path/codes",
-        Tables.parquet(spark, graft.ops.Stage.resolve(spark, s"$path/codes"))
-          .join(del, Seq("vec_id"), "left_anti"))
-    }
+                        idCol: String = "vec_id"): Unit = {
+    graft.ops.Stage.appendTombstones(ids.select(col(idCol).as("vec_id")), path)
+    PqIndex.compact(spark, path)
+  }
 
   /** ADC top-k served from a persisted [[savePqIndex]] index: the scan
     * is the 8-byte-code relation, the query side stays exact —
@@ -975,32 +948,17 @@ object Similarity {
       .withColumn("rank", row_number().over(w)).where(col("rank") <= k)
   }
 
-  /** Compact a [[savePqIndex]] index after a run of per-batch appends:
-    * one rewrite restores a bounded file count
-    * ([[graft.ops.Stage.compactionPartitions]]) and folds the ledger to
-    * its high-water marker. Serving before and after is identical (the
-    * codes multiset is preserved). */
-  def compactPqIndex(spark: org.apache.spark.sql.SparkSession,
-                     path: String): Unit =
-    graft.ops.Stage.withWriterLease(spark, path) {
-      graft.ops.Stage.sweepUncommitted(spark, path,
-        PqIndex.components(spark, path))
-      val n = graft.ops.Stage.compactionPartitions(spark, s"$path/codes")
-      graft.ops.Stage.publishRewrite(spark, s"$path/codes",
-        Tables.parquet(spark, graft.ops.Stage.resolve(spark, s"$path/codes"))
-          .repartition(n))
-      graft.ops.Stage.compactLedger(spark, path)
-    }
-
-  /** [[compactPqIndex]] when fragmentation passes the threshold — the
-    * self-maintenance hook for streaming ingest. */
-  def autoCompactPqIndex(spark: org.apache.spark.sql.SparkSession,
-                         path: String,
-                         maxFilesPerComponent: Int = 64): Boolean = {
-    val go = graft.ops.Stage.shouldCompact(spark, path,
-      PqIndex.components(spark, path), maxFilesPerComponent)
-    if (go) compactPqIndex(spark, path)
-    go
+  /** The PQ and binary compaction fold: the one-row-per-vector
+    * component at `dir` (codes, sig) minus the tombstoned vec_ids,
+    * coalesced to [[graft.ops.Stage.compactionPartitions]] files and
+    * published atomically. A tombstone-free fold preserves the row
+    * multiset, so serving before and after is identical. */
+  private def foldVectors(spark: org.apache.spark.sql.SparkSession,
+                          dir: String, tomb: Option[DataFrame]): Unit = {
+    val n = graft.ops.Stage.compactionPartitions(spark, dir)
+    graft.ops.Stage.publishRewrite(spark, dir,
+      minusTombstoned(Tables.parquet(spark, graft.ops.Stage.resolve(spark, dir)),
+        tomb).repartition(n))
   }
 
   /** Maintenance DIFF of the PQ index's two serveable states — PREVIOUS
@@ -1016,11 +974,13 @@ object Similarity {
       pqTopKIndexed(spark, queries, path, k, idCol, vecCol, _),
       Seq("query_id", "neighbor_id"), "approx_sim", "sim")
 
-  /** The PQ index's lifecycle descriptor: named-snapshot pin, restore,
-    * drop, vacuum and health over the codes component (codebooks are
-    * frozen at build); pins serve through `pqTopKIndexed(…, at)`. */
+  /** The PQ index's lifecycle descriptor: staged append, compaction
+    * ([[foldVectors]]), named-snapshot pin, restore, drop, vacuum and
+    * health over the codes component (codebooks are frozen at build);
+    * pins serve through `pqTopKIndexed(…, at)`. */
   val PqIndex: graft.ops.Family =
-    graft.ops.Family("pq_index", (_, _) => Seq("codes"))
+    graft.ops.Family("pq_index", (_, _) => Seq("codes"),
+      (spark, path, _, tomb) => foldVectors(spark, s"$path/codes", tomb))
 
   // ------------------------------------------------ binary index persistence
 
@@ -1044,9 +1004,8 @@ object Similarity {
     * Signatures are a pure function of (vector, dim), so append/delete
     * leave the index bit-identical in content to a fresh build over
     * the effective corpus (the savePqIndex invariant — q204's oracle
-    * pins it). Deletes are immediate anti-join rewrites: the sig
-    * relation is 64× smaller than raw vectors at dim 64, so the
-    * rewrite costs what a tombstone compaction would.
+    * pins it). A delete folds its tombstones in the same call, as for
+    * PQ: the sig relation is 64× smaller than raw vectors at dim 64.
     */
   def saveBinaryIndex(corpus: DataFrame, path: String, dim: Int = 64,
                       idCol: String = "vec_id",
@@ -1066,8 +1025,8 @@ object Similarity {
     }
   }
 
-  /** The ONE sig projection shared by build and both appends (the
-    * writeManifestTables rule — a schema change applied to only one of
+  /** The ONE sig projection shared by build and append (the
+    * manifestKeyed rule — a schema change applied to only one of
     * them would corrupt every later serve of a mixed index). */
   private def binarySigRows(vecs: DataFrame, dim: Int, idCol: String,
                             vecCol: String): DataFrame =
@@ -1088,59 +1047,34 @@ object Similarity {
   /** Append new vectors to a persisted [[saveBinaryIndex]] index:
     * arrivals pack with the index's own dim and land as new sig files —
     * batch-sized work, and the grown index serves bit-identically to a
-    * fresh build over the union. Under the root writer lease (the
-    * torn-pin argument of every other append; the lease also means the
-    * meta read cannot race a rebuild). */
+    * fresh build over the union. Staged through [[BinaryIndex]]'s
+    * `append` (`batchId = Some(id)` is the exactly-once stream path: a
+    * replayed batch never doubles its signature rows); meta is read
+    * inside the stager, under the root lease, so it cannot race a
+    * rebuild. */
   def appendToBinaryIndex(newVecs: DataFrame, path: String,
                           idCol: String = "vec_id",
-                          vecCol: String = "embedding"): Unit =
-    graft.ops.Stage.withWriterLease(newVecs.sparkSession, path) {
-      val spark = newVecs.sparkSession
+                          vecCol: String = "embedding",
+                          batchId: Option[Long] = None): Unit = {
+    val spark = newVecs.sparkSession
+    BinaryIndex.append(spark, path, batchId) { (staging, _) =>
       val dim = Tables.parquet(spark,
         graft.ops.Stage.resolve(spark, s"$path/meta")).head().getAs[Int]("dim")
       binarySigRows(newVecs, dim, idCol, vecCol)
-        .write.mode("append")
-        .parquet(graft.ops.Stage.resolve(spark, s"$path/sig"))
-    }
-
-  /** [[appendToBinaryIndex]] with EXACTLY-ONCE semantics for streaming
-    * ingest ([[graft.ops.Stage.appendExactlyOnce]] — marker check,
-    * staged publish under `b<batchId>-*`): a replayed batch never
-    * doubles its signature rows (doubles would surface as duplicate
-    * top-k candidates). Meta is read INSIDE the lease-held stage
-    * callback (the appendToWinnowManifestExactlyOnce rule). */
-  def appendToBinaryIndexExactlyOnce(newVecs: DataFrame, path: String,
-                                     batchId: Long,
-                                     idCol: String = "vec_id",
-                                     vecCol: String = "embedding"): Unit = {
-    val spark = newVecs.sparkSession
-    if (graft.ops.Stage.alreadyPublished(spark, path, batchId)) return
-    graft.ops.Stage.appendExactlyOnce(spark, path, batchId,
-      BinaryIndex.components(spark, path)) {
-      staging =>
-        val dim = Tables.parquet(spark,
-          graft.ops.Stage.resolve(spark, s"$path/meta")).head()
-          .getAs[Int]("dim")
-        binarySigRows(newVecs, dim, idCol, vecCol)
-          .write.mode("overwrite").parquet(s"$staging/sig")
+        .write.mode("overwrite").parquet(s"$staging/sig")
     }
   }
 
-  /** Delete vectors from a [[saveBinaryIndex]] index — an immediate
-    * anti-join rewrite of the sig relation (see [[saveBinaryIndex]] on
-    * why binary skips pending tombstones), atomically published; the
-    * shrunk index equals a fresh build over the survivors. */
+  /** Delete vectors from a [[saveBinaryIndex]] index: the ids land as
+    * tombstones, then [[BinaryIndex]]'s `compact` folds them out of the
+    * sig relation in one atomic publish; the shrunk index equals a fresh
+    * build over the survivors. */
   def deleteFromBinaryIndex(spark: org.apache.spark.sql.SparkSession,
                             path: String, ids: DataFrame,
-                            idCol: String = "vec_id"): Unit =
-    graft.ops.Stage.withWriterLease(spark, path) {
-      graft.ops.Stage.sweepUncommitted(spark, path,
-        BinaryIndex.components(spark, path))
-      val del = ids.select(col(idCol).as("vec_id")).distinct()
-      graft.ops.Stage.publishRewrite(spark, s"$path/sig",
-        Tables.parquet(spark, graft.ops.Stage.resolve(spark, s"$path/sig"))
-          .join(del, Seq("vec_id"), "left_anti"))
-    }
+                            idCol: String = "vec_id"): Unit = {
+    graft.ops.Stage.appendTombstones(ids.select(col(idCol).as("vec_id")), path)
+    BinaryIndex.compact(spark, path)
+  }
 
   /** Hamming-candidate + exact-rerank top-k served from a persisted
     * [[saveBinaryIndex]] index: candidates come from the stored packed
@@ -1179,37 +1113,13 @@ object Similarity {
         vecCol, _),
       Seq("query_id", "neighbor_id"), "cos_sim", "sim")
 
-  /** Compact a [[saveBinaryIndex]] index after a run of per-batch
-    * appends; serving before and after is identical (the sig multiset
-    * is preserved). */
-  def compactBinaryIndex(spark: org.apache.spark.sql.SparkSession,
-                         path: String): Unit =
-    graft.ops.Stage.withWriterLease(spark, path) {
-      graft.ops.Stage.sweepUncommitted(spark, path,
-        BinaryIndex.components(spark, path))
-      val n = graft.ops.Stage.compactionPartitions(spark, s"$path/sig")
-      graft.ops.Stage.publishRewrite(spark, s"$path/sig",
-        Tables.parquet(spark, graft.ops.Stage.resolve(spark, s"$path/sig"))
-          .repartition(n))
-      graft.ops.Stage.compactLedger(spark, path)
-    }
-
-  /** [[compactBinaryIndex]] when fragmentation passes the threshold —
-    * the self-maintenance hook for streaming ingest. */
-  def autoCompactBinaryIndex(spark: org.apache.spark.sql.SparkSession,
-                             path: String,
-                             maxFilesPerComponent: Int = 64): Boolean = {
-    val go = graft.ops.Stage.shouldCompact(spark, path,
-      BinaryIndex.components(spark, path), maxFilesPerComponent)
-    if (go) compactBinaryIndex(spark, path)
-    go
-  }
-
-  /** The binary index's lifecycle descriptor: named-snapshot pin,
-    * restore, drop, vacuum and health over the sig component; pins
-    * serve through `binaryTopKIndexed(…, at)`. */
+  /** The binary index's lifecycle descriptor: staged append, compaction
+    * ([[foldVectors]]), named-snapshot pin, restore, drop, vacuum and
+    * health over the sig component; pins serve through
+    * `binaryTopKIndexed(…, at)`. */
   val BinaryIndex: graft.ops.Family =
-    graft.ops.Family("binary_index", (_, _) => Seq("sig"))
+    graft.ops.Family("binary_index", (_, _) => Seq("sig"),
+      (spark, path, _, tomb) => foldVectors(spark, s"$path/sig", tomb))
 
   /** SEMANTIC DECONTAMINATION: for every train vector, its maximum
     * cosine against a held-out probe/eval set, the probe that attains
@@ -1909,8 +1819,7 @@ object Similarity {
     // the previous pointer here); previous-serving returns after the
     // first post-rebuild maintenance op.
     graft.ops.Stage.publishRebuild(spark, s"$path/lists")(versionDir =>
-      writeIvfLists(corpus, cents, quantScale, idCol, vecCol, versionDir,
-        "overwrite"))
+      writeIvfLists(corpus, cents, quantScale, idCol, vecCol, versionDir))
   }
 
   /** The (scale, centroids) a persisted index was built with — ONE loader
@@ -1928,15 +1837,14 @@ object Similarity {
   }
 
   /** Quantize-assign-write of the inverted lists, shared by the builder
-    * (overwrite) and [[appendToIvfIndex]] (append). ONE implementation on
-    * purpose: build and append must agree bit-exactly on the code and the
+    * and [[appendToIvfIndex]]'s stager. ONE implementation on purpose:
+    * build and append must agree bit-exactly on the code and the
     * assignment geometry, or a grown index silently stops matching a
     * fresh build (the invariant SimilaritySpec pins).
     */
   private def writeIvfLists(vecs: DataFrame, cents: Array[Array[Double]],
                             quantScale: Double, idCol: String,
-                            vecCol: String, listsDir: String,
-                            mode: String): Unit = {
+                            vecCol: String, listsDir: String): Unit = {
     val code = if (quantScale > 0) quantize(col(vecCol), quantScale)
       else col(vecCol).cast("array<double>")
     val assignVec = if (quantScale > 0)
@@ -1944,13 +1852,13 @@ object Similarity {
     else col(vecCol).cast("array<double>")
     vecs.select(col(idCol).as("vec_id"), code.as("code"),
         array_max(centDotsFor(cents)(assignVec)).getField("c").as("centroid"))
-      .write.mode(mode).partitionBy("centroid").parquet(listsDir)
+      .write.mode("overwrite").partitionBy("centroid").parquet(listsDir)
   }
 
   /** Append new vectors to a persisted [[saveIvfIndex]] index WITHOUT
     * retraining: the saved centroids stay fixed, arrivals are assigned to
     * their nearest centroid with the same quantize→dequantize geometry and
-    * appended to that centroid's inverted-list partition. Because the
+    * land in that centroid's inverted-list partition. Because the
     * assignment is a pure function of (vector, centroids), an index built
     * on a base set and appended with a batch is bit-identical in content
     * to one built on the union with the same centroids (SimilaritySpec
@@ -1959,47 +1867,23 @@ object Similarity {
     * of a corpus-sized rebuild. Quality caveat, as in every IVF system:
     * centroids drift stale as the distribution shifts; retrain on the
     * index's own schedule, not per batch.
+    *
+    * Staged through [[IvfIndex]]'s `append` — the partition-preserving
+    * publish: each staged `centroid=N/` file lands in the live
+    * `centroid=N/`. `batchId = Some(id)` is the EXACTLY-ONCE stream path:
+    * a replayed batch would otherwise DUPLICATE its vectors in the lists,
+    * and duplicated vectors SURFACE IN SERVED RESULTS as duplicate top-k
+    * candidate rows. The centroids load inside the stager, under the root
+    * lease, so a replayed batch never pays the centroid collect and a
+    * rebuild cannot race the load.
     */
   def appendToIvfIndex(newVecs: DataFrame, path: String,
-                       idCol: String = "vec_id",
-                       vecCol: String = "embedding"): Unit =
-    // root lease, like the exactly-once variant: an unleased append
-    // racing an [[IvfIndex]] pin could hand the pin a torn
-    // (partially committed) file list
-    graft.ops.Stage.withWriterLease(newVecs.sparkSession, path) {
-      val (scale, cents) = loadIvfMeta(newVecs.sparkSession, path)
-      writeIvfLists(newVecs, cents, scale, idCol, vecCol,
-        graft.ops.Stage.resolve(newVecs.sparkSession, s"$path/lists"),
-        "append")
-    }
-
-  /** [[appendToIvfIndex]] with EXACTLY-ONCE semantics for streaming
-    * ingest, via the shared ledger protocol
-    * ([[graft.ops.Stage.appendExactlyOnce]]): the batch's assigned lists
-    * are staged with the same frozen-centroid geometry, then published
-    * into the live `lists/` partitions under deterministic `b<batchId>-*`
-    * names (the partition-preserving publish — each staged
-    * `centroid=N/` file lands in the live `centroid=N/`). This closes the
-    * at-least-once exposure the plain append has under `foreachBatch`
-    * replay: a replayed batch would duplicate its vectors in the lists,
-    * and duplicated vectors SURFACE IN SERVED RESULTS as duplicate top-k
-    * candidate rows — unlike the manifest, where duplicates only waste
-    * bytes. Batch ids are only meaningful relative to one durable
-    * checkpoint lineage.
-    */
-  def appendToIvfIndexExactlyOnce(newVecs: DataFrame, path: String,
-                                  batchId: Long, idCol: String = "vec_id",
-                                  vecCol: String = "embedding"): Unit = {
-    // replay no-op BEFORE the metadata load: a replayed batch must not
-    // pay the meta head() + full centroid collect just to discover its
-    // marker (appendExactlyOnce rechecks — this is the cheap fast exit)
-    if (graft.ops.Stage.alreadyPublished(newVecs.sparkSession, path, batchId))
-      return
-    val (scale, cents) = loadIvfMeta(newVecs.sparkSession, path)
-    graft.ops.Stage.appendExactlyOnce(newVecs.sparkSession, path, batchId,
-      IvfIndex.components(newVecs.sparkSession, path)) { staging =>
-      writeIvfLists(newVecs, cents, scale, idCol, vecCol, s"$staging/lists",
-        "overwrite")
+                       idCol: String = "vec_id", vecCol: String = "embedding",
+                       batchId: Option[Long] = None): Unit = {
+    val spark = newVecs.sparkSession
+    IvfIndex.append(spark, path, batchId) { (staging, _) =>
+      val (scale, cents) = loadIvfMeta(spark, path)
+      writeIvfLists(newVecs, cents, scale, idCol, vecCol, s"$staging/lists")
     }
   }
 
@@ -2007,27 +1891,18 @@ object Similarity {
     * manifest (whose docs table stores exact-collapse REPRESENTATIVES, so
     * an id-keyed delete could forget content other living docs still
     * carry), the inverted lists hold one row PER VECTOR, making id-keyed
-    * deletion exact: anti-join the lists, atomically publish
-    * ([[graft.ops.Stage.publishRewrite]]), centroids and meta stay frozen.
-    * Assignment is a pure per-vector function of the frozen centroids, so
-    * the shrunk index is bit-identical to a fresh build over the
-    * survivors with the same centroids (the invariant SimilaritySpec and
-    * the q106 oracle pin).
+    * deletion exact: the ids land as tombstones, then [[IvfIndex]]'s
+    * `compact` folds them out of the lists in one atomic publish;
+    * centroids and meta stay frozen. Assignment is a pure per-vector
+    * function of the frozen centroids, so the shrunk index is
+    * bit-identical to a fresh build over the survivors with the same
+    * centroids (the invariant SimilaritySpec and the q106 oracle pin).
     */
   def deleteFromIvfIndex(spark: org.apache.spark.sql.SparkSession,
                          path: String, ids: DataFrame,
-                         idCol: String = "vec_id"): Unit =
-      graft.ops.Stage.withWriterLease(spark, path) {
-    // like every compacting rewrite: a crashed batch's uncommitted
-    // b<id>-* files must not fold (the replay would double them)
-    graft.ops.Stage.sweepUncommitted(spark, path,
-      IvfIndex.components(spark, path))
-    val del = ids.select(col(idCol).as("vec_id")).distinct()
-    graft.ops.Stage.publishRewrite(spark, s"$path/lists") { versionDir =>
-      Tables.parquet(spark, graft.ops.Stage.resolve(spark, s"$path/lists"))
-        .join(del, Seq("vec_id"), "left_anti")
-        .write.mode("overwrite").partitionBy("centroid").parquet(versionDir)
-    }
+                         idCol: String = "vec_id"): Unit = {
+    tombstoneFromIvfIndex(spark, path, ids, idCol)
+    IvfIndex.compact(spark, path)
   }
 
   /** TOMBSTONE vectors in a [[saveIvfIndex]] index — the batched
@@ -2035,8 +1910,8 @@ object Similarity {
     * (index-sized work per delete under a drip-feed). Appends the id set
     * (batch-sized); [[topKIvfIndexed]] anti-joins the pending ids
     * (broadcast) so deleted vectors stop appearing in served top-k
-    * immediately, and [[compactIvfIndex]] folds the tombstones into a
-    * physical delete then resets. Serve-equivalent to the immediate
+    * immediately, and [[IvfIndex]]'s `compact` folds the tombstones into
+    * a physical delete then resets. Serve-equivalent to the immediate
     * delete at every point (q118 pins it against q106's oracle).
     */
   def tombstoneFromIvfIndex(spark: org.apache.spark.sql.SparkSession,
@@ -2045,21 +1920,22 @@ object Similarity {
     graft.ops.Stage.appendTombstones(
       ids.select(col(idCol).as("vec_id")), path)
 
-  /** `lists` minus tombstoned vectors (identity when nothing is
-    * pending). Broadcast anti-join on vec_id; callers load
+  /** `lists` (or any one-row-per-vector relation keyed by vec_id) minus
+    * tombstoned vectors (identity when nothing is pending). Broadcast
+    * anti-join on vec_id; callers load
     * [[graft.ops.Stage.pendingTombstones]] once per query. */
-  private def minusTombstoned(lists: DataFrame,
+  private def minusTombstoned(rel: DataFrame,
                               tomb: Option[DataFrame]): DataFrame =
     tomb match {
-      case Some(t) => lists.join(
+      case Some(t) => rel.join(
         t.withColumnRenamed(t.columns.head, "vec_id"),
         Seq("vec_id"), "left_anti")
-      case None => lists
+      case None => rel
     }
 
-  /** Compact a [[saveIvfIndex]] index's inverted lists after a run of
-    * per-batch appends: each micro-batch leaves its own `b<batchId>-*`
-    * (or plain part) files inside every `centroid=N/` partition it
+  /** [[IvfIndex]]'s compaction fold over the inverted lists, after a run
+    * of per-batch appends: each micro-batch leaves its own `b<batchId>-*`
+    * (or `o<opId>-*`) files inside every `centroid=N/` partition it
     * touched, so after thousands of batches a probe pays file-listing and
     * tiny-row-group overhead proportional to batch count, not data size.
     * One lists-sized rewrite restores one-file-per-centroid:
@@ -2067,46 +1943,21 @@ object Similarity {
     * [[graft.ops.Stage.compactionPartitions]]) keeps each centroid's rows
     * in one task, and the partitionBy write lands them in one file per
     * directory — still scan-parallel at 100 TB because parquet splits on
-    * row groups, not files. Content (vec_id, centroid, code) is
+    * row groups, not files. Pending tombstones fold into the rewrite as a
+    * physical delete; otherwise content (vec_id, centroid, code) is
     * preserved exactly — centroids, meta, and served top-k are untouched
-    * (SimilaritySpec pins it). Publishes atomically
-    * ([[graft.ops.Stage.publishRewrite]]): a crash mid-compaction leaves
-    * the fragmented-but-correct lists serving.
+    * (SimilaritySpec pins it).
     */
-  def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
-                      path: String): Unit =
-      graft.ops.Stage.withWriterLease(spark, path) {
+  private def foldLists(spark: org.apache.spark.sql.SparkSession,
+                        path: String, comps: Seq[String],
+                        tomb: Option[DataFrame]): Unit = {
     import graft.ops.Stage.{compactionPartitions, publishRewrite, resolve}
-    // crashed-mid-publish batch leavings must not fold (see
-    // Stage.sweepUncommitted — the replay would double them)
-    graft.ops.Stage.sweepUncommitted(spark, path,
-      IvfIndex.components(spark, path))
     val n = compactionPartitions(spark, s"$path/lists")
-    // pending tombstones FOLD here (physical delete), then exactly the
-    // consumed tombstone files reset (keys appended mid-fold stay)
-    val snap = graft.ops.Stage.tombstoneSnapshot(spark, path)
     publishRewrite(spark, s"$path/lists") { versionDir =>
-      minusTombstoned(Tables.parquet(spark, resolve(spark, s"$path/lists")),
-        snap.map(_._1))
+      minusTombstoned(Tables.parquet(spark, resolve(spark, s"$path/lists")), tomb)
         .repartition(n, col("centroid"))
         .write.mode("overwrite").partitionBy("centroid").parquet(versionDir)
     }
-    graft.ops.Stage.resetTombstones(spark, path,
-      snap.map(_._2).getOrElse(Nil))
-    graft.ops.Stage.compactLedger(spark, path)
-  }
-
-  /** [[compactIvfIndex]] when the lists have fragmented past
-    * `maxFilesPerComponent` live files ([[graft.ops.Stage.shouldCompact]]);
-    * otherwise a metadata-only listing. The self-maintenance hook for
-    * streaming ingest sinks. Returns whether a compaction ran. */
-  def autoCompactIvfIndex(spark: org.apache.spark.sql.SparkSession,
-                          path: String,
-                          maxFilesPerComponent: Int = 64): Boolean = {
-    val go = graft.ops.Stage.shouldCompact(spark, path,
-      IvfIndex.components(spark, path), maxFilesPerComponent)
-    if (go) compactIvfIndex(spark, path)
-    go
   }
 
   /** Serve top-k from a [[saveIvfIndex]] index: identical ranking contract
@@ -2178,8 +2029,9 @@ object Similarity {
       .withColumn("rank", row_number().over(w)).where(col("rank") <= k)
   }
 
-  /** The IVF index's lifecycle descriptor: named-snapshot pin, restore,
-    * drop, vacuum and health over the lists component. Centroids and
+  /** The IVF index's lifecycle descriptor: staged append, compaction
+    * ([[foldLists]]), named-snapshot pin, restore, drop, vacuum and
+    * health over the lists component. Centroids and
     * meta are frozen after the build, so `lists/` is the only component
     * with versions to pin, and restoring it restores the whole
     * serveable state: the restored partition directories byte-match the
@@ -2191,7 +2043,7 @@ object Similarity {
     * [[saveIvfIndex]] writes the lists born-versioned, so any saved
     * index is pinnable immediately. */
   val IvfIndex: graft.ops.Family =
-    graft.ops.Family("ivf_index", (_, _) => Seq("lists"))
+    graft.ops.Family("ivf_index", (_, _) => Seq("lists"), foldLists)
 
   /** Maintenance DIFF of the index's two serveable states: PREVIOUS
     * (the lists snapshot the last maintenance op superseded) vs LIVE,

@@ -42,9 +42,109 @@ import org.apache.spark.sql.functions.{col, lit, when}
   * `at: Family.At` (default [[Family.Live]]) and reads its components
   * through [[read]], so the live, previous and pinned serves of a family
   * are one code path that differs only in which version it reads.
+  *
+  * So is the write side. A family supplies one per-batch STAGER (its
+  * `appendToX` passes it to [[append]]) and one compaction rewrite,
+  * `fold`; everything else is written here once:
+  *  - [[append]] is always STAGED: the stager writes each component
+  *    under `staging/<component>` and [[Stage]] publishes the files under
+  *    a ledger marker — `b<batchId>-*` for an exactly-once stream batch,
+  *    `o<opId>-*` for a plain append. A plain append therefore leaves one
+  *    `_ledger/op-<id>` marker, and one that fails between two component
+  *    writes publishes nothing (its leavings are sweep-revertible, never
+  *    a torn index). The stager runs under the root lease, so it reads
+  *    the family's frozen meta there.
+  *  - [[compact]] takes the root lease, sweeps uncommitted publishes,
+  *    snapshots the pending tombstones, runs `fold` over them, retires
+  *    exactly the consumed tombstone files and folds the ledger.
+  *    [[autoCompact]] runs it when a component has fragmented.
+  *  - a DELETE is "append tombstones, then [[compact]]": the fold is the
+  *    one physical delete. A delete therefore also folds the tombstones
+  *    that were already pending, and `At.Previous` after it serves the
+  *    pre-fold state. The LM is the exception: it deletes by publishing
+  *    negated count deltas through [[append]].
+  *  - [[ingest]] is the streaming driver: append each micro-batch,
+  *    auto-compact, then compact once the stream has drained.
+  *
+  * `fold(spark, path, components, tombstones)` receives the component
+  * set [[compact]] probed under the lease and the pending tombstone keys
+  * (None when none are pending); it publishes each rewritten component
+  * with [[Stage.publishRewrite]].
   */
-final case class Family(name: String,
-                        components: (SparkSession, String) => Seq[String]) {
+final case class Family(
+    name: String,
+    components: (SparkSession, String) => Seq[String],
+    fold: (SparkSession, String, Seq[String], Option[DataFrame]) => Unit) {
+
+  /** Append one batch to the family at `path`, staged and ledgered:
+    *  - `batchId = Some(id)`: [[Stage.appendExactlyOnce]] — a replayed
+    *    stream batch is a no-op;
+    *  - `batchId = None`: [[Stage.publishOnce]] under `opId` — a
+    *    caller's id makes a retry idempotent; the default (empty) draws
+    *    a fresh id, so a retry re-appends whole, never torn.
+    * `stage(staging, components)` writes the batch's rows for each of
+    * `components` under `staging/<component>`; it runs under the root
+    * lease, after the component set is probed there. */
+  def append(spark: SparkSession, path: String, batchId: Option[Long],
+             opId: String = "")(stage: (String, Seq[String]) => Unit): Unit = {
+    lazy val comps = components(spark, path)
+    batchId match {
+      case Some(id) =>
+        Stage.appendExactlyOnce(spark, path, id, comps)(stage(_, comps))
+      case None =>
+        val id = if (opId.nonEmpty) opId else Stage.freshOpId()
+        Stage.publishOnce(spark, path, id, comps)(stage(_, comps))
+    }
+  }
+
+  /** Compact the family at `path`: under the root lease, sweep the
+    * leavings of uncommitted publishes (folding them would anonymize a
+    * crashed batch's files, and its replay would land twice), fold the
+    * pending tombstones into a physical delete with `fold`, retire
+    * exactly the tombstone files the fold consumed (keys appended
+    * mid-fold stay pending) and fold the ledger to its high-water
+    * marker. Each component publishes atomically, so a crash
+    * mid-compaction leaves the fragmented-but-correct state serving. */
+  def compact(spark: SparkSession, path: String): Unit =
+    Stage.withWriterLease(spark, path) {
+      val comps = components(spark, path)
+      Stage.sweepUncommitted(spark, path, comps)
+      val snap = Stage.tombstoneSnapshot(spark, path)
+      fold(spark, path, comps, snap.map(_._1))
+      Stage.resetTombstones(spark, path, snap.map(_._2).getOrElse(Nil))
+      Stage.compactLedger(spark, path)
+    }
+
+  /** [[compact]] when some component has fragmented past
+    * `maxFilesPerComponent` live files ([[Stage.shouldCompact]]);
+    * otherwise a metadata-only listing. The self-maintenance hook of a
+    * streaming sink. Returns whether a compaction ran. */
+  def autoCompact(spark: SparkSession, path: String,
+                  maxFilesPerComponent: Int = 64): Boolean = {
+    val go = Stage.shouldCompact(spark, path, components(spark, path),
+      maxFilesPerComponent)
+    if (go) compact(spark, path)
+    go
+  }
+
+  /** Drain `stream` into the family at `path`: a `foreachBatch` query
+    * checkpointed at `$path.ckpt` runs `append(batch, batchId)` (an
+    * exactly-once append) then [[autoCompact]] per micro-batch, is
+    * stopped once everything available has been processed, and the
+    * per-batch file trail is compacted before returning. */
+  def ingest(stream: DataFrame, path: String)(
+      append: (DataFrame, Long) => Unit): Unit = {
+    val q = stream.writeStream
+      .option("checkpointLocation", s"$path.ckpt")
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        append(batch, batchId)
+        autoCompact(batch.sparkSession, path)
+        ()
+      }
+      .start()
+    try q.processAllAvailable() finally q.stop()
+    compact(stream.sparkSession, path)
+  }
 
   /** Pin the family at `path` under the snapshot name `pin`
     * ([[Stage.snapshot]] per component, under the root lease). */

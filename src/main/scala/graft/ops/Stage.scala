@@ -1175,7 +1175,7 @@ object Stage {
     * operator no longer has to remember the contract unaided.
     */
   def publishOnce(spark: SparkSession, path: String, opId: String,
-                  components: Seq[String])(stage: String => Unit): Unit = {
+                  components: => Seq[String])(stage: String => Unit): Unit = {
     require(opId.matches("[A-Za-z0-9_]+"),
       s"opId '$opId' must match [A-Za-z0-9_]+ (it names ledger and file prefixes)")
     val marker = new Path(s"$path/_ledger/op-$opId")
@@ -1208,6 +1208,11 @@ object Stage {
       }
     }
   }
+
+  /** A fresh [[publishOnce]] op id (`[A-Za-z0-9_]+`) for a plain append
+    * that has no caller-chosen id. */
+  private[graft] def freshOpId(): String =
+    "append" + java.util.UUID.randomUUID().toString.replace("-", "")
 
   /** Sweep from components' LIVE directories the partial leavings of
     * publishes that never committed: `b<id>-*` files whose batch id has
@@ -1285,9 +1290,10 @@ object Stage {
     * id ≤ high implies published). A positive answer also sweeps any
     * staging directory a crash between the marker create and the staging
     * cleanup left behind — the one window the replay no-op would
-    * otherwise never revisit. Families whose append must load index
-    * metadata first (IVF centroids, manifest parameters) call this
-    * before the load, so a replayed batch is a metadata-only no-op.
+    * otherwise never revisit. [[appendExactlyOnce]] calls this before
+    * it takes the lease or runs `stage`, so a replayed batch is a
+    * metadata-only no-op even for families whose stager loads index
+    * metadata (IVF centroids, manifest parameters).
     */
   def alreadyPublished(spark: SparkSession, path: String,
                        batchId: Long): Boolean = {

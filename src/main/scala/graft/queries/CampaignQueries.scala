@@ -29,13 +29,13 @@ object CampaignQueries {
     graft.ops.Par.run(
       () => {
         Search.saveTextIndex(docs, text)
-        Search.compactTextIndex(s, text)
+        Search.TextIndex.compact(s, text)
       },
       () => {
         Dedup.saveMinhashManifest(
           docs.where(pmod(col("doc_id"), lit(10)) < 5), "text", "doc_id",
           mani, k = 32, bands = 16)
-        Dedup.compactMinhashManifest(s, mani)
+        Dedup.MinhashManifest.compact(s, mani)
       },
       () => Corpus.saveLm(split.where(col("split") === "train"), "text",
         "doc_id", lm))
@@ -51,17 +51,17 @@ object CampaignQueries {
       () => {
         Search.deleteFromTextIndex(s, text,
           docs.where(pmod(col("doc_id"), lit(10)) === 3).select("doc_id"))
-        Search.compactTextIndex(s, text)
+        Search.TextIndex.compact(s, text)
       },
       () => {
         Dedup.deleteContentFromMinhashManifest(
           docs.where(pmod(col("doc_id"), lit(10)) === 1), "text", mani)
-        Dedup.compactMinhashManifest(s, mani)
+        Dedup.MinhashManifest.compact(s, mani)
       },
       () => {
         Corpus.appendToLm(split.where(col("split") === "val"), lm,
           "text", "doc_id", opId = "grow_val")
-        Corpus.compactLm(s, lm)
+        Corpus.Lm.compact(s, lm)
       })
 
   val queries: Map[String, Q] = Map(

@@ -615,7 +615,7 @@ object CorpusQueries {
       // the LM lifecycle CLOSED over streaming (q109's shape for the
       // model counts): the reference LM grows from a document stream —
       // train-split filter stream-side, then per-micro-batch count
-      // deltas with EXACTLY-ONCE publish (appendToLmExactlyOnce: a
+      // deltas with EXACTLY-ONCE publish (appendToLm(batchId = …): a
       // replayed plain append would double the batch's counts and change
       // every score; replay windows pinned in CorpusSpec) — is compacted
       // (delta trail folded to one row per key), then scores the test
@@ -633,18 +633,11 @@ object CorpusQueries {
         s.readStream.schema(graft.streaming.DocumentStreams.docSchema)
           .parquet(s"$d/documents.*"), "text")
         .where(col("split") === "train")
-      val q = stream.writeStream
-        .option("checkpointLocation", s"$path.ckpt")
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-            org.apache.spark.sql.Row], batchId: Long) =>
-          Corpus.appendToLmExactlyOnce(batch, path, "text", "doc_id", batchId)
-          // self-maintaining sink: bound delta-file and ledger growth
-          Corpus.autoCompactLm(batch.sparkSession, path)
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      Corpus.compactLm(s, path)
+      // self-maintaining sink: auto-compaction bounds delta-file and
+      // ledger growth; the drained model is compacted before scoring
+      Corpus.Lm.ingest(stream, path)((batch, batchId) =>
+        Corpus.appendToLm(batch, path, "text", "doc_id",
+          batchId = Some(batchId)))
       val docs = Corpus.splitAssign(t(s, d, "documents"), "text")
       Corpus.lmPerplexityIndexed(
         docs.where(col("split") === "test" && col("text").isNotNull),

@@ -74,7 +74,7 @@ object DedupQueries {
       val manifest = docs.where(pmod(col("doc_id"), lit(10)) < 5)
       Dedup.saveMinhashManifest(manifest, "text", "doc_id", path,
         k = 32, bands = 16)
-      Dedup.compactMinhashManifest(s, path)
+      Dedup.MinhashManifest.compact(s, path)
       Dedup.deleteContentFromMinhashManifest(
         manifest.where(pmod(col("doc_id"), lit(7)) === 2), "text", path)
       Dedup.incrementalNearDups(
@@ -153,11 +153,11 @@ object DedupQueries {
       // shape for the LSH manifest): a manifest SHELL is built first —
       // meta only, empty docs/bands — then the manifest half of the
       // corpus streams in via foreachBatch with EXACTLY-ONCE appends
-      // (appendToMinhashManifestExactlyOnce: staged docs/bands published
-      // under a batchId ledger; a replayed plain append would bloat both
-      // tables — replay windows pinned in DedupSpec). Probing the other
-      // half afterwards equals probing a batch-built manifest — q84's
-      // oracle verbatim.
+      // (appendToMinhashManifest(batchId = Some(id)): staged docs/bands
+      // published under a batchId ledger; a replayed plain append would
+      // bloat both tables — replay windows pinned in DedupSpec). Probing
+      // the other half afterwards equals probing a batch-built manifest
+      // — q84's oracle verbatim.
       val docs = t(s, d, "documents")
       val path = s"target/graft-stream-manifest-${sfTag(d)}"
       val conf = s.sparkContext.hadoopConfiguration
@@ -172,22 +172,13 @@ object DedupQueries {
         .schema(graft.streaming.DocumentStreams.docSchema)
         .parquet(s"$d/documents.*")
         .where(pmod(col("doc_id"), lit(10)) < 5)
-      val q = stream.writeStream
-        .option("checkpointLocation", s"$path.ckpt")
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-            org.apache.spark.sql.Row], batchId: Long) =>
-          Dedup.appendToMinhashManifestExactlyOnce(batch, "text", "doc_id",
-            path, batchId)
-          // self-maintaining sink: bound docs/bands-file and ledger growth
-          Dedup.autoCompactMinhashManifest(batch.sparkSession, path)
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      // compact the per-batch docs/bands files before probing (full
-      // lifecycle: ingest → compact → probe), putting compaction under
-      // this oracle
-      Dedup.compactMinhashManifest(s, path)
+      // self-maintaining sink (auto-compaction bounds docs/bands-file
+      // and ledger growth), then the per-batch files are compacted
+      // before probing (full lifecycle: ingest → compact → probe),
+      // putting compaction under this oracle
+      Dedup.MinhashManifest.ingest(stream, path)((batch, batchId) =>
+        Dedup.appendToMinhashManifest(batch, "text", "doc_id", path,
+          batchId = Some(batchId)))
       Dedup.incrementalNearDups(
         docs.where(pmod(col("doc_id"), lit(10)) >= 5), path,
         "text", "doc_id", threshold = 0.9)
@@ -336,8 +327,8 @@ object DedupQueries {
         .option("checkpointLocation", s"$path.ckpt")
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[
             org.apache.spark.sql.Row], batchId: Long) =>
-          Dedup.appendToSetSimIndexExactlyOnce(batch, "text", "doc_id",
-            path, batchId)
+          Dedup.appendToSetSimIndex(batch, "text", "doc_id", path,
+            batchId = Some(batchId))
           ()
         }
         .start()
@@ -397,8 +388,8 @@ object DedupQueries {
         .option("checkpointLocation", s"$path.ckpt")
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[
             org.apache.spark.sql.Row], batchId: Long) =>
-          Dedup.appendToSetSimIndexExactlyOnce(batch, "text", "doc_id",
-            path, batchId)
+          Dedup.appendToSetSimIndex(batch, "text", "doc_id", path,
+            batchId = Some(batchId))
           ()
         }
         .start()
@@ -579,7 +570,7 @@ object DedupQueries {
       val probe = docs.where(pmod(col("doc_id"), lit(2)) === 1)
       val pending = Dedup.probeWinnowOverlap(probe, path)
         .withColumn("phase", lit("pending"))
-      Dedup.compactWinnowManifest(s, path)
+      Dedup.WinnowManifest.compact(s, path)
       val folded = Dedup.probeWinnowOverlap(probe, path)
         .withColumn("phase", lit("folded"))
       pending.unionByName(folded).orderBy("phase", "doc_id")
@@ -605,19 +596,11 @@ object DedupQueries {
         .schema(graft.streaming.DocumentStreams.docSchema)
         .parquet(s"$d/documents.*")
         .where(pmod(col("doc_id"), lit(2)) === 0)
-      val q = stream.writeStream
-        .option("checkpointLocation", s"$path.ckpt")
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-            org.apache.spark.sql.Row], batchId: Long) =>
-          Dedup.appendToWinnowManifestExactlyOnce(batch, "text", "doc_id",
-            path, batchId)
-          // self-maintaining sink: bound fps-file and ledger growth
-          Dedup.autoCompactWinnowManifest(batch.sparkSession, path)
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      Dedup.compactWinnowManifest(s, path)
+      // self-maintaining sink: auto-compaction bounds fps-file and
+      // ledger growth; the drained manifest is compacted (h-sort restored)
+      Dedup.WinnowManifest.ingest(stream, path)((batch, batchId) =>
+        Dedup.appendToWinnowManifest(batch, "text", "doc_id", path,
+          batchId = Some(batchId)))
       Dedup.probeWinnowOverlap(
         docs.where(pmod(col("doc_id"), lit(2)) === 1), path)
         .orderBy("doc_id")

@@ -93,10 +93,10 @@ object SearchQueries {
       // the persisted text index via foreachBatch append (the index is
       // CREATED by the first batch's publish), and serving afterwards
       // equals fresh compute over everything ingested — q92's oracle.
-      // Delivery is EXACTLY-ONCE: appendToTextIndexExactlyOnce stages
-      // each micro-batch's files and publishes them under a batchId
-      // ledger, so a replayed batch is a no-op (the file-side dual of
-      // Sinks.streamJdbcExactlyOnce; replay windows pinned in
+      // Delivery is EXACTLY-ONCE: appendToTextIndex(batchId = Some(id))
+      // stages each micro-batch's files and publishes them under a
+      // batchId ledger, so a replayed batch is a no-op (the file-side
+      // dual of Sinks.streamJdbcExactlyOnce; replay windows pinned in
       // SearchSpec).
       val sf = sfTag(d)
       val path = s"target/graft-stream-index-$sf"
@@ -109,23 +109,15 @@ object SearchQueries {
       val docs = s.readStream
         .schema(graft.streaming.DocumentStreams.docSchema)
         .parquet(s"$d/documents.*")
-      val q = docs.writeStream
-        .option("checkpointLocation", s"$path.ckpt")
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-            org.apache.spark.sql.Row], batchId: Long) =>
-          Search.appendToTextIndexExactlyOnce(batch, path, batchId)
-          // the self-maintaining sink: bound the per-batch file trail
-          // (and the ledger, which compaction folds to a high-water
-          // marker — replays stay no-ops across the fold)
-          Search.autoCompactTextIndex(batch.sparkSession, path)
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      // compact the per-batch file trail before serving — the full
-      // lifecycle (ingest → compact → serve), so compaction itself sits
-      // under this oracle: serving must still equal fresh compute
-      Search.compactTextIndex(s, path)
+      // Family.ingest is the self-maintaining sink: each batch's append
+      // is followed by an auto-compaction (bounding the per-batch file
+      // trail and the ledger, which compaction folds to a high-water
+      // marker — replays stay no-ops across the fold), and the drained
+      // index is compacted before serving — the full lifecycle (ingest
+      // → compact → serve), so compaction itself sits under this
+      // oracle: serving must still equal fresh compute
+      Search.TextIndex.ingest(docs, path)((batch, batchId) =>
+        Search.appendToTextIndex(batch, path, batchId = Some(batchId)))
       Search.bm25TopKIndexed(s, path, bmTerms, k = 20, k1 = k1, b = b)
     }),
 
@@ -168,11 +160,11 @@ object SearchQueries {
       val path = s"target/graft-text-index-conjsnap-$sf"
       val docs = t(s, d, "documents")
       Search.saveTextIndex(docs, path)
-      Search.compactTextIndex(s, path)
+      Search.TextIndex.compact(s, path)
       Search.TextIndex.snapshot(s, path, "pre_campaign")
       Search.deleteFromTextIndex(s, path,
         docs.where(pmod(col("doc_id"), lit(10)) === 3).select("doc_id"))
-      Search.compactTextIndex(s, path)
+      Search.TextIndex.compact(s, path)
       Search.conjunctiveSearch(s, path, bmTerms,
         at = Family.Pinned("pre_campaign"))
     }),
@@ -189,11 +181,11 @@ object SearchQueries {
       val path = s"target/graft-text-index-snap-$sf"
       val docs = t(s, d, "documents")
       Search.saveTextIndex(docs, path)
-      Search.compactTextIndex(s, path)
+      Search.TextIndex.compact(s, path)
       Search.TextIndex.snapshot(s, path, "pre_campaign")
       Search.deleteFromTextIndex(s, path,
         docs.where(pmod(col("doc_id"), lit(10)) === 3).select("doc_id"))
-      Search.compactTextIndex(s, path)
+      Search.TextIndex.compact(s, path)
       Search.bm25TopKIndexed(s, path, bmTerms, k = 20, k1 = k1, b = b,
         at = Family.Pinned("pre_campaign"))
     }),
@@ -210,11 +202,11 @@ object SearchQueries {
       val path = s"target/graft-text-index-rollback-$sf"
       val docs = t(s, d, "documents")
       Search.saveTextIndex(docs, path)
-      Search.compactTextIndex(s, path)
+      Search.TextIndex.compact(s, path)
       Search.TextIndex.snapshot(s, path, "pre_campaign")
       Search.deleteFromTextIndex(s, path,
         docs.where(pmod(col("doc_id"), lit(10)) === 3).select("doc_id"))
-      Search.compactTextIndex(s, path)
+      Search.TextIndex.compact(s, path)
       Search.TextIndex.restore(s, path, "pre_campaign")
       Search.bm25TopKIndexed(s, path, bmTerms, k = 20, k1 = k1, b = b)
     }),
@@ -263,8 +255,8 @@ object SearchQueries {
         && pmod(col("doc_id"), lit(2)) === 0), path)
       val eo = docs.where(pmod(col("doc_id"), lit(3)) === 2
         && pmod(col("doc_id"), lit(2)) === 1)
-      Search.appendToTextIndexExactlyOnce(eo, path, batchId = 1L)
-      Search.appendToTextIndexExactlyOnce(eo, path, batchId = 1L) // replay
+      Search.appendToTextIndex(eo, path, batchId = Some(1L))
+      Search.appendToTextIndex(eo, path, batchId = Some(1L)) // replay
       phraseServePair(s, path)
     }),
 
@@ -306,17 +298,8 @@ object SearchQueries {
       val docs = s.readStream
         .schema(graft.streaming.DocumentStreams.docSchema)
         .parquet(s"$d/documents.*")
-      val q = docs.writeStream
-        .option("checkpointLocation", s"$path.ckpt")
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-            org.apache.spark.sql.Row], batchId: Long) =>
-          Search.appendToTextIndexExactlyOnce(batch, path, batchId)
-          Search.autoCompactTextIndex(batch.sparkSession, path)
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      Search.compactTextIndex(s, path)
+      Search.TextIndex.ingest(docs, path)((batch, batchId) =>
+        Search.appendToTextIndex(batch, path, batchId = Some(batchId)))
       phraseServePair(s, path)
     }),
 
@@ -334,11 +317,11 @@ object SearchQueries {
       val path = s"target/graft-text-index-rb-audit-$sf"
       val docs = t(s, d, "documents")
       Search.saveTextIndex(docs, path)
-      Search.compactTextIndex(s, path)
+      Search.TextIndex.compact(s, path)
       Search.TextIndex.snapshot(s, path, "pre_campaign")
       Search.deleteFromTextIndex(s, path,
         docs.where(pmod(col("doc_id"), lit(10)) === 3).select("doc_id"))
-      Search.compactTextIndex(s, path)
+      Search.TextIndex.compact(s, path)
       Search.TextIndex.restore(s, path, "pre_campaign")
       Search.bm25MaintenanceDiff(s, path, bmTerms, k = 20, k1 = k1, b = b)
     }),
@@ -354,7 +337,7 @@ object SearchQueries {
       val path = s"target/graft-text-index-diff-$sf"
       val docs = t(s, d, "documents")
       Search.saveTextIndex(docs, path)
-      Search.compactTextIndex(s, path)
+      Search.TextIndex.compact(s, path)
       Search.deleteFromTextIndex(s, path,
         docs.where(pmod(col("doc_id"), lit(10)) === 3).select("doc_id"))
       Search.bm25MaintenanceDiff(s, path, bmTerms, k = 20, k1 = k1, b = b)
@@ -373,7 +356,7 @@ object SearchQueries {
       val path = s"target/graft-text-index-asof-$sf"
       val docs = t(s, d, "documents")
       Search.saveTextIndex(docs, path)
-      Search.compactTextIndex(s, path)
+      Search.TextIndex.compact(s, path)
       Search.deleteFromTextIndex(s, path,
         docs.where(pmod(col("doc_id"), lit(10)) === 3).select("doc_id"))
       Search.bm25TopKIndexed(s, path, bmTerms, k = 20, k1 = k1, b = b,

@@ -54,7 +54,7 @@ object ServeBench {
       // re-sorts them, the delete anti-joins them), so the phrase serve
       // (s14) reads a maintained component, not a fresh build
       Search.savePositionalIndex(docs, p)
-      Search.compactTextIndex(s, p)
+      Search.TextIndex.compact(s, p)
       Search.TextIndex.snapshot(s, p, "bench_pin")
       Search.deleteFromTextIndex(s, p,
         docs.where(pmod(col("doc_id"), lit(10)) === 3).select("doc_id"))
@@ -65,7 +65,7 @@ object ServeBench {
       Dedup.saveMinhashManifest(
         docs.where(pmod(col("doc_id"), lit(10)) < 5), "text", "doc_id",
         p, k = 32, bands = 16) // q84's parameters, so serve == its tail
-      Dedup.compactMinhashManifest(s, p)
+      Dedup.MinhashManifest.compact(s, p)
       Dedup.MinhashManifest.snapshot(s, p, "bench_pin")
       Dedup.deleteContentFromMinhashManifest(
         docs.where(pmod(col("doc_id"), lit(10)) === 1), "text", p)
@@ -115,11 +115,11 @@ object ServeBench {
     "campaign" -> ((s, d) => {
       val docs = t(s, d, "documents")
       Search.saveTextIndex(docs, cTextPath(d))
-      Search.compactTextIndex(s, cTextPath(d))
+      Search.TextIndex.compact(s, cTextPath(d))
       Dedup.saveMinhashManifest(
         docs.where(pmod(col("doc_id"), lit(10)) < 5), "text", "doc_id",
         cManiPath(d), k = 32, bands = 16)
-      Dedup.compactMinhashManifest(s, cManiPath(d))
+      Dedup.MinhashManifest.compact(s, cManiPath(d))
       val split = Corpus.splitAssign(docs, "text")
       Corpus.saveLm(split.where(col("split") === "train"), "text",
         "doc_id", cLmPath(d))

@@ -370,7 +370,7 @@ object SimilarityQueries {
       Similarity.saveIvfIndex(emb, path, nCentroids = 16, dim = 64,
         quantScale = 200.0,
         centroidsIn = Similarity.sampleCentroids(deq, 16))
-      Similarity.compactIvfIndex(s, path)
+      Similarity.IvfIndex.compact(s, path)
       Similarity.deleteFromIvfIndex(s, path,
         emb.where(pmod(col("vec_id"), lit(10)) === 7).select("vec_id"))
       Similarity.topKIvfIndexed(s, deq.where(col("vec_id") < 10),
@@ -475,17 +475,8 @@ object SimilarityQueries {
       val vecs = s.readStream
         .schema(Tables.parquetSchema(s, s"$d/embeddings.parquet"))
         .parquet(s"$d/embeddings.*")
-      val q = vecs.writeStream
-        .option("checkpointLocation", s"$path.ckpt")
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-            org.apache.spark.sql.Row], batchId: Long) =>
-          Similarity.appendToPqIndexExactlyOnce(batch, path, batchId)
-          Similarity.autoCompactPqIndex(batch.sparkSession, path)
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      Similarity.compactPqIndex(s, path)
+      Similarity.PqIndex.ingest(vecs, path)((batch, batchId) =>
+        Similarity.appendToPqIndex(batch, path, batchId = Some(batchId)))
       Similarity.pqTopKIndexed(s, emb.where(col("vec_id") < 10), path,
         k = 10)
         .orderBy("query_id", "rank")
@@ -527,8 +518,8 @@ object SimilarityQueries {
       // the PERSISTED BINARY index's full lifecycle under one oracle:
       // build on the even half, append the odd half (signatures are a
       // pure function of vector + dim, so the grown index equals a
-      // fresh build over the union), DELETE a tenth (immediate
-      // anti-join rewrite of the packed-words relation), compact the
+      // fresh build over the union), DELETE a tenth (tombstones folded
+      // out of the packed-words relation in the same call), compact the
       // append trail, then serve from the stored words with the exact
       // rerank reading the raw vectors from the embeddings table. The
       // oracle replays q203's pack/pool/rerank over the effective
@@ -542,7 +533,7 @@ object SimilarityQueries {
         emb.where(pmod(col("vec_id"), lit(2)) === 1), path)
       Similarity.deleteFromBinaryIndex(s, path,
         emb.where(pmod(col("vec_id"), lit(10)) === 7).select("vec_id"))
-      Similarity.compactBinaryIndex(s, path)
+      Similarity.BinaryIndex.compact(s, path)
       Similarity.binaryTopKIndexed(s, emb.where(col("vec_id") < 10),
         emb, path, k = 10, overfetch = 16)
         .orderBy("query_id", "rank")
@@ -567,17 +558,8 @@ object SimilarityQueries {
       val vecs = s.readStream
         .schema(Tables.parquetSchema(s, s"$d/embeddings.parquet"))
         .parquet(s"$d/embeddings.*")
-      val q = vecs.writeStream
-        .option("checkpointLocation", s"$path.ckpt")
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-            org.apache.spark.sql.Row], batchId: Long) =>
-          Similarity.appendToBinaryIndexExactlyOnce(batch, path, batchId)
-          Similarity.autoCompactBinaryIndex(batch.sparkSession, path)
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      Similarity.compactBinaryIndex(s, path)
+      Similarity.BinaryIndex.ingest(vecs, path)((batch, batchId) =>
+        Similarity.appendToBinaryIndex(batch, path, batchId = Some(batchId)))
       Similarity.binaryTopKIndexed(s, emb.where(col("vec_id") < 10),
         emb, path, k = 10, overfetch = 16)
         .orderBy("query_id", "rank")
@@ -589,10 +571,10 @@ object SimilarityQueries {
       // subvectors, frozen), append the odd half with the frozen books
       // (codes are a pure function of vector + codebooks, so the grown
       // index equals a fresh build over the union — q89's argument for
-      // PQ), DELETE a tenth (immediate anti-join rewrite of the 8-byte
-      // code relation), then serve from the stored codes. The oracle
-      // re-derives the build-half codebooks, every code over the union,
-      // drops the deleted tenth, and replays every ADC sum.
+      // PQ), DELETE a tenth (tombstones folded out of the 8-byte code
+      // relation in the same call), then serve from the stored codes.
+      // The oracle re-derives the build-half codebooks, every code over
+      // the union, drops the deleted tenth, and replays every ADC sum.
       val sf = sfTag(d)
       val path = s"target/graft-pq-index-$sf"
       val emb = t(s, d, "embeddings")
@@ -675,7 +657,7 @@ object SimilarityQueries {
       // ANN index): an index SHELL is built first — frozen full-corpus
       // sample centroids + meta, empty lists — then an embedding stream
       // feeds the inverted lists via foreachBatch with EXACTLY-ONCE
-      // appends (appendToIvfIndexExactlyOnce: staged files published
+      // appends (appendToIvfIndex(batchId = …): staged files published
       // under a batchId ledger; a replayed batch would otherwise
       // DUPLICATE vectors and change served top-k — replay windows
       // pinned in SimilaritySpec). Assignment is a pure function of
@@ -698,20 +680,12 @@ object SimilarityQueries {
       val vecs = s.readStream
         .schema(Tables.parquetSchema(s, s"$d/embeddings.parquet"))
         .parquet(s"$d/embeddings.*")
-      val q = vecs.writeStream
-        .option("checkpointLocation", s"$path.ckpt")
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-            org.apache.spark.sql.Row], batchId: Long) =>
-          Similarity.appendToIvfIndexExactlyOnce(batch, path, batchId)
-          // self-maintaining sink: bound list-file and ledger growth
-          Similarity.autoCompactIvfIndex(batch.sparkSession, path)
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      // compact the per-batch list files before serving (full lifecycle:
-      // ingest → compact → serve), putting compaction under this oracle
-      Similarity.compactIvfIndex(s, path)
+      // self-maintaining sink (auto-compaction bounds list-file and
+      // ledger growth), then the per-batch list files are compacted
+      // before serving (full lifecycle: ingest → compact → serve),
+      // putting compaction under this oracle
+      Similarity.IvfIndex.ingest(vecs, path)((batch, batchId) =>
+        Similarity.appendToIvfIndex(batch, path, batchId = Some(batchId)))
       Similarity.topKIvfIndexed(s, deq.where(col("vec_id") < 10), path, k = 10)
         .orderBy("query_id", "rank")
     })

@@ -149,7 +149,7 @@ object ScaleProbe {
             Dedup.incrementalNearDups(base, path, "text", "doc_id", 0.9).count()
           }
           time(s"${k}x tombstone-fold(compaction)") {
-            Dedup.compactMinhashManifest(spark, path)
+            Dedup.MinhashManifest.compact(spark, path)
           }
         }
       }
@@ -243,7 +243,7 @@ object ScaleProbe {
           .count()
       }
       time(s"${k}x lm-delta-fold(compaction)") {
-        graft.ext.Corpus.compactLm(spark, path)
+        graft.ext.Corpus.Lm.compact(spark, path)
       }
       time(s"${k}x lm-score-compacted") {
         graft.ext.Corpus.lmPerplexityIndexed(base, path, "text", "doc_id")
@@ -414,15 +414,15 @@ object ScaleProbe {
       // compacted — the listing + tiny-row-group tax compaction removes
       for (b <- 1 to 30) {
         val slice = batch.where(pmod(col("doc_id"), lit(30)) === b % 30)
-        graft.ext.Search.appendToTextIndexExactlyOnce(
-          slice, idx, batchId = b.toLong)
+        graft.ext.Search.appendToTextIndex(slice, idx,
+          batchId = Some(b.toLong))
       }
       time(s"${k}x textindex-serve-fragmented(31-gen)") {
         graft.ext.Search.bm25TopKIndexed(spark, idx,
           Seq("spark", "join", "window", "stream"), 20).count()
       }
       time(s"${k}x textindex-compact") {
-        graft.ext.Search.compactTextIndex(spark, idx)
+        graft.ext.Search.TextIndex.compact(spark, idx)
       }
       time(s"${k}x textindex-serve-compacted") {
         graft.ext.Search.bm25TopKIndexed(spark, idx,
@@ -448,9 +448,9 @@ object ScaleProbe {
           .delete(hp, true)
       }
       graft.ext.Search.saveTextIndex(docs, text)
-      graft.ext.Search.compactTextIndex(spark, text)
+      graft.ext.Search.TextIndex.compact(spark, text)
       Dedup.saveMinhashManifest(docs, "text", "doc_id", mani)
-      Dedup.compactMinhashManifest(spark, mani)
+      Dedup.MinhashManifest.compact(spark, mani)
       graft.ext.Corpus.saveLm(docs, "text", "doc_id", lm)
       val members = Seq(
         graft.ext.Campaign.Member(graft.ext.Search.TextIndex, text),
@@ -675,7 +675,7 @@ object ScaleProbe {
       Dedup.tombstoneContentInMinhashManifest(
         docs1.where(pmod(col("doc_id"), lit(1000)) === 6), "text", mani)
       timed1("minhash-manifest-compaction") {
-        Dedup.compactMinhashManifest(spark, mani); "compacted"
+        Dedup.MinhashManifest.compact(spark, mani); "compacted"
       }
       timed1("winnow-spans") {
         Dedup.winnowSpans(docs1, "text", "doc_id",
@@ -691,11 +691,11 @@ object ScaleProbe {
       }
       timed1("campaign-build(3 families)") {
         graft.ext.Search.saveTextIndex(docs1, ctext)
-        graft.ext.Search.compactTextIndex(spark, ctext)
+        graft.ext.Search.TextIndex.compact(spark, ctext)
         Dedup.saveMinhashManifest(
           docs1.where(pmod(col("doc_id"), lit(10)) < 5), "text", "doc_id",
           cmani, k = 32, bands = 16)
-        Dedup.compactMinhashManifest(spark, cmani)
+        Dedup.MinhashManifest.compact(spark, cmani)
         graft.ext.Corpus.saveLm(docs1, "text", "doc_id", clm); "built"
       }
       val members = Seq(
@@ -786,7 +786,7 @@ object ScaleProbe {
         .delete(text3P, true)
       timed3("textindex-build+compact") {
         graft.ext.Search.saveTextIndex(docs3, text3)
-        graft.ext.Search.compactTextIndex(spark, text3); "built"
+        graft.ext.Search.TextIndex.compact(spark, text3); "built"
       }
       spark.sparkContext.removeSparkListener(spillListener)
     }

@@ -41,7 +41,7 @@ class CampaignSpec extends AnyFunSuite {
     Search.compactTextIndex(spark, text) // → versioned
     Dedup.saveMinhashManifest(docs.where(col("doc_id") <= 4),
       "text", "doc_id", mani, k = 16, bands = 8)
-    Dedup.compactMinhashManifest(spark, mani) // → versioned
+    Dedup.MinhashManifest.compact(spark, mani) // → versioned
     Corpus.saveLm(docs.where(col("doc_id") <= 4), "text", "doc_id", lm)
     val members = Seq(Member(Search.TextIndex, text),
       Member(Dedup.MinhashManifest, mani), Member(Corpus.Lm, lm))
@@ -65,10 +65,10 @@ class CampaignSpec extends AnyFunSuite {
     Search.compactTextIndex(spark, text)
     Dedup.deleteContentFromMinhashManifest(
       docs.where(col("doc_id") === 1), "text", mani)
-    Dedup.compactMinhashManifest(spark, mani)
+    Dedup.MinhashManifest.compact(spark, mani)
     Corpus.appendToLm(docs.where(col("doc_id") === 6), lm, "text",
       "doc_id", opId = "grow6")
-    Corpus.compactLm(spark, lm)
+    Corpus.Lm.compact(spark, lm)
     // live state diverged...
     assert(!Search.bm25TopKIndexed(spark, text, Seq("spark"), 10)
       .collect().map(_.getLong(0)).contains(1L))
@@ -96,7 +96,7 @@ class CampaignSpec extends AnyFunSuite {
     Search.compactTextIndex(spark, text)
     Dedup.saveMinhashManifest(docs.where(col("doc_id") <= 4),
       "text", "doc_id", mani, k = 16, bands = 8)
-    Dedup.compactMinhashManifest(spark, mani)
+    Dedup.MinhashManifest.compact(spark, mani)
     Corpus.saveLm(docs.where(col("doc_id") <= 4), "text", "doc_id", lm)
     val members = Seq(Member(Search.TextIndex, text),
       Member(Dedup.MinhashManifest, mani), Member(Corpus.Lm, lm))
@@ -117,10 +117,10 @@ class CampaignSpec extends AnyFunSuite {
     Search.compactTextIndex(spark, text)
     Dedup.deleteContentFromMinhashManifest(
       docs.where(col("doc_id") === 1), "text", mani)
-    Dedup.compactMinhashManifest(spark, mani)
+    Dedup.MinhashManifest.compact(spark, mani)
     Corpus.appendToLm(docs.where(col("doc_id") === 6), lm, "text",
       "doc_id", opId = "grow6")
-    Corpus.compactLm(spark, lm)
+    Corpus.Lm.compact(spark, lm)
     assert(servedLive() != atPin) // the campaign changed what serves
     // ONE restore call returns all three to the pinned instant
     Campaign.restore(spark, "rel", members)
@@ -352,7 +352,7 @@ class CampaignSpec extends AnyFunSuite {
     // maintenance on the IVF member after the pin is invisible through it
     graft.ext.Similarity.deleteFromIvfIndex(spark, ivf,
       emb.where(pmod(col("vec_id"), lit(3)) === 1).select("vec_id"))
-    graft.ext.Similarity.compactIvfIndex(spark, ivf)
+    graft.ext.Similarity.IvfIndex.compact(spark, ivf)
     assert(pinned() == atPin)
     Campaign.drop(spark, "rel", members)
     Campaign.vacuum(spark, members)

@@ -78,10 +78,10 @@ class CompactionSpec extends AnyFunSuite {
     fs.delete(new Path(idx), true)
     Similarity.saveIvfIndex(emb.where(col("vec_id") % 3 === 0), idx,
       nCentroids = 8, dim = 64, quantScale = 200.0, centroidsIn = cents)
-    Similarity.appendToIvfIndexExactlyOnce(
-      emb.where(col("vec_id") % 3 === 1), idx, batchId = 1L)
-    Similarity.appendToIvfIndexExactlyOnce(
-      emb.where(col("vec_id") % 3 === 2), idx, batchId = 2L)
+    Similarity.appendToIvfIndex(
+      emb.where(col("vec_id") % 3 === 1), idx, batchId = Some(1L))
+    Similarity.appendToIvfIndex(
+      emb.where(col("vec_id") % 3 === 2), idx, batchId = Some(2L))
     def content() = spark.read.parquet(Stage.resolve(spark, s"$idx/lists"))
       .select(col("vec_id"), col("centroid"), col("code"))
       .as[(Long, Int, Seq[Byte])].collect()
@@ -93,7 +93,7 @@ class CompactionSpec extends AnyFunSuite {
       .as[(Long, Long, Double, Int)].collect().toSet
     val (contentBefore, serveBefore) = (content(), serve())
     val filesBefore = dataFiles(s"$idx/lists")
-    Similarity.compactIvfIndex(spark, idx)
+    Similarity.IvfIndex.compact(spark, idx)
     assert(dataFiles(s"$idx/lists") < filesBefore,
       s"expected fewer list files, got $filesBefore -> ${dataFiles(s"$idx/lists")}")
     assert(content() == contentBefore)
@@ -113,12 +113,12 @@ class CompactionSpec extends AnyFunSuite {
     Dedup.saveMinhashManifest(
       Seq((1L, texts(0)), (2L, texts(1))).toDF("doc_id", "text"),
       "text", "doc_id", path, k = 32, bands = 16)
-    Dedup.appendToMinhashManifestExactlyOnce(
+    Dedup.appendToMinhashManifest(
       Seq((3L, texts(2)), (4L, texts(3))).toDF("doc_id", "text"),
-      "text", "doc_id", path, batchId = 1L)
-    Dedup.appendToMinhashManifestExactlyOnce(
+      "text", "doc_id", path, batchId = Some(1L))
+    Dedup.appendToMinhashManifest(
       Seq((5L, texts(4)), (6L, texts(5))).toDF("doc_id", "text"),
-      "text", "doc_id", path, batchId = 2L)
+      "text", "doc_id", path, batchId = Some(2L))
     def probe() = Dedup.incrementalNearDups(
       texts.zipWithIndex.map { case (t, i) => (100L + i, t) }
         .:+((200L, "a wholly novel probe document text"))
@@ -128,7 +128,7 @@ class CompactionSpec extends AnyFunSuite {
     val before = probe()
     assert(before.count(_._2) == texts.size) // all known content flags
     val filesBefore = Seq("docs", "bands").map(c => dataFiles(s"$path/$c"))
-    Dedup.compactMinhashManifest(spark, path)
+    Dedup.MinhashManifest.compact(spark, path)
     val filesAfter = Seq("docs", "bands").map(c => dataFiles(s"$path/$c"))
     assert(filesAfter.zip(filesBefore).forall { case (a, b) => a < b },
       s"expected fewer files per table, got $filesBefore -> $filesAfter")
@@ -147,17 +147,17 @@ class CompactionSpec extends AnyFunSuite {
     Similarity.saveIvfIndex(emb.where(col("vec_id") % 2 === 0), ivf,
       nCentroids = 8, dim = 64, quantScale = 200.0,
       centroidsIn = Similarity.sampleCentroids(deq, 8))
-    Similarity.appendToIvfIndexExactlyOnce(
-      emb.where(col("vec_id") % 2 === 1), ivf, batchId = 1L)
+    Similarity.appendToIvfIndex(
+      emb.where(col("vec_id") % 2 === 1), ivf, batchId = Some(1L))
     def serveIvf() = Similarity.topKIvfIndexed(spark,
       deq.where(col("vec_id") < 5), ivf, k = 5)
       .select("query_id", "neighbor_id", "rank")
       .as[(Long, Long, Int)].collect().toSet
     val ivfBefore = serveIvf()
     val ivfFrag = Stage.fragmentation(spark, s"$ivf/lists")
-    assert(!Similarity.autoCompactIvfIndex(spark, ivf, 10000)) // below: no-op
+    assert(!Similarity.IvfIndex.autoCompact(spark, ivf, 10000)) // below: no-op
     assert(Stage.fragmentation(spark, s"$ivf/lists") == ivfFrag)
-    assert(Similarity.autoCompactIvfIndex(spark, ivf, 1)) // above: rewrite
+    assert(Similarity.IvfIndex.autoCompact(spark, ivf, 1)) // above: rewrite
     assert(Stage.fragmentation(spark, s"$ivf/lists") < ivfFrag)
     assert(serveIvf() == ivfBefore)
 
@@ -166,16 +166,16 @@ class CompactionSpec extends AnyFunSuite {
     Dedup.saveMinhashManifest(
       Seq((1L, "alpha beta gamma delta")).toDF("doc_id", "text"),
       "text", "doc_id", man, k = 32, bands = 16)
-    Dedup.appendToMinhashManifestExactlyOnce(
+    Dedup.appendToMinhashManifest(
       Seq((2L, "totally different content here")).toDF("doc_id", "text"),
-      "text", "doc_id", man, batchId = 1L)
+      "text", "doc_id", man, batchId = Some(1L))
     def probeMan() = Dedup.incrementalNearDups(
       Seq((10L, "alpha beta gamma delta")).toDF("doc_id", "text"),
       man, "text", "doc_id", 0.9)
       .collect().map(r => (r.getLong(0), r.getBoolean(2))).toSeq
     val manBefore = probeMan()
-    assert(!Dedup.autoCompactMinhashManifest(spark, man, 10000))
-    assert(Dedup.autoCompactMinhashManifest(spark, man, 1))
+    assert(!Dedup.MinhashManifest.autoCompact(spark, man, 10000))
+    assert(Dedup.MinhashManifest.autoCompact(spark, man, 1))
     assert(probeMan() == manBefore)
 
     val lm = "target/graft-test-autocompact-lm"
@@ -190,8 +190,8 @@ class CompactionSpec extends AnyFunSuite {
       Seq((9L, "a b c d e")).toDF("doc_id", "text"), lm, "text", "doc_id")
       .collect().map(_.toSeq).toSeq
     val lmBefore = scoreLm()
-    assert(!graft.ext.Corpus.autoCompactLm(spark, lm, 10000))
-    assert(graft.ext.Corpus.autoCompactLm(spark, lm, 1))
+    assert(!graft.ext.Corpus.Lm.autoCompact(spark, lm, 10000))
+    assert(graft.ext.Corpus.Lm.autoCompact(spark, lm, 1))
     assert(scoreLm() == lmBefore)
   }
 }

@@ -619,7 +619,7 @@ class CorpusSpec extends AnyFunSuite {
     assert(rows(Corpus.lmPerplexityIndexed(
       batch, path, "text", "doc_id", at = Family.Pinned("pin"))) == atPin)
     // compaction REWRITES the components; the pin keeps its state
-    Corpus.compactLm(spark, path)
+    Corpus.Lm.compact(spark, path)
     assert(rows(Corpus.lmPerplexityIndexed(
       batch, path, "text", "doc_id", at = Family.Pinned("pin"))) == atPin)
     assert(rows(Corpus.lmPerplexityIndexed(batch, path, "text", "doc_id"))
@@ -645,7 +645,7 @@ class CorpusSpec extends AnyFunSuite {
     Corpus.saveLm(half1.unionAll(half2), "text", "doc_id", fresh)
     assert(score(grown) == score(fresh))
     // compaction folds the two delta generations; scoring is unchanged
-    Corpus.compactLm(spark, grown)
+    Corpus.Lm.compact(spark, grown)
     assert(score(grown) == score(fresh))
   }
 
@@ -659,8 +659,8 @@ class CorpusSpec extends AnyFunSuite {
     val b1 = Seq((3L, "c d e"), (4L, "a e b")).toDF("doc_id", "text")
     val batch = Seq((10L, "a b c d e")).toDF("doc_id", "text")
     // first batch CREATES the model via its publish
-    Corpus.appendToLmExactlyOnce(b0, path, "text", "doc_id", batchId = 0L)
-    Corpus.appendToLmExactlyOnce(b1, path, "text", "doc_id", batchId = 1L)
+    Corpus.appendToLm(b0, path, "text", "doc_id", batchId = Some(0L))
+    Corpus.appendToLm(b1, path, "text", "doc_id", batchId = Some(1L))
     def score() = Corpus.lmPerplexityIndexed(batch, path, "text", "doc_id")
       .orderBy("doc_id").as[(Long, Long, Long, Long)].collect().toList
     val expected = score()
@@ -670,15 +670,15 @@ class CorpusSpec extends AnyFunSuite {
       .orderBy("doc_id").as[(Long, Long, Long, Long)].collect().toList)
     // a replayed plain append would double b1's counts and change scores;
     // each replay window below must leave them identical
-    Corpus.appendToLmExactlyOnce(b1, path, "text", "doc_id", batchId = 1L)
+    Corpus.appendToLm(b1, path, "text", "doc_id", batchId = Some(1L))
     assert(score() == expected) // window A: marker present → no-op
     fs.delete(new Path(s"$path/_ledger/batch-1"), false)
-    Corpus.appendToLmExactlyOnce(b1, path, "text", "doc_id", batchId = 1L)
+    Corpus.appendToLm(b1, path, "text", "doc_id", batchId = Some(1L))
     assert(score() == expected) // window B: post-publish crash → clean redo
     fs.delete(new Path(s"$path/_ledger/batch-1"), false)
     fs.mkdirs(new Path(s"$path/_staging/batch-1/bigrams"))
     fs.create(new Path(s"$path/_staging/batch-1/bigrams/part-junk"), true).close()
-    Corpus.appendToLmExactlyOnce(b1, path, "text", "doc_id", batchId = 1L)
+    Corpus.appendToLm(b1, path, "text", "doc_id", batchId = Some(1L))
     assert(score() == expected) // window C: mid-staging crash → re-stage
     assert(!fs.exists(new Path(s"$path/_staging/batch-1")))
   }
@@ -877,7 +877,7 @@ class CorpusSpec extends AnyFunSuite {
         .where($"tok" === tok).agg(coalesce(sum($"c"), lit(0L)))
         .head().getLong(0)
     assert(vocabCount(shrunk, "zonly") == 0)
-    graft.ext.Corpus.compactLm(spark, shrunk)
+    graft.ext.Corpus.Lm.compact(spark, shrunk)
     assert(spark.read.parquet(graft.ops.Stage.resolve(spark, s"$shrunk/vocab"))
       .where($"tok" === "zonly").count() == 0)
     // and the compacted model still scores identically to the fresh train
@@ -905,7 +905,7 @@ class CorpusSpec extends AnyFunSuite {
     graft.ext.Corpus.deleteFromLm(extra, path, "text", "doc_id", opId = "f1")
     assert(score() == afterDelete)
     // and the fold keeps both verdicts (op markers survive compaction)
-    graft.ext.Corpus.compactLm(spark, path)
+    graft.ext.Corpus.Lm.compact(spark, path)
     assert(score() == afterDelete)
     graft.ext.Corpus.appendToLm(extra, path, "text", "doc_id", opId = "g1")
     assert(score() == afterDelete)

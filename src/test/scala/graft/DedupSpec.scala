@@ -693,7 +693,7 @@ class DedupSpec extends AnyFunSuite {
     val full = verdicts(
       Dedup.incrementalNearDups(batch, path, "text", "doc_id"))
     assert(full == Map(10L -> true, 11L -> true, 12L -> false))
-    Dedup.compactMinhashManifest(spark, path) // migrate plain → v1
+    Dedup.MinhashManifest.compact(spark, path) // migrate plain → v1
     Dedup.deleteContentFromMinhashManifest(
       Seq((99L, base)).toDF("doc_id", "text"), "text", path) // → v2
     // live probe forgot `base`; the previous snapshot still knows it
@@ -721,12 +721,12 @@ class DedupSpec extends AnyFunSuite {
       df.collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
     val full = verdicts(
       Dedup.incrementalNearDups(batch, path, "text", "doc_id"))
-    Dedup.compactMinhashManifest(spark, path) // migrate plain → v1
+    Dedup.MinhashManifest.compact(spark, path) // migrate plain → v1
     Dedup.MinhashManifest.snapshot(spark, path, "pre_campaign")
     // TWO maintenance ops later — the second would GC v1 unpinned
     Dedup.deleteContentFromMinhashManifest(
       Seq((99L, base)).toDF("doc_id", "text"), "text", path) // → v2
-    Dedup.compactMinhashManifest(spark, path) // → v3
+    Dedup.MinhashManifest.compact(spark, path) // → v3
     // the previous window has moved past v1, but the pin still serves it
     assert(verdicts(Dedup.incrementalNearDups(
       batch, path, "text", "doc_id",
@@ -821,28 +821,28 @@ class DedupSpec extends AnyFunSuite {
       "text", "doc_id", path, k = 32, bands = 16)
     val batch = Seq((10L, unrelated(0)), (11L, unrelated(1)))
       .toDF("doc_id", "text")
-    Dedup.appendToMinhashManifestExactlyOnce(batch, "text", "doc_id", path,
-      batchId = 0L)
+    Dedup.appendToMinhashManifest(batch, "text", "doc_id", path,
+      batchId = Some(0L))
     def counts() = (
       spark.read.parquet(graft.ops.Stage.resolve(spark, s"$path/docs")).count(),
       spark.read.parquet(graft.ops.Stage.resolve(spark, s"$path/bands")).count())
     val expected = counts()
     assert(expected._1 == 3) // base rep + two appended docs, no duplicates
     // window A: marker present → the whole call is a no-op
-    Dedup.appendToMinhashManifestExactlyOnce(batch, "text", "doc_id", path,
-      batchId = 0L)
+    Dedup.appendToMinhashManifest(batch, "text", "doc_id", path,
+      batchId = Some(0L))
     assert(counts() == expected)
     // window B: crash AFTER publish, BEFORE the marker → sweep + republish
     fs.delete(new Path(s"$path/_ledger/batch-0"), false)
-    Dedup.appendToMinhashManifestExactlyOnce(batch, "text", "doc_id", path,
-      batchId = 0L)
+    Dedup.appendToMinhashManifest(batch, "text", "doc_id", path,
+      batchId = Some(0L))
     assert(counts() == expected)
     // window C: crash MID-STAGING (partial staging dir, no marker)
     fs.delete(new Path(s"$path/_ledger/batch-0"), false)
     fs.mkdirs(new Path(s"$path/_staging/batch-0/docs"))
     fs.create(new Path(s"$path/_staging/batch-0/docs/part-junk"), true).close()
-    Dedup.appendToMinhashManifestExactlyOnce(batch, "text", "doc_id", path,
-      batchId = 0L)
+    Dedup.appendToMinhashManifest(batch, "text", "doc_id", path,
+      batchId = Some(0L))
     assert(counts() == expected)
     assert(!fs.exists(new Path(s"$path/_staging/batch-0")))
     // and probe verdicts match the grown manifest's content
@@ -884,7 +884,7 @@ class DedupSpec extends AnyFunSuite {
     assert(spark.read.parquet(graft.ops.Stage.resolve(spark, s"$path/docs"))
       .where($"doc" === 1L).count() == 1)
     // compaction folds the tombstone into a physical delete and resets it
-    Dedup.compactMinhashManifest(spark, path)
+    Dedup.MinhashManifest.compact(spark, path)
     assert(spark.read.parquet(graft.ops.Stage.resolve(spark, s"$path/docs"))
       .where($"doc" === 1L).count() == 0)
     assert(graft.ops.Stage.pendingTombstones(spark, path).isEmpty)
@@ -1124,13 +1124,13 @@ class DedupSpec extends AnyFunSuite {
     assert(got.find(_._1 == 5L).get ==
       ((5L, 0L, -1L, 0L, 0L, false))) // null text: all-zero row, not absent
     // exactly-once: a replayed batch id is a no-op (verdicts unchanged)
-    graft.ext.Dedup.appendToWinnowManifestExactlyOnce(
+    graft.ext.Dedup.appendToWinnowManifest(
       Seq((6L, "zz yy xx ww vv uu")).toDF("doc_id", "text"),
-      "text", "doc_id", path, batchId = 9L)
+      "text", "doc_id", path, batchId = Some(9L))
     val after = verdicts(path)
-    graft.ext.Dedup.appendToWinnowManifestExactlyOnce(
+    graft.ext.Dedup.appendToWinnowManifest(
       Seq((6L, "zz yy xx ww vv uu")).toDF("doc_id", "text"),
-      "text", "doc_id", path, batchId = 9L)
+      "text", "doc_id", path, batchId = Some(9L))
     assert(verdicts(path) == after)
     // forget doc 1: its quote verdict vanishes; the pinned pre-forget
     // state restores it (born-versioned: the pin works off the build)
@@ -1147,7 +1147,7 @@ class DedupSpec extends AnyFunSuite {
       Seq(1L).toDF("doc_id"))
     val masked = verdicts(path)
     assert(masked.find(_._1 == 3L).get._4 == 0L) // pending mask holds
-    graft.ext.Dedup.compactWinnowManifest(spark, path)
+    graft.ext.Dedup.WinnowManifest.compact(spark, path)
     assert(verdicts(path) == masked) // the physical fold serves the same
     val fpsDocs = spark.read.parquet(
       graft.ops.Stage.resolve(spark, s"$path/fps"))
@@ -1368,12 +1368,12 @@ class DedupSpec extends AnyFunSuite {
     assert(afterDel == Set((100L, 3L)))
     // exactly-once: a replayed batch id is a no-op (no doubled rows)
     val extra = Seq((50L, base)).toDF("doc_id", "text")
-    Dedup.appendToSetSimIndexExactlyOnce(extra, "text", "doc_id", path,
-      batchId = 7L, shingle = 2)
+    Dedup.appendToSetSimIndex(extra, "text", "doc_id", path,
+      batchId = Some(7L), shingle = 2)
     val before = Dedup.probeSetSimOverlap(probe, path, 0.5, shingle = 2)
       .count()
-    Dedup.appendToSetSimIndexExactlyOnce(extra, "text", "doc_id", path,
-      batchId = 7L, shingle = 2)
+    Dedup.appendToSetSimIndex(extra, "text", "doc_id", path,
+      batchId = Some(7L), shingle = 2)
     assert(Dedup.probeSetSimOverlap(probe, path, 0.5, shingle = 2)
       .count() == before)
     val sets = spark.read.parquet(

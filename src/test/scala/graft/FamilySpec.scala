@@ -4,9 +4,11 @@ import graft.ext.{Corpus, Dedup, Search, Similarity}
 import graft.ops.{Family, Stage}
 import graft.ops.Family.{At, Live, Pinned, Previous}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import scala.jdk.CollectionConverters._
 
 /** The shared persisted-index lifecycle ([[graft.ops.Family]]),
   * table-driven over all seven family descriptors at sf0.001: build,
@@ -16,6 +18,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * an unknown pin. A pin missing from one component restores nothing
   * and names that component and the root; dropSnapshot + vacuum retire
   * the pin so its serve fails.
+  *
+  * The write half, table-driven the same way: a plain append, an
+  * exactly-once append delivered twice, an auto-compaction, a delete
+  * (after a pending tombstone) and a compaction each leave the live serve
+  * equal to a fresh build over the effective corpus, and the delete
+  * leaves no pending tombstone file. [[graft.ops.Family.append]] with a
+  * stage that fails after one component publishes nothing, under an op
+  * id and under a batch id, and the retry publishes whole.
   */
 class FamilySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -149,6 +159,193 @@ class FamilySpec extends AnyFunSuite {
     c.family.dropSnapshot(spark, p, "pin")
     c.family.vacuum(spark, p)
     intercept[IllegalStateException] { c.serve(p, Pinned("pin")).collect() }
+  }
+
+  /** One family's write-half fixture over `corpus` (keyed by `key`):
+    * build a fresh index over some rows, append (plain or exactly-once),
+    * tombstone (None: the family keeps no tombstones), delete, and serve
+    * live. `content`, when set, keys the family's deletes instead of
+    * `key` (the MinHash manifest forgets CONTENT). */
+  private case class WriteCase(family: Family, key: String, corpus: DataFrame,
+                               build: (DataFrame, String) => Unit,
+                               append: (DataFrame, String, Option[Long]) => Unit,
+                               tombstone: Option[(DataFrame, String) => Unit],
+                               delete: (DataFrame, String) => Unit,
+                               serve: String => DataFrame,
+                               content: Option[Column] = None) {
+    /** `kept` without the rows a delete of `gone` removes. */
+    def minus(kept: DataFrame, gone: DataFrame): DataFrame = content match {
+      case Some(k) => kept.withColumn("_k", k)
+        .join(gone.select(k.as("_k")), Seq("_k"), "left_anti").drop("_k")
+      case None => kept.join(gone.select(key), Seq(key), "left_anti")
+    }
+  }
+
+  private lazy val centroids = Similarity.sampleCentroids(deq, 8)
+  private lazy val codebooks =
+    Similarity.pqCodebooks(emb, m = 8, nCent = 16, dim = 64)
+  /** Probes ingested, tombstoned, deleted and never-ingested documents
+    * alike, so every step can change a verdict. */
+  private lazy val probeAll = docs.where(col("doc_id") < 150)
+  private def vecIds(df: DataFrame): DataFrame = df.select("vec_id")
+  private def docIds(df: DataFrame): DataFrame = df.select("doc_id")
+
+  private val writeCases = Seq(
+    WriteCase(Search.TextIndex, "doc_id", docs,
+      (df, p) => { Search.saveTextIndex(df, p); Search.savePositionalIndex(df, p) },
+      (df, p, id) => Search.appendToTextIndex(df, p, batchId = id),
+      Some((df, p) => Search.tombstoneFromTextIndex(spark, p, docIds(df))),
+      (df, p) => Search.deleteFromTextIndex(spark, p, docIds(df)),
+      p => Search.bm25TopKIndexed(spark, p, Seq("spark"), 10)),
+    WriteCase(Dedup.MinhashManifest, "doc_id", docs,
+      (df, p) => Dedup.saveMinhashManifest(df, "text", "doc_id", p,
+        k = 16, bands = 8),
+      (df, p, id) => Dedup.appendToMinhashManifest(df, "text", "doc_id", p,
+        batchId = id),
+      Some((df, p) => Dedup.tombstoneContentInMinhashManifest(df, "text", p)),
+      (df, p) => Dedup.deleteContentFromMinhashManifest(df, "text", p),
+      p => Dedup.incrementalNearDups(probeAll, p, "text", "doc_id"),
+      content = Some(xxhash64(
+        graft.functions.TextExpressions.hashedWordNgrams(col("text"), 1)))),
+    WriteCase(Corpus.Lm, "doc_id", docs,
+      (df, p) => Corpus.saveLm(df, "text", "doc_id", p),
+      (df, p, id) => Corpus.appendToLm(df, p, "text", "doc_id", batchId = id),
+      None,
+      (df, p) => Corpus.deleteFromLm(df, p, "text", "doc_id", opId = "forget"),
+      p => Corpus.lmPerplexityIndexed(probeAll, p, "text", "doc_id")),
+    WriteCase(Similarity.IvfIndex, "vec_id", emb,
+      (df, p) => Similarity.saveIvfIndex(df, p, nCentroids = 8, dim = 64,
+        quantScale = 200.0, centroidsIn = centroids),
+      (df, p, id) => Similarity.appendToIvfIndex(df, p, batchId = id),
+      Some((df, p) => Similarity.tombstoneFromIvfIndex(spark, p, vecIds(df))),
+      (df, p) => Similarity.deleteFromIvfIndex(spark, p, vecIds(df)),
+      p => Similarity.topKIvfIndexed(spark, deqQset, p, k = 5)),
+    WriteCase(Similarity.PqIndex, "vec_id", emb,
+      (df, p) => Similarity.savePqIndex(df, p, m = 8, nCent = 16, dim = 64,
+        codebooksIn = codebooks),
+      (df, p, id) => Similarity.appendToPqIndex(df, p, batchId = id),
+      // PQ has no public tombstone call: a pending tombstone is what a
+      // delete that crashed before its fold leaves behind
+      Some((df, p) => Stage.appendTombstones(vecIds(df), p)),
+      (df, p) => Similarity.deleteFromPqIndex(spark, p, vecIds(df)),
+      p => Similarity.pqTopKIndexed(spark, qset, p, k = 5)),
+    WriteCase(Similarity.BinaryIndex, "vec_id", emb,
+      (df, p) => Similarity.saveBinaryIndex(df, p, dim = 64),
+      (df, p, id) => Similarity.appendToBinaryIndex(df, p, batchId = id),
+      Some((df, p) => Stage.appendTombstones(vecIds(df), p)),
+      (df, p) => Similarity.deleteFromBinaryIndex(spark, p, vecIds(df)),
+      p => Similarity.binaryTopKIndexed(spark, qset, emb, p, k = 5)),
+    WriteCase(Dedup.WinnowManifest, "doc_id", docs,
+      (df, p) => Dedup.saveWinnowManifest(df, "text", "doc_id", p),
+      (df, p, id) => Dedup.appendToWinnowManifest(df, "text", "doc_id", p,
+        batchId = id),
+      Some((df, p) => Dedup.tombstoneFromWinnowManifest(spark, p, docIds(df))),
+      (df, p) => Dedup.deleteFromWinnowManifest(spark, p, docIds(df)),
+      p => Dedup.probeWinnowOverlap(probeAll, p)))
+
+  for (c <- writeCases) test(s"${c.family.name}: plain and exactly-once " +
+      "appends, auto-compaction, delete and compaction each serve like a " +
+      "fresh build over the effective corpus") {
+    val p = s"target/graft-test-family-write-${c.family.name}"
+    val freshP = s"$p-fresh"
+    val fs = new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Seq(p, freshP).foreach(d => fs.delete(new Path(d), true))
+    def part(r: Int*) = c.corpus.where(
+      pmod(col(c.key), lit(4)).isin(r: _*))
+    /** The live serve at `p` equals a fresh build over `effective`. */
+    def servesLike(effective: DataFrame, step: String): Unit = {
+      c.build(effective, freshP)
+      assert(rows(c.serve(p)) == rows(c.serve(freshP)), step)
+    }
+    c.build(part(0, 1), p)
+    c.append(part(2), p, None)
+    servesLike(part(0, 1, 2), "plain append")
+    c.append(part(3), p, Some(1L))
+    c.append(part(3), p, Some(1L)) // the redelivery is a no-op
+    val ingested = part(0, 1, 2, 3)
+    servesLike(ingested, "exactly-once append delivered twice")
+    assert(!c.family.autoCompact(spark, p, maxFilesPerComponent = 100000))
+    assert(c.family.autoCompact(spark, p, maxFilesPerComponent = 1))
+    servesLike(ingested, "auto-compaction")
+
+    val tomb = ingested.where(pmod(col(c.key), lit(7)) === 0)
+    val gone = ingested.where(pmod(col(c.key), lit(7)) === 1)
+    c.tombstone.foreach(_(tomb, p))
+    c.delete(gone, p)
+    val effective = c.minus(
+      c.tombstone.fold(ingested)(_ => c.minus(ingested, tomb)), gone)
+    servesLike(effective, "delete after a pending tombstone")
+    // the delete's fold consumed the earlier tombstone too
+    assert(c.family.health(spark, p).select("pending_tombstone_files")
+      .as[Int].collect().forall(_ == 0))
+    c.family.compact(spark, p)
+    servesLike(effective, "compaction")
+  }
+
+  for (batchId <- Seq(None, Some(7L))) test(s"Family.append(batchId = " +
+      s"$batchId): a stage that fails after one component publishes " +
+      "nothing; the retry publishes whole") {
+    val fam = Family("two_part", (_, _) => Seq("a", "b"), (_, _, _, _) => ())
+    val p = s"target/graft-test-family-append-${batchId.isDefined}"
+    val fs = new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new Path(p), true)
+    def stage(v: Long, failAfterA: Boolean)(staging: String,
+                                            comps: Seq[String]): Unit = {
+      assert(comps == Seq("a", "b"))
+      Seq(v).toDF("v").write.parquet(s"$staging/a")
+      if (failAfterA) throw new IllegalStateException("injected failure")
+      Seq(v).toDF("v").write.parquet(s"$staging/b")
+    }
+    def live(c: String): Set[Long] =
+      spark.read.parquet(Stage.resolve(spark, s"$p/$c")).as[Long].collect().toSet
+    fam.append(spark, p, None)(stage(1L, failAfterA = false))
+    assert(live("a") == Set(1L) && live("b") == Set(1L))
+    intercept[IllegalStateException] {
+      fam.append(spark, p, batchId, opId = "op2")(stage(2L, failAfterA = true))
+    }
+    assert(live("a") == Set(1L) && live("b") == Set(1L))
+    fam.append(spark, p, batchId, opId = "op2")(stage(2L, failAfterA = false))
+    assert(live("a") == Set(1L, 2L) && live("b") == Set(1L, 2L))
+    // the committed op or batch is now a no-op, whatever its stage writes
+    fam.append(spark, p, batchId, opId = "op2")(stage(3L, failAfterA = false))
+    assert(live("a") == Set(1L, 2L) && live("b") == Set(1L, 2L))
+    val marker = batchId.fold("op-op2")(id => s"batch-$id")
+    assert(fs.exists(new Path(s"$p/_ledger/$marker")))
+  }
+
+  test("src/main writes index families only through Family's write half") {
+    // each family keeps one public appendToX and its fold; the shared
+    // staged append, compaction and ingest live on graft.ops.Family. An
+    // in-place append or a mode-switching write helper is the torn-append
+    // hazard the staged append removed.
+    def sources(dir: String): List[java.nio.file.Path] = {
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    }
+    def hits(files: List[java.nio.file.Path],
+             re: scala.util.matching.Regex): List[(String, String)] =
+      files.flatMap { f =>
+        val text = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+        re.findAllMatchIn(text).map(m =>
+          (s"$f:${text.take(m.start).count(_ == '\n') + 1}", m.matched))
+      }
+    val ext = sources("src/main/scala/graft/ext")
+    assert(ext.size > 10)
+    val inPlace = hits(ext, """\.write\s*\.\s*mode\s*\(\s*"append"\s*\)""".r)
+    assert(inPlace.isEmpty, "in-place appends (stage them through " +
+      s"Family.append instead): ${inPlace.map(_._1).mkString(", ")}")
+    val modeParam = hits(ext,
+      """def\s+\w+\s*\((?:[^()]|\([^()]*\))*\bmode\s*:""".r)
+    assert(modeParam.isEmpty, "write helpers with a mode parameter: " +
+      modeParam.map(_._1).mkString(", "))
+    val perFamily = hits(sources("src/main/scala"),
+      """def\s+(appendTo\w+ExactlyOnce|compact\w+(Index|Manifest)|compactLm|autoCompact\w+)\b""".r)
+    // the three names perfbench/ compiles against, kept as forwarders
+    val kept = Set("appendToTextIndexExactlyOnce", "compactTextIndex",
+      "autoCompactTextIndex")
+    assert(perFamily.map(_._2.split("\\s+").last).toSet == kept,
+      s"per-family write entry points: ${perFamily.mkString(", ")}")
   }
 
   test("lm: At.Previous is rejected — the LM reverts by negated delta") {

@@ -185,6 +185,50 @@ class SearchSpec extends AnyFunSuite {
     assert(!fs.exists(new Path(s"$idx/_staging/batch-1")))
   }
 
+  test("a plain append that fails during its second component publishes nothing; the retry lands whole") {
+    import org.apache.hadoop.fs.Path
+    val rnd = new scala.util.Random(29)
+    val vocab = Vector("spark", "join", "table", "scan", "window", "stream")
+    def corpus(ids: Range) = ids.map { i =>
+      (i.toLong, Vector.fill(4 + rnd.nextInt(15))(
+        vocab(rnd.nextInt(vocab.size))).mkString(" "))
+    }
+    val (base, extra) = (corpus(1 to 40), corpus(41 to 60))
+    val idx = "target/graft-test-index-torn-append"
+    val fs = new Path("target").getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new Path(idx), true)
+    Search.saveTextIndex(base.toDF("doc_id", "text"), idx)
+    val terms = Seq("spark", "stream")
+    def serve() = Search.bm25TopKIndexed(spark, idx, terms, 15)
+      .collect().map(_.toSeq).toSeq
+    def files(p: Path): Seq[String] =
+      if (!fs.exists(p)) Nil
+      else fs.listStatus(p).toSeq.flatMap(st =>
+        if (st.isDirectory) files(st.getPath) else Seq(st.getPath.toString))
+    def liveFiles(): Set[String] = Seq("postings", "doclens", "stats")
+      .flatMap(c => files(new Path(graft.ops.Stage.resolve(spark, s"$idx/$c"))))
+      .toSet
+    // the batch's text passes through a nondeterministic UDF that throws
+    // on its (n+1)-th call: the postings write evaluates it once per row,
+    // so the append fails while writing its SECOND component (doclens)
+    TornText.calls.set(0)
+    TornText.limit = extra.size
+    val flaky = udf((t: String) => TornText.pass(t)).asNondeterministic()
+    val batch = extra.toDF("doc_id", "text")
+      .select(col("doc_id"), flaky(col("text")).as("text"))
+    val before = serve()
+    val filesBefore = liveFiles()
+    intercept[Exception](Search.appendToTextIndex(batch, idx))
+    assert(TornText.calls.get > extra.size, "the failure must hit doclens")
+    assert(serve() == before)
+    assert(liveFiles() == filesBefore)
+    TornText.limit = Int.MaxValue
+    Search.appendToTextIndex(batch, idx)
+    Search.TextIndex.compact(spark, idx)
+    assert(serve() == Search.bm25TopK((base ++ extra).toDF("doc_id", "text"),
+      terms, 15).collect().map(_.toSeq).toSeq)
+  }
+
   test("bm25TopKIndexedPrevious serves the pre-delete snapshot") {
     import org.apache.hadoop.fs.Path
     val fs = new Path("target").getFileSystem(
@@ -539,4 +583,16 @@ class SearchSpec extends AnyFunSuite {
       .as[(Long, Double, Int)].collect().sortBy(_._1).toSeq
     assert(a == b)
   }
+}
+
+/** The text source of SearchSpec's failed-append test: passes text
+  * through for `limit` calls, then throws. One counter for every task
+  * (local mode runs them in this JVM). */
+private object TornText {
+  val calls = new java.util.concurrent.atomic.AtomicInteger(0)
+  @volatile var limit: Int = Int.MaxValue
+  def pass(t: String): String =
+    if (calls.incrementAndGet() > limit)
+      throw new IllegalStateException("injected failure")
+    else t
 }

@@ -124,7 +124,7 @@ class SimilaritySpec extends AnyFunSuite {
         k = 5, overfetch = 3)
       .collect().map(_.getString(6))
     assert(diff.toSet.subsetOf(Set("dropped", "entered", "moved", "held")))
-    Similarity.compactBinaryIndex(spark, path)
+    Similarity.BinaryIndex.compact(spark, path)
     val survivors = vecs.where(pmod(col("vec_id"), lit(10)) =!= 7)
     val fresh = Similarity.binaryTopK(queries, survivors, k = 5,
         overfetch = 3, dim = 16)
@@ -640,7 +640,7 @@ class SimilaritySpec extends AnyFunSuite {
       java.nio.file.Paths.get("target"), "graft-ivf-xonce-").toString
     Similarity.saveIvfIndex(even, grown, nCentroids = 16, dim = 64,
       quantScale = 200.0, centroidsIn = cents)
-    Similarity.appendToIvfIndexExactlyOnce(odd, grown, batchId = 0L)
+    Similarity.appendToIvfIndex(odd, grown, batchId = Some(0L))
     def content() = spark.read.parquet(
         graft.ops.Stage.resolve(spark, s"$grown/lists"))
       .select(col("vec_id"), col("centroid"), col("code"))
@@ -651,11 +651,11 @@ class SimilaritySpec extends AnyFunSuite {
     // a plain-append replay would DUPLICATE the odd vectors; each replay
     // window below must instead leave the lists content identical
     // window A: marker present (normal streaming-restart replay) → no-op
-    Similarity.appendToIvfIndexExactlyOnce(odd, grown, batchId = 0L)
+    Similarity.appendToIvfIndex(odd, grown, batchId = Some(0L))
     assert(content() == expected)
     // window B: crash AFTER publish, BEFORE the marker → sweep + republish
     fs.delete(new Path(s"$grown/_ledger/batch-0"), false)
-    Similarity.appendToIvfIndexExactlyOnce(odd, grown, batchId = 0L)
+    Similarity.appendToIvfIndex(odd, grown, batchId = Some(0L))
     assert(content() == expected)
     // window C: crash MID-STAGING (partial staging dir, no marker)
     fs.delete(new Path(s"$grown/_ledger/batch-0"), false)
@@ -663,7 +663,7 @@ class SimilaritySpec extends AnyFunSuite {
     fs.create(
       new Path(s"$grown/_staging/batch-0/lists/centroid=0/part-junk"),
       true).close()
-    Similarity.appendToIvfIndexExactlyOnce(odd, grown, batchId = 0L)
+    Similarity.appendToIvfIndex(odd, grown, batchId = Some(0L))
     assert(content() == expected)
     assert(!fs.exists(new Path(s"$grown/_staging/batch-0")))
     // and the grown index serves exactly like a fresh build over the union
@@ -758,7 +758,7 @@ class SimilaritySpec extends AnyFunSuite {
       Similarity.topKIvfIndexed(spark, qset, idx, k = 5, at = Family.Previous)
     }
     val full = rows(Similarity.topKIvfIndexed(spark, qset, idx, k = 5))
-    Similarity.compactIvfIndex(spark, idx) // v1 → v2
+    Similarity.IvfIndex.compact(spark, idx) // v1 → v2
     Similarity.deleteFromIvfIndex(spark, idx,
       emb.where(pmod(col("vec_id"), lit(3)) === 1).select("vec_id")) // → v3
     // previous-serve == the pre-delete (full corpus) ranking
@@ -789,7 +789,7 @@ class SimilaritySpec extends AnyFunSuite {
     // TWO maintenance ops — the second would GC v1 unpinned
     Similarity.deleteFromIvfIndex(spark, idx,
       emb.where(pmod(col("vec_id"), lit(3)) === 1).select("vec_id")) // → v2
-    Similarity.compactIvfIndex(spark, idx) // → v3
+    Similarity.IvfIndex.compact(spark, idx) // → v3
     assert(rows(Similarity.topKIvfIndexed(
       spark, qset, idx, k = 5, at = Family.Pinned("pre_campaign"))) == full)
     assert(rows(Similarity.topKIvfIndexed(spark, qset, idx, k = 5))
@@ -939,14 +939,14 @@ class SimilaritySpec extends AnyFunSuite {
     Similarity.savePqIndex(emb.where(lit(false)), idx, m = 8, nCent = 16,
       dim = 64, codebooksIn = Similarity.pqCodebooks(emb, 8, 16, 64))
     val half = emb.where(pmod(col("vec_id"), lit(2)) === 0)
-    Similarity.appendToPqIndexExactlyOnce(half, idx, batchId = 0L)
-    Similarity.appendToPqIndexExactlyOnce(half, idx, batchId = 0L) // replay
+    Similarity.appendToPqIndex(half, idx, batchId = Some(0L))
+    Similarity.appendToPqIndex(half, idx, batchId = Some(0L)) // replay
     val n = spark.read.parquet(
       graft.ops.Stage.resolve(spark, s"$idx/codes")).count()
     assert(n == half.count(), s"replay duplicated codes: $n")
     // compaction folds batch files; replays across the fold stay no-ops
-    Similarity.compactPqIndex(spark, idx)
-    Similarity.appendToPqIndexExactlyOnce(half, idx, batchId = 0L)
+    Similarity.PqIndex.compact(spark, idx)
+    Similarity.appendToPqIndex(half, idx, batchId = Some(0L))
     assert(spark.read.parquet(
       graft.ops.Stage.resolve(spark, s"$idx/codes")).count() == n)
   }
@@ -1036,7 +1036,7 @@ class SimilaritySpec extends AnyFunSuite {
     // destructive campaign, fully compacted — nothing pending masks
     Similarity.deleteFromIvfIndex(spark, idx,
       emb.where(pmod(col("vec_id"), lit(3)) === 1).select("vec_id"))
-    Similarity.compactIvfIndex(spark, idx)
+    Similarity.IvfIndex.compact(spark, idx)
     assert(live() != atPin)
     // centroids/meta are frozen at build, so restoring lists/ restores
     // the whole serveable state — scores bit-match the pre-campaign serve

@@ -234,7 +234,7 @@ class StageSpec extends AnyFunSuite {
         .select("query_id", "neighbor_id", "cos_sim", "rank")
         .collect().map(_.toSeq).toSet
     assert(serve(tomb) == serve(cut))
-    graft.ext.Similarity.compactIvfIndex(spark, tomb)
+    graft.ext.Similarity.IvfIndex.compact(spark, tomb)
     assert(Stage.pendingTombstones(spark, tomb).isEmpty)
     assert(serve(tomb) == serve(cut))
   }
@@ -371,13 +371,13 @@ class StageSpec extends AnyFunSuite {
     val frag = Stage.fragmentation(spark, s"$idx/postings")
     assert(frag >= 6) // the builder's files plus one per exactly-once batch
     // threshold not reached: metadata-only listing, nothing rewritten
-    assert(!Search.autoCompactTextIndex(spark, idx, maxFilesPerComponent = 1000))
+    assert(!Search.TextIndex.autoCompact(spark, idx, maxFilesPerComponent = 1000))
     assert(Stage.fragmentation(spark, s"$idx/postings") == frag)
     val before = Search.bm25TopKIndexed(spark, idx, Seq("alpha"), 10)
       .collect().map(_.toSeq).toSeq
     // threshold crossed: the compaction runs, file counts drop, the ledger
     // folds alongside the data, and serving is bit-identical
-    assert(Search.autoCompactTextIndex(spark, idx, maxFilesPerComponent = 2))
+    assert(Search.TextIndex.autoCompact(spark, idx, maxFilesPerComponent = 2))
     assert(Stage.fragmentation(spark, s"$idx/postings") < frag)
     assert(children(s"$idx/_ledger") == Set("high-4"))
     assert(Search.bm25TopKIndexed(spark, idx, Seq("alpha"), 10)
