@@ -1,22 +1,19 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Benchmark entry point. Emits ONE JSON line
   * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`.
   *
-  * Contention robustness: a single timed run per query is unusable on a
-  * shared machine — two byte-identical trees benched in consecutive rounds
-  * moved one query 7.5× with zero code change. Each query therefore runs
-  * `SPARK_GRAFT_BENCH_RUNS` (default 3) times INTERLEAVED — round 1 of all
-  * queries, then round 2, then round 3 — so a transient contention event
-  * inflates at most one round of each query instead of all samples of one
-  * query. Reported per-query figure and the total are the per-query
-  * MEDIANS; min and max ship alongside so the spread is visible in the
-  * recorded artifact.
+  * A single timed run per query is unusable on a shared machine (two
+  * byte-identical trees benched in consecutive rounds moved one query
+  * 7.5×), so each query runs `SPARK_GRAFT_BENCH_RUNS` (default 3) times
+  * through [[interleaved]]: a transient contention event inflates at most
+  * one round of each query. Per-query figures and the total are MEDIANS;
+  * min and max ship alongside so the spread is visible.
   */
 object Bench {
-  private def median(xs: Seq[Double]): Double = {
+  private[graft] def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
     val n = s.length
     if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
@@ -68,12 +65,65 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
+  /** An error message as one JSON-safe string: quotes, backslashes and
+    * control characters blanked, at most 200 chars. */
+  private def sanitize(e: Throwable): String =
+    Option(e.getMessage).getOrElse(e.getClass.getName)
+      .replaceAll("[\"\\\\\\p{Cntrl}]", " ").take(200)
+
+  /** What [[interleaved]] measured: per-query wall samples, one sample of
+    * each calibration per round, and the sanitized error of every query
+    * that threw. */
+  final case class Rounds(samples: Map[String, Vector[Double]],
+                          calibration: Vector[Double],
+                          calibrationShuffle: Vector[Double],
+                          errors: Map[String, String])
+
+  /** Time `queries` on `sfDir` `runs` times INTERLEAVED (round 1 of every
+    * query, then round 2, …), taking one [[calibration]] and one
+    * [[calibrationShuffle]] sample per round when `calibrate` is set, so
+    * a contention event that inflates a round's queries inflates the
+    * machine factor with them. The timed action is `count()`. A query
+    * that throws records no sample (its fast-fail wall is not a healthy
+    * time); its sanitized message lands in `errors`. Samples and failures
+    * are logged to stderr under `[tag]`. Bench and ScaleGate both time
+    * through here. */
+  def interleaved(spark: SparkSession, sfDir: String,
+                  queries: Seq[(String, (SparkSession, String) => DataFrame)],
+                  runs: Int, tag: String, calibrate: Boolean = true): Rounds = {
+    val samples = scala.collection.mutable.Map.empty[String, Vector[Double]]
+    val errors = scala.collection.mutable.Map.empty[String, String]
+    var calib = Vector.empty[Double]
+    var calibShuffle = Vector.empty[Double]
+    if (calibrate) { // untimed JIT warmup of the calibration paths
+      calibration(spark)
+      calibrationShuffle(spark)
+    }
+    for (r <- 1 to runs) {
+      if (calibrate) {
+        calib :+= calibration(spark)
+        calibShuffle :+= calibrationShuffle(spark)
+      }
+      for ((name, fn) <- queries) {
+        val t0 = System.nanoTime()
+        try {
+          val rows = fn(spark, sfDir).count()
+          val dt = (System.nanoTime() - t0) / 1e9
+          samples(name) = samples.getOrElse(name, Vector.empty) :+ dt
+          System.err.println(f"[$tag] run $r $name: $rows rows in $dt%.1fs")
+        } catch { case e: Throwable =>
+          errors(name) = sanitize(e)
+          System.err.println(s"[$tag] run $r $name FAILED: ${errors(name)}")
+        }
+      }
+    }
+    Rounds(samples.toMap, calib, calibShuffle, errors.toMap)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt.max(1)
-    val spark = LocalSpark.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.fromEnv()
     // JIT/codegen warmup on the tiny sf so per-query times measure the
     // engine, not first-touch JVM compilation of Catalyst/janino paths
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
@@ -82,39 +132,15 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
     val selected = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (n, _) =>
       only.forall(_.exists(n.contains)) }
-    val samples = scala.collection.mutable.Map.empty[String, Vector[Double]]
-    val errors = scala.collection.mutable.Map.empty[String, String]
-    var calibSamples = Vector.empty[Double]
-    var calibShuffleSamples = Vector.empty[Double]
-    calibration(spark) // untimed JIT warmup of the calibration path itself
-    calibrationShuffle(spark)
-    for (_ <- 1 to runs) {
-      // one calibration sample per interleaved round, so a contention
-      // event that inflates this round's queries inflates the machine
-      // factor with them
-      calibSamples :+= calibration(spark)
-      calibShuffleSamples :+= calibrationShuffle(spark)
-      for ((name, fn) <- selected) {
-        val t0 = System.nanoTime()
-        // a query that throws must NOT record its fast-fail wall time as
-        // a healthy sample — mark it errored and exclude it from totals
-        try {
-          fn(spark, sfDir).count()
-          val dt = (System.nanoTime() - t0) / 1e9
-          samples(name) = samples.getOrElse(name, Vector.empty) :+ dt
-        } catch { case e: Throwable =>
-          errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
-            .replaceAll("[\"\\\\\\p{Cntrl}]", " ").take(200)
-        }
-      }
-    }
-    val ok = selected.filter { case (n, _) => samples.contains(n) }
-    def jmap(f: Vector[Double] => Double) = ok
-      .map { case (n, _) => s"\"" + n + "\":" + f(samples(n)) }
-      .mkString("{", ",", "}")
-    val med = jmap(median)
-    val mins = jmap(_.min)
-    val maxs = jmap(_.max)
+    val lifecycle = interleaved(spark, sfDir, selected, runs, "bench")
+    val samples = lifecycle.samples.toSeq.sortBy(_._1)
+    val errors = scala.collection.mutable.Map.empty[String, String] ++
+      lifecycle.errors
+    def jmap(xs: Seq[(String, Vector[Double])])(f: Vector[Double] => Double) =
+      xs.map { case (n, v) => s"\"" + n + "\":" + f(v) }.mkString("{", ",", "}")
+    val med = jmap(samples)(median)
+    val mins = jmap(samples)(_.min)
+    val maxs = jmap(samples)(_.max)
     // AMORTIZED-SERVING pass: the lifecycle totals above pay an honest
     // per-run index build, which dominates them and hides serve-path
     // regressions the production deployment would feel. Build the
@@ -122,44 +148,29 @@ object Bench {
     // serve/probe/diff stages — reported ALONGSIDE the lifecycle totals.
     val serveSel = graft.queries.ServeBench.serves.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.exists(n.contains)) }
-    val serveSamples = scala.collection.mutable.Map.empty[String, Vector[Double]]
     if (serveSel.nonEmpty)
       graft.queries.ServeBench.fixtures.foreach { case (fam, build) =>
         try build(spark, sfDir)
-        catch { case e: Throwable =>
-          errors(s"serve_fixture_$fam") =
-            Option(e.getMessage).getOrElse(e.getClass.getName)
-              .replaceAll("[\"\\\\\\p{Cntrl}]", " ").take(200) }
+        catch { case e: Throwable => errors(s"serve_fixture_$fam") = sanitize(e) }
       }
-    for (_ <- 1 to runs; (name, fn) <- serveSel) {
-      val t0 = System.nanoTime()
-      try {
-        fn(spark, sfDir).count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        serveSamples(name) = serveSamples.getOrElse(name, Vector.empty) :+ dt
-      } catch { case e: Throwable =>
-        errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
-          .replaceAll("[\"\\\\\\p{Cntrl}]", " ").take(200)
-      }
-    }
-    val serveOk = serveSel.filter { case (n, _) => serveSamples.contains(n) }
-    val serveMed = serveOk
-      .map { case (n, _) => s"\"" + n + "\":" + median(serveSamples(n)) }
-      .mkString("{", ",", "}")
-    val serveTotal = serveOk
-      .map { case (n, _) => median(serveSamples(n)) }.sum
+    val serves = interleaved(spark, sfDir, serveSel, runs, "bench",
+      calibrate = false)
+    val serveSamples = serves.samples.toSeq.sortBy(_._1)
+    errors ++= serves.errors
+    val serveMed = jmap(serveSamples)(median)
+    val serveTotal = serveSamples.map(x => median(x._2)).sum
     val errs = errors.toSeq.sortBy(_._1)
       .map { case (n, m) => s"\"" + n + "\":\"" + m + "\"" }
       .mkString("{", ",", "}")
-    val total = ok.map { case (n, _) => median(samples(n)) }.sum
+    val total = samples.map(x => median(x._2)).sum
     // GOVERNING gate reading (BASELINE.md "Bench gate definition"): the
     // sum of this bench's medians over EXACTLY the 46 queries in the r1
     // table, vs the 97.64 s anchor — carried in the bench JSON itself so
     // the driver's recorded line always contains the governing number.
     val r1Workload: Set[String] =
       ((1 to 24) ++ (30 to 48) ++ (50 to 52)).map(i => f"q$i%02d_").toSet
-    val sameWorkloadMedians = ok.collect {
-      case (n, _) if r1Workload.exists(n.startsWith) => median(samples(n))
+    val sameWorkloadMedians = samples.collect {
+      case (n, v) if r1Workload.exists(n.startsWith) => median(v)
     }
     val sameWorkload = sameWorkloadMedians.sum
     // same_workload_n guards the gate reading: an erroring r1-workload
@@ -170,11 +181,10 @@ object Bench {
     // machine factor: the fixed CPU-bound query's median this run, plus
     // per-query medians normalized by it — cross-round comparisons read
     // queries_norm (machine-band-free) and raw seconds stay alongside
+    val calibSamples = lifecycle.calibration
     val calib = median(calibSamples)
-    val calibShuffle = median(calibShuffleSamples)
-    val norm = ok
-      .map { case (n, _) => s"\"" + n + "\":" + (median(samples(n)) / calib) }
-      .mkString("{", ",", "}")
+    val calibShuffle = median(lifecycle.calibrationShuffle)
+    val norm = jmap(samples)(median(_) / calib)
     val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":$med,"runs":$runs,"queries_min":$mins,"queries_max":$maxs,"same_workload_total":$sameWorkload,"same_workload_n":$sameWorkloadN,"calibration":$calib,"calibration_shuffle":$calibShuffle,"calibration_samples":[${calibSamples.mkString(",")}],"queries_norm":$norm,"serve_total":$serveTotal,"serve_queries":$serveMed,"errors":$errs,"sf":"$sfDir"}"""
     // The driver's artifact capture keeps only the TAIL of stdout and its
     // parser has failed on every long line so far (r9: full JSON captured,
@@ -187,7 +197,7 @@ object Bench {
         (full + "\n").getBytes("UTF-8"))
     } catch { case _: Throwable => () } // best-effort: read-only cwd must not fail the bench
     println(full)
-    println(s"""{"metric":"total","value":$total,"unit":"sec","runs":$runs,"n_queries":${ok.size},"same_workload_total":$sameWorkload,"same_workload_n":$sameWorkloadN,"calibration":$calib,"calibration_shuffle":$calibShuffle,"serve_total":$serveTotal,"n_serve":${serveOk.size},"n_errors":${errors.size},"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","runs":$runs,"n_queries":${samples.size},"same_workload_total":$sameWorkload,"same_workload_n":$sameWorkloadN,"calibration":$calib,"calibration_shuffle":$calibShuffle,"serve_total":$serveTotal,"n_serve":${serveSamples.size},"n_errors":${errors.size},"sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -16,4 +16,14 @@ object LocalSpark {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+
+  /** The session Bench, Verify and every `graft.tools` main run on:
+    * `local[n]` with `n` shuffle partitions, `n` read from
+    * `SPARK_GRAFT_CPUS` (default 4), logging at WARN. */
+  def fromEnv(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = builder(s"local[$cpus]", cpus).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

@@ -9,9 +9,7 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).headOption.map(_.split(",").toSeq)
     def selected(name: String): Boolean = only.forall(_.exists(name.contains))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = LocalSpark.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.fromEnv()
     // ORACLE-BUILD-TIME corpus parameter: the unigram-LM replay's Viterbi
     // unroll depth (one dp CTE per word position) is derived from the
     // corpus's actual longest whitespace token, not a constant — a corpus

@@ -900,16 +900,20 @@ object Similarity {
     * serve tail). `at` picks the codes version
     * ([[graft.ops.Family.read]]): live, the PREVIOUS version the last
     * maintenance op superseded (fails loudly after a fresh build — a
-    * rebuild severs the grace), or a [[PqIndex]] pin's file list. */
+    * rebuild severs the grace), or a [[PqIndex]] pin's file list.
+    * Pending tombstones (a delete that failed before its fold) mask
+    * every version alike, as in [[topKIvfIndexed]]. */
   def pqTopKIndexed(spark: org.apache.spark.sql.SparkSession,
                     queries: DataFrame, path: String, k: Int,
                     idCol: String = "vec_id",
                     vecCol: String = "embedding",
                     at: graft.ops.Family.At = graft.ops.Family.Live)
       : DataFrame = {
+    // tombstones BEFORE the codes resolve (see Stage.tombstoneSnapshot)
+    val tomb = graft.ops.Stage.pendingTombstones(spark, path)
     val (dim, cb) = loadPqMeta(spark, path)
     pqServeCodes(
-      PqIndex.read(spark, path, at)("codes")
+      minusTombstoned(PqIndex.read(spark, path, at)("codes"), tomb)
         .withColumnRenamed("vec_id", "neighbor_id"),
       queries, k, dim, cb, idCol, vecCol)
   }
@@ -1082,9 +1086,9 @@ object Similarity {
     * side stays wherever the vectors live — the index never duplicates
     * them). Bit-identical to [[binaryTopK]] over the same effective
     * corpus (shared serve tail). `at` picks the sig version as in
-    * [[pqTopKIndexed]]; the dim comes from the stamp on the rows it
-    * reads, so a pinned or previous serve packs its queries against its
-    * own generation. */
+    * [[pqTopKIndexed]], pending tombstones masked; the dim comes from
+    * the stamp on the rows it reads, so a pinned or previous serve packs
+    * its queries against its own generation. */
   def binaryTopKIndexed(spark: org.apache.spark.sql.SparkSession,
                         queries: DataFrame, corpus: DataFrame,
                         path: String, k: Int, overfetch: Int = 16,
@@ -1092,10 +1096,12 @@ object Similarity {
                         vecCol: String = "embedding",
                         at: graft.ops.Family.At = graft.ops.Family.Live)
       : DataFrame = {
+    val tomb = graft.ops.Stage.pendingTombstones(spark, path)
     val sigs = BinaryIndex.read(spark, path, at)("sig")
-      .withColumnRenamed("vec_id", "neighbor_id")
-    binaryServeSigs(sigs, queries, corpus, k, overfetch,
-      binaryIndexDim(spark, path, sigs), idCol, vecCol)
+    binaryServeSigs(
+      minusTombstoned(sigs, tomb).withColumnRenamed("vec_id", "neighbor_id"),
+      queries, corpus, k, overfetch, binaryIndexDim(spark, path, sigs),
+      idCol, vecCol)
   }
 
   /** Maintenance DIFF of the binary index's two serveable states —

@@ -1222,13 +1222,17 @@ object Stage {
     * them into part files the replay's prefix sweep can no longer find,
     * so the replayed batch would land TWICE (its rows double-counted
     * forever). Sweeping instead returns the batch wholly to the replay.
-    * Relies on the single-writer contract — no publish is in flight
-    * while a maintenance op runs.
+    * Also deletes `_staging`: an op or batch that failed and is never
+    * retried under its id (every failed fresh-id append) leaves its
+    * staging directory there, and nothing else would ever remove it.
+    * Relies on the single-writer contract — every caller holds the root
+    * lease, so no publish is in flight while a maintenance op runs.
     */
   def sweepUncommitted(spark: SparkSession, path: String,
                        components: Seq[String]): Unit = {
     val ledger = new Path(s"$path/_ledger")
     val fs = fsFor(spark, ledger)
+    fs.delete(new Path(s"$path/_staging"), true)
     // ONE ledger listing up front: the per-file committed checks below
     // are set lookups, not exists() RPCs — a fragmented index can carry
     // hundreds of prefixed files per component

@@ -1,6 +1,5 @@
 package graft.tools
 
-
 /** The STANDING sf1 scale gate. Round 16 produced the scale-evidence
   * class (a one-off sf1 bench + spot oracles); this tool makes it a
   * per-round ritual with a regression tripwire, so a scale regression
@@ -11,12 +10,9 @@ package graft.tools
   *  1. If the sf1 dataset is absent, derives it deterministically from
   *     sf0.1 via [[ScaleUp.derive]] (same tables every time — the
   *     derivation has no RNG).
-  *  2. Runs the SPOT SET — the lifecycle composites, the sliced
-  *     sf1-computable oracles (q221/q225/q226), the 128-bit SimHash
-  *     scale path (q224), and the three adjudicated sf1 outliers
-  *     (q32/q52/q75) — `SPARK_GRAFT_SF1_RUNS` (default 3) times,
-  *     INTERLEAVED (Bench's contention rule), with one
-  *     [[graft.Bench.calibration]] sample per round.
+  *  2. Times the [[spotSet]] `SPARK_GRAFT_SF1_RUNS` (default 3) times
+  *     through [[graft.Bench.interleaved]] (interleaved rounds, one
+  *     sample of each calibration per round).
   *  3. Normalizes each per-query median by the calibration median
   *     (machine factor) and compares against `conf/sf1_anchors.json`'s
   *     recorded normalized anchors: any query above
@@ -28,11 +24,14 @@ package graft.tools
   * regression list. Paste the per-round numbers into BASELINE.md's
   * "sf1 standing gate" section.
   *
-  * Usage: sbt "runMain graft.tools.ScaleGate"
+  * Usage: SPARK_GRAFT_CPUS=32 sbt "runMain graft.tools.ScaleGate"
   *   env: SPARK_GRAFT_SF1_DIR  (default /tmp/graft_sf1)
   *        SPARK_GRAFT_SF_DIR   (sf0.1 source, default /root/testdata/sf0.1)
   *        SPARK_GRAFT_SF1_RUNS (default 3)
   *        SPARK_GRAFT_ONLY     (substring filter, local iteration only)
+  *        SPARK_GRAFT_CPUS     (default 4, as every tool; must equal the
+  *                              anchors' `cpus`, and the machine must have
+  *                              that many cores, else exit 2 before any run)
   */
 object ScaleGate {
   /** The spot set: every member either exercises a lifecycle composite
@@ -65,37 +64,43 @@ object ScaleGate {
   /** >1.5× the anchor's normalized reading fails the gate. */
   val Tripwire = 1.5
 
-  private def median(xs: Seq[Double]): Double = {
-    val s = xs.sorted
-    if (s.length % 2 == 1) s(s.length / 2)
-    else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
-  }
-
-  /** Anchors file shape: {"calibration": sec, "queries": {"name": sec}}
-    * — raw medians from the round that recorded them; normalization
-    * happens here (anchor_norm = anchor_sec / anchor_calibration).
-    * Parsed with a regex: the file is builder-authored, flat, and tiny. */
-  private def readAnchors(path: String): (Double, Map[String, Double]) = {
+  /** Anchors file shape: {"cpus": n, "calibration": sec, "name": sec, …}
+    * — raw medians from the round that recorded them on a `local[n]`
+    * session; normalization happens here (anchor_norm = anchor_sec /
+    * anchor_calibration). Parsed with a regex: the file is flat and tiny. */
+  private def readAnchors(path: String)
+      : (Double, Option[Int], Map[String, Double]) = {
     val f = new java.io.File(path)
-    if (!f.exists()) return (0.0, Map.empty)
+    if (!f.exists()) return (0.0, None, Map.empty)
     val text = new String(
       java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
     val pair = """"([A-Za-z0-9_]+)"\s*:\s*([0-9.]+)""".r
     val all = pair.findAllMatchIn(text)
       .map(m => m.group(1) -> m.group(2).toDouble).toMap
-    (all.getOrElse("calibration", 0.0),
-      all - "calibration" - "calibration_shuffle")
+    (all.getOrElse("calibration", 0.0), all.get("cpus").map(_.toInt),
+      all -- Seq("calibration", "calibration_shuffle", "cpus"))
   }
 
   def main(args: Array[String]): Unit = {
     val sf1Dir = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "/tmp/graft_sf1")
     val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val runs = sys.env.getOrElse("SPARK_GRAFT_SF1_RUNS", "3").toInt.max(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
-    val spark = graft.LocalSpark.builder(s"local[$cpus]", cpus.toInt)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSpark.fromEnv()
+    // the calibration probe slows with fewer slots or cores far more than
+    // the spot queries do, so normalized readings compare only on a session
+    // as wide as the anchors' with a core per slot
+    val (anchorCalib, anchorCpus, anchors) = readAnchors("conf/sf1_anchors.json")
+    val cpus = spark.sparkContext.defaultParallelism
+    val cores = Runtime.getRuntime.availableProcessors
+    anchorCpus.filter(a => a != cpus || a > cores).foreach { a =>
+      System.err.println(s"[sf1gate] conf/sf1_anchors.json was recorded at " +
+        s"local[$a] on $a+ cores, this session is local[$cpus] on $cores: run " +
+        s"with SPARK_GRAFT_CPUS=$a on $a+ cores, or re-record the anchors " +
+        s"(and their cpus) here")
+      spark.stop()
+      sys.exit(2)
+    }
 
     // 1. dataset: derive when absent (deterministic, so "absent" is the
     // only trigger — a present dir is trusted; delete it to force)
@@ -112,29 +117,8 @@ object ScaleGate {
 
     // 2. interleaved timed runs + one calibration sample per round
     graft.SparkEntry.entry(spark).count() // JIT/codegen warmup
-    graft.Bench.calibration(spark)        // warm the calibration paths too
-    graft.Bench.calibrationShuffle(spark)
-    val samples = scala.collection.mutable.Map.empty[String, Vector[Double]]
-    var calibSamples = Vector.empty[Double]
-    var calibShuffleSamples = Vector.empty[Double]
-    val errors = scala.collection.mutable.Map.empty[String, String]
-    for (r <- 1 to runs) {
-      calibSamples :+= graft.Bench.calibration(spark)
-      calibShuffleSamples :+= graft.Bench.calibrationShuffle(spark)
-      for ((name, fn) <- selected) {
-        val t0 = System.nanoTime()
-        try {
-          val rows = fn(spark, sf1Dir).count()
-          val dt = (System.nanoTime() - t0) / 1e9
-          samples(name) = samples.getOrElse(name, Vector.empty) :+ dt
-          System.err.println(f"[sf1gate] run $r $name: $rows rows in $dt%.1fs")
-        } catch { case e: Throwable =>
-          errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
-            .replaceAll("[\"\\\\\\p{Cntrl}]", " ").take(200)
-          System.err.println(s"[sf1gate] run $r $name FAILED: ${errors(name)}")
-        }
-      }
-    }
+    val graft.Bench.Rounds(samples, calibSamples, calibShuffleSamples, errors) =
+      graft.Bench.interleaved(spark, sf1Dir, selected, runs, "sf1gate")
 
     // 3. normalize + tripwire vs anchors. queries_norm divides by the CPU
     // probe only; the shuffle probe is emitted for ADJUDICATION — a
@@ -142,11 +126,10 @@ object ScaleGate {
     // flat and the shuffle probe elevated is a machine I/O band (re-record
     // anchors on the new boot), not a code regression (Bench.calibration
     // scaladoc records the boot where the two moved opposite ways).
-    val calib = median(calibSamples)
-    val calibShuffle = median(calibShuffleSamples)
-    val (anchorCalib, anchors) = readAnchors("conf/sf1_anchors.json")
+    val calib = graft.Bench.median(calibSamples)
+    val calibShuffle = graft.Bench.median(calibShuffleSamples)
     val rows = selected.collect { case (n, _) if samples.contains(n) =>
-      val raw = median(samples(n))
+      val raw = graft.Bench.median(samples(n))
       val norm = raw / calib
       val ratio = anchors.get(n).filter(_ > 0).filter(_ => anchorCalib > 0)
         .map(a => norm / (a / anchorCalib))

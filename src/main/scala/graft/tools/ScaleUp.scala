@@ -3,8 +3,8 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Derive an sf1-scale dataset from the sf0.1 testdata (diagnostic, not
-  * driver-run): every fact table replicated `factor`× with DETERMINISTIC,
+/** Derive an sf1-scale dataset from the sf0.1 testdata: every fact
+  * table replicated `factor`× with DETERMINISTIC,
   * referential-integrity-preserving key shifts, written as ONE parquet
   * file per table (the layout tools/check.py's DuckDB views read). This
   * is the evidence class the 100×-scale claim was missing — every gate
@@ -32,22 +32,11 @@ import org.apache.spark.sql.functions._
   *    duplication RATE, not volume, is what must stay constant across a
   *    scale step. The namespace is a LENGTH-PRESERVING RE-SPELLING per
   *    (token, copy): each token of copy i ≥ 1 is replaced by the same-
-  *    length prefix of repeat(hex(xxhash64(token, i))). Why this exact
-  *    construction — two alternatives were measured and rejected in
-  *    round 17:
-  *     - the round-16 constant `c<i>` suffix: the chunk-histogram stub
-  *       embedder (q52) folds 16-byte chunks with h → 31·h + byte
-  *       bucketed mod 64, and 31² ≡ 1 (mod 64) — a constant same-length
-  *       suffix only SHIFTS each chunk's slot deterministically, so
-  *       copies still read as ≥0.98-cosine near-dups (723 pairs at sf1
-  *       vs ~200 expected — the r16 dataset artifact);
-  *     - a per-copy VOCABULARY PERMUTATION within length classes
-  *       (bijective, length-exact, re-using real tokens): this corpus's
-  *       vocabulary is 31 TOKENS (synthetic testdata), so permuted
-  *       copies all write over the SAME tiny token space — the
-  *       namespace vanishes at the token-set level and cross-copy
-  *       near-dups explode (q32: 20M → 201M pairs, q31: 9.6M → 50M).
-  *       A namespace here MUST expand the token space per copy.
+  *    length prefix of repeat(hex(xxhash64(token, i))). A namespace
+  *    must expand the token space per copy and keep every token length;
+  *    BASELINE.md §"ScaleUp namespace: constructions measured and
+  *    rejected" records the two alternatives that failed (a constant
+  *    `c<i>` suffix, a per-copy vocabulary permutation).
   *    The re-spelling keeps every token length — chunk boundaries, the
   *    whitespace skeleton, and all length statistics are EXACTLY the
   *    original's (so q52's histogram floor does not move: 218 pairs at
@@ -65,34 +54,19 @@ import org.apache.spark.sql.functions._
   *    duplicates — ANN index balance and recall behave like a larger
   *    corpus, not like 10 stacked copies of one.
   *
-  * Usage: sbt "runMain graft.tools.ScaleUp /root/testdata/sf0.1 /tmp/graft_sf1 10"
+  * [[ScaleGate]] runs [[derive]] when its sf1 directory is absent.
   */
 object ScaleUp {
   private val Stride = 100000000L
 
-  def main(args: Array[String]): Unit = {
-    val src = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val dst = args.drop(1).headOption.getOrElse("/tmp/graft_sf1")
-    val factor = args.drop(2).headOption.map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.LocalSpark.builder(s"local[$cpus]", cpus.toInt)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // optional 4th arg: comma-separated table filter — a factor-100
-    // documents-only derivation for targeted probes need not pay for a
-    // 6 GB lineitem nobody scans
-    derive(spark, src, dst, factor,
-      args.drop(3).headOption.map(_.split(",").toSet).getOrElse(Set.empty))
-    spark.stop()
-  }
+  /** The union of `shift(df, i)` for copies `i` in `0 until k`. */
+  def copies(df: DataFrame, k: Int)(shift: (DataFrame, Int) => DataFrame)
+      : DataFrame =
+    (0 until k).map(i => shift(df, i)).reduce(_ union _)
 
-  /** The derivation body, callable from [[ScaleGate]] (which re-derives
-    * the dataset when absent) as well as from `main`. `tables` empty =
-    * all tables; non-empty = derive only the named ones. */
+  /** Write every table of `src`, replicated `factor`×, to `dst`. */
   def derive(spark: SparkSession, src: String, dst: String,
-             factor: Int, tables: Set[String] = Set.empty): Unit = {
-    def copies(df: DataFrame)(shift: (DataFrame, Int) => DataFrame) =
-      (0 until factor).map(i => shift(df, i)).reduce(_ union _)
+             factor: Int): Unit = {
 
     def shiftCols(df: DataFrame, i: Int, cols: String*): DataFrame =
       cols.foldLeft(df)((d, c) =>
@@ -102,7 +76,6 @@ object ScaleUp {
     // move the part file to <dst>/<table>.parquet (parquet is
     // row-group-splittable, so Spark still scans it in parallel)
     def writeOne(name: String, df: DataFrame): Unit = {
-      if (tables.nonEmpty && !tables.contains(name)) return
       val tmp = s"$dst/_build_$name"
       df.coalesce(1).write.mode("overwrite").parquet(tmp)
       val conf = spark.sparkContext.hadoopConfiguration
@@ -121,17 +94,17 @@ object ScaleUp {
 
     writeOne("region", t("region"))
     writeOne("nation", t("nation"))
-    writeOne("customer", copies(t("customer"))(shiftCols(_, _, "c_custkey")))
-    writeOne("supplier", copies(t("supplier"))(shiftCols(_, _, "s_suppkey")))
-    writeOne("part", copies(t("part"))(shiftCols(_, _, "p_partkey")))
-    writeOne("orders", copies(t("orders"))(
+    writeOne("customer", copies(t("customer"), factor)(shiftCols(_, _, "c_custkey")))
+    writeOne("supplier", copies(t("supplier"), factor)(shiftCols(_, _, "s_suppkey")))
+    writeOne("part", copies(t("part"), factor)(shiftCols(_, _, "p_partkey")))
+    writeOne("orders", copies(t("orders"), factor)(
       shiftCols(_, _, "o_orderkey", "o_custkey")))
-    writeOne("lineitem", copies(t("lineitem"))(
+    writeOne("lineitem", copies(t("lineitem"), factor)(
       shiftCols(_, _, "l_orderkey", "l_partkey", "l_suppkey")))
-    writeOne("events", copies(t("events"))(
+    writeOne("events", copies(t("events"), factor)(
       shiftCols(_, _, "event_id", "user_id")))
 
-    writeOne("documents", copies(t("documents")) { (df, i) =>
+    writeOne("documents", copies(t("documents"), factor) { (df, i) =>
       val shifted = df.withColumn("doc_id", col("doc_id") + lit(i * Stride))
       if (i == 0) shifted
       else shifted.withColumn("text",
@@ -149,7 +122,7 @@ object ScaleUp {
         .withColumn("n_chars", length(coalesce(col("text"), lit(""))))
     })
 
-    writeOne("embeddings", copies(t("embeddings")) { (df, i) =>
+    writeOne("embeddings", copies(t("embeddings"), factor) { (df, i) =>
       val shifted = df.withColumn("vec_id", col("vec_id") + lit(i * Stride))
       if (i == 0) shifted
       else shifted.withColumn("embedding",

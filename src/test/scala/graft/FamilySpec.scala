@@ -22,10 +22,12 @@ import scala.jdk.CollectionConverters._
   * The write half, table-driven the same way: a plain append, an
   * exactly-once append delivered twice, an auto-compaction, a delete
   * (after a pending tombstone) and a compaction each leave the live serve
-  * equal to a fresh build over the effective corpus, and the delete
-  * leaves no pending tombstone file. [[graft.ops.Family.append]] with a
-  * stage that fails after one component publishes nothing, under an op
-  * id and under a batch id, and the retry publishes whole.
+  * equal to a fresh build over the effective corpus — so does a pending
+  * tombstone alone — and the delete leaves no pending tombstone file.
+  * [[graft.ops.Family.append]] with a stage that fails after one
+  * component publishes nothing, under an op id and under a batch id, and
+  * the retry publishes whole; a failed fresh-id append leaves no staging
+  * directory behind the next compaction.
   */
 class FamilySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -270,7 +272,10 @@ class FamilySpec extends AnyFunSuite {
 
     val tomb = ingested.where(pmod(col(c.key), lit(7)) === 0)
     val gone = ingested.where(pmod(col(c.key), lit(7)) === 1)
-    c.tombstone.foreach(_(tomb, p))
+    c.tombstone.foreach { t =>
+      t(tomb, p)
+      servesLike(c.minus(ingested, tomb), "pending tombstone")
+    }
     c.delete(gone, p)
     val effective = c.minus(
       c.tombstone.fold(ingested)(_ => c.minus(ingested, tomb)), gone)
@@ -311,6 +316,16 @@ class FamilySpec extends AnyFunSuite {
     assert(live("a") == Set(1L, 2L) && live("b") == Set(1L, 2L))
     val marker = batchId.fold("op-op2")(id => s"batch-$id")
     assert(fs.exists(new Path(s"$p/_ledger/$marker")))
+    // a failed fresh-id append is never retried under its id: the next
+    // compaction removes what it staged
+    intercept[IllegalStateException] {
+      fam.append(spark, p, None)(stage(4L, failAfterA = true))
+    }
+    fam.compact(spark, p)
+    val staging = new Path(s"$p/_staging")
+    val left = if (fs.exists(staging)) fs.listStatus(staging).toSeq else Nil
+    assert(left.isEmpty, left.map(_.getPath.getName).mkString(", "))
+    assert(live("a") == Set(1L, 2L) && live("b") == Set(1L, 2L))
   }
 
   test("src/main writes index families only through Family's write half") {

@@ -46,6 +46,10 @@ class MainSpec extends AnyFunSuite {
          input_data_schema VARCHAR(4000), data_mapping VARCHAR(4000),
          output_data_schema VARCHAR(4000))"""
 
+  test("SparkEntry.entry (the flagship query on sf0.001) returns rows") {
+    assert(SparkEntry.entry(spark).count() > 0)
+  }
+
   test("Main.main: args + properties file → config row → compiled plan → JDBC sink") {
     exec(
       "DROP TABLE main_report_sink", "DROP TABLE main_config",

@@ -148,6 +148,14 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed == batch)
   }
 
+  test("hourly window re-runs in one session under its query name") {
+    // Bench and Verify both run it in one session: the second run must
+    // reuse the memory sink's name and return the same non-empty table
+    val first = EventStreams.hourlyWindowed(spark, sf).count()
+    val second = EventStreams.hourlyWindowed(spark, sf).count()
+    assert(first > 0 && second == first)
+  }
+
   test("co-bucketed tables join and aggregate with zero shuffle exchanges") {
     import spark.implicits._
     // the in-memory catalog forgets tables across JVMs but their warehouse

@@ -1,0 +1,67 @@
+package graft
+
+import graft.tools.Probe
+import org.scalatest.funsuite.AnyFunSuite
+
+import scala.jdk.CollectionConverters._
+
+/** The dev-tool surface: [[graft.tools.Probe.record]] sees exactly the
+  * jobs and tasks a block starts, [[Bench.interleaved]]
+  * samples every query once per round and turns a throwing query into a
+  * JSON-safe error, and `src/main` grows no new `main` outside the
+  * entry points and the four tools.
+  */
+class ToolsSpec extends AnyFunSuite {
+  private lazy val spark = TestSpark.spark
+
+  test("Probe.record counts the jobs a block starts, on its thread and on threads it spawns") {
+    val sc = spark.sparkContext
+    val rec = Probe.record(spark) {
+      val child = new Thread(() => sc.parallelize(1 to 10, 3).count())
+      child.start()
+      val rows = sc.parallelize(1 to 10, 2).count()
+      child.join()
+      rows
+    }
+    assert(rec.result == 10)
+    assert(rec.jobs.size == 2)
+    assert(rec.jobs.map(_.id).distinct.size == 2)
+    assert(rec.jobs.forall(j => j.end >= j.start))
+    assert(rec.taskMs.size == 5)
+    // the sentinel and jobs started outside the block are not counted
+    assert(Probe.record(spark)(1).jobs.isEmpty)
+  }
+
+  test("Bench.interleaved samples each query once per round and sanitizes errors") {
+    val rounds = Bench.interleaved(spark, "unused", Seq(
+      "ok" -> ((s, _) => s.range(3).toDF()),
+      "boom" -> ((s, _) => throw new IllegalStateException("a \"quoted\"\nfailure"))),
+      runs = 2, tag = "test", calibrate = false)
+    assert(rounds.samples.keySet == Set("ok") && rounds.samples("ok").size == 2)
+    assert(rounds.errors == Map("boom" -> "a  quoted  failure"))
+    assert(rounds.calibration.isEmpty && rounds.calibrationShuffle.isEmpty)
+  }
+
+  test("src/main declares no main outside the entry points and the four tools") {
+    val allowed = Set("graft.Main", "graft.Verify", "graft.Bench",
+      "graft.tools.Probe", "graft.tools.RecallCheck", "graft.tools.ScaleGate",
+      "graft.tools.ScaleProbe")
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val files = try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    assert(files.size > 50)
+    val Obj = """\bobject\s+(\w+)""".r
+    val mains = files.flatMap { f =>
+      val text = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+      val pkg = """(?m)^package\s+([\w.]+)""".r.findFirstMatchIn(text)
+        .fold("")(_.group(1) + ".")
+      """\bdef\s+main\s*\(""".r.findAllMatchIn(text).map { m =>
+        pkg + Obj.findAllMatchIn(text.take(m.start)).toSeq.lastOption
+          .fold(s"<no object in $f>")(_.group(1))
+      }
+    }
+    assert(mains.contains("graft.tools.Probe"))
+    assert(mains.toSet.subsetOf(allowed),
+      s"mains outside the allowed set: ${mains.filterNot(allowed).mkString(", ")}")
+  }
+}
