@@ -478,24 +478,11 @@ trait CorpusLm extends CorpusTokenizers {
   def saveLm(train: DataFrame, textCol: String, idCol: String,
              path: String): Unit = {
     val spark = train.sparkSession
-    // a rebuild starts a fresh streaming lineage: stale exactly-once
-    // markers would silently no-op the new stream's first batches, and
-    // stale snapshot pins would keep serving the OLD corpus's counts
-    // (publishRewrite preserves pinned versions by design)
-    graft.ops.Stage.clearLedger(spark, path)
-    graft.ops.Stage.clearSnapshots(spark, s"$path/bigrams")
-    graft.ops.Stage.clearSnapshots(spark, s"$path/vocab")
-    // ONE root lease over both component rebuilds (the
-    // saveMinhashManifest protocol): a leased delta publish landing
-    // BETWEEN the two flips would pair the new corpus's bigrams with
-    // the old corpus's vocab — V wrong for every unseen-bigram score
-    graft.ops.Stage.withWriterLease(spark, path) {
-      // BORN VERSIONED (like the IVF lists): [[Lm]] pins need a
-      // version from the first build. publishREBUILD, not publishRewrite:
-      // rebuilding over an existing model must give the OLD corpus's
-      // counts no previous-version grace — the rebuild boundary resets
-      // the whole history (ledger/snapshots above, previous pointer here),
-      // so nothing can serve cross-corpus state under this path.
+    // ONE root lease over both component rebuilds: a leased delta
+    // publish landing BETWEEN the two flips would pair the new corpus's
+    // bigrams with the old corpus's vocab — V wrong for every
+    // unseen-bigram score
+    Lm.rebuild(spark, path) {
       // bigram/token explosion amplifies each doc row ~|tokens|×; spread
       // a compact scan before it (Tables.spreadAmplified scaladoc)
       val spread = graft.ops.Tables.spreadAmplified(

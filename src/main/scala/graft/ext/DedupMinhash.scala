@@ -252,35 +252,19 @@ trait DedupMinhash extends DedupExactOps {
                           path: String, k: Int = 32, bands: Int = 8): Unit = {
     val spark = df.sparkSession
     import spark.implicits._
-    // a rebuild starts a fresh streaming lineage: stale exactly-once
-    // markers would silently no-op the new stream's first batches; a
-    // stale tombstone table would mask re-ingested content
-    graft.ops.Stage.clearLedger(spark, path)
-    graft.ops.Stage.clearTombstones(spark, path)
-    // BORN VERSIONED via publishRebuild, under the root lease — the
-    // saveWinnowManifest protocol. The old in-place overwrite of the
-    // RESOLVED live directory tore concurrent probes mid-scan, raced
-    // unleased appends, and silently re-pointed any snapshot pin of the
-    // live version at the new corpus's data.
-    graft.ops.Stage.withWriterLease(spark, path) {
-      // meta publishes FIRST, versioned, inside the lease: the old
-      // unversioned overwrite AFTER the lease released was a non-atomic
-      // directory swap a concurrent meta read could transiently fail on,
-      // and it let a leased append read the OLD meta while the NEW data
-      // was already live
+    MinhashManifest.rebuild(spark, path) {
       // meta ∥ docs (guide §2.6): both publish under the held ROOT lease
       // — no append can read a half-built state either way (appends
       // acquire the root lease) — and the meta job's ~0.2 s of publish
       // latency disappears under the docs build. bands stays ordered
       // after docs (it reads the published docs parquet).
+      import graft.ops.Stage.publishRebuild
       val keyed = manifestKeyed(df, textCol, idCol, k, bands)
       graft.ops.Par.run(
-        () => graft.ops.Stage.publishRebuild(spark, s"$path/meta")(vd =>
-          Seq((k, bands)).toDF("k", "bands")
-            .repartition(1).write.mode("overwrite").parquet(vd)),
-        () => graft.ops.Stage.publishRebuild(spark, s"$path/docs")(vd =>
-          keyed.select(col("doc"), col("toks"), col("ntok"), col("keys"))
-            .write.mode("overwrite").parquet(vd)))
+        () => publishRebuild(spark, s"$path/meta",
+          Seq((k, bands)).toDF("k", "bands").repartition(1)),
+        () => publishRebuild(spark, s"$path/docs",
+          keyed.select(col("doc"), col("toks"), col("ntok"), col("keys"))))
       // bands/ derives from the JUST-PUBLISHED docs parquet (safe under
       // the held root lease), not from `keyed`'s lineage: the second
       // publish used to re-run the whole tokenize → exact-collapse →
@@ -290,8 +274,7 @@ trait DedupMinhash extends DedupExactOps {
       // which the docs component persists)
       val publishedDocs = Tables.parquet(spark,
         graft.ops.Stage.resolve(spark, s"$path/docs"))
-      graft.ops.Stage.publishRebuild(spark, s"$path/bands")(vd =>
-        bandsRows(publishedDocs, k, bands).write.mode("overwrite").parquet(vd))
+      publishRebuild(spark, s"$path/bands", bandsRows(publishedDocs, k, bands))
     }
   }
 
@@ -548,9 +531,9 @@ trait DedupMinhash extends DedupExactOps {
     * the one-cycle previous window and serves through
     * `incrementalNearDups(…, at = Pinned(name))`; restore is the undo for a
     * forget/ingest campaign [[incrementalNearDupsDiff]] flagged as wrong.
-    * Meta is frozen at build. Requires versioned components — any
-    * maintenance op (compaction, content delete) migrates a fresh
-    * manifest. */
+    * Meta is frozen at build; [[saveMinhashManifest]] builds every
+    * component born versioned, so a fresh manifest is pinnable at
+    * once. */
   val MinhashManifest: graft.ops.Family =
     graft.ops.Family("minhash_manifest", (_, _) => Seq("docs", "bands"),
       foldManifest)

@@ -285,8 +285,7 @@ trait DedupSetSim extends DedupWinnow {
   def saveSetSimIndex(df: DataFrame, textCol: String, idCol: String,
                       path: String, shingle: Int = 3): Unit = {
     val spark = df.sparkSession
-    graft.ops.Stage.clearLedger(spark, path)
-    graft.ops.Stage.withWriterLease(spark, path) {
+    graft.ops.Stage.rebuild(spark, path, SetSimComponents) {
       val sets = setSimSets(df, textCol, idCol, shingle)
       var setsDir: String = null
       graft.ops.Stage.publishRebuild(spark, s"$path/sets") { vd =>

@@ -268,26 +268,14 @@ trait DedupWinnow extends DedupSimhash {
                          path: String, n: Int = 3, w: Int = 4): Unit = {
     val spark = df.sparkSession
     import spark.implicits._
-    // a rebuild starts a fresh streaming lineage (the shared rule):
-    // stale exactly-once markers would no-op a new stream's batches
-    graft.ops.Stage.clearLedger(spark, path)
-    graft.ops.Stage.clearTombstones(spark, path)
-    // ONE lease over meta + fps: a leased append between the two
-    // publishes must not pair one generation's parameters with the
+    // ONE rebuild lease over meta + fps: a leased append between the
+    // two publishes must not pair one generation's parameters with the
     // other's fingerprints
-    graft.ops.Stage.withWriterLease(spark, path) {
-      // meta FIRST, versioned (was an unversioned plain-directory
-      // overwrite AFTER the data flip — non-atomic for concurrent reads
-      // and wrong-ordered for leased appends)
-      graft.ops.Stage.publishRebuild(spark, s"$path/meta")(vd =>
-        Seq((n, w)).toDF("n", "w")
-          .repartition(1).write.mode("overwrite").parquet(vd))
-      // BORN VERSIONED (Stage.publishRebuild, like savePositionalIndex):
-      // snapshot pins work straight off a fresh build, and a re-build
-      // over a maintained manifest preserves the pointer/GC line
-      graft.ops.Stage.publishRebuild(spark, s"$path/fps")(versionDir =>
-        winnowFps(df, textCol, idCol, n, w)
-          .write.mode("overwrite").parquet(versionDir))
+    WinnowManifest.rebuild(spark, path) {
+      graft.ops.Stage.publishRebuild(spark, s"$path/meta",
+        Seq((n, w)).toDF("n", "w").repartition(1))
+      graft.ops.Stage.publishRebuild(spark, s"$path/fps",
+        winnowFps(df, textCol, idCol, n, w))
     }
   }
 

@@ -178,38 +178,39 @@ object Search {
     *
     * df needs no table of its own: postings rows are distinct (token,
     * doc) pairs, so df(t) is a count over the already-filtered postings.
+    * Every component is born versioned, under [[TextIndex]]'s rebuild.
     */
   def saveTextIndex(docs: DataFrame, path: String,
                     idCol: String = "doc_id", textCol: String = "text"): Unit = {
-    // a rebuild starts a fresh streaming lineage: stale exactly-once
-    // markers would silently no-op the new stream's first batches, and a
-    // stale tombstone table would mask the new corpus's documents
-    graft.ops.Stage.clearLedger(docs.sparkSession, path)
-    graft.ops.Stage.clearTombstones(docs.sparkSession, path)
-    // the POSITIONAL component is the old corpus's too: left in place it
-    // would phrase-serve corpus-A hits for a corpus-B index, and the
-    // next append would MIX corpora into it (textComponents would still
-    // report it). A rebuild drops it; run savePositionalIndex again to
-    // re-enable phrase/proximity serving over the new corpus.
-    val posPath = new org.apache.hadoop.fs.Path(s"$path/positions")
-    posPath.getFileSystem(docs.sparkSession.sparkContext.hadoopConfiguration)
-      .delete(posPath, true)
-    // tokenization amplifies each doc row ~|tokens|×; spread a compact
-    // scan before it (Tables.spreadAmplified scaladoc — the measured
-    // sf1 campaign-build straggler)
-    val spread = graft.ops.Tables.spreadAmplified(
-      docs.select(col(idCol), col(textCol)), col(idCol))
-    // the three component writes are independent plain overwrites of
-    // disjoint directories (no leases, no cross-reads) — run them
-    // CONCURRENTLY (guide §2.6) so each write's job-submit latency and
-    // straggler tail back-fills with the next component's tasks
-    graft.ops.Par.run(
-      () => postingsOf(spread, idCol, textCol)
-        .write.mode("overwrite").parquet(s"$path/postings"),
-      () => doclensOf(spread, idCol, textCol)
-        .write.mode("overwrite").parquet(s"$path/doclens"),
-      () => batchStats(spread, textCol)
-        .write.mode("overwrite").parquet(s"$path/stats"))
+    val spark = docs.sparkSession
+    import graft.ops.Stage.publishRebuild
+    TextIndex.rebuild(spark, path) {
+      // the POSITIONAL component is the old corpus's too: left in place
+      // it would phrase-serve corpus-A hits for a corpus-B index, and the
+      // next append would MIX corpora into it (textComponents would
+      // still report it). A rebuild drops it; run savePositionalIndex
+      // again to re-enable phrase/proximity serving over the new corpus.
+      val posPath = new org.apache.hadoop.fs.Path(s"$path/positions")
+      posPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .delete(posPath, true)
+      // tokenization amplifies each doc row ~|tokens|×; spread a compact
+      // scan before it (Tables.spreadAmplified scaladoc — the measured
+      // sf1 campaign-build straggler)
+      val spread = graft.ops.Tables.spreadAmplified(
+        docs.select(col(idCol), col(textCol)), col(idCol))
+      // the three component publishes are independent (disjoint
+      // component roots, each under its own component lease, no
+      // cross-reads) — run them CONCURRENTLY (guide §2.6) so each
+      // write's job-submit latency and straggler tail back-fills with
+      // the next component's tasks
+      graft.ops.Par.run(
+        () => publishRebuild(spark, s"$path/postings",
+          postingsOf(spread, idCol, textCol)),
+        () => publishRebuild(spark, s"$path/doclens",
+          doclensOf(spread, idCol, textCol)),
+        () => publishRebuild(spark, s"$path/stats",
+          batchStats(spread, textCol)))
+    }
   }
 
   /** Append a new ingest batch to a [[saveTextIndex]] index without
@@ -463,8 +464,8 @@ object Search {
     * an operator can hold the pre-campaign state across a whole run of
     * deletes and compactions, serve it with `at = Pinned(name)`, and
     * restore it when [[bm25MaintenanceDiff]] flags the campaign as wrong.
-    * Requires a versioned layout — pin after the first maintenance op
-    * (or compact once first). */
+    * [[saveTextIndex]] builds born versioned, so a fresh index is
+    * pinnable at once. */
   val TextIndex: graft.ops.Family =
     graft.ops.Family("text_index", textComponents, foldText)
 
@@ -556,9 +557,10 @@ object Search {
     // same as deleteFromTextIndex): a concurrent snapshot/append must
     // not interleave with the component flip
     graft.ops.Stage.withWriterLease(spark, path) {
-      // pins deliberately SURVIVE this rebuild (unlike saveLm/savePqIndex,
-      // which clear them): positions is a self-contained re-derivation of
-      // the same index's corpus, restorable only TOGETHER with the triple
+      // pins deliberately SURVIVE this rebuild (unlike the save*
+      // builders, whose Family.rebuild clears them): positions is a
+      // self-contained re-derivation of the same index's corpus,
+      // restorable only TOGETHER with the triple
       // through TextIndex.restore — SearchSpec pins the
       // pin→rebuild→restore round trip. The cross-CORPUS stale-pin hazard
       // is closed at the true rebuild boundary instead: saveTextIndex

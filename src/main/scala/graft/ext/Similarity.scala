@@ -801,12 +801,14 @@ object Similarity {
     * vectors ON DISK, so every later query batch scans codes, never
     * re-encodes the corpus. Layout (all parquet):
     *
-    *  - `codes/`: (vec_id, codes ARRAY<INT>) — one row per vector,
-    *    BORN VERSIONED ([[graft.ops.Stage.publishRebuild]], the
-    *    saveIvfIndex convention: a rebuild severs previous-serving
-    *    grace, so stale codes can never pair with new codebooks);
+    *  - `codes/`: (vec_id, codes ARRAY<INT>) — one row per vector;
     *  - `codebooks/`: (j, c, vec) — the m×nCent codebook entries, tiny;
     *  - `meta/`: one row (dim, m, n_cent).
+    *
+    * All three are published under [[PqIndex]]'s rebuild, born
+    * versioned: a rebuild severs previous-serving grace, so stale codes
+    * can never pair with new codebooks, and a leased append never reads
+    * half-written codebooks or meta.
     *
     * `trainIters` > 0 trains the codebooks ([[trainPqCodebooks]] —
     * oracle-replayable fixed-point Lloyd); 0 keeps the frozen
@@ -824,26 +826,24 @@ object Similarity {
                   codebooksIn: Array[Array[Array[Double]]] = null): Unit = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    graft.ops.Stage.clearLedger(spark, path)
-    graft.ops.Stage.clearTombstones(spark, path)
-    graft.ops.Stage.clearSnapshots(spark, s"$path/codes")
-    // codebooksIn is the SHELL path for streaming ingest: codebooks from
-    // the full (static) corpus, an empty codes relation, the stream
-    // fills it (q114's shell convention for the IVF lists)
-    val cb = if (codebooksIn != null) codebooksIn
-    else if (trainIters > 0)
-      trainPqCodebooks(corpus, m, nCent, dim, trainIters, idCol, vecCol)
-    else pqCodebooks(corpus, m, nCent, dim, idCol, vecCol)
-    cb.zipWithIndex.flatMap { case (cbJ, j) =>
-      cbJ.zipWithIndex.map { case (cv, c) => (j, c, cv.toSeq) }
-    }.toSeq.toDF("j", "c", "vec")
-      .repartition(1).write.mode("overwrite").parquet(s"$path/codebooks")
-    Seq((dim, m, nCent)).toDF("dim", "m", "n_cent")
-      .repartition(1).write.mode("overwrite").parquet(s"$path/meta")
-    graft.ops.Stage.publishRebuild(spark, s"$path/codes")(versionDir =>
-      pqCodes(corpus, dim, cb, idCol, vecCol)
-        .withColumnRenamed(idCol, "vec_id")
-        .write.mode("overwrite").parquet(versionDir))
+    import graft.ops.Stage.publishRebuild
+    PqIndex.rebuild(spark, path) {
+      // codebooksIn is the SHELL path for streaming ingest: codebooks
+      // from the full (static) corpus, an empty codes relation, the
+      // stream fills it (q114's shell convention for the IVF lists)
+      val cb = if (codebooksIn != null) codebooksIn
+      else if (trainIters > 0)
+        trainPqCodebooks(corpus, m, nCent, dim, trainIters, idCol, vecCol)
+      else pqCodebooks(corpus, m, nCent, dim, idCol, vecCol)
+      publishRebuild(spark, s"$path/codebooks",
+        cb.zipWithIndex.flatMap { case (cbJ, j) =>
+          cbJ.zipWithIndex.map { case (cv, c) => (j, c, cv.toSeq) }
+        }.toSeq.toDF("j", "c", "vec").repartition(1))
+      publishRebuild(spark, s"$path/meta",
+        Seq((dim, m, nCent)).toDF("dim", "m", "n_cent").repartition(1))
+      publishRebuild(spark, s"$path/codes",
+        pqCodes(corpus, dim, cb, idCol, vecCol).withColumnRenamed(idCol, "vec_id"))
+    }
   }
 
   /** The (dim, codebooks) a persisted PQ index was built with — one
@@ -994,7 +994,7 @@ object Similarity {
     * later query batch scans words, never re-packs the corpus. Layout:
     *
     *  - `sig/`: (vec_id, words ARRAY<BIGINT>, dim INT) — one row per
-    *    vector, BORN VERSIONED ([[graft.ops.Stage.publishRebuild]]).
+    *    vector, born versioned under [[BinaryIndex]]'s rebuild.
     *    `dim` is STAMPED on every row (RLE-compressed constant — the
     *    round-15 manifest rule: serves derive parameters from the data
     *    they actually scan, so a serve racing a rebuild that changes
@@ -1016,16 +1016,11 @@ object Similarity {
                       vecCol: String = "embedding"): Unit = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    graft.ops.Stage.clearLedger(spark, path)
-    graft.ops.Stage.clearTombstones(spark, path)
-    graft.ops.Stage.clearSnapshots(spark, s"$path/sig")
-    graft.ops.Stage.withWriterLease(spark, path) {
-      graft.ops.Stage.publishRebuild(spark, s"$path/meta")(vd =>
-        Seq(dim).toDF("dim")
-          .repartition(1).write.mode("overwrite").parquet(vd))
-      graft.ops.Stage.publishRebuild(spark, s"$path/sig")(vd =>
-        binarySigRows(corpus, dim, idCol, vecCol)
-          .write.mode("overwrite").parquet(vd))
+    BinaryIndex.rebuild(spark, path) {
+      graft.ops.Stage.publishRebuild(spark, s"$path/meta",
+        Seq(dim).toDF("dim").repartition(1))
+      graft.ops.Stage.publishRebuild(spark, s"$path/sig",
+        binarySigRows(corpus, dim, idCol, vecCol))
     }
   }
 
@@ -1789,6 +1784,13 @@ object Similarity {
     * (dynamic partition pruning against the broadcast probe list), which
     * is the difference between an index lookup and a corpus scan at
     * 100 TB.
+    *
+    * All three are published under [[IvfIndex]]'s rebuild, born
+    * versioned. The rebuild gives the old corpus's lists NO
+    * previous-serving grace: a Previous serve right after a rebuild
+    * would otherwise dequantize OLD-corpus lists with the NEW meta's
+    * quantScale/centroids. Previous-serving returns after the first
+    * post-rebuild maintenance op.
     */
   def saveIvfIndex(corpus: DataFrame, path: String, nCentroids: Int, dim: Int,
                    quantScale: Double = 0.0, iters: Int = 3,
@@ -1796,36 +1798,20 @@ object Similarity {
                    centroidsIn: Array[Array[Double]] = null): Unit = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    // a rebuild starts a fresh streaming lineage: stale exactly-once
-    // markers would silently no-op the new stream's first batches, a
-    // stale tombstone table would mask the new corpus's vectors, and a
-    // stale snapshot pin would keep serving (and keep alive) the OLD
-    // corpus's lists under its name
-    graft.ops.Stage.clearLedger(spark, path)
-    graft.ops.Stage.clearTombstones(spark, path)
-    graft.ops.Stage.clearSnapshots(spark, s"$path/lists")
-    val cents = if (centroidsIn == null)
-      trainCentroids(corpus, nCentroids, dim, iters, idCol, vecCol)
-    else centroidsIn
-    cents.zipWithIndex.toSeq.map { case (v, i) => (i, v.toSeq) }
-      .toDF("centroid", "vec")
-      .repartition(1).write.mode("overwrite").parquet(s"$path/centroids")
-    Seq((dim, cents.length, quantScale)).toDF("dim", "n_centroids", "quant_scale")
-      .repartition(1).write.mode("overwrite").parquet(s"$path/meta")
-    // lists are BORN VERSIONED (publish on a fresh dir = v1 + pointer):
-    // a Hive-partitioned component must never live as a plain layout,
-    // because its first migration would leave a root that mixes
-    // `centroid=N/` and version directories — unreadable as a fresh scan
-    // (see Stage.resolvePrevious). publishREBUILD, not publishRewrite:
-    // on a rebuild over an existing index the old corpus's version must
-    // get NO previous-serving grace — a Previous serve right after
-    // a rebuild would otherwise silently dequantize OLD-corpus lists
-    // with the NEW meta's quantScale/centroids. The rebuild boundary
-    // resets the whole history (ledger/tombstones/snapshots above, and
-    // the previous pointer here); previous-serving returns after the
-    // first post-rebuild maintenance op.
-    graft.ops.Stage.publishRebuild(spark, s"$path/lists")(versionDir =>
-      writeIvfLists(corpus, cents, quantScale, idCol, vecCol, versionDir))
+    import graft.ops.Stage.publishRebuild
+    IvfIndex.rebuild(spark, path) {
+      val cents = if (centroidsIn == null)
+        trainCentroids(corpus, nCentroids, dim, iters, idCol, vecCol)
+      else centroidsIn
+      publishRebuild(spark, s"$path/centroids",
+        cents.zipWithIndex.toSeq.map { case (v, i) => (i, v.toSeq) }
+          .toDF("centroid", "vec").repartition(1))
+      publishRebuild(spark, s"$path/meta",
+        Seq((dim, cents.length, quantScale))
+          .toDF("dim", "n_centroids", "quant_scale").repartition(1))
+      publishRebuild(spark, s"$path/lists")(versionDir =>
+        writeIvfLists(corpus, cents, quantScale, idCol, vecCol, versionDir))
+    }
   }
 
   /** The (scale, centroids) a persisted index was built with — ONE loader

@@ -20,8 +20,6 @@ import org.apache.spark.sql.functions.{col, lit, when}
   *    captures one maintenance state (a delete landing between two
   *    component pins would freeze a mixed state that serves wrong). The
   *    pinned versions survive every later GC until [[dropSnapshot]].
-  *    Requires a versioned layout: pin after the first maintenance op,
-  *    or build born-versioned.
   *  - [[restore]] rolls the live state back to the pin under the same
   *    root lease, all-or-nothing: every component is checked for the pin
   *    BEFORE any is restored, so a typo'd name leaves the live state
@@ -70,6 +68,11 @@ import org.apache.spark.sql.functions.{col, lit, when}
   * set [[compact]] probed under the lease and the pending tombstone keys
   * (None when none are pending); it publishes each rewritten component
   * with [[Stage.publishRewrite]].
+  *
+  * And so is the build side: every `saveX` builder runs inside
+  * [[rebuild]] and publishes each directory it writes — components and
+  * frozen meta alike — with [[Stage.publishRebuild]], so every
+  * directory of an index is born versioned.
   */
 final case class Family(
     name: String,
@@ -96,6 +99,12 @@ final case class Family(
         Stage.publishOnce(spark, path, id, comps)(stage(_, comps))
     }
   }
+
+  /** Rebuild the family at `path` ([[Stage.rebuild]] over its
+    * components): under the root lease, clear the ledger, the tombstones
+    * and every component's snapshot pins, then run `build`. */
+  def rebuild(spark: SparkSession, path: String)(build: => Unit): Unit =
+    Stage.rebuild(spark, path, components(spark, path))(build)
 
   /** Compact the family at `path`: under the root lease, sweep the
     * leavings of uncommitted publishes (folding them would anonymize a

@@ -34,11 +34,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    linger harmlessly until the next publish sweeps them.
   *
   * [[resolve]] is the read-side half: index readers resolve `root` to the
-  * live data directory before every scan. A directory with no `_current`
-  * is a PLAIN layout (the data files sit in `root` itself) — what the
-  * initial `save*` builders and first-batch streaming appends produce —
-  * and resolves to itself, so the two layouts interoperate: the first
-  * rewrite of a plain directory migrates it to versioned.
+  * live data directory before every scan. Every index component is born
+  * versioned — builders publish through [[rebuild]] and
+  * [[publishRebuild]], stream-born shells through [[ensureVersioned]] —
+  * so the only roots without a `_current` are an index root's
+  * `tombstones/` table and components not built yet; they resolve to
+  * themselves.
   *
   * Single-writer contract (unchanged from the old design): concurrent
   * maintenance ops on one index race; in-flight lazy scans of a version
@@ -47,18 +48,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Stage {
 
   private val VersionRe = "v\\d{8}".r
-
-  /** Pointer token naming the PLAIN layout as a previous "version": the
-    * first (migrating) publish over a plain directory writes it as the
-    * pointer's second line, so [[gcStale]] spares the plain top-level
-    * data files for one publish cycle — the same reader grace every
-    * later publish gives its predecessor — and [[resolvePrevious]] can
-    * serve them (the root itself reads as the pre-migration snapshot:
-    * parquet scans of a directory read only its top-level files, so the
-    * version subdirectories alongside are invisible to it). The next
-    * publish drops the token and sweeps the plain files.
-    */
-  private val PlainToken = "plain"
   private val BatchMarkerRe = "batch-(\\d+)".r
   private val HighMarkerRe = "high-(\\d+)".r
   private val BatchFileRe = "b(\\d+)-.*".r
@@ -109,15 +98,15 @@ object Stage {
     if (!fs.exists(pointer)) Nil
     else {
       val lines = readTrimmedLines(fs, pointer)
-      require(lines.nonEmpty && VersionRe.matches(lines.head) &&
-        lines.tail.forall(l => VersionRe.matches(l) || l == PlainToken),
+      require(lines.nonEmpty && lines.forall(VersionRe.matches),
         s"$pointer names ${lines.mkString(",")}, not version directories")
       lines
     }
   }
 
   /** The live data directory for `root`: `root/<version>` when a
-    * `_current` pointer exists, `root` itself (plain layout) otherwise.
+    * `_current` pointer exists, `root` itself otherwise (the
+    * `tombstones/` table, or a component not built yet).
     */
   def resolve(spark: SparkSession, root: String): String = {
     val rootPath = new Path(root)
@@ -127,8 +116,8 @@ object Stage {
 
   /** The previously-live data directory of `root` — the version the
     * pointer's second line names, which [[gcStale]] spares for exactly
-    * one publish cycle. None for a plain layout or an index whose only
-    * publish replaced an EMPTY root. This is the read half of
+    * one publish cycle. None when the last publish was a rebuild (or
+    * the root has no pointer). This is the read half of
     * TIME-TRAVEL serving: a maintenance op (delete, compaction) can be
     * validated by serving the pre-op snapshot next to the live one and
     * diffing, without any extra storage — the grace version already
@@ -136,23 +125,11 @@ object Stage {
     * publish cycle: the NEXT maintenance op garbage-collects it, so
     * previous-serving is a validation window, not an archive (retention
     * beyond one cycle belongs to [[snapshot]]).
-    *
-    * After the first (migrating) publish over a plain layout, the
-    * previous snapshot is the root itself: the plain data files stay in
-    * place for one cycle ([[PlainToken]]) and a parquet scan of the
-    * root reads exactly them — version subdirectories are invisible to
-    * a top-level scan. Caveat, FLAT layouts only: a plain layout that
-    * was itself Hive-partitioned (`key=value/` subdirectories) cannot
-    * be re-read as a fresh scan once version directories sit alongside
-    * (conflicting-structure detection); partitioned components should
-    * be born versioned instead (as [[graft.ext.Similarity.saveIvfIndex]]
-    * does for `lists/`), which makes this caveat unreachable for them.
     */
   def resolvePrevious(spark: SparkSession, root: String): Option[String] = {
     val rootPath = new Path(root)
     pointerLines(fsFor(spark, rootPath), rootPath).drop(1).headOption
-      .map(v => if (v == PlainToken) root
-                else new Path(rootPath, v).toString)
+      .map(v => new Path(rootPath, v).toString)
   }
 
   /** Atomically replace the contents of `root`: `write` receives a fresh
@@ -180,9 +157,8 @@ object Stage {
     * previous version" next to the new build's metadata, and a
     * previous-serving read immediately after the rebuild would silently
     * pair OLD data with NEW parameters (the IVF case: old-corpus lists
-    * dequantized with the new quantScale/centroids). Builders that
-    * rebuild in place ([[graft.ext.Similarity.saveIvfIndex]],
-    * [[graft.ext.Corpus.saveLm]]) publish through this, so
+    * dequantized with the new quantScale/centroids). Every directory a
+    * builder writes inside [[rebuild]] publishes through this, so
     * `resolvePrevious` fails loudly until the first POST-rebuild
     * maintenance op establishes a same-corpus history.
     */
@@ -238,87 +214,71 @@ object Stage {
       gcStale(fs, rootPath)
     }
 
-  /** Make an EMPTY component root a versioned layout: a `v00000001` data
-    * directory plus the pointer, with no previous line. This is how
-    * STREAM-BORN indexes come into being ([[appendExactlyOnce]] /
-    * [[publishOnce]] call it before their first publish into a fresh
-    * component), so the first exactly-once batch lands inside a version
-    * — and [[snapshot]] pins work from birth instead of failing until a
-    * warm-up compaction migrates the layout (the batch-built families'
-    * born-versioned shape, extended to streaming shells). A no-op on
-    * roots that already have a pointer OR plain data files (an existing
-    * plain index keeps its layout until its first migrating publish).
+  /** Make a component root with no pointer a versioned layout: an empty
+    * `v00000001` data directory plus the pointer, with no previous line.
+    * This is how STREAM-BORN indexes come into being (the staged commit
+    * of [[appendExactlyOnce]] / [[publishOnce]] calls it before its
+    * first publish into a fresh component), so the first exactly-once
+    * batch lands inside a version and [[snapshot]] pins work from birth,
+    * as they do for the batch-built families. A no-op on roots that
+    * already have a pointer.
     */
   def ensureVersioned(spark: SparkSession, dir: String): Unit = {
     val rootPath = new Path(dir)
     val fs = fsFor(spark, rootPath)
-    if (pointerLines(fs, rootPath).isEmpty &&
-        dataEntries(fs, rootPath).isEmpty) {
+    if (pointerLines(fs, rootPath).isEmpty) {
       val version = "v00000001"
       fs.mkdirs(new Path(rootPath, version))
       writePointer(spark, fs, rootPath, version)
     }
   }
 
-  /** Point `root/_current` at `version` with an atomic overwrite-rename;
-    * with `grace`, the previously-live version rides along as the second
-    * line so GC can spare it for one cycle. A first graced publish over a
-    * PLAIN layout records [[PlainToken]] instead — the plain top-level
-    * data files are that publish's predecessor and get the same one-cycle
-    * grace. Without grace (rebuilds), only the new version is named. */
+  /** Point `root/_current` at `version`; with `grace`, the
+    * previously-live version rides along as the second line so GC can
+    * spare it for one cycle. Without grace (rebuilds), only the new
+    * version is named. */
   private def flipPointer(spark: SparkSession, fs: FileSystem,
                           rootPath: Path, version: String,
                           grace: Boolean): Unit = {
     val previous =
-      if (!grace) None
-      else pointerLines(fs, rootPath).headOption.orElse {
-        // called after write(versionDir): any non-version data entry is
-        // pre-migration plain data (the fresh version dir is excluded by
-        // name; `_`/`.` metadata by dataEntries)
-        val plainData = dataEntries(fs, rootPath)
-          .exists(s => !VersionRe.matches(s.getPath.getName))
-        if (plainData) Some(PlainToken) else None
-      }
+      if (grace) pointerLines(fs, rootPath).headOption else None
     writePointer(spark, fs, rootPath, version, previous)
   }
 
   private def writePointer(spark: SparkSession, fs: FileSystem,
                            rootPath: Path, version: String,
-                           previous: Option[String] = None): Unit = {
-    val content = (version +: previous.toSeq).mkString("\n")
-    val tmp = new Path(rootPath, "_current.tmp")
+                           previous: Option[String] = None): Unit =
+    replaceFile(spark, fs, new Path(rootPath, "_current"),
+      (version +: previous.toSeq).mkString("\n"))
+
+  /** Replace the small file `f` with `content` atomically: write a
+    * `.`-prefixed tmp sibling, then `FileContext.rename(…, OVERWRITE)` —
+    * atomic on POSIX filesystems and HDFS. The ONE write shape of the
+    * pointer, the snapshot pins and the tombstones' `_consumed` record;
+    * a reader sees the old content or the new, never a torn file. */
+  private def replaceFile(spark: SparkSession, fs: FileSystem, f: Path,
+                          content: String): Unit = {
+    val tmp = new Path(f.getParent, s".${f.getName}.tmp")
     val out = fs.create(tmp, true)
     try out.write(content.getBytes("UTF-8")) finally out.close()
-    val fc = FileContext.getFileContext(rootPath.toUri,
-      spark.sparkContext.hadoopConfiguration)
-    fc.rename(tmp, new Path(rootPath, "_current"), Options.Rename.OVERWRITE)
+    FileContext.getFileContext(f.toUri, spark.sparkContext.hadoopConfiguration)
+      .rename(tmp, f, Options.Rename.OVERWRITE)
   }
 
   /** Delete stale state under `root`: orphan versions of crashed
     * publishes and older generations. The versions the pointer names
     * (live + previously-live) survive — an in-flight scan that resolved
     * just before the flip still finds its files; the next publish sweeps
-    * them. When the pointer's second line is [[PlainToken]] (the first
-    * migration of a plain layout), every non-version entry IS the
-    * previous snapshot and gets the same one-cycle grace — a reader that
-    * resolved the plain root just before the migrating flip still reads
-    * its files (pinned listings keep working even for partitioned plain
-    * layouts; fresh top-level scans work for flat ones). The publish
-    * after the migration drops the token and sweeps the plain files.
+    * them — and so does every version a named snapshot pins.
     */
   private def gcStale(fs: FileSystem, rootPath: Path): Unit = {
-    val lines = pointerLines(fs, rootPath)
     // keep: pointer-named versions (live + one-cycle grace) PLUS any
     // version a named snapshot pins — [[snapshot]]'s whole point is
     // surviving publish cycles until dropped
-    val keep = lines.toSet ++ snapshotVersions(fs, rootPath)
-    val plainGrace = lines.contains(PlainToken)
+    val keep = pointerLines(fs, rootPath).toSet ++
+      snapshotVersions(fs, rootPath)
     fs.listStatus(rootPath).map(_.getPath)
-      .filter { p =>
-        val n = p.getName
-        !ControlNames.contains(n) && !keep.contains(n) &&
-          (VersionRe.matches(n) || !plainGrace)
-      }
+      .filter(p => !ControlNames.contains(p.getName) && !keep.contains(p.getName))
       .foreach(p => fs.delete(p, true))
   }
 
@@ -356,8 +316,7 @@ object Stage {
     * accumulate full copies, which is why they are named and explicitly
     * dropped rather than automatic. Re-pinning an existing name moves it
     * (atomic overwrite-rename, like the pointer flip). Requires a
-    * versioned layout: a plain directory has no version to pin —
-    * publish once first (or build born-versioned).
+    * built component: a root with no pointer has no version to pin.
     *
     * The pin records the version's data FILE LIST, not just its name:
     * maintenance REWRITES publish fresh versions and leave the pinned
@@ -387,25 +346,26 @@ object Stage {
       val fs = fsFor(spark, rootPath)
       val live = pointerLines(fs, rootPath).headOption.getOrElse(
         throw new IllegalStateException(
-          s"$dir is a plain layout — a snapshot pins a VERSION; publish " +
-            "once first (save builders that write born-versioned layouts, " +
-            "or any maintenance op, create one)"))
+          s"$dir has no _current pointer — a snapshot pins a VERSION, and " +
+            "this component has none yet; build the index first"))
       val versionDir = new Path(rootPath, live)
       def rel(d: Path, prefix: String): Seq[String] =
         dataEntries(fs, d).toSeq.flatMap { s =>
           val n = prefix + s.getPath.getName
           if (s.isDirectory) rel(s.getPath, n + "/") else Seq(n)
         }
-      val content = (live +: rel(versionDir, "")).mkString("\n")
-      val snapDir = new Path(rootPath, "_snapshots")
-      fs.mkdirs(snapDir)
-      val tmp = new Path(snapDir, s".$name.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(content.getBytes("UTF-8")) finally out.close()
-      val fc = FileContext.getFileContext(rootPath.toUri,
-        spark.sparkContext.hadoopConfiguration)
-      fc.rename(tmp, new Path(snapDir, name), Options.Rename.OVERWRITE)
+      writePin(spark, fs, rootPath, name,
+        (live +: rel(versionDir, "")).mkString("\n"))
     }
+  }
+
+  /** Write `_snapshots/<name>` ([[replaceFile]]): a re-pin or a restored
+    * pin replaces the old one atomically. */
+  private def writePin(spark: SparkSession, fs: FileSystem, rootPath: Path,
+                       name: String, content: String): Unit = {
+    val snapDir = new Path(rootPath, "_snapshots")
+    fs.mkdirs(snapDir)
+    replaceFile(spark, fs, new Path(snapDir, name), content)
   }
 
   /** The raw bytes of a pin file, or None when the name is not pinned —
@@ -426,8 +386,8 @@ object Stage {
   }
 
   /** Atomically write back pin bytes captured by [[rawSnapshotPin]] —
-    * the restore half of the campaign re-pin rollback. Same tmp-write +
-    * overwrite-rename as [[snapshot]]'s pin flip. The version the old
+    * the restore half of the campaign re-pin rollback, written as
+    * [[snapshot]] writes a pin. The version the old
     * pin names is still on disk: the caller holds every involved root
     * lease across capture→overwrite→restore, and GC only runs inside a
     * publish, which those leases exclude. */
@@ -437,15 +397,7 @@ object Stage {
     require(name.matches(SnapshotNameRe),
       s"snapshot name '$name' must match $SnapshotNameRe (it names a file)")
     val rootPath = new Path(dir)
-    val fs = fsFor(spark, rootPath)
-    val snapDir = new Path(rootPath, "_snapshots")
-    fs.mkdirs(snapDir)
-    val tmp = new Path(snapDir, s".$name.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(content.getBytes("UTF-8")) finally out.close()
-    val fc = FileContext.getFileContext(rootPath.toUri,
-      spark.sparkContext.hadoopConfiguration)
-    fc.rename(tmp, new Path(snapDir, name), Options.Rename.OVERWRITE)
+    writePin(spark, fsFor(spark, rootPath), rootPath, name, content)
   }
 
   /** The version directory a named snapshot pins, or None if the name
@@ -607,9 +559,8 @@ object Stage {
     * component. Deletes exactly what the next publish's GC would: orphan
     * and superseded versions not named by the pointer (live +
     * previously-live keep their one-cycle reader grace) nor pinned by a
-    * surviving snapshot. Under the writer lease; a no-op on plain
-    * layouts (nothing versioned to reclaim — and the plain data files
-    * are the LIVE data, never garbage).
+    * surviving snapshot. Under the writer lease; a no-op on a root
+    * with no pointer (nothing versioned to reclaim).
     */
   def vacuum(spark: SparkSession, dir: String): Unit =
     withWriterLease(spark, dir) {
@@ -618,17 +569,36 @@ object Stage {
       if (pointerLines(fs, rootPath).nonEmpty) gcStale(fs, rootPath)
     }
 
-  /** Drop ALL of a directory's snapshot pins — the rebuild boundary,
-    * like [[clearLedger]]: a rebuilt index must not inherit pins, or a
-    * name would keep resolving to (and keep alive) a version of the OLD
-    * corpus — a silently-wrong serve. Builders that rebuild through
-    * [[publishRewrite]] (which preserves pinned versions by design)
-    * call this first; builders that plain-overwrite their component
-    * directories wipe `_snapshots` with everything else. */
-  def clearSnapshots(spark: SparkSession, dir: String): Unit = {
-    val p = new Path(dir, "_snapshots")
-    fsFor(spark, p).delete(p, true)
-  }
+  /** The REBUILD boundary every index builder goes through
+    * ([[Family.rebuild]]; the set-sim index, which has no family, calls
+    * it with its component list): under the root writer lease, clear
+    * what the OLD corpus left at `path`, then run `build`, which
+    * publishes every directory it writes with [[publishRebuild]] — so
+    * every component is born versioned and no superseded version gets
+    * reader grace. Cleared, each because a rebuilt index starts a fresh
+    * lineage:
+    *  - the ledger, `_staging` and `_fence` ([[clearLedger]]): batch ids
+    *    restart at 0 in a new checkpoint lineage, and surviving markers
+    *    would silently no-op the new stream's first batches;
+    *  - the `tombstones/` table: old pending deletes would mask the new
+    *    corpus's rows;
+    *  - every component's snapshot pins: [[gcStale]] spares pinned
+    *    versions, so a surviving pin would keep an OLD-corpus version
+    *    alive under its name, and a restore would pair it with the new
+    *    build's meta.
+    * `components` is evaluated under the lease. The builder's reads and
+    * writes also run under it, so no append, compaction or pin can
+    * interleave with a half-built index.
+    */
+  def rebuild(spark: SparkSession, path: String, components: => Seq[String])
+             (build: => Unit): Unit =
+    withWriterLease(spark, path) {
+      val fs = fsFor(spark, new Path(path))
+      clearLedger(spark, path)
+      fs.delete(new Path(s"$path/tombstones"), true)
+      components.foreach(c => fs.delete(new Path(s"$path/$c/_snapshots"), true))
+      build
+    }
 
   /** Currently-held lease paths of THIS thread (lock key → acquire
     * token) — makes [[withWriterLease]] reentrant, so a family-level
@@ -733,12 +703,14 @@ object Stage {
       commitId.replaceAll("[^A-Za-z0-9_.-]", "_"))
 
   /** Create `path` exclusively with `content`; false when it already
-    * exists. Local filesystems get a REAL O_CREAT|O_EXCL
+    * exists — the one create-exclusive of the writer lock and the commit
+    * fences. Local filesystems get a REAL O_CREAT|O_EXCL
     * (File.createNewFile) because Hadoop LocalFileSystem's
     * create(f, false) is exists-then-create; other schemes keep
     * fs.create, where the exclusivity is server-side atomic. A created-
     * but-unwritable file is removed before the error propagates (an
-    * ownerless empty fence would wedge every contender). */
+    * ownerless empty lock or fence would wedge every contender for the
+    * whole staleness window). */
   private def createExclusiveWithContent(fs: FileSystem, path: Path,
                                          content: String): Boolean =
     if (fs.getScheme == "file") {
@@ -880,42 +852,6 @@ object Stage {
     // alone could collide across a same-process reclaim in one millisecond)
     val token = s"pid=${ProcessHandle.current.pid} host=$localHost " +
       s"t=${System.currentTimeMillis} nonce=${java.util.UUID.randomUUID()}"
-    // local filesystems get a REAL atomic exclusivity gate
-    // (File.createNewFile = O_CREAT|O_EXCL); Hadoop LocalFileSystem's
-    // create(f, false) is exists-then-create and two processes can both
-    // pass the check. HDFS/object-store schemes keep fs.create — there
-    // the exclusivity IS server-side atomic.
-    val localLockFile: Option[java.io.File] =
-      if (fs.getScheme == "file")
-        Some(new java.io.File(fs.makeQualified(lock).toUri.getPath))
-      else None
-    def createExclusive(): Boolean = localLockFile match {
-      case Some(f) =>
-        if (!f.createNewFile()) false
-        else {
-          // same ownerless-empty-lock hazard as the fs.create path: a
-          // failed token write must not leave the exclusive file behind
-          try java.nio.file.Files.write(f.toPath, token.getBytes("UTF-8"))
-          catch { case e: java.io.IOException => f.delete(); throw e }
-          true
-        }
-      case None =>
-        val out = fs.create(lock, false)
-        try {
-          try out.write(token.getBytes("UTF-8"))
-          finally out.close()
-        } catch { case e: java.io.IOException =>
-          // the create SUCCEEDED but the token write failed (quota,
-          // transient I/O): an ownerless empty lock would block every
-          // writer — including our own immediate retry — for the whole
-          // staleness window; remove what we created before reporting
-          // failure
-          try fs.delete(lock, false)
-          catch { case _: java.io.IOException => () }
-          throw e
-        }
-        true
-    }
     def tryAcquire(): Boolean = {
       // same-process exclusivity FIRST (atomic; the filesystem check on a
       // local FS is not) — value-checked rollback on any downstream failure
@@ -923,7 +859,7 @@ object Stage {
       val ok =
         try {
           fs.mkdirs(rootPath)
-          createExclusive()
+          createExclusiveWithContent(fs, lock, token)
         } catch {
           case _: java.io.IOException => false
           // any OTHER failure (SecurityException, a RuntimeException out
@@ -939,19 +875,23 @@ object Stage {
       ok
     }
     if (!tryAcquire()) {
-      val age = try System.currentTimeMillis -
-        fs.getFileStatus(lock).getModificationTime
-      catch { case _: java.io.FileNotFoundException => Long.MaxValue }
+      // None: the lock vanished between the tries — its holder released
+      // it. That is no reclaim case: a token read now would be the NEXT
+      // holder's fresh lock (an in-process acquirer between its registry
+      // entry and its file create), and retiring it would evict a live
+      // holder — two writers inside the lease
+      val age = try Some(System.currentTimeMillis -
+        fs.getFileStatus(lock).getModificationTime)
+      catch { case _: java.io.FileNotFoundException => None }
       // presumed crashed — reclaim: holder provably dead on this host,
-      // or silent past the staleness window (or vanished between tries).
-      // The reclaim is a RENAME, not delete-then-create: two
+      // or silent past the staleness window. The reclaim is a RENAME, not delete-then-create: two
       // simultaneous reclaimers would otherwise race — the slower one's
       // pre-reclaim staleness read could delete the faster one's FRESH
       // lock and both would enter. rename's source vanishes for the
       // loser (atomic), so exactly one reclaimer retires the stale lock;
       // the loser falls through to the contention error and retries
       // against whatever the winner holds.
-      if (age > staleAfterMs || holderDeadOnThisHost(fs, lock)) {
+      if (age.exists(_ > staleAfterMs) || holderDeadOnThisHost(fs, lock)) {
         // read the stale holder's token BEFORE retiring its lock: if the
         // holder is a thread of THIS JVM (stuck past the window with its
         // heartbeat starved — a healthy holder never goes stale), its
@@ -970,7 +910,8 @@ object Stage {
       }
       if (!tryAcquire())
         throw new IllegalStateException(
-          s"$lock is held by a concurrent maintenance op (age ${age}ms, " +
+          s"$lock is held by a concurrent maintenance op (age " +
+            s"${age.fold("unknown")(a => s"${a}ms")}, " +
             s"stale after ${staleAfterMs}ms) — the single-writer contract " +
             "forbids concurrent maintenance on one index; retry after it " +
             "finishes, or delete the lock if its holder is known dead")
@@ -1111,48 +1052,16 @@ object Stage {
     */
   def appendExactlyOnce(spark: SparkSession, path: String, batchId: Long,
                         components: => Seq[String])
-                       (stage: String => Unit): Unit = {
-    if (alreadyPublished(spark, path, batchId)) return
-    withWriterLease(spark, path) {
-      // re-check INSIDE the lease: a duplicate delivery serialized behind
-      // a concurrent committer of the same batch must exit as the
-      // intended idempotent no-op, not re-stage and then die on the
-      // marker's create-exclusive
-      if (!alreadyPublished(spark, path, batchId)) {
-        val fs = fsFor(spark, new Path(path))
-        val staging = s"$path/_staging/batch-$batchId"
-        fs.delete(new Path(staging), true) // wipe a dead attempt's partials
-        // also clear a crashed predecessor's fence for this batch: under
-        // the lease, with the marker absent, the fence provably belongs
-        // to a writer that died between fence and marker — a different
-        // retrying token must not be wedged by it
-        fs.delete(fencePath(new Path(path), s"batch-$batchId"), false)
-        stage(staging)
-        components.foreach { comp =>
-          // stream-born shells are BORN VERSIONED: the first batch into a
-          // fresh component creates v00000001 + pointer, so snapshot pins
-          // work before any compaction migrates the layout
-          ensureVersioned(spark, s"$path/$comp")
-          publishStaged(fs, new Path(s"$staging/$comp"),
-            new Path(resolve(spark, s"$path/$comp")), s"b$batchId") }
-        // fencing: a zombie holder's marker create is the durability
-        // commit — reject it if the lease was reclaimed mid-batch (the
-        // renamed b<id>-* files are then markerless and sweep-revertible)
-        assertLeaseStillHeld(spark, path, s"batch-$batchId")
-        val marker = new Path(s"$path/_ledger/batch-$batchId")
-        fs.mkdirs(marker.getParent)
-        fs.create(marker, false).close() // atomic: the batch is now published
-        fs.delete(new Path(staging), true)
-      }
-    }
-  }
+                       (stage: String => Unit): Unit =
+    commitStaged(spark, path, s"batch-$batchId", s"b$batchId",
+      alreadyPublished(spark, path, batchId), components)(stage)
 
   /** [[appendExactlyOnce]] for NON-streaming maintenance ops: the same
     * staged, marker-protected, prefix-idempotent publish, keyed by a
     * caller-chosen operation id instead of a checkpoint batch id. The
     * marker lives at `_ledger/op-<opId>` — outside the batch-id
     * high-water fold, because op ids carry no order — and survives until
-    * the index is rebuilt ([[clearLedger]]): a compaction must NOT clear
+    * the index is rebuilt ([[rebuild]]): a compaction must NOT clear
     * it, or a crashed-then-retried op from before the compaction would
     * re-apply. What this buys multi-component maintenance writes (the
     * LM's paired bigram/vocab deltas): atomicity under retry — either
@@ -1178,36 +1087,55 @@ object Stage {
                   components: => Seq[String])(stage: String => Unit): Unit = {
     require(opId.matches("[A-Za-z0-9_]+"),
       s"opId '$opId' must match [A-Za-z0-9_]+ (it names ledger and file prefixes)")
-    val marker = new Path(s"$path/_ledger/op-$opId")
-    val fs = fsFor(spark, marker)
-    val staging = s"$path/_staging/op-$opId"
-    if (fs.exists(marker)) { fs.delete(new Path(staging), true); return }
-    withWriterLease(spark, path) {
-      // re-check INSIDE the lease: a duplicate retry serialized behind a
-      // concurrent committer of the same op must exit as the intended
-      // idempotent no-op, not re-stage the work and then die with a raw
-      // FileAlreadyExistsException on the marker create
-      if (fs.exists(marker)) fs.delete(new Path(staging), true)
-      else {
-        fs.delete(new Path(staging), true)
-        // clear a crashed predecessor's fence (see appendExactlyOnce)
-        fs.delete(fencePath(new Path(path), s"op-$opId"), false)
+    val fs = fsFor(spark, new Path(path))
+    def committed: Boolean = {
+      val done = fs.exists(new Path(s"$path/_ledger/op-$opId"))
+      if (done) fs.delete(new Path(s"$path/_staging/op-$opId"), true)
+      done
+    }
+    commitStaged(spark, path, s"op-$opId", s"o$opId", committed,
+      components)(stage)
+  }
+
+  /** The one staged commit behind [[appendExactlyOnce]] and
+    * [[publishOnce]], which differ only in the ledger marker `id`
+    * (`batch-<n>` / `op-<id>`), the published file `prefix` (`b<n>` /
+    * `o<id>`) and the `committed` test (which also sweeps the staging a
+    * crash after the marker left behind). `committed` is checked before
+    * the lease — a replay is a metadata-only no-op — and again inside
+    * it: a duplicate delivery serialized behind a concurrent committer
+    * of the same id must exit as the intended no-op, not re-stage and
+    * then die on the marker's create-exclusive. */
+  private def commitStaged(spark: SparkSession, path: String, id: String,
+                           prefix: String, committed: => Boolean,
+                           components: => Seq[String])
+                          (stage: String => Unit): Unit =
+    if (!committed) withWriterLease(spark, path) {
+      if (!committed) {
+        val fs = fsFor(spark, new Path(path))
+        val staging = s"$path/_staging/$id"
+        fs.delete(new Path(staging), true) // wipe a dead attempt's partials
+        // also clear a crashed predecessor's fence for this commit: under
+        // the lease, with the marker absent, the fence provably belongs
+        // to a writer that died between fence and marker — a different
+        // retrying token must not be wedged by it
+        fs.delete(fencePath(new Path(path), id), false)
         stage(staging)
         components.foreach { comp =>
-          // maintain parity with the streaming path: the first op into a
-          // fresh component births it versioned, so pins work from birth
+          // the first commit into a fresh component births it versioned
           ensureVersioned(spark, s"$path/$comp")
           publishStaged(fs, new Path(s"$staging/$comp"),
-            new Path(resolve(spark, s"$path/$comp")), s"o$opId") }
-        // fencing: same commit-point rejection as the batch path — a
-        // reclaimed holder's op must stay markerless (sweep-revertible)
-        assertLeaseStillHeld(spark, path, s"op-$opId")
+            new Path(resolve(spark, s"$path/$comp")), prefix) }
+        // fencing: a zombie holder's marker create is the durability
+        // commit — reject it if the lease was reclaimed mid-commit (the
+        // renamed files are then markerless and sweep-revertible)
+        assertLeaseStillHeld(spark, path, id)
+        val marker = new Path(s"$path/_ledger/$id")
         fs.mkdirs(marker.getParent)
-        fs.create(marker, false).close() // atomic: the op is now published
+        fs.create(marker, false).close() // atomic: the commit is published
         fs.delete(new Path(staging), true)
       }
     }
-  }
 
   /** A fresh [[publishOnce]] op id (`[A-Za-z0-9_]+`) for a plain append
     * that has no caller-chosen id. */
@@ -1410,21 +1338,8 @@ object Stage {
       }
       sweep(tombDir)
     }
-    val tmp = new Path(tombDir, "_consumed.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(consumed.map(_.getName).mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    val fc = FileContext.getFileContext(tombDir.toUri,
-      spark.sparkContext.hadoopConfiguration)
-    fc.rename(tmp, new Path(tombDir, "_consumed"), Options.Rename.OVERWRITE)
-  }
-
-  /** Drop an index root's tombstone table entirely — the rebuild
-    * boundary: a fresh build must not inherit the old corpus's pending
-    * deletes. */
-  def clearTombstones(spark: SparkSession, path: String): Unit = {
-    val p = new Path(s"$path/tombstones")
-    fsFor(spark, p).delete(p, true)
+    replaceFile(spark, fs, new Path(tombDir, "_consumed"),
+      consumed.map(_.getName).mkString("\n"))
   }
 
   /** The highest batch id a `high-<n>` marker certifies as published, or
@@ -1497,7 +1412,8 @@ object Stage {
   /** Operational health report of a persisted index root — the
     * introspection an operator reads before deciding whether to compact,
     * fold the ledger, or worry: one row per component with its live
-    * version (empty = plain layout), on-disk version count, live
+    * version (empty = no pointer: the component was never built),
+    * on-disk version count, live
     * data-file count and bytes, plus the root's ledger entry count,
     * pending tombstone file count, and uncommitted-op count
     * ([[pendingOps]] — nonzero means a crashed publishOnce needs its
@@ -1593,14 +1509,11 @@ object Stage {
         System.currentTimeMillis - st.getModificationTime))
     } catch { case scala.util.control.NonFatal(_) => None }
 
-  /** Reset an index root's exactly-once machinery — called by the `save*`
-    * builders: a REBUILT index starts a fresh checkpoint lineage whose
-    * batch ids restart at 0, and `_ledger` markers surviving from the
-    * previous lineage would make [[appendExactlyOnce]] silently no-op the
-    * new stream's first batches (batch ids are only meaningful relative
-    * to ONE lineage — this enforces it at the rebuild boundary).
+  /** Reset an index root's exactly-once machinery at the [[rebuild]]
+    * boundary: batch ids are only meaningful relative to ONE checkpoint
+    * lineage, and a rebuilt index starts a fresh one.
     */
-  def clearLedger(spark: SparkSession, path: String): Unit = {
+  private def clearLedger(spark: SparkSession, path: String): Unit = {
     val root = new Path(path)
     val fs = fsFor(spark, root)
     fs.delete(new Path(root, "_ledger"), true)

@@ -134,8 +134,8 @@ object Tables {
     * The footer read is the one Spark's inference would read — the first
     * data file by full path string among the files the read lists:
     *  - a file path is itself; a directory's own files, skipping the
-    *    names Spark's listing skips (`_x`, `.x`, `x._COPYING_`), so the
-    *    version directories beside a plain-layout root stay invisible;
+    *    names Spark's listing skips (`_x`, `.x`, `x._COPYING_`), so
+    *    subdirectories beside a directory's own files stay invisible;
     *  - a directory of Hive partitions (`list=3/`) is descended in path
     *    order until the first data file, listing no more directories than
     *    that takes;

@@ -63,9 +63,8 @@ object DedupQueries {
 
     "q125_manifest_time_travel" -> ((s, d) => {
       // TIME-TRAVEL validation probe on the dedup manifest (q119/q121's
-      // read for this family): build q84's manifest, compact (migrates
-      // the plain tables to v1), FORGET a seventh of its content (v2),
-      // then probe the PREVIOUS snapshot — verdicts must equal probing
+      // read for this family): build q84's manifest (v1), compact (v2),
+      // FORGET a seventh of its content (v3), then probe the PREVIOUS snapshot — verdicts must equal probing
       // the undeleted manifest, q84's oracle verbatim. This is how a
       // forget operation's verdict changes are diffed before trusting it.
       val docs = t(s, d, "documents")
@@ -86,9 +85,9 @@ object DedupQueries {
     "q130_manifest_maintenance_diff" -> ((s, d) => {
       // q128's validation-diff applied to the dedup manifest: build
       // q84's manifest, FORGET a seventh of its content (the forget is
-      // the manifest's FIRST maintenance op — the migration grace makes
-      // the plain layout the previous snapshot, so no warm-up compact
-      // is needed), then diff the probe verdicts: exactly the documents
+      // the manifest's FIRST maintenance op — the build is born
+      // versioned, so its version is the previous snapshot and no
+      // warm-up compact is needed), then diff the probe verdicts: exactly the documents
       // whose best match was forgotten flip, with both Jaccards as
       // evidence. The oracle replays both manifest states.
       val docs = t(s, d, "documents")

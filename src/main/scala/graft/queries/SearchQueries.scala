@@ -349,7 +349,7 @@ object SearchQueries {
       // version for one cycle anyway (reader grace), so the pre-op
       // snapshot is free — a maintenance op can be validated by diffing
       // previous vs live before trusting it. Fixture: build, compact
-      // (migrates the plain layout to v1), delete a tenth (v2), then
+      // (v2 over the build's v1), delete a tenth (v3), then
       // serve PREVIOUS — which must equal fresh compute over the FULL
       // corpus, q102's oracle verbatim.
       val sf = sfTag(d)

@@ -38,10 +38,10 @@ class CampaignSpec extends AnyFunSuite {
     wipe(text, mani, lm)
     val docs = docRows.toDF("doc_id", "text")
     Search.saveTextIndex(docs, text)
-    Search.compactTextIndex(spark, text) // → versioned
+    Search.compactTextIndex(spark, text) // → v2
     Dedup.saveMinhashManifest(docs.where(col("doc_id") <= 4),
       "text", "doc_id", mani, k = 16, bands = 8)
-    Dedup.MinhashManifest.compact(spark, mani) // → versioned
+    Dedup.MinhashManifest.compact(spark, mani) // → v2
     Corpus.saveLm(docs.where(col("doc_id") <= 4), "text", "doc_id", lm)
     val members = Seq(Member(Search.TextIndex, text),
       Member(Dedup.MinhashManifest, mani), Member(Corpus.Lm, lm))
@@ -165,11 +165,9 @@ class CampaignSpec extends AnyFunSuite {
     val mani = "target/graft-test-campaign-rb-mani"
     wipe(text, mani)
     val docs = docRows.toDF("doc_id", "text")
-    // the text index is built but NOT compacted → plain layout → its pin
-    // must fail; the manifest is born-versioned (publishRebuild) and
-    // pins fine — and sorts FIRST by path, so its pin lands before the
-    // text failure
-    Search.saveTextIndex(docs, text)
+    // the text index was never built → no version to pin → its pin must
+    // fail; the manifest pins fine — and sorts FIRST by path, so its pin
+    // lands before the text failure
     Dedup.saveMinhashManifest(docs, "text", "doc_id", mani, 16, 8)
     intercept[IllegalStateException] {
       Campaign.snapshot(spark, "rel", Seq(Member(Search.TextIndex, text),
@@ -199,12 +197,12 @@ class CampaignSpec extends AnyFunSuite {
     // maintenance moves the live state past the pin
     Dedup.deleteContentFromMinhashManifest(
       docs.where(col("doc_id") === 1), "text", mani)
-    // a REFRESH of 'rel' adds a member whose pin must fail (plain
-    // layout); the manifest's 'rel' pin is OVERWRITTEN before the text
-    // failure (manifest sorts first). The old rollback dropped 'rel'
-    // everywhere — destroying campaign v1; now the prior pin bytes are
-    // restored, so v1 keeps serving bit-identically.
-    Search.saveTextIndex(docs, text) // never compacted → plain → unpinnable
+    // a REFRESH of 'rel' adds a member whose pin must fail (a text
+    // index never built, so it has no version to pin); the manifest's
+    // 'rel' pin is OVERWRITTEN before the text failure (manifest sorts
+    // first). The old rollback dropped 'rel' everywhere — destroying
+    // campaign v1; now the prior pin bytes are restored, so v1 keeps
+    // serving bit-identically.
     intercept[IllegalStateException] {
       Campaign.snapshot(spark, "rel", Seq(
         Member(Dedup.MinhashManifest, mani), Member(Search.TextIndex, text)))

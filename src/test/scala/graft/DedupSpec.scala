@@ -684,7 +684,7 @@ class DedupSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     def verdicts(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
-    // a freshly built plain manifest has no snapshot history
+    // a fresh build has no snapshot history
     intercept[IllegalStateException] {
       Dedup.incrementalNearDups(batch, path, "text", "doc_id",
         at = Family.Previous)
@@ -693,7 +693,6 @@ class DedupSpec extends AnyFunSuite {
     val full = verdicts(
       Dedup.incrementalNearDups(batch, path, "text", "doc_id"))
     assert(full == Map(10L -> true, 11L -> true, 12L -> false))
-    Dedup.MinhashManifest.compact(spark, path) // migrate plain → v1
     Dedup.deleteContentFromMinhashManifest(
       Seq((99L, base)).toDF("doc_id", "text"), "text", path) // → v2
     // live probe forgot `base`; the previous snapshot still knows it
@@ -721,7 +720,6 @@ class DedupSpec extends AnyFunSuite {
       df.collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
     val full = verdicts(
       Dedup.incrementalNearDups(batch, path, "text", "doc_id"))
-    Dedup.MinhashManifest.compact(spark, path) // migrate plain → v1
     Dedup.MinhashManifest.snapshot(spark, path, "pre_campaign")
     // TWO maintenance ops later — the second would GC v1 unpinned
     Dedup.deleteContentFromMinhashManifest(

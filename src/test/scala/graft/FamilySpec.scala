@@ -28,6 +28,11 @@ import scala.jdk.CollectionConverters._
   * component publishes nothing, under an op id and under a batch id, and
   * the retry publishes whole; a failed fresh-id append leaves no staging
   * directory behind the next compaction.
+  *
+  * The build half, over the same seven families plus the set-sim index:
+  * a rebuild is the lineage boundary. It writes every directory born
+  * versioned, clears the ledger, staging and tombstones, drops every
+  * pin, and is refused while another writer holds the root lease.
   */
 class FamilySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -161,6 +166,88 @@ class FamilySpec extends AnyFunSuite {
     c.family.dropSnapshot(spark, p, "pin")
     c.family.vacuum(spark, p)
     intercept[IllegalStateException] { c.serve(p, Pinned("pin")).collect() }
+  }
+
+  /** One index's rebuild fixture: the first `build` (a versioned,
+    * pinnable index even where the builder alone was not), the bare
+    * `saveX` builder that rebuilds it, the frozen meta directories the
+    * builder writes beside the components, and the family (None for
+    * set-sim, which has no lifecycle descriptor). */
+  private case class RebuildCase(name: String, family: Option[Family],
+                                 components: String => Seq[String],
+                                 build: String => Unit, save: String => Unit,
+                                 meta: Seq[String])
+
+  private val metaDirs = Map[Family, Seq[String]](
+    Dedup.MinhashManifest -> Seq("meta"),
+    Similarity.IvfIndex -> Seq("meta", "centroids"),
+    Similarity.PqIndex -> Seq("meta", "codebooks"),
+    Similarity.BinaryIndex -> Seq("meta"),
+    Dedup.WinnowManifest -> Seq("meta")).withDefaultValue(Nil)
+
+  private val rebuildCases = cases.map(c => RebuildCase(c.family.name,
+    Some(c.family), c.family.components(spark, _), c.build,
+    // the text fixture also adds positions and compacts
+    if (c.family == Search.TextIndex) Search.saveTextIndex(docs, _)
+    else c.build,
+    metaDirs(c.family))) :+ {
+    val save: String => Unit = Dedup.saveSetSimIndex(base, "text", "doc_id", _)
+    RebuildCase("set_sim", None, _ => Seq("sets", "postings"), save, save, Nil)
+  }
+
+  for (r <- rebuildCases) test(s"${r.name}: a rebuild is the lineage " +
+      "boundary — every directory born versioned; ledger, staging, " +
+      "tombstones and pins cleared; refused under a held root lease") {
+    val p = s"target/graft-test-family-rebuild-${r.name}"
+    val fs = new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new Path(p), true)
+    def exists(rel: String) = fs.exists(new Path(s"$p/$rel"))
+    def entries(rel: String): Seq[String] =
+      if (!exists(rel)) Nil
+      else fs.listStatus(new Path(s"$p/$rel")).map(_.getPath.getName).toSeq
+    // the old lineage: a versioned build pinned `old`, one committed
+    // exactly-once batch, a crashed attempt's staging, a pending tombstone
+    r.build(p)
+    val comps = r.components(p)
+    r.family match {
+      case Some(f) => f.snapshot(spark, p, "old")
+      case None => comps.foreach(c => Stage.snapshot(spark, s"$p/$c", "old"))
+    }
+    Stage.appendExactlyOnce(spark, p, 0L, Nil)(_ => ())
+    fs.mkdirs(new Path(s"$p/_staging/batch-9/${comps.head}"))
+    Stage.appendTombstones(Seq(1L).toDF("id"), p)
+    assert(entries("_ledger") == Seq("batch-0"))
+    assert(Stage.pendingTombstones(spark, p).isDefined)
+
+    // a rebuild while another writer holds the root lease is refused
+    // and changes nothing
+    val held = new java.util.concurrent.CountDownLatch(1)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val holder = new Thread(() => Stage.withWriterLease(spark, p) {
+      held.countDown(); release.await()
+    })
+    holder.start()
+    held.await()
+    try {
+      val boom = intercept[IllegalStateException](r.save(p))
+      assert(boom.getMessage.contains("concurrent maintenance op"),
+        boom.getMessage)
+    } finally { release.countDown(); holder.join() }
+    assert(entries("_ledger") == Seq("batch-0"))
+    assert(comps.forall(c =>
+      Stage.resolveSnapshot(spark, s"$p/$c", "old").isDefined))
+
+    r.save(p)
+    val dirs = r.components(p) ++ r.meta
+    val unversioned = dirs.filterNot(d => exists(s"$d/_current"))
+    assert(unversioned.isEmpty, s"written in place: $unversioned")
+    assert(entries("_ledger").isEmpty && entries("_staging").isEmpty)
+    assert(Stage.pendingTombstones(spark, p).isEmpty)
+    val stillPinned = comps.filter(c =>
+      Stage.resolveSnapshot(spark, s"$p/$c", "old").isDefined)
+    assert(stillPinned.isEmpty, s"old-corpus pins survived: $stillPinned")
+    r.family.foreach(f =>
+      intercept[IllegalArgumentException](f.restore(spark, p, "old")))
   }
 
   /** One family's write-half fixture over `corpus` (keyed by `key`):
@@ -328,23 +415,26 @@ class FamilySpec extends AnyFunSuite {
     assert(live("a") == Set(1L, 2L) && live("b") == Set(1L, 2L))
   }
 
+  private def sources(dir: String): List[java.nio.file.Path] = {
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    finally walk.close()
+  }
+
+  /** (file:line, match) of every match of `re` in `files`. */
+  private def hits(files: List[java.nio.file.Path],
+                   re: scala.util.matching.Regex): List[(String, String)] =
+    files.flatMap { f =>
+      val text = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+      re.findAllMatchIn(text).map(m =>
+        (s"$f:${text.take(m.start).count(_ == '\n') + 1}", m.matched))
+    }
+
   test("src/main writes index families only through Family's write half") {
     // each family keeps one public appendToX and its fold; the shared
     // staged append, compaction and ingest live on graft.ops.Family. An
     // in-place append or a mode-switching write helper is the torn-append
     // hazard the staged append removed.
-    def sources(dir: String): List[java.nio.file.Path] = {
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      finally walk.close()
-    }
-    def hits(files: List[java.nio.file.Path],
-             re: scala.util.matching.Regex): List[(String, String)] =
-      files.flatMap { f =>
-        val text = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
-        re.findAllMatchIn(text).map(m =>
-          (s"$f:${text.take(m.start).count(_ == '\n') + 1}", m.matched))
-      }
     val ext = sources("src/main/scala/graft/ext")
     assert(ext.size > 10)
     val inPlace = hits(ext, """\.write\s*\.\s*mode\s*\(\s*"append"\s*\)""".r)
@@ -361,6 +451,23 @@ class FamilySpec extends AnyFunSuite {
       "autoCompactTextIndex")
     assert(perFamily.map(_._2.split("\\s+").last).toSet == kept,
       s"per-family write entry points: ${perFamily.mkString(", ")}")
+  }
+
+  test("src/main rebuilds index families only through Family.rebuild") {
+    // the rebuild boundary's clears live in Stage.rebuild alone, and a
+    // builder publishes every directory it writes into a version: a
+    // write straight into `$path/<dir>` is the in-place layout the
+    // versioned publish replaced
+    val clears = hits(sources("src/main/scala")
+      .filterNot(_.toString.contains("/graft/ops/")),
+      """\b(clearLedger|clearTombstones|clearSnapshots)\b""".r)
+    assert(clears.isEmpty, "rebuild clears outside Stage.rebuild: " +
+      clears.map(_._1).mkString(", "))
+    val inPlace = hits(sources("src/main/scala/graft/ext"),
+      """\.parquet\(\s*s"\$\{?path\}?/""".r)
+    assert(inPlace.isEmpty, "directories written in place (publish them " +
+      "with Stage.publishRebuild inside Family.rebuild): " +
+      inPlace.map(_._1).mkString(", "))
   }
 
   test("lm: At.Previous is rejected — the LM reverts by negated delta") {

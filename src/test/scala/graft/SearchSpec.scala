@@ -241,18 +241,17 @@ class SearchSpec extends AnyFunSuite {
       (3L, "spark stream spark")).toDF("doc_id", "text")
     val terms = Seq("spark", "stream")
     Search.saveTextIndex(docs, idx)
-    // a freshly built plain index has no snapshot history — loud failure
+    // a fresh build has no snapshot history — loud failure
     intercept[IllegalStateException] {
       Search.bm25TopKIndexed(spark, idx, terms, 10, at = Family.Previous)
     }
-    Search.compactTextIndex(spark, idx) // migrate plain → v1
-    // the MIGRATING publish's previous snapshot is the plain layout
-    // itself (its files stay in place for the grace cycle) — and the
-    // compaction preserved content, so it serves the same full corpus
+    Search.compactTextIndex(spark, idx) // v1 → v2
+    // the compaction's previous snapshot is the build's v1 — and the
+    // compaction preserved content, so both serve the same full corpus
     assert(Search.bm25TopKIndexed(spark, idx, terms, 10, at = Family.Previous)
       .collect().map(_.toSeq).toSeq ==
       Search.bm25TopK(docs, terms, 10).collect().map(_.toSeq).toSeq)
-    Search.deleteFromTextIndex(spark, idx, Seq(1L).toDF("doc_id")) // → v2
+    Search.deleteFromTextIndex(spark, idx, Seq(1L).toDF("doc_id")) // → v3
     // previous-serve == fresh compute over the FULL corpus, bit-identical
     assert(Search.bm25TopKIndexed(spark, idx, terms, 10, at = Family.Previous)
       .collect().map(_.toSeq).toSeq ==
@@ -439,13 +438,13 @@ class SearchSpec extends AnyFunSuite {
     Search.saveTextIndex(docsDF, idx)
     Search.savePositionalIndex(docsDF, idx)
     // fresh-built positional component is BORN versioned: v00000001 +
-    // pointer exist before any maintenance op migrates the layout
+    // pointer exist before any maintenance op
     assert(fs.exists(new org.apache.hadoop.fs.Path(s"$idx/positions/_current")))
     def phrase() = Search.phraseSearchIndexed(spark, idx, Seq("x", "y"), 10)
       .select("doc_id", "n_occurrences").as[(Long, Int)].collect().toSeq.sorted
     assert(phrase() == Seq((1L, 1), (2L, 1), (3L, 2)))
-    // migrate the triple to versioned (delete is a compacting rewrite),
-    // then pin the whole four-component state
+    // a delete (a compacting rewrite), then pin the whole
+    // four-component state
     Search.deleteFromTextIndex(spark, idx, Seq(1L).toDF("doc_id"))
     Search.TextIndex.snapshot(spark, idx, "pre_rebuild")
     // REBUILD the positional component in place over a different corpus

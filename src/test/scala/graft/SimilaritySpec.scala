@@ -289,7 +289,8 @@ class SimilaritySpec extends AnyFunSuite {
     val served = rows(Similarity.topKIvfIndexed(spark, qset, dir, k = 5))
     assert(served == direct, "index-served top-k must equal the direct IVF")
     // loaded centroids survive the round trip bit-exactly
-    val loaded = spark.read.parquet(s"$dir/centroids").orderBy("centroid")
+    val loaded = spark.read.parquet(
+        graft.ops.Stage.resolve(spark, s"$dir/centroids")).orderBy("centroid")
       .select("vec").as[Seq[Double]].collect().map(_.toArray)
     assert(loaded.length == 16 &&
       loaded.zip(cents).forall { case (a, b) => a.sameElements(b) })
@@ -800,7 +801,7 @@ class SimilaritySpec extends AnyFunSuite {
       Similarity.topKIvfIndexed(
         spark, qset, idx, k = 5, at = Family.Pinned("pre_campaign"))
     }
-    // REBUILD clears pins (the clearLedger/clearTombstones rule): a
+    // REBUILD clears pins (the Family.rebuild boundary): a
     // stale name must not keep serving the old corpus's lists
     Similarity.IvfIndex.snapshot(spark, idx, "stale_pin")
     Similarity.saveIvfIndex(emb, idx, nCentroids = 16, dim = 64,

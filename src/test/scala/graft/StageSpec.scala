@@ -26,32 +26,10 @@ class StageSpec extends AnyFunSuite {
   private def children(dir: String): Set[String] =
     fs(dir).listStatus(new Path(dir)).map(_.getPath.getName).toSet
 
-  test("publishRewrite migrates a plain directory with one cycle of reader grace") {
-    val root = "target/graft-test-stage-migrate"
-    fs(root).delete(new Path(root), true)
-    Seq(1L, 2L, 3L).toDF("v").write.parquet(root) // plain layout
-    val preMigration = Stage.resolve(spark, root)
-    assert(preMigration == root)
-    Stage.publishRewrite(spark, root, Seq(4L, 5L).toDF("v"))
-    assert(Stage.resolve(spark, root) == s"$root/v00000001")
-    assert(values(root) == Set(4L, 5L))
-    // FIRST-MIGRATION READER GRACE: a reader that resolved the plain
-    // root just before the migrating flip still reads its files — the
-    // plain data files stay in place for one publish cycle (version
-    // subdirectories are invisible to a top-level parquet scan)
-    assert(spark.read.parquet(preMigration)
-      .collect().map(_.getLong(0)).toSet == Set(1L, 2L, 3L))
-    assert(children(root).contains("v00000001"))
-    // the NEXT publish ends the grace: plain files swept, v1 spared
-    Stage.publishRewrite(spark, root, Seq(6L).toDF("v"))
-    assert(children(root) == Set("_current", "v00000001", "v00000002"))
-    assert(values(root) == Set(6L))
-  }
-
   test("a crash between the version write and the flip leaves the old data serving") {
     val root = "target/graft-test-stage-crash"
     fs(root).delete(new Path(root), true)
-    Seq(1L, 2L).toDF("v").write.parquet(root)
+    Stage.publishRebuild(spark, root, Seq(1L, 2L).toDF("v")) // → v1
     val boom = intercept[RuntimeException] {
       Stage.publishRewrite(spark, root) { versionDir =>
         Seq(9L).toDF("v").write.parquet(versionDir) // new version fully written
@@ -59,18 +37,15 @@ class StageSpec extends AnyFunSuite {
       }
     }
     assert(boom.getMessage == "crash before flip")
-    // pointer untouched: still the plain layout, still the old rows
-    assert(Stage.resolve(spark, root) == root)
+    // pointer untouched: still v1, still the old rows
+    assert(Stage.resolve(spark, root) == s"$root/v00000001")
     assert(values(root) == Set(1L, 2L))
+    assert(children(root).contains("v00000002")) // the crashed version
     // a later successful publish supersedes and GCs the orphan version;
-    // the plain files get their migration grace cycle
-    Stage.publishRewrite(spark, root, Seq(7L).toDF("v"))
+    // the old live version gets its one-cycle grace
+    Stage.publishRewrite(spark, root, Seq(7L).toDF("v")) // → v3
     assert(values(root) == Set(7L))
-    assert(!children(root).contains("v00000001")) // orphan swept
-    assert(spark.read.parquet(root) // plain snapshot still readable
-      .collect().map(_.getLong(0)).toSet == Set(1L, 2L))
-    Stage.publishRewrite(spark, root, Seq(8L).toDF("v")) // grace over
-    assert(children(root) == Set("_current", "v00000002", "v00000003"))
+    assert(children(root) == Set("_current", "v00000001", "v00000003"))
   }
 
   test("the previously-live version survives exactly one publish cycle") {
@@ -91,21 +66,17 @@ class StageSpec extends AnyFunSuite {
   test("resolvePrevious names the superseded version for one cycle") {
     val root = "target/graft-test-stage-resolveprev"
     fs(root).delete(new Path(root), true)
-    Seq(1L).toDF("v").write.parquet(root)
-    // plain layout: no snapshot history at all
+    assert(Stage.resolvePrevious(spark, root).isEmpty) // nothing built
+    Stage.publishRebuild(spark, root, Seq(1L).toDF("v")) // → v1
+    // a build has no snapshot history at all
     assert(Stage.resolvePrevious(spark, root).isEmpty)
-    Stage.publishRewrite(spark, root, Seq(2L).toDF("v")) // → v1
-    // the migrating publish's previous snapshot is the plain root
-    // itself — its data files stay in place for the grace cycle
-    assert(Stage.resolvePrevious(spark, root).contains(root))
-    assert(spark.read.parquet(Stage.resolvePrevious(spark, root).get)
-      .collect().map(_.getLong(0)).toSet == Set(1L))
-    Stage.publishRewrite(spark, root, Seq(3L).toDF("v")) // → v2, v1 spared
+    Stage.publishRewrite(spark, root, Seq(2L).toDF("v")) // → v2, v1 spared
     assert(Stage.resolvePrevious(spark, root).contains(s"$root/v00000001"))
     assert(spark.read.parquet(Stage.resolvePrevious(spark, root).get)
-      .collect().map(_.getLong(0)).toSet == Set(2L))
-    Stage.publishRewrite(spark, root, Seq(4L).toDF("v")) // → v3, v1 swept
+      .collect().map(_.getLong(0)).toSet == Set(1L))
+    Stage.publishRewrite(spark, root, Seq(3L).toDF("v")) // → v3, v1 swept
     assert(Stage.resolvePrevious(spark, root).contains(s"$root/v00000002"))
+    assert(!children(root).contains("v00000001"))
   }
 
   test("a crashed rewrite of a versioned directory keeps the prior version") {
@@ -163,8 +134,8 @@ class StageSpec extends AnyFunSuite {
       .healthReport(spark, idx, Seq("postings", "doclens", "stats"))
       .collect().map(r => r.getString(0) ->
         ((r.getString(1), r.getInt(2), r.getInt(5), r.getInt(6)))).toMap
-    // fresh build: plain layout, empty ledger, nothing pending
-    assert(report("postings") == (("", 0, 0, 0)))
+    // fresh build: born versioned, empty ledger, nothing pending
+    assert(report("postings") == (("v00000001", 1, 0, 0)))
     Search.appendToTextIndexExactlyOnce(
       Seq((3L, "spark stream")).toDF("doc_id", "text"), idx, batchId = 0L)
     assert(report("postings")._3 == 1) // one batch marker
@@ -172,9 +143,10 @@ class StageSpec extends AnyFunSuite {
     assert(report("doclens")._4 >= 1) // pending tombstone files visible
     Search.compactTextIndex(spark, idx)
     val after = report
-    // compaction migrated to v1, folded the ledger to one high-water
-    // marker, and consumed the tombstones (grace files excluded)
-    assert(after("postings")._1 == "v00000001" && after("postings")._2 == 1)
+    // compaction published v2 (v1 kept one cycle), folded the ledger to
+    // one high-water marker, and consumed the tombstones (grace files
+    // excluded)
+    assert(after("postings")._1 == "v00000002" && after("postings")._2 == 2)
     assert(after("postings")._3 == 1)
     assert(after("doclens")._4 == 0)
   }
@@ -756,7 +728,7 @@ class StageSpec extends AnyFunSuite {
     val root = "target/graft-test-stage-snap"
     fs(root).delete(new Path(root), true)
     Seq(1L).toDF("v").write.parquet(root)
-    // a plain layout has no version to pin — loud failure
+    // a root with no pointer has no version to pin — loud failure
     intercept[IllegalStateException] {
       Stage.snapshot(spark, root, "good")
     }
@@ -790,7 +762,6 @@ class StageSpec extends AnyFunSuite {
     Search.saveTextIndex(Seq(
       (1L, "spark join spark"),
       (2L, "stream window table")).toDF("doc_id", "text"), idx)
-    Search.compactTextIndex(spark, idx) // migrate → v1
     Search.TextIndex.snapshot(spark, idx, "pinned")
     def serveSnap() = Search
       .bm25TopKIndexed(spark, idx, Seq("spark"), 10,
@@ -810,7 +781,7 @@ class StageSpec extends AnyFunSuite {
   test("vacuum reclaims dropped pins immediately, sparing live+grace+pins") {
     val root = "target/graft-test-stage-vacuum"
     fs(root).delete(new Path(root), true)
-    // vacuum on a PLAIN layout is a no-op — its files are the live data
+    // vacuum on a root with no pointer is a no-op
     Seq(1L).toDF("v").write.parquet(root)
     Stage.vacuum(spark, root)
     assert(spark.read.parquet(root).count() == 1)
@@ -870,7 +841,6 @@ class StageSpec extends AnyFunSuite {
       (1L, "spark join spark"),
       (2L, "stream window table"),
       (3L, "spark stream join")).toDF("doc_id", "text"), idx)
-    Search.compactTextIndex(spark, idx) // migrate → versioned
     Search.TextIndex.snapshot(spark, idx, "pin")
     def live() = Search.bm25TopKIndexed(spark, idx, Seq("spark"), 10)
       .collect().map(_.getLong(0)).toSet
@@ -896,7 +866,7 @@ class StageSpec extends AnyFunSuite {
   test("pendingOps surfaces a crashed publishOnce until its retry commits") {
     val idx = "target/graft-test-pending-ops"
     fs(idx).delete(new Path(idx), true)
-    Seq((1L, 10L)).toDF("k", "c").write.parquet(s"$idx/counts")
+    Stage.publishRebuild(spark, s"$idx/counts", Seq((1L, 10L)).toDF("k", "c"))
     def stageOp(opId: String, crashBeforeMarker: Boolean): Unit = {
       if (crashBeforeMarker) {
         // simulate publishOnce dying between the component publish and
