@@ -72,6 +72,51 @@ trait DedupMinhash extends DedupExactOps {
     slim.join(slim.groupBy("seth").agg(min(col("doc")).as("rep")), Seq("seth"))
   }
 
+  /** TRUE when no band BEFORE this collision row's `band` also matched —
+    * the first-matching-band survivor test of pair dedup, one kernel
+    * ([[graft.functions.FirstEqualIndex]]) that walks both band-key arrays
+    * once. An unrolled OR of `element_at` pairs read both arrays once per
+    * earlier band for every raw collision, and a lambda form would run the
+    * interpreted HOF evaluator per row. With one band, index 0 is always
+    * ≥ band 0.
+    */
+  private def firstMatchingBand(keysA: Column, keysB: Column): Column =
+    graft.functions.SetExpressions.firstEqualIndex(keysA, keysB) >= col("band")
+
+  /** One (pos, col) row per band key of a freshly signed `keys`. OUTER on
+    * purpose: the inner `posexplode` makes Catalyst infer a
+    * `size(keys) > 0` filter, and pushdown inlines `keys` (the tokenizer
+    * and the signature with it) into that filter — the signature was
+    * recomputed once per band. `keys` is never null or empty (bands ≥ 1,
+    * xxhash64 is never null), so the outer form returns the same rows and
+    * infers nothing.
+    */
+  private def bandKeyRows: Column = posexplode_outer(col("keys"))
+
+  /** (doc, ntok, keys): per-doc token count and the `bands` LSH band keys
+    * (xxhash64 of each signature slice). The signature lives in its own
+    * projection: `sig` is referenced by all `bands` slices, and keeping it
+    * separate stops CollapseProject from inlining (and so re-computing) the
+    * k-hash signature once per band. Shared by the self-join pair finder
+    * and the persisted-manifest incremental path, which must band
+    * IDENTICALLY for their buckets to be join-compatible.
+    */
+  private def keyedSignatures(docs: DataFrame, k: Int, bands: Int,
+                              keepToks: Boolean = false): DataFrame = {
+    require(k % bands == 0,
+      s"bands ($bands) must divide the signature length ($k) — a remainder " +
+        "would silently drop the trailing hashes from every band key")
+    val r = k / bands
+    // keepToks threads the token set through instead of re-joining `docs`
+    // later: a streaming caller may reference its source only once
+    val extra = if (keepToks) Seq(col("toks")) else Seq.empty
+    val sigs = docs.select(Seq(col("doc"), size(col("toks")).as("ntok"),
+      minhashFromHashes(col("toks"), k).as("sig")) ++ extra: _*)
+    sigs.select(Seq(col("doc"), col("ntok"),
+      array((0 until bands).map(b =>
+        xxhash64(slice(col("sig"), b * r + 1, r))): _*).as("keys")) ++ extra: _*)
+  }
+
   /** Verified near-dup pairs among the given (doc, toks) relation: band
     * the signature, equi-join on (band, bandKey) for candidates, verify
     * with exact Jaccard over the distinct-token sets, keep pairs ≥
@@ -98,48 +143,11 @@ trait DedupMinhash extends DedupExactOps {
     *     doc id, proportional to surviving candidates) for one exact
     *     Jaccard evaluation per unique pair.
     */
-  /** (doc, ntok, keys): per-doc token count and the `bands` LSH band keys
-    * (xxhash64 of each signature slice). The signature lives in its own
-    * projection: `sig` is referenced by all `bands` slices, and keeping it
-    * separate stops CollapseProject from inlining (and so re-computing) the
-    * k-hash signature once per band. Shared by the self-join pair finder
-    * and the persisted-manifest incremental path, which must band
-    * IDENTICALLY for their buckets to be join-compatible.
-    */
-  /** TRUE when some band BEFORE this collision row's band also matched —
-    * the predicate the first-matching-band pair dedup filters on. With a
-    * single band there is no earlier band to match (an empty `reduce`
-    * would throw at plan construction, which a bands=1 manifest made
-    * reachable from persisted state).
-    */
-  private def firstMatchingBandViolation(bands: Int, keysA: Column,
-                                         keysB: Column): Column =
-    if (bands <= 1) lit(false)
-    else (0 until bands - 1).map(b =>
-      (col("band") > b) && (element_at(keysA, b + 1) === element_at(keysB, b + 1)))
-      .reduce(_ || _)
-
-  private def keyedSignatures(docs: DataFrame, k: Int, bands: Int,
-                              keepToks: Boolean = false): DataFrame = {
-    require(k % bands == 0,
-      s"bands ($bands) must divide the signature length ($k) — a remainder " +
-        "would silently drop the trailing hashes from every band key")
-    val r = k / bands
-    // keepToks threads the token set through instead of re-joining `docs`
-    // later: a streaming caller may reference its source only once
-    val extra = if (keepToks) Seq(col("toks")) else Seq.empty
-    val sigs = docs.select(Seq(col("doc"), size(col("toks")).as("ntok"),
-      minhashFromHashes(col("toks"), k).as("sig")) ++ extra: _*)
-    sigs.select(Seq(col("doc"), col("ntok"),
-      array((0 until bands).map(b =>
-        xxhash64(slice(col("sig"), b * r + 1, r))): _*).as("keys")) ++ extra: _*)
-  }
-
   private def verifiedPairs(docs: DataFrame, threshold: Double,
                             k: Int, bands: Int): DataFrame = {
     val keyed = keyedSignatures(docs, k, bands)
     val banded = keyed.select(col("doc"), col("ntok"), col("keys"),
-      posexplode(col("keys")))
+      bandKeyRows)
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_key")
     // spread the streamed side over the shuffle width: collision work is
     // quadratic in bucket size while input bytes are tiny, so the planner
@@ -151,17 +159,11 @@ trait DedupMinhash extends DedupExactOps {
       .repartition(shufflePartitions, col("band"), col("band_key"))
     val right = banded.select(col("band"), col("band_key"),
       col("doc").as("doc_b"), col("ntok").as("n_b"), col("keys").as("keys_b"))
-    // first-matching-band test, UNROLLED into element_at comparisons: a
-    // lambda form (exists/zip_with) would run the interpreted HOF evaluator
-    // once per collision row — tens of millions of allocations in a dense
-    // cluster. element_at is codegen'd scalar access.
-    val earlierBandMatched =
-      firstMatchingBandViolation(bands, col("keys_a"), col("keys_b"))
     val candidates = left.join(right, Seq("band", "band_key"))
       .where(col("doc_a") < col("doc_b") &&
         least(col("n_a"), col("n_b")).cast("double") >=
           lit(threshold) * greatest(col("n_a"), col("n_b")) &&
-        !earlierBandMatched)
+        firstMatchingBand(col("keys_a"), col("keys_b")))
       .select(col("doc_a"), col("doc_b"))
     candidates
       .join(docs.select(col("doc").as("doc_a"), col("toks").as("toks_a")), Seq("doc_a"))
@@ -184,7 +186,9 @@ trait DedupMinhash extends DedupExactOps {
     // here regressed q31/q88/q49/q111 1.5–2× at sf0.1 — the token-array
     // materialization costs more than re-deriving the tokenize projection
     // per consumer, because every consumer prunes it to a scalar
-    // (set hash, signature, count) in the scan stage anyway
+    // (set hash, signature, count) in the scan stage anyway. A probe
+    // batch within the broadcast bound is the other case (localProbe):
+    // it is collected once, while this is the whole corpus
     val docs =
       df.select(col(idCol).as("doc"), tokenHashes(col(textCol)).as("toks"))
     val members = exactClasses(docs)
@@ -286,6 +290,9 @@ trait DedupMinhash extends DedupExactOps {
     * parameters of the bucket rows it joins, whatever meta/ says at that
     * instant. */
   private def bandsRows(keyed: DataFrame, k: Int, bands: Int): DataFrame =
+    // the INNER posexplode here, unlike bandKeyRows: `keys` is read from
+    // the persisted docs, so its inferred filter recomputes nothing, and
+    // the outer form would turn every bands file's `band` column nullable
     keyed.select(col("doc"), col("ntok"), col("keys"),
         posexplode(col("keys")))
       .withColumnRenamed("pos", "band")
@@ -500,10 +507,11 @@ trait DedupMinhash extends DedupExactOps {
   def incrementalNearDupsDiff(newDf: DataFrame, manifestPath: String,
                               textCol: String, idCol: String,
                               threshold: Double = 0.9): DataFrame = {
-    // ONE prepared (tokenized, exact-collapsed, materialized) probe batch
-    // shared by both manifest-state probes — only the manifest side
-    // differs between them, so re-running the probe lineage per state
-    // doubled the batch's tokenize/collapse cost for nothing
+    // ONE prepared probe batch shared by both manifest-state probes —
+    // only the manifest side differs between them. Within the broadcast
+    // bound it is materialized: tokenized once and bound as local
+    // relations (localProbe), so neither probe re-reads the batch; above
+    // it the two probes share the plan but each re-runs the tokenize
     val p = prepareProbe(newDf, textCol, idCol)
     val before = probePrepared(p, idCol, manifestPath, threshold,
         graft.ops.Family.Previous)
@@ -538,25 +546,61 @@ trait DedupMinhash extends DedupExactOps {
     graft.ops.Family("minhash_manifest", (_, _) => Seq("docs", "bands"),
       foldManifest)
 
-  /** The probe batch's (ids, tokenized docs, exact classes, class
-    * representatives), built once so the single probes and the DIFF
-    * probe (two manifest states, same batch) share one construction of
-    * the probe-side plan. */
+  /** The probe batch's (ids, exact classes as (doc, rep), class
+    * representatives' (doc, toks)), built once so the single probes and
+    * the DIFF probe (two manifest states, same batch) share one
+    * construction of the probe side. */
   private case class PreparedProbe(ids: DataFrame, members: DataFrame,
                                    repDocs: DataFrame)
 
   private def prepareProbe(newDf: DataFrame, textCol: String,
                            idCol: String): PreparedProbe = {
-    // NOT checkpointed (measured, the classPairs note): materializing the
-    // token arrays regressed the probe family — consumers prune this
-    // relation to scalars in the scan stage, so recompute is cheaper
     val docs = newDf.select(col(idCol).as("doc"),
       tokenHashes(col(textCol)).as("toks"))
-    val members = exactClasses(docs) // null-text docs excluded: never match
-    val repDocs = docs.join(
-      members.where(col("doc") === col("rep")).select(col("doc")),
-      Seq("doc"), "left_semi")
-    PreparedProbe(docs.select(col("doc")), members, repDocs)
+    if (Tables.shipsWhole(docs)) localProbe(docs)
+    else {
+      // above the bound (the classPairs note: materializing a corpus-sized
+      // token relation costs more than re-deriving it per consumer)
+      val members = exactClasses(docs) // null-text docs excluded: never match
+      val repDocs = docs.join(
+        members.where(col("doc") === col("rep")).select(col("doc")),
+        Seq("doc"), "left_semi")
+      PreparedProbe(docs.select(col("doc")), members, repDocs)
+    }
+  }
+
+  /** [[prepareProbe]] of a batch within the broadcast bound: tokenized
+    * ONCE by one collect, exact-collapsed on the driver, and bound as
+    * local relations that the signatures, the token join-back and both
+    * DIFF probes read. Unbound, every consumer re-scans and re-tokenizes
+    * the batch (q84's plan at sf0.1 scans documents 9 times), the probe
+    * side runs in the scan's tasks — one, for a one-row-group file — and
+    * the exact classes cost a shuffle and three broadcasts; a
+    * LocalTableScan spreads over the default parallelism. Classes group
+    * by token-set equality (the Spark path's set hash, without its
+    * collision odds); any member stands for its class, since identical
+    * sets get identical verdicts.
+    */
+  private def localProbe(docs: DataFrame): PreparedProbe = {
+    val spark = docs.sparkSession
+    val rows = docs.collect()
+    val classes = rows.filter(!_.isNullAt(1))
+      .groupBy(_.getSeq[Long](1)).values.toSeq
+    val doc = docs.schema("doc")
+    def local(fields: Seq[org.apache.spark.sql.types.StructField],
+              rs: Seq[org.apache.spark.sql.Row]): DataFrame =
+      spark.createDataFrame(java.util.Arrays.asList(rs: _*),
+        org.apache.spark.sql.types.StructType(fields))
+    val all = local(docs.schema.fields.toSeq, rows.toSeq)
+    val reps = local(Seq(doc), classes.map(c => org.apache.spark.sql.Row(c.head.get(0))))
+    PreparedProbe(all.select(col("doc")),
+      local(Seq(doc, doc.copy(name = "rep")), classes.flatMap(c =>
+        c.toSeq.map(r => org.apache.spark.sql.Row(r.get(0), c.head.get(0))))),
+      // the reps' rows come out of a join, not a local relation of their
+      // own: Catalyst folds a projection straight over a local relation
+      // on the driver (ConvertToLocalRelation), which would compute the
+      // signatures there, on one thread
+      all.join(reps, Seq("doc"), "left_semi"))
   }
 
   private def probePrepared(p: PreparedProbe, idCol: String,
@@ -635,19 +679,16 @@ trait DedupMinhash extends DedupExactOps {
     val carryOn = if (carryTokens) Seq(col("toks_n")) else Seq.empty
     val newBands = keyed
       .select(Seq(col("doc"), col("ntok"), col("keys"),
-        posexplode(col("keys"))) ++ carryIn: _*)
+        bandKeyRows) ++ carryIn: _*)
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_key")
       .select(Seq(col("band"), col("band_key"), col("doc").as("doc_n"),
         col("ntok").as("n_n"), col("keys").as("keys_n")) ++ carryOn: _*)
     val right = manBands.select(col("band"), col("band_key"),
       col("doc").as("doc_m"), col("ntok").as("n_m"), col("keys").as("keys_m"))
-    // first-matching-band, unrolled (see verifiedPairs for why not a HOF)
-    val earlierBandMatched =
-      firstMatchingBandViolation(bands, col("keys_n"), col("keys_m"))
     val candidates = newBands.join(right, Seq("band", "band_key"))
       .where(least(col("n_n"), col("n_m")).cast("double") >=
         lit(threshold) * greatest(col("n_n"), col("n_m")) &&
-        !earlierBandMatched)
+        firstMatchingBand(col("keys_n"), col("keys_m")))
       .select(Seq(col("doc_n"), col("doc_m")) ++ carryOn: _*)
     val paired =
       if (carryTokens) candidates

@@ -1822,9 +1822,12 @@ object Similarity {
                           path: String): (Double, Array[Array[Double]]) = {
     val meta = Tables.parquet(spark,
       graft.ops.Stage.resolve(spark, s"$path/meta")).head()
+    // sorted on the driver: an orderBy here ran a range-partition sample
+    // job and a shuffle for k rows on every serve
     val cents = Tables.parquet(spark,
-        graft.ops.Stage.resolve(spark, s"$path/centroids")).orderBy("centroid")
-      .select("vec").collect().map(_.getSeq[Double](0).toArray)
+        graft.ops.Stage.resolve(spark, s"$path/centroids"))
+      .select("centroid", "vec").collect().sortBy(_.getInt(0))
+      .map(_.getSeq[Double](1).toArray)
     (meta.getAs[Double]("quant_scale"), cents)
   }
 

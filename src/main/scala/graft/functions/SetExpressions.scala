@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType}
 
 /** Native set arithmetic over SORTED long-array set representations.
   *
@@ -75,6 +75,60 @@ case class SortedSetJaccard(left: Expression, right: Expression)
          |int $denom = $n1 + $n2 - $c;
          |if ($denom == 0) { ${ev.isNull} = true; }
          |else { ${ev.value} = ((double) $c) / $denom; }
+       """.stripMargin
+    })
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+/** First position where two long arrays hold equal elements, or the
+  * shorter length when no position does — the LSH first-matching-band
+  * test in one pass. A collision joined on band `b` survives pair dedup
+  * exactly when `first_equal_index(keys_a, keys_b) >= b`: no earlier band
+  * also matched. The composable form is an OR of `element_at` pairs per
+  * earlier band (two array reads each, re-dispatched per band). Null
+  * elements never compare equal; a null array gives null.
+  */
+case class FirstEqualIndex(left: Expression, right: Expression)
+    extends BinaryExpression {
+
+  override def checkInputDataTypes(): TypeCheckResult = {
+    val ok = Seq(left, right).forall(_.dataType match {
+      case ArrayType(LongType, _) => true
+      case _ => false
+    })
+    if (ok) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires two array<bigint> arguments, " +
+        s"got ${left.dataType.sql} and ${right.dataType.sql}")
+  }
+
+  override def dataType: DataType = IntegerType
+  override def prettyName: String = "graft_first_equal_index"
+
+  override def nullSafeEval(a: Any, b: Any): Any = {
+    val x = a.asInstanceOf[ArrayData]
+    val y = b.asInstanceOf[ArrayData]
+    val n = math.min(x.numElements(), y.numElements())
+    var i = 0
+    while (i < n && (x.isNullAt(i) || y.isNullAt(i) || x.getLong(i) != y.getLong(i)))
+      i += 1
+    i
+  }
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (x, y) => {
+      val n = ctx.freshName("n"); val i = ctx.freshName("i")
+      s"""
+         |int $n = java.lang.Math.min($x.numElements(), $y.numElements());
+         |int $i = 0;
+         |while ($i < $n && ($x.isNullAt($i) || $y.isNullAt($i) ||
+         |    $x.getLong($i) != $y.getLong($i))) {
+         |  $i++;
+         |}
+         |${ev.value} = $i;
        """.stripMargin
     })
 
@@ -208,6 +262,11 @@ object SetExpressions {
   /** Jaccard similarity of two sorted-distinct long-array columns. */
   def sortedSetJaccard(a: Column, b: Column): Column =
     GraftSqlBridge.column(SortedSetJaccard(
+      GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
+
+  /** First index where two long arrays are equal, else the shorter length. */
+  def firstEqualIndex(a: Column, b: Column): Column =
+    GraftSqlBridge.column(FirstEqualIndex(
       GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
 
   /** k-min MinHash signature of a token-hash array in one pass. */

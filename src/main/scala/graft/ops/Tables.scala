@@ -95,6 +95,16 @@ object Tables {
       df.checkpoint()
     else df.localCheckpoint()
 
+  /** TRUE when `df` is small enough to ship whole: Catalyst's size
+    * estimate — the one a join would broadcast it by — is within the
+    * session's `spark.sql.autoBroadcastJoinThreshold`. FALSE with
+    * broadcasts off, and for a streaming frame.
+    */
+  def shipsWhole(df: DataFrame): Boolean = !df.isStreaming && {
+    val bound = org.apache.spark.sql.GraftSqlBridge.broadcastThreshold(df.sparkSession)
+    bound >= 0 && df.queryExecution.optimizedPlan.stats.sizeInBytes <= bound
+  }
+
   /** Read one testdata table from a scale-factor directory.
     *
     * `events.ts` has shipped in two encodings across testdata

@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The dev probe. Names resolve from `SparkEntry.queries`, then
@@ -17,8 +17,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    count and max vs mean task time, then the last
   *    rep's final adaptive plan and its per-job breakdown: every Spark
   *    job's wall time, the driver-side gap before it (planning, file
-  *    listing, commit protocol, lease and ledger I/O) and its call site,
-  *    then time by call site. Each rep executes the query's OWN
+  *    listing, commit protocol, lease and ledger I/O), its call site and
+  *    the operator scopes of the stages it ran (`{Exchange|LocalTableScan}`),
+  *    then time by call site — jobs submitted from a future (AQE stages,
+  *    broadcasts), whose call site names no engine code, are keyed by
+  *    their scopes instead. Each rep executes the query's OWN
   *    QueryExecution (`toRdd`): a `count()` would plan a separate
   *    aggregate that Catalyst prunes, and leave the final adaptive plan
   *    unexecuted.
@@ -86,22 +89,34 @@ object Probe {
       if (e > 0) j.start - e else 0L }
     last.jobs.zip(gaps).foreach { case (j, gap) =>
       println(f"[probe]   job ${j.id}%4d ${(j.end - j.start) / 1e3}%7.2fs " +
-        f"gapBefore=${gap / 1e3}%6.2fs  ${j.site}%s")
+        f"gapBefore=${gap / 1e3}%6.2fs  ${j.site}%s  ${j.ops}%s")
     }
     val covered = last.jobs.map(j => j.end - j.start).sum
     println(f"[probe] covered=${covered / 1e3}%.2fs " +
       f"gaps=${gaps.filter(_ > 0).sum / 1e3}%.2fs (driver-side) of " +
       f"wall=${last.wall}%.2fs")
     println("[probe] by site:")
-    last.jobs.groupBy(_.site).map { case (s, js) =>
+    last.jobs.groupBy(_.key).map { case (s, js) =>
       (s, js.map(j => j.end - j.start).sum, js.size)
     }.toSeq.sortBy(-_._2).take(25).foreach { case (s, ms, n) =>
       println(f"[probe]   ${ms / 1e3}%7.2fs n=$n%3d  $s%s")
     }
   }
 
-  /** A Spark job: start and end (epoch ms) and call site. */
-  final case class Job(id: Int, start: Long, end: Long, site: String)
+  /** A stage a job ran: its task count and its operators' scope names. */
+  final case class StageRun(id: Int, tasks: Int, scopes: Seq[String])
+
+  /** A Spark job: start and end (epoch ms), call site, whether that site
+    * names engine code (a job description or a `graft.` frame), and the
+    * stages it ran — skipped stages, whose output an earlier job already
+    * computed, are not among them. */
+  final case class Job(id: Int, start: Long, end: Long, site: String,
+                       anchored: Boolean, stages: Seq[StageRun]) {
+    /** The operator scopes of its stages: `{Exchange|WholeStageCodegen}`. */
+    def ops: String = stages.flatMap(_.scopes).distinct.sorted.mkString("{", "|", "}")
+    /** Its by-site key: the site when it names engine code, else [[ops]]. */
+    def key: String = if (anchored) site else ops
+  }
 
   /** What a [[record]]ed block did: its result, its driver wall seconds,
     * the Spark jobs it started (in start order), and its tasks' run
@@ -123,7 +138,7 @@ object Probe {
     val tag = java.util.UUID.randomUUID.toString
     val sentinel = s"$tag-sentinel"
     val jobs = scala.collection.mutable.Map.empty[Int, Job]
-    val stages = scala.collection.mutable.Set.empty[Int]
+    val stages = scala.collection.mutable.Map.empty[Int, Int] // stage -> job
     val taskMs = Vector.newBuilder[Long]
     var spilled = 0L
     @volatile var drained = false
@@ -132,8 +147,17 @@ object Probe {
         val t = Option(js.properties).map(_.getProperty(TagKey)).orNull
         if (t == sentinel) drained = true
         else if (t == tag) {
-          jobs(js.jobId) = Job(js.jobId, js.time, js.time, site(js))
-          stages ++= js.stageIds
+          val (s, anchored) = site(js)
+          jobs(js.jobId) = Job(js.jobId, js.time, js.time, s, anchored, Nil)
+          stages ++= js.stageIds.map(_ -> js.jobId)
+        }
+      }
+      override def onStageCompleted(ev: SparkListenerStageCompleted): Unit = synchronized {
+        val si = ev.stageInfo
+        for (id <- stages.get(si.stageId); j <- jobs.get(id)) {
+          val scopes = si.rddInfos.flatMap(_.scope).map(_.name
+            .replaceAll("\\s*\\(\\d+\\)$", "").trim).distinct.sorted
+          jobs(id) = j.copy(stages = j.stages :+ StageRun(si.stageId, si.numTasks, scopes))
         }
       }
       override def onJobEnd(je: SparkListenerJobEnd): Unit = synchronized {
@@ -169,12 +193,13 @@ object Probe {
     } finally sc.removeSparkListener(listener)
   }
 
-  /** A job's call site: its description when one is set, else the first
-    * engine frame of the submitting stack in the stage details, else the
-    * last stage's name ("parquet at Stage.scala:209"). Jobs that AQE and
-    * broadcast exchanges submit from their own futures carry no engine
-    * frame and read as the future's call site. */
-  private def site(js: SparkListenerJobStart): String = {
+  /** A job's call site, and whether it names engine code: its description
+    * when one is set, else the first engine frame of the submitting stack
+    * in the stage details, else (not anchored) the last stage's name.
+    * Jobs that AQE and broadcast exchanges submit from their own futures
+    * carry no engine frame and read as the future's call site
+    * ("$anonfun$withThreadLocalCaptured$2 at CompletableFuture.java:1768"). */
+  private def site(js: SparkListenerJobStart): (String, Boolean) = {
     val infos = js.stageInfos.sortBy(_.stageId)
     val frame = infos.reverseIterator
       .flatMap(_.details.split('\n'))
@@ -182,8 +207,9 @@ object Probe {
       .map(_.trim.stripPrefix("at "))
     Option(js.properties).flatMap(p =>
       Option(p.getProperty("spark.job.description")))
-      .orElse(frame)
-      .getOrElse(infos.lastOption.map(_.name).getOrElse("?"))
-      .take(120)
+      .orElse(frame) match {
+      case Some(s) => (s.take(120), true)
+      case None => (infos.lastOption.map(_.name).getOrElse("?").take(120), false)
+    }
   }
 }

@@ -29,6 +29,12 @@ object GraftSqlBridge {
       s"expected a literal argument, got ${other.sql}")
   }
 
+  /** The session's `spark.sql.autoBroadcastJoinThreshold` in bytes (-1:
+    * off) — the bound under which Catalyst ships a relation whole. */
+  def broadcastThreshold(spark: SparkSession): Long =
+    spark.asInstanceOf[classic.SparkSession].sessionState.conf
+      .autoBroadcastJoinThreshold
+
   /** Register a native function on a LIVE session (the public
     * `SparkSessionExtensions.injectFunction` channel only applies at
     * session build time).

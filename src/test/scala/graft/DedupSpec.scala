@@ -745,6 +745,53 @@ class DedupSpec extends AnyFunSuite {
     }
   }
 
+  test("first-matching-band kernel ≡ the unrolled element_at OR, interpreted and codegen") {
+    // the survivor test pair dedup used before the kernel: no band before
+    // the collision's `band` also matched, one element_at pair per band
+    def unrolled(bands: Int): org.apache.spark.sql.Column =
+      if (bands <= 1) lit(true)
+      else !(0 until bands - 1).map(b => (col("band") > b) &&
+        (element_at(col("a"), b + 1) === element_at(col("b"), b + 1))).reduce(_ || _)
+    val rnd = new scala.util.Random(29)
+    // random key arrays of one length per pair (both sides band alike),
+    // with equalities forced at chosen positions; length 1 is bands = 1
+    val pairs = (1 to 240).map { i =>
+      val n = 1 + i % 16
+      val a = Seq.fill(n)(rnd.nextLong())
+      val b = a.zipWithIndex.map { case (v, j) =>
+        if (rnd.nextInt(4) == 0 || (i % 5 == 0 && j == n - 1)) v else v ^ (j + 1L) }
+      (a, b)
+    }
+    val rows = pairs.flatMap { case (a, b) => a.indices.map(band => (a, b, band)) }
+    // repartitioned: a Project straight over the local relation would be
+    // evaluated by ConvertToLocalRelation on the driver, in neither mode
+    val df = rows.toDF("a", "b", "band").repartition(3)
+    val kernel = SetExpressions.firstEqualIndex(col("a"), col("b")) >= col("band")
+    val modes = Seq(("false", "NO_CODEGEN"), ("true", "CODEGEN_ONLY"))
+    for ((wholeStage, factory) <- modes) {
+      spark.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+      spark.conf.set("spark.sql.codegen.factoryMode", factory)
+      try {
+        val got = (1 to 16).map { n =>
+          df.where(size(col("a")) === n)
+            .select(kernel.as("kernel"), unrolled(n).as("unrolled"))
+            .as[(Boolean, Boolean)].collect()
+        }.reduce(_ ++ _)
+        assert(got.length == rows.size, factory)
+        assert(got.forall { case (k, u) => k == u }, factory)
+        assert(got.exists(_._1) && got.exists(!_._1), factory)
+        val nulls = Seq((Seq(1L, 2L), Option.empty[Seq[Long]]))
+          .toDF("a", "b").repartition(2)
+          .select(SetExpressions.firstEqualIndex(col("a"), col("b")))
+          .collect()
+        assert(nulls.forall(_.isNullAt(0)), factory)
+      } finally {
+        spark.conf.unset("spark.sql.codegen.wholeStage")
+        spark.conf.unset("spark.sql.codegen.factoryMode")
+      }
+    }
+  }
+
   test("incrementalNearDups ≡ brute-force max-Jaccard on randomized corpora") {
     val rnd = new scala.util.Random(13)
     val vocab = Vector.tabulate(40)(i => s"tok$i")

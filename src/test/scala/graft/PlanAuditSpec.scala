@@ -236,6 +236,99 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(plan.contains("graft-audit-manifest/bands"), plan.take(3000))
   }
 
+  /** Executed-plan occurrences of the MinHash signature expression in the
+    * final adaptive plan (AQE's toString appends the pre-adaptive "Initial
+    * Plan" — counting that too would double every expression). */
+  private def signatureCount(df: org.apache.spark.sql.DataFrame): (Int, String) = {
+    val plan = df.queryExecution.executedPlan.toString
+      .split("== Initial Plan ==").head
+    ("graft_minhash_signature".r.findAllMatchIn(plan).size, plan)
+  }
+
+  /** A manifest (a build plus one append) over half the parquet
+    * `documents` table and a ONE-FILE parquet probe of the other half — a
+    * served probe's shape. A `Seq.toDF` probe is a LocalRelation already,
+    * which ConvertToLocalRelation folds on the driver, so it cannot show
+    * what a scanned probe recomputes. The halves share planted
+    * duplicates. */
+  private def parquetProbe(name: String): (String, () => org.apache.spark.sql.DataFrame) = {
+    import org.apache.spark.sql.functions._
+    val docs = graft.ops.Tables.t(spark, sf, "documents")
+    val mani = s"target/graft-audit-$name-manifest"
+    val file = s"target/graft-audit-$name-probe"
+    graft.ext.Dedup.saveMinhashManifest(docs.where(pmod(col("doc_id"), lit(10)) < 4),
+      "text", "doc_id", mani, k = 32, bands = 16)
+    graft.ext.Dedup.appendToMinhashManifest(docs.where(pmod(col("doc_id"), lit(10)) === 4),
+      "text", "doc_id", mani)
+    docs.where(pmod(col("doc_id"), lit(10)) >= 5).coalesce(1)
+      .write.mode("overwrite").parquet(file)
+    (file, () => graft.ext.Dedup.incrementalNearDups(
+      graft.ops.Tables.parquet(spark, file), mani, "text", "doc_id", 0.9))
+  }
+
+  private def verdicts(df: org.apache.spark.sql.DataFrame): Map[Long, (Option[Double], Boolean)] =
+    df.collect().map(r => r.getLong(0) ->
+      ((if (r.isNullAt(1)) None else Some(r.getDouble(1)), r.getBoolean(2)))).toMap
+
+  test("q31 minhashPairs computes the signature once per side of the banding self-join") {
+    // an inner posexplode of the band keys infers a `size(keys) > 0`
+    // filter, and pushdown inlines the tokenizer and the signature into
+    // it once per band: the plan held the signature 17 times per side
+    val (hits, plan) = signatureCount(SparkEntry.queries("q31_dedup_minhash_lsh")(spark, sf))
+    assert(hits == 2, s"minhash computed $hits times\n${plan.take(4000)}")
+    assert(plan.contains("documents.parquet"), plan.take(3000))
+  }
+
+  test("q84 parquet probe above the broadcast bound: unbound, signature once") {
+    val (file, probe) = parquetProbe("unbound")
+    val below = verdicts(probe())
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1")
+    try {
+      val (df, jobs) = JobCount(spark)(probe())
+      assert(verdicts(df) == below)
+      assert(below.values.exists(_._2), "the fixture plants no near-dup")
+      val (hits, plan) = signatureCount(df)
+      assert(hits == 1, s"minhash computed $hits times\n${plan.take(4000)}")
+      assert(plan.contains(file), plan.take(3000))
+      // building the probe starts only the manifest's stamp read: no
+      // collect of the probe batch, which the bound probe adds
+      val (_, boundJobs) = {
+        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+        try JobCount(spark)(probe())
+        finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1")
+      }
+      assert(boundJobs == jobs + 1, s"bound $boundJobs vs unbound $jobs jobs")
+    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+  }
+
+  test("q84 parquet probe within the bound: its file is scanned once and the candidate stage spreads") {
+    val (file, probe) = parquetProbe("bound")
+    val built = graft.tools.Probe.record(spark)(probe())
+    val df = built.result
+    // building it collects the tokenized batch once…
+    assert(built.jobs.count(_.site.contains("localProbe")) == 1, built.jobs.mkString("\n"))
+    val rec = graft.tools.Probe.record(spark)(df.collect())
+    assert(rec.result.nonEmpty)
+    // …and every consumer reads local relations, never the file again
+    val (hits, plan) = signatureCount(df)
+    assert(!plan.contains(file), plan.take(3000))
+    assert(hits == 1, s"minhash computed $hits times\n${plan.take(4000)}")
+    // the probe's rows spread over the default parallelism, where the
+    // one-file scan was one task
+    val locals = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(df.queryExecution.executedPlan) {
+        case l: org.apache.spark.sql.execution.LocalTableScanExec => l }
+    assert(locals.nonEmpty, plan.take(3000))
+    assert(locals.forall(_.execute().getNumPartitions > 1), plan.take(3000))
+    // the candidate join builds the (small) probe bands and streams the
+    // manifest's bands: one stage, as wide as the manifest's files (a
+    // build and an append here)
+    val candidate = rec.jobs.flatMap(_.stages)
+      .filter(st => st.scopes.contains("Scan parquet") && st.scopes.contains("Exchange"))
+    assert(candidate.size == 1, rec.jobs.mkString("\n"))
+    assert(candidate.head.tasks > 1, rec.jobs.mkString("\n"))
+  }
+
   test("pending tombstones enter the probe as a broadcast anti-join") {
     // the tombstone contract: consulting pending deletes at probe time
     // must cost a BROADCAST of the (small) key set against the docs

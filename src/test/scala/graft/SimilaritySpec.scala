@@ -286,7 +286,13 @@ class SimilaritySpec extends AnyFunSuite {
       .as[(Long, Long, Double, Int)].collect().toSet
     val direct = rows(Similarity.topKIvf(qset, emb, k = 5, dim = 64,
       centroidsIn = cents))
-    val served = rows(Similarity.topKIvfIndexed(spark, qset, dir, k = 5))
+    val (servedDf, jobs) = JobCount(spark)(
+      Similarity.topKIvfIndexed(spark, qset, dir, k = 5))
+    // building the serve reads meta and centroids, one job each: sorting
+    // the centroids with orderBy before the collect added a range-partition
+    // sample job and a shuffle
+    assert(jobs == 2, s"$jobs jobs")
+    val served = rows(servedDf)
     assert(served == direct, "index-served top-k must equal the direct IVF")
     // loaded centroids survive the round trip bit-exactly
     val loaded = spark.read.parquet(

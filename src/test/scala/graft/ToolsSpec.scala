@@ -1,6 +1,7 @@
 package graft
 
 import graft.tools.Probe
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.jdk.CollectionConverters._
@@ -17,7 +18,7 @@ class ToolsSpec extends AnyFunSuite {
   test("Probe.record counts the jobs a block starts, on its thread and on threads it spawns") {
     val sc = spark.sparkContext
     val rec = Probe.record(spark) {
-      val child = new Thread(() => sc.parallelize(1 to 10, 3).count())
+      val child = new Thread(() => sc.parallelize(1 to 10, 3).map(_ + 1).count())
       child.start()
       val rows = sc.parallelize(1 to 10, 2).count()
       child.join()
@@ -28,8 +29,29 @@ class ToolsSpec extends AnyFunSuite {
     assert(rec.jobs.map(_.id).distinct.size == 2)
     assert(rec.jobs.forall(j => j.end >= j.start))
     assert(rec.taskMs.size == 5)
+    // each job carries the stages it ran: their tasks and operator scopes
+    assert(rec.jobs.map(_.ops).toSet == Set("{map|parallelize}", "{parallelize}"))
+    assert(rec.jobs.flatMap(_.stages).map(_.tasks).sorted == Seq(2, 3))
     // the sentinel and jobs started outside the block are not counted
     assert(Probe.record(spark)(1).jobs.isEmpty)
+  }
+
+  test("Probe.record keys future-submitted jobs by their operator scopes") {
+    val sc = spark.sparkContext
+    // a job submitted here names this spec's frame: keyed by its site
+    val own = Probe.record(spark)(sc.parallelize(1 to 10, 2).count()).jobs
+    assert(own.size == 1 && own.head.anchored, own.toString)
+    assert(own.head.key == own.head.site && own.head.site.contains("ToolsSpec"))
+    // AQE submits every stage of a DataFrame action from its own future:
+    // no engine frame names them, so each is keyed by its operator scopes
+    val df = spark.range(0, 100, 1, 2).groupBy((col("id") % 3).as("g")).count()
+    val rec = Probe.record(spark)(df.collect())
+    assert(rec.result.length == 3)
+    assert(rec.jobs.size == 2 && rec.jobs.forall(j => !j.anchored && j.key == j.ops),
+      rec.jobs.toString)
+    assert(rec.jobs.head.ops == "{Exchange|WholeStageCodegen}", rec.jobs.toString)
+    // the result job skips the shuffle stage the first job ran: not listed
+    assert(rec.jobs.map(_.stages.map(_.tasks)) == Seq(Seq(2), Seq(1)), rec.jobs.toString)
   }
 
   test("Bench.interleaved samples each query once per round and sanitizes errors") {
