@@ -63,51 +63,37 @@ object Campaign {
     require(members.map(_.path).distinct.size == members.size,
       s"campaign members must have distinct roots, got " +
         members.map(_.path).mkString(", "))
-    // THE fixed global order: every multi-root acquisition in the
-    // library goes through this sort, which is what makes concurrent
-    // campaigns deadlock-free
-    val ordered = members.sortBy(_.path).toList
-    def nest(rest: List[Member]): Unit = rest match {
-      case Nil =>
-        // capture every component's EXISTING pin bytes under this name
-        // before anything overwrites them: re-pinning an existing
-        // campaign name is routine (each release refreshes its pin), and
-        // a failed refresh must put the PREVIOUS campaign back — the old
-        // rollback dropped the name everywhere, destroying the prior
-        // campaign's pins (including members this run never touched).
-        // Safe under the held leases: GC only runs inside a publish,
-        // which the leases exclude, so the old pinned versions survive
-        // the capture→overwrite→restore window.
-        val prior: Map[(String, String), Option[String]] =
-          ordered.flatMap { m =>
-            m.family.components(spark, m.path).map(c => (m.path, c) ->
-              Stage.rawSnapshotPin(spark, s"${m.path}/$c", name))
-          }.toMap
-        // each member's own family pin runs under the already-held root
-        // lease (reentrancy passes it through), so the family-level
-        // consistency guarantees apply inside the campaign's instant
-        try ordered.foreach(m => m.family.snapshot(spark, m.path, name))
-        catch {
-          case scala.util.control.NonFatal(e) =>
-            // never leave a partial campaign behind the name: restore
-            // each component's prior pin where one existed, drop where
-            // none did (best-effort), then surface the original failure
-            ordered.foreach { m =>
-              m.family.components(spark, m.path).foreach { c =>
-                try prior.getOrElse((m.path, c), None) match {
-                  case Some(bytes) => Stage.restoreRawSnapshotPin(
-                    spark, s"${m.path}/$c", name, bytes)
-                  case None =>
-                    Stage.dropSnapshot(spark, s"${m.path}/$c", name)
-                } catch { case scala.util.control.NonFatal(_) => () }
-              }
-            }
-            throw e
+    withLeases(spark, members) { held =>
+      // capture every component's EXISTING pin bytes under this name
+      // before anything overwrites them: re-pinning an existing
+      // campaign name is routine (each release refreshes its pin), and
+      // a failed refresh must put the PREVIOUS campaign back, not drop
+      // its pins. Safe under the held leases: GC only runs inside a
+      // publish, which the leases exclude, so the old pinned versions
+      // survive the capture→overwrite→restore window.
+      val prior = held.flatMap { case (m, lease) =>
+        m.family.components(spark, m.path).map { c =>
+          val dir = s"${m.path}/$c"
+          (lease, dir, Stage.rawSnapshotPin(lease, dir, name))
         }
-      case m :: tail =>
-        Stage.withWriterLease(spark, m.path)(nest(tail))
+      }
+      // each member's family pin runs under its held root lease, so the
+      // family-level guarantees apply inside the campaign's instant
+      try held.foreach { case (m, lease) => m.family.snapshot(lease, name) }
+      catch {
+        case scala.util.control.NonFatal(e) =>
+          // never leave a partial campaign behind the name: restore
+          // each component's prior pin where one existed, drop where
+          // none did (best-effort), then surface the original failure
+          prior.foreach { case (lease, dir, bytes) =>
+            try bytes match {
+              case Some(b) => Stage.restoreRawSnapshotPin(lease, dir, name, b)
+              case None    => Stage.dropSnapshot(spark, dir, name)
+            } catch { case scala.util.control.NonFatal(_) => () }
+          }
+          throw e
+      }
     }
-    nest(ordered)
   }
 
   /** ROLL every member BACK to its pin under `name` — the cross-family
@@ -127,19 +113,28 @@ object Campaign {
   def restore(spark: SparkSession, name: String,
               members: Seq[Member]): Unit = {
     require(members.nonEmpty, "a campaign needs at least one member")
-    val ordered = members.sortBy(_.path).toList
-    def nest(rest: List[Member]): Unit = rest match {
-      case Nil =>
-        val missing = ordered.filter(m =>
-          m.family.unpinned(spark, m.path, name).nonEmpty)
-        require(missing.isEmpty,
-          s"campaign '$name' does not pin member(s) " +
-            s"${missing.map(_.path).mkString(", ")} — nothing restored")
-        ordered.foreach(m => m.family.restore(spark, m.path, name))
-      case m :: tail =>
-        Stage.withWriterLease(spark, m.path)(nest(tail))
+    withLeases(spark, members) { held =>
+      val missing = held.map(_._1).filter(m =>
+        m.family.unpinned(spark, m.path, name).nonEmpty)
+      require(missing.isEmpty,
+        s"campaign '$name' does not pin member(s) " +
+          s"${missing.map(_.path).mkString(", ")} — nothing restored")
+      held.foreach { case (m, lease) => m.family.restore(lease, name) }
     }
-    nest(ordered)
+  }
+
+  /** Run `body` holding every member's root lease, acquired in THE fixed
+    * global order (sorted by root path) that keeps concurrent campaigns
+    * deadlock-free. */
+  private def withLeases(spark: SparkSession, members: Seq[Member])
+                        (body: List[(Member, Stage.Lease)] => Unit): Unit = {
+    def nest(rest: List[Member], held: List[(Member, Stage.Lease)]): Unit =
+      rest match {
+        case Nil => body(held.reverse)
+        case m :: tail =>
+          Stage.withWriterLease(spark, m.path)(l => nest(tail, (m, l) :: held))
+      }
+    nest(members.sortBy(_.path).toList, Nil)
   }
 
   /** Release every member's pin under `name`. The pinned versions become

@@ -482,15 +482,15 @@ trait CorpusLm extends CorpusTokenizers {
     // publish landing BETWEEN the two flips would pair the new corpus's
     // bigrams with the old corpus's vocab — V wrong for every
     // unseen-bigram score
-    Lm.rebuild(spark, path) {
+    Lm.rebuild(spark, path) { lease =>
       // bigram/token explosion amplifies each doc row ~|tokens|×; spread
       // a compact scan before it (Tables.spreadAmplified scaladoc)
       val spread = graft.ops.Tables.spreadAmplified(
         train.select(col(idCol), col(textCol)), col(idCol))
-      graft.ops.Stage.publishRebuild(spark, s"$path/bigrams",
+      graft.ops.Stage.publishRebuild(lease, s"$path/bigrams",
         bigramStream(spread, textCol, idCol)
           .groupBy("p", "w").agg(count(lit(1)).as("cb")))
-      graft.ops.Stage.publishRebuild(spark, s"$path/vocab",
+      graft.ops.Stage.publishRebuild(lease, s"$path/vocab",
         spread.where(col(textCol).isNotNull)
           .select(explode(split(col(textCol), " ")).as("tok"))
           .groupBy("tok").agg(count(lit(1)).as("c")))
@@ -606,17 +606,17 @@ trait CorpusLm extends CorpusTokenizers {
     * the delta trail serving. The LM keeps no tombstones (it deletes by
     * negated delta), so `tomb` is always None.
     */
-  private def foldLm(spark: org.apache.spark.sql.SparkSession,
-                     path: String, comps: Seq[String],
+  private def foldLm(lease: graft.ops.Stage.Lease, comps: Seq[String],
                      tomb: Option[DataFrame]): Unit = {
     import graft.ops.Stage.{compactionPartitions, publishRewrite, resolve}
+    val (spark, path) = (lease.spark, lease.root)
     val nB = compactionPartitions(spark, s"$path/bigrams")
-    publishRewrite(spark, s"$path/bigrams",
+    publishRewrite(lease, s"$path/bigrams",
       Tables.parquet(spark, resolve(spark, s"$path/bigrams"))
         .groupBy("p", "w").agg(sum(col("cb")).as("cb"))
         .where(col("cb") > 0).repartition(nB))
     val nV = compactionPartitions(spark, s"$path/vocab")
-    publishRewrite(spark, s"$path/vocab",
+    publishRewrite(lease, s"$path/vocab",
       Tables.parquet(spark, resolve(spark, s"$path/vocab"))
         .groupBy("tok").agg(sum(col("c")).as("c"))
         .where(col("c") > 0).repartition(nV))

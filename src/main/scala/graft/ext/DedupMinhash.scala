@@ -256,7 +256,7 @@ trait DedupMinhash extends DedupExactOps {
                           path: String, k: Int = 32, bands: Int = 8): Unit = {
     val spark = df.sparkSession
     import spark.implicits._
-    MinhashManifest.rebuild(spark, path) {
+    MinhashManifest.rebuild(spark, path) { lease =>
       // meta ∥ docs (guide §2.6): both publish under the held ROOT lease
       // — no append can read a half-built state either way (appends
       // acquire the root lease) — and the meta job's ~0.2 s of publish
@@ -265,9 +265,9 @@ trait DedupMinhash extends DedupExactOps {
       import graft.ops.Stage.publishRebuild
       val keyed = manifestKeyed(df, textCol, idCol, k, bands)
       graft.ops.Par.run(
-        () => publishRebuild(spark, s"$path/meta",
+        () => publishRebuild(lease, s"$path/meta",
           Seq((k, bands)).toDF("k", "bands").repartition(1)),
-        () => publishRebuild(spark, s"$path/docs",
+        () => publishRebuild(lease, s"$path/docs",
           keyed.select(col("doc"), col("toks"), col("ntok"), col("keys"))))
       // bands/ derives from the JUST-PUBLISHED docs parquet (safe under
       // the held root lease), not from `keyed`'s lineage: the second
@@ -278,7 +278,7 @@ trait DedupMinhash extends DedupExactOps {
       // which the docs component persists)
       val publishedDocs = Tables.parquet(spark,
         graft.ops.Stage.resolve(spark, s"$path/docs"))
-      publishRebuild(spark, s"$path/bands", bandsRows(publishedDocs, k, bands))
+      publishRebuild(lease, s"$path/bands", bandsRows(publishedDocs, k, bands))
     }
   }
 
@@ -426,10 +426,10 @@ trait DedupMinhash extends DedupExactOps {
     * reset after the fold, so a crash between the table rewrites and the
     * reset only re-folds an already-clean manifest next time.
     */
-  private def foldManifest(spark: org.apache.spark.sql.SparkSession,
-                           path: String, comps: Seq[String],
+  private def foldManifest(lease: graft.ops.Stage.Lease, comps: Seq[String],
                            tomb: Option[DataFrame]): Unit = {
     import graft.ops.Stage.{compactionPartitions, publishRewrite, resolve}
+    val (spark, path) = (lease.spark, lease.root)
     val removed = tomb match {
       case Some(t) => Tables.parquet(spark, resolve(spark, s"$path/docs"))
         .withColumn("seth", xxhash64(col("toks")))
@@ -448,11 +448,11 @@ trait DedupMinhash extends DedupExactOps {
     val nBands = compactionPartitions(spark, s"$path/bands")
     val nDocs = compactionPartitions(spark, s"$path/docs")
     graft.ops.Par.run(
-      () => publishRewrite(spark, s"$path/bands",
+      () => publishRewrite(lease, s"$path/bands",
         Tables.parquet(spark, resolve(spark, s"$path/bands"))
           .join(removed, Seq("doc"), "left_anti")
           .repartition(nBands, col("band"), col("band_key"))),
-      () => publishRewrite(spark, s"$path/docs",
+      () => publishRewrite(lease, s"$path/docs",
         minusTombstoned(Tables.parquet(spark, resolve(spark, s"$path/docs")),
           tomb).repartition(nDocs)))
   }

@@ -285,10 +285,10 @@ trait DedupSetSim extends DedupWinnow {
   def saveSetSimIndex(df: DataFrame, textCol: String, idCol: String,
                       path: String, shingle: Int = 3): Unit = {
     val spark = df.sparkSession
-    graft.ops.Stage.rebuild(spark, path, SetSimComponents) {
+    graft.ops.Stage.rebuild(spark, path, SetSimComponents) { lease =>
       val sets = setSimSets(df, textCol, idCol, shingle)
       var setsDir: String = null
-      graft.ops.Stage.publishRebuild(spark, s"$path/sets") { vd =>
+      graft.ops.Stage.publishRebuild(lease, s"$path/sets") { vd =>
         sets.write.mode("overwrite").parquet(vd); setsDir = vd
       }
       // postings derive from the PUBLISHED sets parquet, not the sets
@@ -301,7 +301,7 @@ trait DedupSetSim extends DedupWinnow {
       // the sets parquet is compact (hashed longs), so the scan packs it
       // into one maxPartitionBytes-sized partition — spread it too or the
       // posting explode funnels through a single task
-      graft.ops.Stage.publishRebuild(spark, s"$path/postings")(vd =>
+      graft.ops.Stage.publishRebuild(lease, s"$path/postings")(vd =>
         setSimPostings(graft.ops.Tables.spreadAmplified(
             Tables.parquet(spark, setsDir), col("doc")))
           .write.mode("overwrite").parquet(vd))
@@ -439,8 +439,8 @@ trait DedupSetSim extends DedupWinnow {
   def deleteContentFromSetSimIndex(deleted: DataFrame, textCol: String,
                                    path: String, shingle: Int = 3): Unit = {
     val spark = deleted.sparkSession
-    graft.ops.Stage.withWriterLease(spark, path) {
-      graft.ops.Stage.sweepUncommitted(spark, path, SetSimComponents)
+    graft.ops.Stage.withWriterLease(spark, path) { lease =>
+      graft.ops.Stage.sweepUncommitted(lease, path, SetSimComponents)
       import graft.ops.Stage.{publishRewrite, resolve}
       val delKeys = deleted.where(col(textCol).isNotNull)
         .select(xxhash64(graft.functions.TextExpressions
@@ -454,10 +454,10 @@ trait DedupSetSim extends DedupWinnow {
       // at construction and the sets flip keeps that version one grace
       // cycle, so the postings thunk's anti-join input is stable
       graft.ops.Par.run(
-        () => publishRewrite(spark, s"$path/postings",
+        () => publishRewrite(lease, s"$path/postings",
           Tables.parquet(spark, resolve(spark, s"$path/postings"))
             .join(removed, Seq("doc"), "left_anti")),
-        () => publishRewrite(spark, s"$path/sets",
+        () => publishRewrite(lease, s"$path/sets",
           live.join(delKeys, Seq("seth"), "left_anti").drop("seth")))
     }
   }

@@ -271,10 +271,10 @@ trait DedupWinnow extends DedupSimhash {
     // ONE rebuild lease over meta + fps: a leased append between the
     // two publishes must not pair one generation's parameters with the
     // other's fingerprints
-    WinnowManifest.rebuild(spark, path) {
-      graft.ops.Stage.publishRebuild(spark, s"$path/meta",
+    WinnowManifest.rebuild(spark, path) { lease =>
+      graft.ops.Stage.publishRebuild(lease, s"$path/meta",
         Seq((n, w)).toDF("n", "w").repartition(1))
-      graft.ops.Stage.publishRebuild(spark, s"$path/fps",
+      graft.ops.Stage.publishRebuild(lease, s"$path/fps",
         winnowFps(df, textCol, idCol, n, w))
     }
   }
@@ -349,16 +349,16 @@ trait DedupWinnow extends DedupSimhash {
     * pruning wants the h-sort restored. Pending tombstones fold into the
     * rewrite as a physical delete. Manifest-sized work, no corpus
     * re-winnowing. */
-  private def foldFps(spark: org.apache.spark.sql.SparkSession,
-                      path: String, comps: Seq[String],
+  private def foldFps(lease: graft.ops.Stage.Lease, comps: Seq[String],
                       tomb: Option[DataFrame]): Unit = {
+    val (spark, path) = (lease.spark, lease.root)
     val fps = Tables.parquet(spark, graft.ops.Stage.resolve(spark, s"$path/fps"))
     val live = tomb match {
       case Some(t) => fps.join(t.withColumnRenamed(t.columns.head, "doc"),
         Seq("doc"), "left_anti")
       case None => fps
     }
-    graft.ops.Stage.publishRewrite(spark, s"$path/fps",
+    graft.ops.Stage.publishRewrite(lease, s"$path/fps",
       live.repartition(col("h")).sortWithinPartitions("h", "doc", "pos"))
   }
 

@@ -184,7 +184,7 @@ object Search {
                     idCol: String = "doc_id", textCol: String = "text"): Unit = {
     val spark = docs.sparkSession
     import graft.ops.Stage.publishRebuild
-    TextIndex.rebuild(spark, path) {
+    TextIndex.rebuild(spark, path) { lease =>
       // the POSITIONAL component is the old corpus's too: left in place
       // it would phrase-serve corpus-A hits for a corpus-B index, and the
       // next append would MIX corpora into it (textComponents would
@@ -199,16 +199,15 @@ object Search {
       val spread = graft.ops.Tables.spreadAmplified(
         docs.select(col(idCol), col(textCol)), col(idCol))
       // the three component publishes are independent (disjoint
-      // component roots, each under its own component lease, no
-      // cross-reads) — run them CONCURRENTLY (guide §2.6) so each
-      // write's job-submit latency and straggler tail back-fills with
-      // the next component's tasks
+      // directories, no cross-reads, all under the rebuild's lease) —
+      // run them CONCURRENTLY (guide §2.6) so each write's job-submit
+      // latency and straggler tail back-fills with the next one's tasks
       graft.ops.Par.run(
-        () => publishRebuild(spark, s"$path/postings",
+        () => publishRebuild(lease, s"$path/postings",
           postingsOf(spread, idCol, textCol)),
-        () => publishRebuild(spark, s"$path/doclens",
+        () => publishRebuild(lease, s"$path/doclens",
           doclensOf(spread, idCol, textCol)),
-        () => publishRebuild(spark, s"$path/stats",
+        () => publishRebuild(lease, s"$path/stats",
           batchStats(spread, textCol)))
     }
   }
@@ -341,13 +340,13 @@ object Search {
     * per-(doc, term) rows whose multiset the rewrite preserves —
     * SearchSpec pins it).
     */
-  private def foldText(spark: org.apache.spark.sql.SparkSession,
-                       path: String, comps: Seq[String],
+  private def foldText(lease: graft.ops.Stage.Lease, comps: Seq[String],
                        tomb: Option[DataFrame]): Unit = {
     import graft.ops.Stage.{compactionPartitions, publishRewrite, resolve}
-    // The per-component rewrites are INDEPENDENT (disjoint component
-    // roots, each under its own component lease; inputs resolved against
-    // the still-live versions, which a sibling's flip cannot GC — the
+    val (spark, path) = (lease.spark, lease.root)
+    // The per-component rewrites are INDEPENDENT (disjoint directories,
+    // all under the compaction's lease; inputs resolved against the
+    // still-live versions, which a sibling's flip cannot GC — the
     // pointer keeps one previous-version grace cycle), so they run
     // CONCURRENTLY (guide §2.6, the campaign-trio overlap applied inside
     // one family): sequential publishes serialized ~0.3–0.5 s of
@@ -361,16 +360,16 @@ object Search {
     val lens = Tables.parquet(spark, resolve(spark, s"$path/doclens"))
     val idCol = lens.columns.head
     val postingsThunk = () =>
-      publishRewrite(spark, s"$path/postings") { versionDir =>
+      publishRewrite(lease, s"$path/postings") { versionDir =>
         minusTombstoned(Tables.parquet(spark, resolve(spark, s"$path/postings")),
           tomb, idCol)
           .repartition(nPost, col("token")).sortWithinPartitions("token", idCol)
           .write.mode("overwrite").parquet(versionDir)
       }
     val lensStatsThunk = () => {
-      publishRewrite(spark, s"$path/doclens",
+      publishRewrite(lease, s"$path/doclens",
         minusTombstoned(lens, tomb, idCol).repartition(nLens))
-      publishRewrite(spark, s"$path/stats",
+      publishRewrite(lease, s"$path/stats",
         Tables.parquet(spark, resolve(spark, s"$path/doclens")) // post-fold lens
           .agg(count(lit(1)).as("n_docs"),
             coalesce(sum(col("dl")), lit(0L)).as("total_tokens"))
@@ -380,7 +379,7 @@ object Search {
       // same fold for the positional lists: tombstones drop, fragments
       // re-sort to the builder's token-ordered layout
       val positionsThunk = () =>
-        publishRewrite(spark, s"$path/positions") { versionDir =>
+        publishRewrite(lease, s"$path/positions") { versionDir =>
           minusTombstoned(
             Tables.parquet(spark, resolve(spark, s"$path/positions")),
             tomb, idCol)
@@ -553,10 +552,9 @@ object Search {
                           idCol: String = "doc_id",
                           textCol: String = "text"): Unit = {
     val spark = docs.sparkSession
-    // root lease first (the established root→component nesting order,
-    // same as deleteFromTextIndex): a concurrent snapshot/append must
-    // not interleave with the component flip
-    graft.ops.Stage.withWriterLease(spark, path) {
+    // under the root lease: a concurrent snapshot/append must not
+    // interleave with the component flip
+    graft.ops.Stage.withWriterLease(spark, path) { lease =>
       // pins deliberately SURVIVE this rebuild (unlike the save*
       // builders, whose Family.rebuild clears them): positions is a
       // self-contained re-derivation of the same index's corpus,
@@ -565,7 +563,7 @@ object Search {
       // pin→rebuild→restore round trip. The cross-CORPUS stale-pin hazard
       // is closed at the true rebuild boundary instead: saveTextIndex
       // deletes the positional component outright.
-      graft.ops.Stage.publishRebuild(spark, s"$path/positions",
+      graft.ops.Stage.publishRebuild(lease, s"$path/positions",
         positionalPostings(docs, idCol, textCol))
     }
   }
@@ -581,7 +579,7 @@ object Search {
     */
   def enablePositionalIndex(spark: org.apache.spark.sql.SparkSession,
                             path: String): Unit =
-    graft.ops.Stage.withWriterLease(spark, path) {
+    graft.ops.Stage.withWriterLease(spark, path) { _ =>
       graft.ops.Stage.ensureVersioned(spark, s"$path/positions")
     }
 

@@ -827,7 +827,7 @@ object Similarity {
     val spark = corpus.sparkSession
     import spark.implicits._
     import graft.ops.Stage.publishRebuild
-    PqIndex.rebuild(spark, path) {
+    PqIndex.rebuild(spark, path) { lease =>
       // codebooksIn is the SHELL path for streaming ingest: codebooks
       // from the full (static) corpus, an empty codes relation, the
       // stream fills it (q114's shell convention for the IVF lists)
@@ -835,13 +835,13 @@ object Similarity {
       else if (trainIters > 0)
         trainPqCodebooks(corpus, m, nCent, dim, trainIters, idCol, vecCol)
       else pqCodebooks(corpus, m, nCent, dim, idCol, vecCol)
-      publishRebuild(spark, s"$path/codebooks",
+      publishRebuild(lease, s"$path/codebooks",
         cb.zipWithIndex.flatMap { case (cbJ, j) =>
           cbJ.zipWithIndex.map { case (cv, c) => (j, c, cv.toSeq) }
         }.toSeq.toDF("j", "c", "vec").repartition(1))
-      publishRebuild(spark, s"$path/meta",
+      publishRebuild(lease, s"$path/meta",
         Seq((dim, m, nCent)).toDF("dim", "m", "n_cent").repartition(1))
-      publishRebuild(spark, s"$path/codes",
+      publishRebuild(lease, s"$path/codes",
         pqCodes(corpus, dim, cb, idCol, vecCol).withColumnRenamed(idCol, "vec_id"))
     }
   }
@@ -957,10 +957,11 @@ object Similarity {
     * coalesced to [[graft.ops.Stage.compactionPartitions]] files and
     * published atomically. A tombstone-free fold preserves the row
     * multiset, so serving before and after is identical. */
-  private def foldVectors(spark: org.apache.spark.sql.SparkSession,
-                          dir: String, tomb: Option[DataFrame]): Unit = {
+  private def foldVectors(lease: graft.ops.Stage.Lease, dir: String,
+                          tomb: Option[DataFrame]): Unit = {
+    val spark = lease.spark
     val n = graft.ops.Stage.compactionPartitions(spark, dir)
-    graft.ops.Stage.publishRewrite(spark, dir,
+    graft.ops.Stage.publishRewrite(lease, dir,
       minusTombstoned(Tables.parquet(spark, graft.ops.Stage.resolve(spark, dir)),
         tomb).repartition(n))
   }
@@ -984,7 +985,7 @@ object Similarity {
     * pins serve through `pqTopKIndexed(…, at)`. */
   val PqIndex: graft.ops.Family =
     graft.ops.Family("pq_index", (_, _) => Seq("codes"),
-      (spark, path, _, tomb) => foldVectors(spark, s"$path/codes", tomb))
+      (lease, _, tomb) => foldVectors(lease, s"${lease.root}/codes", tomb))
 
   // ------------------------------------------------ binary index persistence
 
@@ -1016,10 +1017,10 @@ object Similarity {
                       vecCol: String = "embedding"): Unit = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    BinaryIndex.rebuild(spark, path) {
-      graft.ops.Stage.publishRebuild(spark, s"$path/meta",
+    BinaryIndex.rebuild(spark, path) { lease =>
+      graft.ops.Stage.publishRebuild(lease, s"$path/meta",
         Seq(dim).toDF("dim").repartition(1))
-      graft.ops.Stage.publishRebuild(spark, s"$path/sig",
+      graft.ops.Stage.publishRebuild(lease, s"$path/sig",
         binarySigRows(corpus, dim, idCol, vecCol))
     }
   }
@@ -1120,7 +1121,7 @@ object Similarity {
     * `binaryTopKIndexed(…, at)`. */
   val BinaryIndex: graft.ops.Family =
     graft.ops.Family("binary_index", (_, _) => Seq("sig"),
-      (spark, path, _, tomb) => foldVectors(spark, s"$path/sig", tomb))
+      (lease, _, tomb) => foldVectors(lease, s"${lease.root}/sig", tomb))
 
   /** SEMANTIC DECONTAMINATION: for every train vector, its maximum
     * cosine against a held-out probe/eval set, the probe that attains
@@ -1799,17 +1800,17 @@ object Similarity {
     val spark = corpus.sparkSession
     import spark.implicits._
     import graft.ops.Stage.publishRebuild
-    IvfIndex.rebuild(spark, path) {
+    IvfIndex.rebuild(spark, path) { lease =>
       val cents = if (centroidsIn == null)
         trainCentroids(corpus, nCentroids, dim, iters, idCol, vecCol)
       else centroidsIn
-      publishRebuild(spark, s"$path/centroids",
+      publishRebuild(lease, s"$path/centroids",
         cents.zipWithIndex.toSeq.map { case (v, i) => (i, v.toSeq) }
           .toDF("centroid", "vec").repartition(1))
-      publishRebuild(spark, s"$path/meta",
+      publishRebuild(lease, s"$path/meta",
         Seq((dim, cents.length, quantScale))
           .toDF("dim", "n_centroids", "quant_scale").repartition(1))
-      publishRebuild(spark, s"$path/lists")(versionDir =>
+      publishRebuild(lease, s"$path/lists")(versionDir =>
         writeIvfLists(corpus, cents, quantScale, idCol, vecCol, versionDir))
     }
   }
@@ -1943,12 +1944,12 @@ object Similarity {
     * preserved exactly — centroids, meta, and served top-k are untouched
     * (SimilaritySpec pins it).
     */
-  private def foldLists(spark: org.apache.spark.sql.SparkSession,
-                        path: String, comps: Seq[String],
+  private def foldLists(lease: graft.ops.Stage.Lease, comps: Seq[String],
                         tomb: Option[DataFrame]): Unit = {
     import graft.ops.Stage.{compactionPartitions, publishRewrite, resolve}
+    val (spark, path) = (lease.spark, lease.root)
     val n = compactionPartitions(spark, s"$path/lists")
-    publishRewrite(spark, s"$path/lists") { versionDir =>
+    publishRewrite(lease, s"$path/lists") { versionDir =>
       minusTombstoned(Tables.parquet(spark, resolve(spark, s"$path/lists")), tomb)
         .repartition(n, col("centroid"))
         .write.mode("overwrite").partitionBy("centroid").parquet(versionDir)

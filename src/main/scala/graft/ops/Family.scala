@@ -64,20 +64,20 @@ import org.apache.spark.sql.functions.{col, lit, when}
   *  - [[ingest]] is the streaming driver: append each micro-batch,
   *    auto-compact, then compact once the stream has drained.
   *
-  * `fold(spark, path, components, tombstones)` receives the component
-  * set [[compact]] probed under the lease and the pending tombstone keys
-  * (None when none are pending); it publishes each rewritten component
-  * with [[Stage.publishRewrite]].
+  * `fold(lease, components, tombstones)` receives [[compact]]'s root
+  * lease, the component set probed under it and the pending tombstone
+  * keys (None when none are pending); it publishes each rewritten
+  * component with [[Stage.publishRewrite]] under that lease.
   *
   * And so is the build side: every `saveX` builder runs inside
-  * [[rebuild]] and publishes each directory it writes — components and
-  * frozen meta alike — with [[Stage.publishRebuild]], so every
-  * directory of an index is born versioned.
+  * [[rebuild]] with its lease and publishes each directory it writes —
+  * components and frozen meta alike — with [[Stage.publishRebuild]], so
+  * every directory of an index is born versioned.
   */
 final case class Family(
     name: String,
     components: (SparkSession, String) => Seq[String],
-    fold: (SparkSession, String, Seq[String], Option[DataFrame]) => Unit) {
+    fold: (Stage.Lease, Seq[String], Option[DataFrame]) => Unit) {
 
   /** Append one batch to the family at `path`, staged and ledgered:
     *  - `batchId = Some(id)`: [[Stage.appendExactlyOnce]] — a replayed
@@ -102,8 +102,9 @@ final case class Family(
 
   /** Rebuild the family at `path` ([[Stage.rebuild]] over its
     * components): under the root lease, clear the ledger, the tombstones
-    * and every component's snapshot pins, then run `build`. */
-  def rebuild(spark: SparkSession, path: String)(build: => Unit): Unit =
+    * and every component's snapshot pins, then run `build` with it. */
+  def rebuild(spark: SparkSession, path: String)
+             (build: Stage.Lease => Unit): Unit =
     Stage.rebuild(spark, path, components(spark, path))(build)
 
   /** Compact the family at `path`: under the root lease, sweep the
@@ -115,13 +116,13 @@ final case class Family(
     * marker. Each component publishes atomically, so a crash
     * mid-compaction leaves the fragmented-but-correct state serving. */
   def compact(spark: SparkSession, path: String): Unit =
-    Stage.withWriterLease(spark, path) {
+    Stage.withWriterLease(spark, path) { lease =>
       val comps = components(spark, path)
-      Stage.sweepUncommitted(spark, path, comps)
+      Stage.sweepUncommitted(lease, path, comps)
       val snap = Stage.tombstoneSnapshot(spark, path)
-      fold(spark, path, comps, snap.map(_._1))
-      Stage.resetTombstones(spark, path, snap.map(_._2).getOrElse(Nil))
-      Stage.compactLedger(spark, path)
+      fold(lease, comps, snap.map(_._1))
+      Stage.resetTombstones(lease, path, snap.map(_._2).getOrElse(Nil))
+      Stage.compactLedger(lease, path)
     }
 
   /** [[compact]] when some component has fragmented past
@@ -158,13 +159,17 @@ final case class Family(
   /** Pin the family at `path` under the snapshot name `pin`
     * ([[Stage.snapshot]] per component, under the root lease). */
   def snapshot(spark: SparkSession, path: String, pin: String): Unit =
-    Stage.withWriterLease(spark, path) {
-      val comps = components(spark, path)
-      // a crashed batch's doomed partials must not be pinned (the pin
-      // records file lists; a later sweep would dangle them)
-      Stage.sweepUncommitted(spark, path, comps)
-      comps.foreach(c => Stage.snapshot(spark, s"$path/$c", pin))
-    }
+    Stage.withWriterLease(spark, path)(snapshot(_, pin))
+
+  /** [[snapshot]] under a root lease the caller holds (a campaign). */
+  private[graft] def snapshot(lease: Stage.Lease, pin: String): Unit = {
+    val path = lease.root
+    val comps = components(lease.spark, path)
+    // a crashed batch's doomed partials must not be pinned (the pin
+    // records file lists; a later sweep would dangle them)
+    Stage.sweepUncommitted(lease, path, comps)
+    comps.foreach(c => Stage.snapshot(lease, s"$path/$c", pin))
+  }
 
   /** The components at `path` that do NOT carry the pin `pin`. */
   private[graft] def unpinned(spark: SparkSession, path: String,
@@ -177,14 +182,18 @@ final case class Family(
     * Throws IllegalArgumentException naming the unpinned components and
     * the path when any component lacks the pin — nothing restored. */
   def restore(spark: SparkSession, path: String, pin: String): Unit =
-    Stage.withWriterLease(spark, path) {
-      val missing = unpinned(spark, path, pin)
-      require(missing.isEmpty,
-        s"snapshot '$pin' does not pin component(s) " +
-          s"${missing.mkString(", ")} of $path — nothing restored")
-      components(spark, path).foreach(c =>
-        Stage.restoreSnapshot(spark, s"$path/$c", pin))
-    }
+    Stage.withWriterLease(spark, path)(restore(_, pin))
+
+  /** [[restore]] under a root lease the caller holds. */
+  private[graft] def restore(lease: Stage.Lease, pin: String): Unit = {
+    val (spark, path) = (lease.spark, lease.root)
+    val missing = unpinned(spark, path, pin)
+    require(missing.isEmpty,
+      s"snapshot '$pin' does not pin component(s) " +
+        s"${missing.mkString(", ")} of $path — nothing restored")
+    components(spark, path).foreach(c =>
+      Stage.restoreSnapshot(lease, s"$path/$c", pin))
+  }
 
   /** Release the pin `pin` ([[Stage.dropSnapshot]] per component).
     * Idempotent: an unknown name is a no-op. */
@@ -193,9 +202,11 @@ final case class Family(
       Stage.dropSnapshot(spark, s"$path/$c", pin))
 
   /** Reclaim the stale versions at `path` now ([[Stage.vacuum]] per
-    * component). */
+    * component, under the root lease). */
   def vacuum(spark: SparkSession, path: String): Unit =
-    components(spark, path).foreach(c => Stage.vacuum(spark, s"$path/$c"))
+    Stage.withWriterLease(spark, path) { lease =>
+      components(spark, path).foreach(c => Stage.vacuum(lease, s"$path/$c"))
+    }
 
   /** [[Stage.healthReport]] over the family's components at `path`. */
   def health(spark: SparkSession, path: String): DataFrame =

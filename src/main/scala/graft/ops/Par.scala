@@ -9,12 +9,10 @@ package graft.ops
   * next pipeline's tasks back-fill executor cores freed by the current
   * one's straggler tail, instead of leaving the machine idle.
   *
-  * Scope rules, enforced by the call sites, not this helper:
-  *  - thunks must touch DISJOINT persisted roots ([[Stage]] leases are
-  *    per-root and re-entrancy is thread-local, so a lease the CALLER
-  *    already holds is invisible to the pool thread — never dispatch
-  *    work under a held lease);
-  *  - thunks must not depend on one another's side effects.
+  * Thunks must not depend on one another's side effects. A thunk that
+  * writes under an index root captures its caller's [[Stage.Lease]] (the
+  * text fold's concurrent publishes): the lease is a value, so the pool
+  * thread's flips are fenced against the caller's root lease.
   *
   * The first failing thunk's exception propagates (unwrapped); remaining
   * threads are interrupted best-effort, matching the sequential form's

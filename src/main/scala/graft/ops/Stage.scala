@@ -41,9 +41,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `tombstones/` table and components not built yet; they resolve to
   * themselves.
   *
-  * Single-writer contract (unchanged from the old design): concurrent
-  * maintenance ops on one index race; in-flight lazy scans of a version
-  * that a later publish GC'd fail like any scan of compacted-away files.
+  * Single-writer contract: an index ROOT has one writer lease,
+  * [[withWriterLease]], and it is the only one. It hands its body a
+  * [[Lease]] value, and every function here that writes under the root
+  * (the publishes, pins, restores, vacuum, sweep, tombstone reset and
+  * ledger fold) takes that value instead of a session, requires its
+  * directory to be under the lease root and fences each commit point
+  * against the root's lock. A lease is not re-entrant: a second acquire
+  * of a root this JVM holds fails like any concurrent maintenance op.
+  * Work a lease holder dispatches to other threads ([[Par]]) carries the
+  * lease with it. In-flight lazy scans of a version that a later publish
+  * GC'd fail like any scan of compacted-away files.
   */
 object Stage {
 
@@ -132,21 +140,22 @@ object Stage {
       .map(v => new Path(rootPath, v).toString)
   }
 
-  /** Atomically replace the contents of `root`: `write` receives a fresh
-    * version directory to populate, and only after it returns is the
-    * `_current` pointer flipped there. If `write` throws, the pointer is
-    * untouched and the old contents keep serving.
+  /** Atomically replace the contents of `root`, a directory under the
+    * lease root: `write` receives a fresh version directory to populate,
+    * and only after it returns is the `_current` pointer flipped there.
+    * If `write` throws, the pointer is untouched and the old contents
+    * keep serving.
     */
-  def publishRewrite(spark: SparkSession, root: String)
+  def publishRewrite(lease: Lease, root: String)
                     (write: String => Unit): Unit =
-    publishImpl(spark, root, grace = true)(write)
+    publishImpl(lease, root, grace = true)(write)
 
   /** The common case: replace a directory's contents with a DataFrame.
     * The plan may read from the directory being replaced — it scans the
     * old version while the new one is written next to it.
     */
-  def publishRewrite(spark: SparkSession, root: String, df: DataFrame): Unit =
-    publishRewrite(spark, root)(versionDir =>
+  def publishRewrite(lease: Lease, root: String, df: DataFrame): Unit =
+    publishRewrite(lease, root)(versionDir =>
       df.write.mode("overwrite").parquet(versionDir))
 
   /** [[publishRewrite]] for REBUILDS — the pointer flips with NO previous
@@ -162,57 +171,56 @@ object Stage {
     * `resolvePrevious` fails loudly until the first POST-rebuild
     * maintenance op establishes a same-corpus history.
     */
-  def publishRebuild(spark: SparkSession, root: String)
+  def publishRebuild(lease: Lease, root: String)
                     (write: String => Unit): Unit =
-    publishImpl(spark, root, grace = false)(write)
+    publishImpl(lease, root, grace = false)(write)
 
   /** [[publishRebuild]] with a DataFrame. */
-  def publishRebuild(spark: SparkSession, root: String, df: DataFrame): Unit =
-    publishRebuild(spark, root)(versionDir =>
+  def publishRebuild(lease: Lease, root: String, df: DataFrame): Unit =
+    publishRebuild(lease, root)(versionDir =>
       df.write.mode("overwrite").parquet(versionDir))
 
-  private def publishImpl(spark: SparkSession, root: String, grace: Boolean)
-                         (write: String => Unit): Unit =
-    withWriterLease(spark, root) {
-      val rootPath = new Path(root)
-      val fs = fsFor(spark, rootPath)
-      fs.mkdirs(rootPath)
-      val existing = fs.listStatus(rootPath).map(_.getPath.getName)
-      val next = existing.filter(VersionRe.matches)
-        .map(_.drop(1).toInt).foldLeft(0)(math.max) + 1
-      val version = f"v$next%08d"
-      val versionPath = new Path(rootPath, version)
-      write(versionPath.toString)
-      // REWRITES refuse to flip onto an UNREADABLE version: an
-      // all-rows-deleted PARTITIONED rewrite writes zero files (no
-      // schema for any later scan) — the old state must keep serving
-      // and the caller must hear about it, not discover a dead index at
-      // the next read. (A non-partitioned empty DataFrame still writes
-      // one schema-carrying parquet file, so legitimate empty states
-      // pass.) REBUILDS are exempt: stream-born SHELLS deliberately
-      // birth an empty partitioned component (graceless, before the
-      // first exactly-once batch lands files into it) — there is no
-      // previous state a flip could strand.
-      if (grace &&
-          (!fs.exists(versionPath) || dataEntries(fs, versionPath).isEmpty)) {
-        fs.delete(versionPath, true)
-        throw new IllegalStateException(
-          s"publish into $root produced no data files — refusing to flip " +
-            "the pointer onto an unreadable empty version (the previous " +
-            "state keeps serving). If the component is genuinely empty " +
-            "now, drop or rebuild it instead of publishing emptiness")
-      }
-      // fencing: a wrongly-reclaimed (zombie) holder must not flip the
-      // pointer over the reclaimer's state — reject at the commit point.
-      // commitId = the version being flipped to: two contenders racing
-      // one publish list the same existing versions and compute the SAME
-      // next version, so the strict primitive's fence collides exactly
-      // when it must. (A crashed flip leaves the version DIR behind, so
-      // a later retry computes a fresh version — no stale-fence hazard.)
-      assertLeaseStillHeld(spark, root, s"flip-$version")
-      flipPointer(spark, fs, rootPath, version, grace)
-      gcStale(fs, rootPath)
+  private def publishImpl(lease: Lease, root: String, grace: Boolean)
+                         (write: String => Unit): Unit = {
+    val (rootPath, fs) = lease.dir(root)
+    fs.mkdirs(rootPath)
+    val existing = fs.listStatus(rootPath).map(_.getPath.getName)
+    val next = existing.filter(VersionRe.matches)
+      .map(_.drop(1).toInt).foldLeft(0)(math.max) + 1
+    val version = f"v$next%08d"
+    val versionPath = new Path(rootPath, version)
+    write(versionPath.toString)
+    // REWRITES refuse to flip onto an UNREADABLE version: an
+    // all-rows-deleted PARTITIONED rewrite writes zero files (no
+    // schema for any later scan) — the old state must keep serving
+    // and the caller must hear about it, not discover a dead index at
+    // the next read. (A non-partitioned empty DataFrame still writes
+    // one schema-carrying parquet file, so legitimate empty states
+    // pass.) REBUILDS are exempt: stream-born SHELLS deliberately
+    // birth an empty partitioned component (graceless, before the
+    // first exactly-once batch lands files into it) — there is no
+    // previous state a flip could strand.
+    if (grace &&
+        (!fs.exists(versionPath) || dataEntries(fs, versionPath).isEmpty)) {
+      fs.delete(versionPath, true)
+      throw new IllegalStateException(
+        s"publish into $root produced no data files — refusing to flip " +
+          "the pointer onto an unreadable empty version (the previous " +
+          "state keeps serving). If the component is genuinely empty " +
+          "now, drop or rebuild it instead of publishing emptiness")
     }
+    // fencing: a wrongly-reclaimed (zombie) holder must not flip the
+    // pointer over the reclaimer's state — reject at the commit point.
+    // commitId = the component and the version being flipped to: two
+    // contenders racing one publish compute the SAME next version, so
+    // the strict primitive's fence collides exactly when it must, and
+    // sibling components' flips stay apart in the root's `_fence/`. (A
+    // crashed flip leaves the version DIR behind, so a later retry
+    // computes a fresh version — no stale-fence hazard.)
+    lease.assertMayCommit(s"flip-${rootPath.getName}-$version")
+    flipPointer(lease.spark, fs, rootPath, version, grace)
+    gcStale(fs, rootPath)
+  }
 
   /** Make a component root with no pointer a versioned layout: an empty
     * `v00000001` data directory plus the pointer, with no previous line.
@@ -327,36 +335,27 @@ object Stage {
     * files present at pin time. Callers that can see the index root
     * should [[sweepUncommitted]] first ([[Family.snapshot]] does), so a
     * crashed batch's doomed partials are not pinned.
+    *
+    * Under the root `lease`: the pin must land while the version it read
+    * is still within GC grace, and no publish or ingest batch can move
+    * the component between the pointer read and the pin write.
     */
-  def snapshot(spark: SparkSession, dir: String, name: String): Unit = {
+  def snapshot(lease: Lease, dir: String, name: String): Unit = {
     require(name.matches(SnapshotNameRe),
       s"snapshot name '$name' must match $SnapshotNameRe (it names a file)")
-    // under the COMPONENT writer lease: the pin must land while the
-    // version it read is still within GC grace — serializing with this
-    // component's rewrites/compactions makes read-pointer → write-pin
-    // atomic against them. CONTRACT for ledgered indexes: streaming
-    // appends (appendExactlyOnce/publishOnce) hold the INDEX-ROOT
-    // lease, which this component lease does NOT serialize with — a
-    // caller pinning a component of such an index must hold the root
-    // lease too, or the pin can record half of an in-flight batch.
-    // [[Family.snapshot]] does exactly that; go through a family
-    // descriptor rather than calling this raw on a component.
-    withWriterLease(spark, dir) {
-      val rootPath = new Path(dir)
-      val fs = fsFor(spark, rootPath)
-      val live = pointerLines(fs, rootPath).headOption.getOrElse(
-        throw new IllegalStateException(
-          s"$dir has no _current pointer — a snapshot pins a VERSION, and " +
-            "this component has none yet; build the index first"))
-      val versionDir = new Path(rootPath, live)
-      def rel(d: Path, prefix: String): Seq[String] =
-        dataEntries(fs, d).toSeq.flatMap { s =>
-          val n = prefix + s.getPath.getName
-          if (s.isDirectory) rel(s.getPath, n + "/") else Seq(n)
-        }
-      writePin(spark, fs, rootPath, name,
-        (live +: rel(versionDir, "")).mkString("\n"))
-    }
+    val (rootPath, fs) = lease.dir(dir)
+    val live = pointerLines(fs, rootPath).headOption.getOrElse(
+      throw new IllegalStateException(
+        s"$dir has no _current pointer — a snapshot pins a VERSION, and " +
+          "this component has none yet; build the index first"))
+    val versionDir = new Path(rootPath, live)
+    def rel(d: Path, prefix: String): Seq[String] =
+      dataEntries(fs, d).toSeq.flatMap { s =>
+        val n = prefix + s.getPath.getName
+        if (s.isDirectory) rel(s.getPath, n + "/") else Seq(n)
+      }
+    writePin(lease.spark, fs, rootPath, name,
+      (live +: rel(versionDir, "")).mkString("\n"))
   }
 
   /** Write `_snapshots/<name>` ([[replaceFile]]): a re-pin or a restored
@@ -372,14 +371,13 @@ object Stage {
     * the capture half of [[Campaign]]'s re-pin rollback: a failed
     * multi-member campaign over an EXISTING name must put back the pin
     * contents it overwrote, not drop them (dropping would destroy the
-    * previous campaign's untouched pins). Caller must hold the root
-    * lease for the read→overwrite→restore window to be atomic. */
-  private[graft] def rawSnapshotPin(spark: SparkSession, dir: String,
+    * previous campaign's untouched pins). Read under the root `lease`,
+    * which the campaign holds across read→overwrite→restore. */
+  private[graft] def rawSnapshotPin(lease: Lease, dir: String,
                                     name: String): Option[String] = {
     require(name.matches(SnapshotNameRe),
       s"snapshot name '$name' must match $SnapshotNameRe (it names a file)")
-    val rootPath = new Path(dir)
-    val fs = fsFor(spark, rootPath)
+    val (rootPath, fs) = lease.dir(dir)
     val f = new Path(new Path(rootPath, "_snapshots"), name)
     if (!fs.exists(f)) None
     else Some(snapshotLines(fs, f).mkString("\n"))
@@ -390,14 +388,14 @@ object Stage {
     * [[snapshot]] writes a pin. The version the old
     * pin names is still on disk: the caller holds every involved root
     * lease across capture→overwrite→restore, and GC only runs inside a
-    * publish, which those leases exclude. */
-  private[graft] def restoreRawSnapshotPin(spark: SparkSession, dir: String,
+    * publish under one of those leases. */
+  private[graft] def restoreRawSnapshotPin(lease: Lease, dir: String,
                                            name: String,
                                            content: String): Unit = {
     require(name.matches(SnapshotNameRe),
       s"snapshot name '$name' must match $SnapshotNameRe (it names a file)")
-    val rootPath = new Path(dir)
-    writePin(spark, fsFor(spark, rootPath), rootPath, name, content)
+    val (rootPath, fs) = lease.dir(dir)
+    writePin(lease.spark, fs, rootPath, name, content)
   }
 
   /** The version directory a named snapshot pins, or None if the name
@@ -497,46 +495,46 @@ object Stage {
     * the next publish's GC — rerun to converge. Fails loudly on an
     * unknown name or an empty pin.
     */
-  def restoreSnapshot(spark: SparkSession, dir: String, name: String): Unit =
-    withWriterLease(spark, dir) {
-      val (pinnedDir, files) = resolveSnapshotFiles(spark, dir, name)
-        .getOrElse(throw new IllegalArgumentException(
-          s"no snapshot '$name' under $dir — nothing to restore"))
-      if (files.isEmpty) throw new IllegalStateException(
-        s"snapshot '$name' of $dir pinned no data files — the component " +
-          "was empty at pin time; an empty restore would publish an " +
-          "unreadable version")
-      // fidelity on real clusters: ship the driver's Hadoop conf entries
-      // to the copy tasks (fs.defaultFS, object-store credentials…) —
-      // a bare executor-side `new Configuration()` would only see
-      // whatever config files the executor image carries
-      val confEntries = {
-        val it = spark.sparkContext.hadoopConfiguration.iterator()
-        val b = Seq.newBuilder[(String, String)]
-        while (it.hasNext) { val e = it.next(); b += ((e.getKey, e.getValue)) }
-        b.result()
+  def restoreSnapshot(lease: Lease, dir: String, name: String): Unit = {
+    val spark = lease.spark
+    val (pinnedDir, files) = resolveSnapshotFiles(spark, dir, name)
+      .getOrElse(throw new IllegalArgumentException(
+        s"no snapshot '$name' under $dir — nothing to restore"))
+    if (files.isEmpty) throw new IllegalStateException(
+      s"snapshot '$name' of $dir pinned no data files — the component " +
+        "was empty at pin time; an empty restore would publish an " +
+        "unreadable version")
+    // fidelity on real clusters: ship the driver's Hadoop conf entries
+    // to the copy tasks (fs.defaultFS, object-store credentials…) —
+    // a bare executor-side `new Configuration()` would only see
+    // whatever config files the executor image carries
+    val confEntries = {
+      val it = spark.sparkContext.hadoopConfiguration.iterator()
+      val b = Seq.newBuilder[(String, String)]
+      while (it.hasNext) { val e = it.next(); b += ((e.getKey, e.getValue)) }
+      b.result()
+    }
+    val prefix = if (pinnedDir.endsWith("/")) pinnedDir else pinnedDir + "/"
+    publishRewrite(lease, dir) { versionDir =>
+      val pairs = files.map { src =>
+        require(src.startsWith(prefix),
+          s"pinned file $src is outside its version directory $pinnedDir")
+        (src, new Path(versionDir, src.stripPrefix(prefix)).toString)
       }
-      val prefix = if (pinnedDir.endsWith("/")) pinnedDir else pinnedDir + "/"
-      publishRewrite(spark, dir) { versionDir =>
-        val pairs = files.map { src =>
-          require(src.startsWith(prefix),
-            s"pinned file $src is outside its version directory $pinnedDir")
-          (src, new Path(versionDir, src.stripPrefix(prefix)).toString)
-        }
-        val slices = math.max(1, math.min(pairs.size,
-          spark.sparkContext.defaultParallelism))
-        spark.sparkContext.parallelize(pairs, slices).foreach {
-          case (src, dst) =>
-            val conf = new org.apache.hadoop.conf.Configuration()
-            confEntries.foreach { case (k, v) => conf.set(k, v) }
-            val s = new Path(src); val t = new Path(dst)
-            if (!org.apache.hadoop.fs.FileUtil.copy(
-                s.getFileSystem(conf), s, t.getFileSystem(conf), t,
-                false, conf))
-              throw new java.io.IOException(s"restore copy $src -> $dst failed")
-        }
+      val slices = math.max(1, math.min(pairs.size,
+        spark.sparkContext.defaultParallelism))
+      spark.sparkContext.parallelize(pairs, slices).foreach {
+        case (src, dst) =>
+          val conf = new org.apache.hadoop.conf.Configuration()
+          confEntries.foreach { case (k, v) => conf.set(k, v) }
+          val s = new Path(src); val t = new Path(dst)
+          if (!org.apache.hadoop.fs.FileUtil.copy(
+              s.getFileSystem(conf), s, t.getFileSystem(conf), t,
+              false, conf))
+            throw new java.io.IOException(s"restore copy $src -> $dst failed")
       }
     }
+  }
 
   /** Release a named snapshot's pin. The pinned version is NOT deleted
     * here — the next publish's GC sweeps it (unless the pointer or
@@ -559,15 +557,13 @@ object Stage {
     * component. Deletes exactly what the next publish's GC would: orphan
     * and superseded versions not named by the pointer (live +
     * previously-live keep their one-cycle reader grace) nor pinned by a
-    * surviving snapshot. Under the writer lease; a no-op on a root
-    * with no pointer (nothing versioned to reclaim).
+    * surviving snapshot. Under the root `lease`; a no-op on a
+    * directory with no pointer (nothing versioned to reclaim).
     */
-  def vacuum(spark: SparkSession, dir: String): Unit =
-    withWriterLease(spark, dir) {
-      val rootPath = new Path(dir)
-      val fs = fsFor(spark, rootPath)
-      if (pointerLines(fs, rootPath).nonEmpty) gcStale(fs, rootPath)
-    }
+  def vacuum(lease: Lease, dir: String): Unit = {
+    val (rootPath, fs) = lease.dir(dir)
+    if (pointerLines(fs, rootPath).nonEmpty) gcStale(fs, rootPath)
+  }
 
   /** The REBUILD boundary every index builder goes through
     * ([[Family.rebuild]]; the set-sim index, which has no family, calls
@@ -586,33 +582,22 @@ object Stage {
     *    versions, so a surviving pin would keep an OLD-corpus version
     *    alive under its name, and a restore would pair it with the new
     *    build's meta.
-    * `components` is evaluated under the lease. The builder's reads and
-    * writes also run under it, so no append, compaction or pin can
-    * interleave with a half-built index.
+    * `components` is evaluated under the lease. The builder receives
+    * the lease and its reads and writes run under it, so no append,
+    * compaction or pin can interleave with a half-built index.
     */
   def rebuild(spark: SparkSession, path: String, components: => Seq[String])
-             (build: => Unit): Unit =
-    withWriterLease(spark, path) {
+             (build: Lease => Unit): Unit =
+    withWriterLease(spark, path) { lease =>
       val fs = fsFor(spark, new Path(path))
       clearLedger(spark, path)
       fs.delete(new Path(s"$path/tombstones"), true)
       components.foreach(c => fs.delete(new Path(s"$path/$c/_snapshots"), true))
-      build
+      build(lease)
     }
 
-  /** Currently-held lease paths of THIS thread (lock key → acquire
-    * token) — makes [[withWriterLease]] reentrant, so a family-level
-    * maintenance op holding the index-root lease can call nested helpers
-    * that also lease without deadlocking on itself. Carrying the TOKEN
-    * (not just the key) is what arms the commit-point fencing check:
-    * [[assertLeaseStillHeld]] can re-read the lock and prove this
-    * thread's acquire is still the live one. */
-  private val heldLeases = new ThreadLocal[Map[String, String]] {
-    override def initialValue(): Map[String, String] = Map.empty
-  }
-
   /** Pluggable COMMIT-POINT fencing primitive (see
-    * [[assertLeaseStillHeld]] for where it fires). Two shipped
+    * [[Lease.assertMayCommit]] for where it fires). Two shipped
     * strategies:
     *
     *  - [[LockReRead]] (the default): re-read the lock file and require
@@ -762,34 +747,6 @@ object Stage {
     }
   }
 
-  /** FENCING check at a publish COMMIT point: if this thread holds (or
-    * believes it holds) the writer lease on `root`, run the installed
-    * [[fencing]] primitive. A holder whose heartbeat starved past the
-    * staleness window may have been WRONGLY RECLAIMED — its lease handle
-    * is then a zombie, and letting its commit proceed would interleave
-    * two writers' publishes on one index. The check turns that residual
-    * hazard from "bounded by the staleness window" into "rejected at the
-    * commit point": the zombie's pointer flip / ledger-marker create
-    * throws loudly, its staged or renamed-but-markerless files are
-    * exactly what the next [[sweepUncommitted]] reverts, and the
-    * reclaimer's state is never mixed with. With the default
-    * [[LockReRead]] a check→rename race of a few milliseconds remains;
-    * [[ExclusiveCommitToken]] narrows it to the atomic fence create when
-    * the call site supplies a `commitId` (the version being flipped /
-    * the ledger marker name — the id two contenders for one commit
-    * SHARE). No-op when this thread holds no lease on `root` (plain
-    * un-leased writes are not fenced).
-    */
-  def assertLeaseStillHeld(spark: SparkSession, root: String,
-                           commitId: String = ""): Unit = {
-    val lock = new Path(new Path(root), "_writer.lock")
-    heldLeases.get.get(lock.toString).foreach { token =>
-      val primitive = Option(fencingOverride.get).getOrElse(fencing)
-      primitive.assertMayCommit(fsFor(spark, lock), new Path(root), lock,
-        token, commitId)
-    }
-  }
-
   /** JVM-global lease owners (lock key → acquire token). Hadoop's
     * LocalFileSystem `create(f, overwrite = false)` is exists-THEN-create
     * — not atomic — so two threads of ONE process (a pin racing a
@@ -804,6 +761,38 @@ object Stage {
   private val jvmLeaseOwners =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
+  /** A held writer lease on the index root `root`: the session, the
+    * root, its `_writer.lock` and this acquire's token. Only
+    * [[withWriterLease]] makes one, for the duration of its body; a
+    * write under the root takes it as a value, so a [[Par]] thunk
+    * commits under the same lease as its caller. */
+  final class Lease private[ops] (val spark: SparkSession, val root: String,
+                                  private[Stage] val lock: Path,
+                                  private[Stage] val token: String) {
+
+    /** `dir` and its filesystem; `dir` must be the root or under it. */
+    private[Stage] def dir(path: String): (Path, FileSystem) = {
+      val (r, d) = (new Path(root), new Path(path))
+      require(d == r || d.toString.startsWith(r.toString.stripSuffix("/") + "/"),
+        s"$path is not under the writer lease's root $root")
+      (d, fsFor(spark, d))
+    }
+
+    /** FENCING check at a COMMIT point (a pointer flip, a ledger marker
+      * create): the installed [[fencing]] primitive against the root's
+      * lock. A holder whose heartbeat starved past the staleness window
+      * may have been WRONGLY RECLAIMED; letting its commit proceed would
+      * interleave two writers' publishes on one index. Rejected here,
+      * the zombie's staged or renamed-but-markerless files are exactly
+      * what the next [[sweepUncommitted]] reverts. [[LockReRead]] leaves
+      * a check→rename race of a few milliseconds; [[ExclusiveCommitToken]]
+      * narrows it to the atomic create of `root/_fence/<commitId>` (the
+      * id two contenders for one commit SHARE). */
+    private[Stage] def assertMayCommit(commitId: String): Unit =
+      Option(fencingOverride.get).getOrElse(fencing).assertMayCommit(
+        fsFor(spark, lock), new Path(root), lock, token, commitId)
+  }
+
   /** Run `body` holding an exclusive writer lease on `path` — the
     * single-writer contract made LOUD instead of assumed. A
     * create-exclusive `_writer.lock` file guards the critical section:
@@ -814,8 +803,8 @@ object Stage {
     * exception inside `body`; only a killed JVM leaves it behind, and a
     * lock older than `staleAfterMs` is presumed crashed and RECLAIMED
     * (delete + one create-exclusive retry — two simultaneous reclaimers
-    * race on the atomic create and exactly one wins). Reentrant per
-    * thread, so nested leases on the same path pass through.
+    * race on the atomic create and exactly one wins). NOT re-entrant: a
+    * nested acquire of a held root fails with the contention error.
     *
     * The atomic create is the same primitive the exactly-once ledger
     * markers rely on (atomic on HDFS and local filesystems; on raw
@@ -841,12 +830,12 @@ object Stage {
     * third writer mid-fold.
     */
   def withWriterLease[T](spark: SparkSession, path: String,
-                         staleAfterMs: Long = DefaultStaleAfterMs)(body: => T): T = {
+                         staleAfterMs: Long = DefaultStaleAfterMs)
+                        (body: Lease => T): T = {
     val rootPath = new Path(path)
     val fs = fsFor(spark, rootPath)
     val lock = new Path(rootPath, "_writer.lock")
     val key = lock.toString
-    if (heldLeases.get.contains(key)) return body
     // the nonce makes this ACQUIRE's lock content unique, so release can
     // tell "still my lock" from "a reclaimer's fresh lock" (pid+host+time
     // alone could collide across a same-process reclaim in one millisecond)
@@ -916,11 +905,9 @@ object Stage {
             "forbids concurrent maintenance on one index; retry after it " +
             "finishes, or delete the lock if its holder is known dead")
     }
-    heldLeases.set(heldLeases.get + (key -> token))
     val refresher = startLeaseRefresher(fs, lock, token, staleAfterMs)
-    try body
+    try body(new Lease(spark, path, lock, token))
     finally {
-      heldLeases.set(heldLeases.get - key)
       refresher.foreach { case (t, stop) => stop.countDown(); t.join(1000) }
       releaseIfOwner(fs, lock, token)
       jvmLeaseOwners.remove(key, token)
@@ -1110,7 +1097,7 @@ object Stage {
                            prefix: String, committed: => Boolean,
                            components: => Seq[String])
                           (stage: String => Unit): Unit =
-    if (!committed) withWriterLease(spark, path) {
+    if (!committed) withWriterLease(spark, path) { lease =>
       if (!committed) {
         val fs = fsFor(spark, new Path(path))
         val staging = s"$path/_staging/$id"
@@ -1129,7 +1116,7 @@ object Stage {
         // fencing: a zombie holder's marker create is the durability
         // commit — reject it if the lease was reclaimed mid-commit (the
         // renamed files are then markerless and sweep-revertible)
-        assertLeaseStillHeld(spark, path, id)
+        lease.assertMayCommit(id)
         val marker = new Path(s"$path/_ledger/$id")
         fs.mkdirs(marker.getParent)
         fs.create(marker, false).close() // atomic: the commit is published
@@ -1153,13 +1140,12 @@ object Stage {
     * Also deletes `_staging`: an op or batch that failed and is never
     * retried under its id (every failed fresh-id append) leaves its
     * staging directory there, and nothing else would ever remove it.
-    * Relies on the single-writer contract — every caller holds the root
-    * lease, so no publish is in flight while a maintenance op runs.
+    * Under the root `lease`, so no publish is in flight while it runs.
     */
-  def sweepUncommitted(spark: SparkSession, path: String,
+  def sweepUncommitted(lease: Lease, path: String,
                        components: Seq[String]): Unit = {
+    val (_, fs) = lease.dir(path)
     val ledger = new Path(s"$path/_ledger")
-    val fs = fsFor(spark, ledger)
     fs.delete(new Path(s"$path/_staging"), true)
     // ONE ledger listing up front: the per-file committed checks below
     // are set lookups, not exists() RPCs — a fragmented index can carry
@@ -1181,7 +1167,7 @@ object Stage {
         case _ => ()
       }
     }
-    components.foreach(c => sweep(new Path(resolve(spark, s"$path/$c"))))
+    components.foreach(c => sweep(new Path(resolve(lease.spark, s"$path/$c"))))
   }
 
   /** Op ids with `o<opId>-*` files in some component's live directory but
@@ -1323,11 +1309,11 @@ object Stage {
     * serves) return. Safe at every crash point: the fold physically
     * removed the consumed keys' rows first, so a crash that loses the
     * `_consumed` record merely re-reads stale keys whose anti-joins are
-    * no-ops until the next fold retires them. */
-  def resetTombstones(spark: SparkSession, path: String,
+    * no-ops until the next fold retires them. Under the root `lease`. */
+  def resetTombstones(lease: Lease, path: String,
                       consumed: Seq[Path]): Unit = {
-    val tombDir = new Path(resolve(spark, s"$path/tombstones"))
-    val fs = fsFor(spark, tombDir)
+    val (_, fs) = lease.dir(path)
+    val tombDir = new Path(resolve(lease.spark, s"$path/tombstones"))
     if (!fs.exists(tombDir)) return
     val expired = consumedNames(fs, tombDir) // grace cycle over
     if (expired.nonEmpty) {
@@ -1338,7 +1324,7 @@ object Stage {
       }
       sweep(tombDir)
     }
-    replaceFile(spark, fs, new Path(tombDir, "_consumed"),
+    replaceFile(lease.spark, fs, new Path(tombDir, "_consumed"),
       consumed.map(_.getName).mkString("\n"))
   }
 
@@ -1363,12 +1349,13 @@ object Stage {
     * Crash-safe in the ledger's own style: the high marker is created
     * (atomic file create) BEFORE the folded markers are deleted, so a
     * crash mid-sweep leaves extra markers that the next compaction
-    * removes — never a missing one. Called by every family's `compact*`,
-    * so one maintenance op bounds both data and ledger fragmentation.
+    * removes — never a missing one. Called by [[Family.compact]] under
+    * the root `lease`, so one maintenance op bounds both data and ledger
+    * fragmentation.
     */
-  def compactLedger(spark: SparkSession, path: String): Unit = {
+  def compactLedger(lease: Lease, path: String): Unit = {
+    val (_, fs) = lease.dir(path)
     val ledger = new Path(s"$path/_ledger")
-    val fs = fsFor(spark, ledger)
     if (!fs.exists(ledger)) return
     val entries = fs.listStatus(ledger).map(_.getPath)
     val high = highWaterIn(entries.map(_.getName), includeBatch = true)
@@ -1419,10 +1406,10 @@ object Stage {
     * ([[pendingOps]] — nonzero means a crashed publishOnce needs its
     * retry BEFORE the next compaction) stamped on every row, plus the
     * component's pinned-snapshot count (each pin holds a full version's
-    * storage until dropped), plus the WRITER LOCK in flight, if any:
-    * holder line, age, and the fraction of the default staleness window
-    * consumed (`writer_lock_*` — the component's own lock when one is
-    * held there, else the root's family-wide lock; a fraction nearing
+    * storage until dropped), plus the root's WRITER LEASE in flight, if
+    * any: holder line, age, and the fraction of the default staleness
+    * window consumed (`writer_lock_*`, the same on every row: components
+    * carry no lock of their own; a fraction nearing
     * 1.0 means a live op is about to be treated as crashed and
     * reclaimed, a stuck or abandoned op is visible here instead of
     * requiring a filesystem look). Metadata-only
@@ -1440,7 +1427,10 @@ object Stage {
       val fs = fsFor(spark, ledger)
       if (!fs.exists(ledger)) 0 else fs.listStatus(ledger).length
     }
-    val rootLock = lockInfo(fsFor(spark, new Path(path)), new Path(path))
+    val (holder, ageMs) = lockInfo(fsFor(spark, new Path(path)), new Path(path))
+      .getOrElse(("", -1L))
+    val staleFrac =
+      if (ageMs < 0) 0.0 else ageMs.toDouble / DefaultStaleAfterMs
     val tombFiles = {
       val t = new Path(resolve(spark, s"$path/tombstones"))
       val fs = fsFor(spark, t)
@@ -1480,12 +1470,6 @@ object Stage {
       // snapshot pins hold full version copies — storage an operator
       // must SEE to know to drop ([[snapshot]]'s accumulation caveat)
       val nPinned = snapshotVersions(fs, root).size
-      // a lock held on THIS component (a publish in flight) wins over
-      // the root's family-wide lock (ingest/snapshot/sweep in flight)
-      val (holder, ageMs) = lockInfo(fs, root).orElse(rootLock)
-        .getOrElse(("", -1L))
-      val staleFrac =
-        if (ageMs < 0) 0.0 else ageMs.toDouble / DefaultStaleAfterMs
       (c, lines.headOption.getOrElse(""), nVersions, nFiles, nBytes,
         ledgerEntries, tombFiles, uncommittedOps, nPinned,
         holder, ageMs, staleFrac)

@@ -83,23 +83,33 @@ object Probe {
     println(s"== final adaptive plan for $name ==")
     println(last.result._1.queryExecution.executedPlan.toString)
     println(f"[probe] $name wall=${last.wall}%.2fs jobs=${last.jobs.size}%d")
-    // a job's gap is the driver time since every earlier job ended
-    val ends = last.jobs.scanLeft(0L)((e, j) => math.max(e, j.end))
-    val gaps = last.jobs.zip(ends).map { case (j, e) =>
-      if (e > 0) j.start - e else 0L }
-    last.jobs.zip(gaps).foreach { case (j, gap) =>
+    val gaps = gapsBefore(last.jobs)
+    last.jobs.zip(gaps).foreach { case (j, (gap, overlap)) =>
       println(f"[probe]   job ${j.id}%4d ${(j.end - j.start) / 1e3}%7.2fs " +
-        f"gapBefore=${gap / 1e3}%6.2fs  ${j.site}%s  ${j.ops}%s")
+        f"gapBefore=${gap / 1e3}%6.2fs" +
+        (if (overlap > 0) f" overlap=${overlap / 1e3}%.2fs" else "") +
+        s"  ${j.site}  ${j.ops}")
     }
     val covered = last.jobs.map(j => j.end - j.start).sum
     println(f"[probe] covered=${covered / 1e3}%.2fs " +
-      f"gaps=${gaps.filter(_ > 0).sum / 1e3}%.2fs (driver-side) of " +
+      f"gaps=${gaps.map(_._1).sum / 1e3}%.2fs (driver-side) of " +
       f"wall=${last.wall}%.2fs")
     println("[probe] by site:")
     last.jobs.groupBy(_.key).map { case (s, js) =>
       (s, js.map(j => j.end - j.start).sum, js.size)
     }.toSeq.sortBy(-_._2).take(25).foreach { case (s, ms, n) =>
       println(f"[probe]   ${ms / 1e3}%7.2fs n=$n%3d  $s%s")
+    }
+  }
+
+  /** Each job's (gap, overlap) in ms, jobs in start order: the driver
+    * time since every earlier job ended, or, for a job AQE starts while
+    * an earlier one still runs, gap 0 and the time it overlaps. */
+  def gapsBefore(jobs: Seq[Job]): Seq[(Long, Long)] = {
+    val ends = jobs.scanLeft(0L)((e, j) => math.max(e, j.end))
+    jobs.zip(ends).map { case (j, e) =>
+      val d = if (e > 0) j.start - e else 0L
+      (math.max(d, 0L), math.max(-d, 0L))
     }
   }
 

@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.ext.{Campaign, Corpus, Dedup, Graph, Search}
-import graft.ops.{Stage, Tables}
+import graft.ops.Tables
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -384,7 +384,8 @@ object ScaleProbe {
           fs.create(new Path(ledger, s"batch-$i"), false).close())
       }
       timed(s"ledger-list-$nMarkers-markers") { fs.listStatus(ledger).length }
-      timed("ledger-fold(compactLedger)") { Stage.compactLedger(spark, root) }
+      timed("ledger-fold(compact)") { graft.ops.Family("ledger",
+        (_, _) => Nil, (_, _, _) => ()).compact(spark, root) }
       timed("ledger-list-folded") { fs.listStatus(ledger).length }
     }
 

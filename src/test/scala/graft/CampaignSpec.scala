@@ -178,8 +178,8 @@ class CampaignSpec extends AnyFunSuite {
     assert(Stage.resolveSnapshot(spark, s"$mani/docs", "rel").isEmpty)
     assert(Stage.resolveSnapshot(spark, s"$mani/bands", "rel").isEmpty)
     // no leases left behind either — the next op acquires freely
-    Stage.withWriterLease(spark, text) { () }
-    Stage.withWriterLease(spark, mani) { () }
+    Stage.withWriterLease(spark, text) { _ => () }
+    Stage.withWriterLease(spark, mani) { _ => () }
   }
 
   test("a failed RE-pin restores the previous campaign instead of destroying it") {

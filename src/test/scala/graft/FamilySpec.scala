@@ -33,6 +33,9 @@ import scala.jdk.CollectionConverters._
   * a rebuild is the lineage boundary. It writes every directory born
   * versioned, clears the ledger, staging and tombstones, drops every
   * pin, and is refused while another writer holds the root lease.
+  *
+  * Lints over `src/main` keep the write and build halves, and the one
+  * writer lease per index root, from growing back per-family copies.
   */
 class FamilySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -211,7 +214,8 @@ class FamilySpec extends AnyFunSuite {
     val comps = r.components(p)
     r.family match {
       case Some(f) => f.snapshot(spark, p, "old")
-      case None => comps.foreach(c => Stage.snapshot(spark, s"$p/$c", "old"))
+      case None => Stage.withWriterLease(spark, p)(lease =>
+        comps.foreach(c => Stage.snapshot(lease, s"$p/$c", "old")))
     }
     Stage.appendExactlyOnce(spark, p, 0L, Nil)(_ => ())
     fs.mkdirs(new Path(s"$p/_staging/batch-9/${comps.head}"))
@@ -223,7 +227,7 @@ class FamilySpec extends AnyFunSuite {
     // and changes nothing
     val held = new java.util.concurrent.CountDownLatch(1)
     val release = new java.util.concurrent.CountDownLatch(1)
-    val holder = new Thread(() => Stage.withWriterLease(spark, p) {
+    val holder = new Thread(() => Stage.withWriterLease(spark, p) { _ =>
       held.countDown(); release.await()
     })
     holder.start()
@@ -377,7 +381,7 @@ class FamilySpec extends AnyFunSuite {
   for (batchId <- Seq(None, Some(7L))) test(s"Family.append(batchId = " +
       s"$batchId): a stage that fails after one component publishes " +
       "nothing; the retry publishes whole") {
-    val fam = Family("two_part", (_, _) => Seq("a", "b"), (_, _, _, _) => ())
+    val fam = Family("two_part", (_, _) => Seq("a", "b"), (_, _, _) => ())
     val p = s"target/graft-test-family-append-${batchId.isDefined}"
     val fs = new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new Path(p), true)
@@ -468,6 +472,39 @@ class FamilySpec extends AnyFunSuite {
     assert(inPlace.isEmpty, "directories written in place (publish them " +
       "with Stage.publishRebuild inside Family.rebuild): " +
       inPlace.map(_._1).mkString(", "))
+  }
+
+  test("src/main takes one writer lease per index root and never re-enters it") {
+    // a write under an index root takes the root's Lease as a value: a
+    // withWriterLease call anywhere else is a second lock level (a
+    // component lease) or a re-entry, and a ThreadLocal in Stage is the
+    // thread-bound re-entrancy the value replaced
+    val main = sources("src/main/scala")
+    val leaseOwners = Set("graft/ops/Stage.scala", "graft/ops/Family.scala",
+      "graft/ext/Campaign.scala")
+    val rootEntryPoints = Set("Search.scala" -> "savePositionalIndex",
+      "Search.scala" -> "enablePositionalIndex",
+      "DedupSetSim.scala" -> "deleteContentFromSetSimIndex")
+    val DefRe = """def\s+(\w+)""".r
+    val stray = main.filterNot(f =>
+      leaseOwners.exists(o => f.toString.endsWith(o))).flatMap { f =>
+      val text = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+      """\bwithWriterLease\s*\(""".r.findAllMatchIn(text).map { m =>
+        val enclosing = DefRe.findAllMatchIn(text.take(m.start))
+          .map(_.group(1)).toSeq.lastOption.getOrElse("")
+        (f.getFileName.toString, enclosing,
+          s"$f:${text.take(m.start).count(_ == '\n') + 1}")
+      }
+    }.filterNot { case (file, fn, _) => rootEntryPoints((file, fn)) }
+    assert(stray.isEmpty, "writer leases taken outside Stage, Family, " +
+      "Campaign and the root-level entry points (take the caller's " +
+      s"Stage.Lease instead): ${stray.map(_._3).mkString(", ")}")
+    val stage = main.filter(_.toString.endsWith("graft/ops/Stage.scala"))
+    assert(stage.size == 1)
+    val threadLocals = hits(stage, """.*\bnew\s+ThreadLocal\b.*""".r)
+      .filterNot(_._2.contains("fencingOverride"))
+    assert(threadLocals.isEmpty, "thread-bound lease state in Stage: " +
+      threadLocals.map(_._1).mkString(", "))
   }
 
   test("lm: At.Previous is rejected — the LM reverts by negated delta") {

@@ -5,6 +5,8 @@ import graft.ops.{Family, Stage}
 import org.apache.hadoop.fs.Path
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.jdk.CollectionConverters._
+
 /** The atomic-publish contract of [[graft.ops.Stage]]: a rewrite either
   * fully publishes (pointer flip) or leaves the old contents serving —
   * there is no window where a crash loses the live data. Exercised at the
@@ -26,15 +28,28 @@ class StageSpec extends AnyFunSuite {
   private def children(dir: String): Set[String] =
     fs(dir).listStatus(new Path(dir)).map(_.getPath.getName).toSet
 
+  /** Run `f` under the writer lease of `root`. */
+  private def leased[T](root: String)(f: Stage.Lease => T): T =
+    Stage.withWriterLease(spark, root)(f)
+
+  /** Replace `root`'s lock with another writer's token: the reclaim a
+    * holder whose heartbeat starved past the staleness window suffers. */
+  private def imposterLock(root: String, token: String): Unit = {
+    val lock = new Path(s"$root/_writer.lock")
+    fs(root).delete(lock, false)
+    val out = fs(root).create(lock, false)
+    try out.write(token.getBytes("UTF-8")) finally out.close()
+  }
+
   test("a crash between the version write and the flip leaves the old data serving") {
     val root = "target/graft-test-stage-crash"
     fs(root).delete(new Path(root), true)
-    Stage.publishRebuild(spark, root, Seq(1L, 2L).toDF("v")) // → v1
+    leased(root)(Stage.publishRebuild(_, root, Seq(1L, 2L).toDF("v"))) // → v1
     val boom = intercept[RuntimeException] {
-      Stage.publishRewrite(spark, root) { versionDir =>
+      leased(root)(Stage.publishRewrite(_, root) { versionDir =>
         Seq(9L).toDF("v").write.parquet(versionDir) // new version fully written
         throw new RuntimeException("crash before flip")
-      }
+      })
     }
     assert(boom.getMessage == "crash before flip")
     // pointer untouched: still v1, still the old rows
@@ -43,7 +58,7 @@ class StageSpec extends AnyFunSuite {
     assert(children(root).contains("v00000002")) // the crashed version
     // a later successful publish supersedes and GCs the orphan version;
     // the old live version gets its one-cycle grace
-    Stage.publishRewrite(spark, root, Seq(7L).toDF("v")) // → v3
+    leased(root)(Stage.publishRewrite(_, root, Seq(7L).toDF("v"))) // → v3
     assert(values(root) == Set(7L))
     assert(children(root) == Set("_current", "v00000001", "v00000003"))
   }
@@ -52,13 +67,13 @@ class StageSpec extends AnyFunSuite {
     val root = "target/graft-test-stage-prev"
     fs(root).delete(new Path(root), true)
     Seq(1L).toDF("v").write.parquet(root)
-    Stage.publishRewrite(spark, root, Seq(2L).toDF("v")) // → v1 live
-    Stage.publishRewrite(spark, root, Seq(3L).toDF("v")) // → v2 live, v1 spared
+    leased(root)(Stage.publishRewrite(_, root, Seq(2L).toDF("v"))) // → v1 live
+    leased(root)(Stage.publishRewrite(_, root, Seq(3L).toDF("v"))) // → v2 live, v1 spared
     assert(children(root) == Set("_current", "v00000001", "v00000002"))
     // an in-flight scan that resolved v1 before the flip still reads it
     assert(spark.read.parquet(s"$root/v00000001")
       .collect().map(_.getLong(0)).toSet == Set(2L))
-    Stage.publishRewrite(spark, root, Seq(4L).toDF("v")) // → v3, v1 swept
+    leased(root)(Stage.publishRewrite(_, root, Seq(4L).toDF("v"))) // → v3, v1 swept
     assert(children(root) == Set("_current", "v00000002", "v00000003"))
     assert(values(root) == Set(4L))
   }
@@ -67,14 +82,14 @@ class StageSpec extends AnyFunSuite {
     val root = "target/graft-test-stage-resolveprev"
     fs(root).delete(new Path(root), true)
     assert(Stage.resolvePrevious(spark, root).isEmpty) // nothing built
-    Stage.publishRebuild(spark, root, Seq(1L).toDF("v")) // → v1
+    leased(root)(Stage.publishRebuild(_, root, Seq(1L).toDF("v"))) // → v1
     // a build has no snapshot history at all
     assert(Stage.resolvePrevious(spark, root).isEmpty)
-    Stage.publishRewrite(spark, root, Seq(2L).toDF("v")) // → v2, v1 spared
+    leased(root)(Stage.publishRewrite(_, root, Seq(2L).toDF("v"))) // → v2, v1 spared
     assert(Stage.resolvePrevious(spark, root).contains(s"$root/v00000001"))
     assert(spark.read.parquet(Stage.resolvePrevious(spark, root).get)
       .collect().map(_.getLong(0)).toSet == Set(1L))
-    Stage.publishRewrite(spark, root, Seq(3L).toDF("v")) // → v3, v1 swept
+    leased(root)(Stage.publishRewrite(_, root, Seq(3L).toDF("v"))) // → v3, v1 swept
     assert(Stage.resolvePrevious(spark, root).contains(s"$root/v00000002"))
     assert(!children(root).contains("v00000001"))
   }
@@ -83,12 +98,12 @@ class StageSpec extends AnyFunSuite {
     val root = "target/graft-test-stage-crash2"
     fs(root).delete(new Path(root), true)
     Seq(1L).toDF("v").write.parquet(root)
-    Stage.publishRewrite(spark, root, Seq(2L).toDF("v")) // → v00000001
+    leased(root)(Stage.publishRewrite(_, root, Seq(2L).toDF("v"))) // → v00000001
     intercept[RuntimeException] {
-      Stage.publishRewrite(spark, root) { versionDir =>
+      leased(root)(Stage.publishRewrite(_, root) { versionDir =>
         Seq(3L).toDF("v").write.parquet(versionDir)
         throw new RuntimeException("crash")
-      }
+      })
     }
     assert(Stage.resolve(spark, root) == s"$root/v00000001")
     assert(values(root) == Set(2L))
@@ -109,12 +124,12 @@ class StageSpec extends AnyFunSuite {
     // but before the pointer flip — exactly the old swapRewrite's data-loss
     // window
     intercept[RuntimeException] {
-      Stage.publishRewrite(spark, s"$idx/postings") { versionDir =>
+      leased(idx)(Stage.publishRewrite(_, s"$idx/postings") { versionDir =>
         spark.read.parquet(Stage.resolve(spark, s"$idx/postings"))
           .where(col("doc_id") =!= 1L)
           .write.parquet(versionDir)
         throw new RuntimeException("crash mid-delete")
-      }
+      })
     }
     assert(serve() == before) // the live index is intact
     // and the retried delete still completes and serves the shrunk corpus
@@ -238,7 +253,7 @@ class StageSpec extends AnyFunSuite {
     // ...a delete service lands doc 2 while the fold runs...
     Search.tombstoneFromTextIndex(spark, idx, Seq(2L).toDF("doc_id"))
     // ...and the reset consumes exactly the snapshot: doc 2 stays pending
-    Stage.resetTombstones(spark, idx, snap._2)
+    leased(idx)(Stage.resetTombstones(_, idx, snap._2))
     assert(Stage.pendingTombstones(spark, idx).get
       .collect().map(_.getLong(0)).toSet == Set(2L))
     // reader grace: the consumed files survive ON DISK one compaction
@@ -248,7 +263,7 @@ class StageSpec extends AnyFunSuite {
       .collect().map(_.getLong(0)).toSet == Set(1L))
     // ...and the NEXT fold's reset physically retires them
     val snap2 = Stage.tombstoneSnapshot(spark, idx).get
-    Stage.resetTombstones(spark, idx, snap2._2)
+    leased(idx)(Stage.resetTombstones(_, idx, snap2._2))
     assert(snap._2.forall(f => !fs(idx).exists(f)))
     assert(Stage.pendingTombstones(spark, idx).isEmpty)
   }
@@ -317,7 +332,7 @@ class StageSpec extends AnyFunSuite {
         Seq((10L + b, s"tok$b alpha")).toDF("doc_id", "text"), idx, batchId = b)
     def ledger = children(s"$idx/_ledger")
     assert(ledger == (0L to 3L).map(b => s"batch-$b").toSet)
-    Stage.compactLedger(spark, idx)
+    leased(idx)(Stage.compactLedger(_, idx))
     assert(ledger == Set("high-3"))
     // a replayed FOLDED batch is still a no-op (id ≤ high-water)
     val before = Search.conjunctiveSearch(spark, idx, Seq("alpha")).count()
@@ -329,7 +344,7 @@ class StageSpec extends AnyFunSuite {
       Seq((14L, "tok4 alpha")).toDF("doc_id", "text"), idx, batchId = 4L)
     assert(Search.conjunctiveSearch(spark, idx, Seq("alpha")).count() == before + 1)
     assert(ledger == Set("high-3", "batch-4"))
-    Stage.compactLedger(spark, idx)
+    leased(idx)(Stage.compactLedger(_, idx))
     assert(ledger == Set("high-4"))
   }
 
@@ -375,14 +390,18 @@ class StageSpec extends AnyFunSuite {
   test("writer lease: a second concurrent maintenance op fails loudly") {
     val root = "target/graft-test-stage-lease"
     fs(root).delete(new Path(root), true)
-    Stage.withWriterLease(spark, root) {
-      // same thread re-enters (a family op calling nested helpers)...
-      Stage.withWriterLease(spark, root) { assert(true) }
-      // ...but a SECOND writer (simulated from another thread — leases
-      // are tracked per thread) is rejected while the first holds
+    Stage.withWriterLease(spark, root) { _ =>
+      // the same thread does not re-enter: nested code takes the lease
+      // it was handed instead of acquiring again...
+      val nested = intercept[IllegalStateException] {
+        Stage.withWriterLease(spark, root) { _ => fail("re-entered a held lease") }
+      }
+      assert(nested.getMessage.contains("concurrent maintenance"), s"$nested")
+      // ...and a SECOND writer on another thread is rejected while the
+      // first holds
       var err: Throwable = null
       val t = new Thread(() => {
-        try Stage.withWriterLease(spark, root) { fail("acquired held lease") }
+        try Stage.withWriterLease(spark, root) { _ => fail("acquired held lease") }
         catch { case e: Throwable => err = e }
       })
       t.start(); t.join()
@@ -390,10 +409,10 @@ class StageSpec extends AnyFunSuite {
         err.getMessage.contains("concurrent maintenance"), s"$err")
     }
     // released on exit: the next op acquires freely
-    Stage.withWriterLease(spark, root) { assert(true) }
+    Stage.withWriterLease(spark, root) { _ => assert(true) }
     // and an exception inside the critical section also releases
     intercept[RuntimeException] {
-      Stage.withWriterLease(spark, root) { throw new RuntimeException("boom") }
+      Stage.withWriterLease(spark, root) { _ => throw new RuntimeException("boom") }
     }
     assert(!fs(root).exists(new Path(s"$root/_writer.lock")))
   }
@@ -406,11 +425,11 @@ class StageSpec extends AnyFunSuite {
     fs(root).create(new Path(s"$root/_writer.lock"), false).close()
     // within the staleness window the lock holds...
     intercept[IllegalStateException] {
-      Stage.withWriterLease(spark, root, staleAfterMs = 60 * 1000L) { () }
+      Stage.withWriterLease(spark, root, staleAfterMs = 60 * 1000L) { _ => () }
     }
     // ...past it the lock is presumed dead and reclaimed
     var ran = false
-    Stage.withWriterLease(spark, root, staleAfterMs = 0L) { ran = true }
+    Stage.withWriterLease(spark, root, staleAfterMs = 0L) { _ => ran = true }
     assert(ran)
     assert(!fs(root).exists(new Path(s"$root/_writer.lock")))
     // a lock naming a DEAD same-host pid reclaims immediately — a killed
@@ -419,7 +438,7 @@ class StageSpec extends AnyFunSuite {
     val out = fs(root).create(new Path(s"$root/_writer.lock"), false)
     out.write(s"pid=999999999 host=$host t=0".getBytes("UTF-8")); out.close()
     var ran2 = false
-    Stage.withWriterLease(spark, root) { ran2 = true } // default staleness
+    Stage.withWriterLease(spark, root) { _ => ran2 = true } // default staleness
     assert(ran2)
   }
 
@@ -435,7 +454,7 @@ class StageSpec extends AnyFunSuite {
     val aMayRelease = new java.util.concurrent.CountDownLatch(1)
     val bHolds = new java.util.concurrent.CountDownLatch(1)
     val bMayRelease = new java.util.concurrent.CountDownLatch(1)
-    val a = new Thread(() => Stage.withWriterLease(spark, root) {
+    val a = new Thread(() => Stage.withWriterLease(spark, root) { _ =>
       aHolds.countDown(); aMayRelease.await()
     })
     a.start(); aHolds.await()
@@ -448,7 +467,7 @@ class StageSpec extends AnyFunSuite {
     // A is ALIVE in this JVM, so only the age path can reclaim it
     fs(root).setTimes(lock, System.currentTimeMillis - 3600 * 1000L, -1)
     val b = new Thread(() => Stage.withWriterLease(spark, root,
-        staleAfterMs = 60 * 1000L) {
+        staleAfterMs = 60 * 1000L) { _ =>
       bHolds.countDown(); bMayRelease.await()
     })
     b.start(); bHolds.await() // B reclaimed and holds a fresh lock
@@ -474,14 +493,14 @@ class StageSpec extends AnyFunSuite {
     // the window, which WITHOUT the refresher would let a second writer
     // stale-reclaim a live op's lock
     val a = new Thread(() => Stage.withWriterLease(spark, root,
-        staleAfterMs = 4000L) {
+        staleAfterMs = 4000L) { _ =>
       holding.countDown(); mayRelease.await()
     })
     a.start(); holding.await()
     Thread.sleep(4500) // op age > window; heartbeat keeps mtime fresh
     var err: Throwable = null
     val b = new Thread(() => {
-      try Stage.withWriterLease(spark, root, staleAfterMs = 4000L) {
+      try Stage.withWriterLease(spark, root, staleAfterMs = 4000L) { _ =>
         fail("stale-reclaimed a LIVE holder's heartbeat-refreshed lease")
       } catch { case e: Throwable => err = e }
     })
@@ -490,7 +509,7 @@ class StageSpec extends AnyFunSuite {
       s"$err")
     mayRelease.countDown(); a.join()
     // released cleanly; the next op acquires freely
-    Stage.withWriterLease(spark, root) { () }
+    Stage.withWriterLease(spark, root) { _ => () }
     assert(!fs(root).exists(new Path(s"$root/_writer.lock")))
   }
 
@@ -500,18 +519,14 @@ class StageSpec extends AnyFunSuite {
     // rejected at the commit point, not interleaved with the reclaimer's
     val root = "target/graft-test-stage-fence-flip"
     fs(root).delete(new Path(root), true)
-    Stage.publishRebuild(spark, root, Seq(1L, 2L).toDF("v"))
+    leased(root)(Stage.publishRebuild(_, root, Seq(1L, 2L).toDF("v")))
     val lock = new Path(s"$root/_writer.lock")
     val boom = intercept[IllegalStateException] {
-      Stage.withWriterLease(spark, root) {
+      Stage.withWriterLease(spark, root) { lease =>
         // simulate the wrongful reclaim: the lock now carries ANOTHER
         // writer's token (a reclaimer retired ours and created afresh)
-        fs(root).delete(lock, false)
-        val out = fs(root).create(lock, false)
-        out.write("pid=424242 host=elsewhere t=0 nonce=imposter"
-          .getBytes("UTF-8"))
-        out.close()
-        Stage.publishRewrite(spark, root, Seq(9L).toDF("v"))
+        imposterLock(root, "pid=424242 host=elsewhere t=0 nonce=imposter")
+        Stage.publishRewrite(lease, root, Seq(9L).toDF("v"))
       }
     }
     assert(boom.getMessage.contains("fencing"), s"$boom")
@@ -520,19 +535,78 @@ class StageSpec extends AnyFunSuite {
     fs(root).delete(lock, false) // retire the imposter lock
   }
 
+  test("fencing: a reclaimed ROOT lease rejects a component flip, on the caller's thread and on a Par thread") {
+    // the commit point re-reads the index ROOT's lock — the one writer
+    // lease — so a zombie whose root lease was reclaimed cannot flip any
+    // component, wherever the flip runs (a compaction fold dispatches
+    // its publishes to Par pool threads)
+    val idx = "target/graft-test-stage-fence-root"
+    fs(idx).delete(new Path(idx), true)
+    Search.saveTextIndex(Seq((1L, "spark join"), (2L, "stream window"))
+      .toDF("doc_id", "text"), idx)
+    val live = Stage.resolve(spark, s"$idx/postings")
+    val lock = new Path(s"$idx/_writer.lock")
+    val flipThreads = new java.util.concurrent.ConcurrentLinkedQueue[Thread]()
+    def flip(lease: Stage.Lease): Unit = {
+      flipThreads.add(Thread.currentThread)
+      Stage.publishRewrite(lease, s"$idx/postings",
+        spark.read.parquet(live).where(col("doc_id") =!= 1L))
+    }
+    def reclaimed(publish: Stage.Lease => Unit): IllegalStateException =
+      try intercept[IllegalStateException] {
+        leased(idx) { lease =>
+          imposterLock(idx, "pid=424242 host=elsewhere t=0 nonce=imposter")
+          publish(lease)
+        }
+      } finally fs(idx).delete(lock, false) // retire the imposter lock
+    val direct = reclaimed(flip)
+    val pooled = reclaimed(lease => graft.ops.Par.run(() => flip(lease), () => ()))
+    for (e <- Seq(direct, pooled))
+      assert(e.getMessage.contains(
+        "no longer carries this writer's acquire token"), s"$e")
+    assert(flipThreads.size == 2 &&
+      flipThreads.asScala.last != Thread.currentThread,
+      "the second flip did not run on a pool thread")
+    // neither zombie flip happened: the pre-reclaim version serves
+    assert(Stage.resolve(spark, s"$idx/postings") == live)
+    assert(Search.conjunctiveSearch(spark, idx, Seq("spark"))
+      .collect().map(_.getLong(0)).toSeq == Seq(1L))
+  }
+
+  test("writer lease: not re-entrant — a nested acquire fails, the outer lease still releases") {
+    val root = "target/graft-test-stage-lease-nested"
+    fs(root).delete(new Path(root), true)
+    val lock = new Path(s"$root/_writer.lock")
+    val nested = intercept[IllegalStateException] {
+      Stage.withWriterLease(spark, root) { _ =>
+        Stage.withWriterLease(spark, root) { _ => fail("re-entered a held lease") }
+      }
+    }
+    assert(nested.getMessage.contains("concurrent maintenance"), s"$nested")
+    assert(!fs(root).exists(lock))
+    // a family op run under its own root's lease is refused the same way:
+    // code under a lease takes the lease it was handed
+    val family = intercept[IllegalStateException] {
+      Stage.withWriterLease(spark, root) { _ => Search.TextIndex.vacuum(spark, root) }
+    }
+    assert(family.getMessage.contains("concurrent maintenance"), s"$family")
+    // the outer lease released cleanly both times: a fresh acquire
+    // succeeds and leaves no lock behind
+    var ran = false
+    Stage.withWriterLease(spark, root) { _ => ran = true }
+    assert(ran && !fs(root).exists(lock))
+  }
+
   test("fencing: a reclaimed holder's publishOnce stays markerless and sweeps") {
     val root = "target/graft-test-stage-fence-op"
     fs(root).delete(new Path(root), true)
     val lock = new Path(s"$root/_writer.lock")
     val boom = intercept[IllegalStateException] {
-      Stage.withWriterLease(spark, root) {
-        fs(root).delete(lock, false)
-        val out = fs(root).create(lock, false)
-        out.write("pid=1 host=elsewhere t=0 nonce=imposter".getBytes("UTF-8"))
-        out.close()
-        Stage.publishOnce(spark, root, "fenced_op", Seq("data")) { staging =>
-          Seq(7L).toDF("v").write.parquet(s"$staging/data")
-        }
+      // publishOnce takes the root lease itself; the reclaim lands while
+      // it stages, before its commit point
+      Stage.publishOnce(spark, root, "fenced_op", Seq("data")) { staging =>
+        Seq(7L).toDF("v").write.parquet(s"$staging/data")
+        imposterLock(root, "pid=1 host=elsewhere t=0 nonce=imposter")
       }
     }
     assert(boom.getMessage.contains("fencing"), s"$boom")
@@ -540,7 +614,7 @@ class StageSpec extends AnyFunSuite {
     // no marker committed: the renamed files are visible but pending, and
     // the next maintenance sweep reverts exactly them
     assert(Stage.pendingOps(spark, root, Seq("data")) == Seq("fenced_op"))
-    Stage.sweepUncommitted(spark, root, Seq("data"))
+    leased(root)(Stage.sweepUncommitted(_, root, Seq("data")))
     assert(Stage.pendingOps(spark, root, Seq("data")).isEmpty)
   }
 
@@ -591,8 +665,10 @@ class StageSpec extends AnyFunSuite {
     Stage.withFencing(Stage.ExclusiveCommitToken) {
       // ordinary lifecycle under the strict primitive: rebuild, rewrite,
       // exactly-once op — all commit normally (each owns its fence)
-      Stage.publishRebuild(spark, root, Seq(1L, 2L).toDF("v"))
-      Stage.publishRewrite(spark, root, Seq(3L).toDF("v"))
+      leased(root) { lease =>
+        Stage.publishRebuild(lease, root, Seq(1L, 2L).toDF("v"))
+        Stage.publishRewrite(lease, root, Seq(3L).toDF("v"))
+      }
       assert(values(root) == Set(3L))
       Stage.publishOnce(spark, root, "strict_op", Seq("data")) { staging =>
         Seq(7L).toDF("v").write.parquet(s"$staging/data")
@@ -623,46 +699,49 @@ class StageSpec extends AnyFunSuite {
     assert(idle.getAs[Long]("writer_lock_age_ms") == -1L)
     assert(idle.getAs[Double]("writer_lock_stale_frac") == 0.0)
     // root lock held (a family-wide op in flight): stamped on the row
-    Stage.withWriterLease(spark, idx) {
+    Stage.withWriterLease(spark, idx) { _ =>
       val busy = head
       assert(busy.getAs[String]("writer_lock_holder").startsWith("pid="))
       assert(busy.getAs[Long]("writer_lock_age_ms") >= 0L)
       val frac = busy.getAs[Double]("writer_lock_stale_frac")
       assert(frac >= 0.0 && frac < 1.0)
     }
-    // a COMPONENT lock (a publish in flight there) wins over the root's
-    Stage.withWriterLease(spark, s"$idx/counts") {
+    // a publish in flight on the component reports the ROOT lease it
+    // commits under (components carry no lock of their own)
+    leased(idx)(Stage.publishRewrite(_, s"$idx/counts") { versionDir =>
+      Seq((2L, 20L)).toDF("k", "c").write.parquet(versionDir)
       assert(head.getAs[String]("writer_lock_holder").startsWith("pid="))
-    }
+      assert(!fs(idx).exists(new Path(s"$idx/counts/_writer.lock")))
+    })
     assert(head.getAs[String]("writer_lock_holder") == "")
   }
 
   test("a file-less publish refuses the flip; schema-carrying empties pass") {
     val root = "target/graft-test-stage-emptypub"
     fs(root).delete(new Path(root), true)
-    Stage.publishRewrite(spark, root, Seq(1L, 2L).toDF("v"))
+    leased(root)(Stage.publishRewrite(_, root, Seq(1L, 2L).toDF("v")))
     // a PARTITIONED write of zero rows produces NO files at all —
     // flipping onto it would leave an unreadable live state; the old
     // version must keep serving and the caller must hear about it
     val e = intercept[IllegalStateException] {
-      Stage.publishRewrite(spark, root) { versionDir =>
+      leased(root)(Stage.publishRewrite(_, root) { versionDir =>
         Seq.empty[(Long, Long)].toDF("v", "k")
           .write.partitionBy("k").parquet(versionDir)
-      }
+      })
     }
     assert(e.getMessage.contains("no data files"))
     assert(values(root) == Set(1L, 2L)) // old state still serving
     // a NON-partitioned empty DataFrame writes one schema-carrying
     // parquet file — a legitimate empty state, publishable and readable
-    Stage.publishRewrite(spark, root, Seq.empty[Long].toDF("v"))
+    leased(root)(Stage.publishRewrite(_, root, Seq.empty[Long].toDF("v")))
     assert(values(root) == Set.empty)
   }
 
   test("snapshot names are validated on the read/drop side too") {
     val root = "target/graft-test-stage-snapname"
     fs(root).delete(new Path(root), true)
-    Stage.publishRewrite(spark, root, Seq(1L).toDF("v"))
-    Stage.snapshot(spark, root, "good_pin")
+    leased(root)(Stage.publishRewrite(_, root, Seq(1L).toDF("v")))
+    leased(root)(Stage.snapshot(_, root, "good_pin"))
     // "../_current" would URI-resolve OUT of _snapshots: dropSnapshot
     // would delete the LIVE POINTER, resolveSnapshot would misparse it
     for (bad <- Seq("../_current", "a/b", "..")) {
@@ -680,18 +759,18 @@ class StageSpec extends AnyFunSuite {
   test("publishRebuild severs previous-version grace at the rebuild boundary") {
     val root = "target/graft-test-stage-rebuild"
     fs(root).delete(new Path(root), true)
-    Stage.publishRewrite(spark, root, Seq(1L).toDF("v")) // → v1
-    Stage.publishRewrite(spark, root, Seq(2L).toDF("v")) // → v2, v1 grace
+    leased(root)(Stage.publishRewrite(_, root, Seq(1L).toDF("v"))) // → v1
+    leased(root)(Stage.publishRewrite(_, root, Seq(2L).toDF("v"))) // → v2, v1 grace
     assert(Stage.resolvePrevious(spark, root).contains(s"$root/v00000001"))
     // the REBUILD: new corpus, no cross-corpus previous-serving — the
     // pointer names only v3, and the old corpus's versions are swept now
-    Stage.publishRebuild(spark, root, Seq(9L).toDF("v"))
+    leased(root)(Stage.publishRebuild(_, root, Seq(9L).toDF("v")))
     assert(Stage.resolve(spark, root) == s"$root/v00000003")
     assert(Stage.resolvePrevious(spark, root).isEmpty)
     assert(children(root).filter(_.startsWith("v")) == Set("v00000003"))
     assert(values(root) == Set(9L))
     // post-rebuild maintenance re-establishes same-corpus grace
-    Stage.publishRewrite(spark, root, Seq(10L).toDF("v"))
+    leased(root)(Stage.publishRewrite(_, root, Seq(10L).toDF("v")))
     assert(Stage.resolvePrevious(spark, root).contains(s"$root/v00000003"))
   }
 
@@ -730,15 +809,15 @@ class StageSpec extends AnyFunSuite {
     Seq(1L).toDF("v").write.parquet(root)
     // a root with no pointer has no version to pin — loud failure
     intercept[IllegalStateException] {
-      Stage.snapshot(spark, root, "good")
+      leased(root)(Stage.snapshot(_, root, "good"))
     }
-    Stage.publishRewrite(spark, root, Seq(2L).toDF("v")) // → v1
-    Stage.snapshot(spark, root, "good")
+    leased(root)(Stage.publishRewrite(_, root, Seq(2L).toDF("v"))) // → v1
+    leased(root)(Stage.snapshot(_, root, "good"))
     assert(Stage.resolveSnapshot(spark, root, "good")
       .contains(s"$root/v00000001"))
     // TWO subsequent publishes — the second would GC v1 without the pin
-    Stage.publishRewrite(spark, root, Seq(3L).toDF("v")) // → v2
-    Stage.publishRewrite(spark, root, Seq(4L).toDF("v")) // → v3, v1 pinned
+    leased(root)(Stage.publishRewrite(_, root, Seq(3L).toDF("v"))) // → v2
+    leased(root)(Stage.publishRewrite(_, root, Seq(4L).toDF("v"))) // → v3, v1 pinned
     assert(children(root).contains("v00000001"))
     assert(spark.read.parquet(Stage.resolveSnapshot(spark, root, "good").get)
       .collect().map(_.getLong(0)).toSet == Set(2L))
@@ -751,7 +830,7 @@ class StageSpec extends AnyFunSuite {
       .head().getAs[Int]("pinned_versions") == 1)
     // dropping the pin makes the version an ordinary GC candidate
     Stage.dropSnapshot(spark, root, "good")
-    Stage.publishRewrite(spark, root, Seq(5L).toDF("v")) // → v4 sweeps v1
+    leased(root)(Stage.publishRewrite(_, root, Seq(5L).toDF("v"))) // → v4 sweeps v1
     assert(!children(root).contains("v00000001"))
     assert(Stage.resolveSnapshot(spark, root, "good").isEmpty)
   }
@@ -783,20 +862,20 @@ class StageSpec extends AnyFunSuite {
     fs(root).delete(new Path(root), true)
     // vacuum on a root with no pointer is a no-op
     Seq(1L).toDF("v").write.parquet(root)
-    Stage.vacuum(spark, root)
+    leased(root)(Stage.vacuum(_, root))
     assert(spark.read.parquet(root).count() == 1)
-    Stage.publishRewrite(spark, root, Seq(2L).toDF("v")) // → v1
-    Stage.snapshot(spark, root, "keep")
-    Stage.publishRewrite(spark, root, Seq(3L).toDF("v")) // → v2
-    Stage.publishRewrite(spark, root, Seq(4L).toDF("v")) // → v3; v1 pinned
+    leased(root)(Stage.publishRewrite(_, root, Seq(2L).toDF("v"))) // → v1
+    leased(root)(Stage.snapshot(_, root, "keep"))
+    leased(root)(Stage.publishRewrite(_, root, Seq(3L).toDF("v"))) // → v2
+    leased(root)(Stage.publishRewrite(_, root, Seq(4L).toDF("v"))) // → v3; v1 pinned
     assert(children(root).contains("v00000001"))
     // pinned + live + grace all survive a vacuum
-    Stage.vacuum(spark, root)
+    leased(root)(Stage.vacuum(_, root))
     assert(children(root).filter(_.startsWith("v")) ==
       Set("v00000001", "v00000002", "v00000003"))
     // dropping the pin + vacuum reclaims NOW — no publish needed
     Stage.dropSnapshot(spark, root, "keep")
-    Stage.vacuum(spark, root)
+    leased(root)(Stage.vacuum(_, root))
     assert(children(root).filter(_.startsWith("v")) ==
       Set("v00000002", "v00000003"))
     assert(values(root) == Set(4L))
@@ -805,16 +884,16 @@ class StageSpec extends AnyFunSuite {
   test("restoreSnapshot republishes exactly the pinned FILES as a forward version") {
     val root = "target/graft-test-stage-restore"
     fs(root).delete(new Path(root), true)
-    Stage.publishRewrite(spark, root, Seq(1L, 2L).toDF("v")) // → v1
-    Stage.snapshot(spark, root, "pin")
+    leased(root)(Stage.publishRewrite(_, root, Seq(1L, 2L).toDF("v"))) // → v1
+    leased(root)(Stage.snapshot(_, root, "pin"))
     // an append lands new files INTO the live v1 — the pin's file list
     // is now a strict subset of v1's directory, so a pointer-flip
     // restore would resurrect the post-pin batch
     Seq(99L).toDF("v").write.mode("append").parquet(s"$root/v00000001")
     assert(values(root) == Set(1L, 2L, 99L))
-    Stage.publishRewrite(spark, root, Seq(7L).toDF("v")) // "bad campaign" → v2
+    leased(root)(Stage.publishRewrite(_, root, Seq(7L).toDF("v"))) // "bad campaign" → v2
     assert(values(root) == Set(7L))
-    Stage.restoreSnapshot(spark, root, "pin") // → v3, copied from the pin
+    leased(root)(Stage.restoreSnapshot(_, root, "pin")) // → v3, copied from the pin
     // the restore serves the PINNED files — not v1's directory
     assert(values(root) == Set(1L, 2L))
     assert(Stage.resolve(spark, root) == s"$root/v00000003")
@@ -825,11 +904,11 @@ class StageSpec extends AnyFunSuite {
       .collect().map(_.getLong(0)).toSet == Set(7L))
     // the pin survives (restore consumes nothing) — restoring again
     // converges to the same state
-    Stage.restoreSnapshot(spark, root, "pin") // → v4
+    leased(root)(Stage.restoreSnapshot(_, root, "pin")) // → v4
     assert(values(root) == Set(1L, 2L))
     // unknown names fail loudly, and the pointer is untouched
     intercept[IllegalArgumentException] {
-      Stage.restoreSnapshot(spark, root, "nope")
+      leased(root)(Stage.restoreSnapshot(_, root, "nope"))
     }
     assert(values(root) == Set(1L, 2L))
   }
@@ -866,7 +945,7 @@ class StageSpec extends AnyFunSuite {
   test("pendingOps surfaces a crashed publishOnce until its retry commits") {
     val idx = "target/graft-test-pending-ops"
     fs(idx).delete(new Path(idx), true)
-    Stage.publishRebuild(spark, s"$idx/counts", Seq((1L, 10L)).toDF("k", "c"))
+    leased(idx)(Stage.publishRebuild(_, s"$idx/counts", Seq((1L, 10L)).toDF("k", "c")))
     def stageOp(opId: String, crashBeforeMarker: Boolean): Unit = {
       if (crashBeforeMarker) {
         // simulate publishOnce dying between the component publish and
@@ -893,7 +972,7 @@ class StageSpec extends AnyFunSuite {
     stageOp("del_7", crashBeforeMarker = false)
     assert(Stage.pendingOps(spark, idx, Seq("counts")).isEmpty)
     // and the committed op survives a sweep (it has its marker)
-    Stage.sweepUncommitted(spark, idx, Seq("counts"))
+    leased(idx)(Stage.sweepUncommitted(_, idx, Seq("counts")))
     assert(spark.read.parquet(Stage.resolve(spark, s"$idx/counts"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
       Set((1L, 10L), (2L, -10L)))
@@ -918,7 +997,7 @@ class StageSpec extends AnyFunSuite {
         var done = 0
         while (done < 25) {
           try {
-            Stage.withWriterLease(spark, dir) {
+            Stage.withWriterLease(spark, dir) { _ =>
               val now = inside.incrementAndGet()
               maxInside.accumulateAndGet(now, math.max)
               Thread.sleep(0, 200000) // widen the window
@@ -939,6 +1018,6 @@ class StageSpec extends AnyFunSuite {
       s"${maxInside.get} writers inside the lease simultaneously")
     assert(acquired.get >= 1) // somebody actually got in
     // the lock is released at the end — a fresh acquire succeeds
-    Stage.withWriterLease(spark, dir) { () }
+    Stage.withWriterLease(spark, dir) { _ => () }
   }
 }

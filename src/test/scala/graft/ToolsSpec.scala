@@ -7,7 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
 /** The dev-tool surface: [[graft.tools.Probe.record]] sees exactly the
-  * jobs and tasks a block starts, [[Bench.interleaved]]
+  * jobs and tasks a block starts, [[graft.tools.Probe.gapsBefore]] never
+  * reports a negative gap, [[Bench.interleaved]]
   * samples every query once per round and turns a throwing query into a
   * JSON-safe error, and `src/main` grows no new `main` outside the
   * entry points and the four tools.
@@ -52,6 +53,23 @@ class ToolsSpec extends AnyFunSuite {
     assert(rec.jobs.head.ops == "{Exchange|WholeStageCodegen}", rec.jobs.toString)
     // the result job skips the shuffle stage the first job ran: not listed
     assert(rec.jobs.map(_.stages.map(_.tasks)) == Seq(Seq(2), Seq(1)), rec.jobs.toString)
+  }
+
+  test("Probe.gapsBefore: an overlapping job has gap 0 and its overlap; gaps sum to driver time") {
+    def job(id: Int, start: Long, end: Long) =
+      Probe.Job(id, start, end, "site", anchored = true, Nil)
+    // two overlapping jobs (the second starts 300 ms before the first
+    // ends), then a sequential pair: 200 ms and 500 ms of driver time
+    val jobs = Seq(job(1, 1000, 2000), job(2, 1700, 2500),
+      job(3, 2700, 3000), job(4, 3500, 3600))
+    val got = Probe.gapsBefore(jobs)
+    assert(got == Seq((0L, 0L), (0L, 300L), (200L, 0L), (500L, 0L)))
+    assert(got.forall { case (g, o) => g >= 0 && o >= 0 })
+    assert(got.map(_._1).sum == 700L)
+    // a job that ends before an earlier, longer one does not hide it
+    val nested = Probe.gapsBefore(Seq(job(1, 0, 1000), job(2, 100, 200),
+      job(3, 1100, 1200)))
+    assert(nested == Seq((0L, 0L), (0L, 900L), (100L, 0L)))
   }
 
   test("Bench.interleaved samples each query once per round and sanitizes errors") {
