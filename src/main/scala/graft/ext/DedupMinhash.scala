@@ -376,16 +376,13 @@ trait DedupMinhash extends DedupExactOps {
 
   /** TOMBSTONE content in a persisted manifest — the batched alternative
     * to [[deleteContentFromMinhashManifest]], whose immediate fold pays
-    * manifest-sized work PER CALL: under a drip-feed of daily
-    * right-to-be-forgotten requests that is index-sized work every day.
-    * This instead appends the deleted content's token-set keys to a
-    * `tombstones/` table (batch-sized work), probes consult the pending
-    * tombstones (the docs relation is anti-joined on the same key before
-    * verification, so tombstoned content probes as fresh — candidates
-    * from its still-present bands rows die in the verification join), and
-    * [[MinhashManifest]]'s `compact` folds the tombstones into a physical
-    * delete on the compaction schedule. Verdict-equivalent to the
-    * immediate delete at every point (DedupSpec pins it).
+    * manifest-sized work PER CALL (index-sized work every day under a
+    * drip-feed of right-to-be-forgotten requests). Probes mask the
+    * pending token-set keys in the docs relation, so tombstoned content
+    * probes as fresh (candidates from its bands rows die in the
+    * verification join), and [[MinhashManifest]]'s `compact` folds them.
+    * Verdict-equivalent to the immediate delete at every point
+    * (DedupSpec pins it).
     *
     * Contract note: a tombstone masks its content until folded —
     * deliberately including copies APPENDED while it is pending
@@ -394,21 +391,8 @@ trait DedupMinhash extends DedupExactOps {
     */
   def tombstoneContentInMinhashManifest(deleted: DataFrame, textCol: String,
                                         path: String): Unit =
-    graft.ops.Stage.appendTombstones(
-      deleted.where(col(textCol).isNotNull)
-        .select(xxhash64(tokenHashes(col(textCol))).as("seth")), path)
-
-  /** `docs` minus rows whose token-set key is tombstoned (identity when
-    * no tombstones exist). The anti-join's right side is the (small)
-    * pending-delete set — Spark broadcasts it (PlanAuditSpec pins it).
-    * Callers load [[graft.ops.Stage.pendingTombstones]] once per query. */
-  private def minusTombstoned(docs: DataFrame,
-                              tomb: Option[DataFrame]): DataFrame =
-    tomb match {
-      case Some(t) => docs.withColumn("seth", xxhash64(col("toks")))
-        .join(t, Seq("seth"), "left_anti").drop("seth")
-      case None => docs
-    }
+    MinhashManifest.tombstone(path, deleted.where(col(textCol).isNotNull)
+      .select(xxhash64(tokenHashes(col(textCol)))))
 
   /** [[MinhashManifest]]'s compaction fold, after a run of per-batch
     * appends: every ingest batch leaves its own `b<batchId>-*` (or
@@ -430,21 +414,17 @@ trait DedupMinhash extends DedupExactOps {
                            tomb: Option[DataFrame]): Unit = {
     import graft.ops.Stage.{compactionPartitions, publishRewrite, resolve}
     val (spark, path) = (lease.spark, lease.root)
-    val removed = tomb match {
-      case Some(t) => Tables.parquet(spark, resolve(spark, s"$path/docs"))
-        .withColumn("seth", xxhash64(col("toks")))
-        .join(t, Seq("seth")).select("doc")
-      // the empty relation derives from the manifest's OWN doc column —
-      // spark.range(0)'s LONG would coerce a string-id manifest's
-      // anti-join key (ANSI runtime cast error on a routine compaction)
-      case None => Tables.parquet(spark, resolve(spark, s"$path/docs"))
-        .select("doc").limit(0)
-    }
+    val docs = Tables.parquet(spark, resolve(spark, s"$path/docs"))
+    // with nothing pending, `removed` is empty but keeps the manifest's
+    // OWN doc column type — spark.range(0)'s LONG would coerce a
+    // string-id manifest's anti-join key (ANSI runtime cast error on a
+    // routine compaction)
+    val removed = MinhashManifest.matched(docs, tomb).select("doc")
     // independent component rewrites run CONCURRENTLY (guide §2.6 — the
-    // text fold's overlap note). `removed`'s docs scan listed its
-    // files at plan construction above, and the docs flip keeps that
-    // version for one grace cycle, so the bands rewrite reads a stable
-    // pre-fold docs snapshot whichever thunk publishes first.
+    // text fold's overlap note). The docs scan listed its files at plan
+    // construction above, and the docs flip keeps that version for one
+    // grace cycle, so the bands rewrite reads a stable pre-fold docs
+    // snapshot whichever thunk publishes first.
     val nBands = compactionPartitions(spark, s"$path/bands")
     val nDocs = compactionPartitions(spark, s"$path/docs")
     graft.ops.Par.run(
@@ -453,8 +433,7 @@ trait DedupMinhash extends DedupExactOps {
           .join(removed, Seq("doc"), "left_anti")
           .repartition(nBands, col("band"), col("band_key"))),
       () => publishRewrite(lease, s"$path/docs",
-        minusTombstoned(Tables.parquet(spark, resolve(spark, s"$path/docs")),
-          tomb).repartition(nDocs)))
+        MinhashManifest.mask(docs, tomb).repartition(nDocs)))
   }
 
   /** Incremental NEAR-dup detection of an ingest batch against a persisted
@@ -544,7 +523,7 @@ trait DedupMinhash extends DedupExactOps {
     * once. */
   val MinhashManifest: graft.ops.Family =
     graft.ops.Family("minhash_manifest", (_, _) => Seq("docs", "bands"),
-      foldManifest)
+      foldManifest, graft.ops.Family.Key(Set("docs"), hashOf = Some("toks")))
 
   /** The probe batch's (ids, exact classes as (doc, rep), class
     * representatives' (doc, toks)), built once so the single probes and
@@ -649,11 +628,8 @@ trait DedupMinhash extends DedupExactOps {
                                          graft.ops.Family.Live)
       : DataFrame = {
     val spark = probe.sparkSession
-    // tombstones BEFORE the data resolves (the linearizable ordering —
-    // see Stage.tombstoneSnapshot)
-    val tomb = graft.ops.Stage.pendingTombstones(spark, manifestPath)
-    val data = MinhashManifest.read(spark, manifestPath, at) _
-    val manBands = data("bands")
+    val v = MinhashManifest.view(spark, manifestPath, at)
+    val manBands = v("bands")
     // banding parameters come from the stamp on the bands rows the probe
     // ACTUALLY READS — never from meta/, whose read could race a rebuild
     // that changes (k, bands): banding the batch with one generation's
@@ -670,10 +646,10 @@ trait DedupMinhash extends DedupExactOps {
           graft.ops.Stage.resolve(spark, s"$manifestPath/meta")).head()
         (meta.getAs[Int]("k"), meta.getAs[Int]("bands"))
       }
-    // pending tombstones mask their content here: a tombstoned doc's bands
-    // rows may still generate candidates, but those die in the
-    // verification join against the filtered docs relation
-    val manDocs = minusTombstoned(data("docs"), tomb)
+    // pending tombstones mask the docs (bands read as stored): a
+    // tombstoned doc's bands rows may still generate candidates, but
+    // those die in the verification join against the masked docs
+    val manDocs = v("docs")
     val keyed = keyedSignatures(probe, k, bands, keepToks = carryTokens)
     val carryIn = if (carryTokens) Seq(col("toks").as("toks_n")) else Seq.empty
     val carryOn = if (carryTokens) Seq(col("toks_n")) else Seq.empty

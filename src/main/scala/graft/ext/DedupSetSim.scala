@@ -263,8 +263,8 @@ trait DedupSetSim extends DedupWinnow {
   /** Persist a DETERMINISTIC-EXACT set-similarity index: the incremental
     * "does this batch near-dup against the corpus?" gate with
     * [[setSimJoinPairs]]' exact contract, where [[saveMinhashManifest]]
-    * answers the same question probabilistically. Two components, both
-    * versioned under the root lease (the manifest protocol):
+    * answers the same question probabilistically. Built inside
+    * [[SetSimIndex]]'s rebuild; two components, both born versioned:
     *
     *  - `sets`: (doc, grams, l) — each document's sorted distinct hashed
     *    `shingle`-gram set (the verification side);
@@ -285,7 +285,7 @@ trait DedupSetSim extends DedupWinnow {
   def saveSetSimIndex(df: DataFrame, textCol: String, idCol: String,
                       path: String, shingle: Int = 3): Unit = {
     val spark = df.sparkSession
-    graft.ops.Stage.rebuild(spark, path, SetSimComponents) { lease =>
+    SetSimIndex.rebuild(spark, path) { lease =>
       val sets = setSimSets(df, textCol, idCol, shingle)
       var setsDir: String = null
       graft.ops.Stage.publishRebuild(lease, s"$path/sets") { vd =>
@@ -327,46 +327,27 @@ trait DedupSetSim extends DedupWinnow {
     sets.select(col("doc"), col("l"), explode(col("grams")).as("g"))
       .select(col("g"), col("doc"), col("l"))
 
-  /** The set-sim index's two components: every staged append, sweep and
-    * content delete moves both. */
-  private val SetSimComponents = Seq("sets", "postings")
-
-  /** Append a batch to a [[saveSetSimIndex]] index (root lease; both
-    * components gain the batch's rows — full postings are append-stable,
-    * see the save scaladoc). The index's shingle width must match.
-    *
-    * The append is STAGED, not written in place: a crash between the two
-    * components would otherwise leave a doc present in `sets` but absent
-    * from `postings` — candidates come only from postings, so such a doc
-    * would silently never surface again, a recall hole in an index whose
-    * headline contract is deterministic recall 1, and plain in-place
-    * appends are invisible to [[graft.ops.Stage.sweepUncommitted]]. Routing
-    * through the op-ledgered publish makes a torn append a SWEPT append:
-    * both components commit together or the next maintenance sweep reverts
-    * both. Pass a stable `opId` to make a caller-side retry idempotent;
-    * the default fresh id gives at-least-once (a retry re-appends whole,
-    * never torn). `batchId = Some(id)` is the EXACTLY-ONCE stream path
-    * (the shared ledger protocol — a replayed batch would double its rows
-    * in both components and every later candidate join). */
+  /** Append a batch to a [[saveSetSimIndex]] index through
+    * [[SetSimIndex]]'s staged `append`: both components gain the batch's
+    * rows (full postings are append-stable, see the save scaladoc) and
+    * commit under one ledger marker, or the next sweep reverts both — a
+    * doc in `sets` but not in `postings` would never surface as a
+    * candidate again, a recall hole in an index whose contract is
+    * deterministic recall 1. The index's shingle width must match. Pass
+    * a stable `opId` to make a caller-side retry idempotent;
+    * `batchId = Some(id)` is the exactly-once stream path (a replayed
+    * batch would double its rows in both components and every later
+    * candidate join). */
   def appendToSetSimIndex(newDf: DataFrame, textCol: String, idCol: String,
                           path: String, shingle: Int = 3,
                           opId: String = "",
-                          batchId: Option[Long] = None): Unit = {
-    val spark = newDf.sparkSession
-    def stage(staging: String): Unit = {
+                          batchId: Option[Long] = None): Unit =
+    SetSimIndex.append(newDf.sparkSession, path, batchId, opId) { (staging, _) =>
       val sets = setSimSets(newDf, textCol, idCol, shingle)
       sets.write.mode("overwrite").parquet(s"$staging/sets")
       setSimPostings(sets).write.mode("overwrite")
         .parquet(s"$staging/postings")
     }
-    batchId match {
-      case Some(id) =>
-        graft.ops.Stage.appendExactlyOnce(spark, path, id, SetSimComponents)(stage)
-      case None =>
-        val id = if (opId.nonEmpty) opId else graft.ops.Stage.freshOpId()
-        graft.ops.Stage.publishOnce(spark, path, id, SetSimComponents)(stage)
-    }
-  }
 
   /** Probe a batch against a [[saveSetSimIndex]] index: every
     * (batch doc, corpus doc) pair with gram-set Jaccard ≥ `threshold`,
@@ -378,22 +359,29 @@ trait DedupSetSim extends DedupWinnow {
     * filter; verification joins both sides' stored gram arrays through
     * the merge-walk. Probing is read-only.
     *
+    * `at` picks the (sets, postings) version ([[graft.ops.Family.read]]):
+    * live; PREVIOUS — the state the last delete or compaction superseded;
+    * or a PINNED [[SetSimIndex]] snapshot. Pending tombstones mask the
+    * corpus sets of every version; a tombstoned doc's postings may still
+    * make candidates, which die in the verification join.
+    *
     * Output: (doc_batch, doc_corpus, jaccard).
     */
   def probeSetSimOverlap(batch: DataFrame, path: String,
                          threshold: Double = 0.7,
                          textCol: String = "text",
                          idCol: String = "doc_id",
-                         shingle: Int = 3): DataFrame = {
+                         shingle: Int = 3,
+                         at: graft.ops.Family.At = graft.ops.Family.Live)
+      : DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold in (0, 1], got $threshold")
-    val spark = batch.sparkSession
-    import graft.ops.Stage.resolve
-    // one resolve per component, shared by candidates and verification —
-    // the torn-read rule (a concurrent rebuild must not split a probe
-    // across generations)
-    val postings = Tables.parquet(spark, resolve(spark, s"$path/postings"))
-    val corpusSets = Tables.parquet(spark, resolve(spark, s"$path/sets"))
+    // one view: each component resolves once, shared by candidates and
+    // verification — the torn-read rule (a concurrent rebuild must not
+    // split a probe across generations)
+    val v = SetSimIndex.view(batch.sparkSession, path, at)
+    val postings = v("postings")
+    val corpusSets = v("sets")
     def ckpt(df: DataFrame): DataFrame = graft.ops.Tables.materialize(df)
     val bSets = ckpt(setSimSets(batch, textCol, idCol, shingle))
     val bGrams = bSets.select(col("doc"), col("l"),
@@ -434,33 +422,47 @@ trait DedupSetSim extends DedupWinnow {
 
   /** Delete CONTENT from a [[saveSetSimIndex]] index — keyed by gram-set
     * hash like [[deleteContentFromMinhashManifest]] (this content must
-    * no longer be recognized); anti-join rewrite of both components
-    * under the root lease, atomic per component. */
+    * no longer be recognized): the content's `seth` keys land as
+    * tombstones, then [[SetSimIndex]]'s `compact` folds them
+    * ([[foldSetSim]]). */
   def deleteContentFromSetSimIndex(deleted: DataFrame, textCol: String,
-                                   path: String, shingle: Int = 3): Unit = {
-    val spark = deleted.sparkSession
-    graft.ops.Stage.withWriterLease(spark, path) { lease =>
-      graft.ops.Stage.sweepUncommitted(lease, path, SetSimComponents)
-      import graft.ops.Stage.{publishRewrite, resolve}
-      val delKeys = deleted.where(col(textCol).isNotNull)
-        .select(xxhash64(graft.functions.TextExpressions
-          .hashedWordNgrams(col(textCol), shingle)).as("seth"))
-        .distinct()
-      val live = Tables.parquet(spark, resolve(spark, s"$path/sets"))
-        .withColumn("seth", xxhash64(col("grams")))
-      val removed = live.join(delKeys, Seq("seth")).select("doc")
-      // independent component rewrites run CONCURRENTLY (guide §2.6 —
-      // the text fold's overlap note); `live` listed the sets files
-      // at construction and the sets flip keeps that version one grace
-      // cycle, so the postings thunk's anti-join input is stable
-      graft.ops.Par.run(
-        () => publishRewrite(lease, s"$path/postings",
-          Tables.parquet(spark, resolve(spark, s"$path/postings"))
-            .join(removed, Seq("doc"), "left_anti")),
-        () => publishRewrite(lease, s"$path/sets",
-          live.join(delKeys, Seq("seth"), "left_anti").drop("seth")))
-    }
+                                   path: String, shingle: Int = 3): Unit =
+    SetSimIndex.delete(path, deleted.where(col(textCol).isNotNull)
+      .select(xxhash64(graft.functions.TextExpressions
+        .hashedWordNgrams(col(textCol), shingle))))
+
+  /** [[SetSimIndex]]'s compaction fold: the pending tombstones' sets and
+    * their documents' postings drop (the anti-join rewrite), and each
+    * component coalesces to [[graft.ops.Stage.compactionPartitions]]
+    * files — a streamed index leaves one file set per micro-batch. */
+  private def foldSetSim(lease: graft.ops.Stage.Lease, comps: Seq[String],
+                         tomb: Option[DataFrame]): Unit = {
+    import graft.ops.Stage.{compactionPartitions, publishRewrite, resolve}
+    val (spark, path) = (lease.spark, lease.root)
+    val sets = Tables.parquet(spark, resolve(spark, s"$path/sets"))
+    val removed = SetSimIndex.matched(sets, tomb).select("doc")
+    val nSets = compactionPartitions(spark, s"$path/sets")
+    val nPost = compactionPartitions(spark, s"$path/postings")
+    // independent component rewrites run CONCURRENTLY (guide §2.6 — the
+    // text fold's overlap note); `sets` listed its files at construction
+    // and the sets flip keeps that version one grace cycle, so the
+    // postings thunk's anti-join input is stable
+    graft.ops.Par.run(
+      () => publishRewrite(lease, s"$path/postings",
+        Tables.parquet(spark, resolve(spark, s"$path/postings"))
+          .join(removed, Seq("doc"), "left_anti").repartition(nPost)),
+      () => publishRewrite(lease, s"$path/sets",
+        SetSimIndex.mask(sets, tomb).repartition(nSets)))
   }
+
+  /** The set-sim index's lifecycle descriptor: staged append, compaction
+    * ([[foldSetSim]]), content-keyed tombstones (`seth` over a set's
+    * `grams`), named-snapshot pin, restore, drop, vacuum and health over
+    * the (sets, postings) pair; pins serve through
+    * `probeSetSimOverlap(…, at = Pinned(name))`. */
+  val SetSimIndex: graft.ops.Family =
+    graft.ops.Family("set_sim", (_, _) => Seq("sets", "postings"), foldSetSim,
+      graft.ops.Family.Key(Set("sets"), hashOf = Some("grams")))
 
   /** Canonicalize a noisy string VALUE DOMAIN: connected components over
     * the [[editDistanceJoin]] graph (values within `maxDist` edits are

@@ -323,24 +323,18 @@ trait DedupWinnow extends DedupSimhash {
     * equals probing a manifest built without those documents. */
   def deleteFromWinnowManifest(spark: org.apache.spark.sql.SparkSession,
                                path: String, ids: DataFrame,
-                               idCol: String = "doc_id"): Unit = {
-    tombstoneFromWinnowManifest(spark, path, ids, idCol)
-    WinnowManifest.compact(spark, path)
-  }
+                               idCol: String = "doc_id"): Unit =
+    WinnowManifest.delete(path, ids.select(col(idCol).as("doc")))
 
   /** TOMBSTONE documents in the winnow manifest — the batched
     * alternative to [[deleteFromWinnowManifest]]'s per-call
-    * manifest-sized rewrite (the drip-feed-of-forgets economics of
-    * [[tombstoneContentInMinhashManifest]]): append the doc ids to the
-    * shared `tombstones/` table (batch-sized), probes mask pending ids
-    * immediately (the fps relation anti-joins before anything else),
-    * and [[WinnowManifest]]'s `compact` folds them into a physical delete
-    * on the compaction schedule. ID-keyed like the family's delete. */
+    * manifest-sized rewrite: probes mask the pending ids in the fps
+    * relation at once, and [[WinnowManifest]]'s `compact` folds them.
+    * ID-keyed like the family's delete. */
   def tombstoneFromWinnowManifest(spark: org.apache.spark.sql.SparkSession,
                                   path: String, ids: DataFrame,
                                   idCol: String = "doc_id"): Unit =
-    graft.ops.Stage.appendTombstones(
-      ids.select(col(idCol).as("doc")), path)
+    WinnowManifest.tombstone(path, ids.select(col(idCol).as("doc")))
 
   /** [[WinnowManifest]]'s compaction fold: the per-batch file trail
     * becomes one fresh, h-sorted version ([[graft.ops.Stage.publishRewrite]]
@@ -353,13 +347,9 @@ trait DedupWinnow extends DedupSimhash {
                       tomb: Option[DataFrame]): Unit = {
     val (spark, path) = (lease.spark, lease.root)
     val fps = Tables.parquet(spark, graft.ops.Stage.resolve(spark, s"$path/fps"))
-    val live = tomb match {
-      case Some(t) => fps.join(t.withColumnRenamed(t.columns.head, "doc"),
-        Seq("doc"), "left_anti")
-      case None => fps
-    }
     graft.ops.Stage.publishRewrite(lease, s"$path/fps",
-      live.repartition(col("h")).sortWithinPartitions("h", "doc", "pos"))
+      WinnowManifest.mask(fps, tomb)
+        .repartition(col("h")).sortWithinPartitions("h", "doc", "pos"))
   }
 
   /** The winnow manifest's lifecycle descriptor: staged append,
@@ -403,12 +393,11 @@ trait DedupWinnow extends DedupSimhash {
     require(minShared >= 1, s"minShared >= 1, got $minShared")
     require(maxDf >= 1, s"maxDf >= 1, got $maxDf")
     val spark = batch.sparkSession
-    // tombstones BEFORE the fps resolve (the linearizable ordering — see
-    // Stage.tombstoneSnapshot); pending tombstones mask every version,
-    // pinned and previous reads included (right-to-be-forgotten holds
-    // for validation reads — the family rule)
-    val tomb = graft.ops.Stage.pendingTombstones(spark, path)
-    val fps = WinnowManifest.read(spark, path, at)("fps")
+    // pending tombstones mask every version, pinned and previous reads
+    // included (right-to-be-forgotten holds for validation reads — the
+    // family rule); the stamp read below needs no mask
+    val v = WinnowManifest.view(spark, path, at)
+    val fps = v.raw("fps")
     // (n, w) from the stamp on the fps rows this probe ACTUALLY reads
     // (at its version), never from meta/, whose read could race a
     // rebuild that changes the parameters (silently-empty overlap
@@ -436,10 +425,7 @@ trait DedupWinnow extends DedupSimhash {
     // un-hinted join gracefully shuffles. AQE broadcasts small batches
     // on its own; PlanAuditSpec pins that the probe plans and answers
     // with broadcast disabled outright.
-    val mf = (tomb match {
-      case Some(t) => mfAll.join(t, Seq("doc"), "left_anti")
-      case None    => mfAll
-    }).distinct()
+    val mf = v.mask(mfAll).distinct()
     // slice the manifest to the probe's hashes BEFORE any aggregate:
     // everything downstream is bounded by the batch, not the corpus
     val mfp = mf.join(bf.select("h").distinct(), Seq("h"))

@@ -285,27 +285,19 @@ object Search {
     }
 
   /** Delete documents from a [[saveTextIndex]] index — the
-    * right-to-be-forgotten path, IMMEDIATE form: the ids land as
-    * tombstones first (batch-sized, atomic append) and a compaction
-    * fold turns them physical in the same call. The two-step shape is
-    * what makes the multi-component delete CRASH-SAFE: the per-component
-    * publishes cannot be atomic as a group, and a bare anti-join rewrite
-    * that died between the postings publish and the stats publish would
-    * serve post-delete postings against pre-delete idf/avgdl — silently
-    * wrong scores with nothing demanding a retry. With the tombstone
-    * down first, every crash window serves the tombstone-MASKED index
-    * (exact — [[readStats]] recomputes from the filtered doclens), and
-    * re-running converges. Index-sized work, never a corpus
-    * re-tokenization; serving afterwards is bit-identical to a fresh
-    * build over the remaining corpus.
+    * right-to-be-forgotten path, IMMEDIATE form ([[TextIndex]]'s
+    * `delete`: tombstones, then the fold). The tombstones going down
+    * first is what makes the multi-component delete crash-safe: a bare
+    * rewrite that died between the postings and the stats publish would
+    * serve post-delete postings against pre-delete idf/avgdl, where every
+    * crash window now serves the masked index ([[readStats]] recomputes
+    * from the masked doclens). Serving afterwards is bit-identical to a
+    * fresh build over the remaining corpus.
     */
   def deleteFromTextIndex(spark: org.apache.spark.sql.SparkSession,
                           path: String, ids: DataFrame,
-                          idCol: String = "doc_id"): Unit = {
-    tombstoneFromTextIndex(spark, path, ids.select(col(idCol)).distinct(),
-      idCol)
-    TextIndex.compact(spark, path)
-  }
+                          idCol: String = "doc_id"): Unit =
+    TextIndex.delete(path, ids.select(col(idCol)))
 
   /** kept for perfbench/ */
   def compactTextIndex(spark: org.apache.spark.sql.SparkSession,
@@ -361,14 +353,14 @@ object Search {
     val idCol = lens.columns.head
     val postingsThunk = () =>
       publishRewrite(lease, s"$path/postings") { versionDir =>
-        minusTombstoned(Tables.parquet(spark, resolve(spark, s"$path/postings")),
-          tomb, idCol)
+        TextIndex.mask(Tables.parquet(spark, resolve(spark, s"$path/postings")),
+          tomb)
           .repartition(nPost, col("token")).sortWithinPartitions("token", idCol)
           .write.mode("overwrite").parquet(versionDir)
       }
     val lensStatsThunk = () => {
       publishRewrite(lease, s"$path/doclens",
-        minusTombstoned(lens, tomb, idCol).repartition(nLens))
+        TextIndex.mask(lens, tomb).repartition(nLens))
       publishRewrite(lease, s"$path/stats",
         Tables.parquet(spark, resolve(spark, s"$path/doclens")) // post-fold lens
           .agg(count(lit(1)).as("n_docs"),
@@ -380,9 +372,9 @@ object Search {
       // re-sort to the builder's token-ordered layout
       val positionsThunk = () =>
         publishRewrite(lease, s"$path/positions") { versionDir =>
-          minusTombstoned(
+          TextIndex.mask(
             Tables.parquet(spark, resolve(spark, s"$path/positions")),
-            tomb, idCol)
+            tomb)
             .repartition(nPos, col("token")).sortWithinPartitions("token", idCol)
             .write.mode("overwrite").parquet(versionDir)
         }
@@ -391,36 +383,17 @@ object Search {
   }
 
   /** TOMBSTONE documents in a [[saveTextIndex]] index — the batched
-    * alternative to [[deleteFromTextIndex]], whose immediate fold pays
-    * index-sized work per call (the manifest's pre-tombstone problem,
-    * here). The delete appends its id set to `tombstones/` (batch-sized);
-    * serving consults the pending ids — postings and doclens anti-join
-    * them (broadcast — the filtered posting lists are already
-    * query-term-sized), and corpus stats subtract the tombstoned
-    * documents' doclens contribution ([[readStats]]), so BM25 idf/avgdl
-    * reflect the deletion immediately and exactly. [[TextIndex]]'s
-    * `compact` folds the tombstones into a physical delete on the
-    * compaction schedule. Serve-equivalent to the immediate delete at every point
-    * (SearchSpec pins it; q117 pins it against q105's oracle).
+    * alternative to [[deleteFromTextIndex]]'s index-sized fold per call.
+    * Serves mask the pending ids in postings, doclens and positions, and
+    * corpus stats derive from the masked doclens ([[readStats]]), so
+    * BM25 idf/avgdl reflect the deletion at once; [[TextIndex]]'s
+    * `compact` folds them. Serve-equivalent to the immediate delete at
+    * every point (SearchSpec pins it; q117 against q105's oracle).
     */
   def tombstoneFromTextIndex(spark: org.apache.spark.sql.SparkSession,
                              path: String, ids: DataFrame,
                              idCol: String = "doc_id"): Unit =
-    graft.ops.Stage.appendTombstones(ids.select(col(idCol)), path)
-
-  /** `rel` minus tombstoned documents (identity when nothing is
-    * pending). Broadcast anti-join — the pending set is small by the
-    * drip-feed contract. Callers load [[graft.ops.Stage.pendingTombstones]]
-    * ONCE per query and thread it through, so the serve path pays one
-    * pointer-resolve + listing, not one per relation. */
-  private def minusTombstoned(rel: DataFrame, tomb: Option[DataFrame],
-                              idCol: String): DataFrame =
-    tomb match {
-      case Some(t) =>
-        rel.join(t.withColumnRenamed(t.columns.head, idCol),
-          Seq(idCol), "left_anti")
-      case None => rel
-    }
+    TextIndex.tombstone(path, ids.select(col(idCol)))
 
   /** BM25 served from a [[saveTextIndex]] index — bit-identical to
     * [[bm25TopK]] over the same corpus (shared scoring tail), but the
@@ -444,15 +417,11 @@ object Search {
                       k1: Double = 1.2, b: Double = 0.75,
                       at: graft.ops.Family.At = graft.ops.Family.Live)
       : DataFrame = {
-    // tombstones BEFORE the data resolve (the linearizable ordering —
-    // see Stage.tombstoneSnapshot)
-    val tomb = graft.ops.Stage.pendingTombstones(spark, path)
-    val read = TextIndex.read(spark, path, at) _
-    val tf = minusTombstoned(
-      read("postings").where(col("token").isInCollection(terms)), tomb, idCol)
-    val dl = minusTombstoned(read("doclens"), tomb, idCol)
-    scoreBm25(tf, dl, readStats(read("stats"), tomb.map(_ => dl)), terms,
-      k, idCol, k1, b)
+    val v = TextIndex.view(spark, path, at)
+    val tf = v("postings").where(col("token").isInCollection(terms))
+    val dl = v("doclens")
+    scoreBm25(tf, dl, readStats(v("stats"), v.tombstones.map(_ => dl)),
+      terms, k, idCol, k1, b)
   }
 
   /** The text index's lifecycle descriptor: staged append, compaction
@@ -466,7 +435,8 @@ object Search {
     * [[saveTextIndex]] builds born versioned, so a fresh index is
     * pinnable at once. */
   val TextIndex: graft.ops.Family =
-    graft.ops.Family("text_index", textComponents, foldText)
+    graft.ops.Family("text_index", textComponents, foldText,
+      graft.ops.Family.Key(Set("postings", "doclens")))
 
   /** Maintenance DIFF of the index's two serveable states: PREVIOUS
     * (the snapshot the last maintenance op superseded) vs LIVE, as one
@@ -501,14 +471,10 @@ object Search {
                         terms: Seq[String], idCol: String = "doc_id",
                         at: graft.ops.Family.At = graft.ops.Family.Live)
       : DataFrame = {
-    // tombstones BEFORE the data resolve (the linearizable ordering —
-    // see Stage.tombstoneSnapshot)
-    val tomb = graft.ops.Stage.pendingTombstones(spark, path)
-    val postings = TextIndex.read(spark, path, at)("postings")
     require(terms.nonEmpty && terms.size == terms.distinct.size,
       "conjunctiveSearch needs a non-empty, duplicate-free term set")
-    minusTombstoned(
-      postings.where(col("token").isInCollection(terms)), tomb, idCol)
+    TextIndex.view(spark, path, at)("postings")
+      .where(col("token").isInCollection(terms))
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_terms"), sum(col("tf")).as("n_occurrences"))
       .where(col("n_terms") === terms.size)
@@ -601,8 +567,9 @@ object Search {
                           path: String, phrase: Seq[String], k: Int,
                           idCol: String = "doc_id"): DataFrame = {
     require(phrase.nonEmpty, "phrase search needs at least one term")
-    val tomb = graft.ops.Stage.pendingTombstones(spark, path)
-    val positions = TextIndex.read(spark, path, graft.ops.Family.Live)("positions")
+    // masked once, after the slot join (the slots read positions raw)
+    val v = TextIndex.view(spark, path)
+    val positions = v.raw("positions")
     // one aliased, term-filtered relation per phrase SLOT (not per
     // distinct term): the pushed filter prunes token-sorted row groups
     val slots = phrase.zipWithIndex.map { case (t, i) =>
@@ -616,8 +583,8 @@ object Search {
     val counted = joined.select(col(idCol),
         size(filter(col("p_0"), isHit)).as("n_occurrences"))
       .where(col("n_occurrences") > 0)
-    val masked = minusTombstoned(counted, tomb, idCol)
-    val top = masked.orderBy(col("n_occurrences").desc, col(idCol)).limit(k)
+    val top = v.mask(counted)
+      .orderBy(col("n_occurrences").desc, col(idCol)).limit(k)
     val w = Window.orderBy(col("n_occurrences").desc, col(idCol))
     top.withColumn("rank", row_number().over(w)).orderBy("rank")
   }
@@ -645,8 +612,9 @@ object Search {
                              idCol: String = "doc_id"): DataFrame = {
     require(termA != termB, "proximity needs two distinct terms")
     require(maxDist >= 1, s"maxDist must be positive: $maxDist")
-    val tomb = graft.ops.Stage.pendingTombstones(spark, path)
-    val positions = TextIndex.read(spark, path, graft.ops.Family.Live)("positions")
+    // masked once, after the pair join (the sides read positions raw)
+    val v = TextIndex.view(spark, path)
+    val positions = v.raw("positions")
     def side(t: String, as: String) = positions.where(col("token") === t)
       .select(col(idCol), col("positions").as(as))
     val joined = side(termA, "pa").join(side(termB, "pb"), Seq(idCol))
@@ -661,8 +629,7 @@ object Search {
         least(acc, aggregate(col("pb"), lit(Long.MaxValue), (acc2, b) =>
           least(acc2, abs(b - a).cast("long"))))).as("min_dist"))
       .where(col("n_pairs") > 0L)
-    val masked = minusTombstoned(pairs, tomb, idCol)
-    val top = masked.orderBy(col("n_pairs").desc, col(idCol)).limit(k)
+    val top = v.mask(pairs).orderBy(col("n_pairs").desc, col(idCol)).limit(k)
     val w = Window.orderBy(col("n_pairs").desc, col(idCol))
     top.withColumn("rank", row_number().over(w)).orderBy("rank")
   }

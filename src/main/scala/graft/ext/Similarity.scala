@@ -281,21 +281,20 @@ object Similarity {
                      vecCol: String = "embedding"): DataFrame = {
     require(k >= 1, s"k must be positive: $k")
     require(fetch >= k, s"fetch ($fetch) must be >= k ($k)")
-    // ONE tombstone read, ONE meta load, ONE lists resolve — shared by
-    // the candidate probe AND the redundancy-vector read. Two separate
+    // ONE view, ONE meta load — the lists resolve is shared by the
+    // candidate probe AND the redundancy-vector read. Two separate
     // resolves would let a concurrent maintenance publish land between
     // them: candidates from version V1 joined to vectors (and scale)
     // from V2 — silently fewer than k rows, or OLD codes dequantized
     // with NEW parameters after a rebuild.
-    val tomb = graft.ops.Stage.pendingTombstones(spark, path)
-    val listsDir = graft.ops.Stage.resolve(spark, s"$path/lists")
+    val v = IvfIndex.view(spark, path)
     val (scale, _) = loadIvfMeta(spark, path)
-    val served = serveIvfLists(spark, queries, path,
-      Tables.parquet(spark, listsDir), tomb, fetch, nProbe, idCol, vecCol)
+    val served = serveIvfLists(spark, queries, path, v("lists"), fetch,
+      nProbe, idCol, vecCol)
       .select(col("query_id"), col("neighbor_id"), col("cos_sim"))
     val cvec = if (scale > 0) dequantize(col("code"), scale)
       else col("code")
-    val vecs = Tables.parquet(spark, listsDir)
+    val vecs = v.raw("lists")
       .select(col("vec_id").as("neighbor_id"), cvec.as("vec"))
       .withColumn("nrm", norm(col("vec")))
     mmrGreedy(vecs.join(broadcast(served), Seq("neighbor_id")), k, lam)
@@ -324,12 +323,11 @@ object Similarity {
     require(k >= 1, s"k >= 1, got $k") // k=0 would make the greedy's
     // sequence(1, k) DESCEND to [1, 0] and return 2 rows, not 0
     require(fetch >= k, s"fetch ($fetch) must be >= k ($k)")
-    // shared single resolve — the mmrTopKIndexed torn-read rationale
-    val tomb = graft.ops.Stage.pendingTombstones(spark, path)
-    val listsDir = graft.ops.Stage.resolve(spark, s"$path/lists")
+    // one view, one meta load — the mmrTopKIndexed torn-read rationale
+    val v = IvfIndex.view(spark, path)
     val (scale, _) = loadIvfMeta(spark, path)
-    val served = serveIvfLists(spark, queries, path,
-      Tables.parquet(spark, listsDir), tomb, fetch, nProbe, idCol, vecCol)
+    val served = serveIvfLists(spark, queries, path, v("lists"), fetch,
+      nProbe, idCol, vecCol)
     val qL = queries.select(col(idCol).as("query_id"),
       col(labelCol).as("query_label"))
     val nL = labels.select(col(idCol).as("neighbor_id"),
@@ -341,7 +339,7 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"), col("cos_sim"))
     val cvec = if (scale > 0) dequantize(col("code"), scale)
       else col("code")
-    val vecs = Tables.parquet(spark, listsDir)
+    val vecs = v.raw("lists")
       .select(col("vec_id").as("neighbor_id"), cvec.as("vec"))
       .withColumn("nrm", norm(col("vec")))
     mmrGreedy(vecs.join(broadcast(cross), Seq("neighbor_id")), k, lam)
@@ -889,10 +887,8 @@ object Similarity {
     * the shrunk index equals a fresh build over the survivors. */
   def deleteFromPqIndex(spark: org.apache.spark.sql.SparkSession,
                         path: String, ids: DataFrame,
-                        idCol: String = "vec_id"): Unit = {
-    graft.ops.Stage.appendTombstones(ids.select(col(idCol).as("vec_id")), path)
-    PqIndex.compact(spark, path)
-  }
+                        idCol: String = "vec_id"): Unit =
+    PqIndex.delete(path, ids.select(col(idCol).as("vec_id")))
 
   /** ADC top-k served from a persisted [[savePqIndex]] index: the scan
     * is the 8-byte-code relation, the query side stays exact —
@@ -909,12 +905,9 @@ object Similarity {
                     vecCol: String = "embedding",
                     at: graft.ops.Family.At = graft.ops.Family.Live)
       : DataFrame = {
-    // tombstones BEFORE the codes resolve (see Stage.tombstoneSnapshot)
-    val tomb = graft.ops.Stage.pendingTombstones(spark, path)
+    val v = PqIndex.view(spark, path, at)
     val (dim, cb) = loadPqMeta(spark, path)
-    pqServeCodes(
-      minusTombstoned(PqIndex.read(spark, path, at)("codes"), tomb)
-        .withColumnRenamed("vec_id", "neighbor_id"),
+    pqServeCodes(v("codes").withColumnRenamed("vec_id", "neighbor_id"),
       queries, k, dim, cb, idCol, vecCol)
   }
 
@@ -953,16 +946,17 @@ object Similarity {
   }
 
   /** The PQ and binary compaction fold: the one-row-per-vector
-    * component at `dir` (codes, sig) minus the tombstoned vec_ids,
+    * `component` (codes, sig) of `family` minus the tombstoned vec_ids,
     * coalesced to [[graft.ops.Stage.compactionPartitions]] files and
     * published atomically. A tombstone-free fold preserves the row
     * multiset, so serving before and after is identical. */
-  private def foldVectors(lease: graft.ops.Stage.Lease, dir: String,
+  private def foldVectors(family: graft.ops.Family,
+                          lease: graft.ops.Stage.Lease, component: String,
                           tomb: Option[DataFrame]): Unit = {
-    val spark = lease.spark
+    val (spark, dir) = (lease.spark, s"${lease.root}/$component")
     val n = graft.ops.Stage.compactionPartitions(spark, dir)
     graft.ops.Stage.publishRewrite(lease, dir,
-      minusTombstoned(Tables.parquet(spark, graft.ops.Stage.resolve(spark, dir)),
+      family.mask(Tables.parquet(spark, graft.ops.Stage.resolve(spark, dir)),
         tomb).repartition(n))
   }
 
@@ -985,7 +979,8 @@ object Similarity {
     * pins serve through `pqTopKIndexed(…, at)`. */
   val PqIndex: graft.ops.Family =
     graft.ops.Family("pq_index", (_, _) => Seq("codes"),
-      (lease, _, tomb) => foldVectors(lease, s"${lease.root}/codes", tomb))
+      (lease, _, tomb) => foldVectors(PqIndex, lease, "codes", tomb),
+      graft.ops.Family.Key(Set("codes")))
 
   // ------------------------------------------------ binary index persistence
 
@@ -1071,10 +1066,8 @@ object Similarity {
     * build over the survivors. */
   def deleteFromBinaryIndex(spark: org.apache.spark.sql.SparkSession,
                             path: String, ids: DataFrame,
-                            idCol: String = "vec_id"): Unit = {
-    graft.ops.Stage.appendTombstones(ids.select(col(idCol).as("vec_id")), path)
-    BinaryIndex.compact(spark, path)
-  }
+                            idCol: String = "vec_id"): Unit =
+    BinaryIndex.delete(path, ids.select(col(idCol).as("vec_id")))
 
   /** Hamming-candidate + exact-rerank top-k served from a persisted
     * [[saveBinaryIndex]] index: candidates come from the stored packed
@@ -1092,11 +1085,9 @@ object Similarity {
                         vecCol: String = "embedding",
                         at: graft.ops.Family.At = graft.ops.Family.Live)
       : DataFrame = {
-    val tomb = graft.ops.Stage.pendingTombstones(spark, path)
-    val sigs = BinaryIndex.read(spark, path, at)("sig")
-    binaryServeSigs(
-      minusTombstoned(sigs, tomb).withColumnRenamed("vec_id", "neighbor_id"),
-      queries, corpus, k, overfetch, binaryIndexDim(spark, path, sigs),
+    val v = BinaryIndex.view(spark, path, at)
+    binaryServeSigs(v("sig").withColumnRenamed("vec_id", "neighbor_id"),
+      queries, corpus, k, overfetch, binaryIndexDim(spark, path, v.raw("sig")),
       idCol, vecCol)
   }
 
@@ -1121,7 +1112,8 @@ object Similarity {
     * `binaryTopKIndexed(…, at)`. */
   val BinaryIndex: graft.ops.Family =
     graft.ops.Family("binary_index", (_, _) => Seq("sig"),
-      (lease, _, tomb) => foldVectors(lease, s"${lease.root}/sig", tomb))
+      (lease, _, tomb) => foldVectors(BinaryIndex, lease, "sig", tomb),
+      graft.ops.Family.Key(Set("sig")))
 
   /** SEMANTIC DECONTAMINATION: for every train vector, its maximum
     * cosine against a held-out probe/eval set, the probe that attains
@@ -1896,38 +1888,19 @@ object Similarity {
     */
   def deleteFromIvfIndex(spark: org.apache.spark.sql.SparkSession,
                          path: String, ids: DataFrame,
-                         idCol: String = "vec_id"): Unit = {
-    tombstoneFromIvfIndex(spark, path, ids, idCol)
-    IvfIndex.compact(spark, path)
-  }
+                         idCol: String = "vec_id"): Unit =
+    IvfIndex.delete(path, ids.select(col(idCol).as("vec_id")))
 
   /** TOMBSTONE vectors in a [[saveIvfIndex]] index — the batched
-    * alternative to [[deleteFromIvfIndex]]'s per-call lists rewrite
-    * (index-sized work per delete under a drip-feed). Appends the id set
-    * (batch-sized); [[topKIvfIndexed]] anti-joins the pending ids
-    * (broadcast) so deleted vectors stop appearing in served top-k
-    * immediately, and [[IvfIndex]]'s `compact` folds the tombstones into
-    * a physical delete then resets. Serve-equivalent to the immediate
-    * delete at every point (q118 pins it against q106's oracle).
+    * alternative to [[deleteFromIvfIndex]]'s per-call lists rewrite:
+    * serves mask the pending ids at once, and [[IvfIndex]]'s `compact`
+    * folds them. Serve-equivalent to the immediate delete at every point
+    * (q118 pins it against q106's oracle).
     */
   def tombstoneFromIvfIndex(spark: org.apache.spark.sql.SparkSession,
                             path: String, ids: DataFrame,
                             idCol: String = "vec_id"): Unit =
-    graft.ops.Stage.appendTombstones(
-      ids.select(col(idCol).as("vec_id")), path)
-
-  /** `lists` (or any one-row-per-vector relation keyed by vec_id) minus
-    * tombstoned vectors (identity when nothing is pending). Broadcast
-    * anti-join on vec_id; callers load
-    * [[graft.ops.Stage.pendingTombstones]] once per query. */
-  private def minusTombstoned(rel: DataFrame,
-                              tomb: Option[DataFrame]): DataFrame =
-    tomb match {
-      case Some(t) => rel.join(
-        t.withColumnRenamed(t.columns.head, "vec_id"),
-        Seq("vec_id"), "left_anti")
-      case None => rel
-    }
+    IvfIndex.tombstone(path, ids.select(col(idCol).as("vec_id")))
 
   /** [[IvfIndex]]'s compaction fold over the inverted lists, after a run
     * of per-batch appends: each micro-batch leaves its own `b<batchId>-*`
@@ -1950,7 +1923,7 @@ object Similarity {
     val (spark, path) = (lease.spark, lease.root)
     val n = compactionPartitions(spark, s"$path/lists")
     publishRewrite(lease, s"$path/lists") { versionDir =>
-      minusTombstoned(Tables.parquet(spark, resolve(spark, s"$path/lists")), tomb)
+      IvfIndex.mask(Tables.parquet(spark, resolve(spark, s"$path/lists")), tomb)
         .repartition(n, col("centroid"))
         .write.mode("overwrite").partitionBy("centroid").parquet(versionDir)
     }
@@ -1976,13 +1949,9 @@ object Similarity {
                      idCol: String = "vec_id",
                      vecCol: String = "embedding",
                      at: graft.ops.Family.At = graft.ops.Family.Live)
-      : DataFrame = {
-    // tombstones BEFORE the lists resolve (the linearizable ordering —
-    // see Stage.tombstoneSnapshot)
-    val tomb = graft.ops.Stage.pendingTombstones(spark, path)
-    val lists = IvfIndex.read(spark, path, at)("lists")
-    serveIvfLists(spark, queries, path, lists, tomb, k, nProbe, idCol, vecCol)
-  }
+      : DataFrame =
+    serveIvfLists(spark, queries, path, IvfIndex.view(spark, path, at)("lists"),
+      k, nProbe, idCol, vecCol)
 
   /** [[hardNegatives]]' SCALE PATH, made concrete: mine cross-label hard
     * negatives from the PERSISTED IVF index via OVER-FETCH — serve
@@ -2039,7 +2008,8 @@ object Similarity {
     * [[saveIvfIndex]] writes the lists born-versioned, so any saved
     * index is pinnable immediately. */
   val IvfIndex: graft.ops.Family =
-    graft.ops.Family("ivf_index", (_, _) => Seq("lists"), foldLists)
+    graft.ops.Family("ivf_index", (_, _) => Seq("lists"), foldLists,
+      graft.ops.Family.Key(Set("lists")))
 
   /** Maintenance DIFF of the index's two serveable states: PREVIOUS
     * (the lists snapshot the last maintenance op superseded) vs LIVE,
@@ -2061,18 +2031,19 @@ object Similarity {
       topKIvfIndexed(spark, queries, path, k, nProbe, idCol, vecCol, _),
       Seq("query_id", "neighbor_id"), "cos_sim", "cos")
 
-  /** The shared IVF serve body over a lists relation already read at
-    * one version — [[topKIvfIndexed]] at any `at`, and the MMR serves
-    * that share one lists resolve with their redundancy-vector read. */
+  /** The shared IVF serve body over a (masked) lists relation already
+    * read at one version — [[topKIvfIndexed]] at any `at`, and the MMR
+    * serves that share one lists resolve with their redundancy-vector
+    * read. */
   private def serveIvfLists(spark: org.apache.spark.sql.SparkSession,
                             queries: DataFrame, path: String,
-                            lists: DataFrame, tomb: Option[DataFrame],
+                            lists: DataFrame,
                             k: Int, nProbe: Int, idCol: String,
                             vecCol: String): DataFrame = {
     val (scale, cents) = loadIvfMeta(spark, path)
     val cvec = if (scale > 0) dequantize(col("code"), scale)
       else col("code")
-    val c = minusTombstoned(lists, tomb)
+    val c = lists
       .select(col("vec_id").as("neighbor_id"), cvec.as("c_vec"), col("centroid"))
       .withColumn("c_norm", norm(col("c_vec")))
     val q = queries.select(col(idCol).as("query_id"),

@@ -1,14 +1,16 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, lit, when}
+import org.apache.spark.sql.functions.{col, lit, when, xxhash64}
 
 /** One persisted-index FAMILY: a name and the versioned components that
   * live under each of its roots. The named-snapshot lifecycle is the
   * same for every family — only the component set differs — so it is
   * written once here, over [[Stage]]'s per-component primitives, and
-  * each family declares one descriptor (`Search.TextIndex`,
-  * `Dedup.MinhashManifest`, `Corpus.Lm`, `Similarity.IvfIndex`, ...).
+  * each family declares one descriptor: `Search.TextIndex`,
+  * `Dedup.MinhashManifest`, `Dedup.WinnowManifest`, `Dedup.SetSimIndex`,
+  * `Corpus.Lm`, `Similarity.IvfIndex`, `Similarity.PqIndex` and
+  * `Similarity.BinaryIndex`.
   * `components` may probe the root (the text index's set grows a
   * `positions` component when the phrase index exists); snapshot and
   * restore read it under the root lease, so it cannot change mid-op.
@@ -38,8 +40,14 @@ import org.apache.spark.sql.functions.{col, lit, when}
   *
   * The read side is shared too: every indexed serve takes a trailing
   * `at: Family.At` (default [[Family.Live]]) and reads its components
-  * through [[read]], so the live, previous and pinned serves of a family
-  * are one code path that differs only in which version it reads.
+  * through one [[view]], so the live, previous and pinned serves of a
+  * family are one code path that differs only in which version it reads.
+  *
+  * So are TOMBSTONES. The descriptor's [[Family.Key]] says how a row of
+  * its masked components matches a tombstone key; [[tombstone]] writes
+  * the keys, a [[view]] loads the pending ones once and masks its reads,
+  * and [[mask]]/[[matched]] are the one anti-/semi-join every serve and
+  * fold goes through.
   *
   * So is the write side. A family supplies one per-batch STAGER (its
   * `appendToX` passes it to [[append]]) and one compaction rewrite,
@@ -56,11 +64,11 @@ import org.apache.spark.sql.functions.{col, lit, when}
   *    snapshots the pending tombstones, runs `fold` over them, retires
   *    exactly the consumed tombstone files and folds the ledger.
   *    [[autoCompact]] runs it when a component has fragmented.
-  *  - a DELETE is "append tombstones, then [[compact]]": the fold is the
-  *    one physical delete. A delete therefore also folds the tombstones
-  *    that were already pending, and `At.Previous` after it serves the
-  *    pre-fold state. The LM is the exception: it deletes by publishing
-  *    negated count deltas through [[append]].
+  *  - a DELETE is [[delete]]: [[tombstone]], then [[compact]]; the fold
+  *    is the one physical delete. A delete therefore also folds the
+  *    tombstones that were already pending, and `At.Previous` after it
+  *    serves the pre-fold state. The LM is the exception: it deletes by
+  *    publishing negated count deltas through [[append]].
   *  - [[ingest]] is the streaming driver: append each micro-batch,
   *    auto-compact, then compact once the stream has drained.
   *
@@ -77,7 +85,8 @@ import org.apache.spark.sql.functions.{col, lit, when}
 final case class Family(
     name: String,
     components: (SparkSession, String) => Seq[String],
-    fold: (Stage.Lease, Seq[String], Option[DataFrame]) => Unit) {
+    fold: (Stage.Lease, Seq[String], Option[DataFrame]) => Unit,
+    key: Family.Key = Family.Key(Set.empty)) {
 
   /** Append one batch to the family at `path`, staged and ledgered:
     *  - `batchId = Some(id)`: [[Stage.appendExactlyOnce]] — a replayed
@@ -124,6 +133,52 @@ final case class Family(
       Stage.resetTombstones(lease, path, snap.map(_._2).getOrElse(Nil))
       Stage.compactLedger(lease, path)
     }
+
+  /** Record `keys` as pending deletes of the family at `path`: one
+    * column, named as [[Family.Key]] says (the index's id column, or
+    * `seth` for a content-keyed family). Batch-sized work: every [[view]]
+    * masks the keys at once, and the next [[compact]] folds them into a
+    * physical delete. The append rides Spark's commit protocol
+    * (uncommitted task files stay under `_temporary`), so a crashed
+    * tombstone leaves no torn key set. */
+  def tombstone(path: String, keys: DataFrame): Unit = {
+    require(keys.columns.length == 1,
+      s"$name tombstone keys are one column, got ${keys.columns.mkString(", ")}")
+    val named = if (key.hashOf.isDefined) keys.toDF("seth") else keys
+    named.distinct().write.mode("append")
+      .parquet(Stage.resolve(keys.sparkSession, s"$path/tombstones"))
+  }
+
+  /** The immediate delete: [[tombstone]] `keys`, then [[compact]]. The
+    * tombstones go down first, so every crash window serves the masked
+    * index and re-running converges. */
+  def delete(path: String, keys: DataFrame): Unit = {
+    tombstone(path, keys)
+    compact(keys.sparkSession, path)
+  }
+
+  /** `rel` minus the rows a key in `tomb` matches — the ONE tombstone
+    * mask: an anti-join of the row key ([[Family.Key]]) against the keys,
+    * which Spark broadcasts (the pending set is small by the drip-feed
+    * contract). `rel` itself when nothing is pending. An id key joins by
+    * name, so it leads the output's columns: a fold writes its rows in
+    * that order, and the text postings scan reads fewer bytes with the
+    * id first. */
+  def mask(rel: DataFrame, tomb: Option[DataFrame]): DataFrame =
+    tomb.fold(rel)(keyJoin(rel, _, "left_anti"))
+
+  /** The rows of `rel` a key in `tomb` matches (none when nothing is
+    * pending): what a fold deletes from the components derived from a
+    * masked one (the MinHash bands, the set-sim postings). */
+  def matched(rel: DataFrame, tomb: Option[DataFrame]): DataFrame =
+    tomb.fold(rel.limit(0))(keyJoin(rel, _, "left_semi"))
+
+  private def keyJoin(rel: DataFrame, tomb: DataFrame,
+                      how: String): DataFrame = key.hashOf match {
+    case Some(c) => rel.withColumn("seth", xxhash64(col(c)))
+      .join(tomb, Seq("seth"), how).drop("seth")
+    case None => rel.join(tomb, tomb.columns.toSeq, how)
+  }
 
   /** [[compact]] when some component has fragmented past
     * `maxFilesPerComponent` live files ([[Stage.shouldCompact]]);
@@ -221,10 +276,8 @@ final case class Family(
     *    ([[Stage.readSnapshot]]) — not the version directory, which
     *    absorbs every append published after the pin.
     * Throws IllegalStateException naming the component path and the
-    * family when the requested version does not exist. Serves read
-    * [[Stage.pendingTombstones]] BEFORE calling this (the linearizable
-    * order), and the tombstones mask every version alike: a forget
-    * issued after a pin still holds for the pinned read. */
+    * family when the requested version does not exist. Unmasked: a serve
+    * reads through a [[view]], which loads the tombstones first. */
   def read(spark: SparkSession, path: String, at: Family.At)(
       component: String): DataFrame = {
     val dir = s"$path/$component"
@@ -241,9 +294,54 @@ final case class Family(
           "snapshot before serving it"))
     }
   }
+
+  /** The one READ entry point of a serve: a [[Family.View]] of the family
+    * at `path`, version `at`. */
+  def view(spark: SparkSession, path: String,
+           at: Family.At = Family.Live): View =
+    new View(spark, path, at)
+
+  /** One serve's read of the family. The pending tombstones load when the
+    * view is made, BEFORE any component resolves (the linearizable order
+    * of [[Stage.tombstoneSnapshot]]), and mask every version alike: a
+    * forget issued after a pin holds for the pinned read too. Each
+    * component resolves once per view. */
+  final class View private[Family] (spark: SparkSession, path: String,
+                                    at: Family.At) {
+
+    /** The pending tombstone keys, None when nothing is pending. */
+    val tombstones: Option[DataFrame] =
+      Stage.tombstoneSnapshot(spark, path).map(_._1)
+
+    private val reads = scala.collection.mutable.Map.empty[String, DataFrame]
+
+    /** Component `c` at `at` as stored ([[read]]), unmasked. */
+    def raw(c: String): DataFrame =
+      reads.getOrElseUpdate(c, read(spark, path, at)(c))
+
+    /** Component `c` at `at`, minus tombstoned rows if the key masks it. */
+    def apply(c: String): DataFrame =
+      if (key.masks(c)) mask(raw(c)) else raw(c)
+
+    /** `rel`, derived from this view's rows, minus the tombstoned ones —
+      * for a serve that masks after a join rather than at the read. */
+    def mask(rel: DataFrame): DataFrame =
+      Family.this.mask(rel, tombstones)
+  }
 }
 
 object Family {
+
+  /** How a row of a family's components matches a tombstone key: an id
+    * key by the row column its tombstones are named after (`vec_id`,
+    * winnow's `doc`, the text builder's `idCol`), a content key by the
+    * `xxhash64` of column `hashOf` against tombstones named `seth`. A
+    * [[Family.View]] masks the components in `masks` at the read; the
+    * rest read as stored (meta, stats, the candidate-only MinHash bands
+    * and set-sim postings) or mask after a join ([[Family.View.mask]]:
+    * the text `positions`, winnow's `fps`). The default masks nothing at
+    * the read: winnow's, and the LM's, which keeps no tombstones. */
+  final case class Key(masks: Set[String], hashOf: Option[String] = None)
 
   /** Which version of a family's state a serve reads ([[Family.read]]). */
   sealed trait At

@@ -217,9 +217,11 @@ object Stage {
     // sibling components' flips stay apart in the root's `_fence/`. (A
     // crashed flip leaves the version DIR behind, so a later retry
     // computes a fresh version — no stale-fence hazard.)
-    lease.assertMayCommit(s"flip-${rootPath.getName}-$version")
+    val commitId = s"flip-${rootPath.getName}-$version"
+    lease.assertMayCommit(commitId)
     flipPointer(lease.spark, fs, rootPath, version, grace)
     gcStale(fs, rootPath)
+    lease.retireFences(Seq(commitId))
   }
 
   /** Make a component root with no pointer a versioned layout: an empty
@@ -566,8 +568,7 @@ object Stage {
   }
 
   /** The REBUILD boundary every index builder goes through
-    * ([[Family.rebuild]]; the set-sim index, which has no family, calls
-    * it with its component list): under the root writer lease, clear
+    * ([[Family.rebuild]]): under the root writer lease, clear
     * what the OLD corpus left at `path`, then run `build`, which
     * publishes every directory it writes with [[publishRebuild]] — so
     * every component is born versioned and no superseded version gets
@@ -618,13 +619,16 @@ object Stage {
     *    retrying a crashed writer's commit must clear the stale fence
     *    first — [[appendExactlyOnce]]/[[publishOnce]] do so next to
     *    their staging wipe, under the lease, where the absent marker
-    *    proves the predecessor never committed.
+    *    proves the predecessor never committed. Spent fences retire: a
+    *    flip's after its GC, a ledger marker's at [[compactLedger]].
     */
   sealed trait FencingPrimitive {
     /** Throws IllegalStateException when the writer holding `token` must
       * not commit `commitId` on `root`; `lock` is root's writer lock. */
     def assertMayCommit(fs: FileSystem, root: Path, lock: Path,
                         token: String, commitId: String): Unit
+    /** Remove the fences, if any, of the spent commits `commitIds`. */
+    def retire(fs: FileSystem, root: Path, commitIds: Seq[String]): Unit
   }
 
   /** The default primitive: lock re-read, one retry on transient read
@@ -654,6 +658,7 @@ object Stage {
             "files will be swept by the next maintenance op. Re-run the " +
             "operation under a fresh lease.")
     }
+    def retire(fs: FileSystem, root: Path, commitIds: Seq[String]): Unit = ()
   }
 
   /** The strict primitive — see [[FencingPrimitive]]'s contract notes. */
@@ -680,6 +685,8 @@ object Stage {
         }
       }
     }
+    def retire(fs: FileSystem, root: Path, commitIds: Seq[String]): Unit =
+      commitIds.foreach(id => fs.delete(fencePath(root, id), false))
   }
 
   /** Where [[ExclusiveCommitToken]] materializes a commit's fence. */
@@ -729,14 +736,15 @@ object Stage {
     * order. */
   @volatile var fencing: FencingPrimitive = LockReRead
 
-  /** Thread-scoped [[fencing]] override — flipping the GLOBAL install
-    * mid-flight would change the primitive under every other thread's
-    * in-progress commits (exactly what a concurrently-running test
-    * suite does); this scopes the choice to the calling thread. */
+  /** Thread-scoped [[fencing]] override, read once, when a lease is
+    * acquired: flipping the GLOBAL install would change the primitive of
+    * every lease any other thread of the JVM acquires meanwhile (another
+    * test's writers, a stream's batch thread). */
   private val fencingOverride = new ThreadLocal[FencingPrimitive]
 
-  /** Run `body` with `primitive` as THIS THREAD's commit-point fencing
-    * (other threads keep the global install). */
+  /** Run `body` with `primitive` as the commit-point fencing of every
+    * lease THIS THREAD acquires (other threads keep the global install).
+    * The lease carries it, so its [[Par]] thunks fence with it too. */
   def withFencing[T](primitive: FencingPrimitive)(body: => T): T = {
     val prev = fencingOverride.get
     fencingOverride.set(primitive)
@@ -762,13 +770,15 @@ object Stage {
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** A held writer lease on the index root `root`: the session, the
-    * root, its `_writer.lock` and this acquire's token. Only
-    * [[withWriterLease]] makes one, for the duration of its body; a
-    * write under the root takes it as a value, so a [[Par]] thunk
-    * commits under the same lease as its caller. */
+    * root, its `_writer.lock`, this acquire's token and the fencing
+    * primitive chosen at acquire. Only [[withWriterLease]] makes one, for
+    * the duration of its body; a write under the root takes it as a
+    * value, so a [[Par]] thunk commits under the same lease, and the same
+    * primitive, as its caller. */
   final class Lease private[ops] (val spark: SparkSession, val root: String,
                                   private[Stage] val lock: Path,
-                                  private[Stage] val token: String) {
+                                  private[Stage] val token: String,
+                                  fencing: FencingPrimitive) {
 
     /** `dir` and its filesystem; `dir` must be the root or under it. */
     private[Stage] def dir(path: String): (Path, FileSystem) = {
@@ -789,8 +799,12 @@ object Stage {
       * narrows it to the atomic create of `root/_fence/<commitId>` (the
       * id two contenders for one commit SHARE). */
     private[Stage] def assertMayCommit(commitId: String): Unit =
-      Option(fencingOverride.get).getOrElse(fencing).assertMayCommit(
-        fsFor(spark, lock), new Path(root), lock, token, commitId)
+      fencing.assertMayCommit(fsFor(spark, lock), new Path(root), lock,
+        token, commitId)
+
+    /** Retire the spent commits `commitIds` with the lease's primitive. */
+    private[Stage] def retireFences(commitIds: Seq[String]): Unit =
+      fencing.retire(fsFor(spark, lock), new Path(root), commitIds)
   }
 
   /** Run `body` holding an exclusive writer lease on `path` — the
@@ -906,7 +920,8 @@ object Stage {
             "finishes, or delete the lock if its holder is known dead")
     }
     val refresher = startLeaseRefresher(fs, lock, token, staleAfterMs)
-    try body(new Lease(spark, path, lock, token))
+    try body(new Lease(spark, path, lock, token,
+      Option(fencingOverride.get).getOrElse(fencing)))
     finally {
       refresher.foreach { case (t, stop) => stop.countDown(); t.join(1000) }
       releaseIfOwner(fs, lock, token)
@@ -1223,18 +1238,6 @@ object Stage {
     done
   }
 
-  /** Append delete keys to an index root's `tombstones/` table — the
-    * batched-delete pattern every index family shares: a delete appends
-    * its key set (batch-sized), serving consults the pending keys with a
-    * broadcast anti-join, and the family's compaction folds them into a
-    * physical delete then resets. The append rides Spark's commit
-    * protocol (uncommitted task files stay under `_temporary`), so a
-    * crashed delete leaves no torn key set.
-    */
-  def appendTombstones(keys: DataFrame, path: String): Unit =
-    keys.distinct().write.mode("append")
-      .parquet(resolve(keys.sparkSession, s"$path/tombstones"))
-
   /** A consistent snapshot of an index root's pending tombstones: the
     * keys DataFrame PINNED to the exact data files present at call time,
     * plus that file list. Pinning matters twice over. A fold runs
@@ -1249,7 +1252,7 @@ object Stage {
     * None when nothing is pending. The emptiness probe is a
     * metadata-only listing for COMMITTED data files, so torn states read
     * correctly as "no pending deletes" instead of erroring every later
-    * serve: a crashed [[appendTombstones]] that created the directory
+    * serve: a crashed [[Family.tombstone]] that created the directory
     * but committed nothing (only `_temporary` inside), and a crashed
     * reset that deleted some files.
     *
@@ -1259,8 +1262,8 @@ object Stage {
     * the post-fold version (keys already physically gone) and the stale
     * pending set anti-joins as a no-op. Data-first is NOT: a pre-fold
     * data version paired with the post-reset (empty) pending set would
-    * serve deleted rows. Every serve path in Search/Similarity/Dedup
-    * follows tombstones-first.
+    * serve deleted rows. Every serve reads through a [[Family.View]],
+    * which loads the tombstones first.
     */
   def tombstoneSnapshot(spark: SparkSession,
                         path: String): Option[(DataFrame, Seq[Path])] = {
@@ -1351,13 +1354,15 @@ object Stage {
     * crash mid-sweep leaves extra markers that the next compaction
     * removes — never a missing one. Called by [[Family.compact]] under
     * the root `lease`, so one maintenance op bounds both data and ledger
-    * fragmentation.
+    * fragmentation. A committed marker's create-exclusive refuses any
+    * second committer, so its commit fence is retired here.
     */
   def compactLedger(lease: Lease, path: String): Unit = {
     val (_, fs) = lease.dir(path)
     val ledger = new Path(s"$path/_ledger")
     if (!fs.exists(ledger)) return
     val entries = fs.listStatus(ledger).map(_.getPath)
+    lease.retireFences(entries.map(_.getName).toSeq)
     val high = highWaterIn(entries.map(_.getName), includeBatch = true)
     if (high < 0) return
     val highMarker = new Path(ledger, s"high-$high")

@@ -305,10 +305,11 @@ object DedupQueries {
     "q218_stream_setsim_ingest" -> ((s, d) => {
       // the exact-gate ingest loop CLOSED over streaming (q182's shape
       // for this family): empty born-versioned shell, the even half
-      // streams in via foreachBatch with EXACTLY-ONCE appends, probe
-      // the odd half — must equal probing the batch-built index (q217's
-      // oracle verbatim; append-stability is what makes the shell-fill
-      // path exact by construction)
+      // streams in through the family's self-maintaining ingest
+      // (EXACTLY-ONCE appends, auto-compaction, a final compaction),
+      // probe the odd half — must equal probing the batch-built index
+      // (q217's oracle verbatim; append-stability is what makes the
+      // shell-fill path exact by construction)
       val docs = t(s, d, "documents")
       val path = s"target/graft-stream-setsim-${sfTag(d)}"
       val conf = s.sparkContext.hadoopConfiguration
@@ -322,16 +323,9 @@ object DedupQueries {
         .schema(graft.streaming.DocumentStreams.docSchema)
         .parquet(s"$d/documents.*")
         .where(pmod(col("doc_id"), lit(2)) === 0)
-      val q = stream.writeStream
-        .option("checkpointLocation", s"$path.ckpt")
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-            org.apache.spark.sql.Row], batchId: Long) =>
-          Dedup.appendToSetSimIndex(batch, "text", "doc_id", path,
-            batchId = Some(batchId))
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+      Dedup.SetSimIndex.ingest(stream, path)((batch, batchId) =>
+        Dedup.appendToSetSimIndex(batch, "text", "doc_id", path,
+          batchId = Some(batchId)))
       Dedup.probeSetSimOverlap(
         docs.where(pmod(col("doc_id"), lit(2)) === 1), path,
         threshold = 0.7)
@@ -365,8 +359,8 @@ object DedupQueries {
 
     "q226_stream_setsim_spot" -> ((s, d) => {
       // q218's streamed shell-fill with the same sliced probe: the FULL
-      // even half still streams through exactly-once foreachBatch
-      // appends (the heavy, scale-relevant half of the composite); only
+      // even half still streams through the family's exactly-once
+      // ingest (the heavy, scale-relevant half of the composite); only
       // the probe batch is the id-prefix slice, so the sf1 oracle is the
       // same linear slice × evens replay as q225 — the two heaviest
       // lifecycle composites get direct sf1-computable CORRECTNESS rows
@@ -383,16 +377,9 @@ object DedupQueries {
         .schema(graft.streaming.DocumentStreams.docSchema)
         .parquet(s"$d/documents.*")
         .where(pmod(col("doc_id"), lit(2)) === 0)
-      val q = stream.writeStream
-        .option("checkpointLocation", s"$path.ckpt")
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-            org.apache.spark.sql.Row], batchId: Long) =>
-          Dedup.appendToSetSimIndex(batch, "text", "doc_id", path,
-            batchId = Some(batchId))
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+      Dedup.SetSimIndex.ingest(stream, path)((batch, batchId) =>
+        Dedup.appendToSetSimIndex(batch, "text", "doc_id", path,
+          batchId = Some(batchId)))
       Dedup.probeSetSimOverlap(
         docs.where(pmod(col("doc_id"), lit(2)) === 1 &&
           col("doc_id") < 400), path,

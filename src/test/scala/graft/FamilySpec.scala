@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
 /** The shared persisted-index lifecycle ([[graft.ops.Family]]),
-  * table-driven over all seven family descriptors at sf0.001: build,
+  * table-driven over all eight family descriptors at sf0.001: build,
   * pin, mutate (append or delete), restore — and the live serve equals
   * the pinned state again. The version selector ([[graft.ops.Family.At]])
   * serves the pin, the pre-delete state as Previous, and fails loudly on
@@ -29,13 +29,14 @@ import scala.jdk.CollectionConverters._
   * the retry publishes whole; a failed fresh-id append leaves no staging
   * directory behind the next compaction.
   *
-  * The build half, over the same seven families plus the set-sim index:
-  * a rebuild is the lineage boundary. It writes every directory born
+  * The build half, over the same eight families: a rebuild is the
+  * lineage boundary. It writes every directory born
   * versioned, clears the ledger, staging and tombstones, drops every
   * pin, and is refused while another writer holds the root lease.
   *
-  * Lints over `src/main` keep the write and build halves, and the one
-  * writer lease per index root, from growing back per-family copies.
+  * Lints over `src/main` keep the write and build halves, the tombstone
+  * read and write paths, and the one writer lease per index root, from
+  * growing back per-family copies.
   */
 class FamilySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -69,6 +70,9 @@ class FamilySpec extends AnyFunSuite {
     * the index the serve reads. */
   private def served(df: DataFrame, from: String, to: String): DataFrame =
     df.select(col(from)).distinct().as[Long].collect().toSeq.toDF(to)
+
+  /** The set-sim probes' Jaccard threshold. */
+  private val setSimT = 0.5
 
   private val cases = Seq(
     Case(Search.TextIndex,
@@ -124,7 +128,15 @@ class FamilySpec extends AnyFunSuite {
       p => Dedup.saveWinnowManifest(base, "text", "doc_id", p),
       (p, _) => Dedup.appendToWinnowManifest(probe, "text", "doc_id", p),
       rewrites = false,
-      (p, at) => Dedup.probeWinnowOverlap(probe, p, at = at)))
+      (p, at) => Dedup.probeWinnowOverlap(probe, p, at = at)),
+    Case(Dedup.SetSimIndex,
+      p => Dedup.saveSetSimIndex(base, "text", "doc_id", p),
+      // forget the CONTENT of every corpus document the probe matches
+      (p, _) => Dedup.deleteContentFromSetSimIndex(docs.join(
+        served(Dedup.probeSetSimOverlap(probe, p, setSimT), "doc_corpus",
+          "doc_id"), Seq("doc_id")), "text", p),
+      rewrites = true,
+      (p, at) => Dedup.probeSetSimOverlap(probe, p, setSimT, at = at)))
 
   for (c <- cases) test(s"${c.family.name}: restore serves the pinned " +
       "state; a partial pin restores nothing; drop+vacuum retire it") {
@@ -171,15 +183,11 @@ class FamilySpec extends AnyFunSuite {
     intercept[IllegalStateException] { c.serve(p, Pinned("pin")).collect() }
   }
 
-  /** One index's rebuild fixture: the first `build` (a versioned,
-    * pinnable index even where the builder alone was not), the bare
-    * `saveX` builder that rebuilds it, the frozen meta directories the
-    * builder writes beside the components, and the family (None for
-    * set-sim, which has no lifecycle descriptor). */
-  private case class RebuildCase(name: String, family: Option[Family],
-                                 components: String => Seq[String],
-                                 build: String => Unit, save: String => Unit,
-                                 meta: Seq[String])
+  /** One family's rebuild fixture: the first `build`, the bare `saveX`
+    * builder that rebuilds it and the frozen meta directories the builder
+    * writes beside the components. */
+  private case class RebuildCase(family: Family, build: String => Unit,
+                                 save: String => Unit, meta: Seq[String])
 
   private val metaDirs = Map[Family, Seq[String]](
     Dedup.MinhashManifest -> Seq("meta"),
@@ -188,20 +196,16 @@ class FamilySpec extends AnyFunSuite {
     Similarity.BinaryIndex -> Seq("meta"),
     Dedup.WinnowManifest -> Seq("meta")).withDefaultValue(Nil)
 
-  private val rebuildCases = cases.map(c => RebuildCase(c.family.name,
-    Some(c.family), c.family.components(spark, _), c.build,
+  private val rebuildCases = cases.map(c => RebuildCase(c.family, c.build,
     // the text fixture also adds positions and compacts
     if (c.family == Search.TextIndex) Search.saveTextIndex(docs, _)
     else c.build,
-    metaDirs(c.family))) :+ {
-    val save: String => Unit = Dedup.saveSetSimIndex(base, "text", "doc_id", _)
-    RebuildCase("set_sim", None, _ => Seq("sets", "postings"), save, save, Nil)
-  }
+    metaDirs(c.family)))
 
-  for (r <- rebuildCases) test(s"${r.name}: a rebuild is the lineage " +
+  for (r <- rebuildCases) test(s"${r.family.name}: a rebuild is the lineage " +
       "boundary — every directory born versioned; ledger, staging, " +
       "tombstones and pins cleared; refused under a held root lease") {
-    val p = s"target/graft-test-family-rebuild-${r.name}"
+    val p = s"target/graft-test-family-rebuild-${r.family.name}"
     val fs = new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new Path(p), true)
     def exists(rel: String) = fs.exists(new Path(s"$p/$rel"))
@@ -211,15 +215,11 @@ class FamilySpec extends AnyFunSuite {
     // the old lineage: a versioned build pinned `old`, one committed
     // exactly-once batch, a crashed attempt's staging, a pending tombstone
     r.build(p)
-    val comps = r.components(p)
-    r.family match {
-      case Some(f) => f.snapshot(spark, p, "old")
-      case None => Stage.withWriterLease(spark, p)(lease =>
-        comps.foreach(c => Stage.snapshot(lease, s"$p/$c", "old")))
-    }
+    val comps = r.family.components(spark, p)
+    r.family.snapshot(spark, p, "old")
     Stage.appendExactlyOnce(spark, p, 0L, Nil)(_ => ())
     fs.mkdirs(new Path(s"$p/_staging/batch-9/${comps.head}"))
-    Stage.appendTombstones(Seq(1L).toDF("id"), p)
+    r.family.tombstone(p, Seq(1L).toDF("id"))
     assert(entries("_ledger") == Seq("batch-0"))
     assert(Stage.pendingTombstones(spark, p).isDefined)
 
@@ -242,7 +242,7 @@ class FamilySpec extends AnyFunSuite {
       Stage.resolveSnapshot(spark, s"$p/$c", "old").isDefined))
 
     r.save(p)
-    val dirs = r.components(p) ++ r.meta
+    val dirs = r.family.components(spark, p) ++ r.meta
     val unversioned = dirs.filterNot(d => exists(s"$d/_current"))
     assert(unversioned.isEmpty, s"written in place: $unversioned")
     assert(entries("_ledger").isEmpty && entries("_staging").isEmpty)
@@ -250,8 +250,7 @@ class FamilySpec extends AnyFunSuite {
     val stillPinned = comps.filter(c =>
       Stage.resolveSnapshot(spark, s"$p/$c", "old").isDefined)
     assert(stillPinned.isEmpty, s"old-corpus pins survived: $stillPinned")
-    r.family.foreach(f =>
-      intercept[IllegalArgumentException](f.restore(spark, p, "old")))
+    intercept[IllegalArgumentException](r.family.restore(spark, p, "old"))
   }
 
   /** One family's write-half fixture over `corpus` (keyed by `key`):
@@ -281,6 +280,9 @@ class FamilySpec extends AnyFunSuite {
     * alike, so every step can change a verdict. */
   private lazy val probeAll = docs.where(col("doc_id") < 150)
   private def vecIds(df: DataFrame): DataFrame = df.select("vec_id")
+  /** A document's set-sim content key: the `seth` of its 3-gram set. */
+  private def setSimKey: Column = xxhash64(
+    graft.functions.TextExpressions.hashedWordNgrams(col("text"), 3))
   private def docIds(df: DataFrame): DataFrame = df.select("doc_id")
 
   private val writeCases = Seq(
@@ -319,13 +321,13 @@ class FamilySpec extends AnyFunSuite {
       (df, p, id) => Similarity.appendToPqIndex(df, p, batchId = id),
       // PQ has no public tombstone call: a pending tombstone is what a
       // delete that crashed before its fold leaves behind
-      Some((df, p) => Stage.appendTombstones(vecIds(df), p)),
+      Some((df, p) => Similarity.PqIndex.tombstone(p, vecIds(df))),
       (df, p) => Similarity.deleteFromPqIndex(spark, p, vecIds(df)),
       p => Similarity.pqTopKIndexed(spark, qset, p, k = 5)),
     WriteCase(Similarity.BinaryIndex, "vec_id", emb,
       (df, p) => Similarity.saveBinaryIndex(df, p, dim = 64),
       (df, p, id) => Similarity.appendToBinaryIndex(df, p, batchId = id),
-      Some((df, p) => Stage.appendTombstones(vecIds(df), p)),
+      Some((df, p) => Similarity.BinaryIndex.tombstone(p, vecIds(df))),
       (df, p) => Similarity.deleteFromBinaryIndex(spark, p, vecIds(df)),
       p => Similarity.binaryTopKIndexed(spark, qset, emb, p, k = 5)),
     WriteCase(Dedup.WinnowManifest, "doc_id", docs,
@@ -334,7 +336,17 @@ class FamilySpec extends AnyFunSuite {
         batchId = id),
       Some((df, p) => Dedup.tombstoneFromWinnowManifest(spark, p, docIds(df))),
       (df, p) => Dedup.deleteFromWinnowManifest(spark, p, docIds(df)),
-      p => Dedup.probeWinnowOverlap(probeAll, p)))
+      p => Dedup.probeWinnowOverlap(probeAll, p)),
+    WriteCase(Dedup.SetSimIndex, "doc_id", docs,
+      (df, p) => Dedup.saveSetSimIndex(df, "text", "doc_id", p),
+      (df, p, id) => Dedup.appendToSetSimIndex(df, "text", "doc_id", p,
+        batchId = id),
+      // no public tombstone call either: the content keys a crashed
+      // delete leaves pending
+      Some((df, p) => Dedup.SetSimIndex.tombstone(p, df.select(setSimKey))),
+      (df, p) => Dedup.deleteContentFromSetSimIndex(df, "text", p),
+      p => Dedup.probeSetSimOverlap(probeAll, p, setSimT),
+      content = Some(setSimKey)))
 
   for (c <- writeCases) test(s"${c.family.name}: plain and exactly-once " +
       "appends, auto-compaction, delete and compaction each serve like a " +
@@ -376,6 +388,27 @@ class FamilySpec extends AnyFunSuite {
       .as[Int].collect().forall(_ == 0))
     c.family.compact(spark, p)
     servesLike(effective, "compaction")
+  }
+
+  test("tombstones are stored under the column their mask joins by") {
+    // an id key is named after the index's id column, a content key is
+    // `seth`: every writer of a root's pending files uses one name, so
+    // they read as one schema
+    val ids = Seq(1L, 2L).toDF("doc_id")
+    val cases = Seq[(String, String => Unit, String)](
+      ("text", p => Search.tombstoneFromTextIndex(spark, p, ids), "doc_id"),
+      ("ivf", p => Similarity.tombstoneFromIvfIndex(spark, p, ids, "doc_id"),
+        "vec_id"),
+      ("winnow", p => Dedup.tombstoneFromWinnowManifest(spark, p, ids), "doc"),
+      ("set_sim", p => Dedup.SetSimIndex.tombstone(p, ids), "seth"))
+    for ((name, write, column) <- cases) {
+      val p = s"target/graft-test-family-tombname-$name"
+      val fs = new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.delete(new Path(p), true)
+      write(p); write(p)
+      assert(Stage.pendingTombstones(spark, p).map(_.columns.toSeq) ==
+        Some(Seq(column)), name)
+    }
   }
 
   for (batchId <- Seq(None, Some(7L))) test(s"Family.append(batchId = " +
@@ -483,8 +516,7 @@ class FamilySpec extends AnyFunSuite {
     val leaseOwners = Set("graft/ops/Stage.scala", "graft/ops/Family.scala",
       "graft/ext/Campaign.scala")
     val rootEntryPoints = Set("Search.scala" -> "savePositionalIndex",
-      "Search.scala" -> "enablePositionalIndex",
-      "DedupSetSim.scala" -> "deleteContentFromSetSimIndex")
+      "Search.scala" -> "enablePositionalIndex")
     val DefRe = """def\s+(\w+)""".r
     val stray = main.filterNot(f =>
       leaseOwners.exists(o => f.toString.endsWith(o))).flatMap { f =>
@@ -505,6 +537,23 @@ class FamilySpec extends AnyFunSuite {
       .filterNot(_._2.contains("fencingOverride"))
     assert(threadLocals.isEmpty, "thread-bound lease state in Stage: " +
       threadLocals.map(_._1).mkString(", "))
+  }
+
+  test("src/main ext and queries reach tombstones, ledgers and rebuilds only through Family") {
+    // a family's tombstones are written, loaded and masked by Family
+    // (tombstone, view, mask), its appends staged by Family.append, its
+    // builds bounded by Family.rebuild: a direct Stage call here is a
+    // per-family copy of one of them (and without a tombstone load, no
+    // per-family mask has anything to mask with)
+    val files = sources("src/main/scala/graft/ext") ++
+      sources("src/main/scala/graft/queries")
+    val names = "pendingTombstones|tombstoneSnapshot|appendTombstones|" +
+      "rebuild|appendExactlyOnce|publishOnce|sweepUncommitted|" +
+      "resetTombstones|compactLedger"
+    val direct = hits(files,
+      s"""\\bStage\\s*\\.\\s*($names)\\b|\\bStage\\s*\\.\\s*\\{[^}]*\\b($names)\\b""".r)
+    assert(direct.isEmpty, "Stage tombstone, ledger or rebuild calls " +
+      s"outside Family: ${direct.map(_._1).mkString(", ")}")
   }
 
   test("lm: At.Previous is rejected — the LM reverts by negated delta") {

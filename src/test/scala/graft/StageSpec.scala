@@ -688,6 +688,78 @@ class StageSpec extends AnyFunSuite {
     }
   }
 
+  test("fencing: the lease carries its acquire-time primitive onto Par threads") {
+    // the text build and compaction flip every component from Par pool
+    // threads; a thread-scoped install must still fence each of them
+    val idx = "target/graft-test-stage-fence-par"
+    fs(idx).delete(new Path(idx), true)
+    val docs = Seq((1L, "alpha beta gamma"), (2L, "beta gamma delta"))
+      .toDF("doc_id", "text")
+    val fenceDir = new Path(s"$idx/_fence")
+    Stage.withFencing(Stage.ExclusiveCommitToken)(Search.saveTextIndex(docs, idx))
+    // each flip created its fence (a LockReRead flip creates none), then
+    // retired it after its GC
+    assert(fs(idx).exists(fenceDir), "no Par-thread flip used the strict primitive")
+    assert(children(fenceDir.toString).isEmpty)
+    // a contender's fence on each flip the compaction will make: every
+    // Par-thread flip meets its fence, so none of them lands
+    val comps = Seq("postings", "doclens", "stats")
+    comps.foreach { c =>
+      val f = Stage.fencePath(new Path(idx), s"flip-$c-v00000002")
+      val out = fs(idx).create(f, false)
+      try out.write("tok-contender".getBytes("UTF-8")) finally out.close()
+    }
+    val boom = intercept[IllegalStateException] {
+      Stage.withFencing(Stage.ExclusiveCommitToken)(
+        Search.compactTextIndex(spark, idx))
+    }
+    assert(boom.getMessage.contains("already claimed"), s"$boom")
+    comps.foreach(c =>
+      assert(Stage.resolve(spark, s"$idx/$c").endsWith("v00000001"), c))
+    comps.foreach(c => fs(idx).delete(
+      Stage.fencePath(new Path(idx), s"flip-$c-v00000002"), false))
+    Stage.withFencing(Stage.ExclusiveCommitToken)(
+      Search.compactTextIndex(spark, idx))
+    assert(children(fenceDir.toString).isEmpty)
+  }
+
+  test("fencing: spent fences retire — none left after compactLedger; a same-token retry still passes") {
+    val idx = "target/graft-test-stage-fence-retire"
+    fs(idx).delete(new Path(idx), true)
+    def batch(id: Long) = Seq((id, s"word$id shared text")).toDF("doc_id", "text")
+    val fenceDir = new Path(s"$idx/_fence")
+    def fences: Set[String] =
+      if (fs(idx).exists(fenceDir)) children(fenceDir.toString) else Set.empty
+    Stage.withFencing(Stage.ExclusiveCommitToken) {
+      Search.saveTextIndex(batch(0L), idx)
+      for (r <- 1L to 3L) {
+        Search.appendToTextIndex(batch(10 * r), idx, batchId = Some(r))
+        Search.appendToTextIndex(batch(10 * r + 1), idx) // a plain op
+        // before the fold: the two markers' fences (flips retire at once)
+        assert(fences.contains(s"batch-$r") &&
+          fences.filterNot(_ == s"batch-$r").forall(_.startsWith("op-append")) &&
+          fences.size == 2, s"$fences")
+        Search.compactTextIndex(spark, idx)
+        assert(fences.isEmpty, s"fences left after compaction $r: $fences")
+      }
+    }
+    // a same-token retry of a retired commit passes again
+    Stage.withFencing(Stage.ExclusiveCommitToken)(leased(idx) { lease =>
+      val lock = new Path(s"$idx/_writer.lock")
+      val tok = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(lock.toUri.getPath)), "UTF-8")
+      def commit(): Unit = Stage.ExclusiveCommitToken.assertMayCommit(
+        fs(idx), new Path(idx), lock, tok, "op-retry")
+      commit()
+      fs(idx).create(new Path(s"$idx/_ledger/op-retry"), false).close()
+      assert(fences == Set("op-retry"))
+      Stage.compactLedger(lease, idx)
+      assert(fences.isEmpty)
+      commit()
+      commit()
+    })
+  }
+
   test("healthReport surfaces the writer lock in flight") {
     val idx = "target/graft-test-health-lock"
     fs(idx).delete(new Path(idx), true)
