@@ -129,15 +129,23 @@ object Search {
   /** The positional-posting relation for one document batch — the shape
     * both the fresh build ([[savePositionalIndex]]) and every append
     * path write, so grown and fresh-built components are
-    * file-layout-identical: (token, doc_id, sorted 0-based positions),
+    * file-layout-identical: (doc_id, token, sorted 0-based positions),
     * token-sorted within files for row-group pruning. */
   private def positionalPostings(docs: DataFrame, idCol: String,
                                  textCol: String): DataFrame =
-    docs.select(col(idCol),
+    idFirst(docs.select(col(idCol),
         posexplode(TextAnalysis.tokens(col(textCol))).as(Seq("pos", "token")))
       .groupBy(col("token"), col(idCol))
-      .agg(sort_array(collect_list(col("pos"))).as("positions"))
+      .agg(sort_array(collect_list(col("pos"))).as("positions")), idCol)
       .repartition(col("token")).sortWithinPartitions("token", idCol)
+
+  /** `rel` with the id column first: the ONE column order of the
+    * postings and positions files on every write path (build, staged
+    * append, fold). A fold with tombstones pending writes it first anyway
+    * (the mask joins by the id column's name), and the token-filtered
+    * bm25 and conjunctive scans read fewer bytes from that layout. */
+  private def idFirst(rel: DataFrame, idCol: String): DataFrame =
+    rel.select(col(idCol) +: rel.columns.filterNot(_ == idCol).map(col): _*)
 
   /** The ONE postings build plan shared by the fresh build and both
     * append paths — the bit-identity contract (grown index ≡ fresh
@@ -147,9 +155,9 @@ object Search {
     * every BM25 score (the [[graft.ext.Corpus.saveLm]] guard). */
   private def postingsOf(docs: DataFrame, idCol: String,
                          textCol: String): DataFrame =
-    docs.where(col(textCol).isNotNull)
+    idFirst(docs.where(col(textCol).isNotNull)
       .select(col(idCol), explode(TextAnalysis.tokens(col(textCol))).as("token"))
-      .groupBy(col("token"), col(idCol)).agg(count(lit(1)).as("tf"))
+      .groupBy(col("token"), col(idCol)).agg(count(lit(1)).as("tf")), idCol)
       .repartition(col("token")).sortWithinPartitions("token", idCol)
 
   /** The doclens sibling of [[postingsOf]] — same sharing argument,
@@ -166,7 +174,7 @@ object Search {
     * later query (the q82-IVF / q91-LM "build once, serve many" shape,
     * applied to text retrieval). Layout (all parquet):
     *
-    *  - `postings/`: (token, doc_id, tf) sorted by token within files, so
+    *  - `postings/`: (doc_id, token, tf) sorted by token within files, so
     *    a term-filtered read prunes row groups on the token min/max and
     *    the scan carries only the query terms' posting lists;
     *  - `doclens/`: (doc_id, dl);
@@ -353,8 +361,8 @@ object Search {
     val idCol = lens.columns.head
     val postingsThunk = () =>
       publishRewrite(lease, s"$path/postings") { versionDir =>
-        TextIndex.mask(Tables.parquet(spark, resolve(spark, s"$path/postings")),
-          tomb)
+        idFirst(TextIndex.mask(
+            Tables.parquet(spark, resolve(spark, s"$path/postings")), tomb), idCol)
           .repartition(nPost, col("token")).sortWithinPartitions("token", idCol)
           .write.mode("overwrite").parquet(versionDir)
       }
@@ -372,9 +380,9 @@ object Search {
       // re-sort to the builder's token-ordered layout
       val positionsThunk = () =>
         publishRewrite(lease, s"$path/positions") { versionDir =>
-          TextIndex.mask(
+          idFirst(TextIndex.mask(
             Tables.parquet(spark, resolve(spark, s"$path/positions")),
-            tomb)
+            tomb), idCol)
             .repartition(nPos, col("token")).sortWithinPartitions("token", idCol)
             .write.mode("overwrite").parquet(versionDir)
         }
@@ -481,7 +489,7 @@ object Search {
       .orderBy(idCol)
   }
 
-  /** POSITIONAL postings for PHRASE queries: (token, doc_id, positions)
+  /** POSITIONAL postings for PHRASE queries: (doc_id, token, positions)
     * with each token's 0-based occurrence positions as a sorted array —
     * what [[conjunctiveSearch]]'s bag-of-words postings cannot answer
     * ("table hash" as a phrase, not two co-occurring terms). Written

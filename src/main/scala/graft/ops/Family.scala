@@ -161,9 +161,7 @@ final case class Family(
     * mask: an anti-join of the row key ([[Family.Key]]) against the keys,
     * which Spark broadcasts (the pending set is small by the drip-feed
     * contract). `rel` itself when nothing is pending. An id key joins by
-    * name, so it leads the output's columns: a fold writes its rows in
-    * that order, and the text postings scan reads fewer bytes with the
-    * id first. */
+    * name, so it leads the output's columns. */
   def mask(rel: DataFrame, tomb: Option[DataFrame]): DataFrame =
     tomb.fold(rel)(keyJoin(rel, _, "left_anti"))
 

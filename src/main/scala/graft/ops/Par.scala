@@ -12,7 +12,7 @@ package graft.ops
   * Thunks must not depend on one another's side effects. A thunk that
   * writes under an index root captures its caller's [[Stage.Lease]] (the
   * text fold's concurrent publishes): the lease is a value, so the pool
-  * thread's flips are fenced against the caller's root lease.
+  * thread's flips claim their commits with the caller's lease token.
   *
   * The first failing thunk's exception propagates (unwrapped); remaining
   * threads are interrupted best-effort, matching the sequential form's

@@ -46,12 +46,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * [[Lease]] value, and every function here that writes under the root
   * (the publishes, pins, restores, vacuum, sweep, tombstone reset and
   * ledger fold) takes that value instead of a session, requires its
-  * directory to be under the lease root and fences each commit point
-  * against the root's lock. A lease is not re-entrant: a second acquire
-  * of a root this JVM holds fails like any concurrent maintenance op.
-  * Work a lease holder dispatches to other threads ([[Par]]) carries the
-  * lease with it. In-flight lazy scans of a version that a later publish
-  * GC'd fail like any scan of compacted-away files.
+  * directory to be under the lease root. A lease is not re-entrant: a
+  * second acquire of a root this JVM holds fails like any concurrent
+  * maintenance op. Work a lease holder dispatches to other threads
+  * ([[Par]]) carries the lease with it. In-flight lazy scans of a version
+  * that a later publish GC'd fail like any scan of compacted-away files.
+  *
+  * Commit fencing has one check, [[claimCommit]]: re-read the root's
+  * lock, then create the commit's claim file exclusively with the
+  * lease's token. A ledger commit's claim is its marker
+  * (`_ledger/batch-<n>`, `_ledger/op-<id>`); a pointer flip's is
+  * `_fence/flip-<dir>-<version>` under the root, deleted together with
+  * its version, so `_fence/` names only versions that exist.
   */
 object Stage {
 
@@ -209,20 +215,22 @@ object Stage {
           "state keeps serving). If the component is genuinely empty " +
           "now, drop or rebuild it instead of publishing emptiness")
     }
-    // fencing: a wrongly-reclaimed (zombie) holder must not flip the
-    // pointer over the reclaimer's state — reject at the commit point.
-    // commitId = the component and the version being flipped to: two
-    // contenders racing one publish compute the SAME next version, so
-    // the strict primitive's fence collides exactly when it must, and
-    // sibling components' flips stay apart in the root's `_fence/`. (A
-    // crashed flip leaves the version DIR behind, so a later retry
-    // computes a fresh version — no stale-fence hazard.)
-    val commitId = s"flip-${rootPath.getName}-$version"
-    lease.assertMayCommit(commitId)
+    // a wrongly-reclaimed (zombie) holder must not flip the pointer over
+    // the reclaimer's state — reject at the commit point. The claim names
+    // the component and the version being flipped to: two contenders
+    // racing one publish compute the SAME next version, so their claims
+    // collide exactly when they must, and sibling components' flips stay
+    // apart in the root's `_fence/`.
+    lease.claim(flipFence(lease.root, rootPath, version))
     flipPointer(lease.spark, fs, rootPath, version, grace)
-    gcStale(fs, rootPath)
-    lease.retireFences(Seq(commitId))
+    gcStale(lease, fs, rootPath)
   }
+
+  /** The claim of a flip of `dir` onto `version`: a file under the lease
+    * root's `_fence/` that lives exactly as long as the version does
+    * ([[gcStale]] deletes it with the version). */
+  private[graft] def flipFence(root: String, dir: Path, version: String): Path =
+    new Path(new Path(root, "_fence"), s"flip-${dir.getName}-$version")
 
   /** Make a component root with no pointer a versioned layout: an empty
     * `v00000001` data directory plus the pointer, with no previous line.
@@ -279,9 +287,12 @@ object Stage {
     * publishes and older generations. The versions the pointer names
     * (live + previously-live) survive — an in-flight scan that resolved
     * just before the flip still finds its files; the next publish sweeps
-    * them — and so does every version a named snapshot pins.
+    * them — and so does every version a named snapshot pins. A deleted
+    * version's flip claim goes with it, so a later publish that
+    * recomputes its number (after a crashed flip's orphan is swept)
+    * claims afresh instead of meeting a dead writer's fence.
     */
-  private def gcStale(fs: FileSystem, rootPath: Path): Unit = {
+  private def gcStale(lease: Lease, fs: FileSystem, rootPath: Path): Unit = {
     // keep: pointer-named versions (live + one-cycle grace) PLUS any
     // version a named snapshot pins — [[snapshot]]'s whole point is
     // surviving publish cycles until dropped
@@ -289,7 +300,13 @@ object Stage {
       snapshotVersions(fs, rootPath)
     fs.listStatus(rootPath).map(_.getPath)
       .filter(p => !ControlNames.contains(p.getName) && !keep.contains(p.getName))
-      .foreach(p => fs.delete(p, true))
+      .foreach { p =>
+        // claim first: a crash in between leaves an orphan version with
+        // no claim, which the next GC sweeps, never a claim with no version
+        if (VersionRe.matches(p.getName))
+          fs.delete(flipFence(lease.root, rootPath, p.getName), false)
+        fs.delete(p, true)
+      }
   }
 
   /** Control entries of a versioned directory that no GC may touch: the
@@ -564,7 +581,7 @@ object Stage {
     */
   def vacuum(lease: Lease, dir: String): Unit = {
     val (rootPath, fs) = lease.dir(dir)
-    if (pointerLines(fs, rootPath).nonEmpty) gcStale(fs, rootPath)
+    if (pointerLines(fs, rootPath).nonEmpty) gcStale(lease, fs, rootPath)
   }
 
   /** The REBUILD boundary every index builder goes through
@@ -597,112 +614,65 @@ object Stage {
       build(lease)
     }
 
-  /** Pluggable COMMIT-POINT fencing primitive (see
-    * [[Lease.assertMayCommit]] for where it fires). Two shipped
-    * strategies:
+  /** The commit check of every commit point ([[Lease.claim]]): the writer
+    * holding `token` may commit only if the root's `lock` still carries
+    * `token`, and only once it owns `claim`, created exclusively with
+    * `token` as its content.
     *
-    *  - [[LockReRead]] (the default): re-read the lock file and require
-    *    it still carries the committer's acquire token. One small-file
-    *    read per commit; a check→rename race of a few milliseconds
-    *    remains because plain filesystems give no atomic
-    *    compare-at-commit.
-    *  - [[ExclusiveCommitToken]] (the strict option): LockReRead PLUS a
-    *    create-exclusive fence token at `root/_fence/<commitId>` carrying
-    *    the writer's token. Two contenders for the SAME commit (a zombie
-    *    and its reclaimer racing one version flip or one ledger marker)
-    *    both pass a re-read inside the gap, but the atomic create admits
-    *    exactly one — the loser is rejected even though its re-read
-    *    passed. On HDFS-class stores the create is server-side atomic;
-    *    on local filesystems it is O_CREAT|O_EXCL. The residual exposure
-    *    shrinks to fence-create→rename. A same-token retry passes (the
-    *    fence records it already owns the commit); a DIFFERENT writer
-    *    retrying a crashed writer's commit must clear the stale fence
-    *    first — [[appendExactlyOnce]]/[[publishOnce]] do so next to
-    *    their staging wipe, under the lease, where the absent marker
-    *    proves the predecessor never committed. Spent fences retire: a
-    *    flip's after its GC, a ledger marker's at [[compactLedger]].
+    * The lock re-read rejects a holder whose lease was reclaimed (a
+    * missing lock is a genuine reclaim signal; any other read failure is
+    * retried once before it turns a healthy publish into a rejection).
+    * A re-read leaves a gap: a zombie whose read lands just BEFORE the
+    * reclaim passes it. The claim closes that gap to the atomic create —
+    * two contenders for one commit (a zombie and its reclaimer racing one
+    * version flip or one ledger marker) name the same claim, and exactly
+    * one creates it; the loser is rejected even though its re-read
+    * passed. A claim that already holds `token` passes (a same-writer
+    * retry). On HDFS-class stores the create is server-side atomic; on
+    * local filesystems it is O_CREAT|O_EXCL.
     */
-  sealed trait FencingPrimitive {
-    /** Throws IllegalStateException when the writer holding `token` must
-      * not commit `commitId` on `root`; `lock` is root's writer lock. */
-    def assertMayCommit(fs: FileSystem, root: Path, lock: Path,
-                        token: String, commitId: String): Unit
-    /** Remove the fences, if any, of the spent commits `commitIds`. */
-    def retire(fs: FileSystem, root: Path, commitIds: Seq[String]): Unit
-  }
-
-  /** The default primitive: lock re-read, one retry on transient read
-    * errors. A missing lock file is a GENUINE reclaim signal (the
-    * reclaimer deleted/renamed it) → reject immediately; any other read
-    * failure is likely a filesystem hiccup — retry once before
-    * converting an otherwise-healthy leased publish into a rejection +
-    * sweep (still failing safe if the retry also cannot read). */
-  case object LockReRead extends FencingPrimitive {
-    def assertMayCommit(fs: FileSystem, root: Path, lock: Path,
-                        token: String, commitId: String): Unit = {
-      def readLock(): String =
-        try readUtf8(fs, lock)
-        catch { case _: java.io.FileNotFoundException => "" }
-      val current =
+  private[graft] def claimCommit(fs: FileSystem, lock: Path, token: String,
+                                 claim: Path): Unit = {
+    def readLock(): String =
+      try readUtf8(fs, lock)
+      catch { case _: java.io.FileNotFoundException => "" }
+    val current =
+      try readLock()
+      catch { case scala.util.control.NonFatal(_) =>
         try readLock()
-        catch { case scala.util.control.NonFatal(_) =>
-          try readLock()
-          catch { case scala.util.control.NonFatal(_) => "" }
-        }
-      if (current != token)
-        throw new IllegalStateException(
-          s"fencing check failed at commit: $lock no longer carries this " +
-            "writer's acquire token — the lease was reclaimed (heartbeat " +
-            "starved past the staleness window) and another writer may now " +
-            "hold the index. This publish is REJECTED; its uncommitted " +
-            "files will be swept by the next maintenance op. Re-run the " +
-            "operation under a fresh lease.")
-    }
-    def retire(fs: FileSystem, root: Path, commitIds: Seq[String]): Unit = ()
-  }
-
-  /** The strict primitive — see [[FencingPrimitive]]'s contract notes. */
-  case object ExclusiveCommitToken extends FencingPrimitive {
-    def assertMayCommit(fs: FileSystem, root: Path, lock: Path,
-                        token: String, commitId: String): Unit = {
-      LockReRead.assertMayCommit(fs, root, lock, token, commitId)
-      if (commitId.nonEmpty) {
-        val fence = fencePath(root, commitId)
-        fs.mkdirs(fence.getParent)
-        if (!createExclusiveWithContent(fs, fence, token)) {
-          val holder =
-            try readUtf8(fs, fence)
-            catch { case scala.util.control.NonFatal(_) => "" }
-          if (holder != token)
-            throw new IllegalStateException(
-              s"fencing check failed at commit: $fence was already claimed " +
-                "by a different writer's token — a contender committed (or " +
-                "is committing) this same publish. This commit is REJECTED; " +
-                "its uncommitted files will be swept by the next " +
-                "maintenance op. If the fence belongs to a writer known " +
-                "crashed before its marker, the retrying op clears it " +
-                "under the lease.")
-        }
+        catch { case scala.util.control.NonFatal(_) => "" }
       }
+    if (current != token)
+      throw new IllegalStateException(
+        s"fencing check failed at commit: $lock no longer carries this " +
+          "writer's acquire token — the lease was reclaimed (heartbeat " +
+          "starved past the staleness window) and another writer may now " +
+          "hold the index. This publish is REJECTED; its uncommitted " +
+          "files will be swept by the next maintenance op. Re-run the " +
+          "operation under a fresh lease.")
+    fs.mkdirs(claim.getParent)
+    if (!createExclusiveWithContent(fs, claim, token)) {
+      val holder =
+        try readUtf8(fs, claim)
+        catch { case scala.util.control.NonFatal(_) => "" }
+      if (holder != token)
+        throw new IllegalStateException(
+          s"fencing check failed at commit: $claim was already claimed " +
+            "by a different writer's token — a contender committed (or " +
+            "is committing) this same publish. This commit is REJECTED; " +
+            "its uncommitted files will be swept by the next " +
+            "maintenance op.")
     }
-    def retire(fs: FileSystem, root: Path, commitIds: Seq[String]): Unit =
-      commitIds.foreach(id => fs.delete(fencePath(root, id), false))
   }
-
-  /** Where [[ExclusiveCommitToken]] materializes a commit's fence. */
-  private[graft] def fencePath(root: Path, commitId: String): Path =
-    new Path(new Path(root, "_fence"),
-      commitId.replaceAll("[^A-Za-z0-9_.-]", "_"))
 
   /** Create `path` exclusively with `content`; false when it already
-    * exists — the one create-exclusive of the writer lock and the commit
-    * fences. Local filesystems get a REAL O_CREAT|O_EXCL
-    * (File.createNewFile) because Hadoop LocalFileSystem's
-    * create(f, false) is exists-then-create; other schemes keep
-    * fs.create, where the exclusivity is server-side atomic. A created-
-    * but-unwritable file is removed before the error propagates (an
-    * ownerless empty lock or fence would wedge every contender for the
-    * whole staleness window). */
+    * exists — the one create-exclusive of the writer lock, the commit
+    * claims and the ledger's high-water marker. Local filesystems get a
+    * REAL O_CREAT|O_EXCL (File.createNewFile) because Hadoop
+    * LocalFileSystem checks for the file and then creates it; other
+    * schemes keep fs.create, where the exclusivity is server-side atomic.
+    * A created-but-unwritable file is removed before the error propagates
+    * (an ownerless empty lock or claim would wedge every contender). */
   private def createExclusiveWithContent(fs: FileSystem, path: Path,
                                          content: String): Boolean =
     if (fs.getScheme == "file") {
@@ -729,32 +699,6 @@ object Stage {
       true
     }
 
-  /** The installed commit-point primitive. [[LockReRead]] by default;
-    * deployments wanting the stricter per-commit CAS install
-    * [[ExclusiveCommitToken]] once at startup. A var, not config-file
-    * plumbing: the engine is a library and its host owns initialization
-    * order. */
-  @volatile var fencing: FencingPrimitive = LockReRead
-
-  /** Thread-scoped [[fencing]] override, read once, when a lease is
-    * acquired: flipping the GLOBAL install would change the primitive of
-    * every lease any other thread of the JVM acquires meanwhile (another
-    * test's writers, a stream's batch thread). */
-  private val fencingOverride = new ThreadLocal[FencingPrimitive]
-
-  /** Run `body` with `primitive` as the commit-point fencing of every
-    * lease THIS THREAD acquires (other threads keep the global install).
-    * The lease carries it, so its [[Par]] thunks fence with it too. */
-  def withFencing[T](primitive: FencingPrimitive)(body: => T): T = {
-    val prev = fencingOverride.get
-    fencingOverride.set(primitive)
-    try body
-    finally {
-      if (prev == null) fencingOverride.remove()
-      else fencingOverride.set(prev)
-    }
-  }
-
   /** JVM-global lease owners (lock key → acquire token). Hadoop's
     * LocalFileSystem `create(f, overwrite = false)` is exists-THEN-create
     * — not atomic — so two threads of ONE process (a pin racing a
@@ -770,15 +714,13 @@ object Stage {
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** A held writer lease on the index root `root`: the session, the
-    * root, its `_writer.lock`, this acquire's token and the fencing
-    * primitive chosen at acquire. Only [[withWriterLease]] makes one, for
-    * the duration of its body; a write under the root takes it as a
-    * value, so a [[Par]] thunk commits under the same lease, and the same
-    * primitive, as its caller. */
+    * root, its `_writer.lock` and this acquire's token. Only
+    * [[withWriterLease]] makes one, for the duration of its body; a write
+    * under the root takes it as a value, so a [[Par]] thunk commits under
+    * the same lease as its caller. */
   final class Lease private[ops] (val spark: SparkSession, val root: String,
                                   private[Stage] val lock: Path,
-                                  private[Stage] val token: String,
-                                  fencing: FencingPrimitive) {
+                                  private[Stage] val token: String) {
 
     /** `dir` and its filesystem; `dir` must be the root or under it. */
     private[Stage] def dir(path: String): (Path, FileSystem) = {
@@ -788,23 +730,15 @@ object Stage {
       (d, fsFor(spark, d))
     }
 
-    /** FENCING check at a COMMIT point (a pointer flip, a ledger marker
-      * create): the installed [[fencing]] primitive against the root's
-      * lock. A holder whose heartbeat starved past the staleness window
-      * may have been WRONGLY RECLAIMED; letting its commit proceed would
+    /** The check at a COMMIT point (a pointer flip, a ledger marker
+      * create): [[claimCommit]] of `commit` with this lease's token. A
+      * holder whose heartbeat starved past the staleness window may have
+      * been WRONGLY RECLAIMED; letting its commit proceed would
       * interleave two writers' publishes on one index. Rejected here,
       * the zombie's staged or renamed-but-markerless files are exactly
-      * what the next [[sweepUncommitted]] reverts. [[LockReRead]] leaves
-      * a check→rename race of a few milliseconds; [[ExclusiveCommitToken]]
-      * narrows it to the atomic create of `root/_fence/<commitId>` (the
-      * id two contenders for one commit SHARE). */
-    private[Stage] def assertMayCommit(commitId: String): Unit =
-      fencing.assertMayCommit(fsFor(spark, lock), new Path(root), lock,
-        token, commitId)
-
-    /** Retire the spent commits `commitIds` with the lease's primitive. */
-    private[Stage] def retireFences(commitIds: Seq[String]): Unit =
-      fencing.retire(fsFor(spark, lock), new Path(root), commitIds)
+      * what the next [[sweepUncommitted]] reverts. */
+    private[Stage] def claim(commit: Path): Unit =
+      claimCommit(fsFor(spark, lock), lock, token, commit)
   }
 
   /** Run `body` holding an exclusive writer lease on `path` — the
@@ -920,8 +854,7 @@ object Stage {
             "finishes, or delete the lock if its holder is known dead")
     }
     val refresher = startLeaseRefresher(fs, lock, token, staleAfterMs)
-    try body(new Lease(spark, path, lock, token,
-      Option(fencingOverride.get).getOrElse(fencing)))
+    try body(new Lease(spark, path, lock, token))
     finally {
       refresher.foreach { case (t, stop) => stop.countDown(); t.join(1000) }
       releaseIfOwner(fs, lock, token)
@@ -1117,24 +1050,17 @@ object Stage {
         val fs = fsFor(spark, new Path(path))
         val staging = s"$path/_staging/$id"
         fs.delete(new Path(staging), true) // wipe a dead attempt's partials
-        // also clear a crashed predecessor's fence for this commit: under
-        // the lease, with the marker absent, the fence provably belongs
-        // to a writer that died between fence and marker — a different
-        // retrying token must not be wedged by it
-        fs.delete(fencePath(new Path(path), id), false)
         stage(staging)
         components.foreach { comp =>
           // the first commit into a fresh component births it versioned
           ensureVersioned(spark, s"$path/$comp")
           publishStaged(fs, new Path(s"$staging/$comp"),
             new Path(resolve(spark, s"$path/$comp")), prefix) }
-        // fencing: a zombie holder's marker create is the durability
-        // commit — reject it if the lease was reclaimed mid-commit (the
-        // renamed files are then markerless and sweep-revertible)
-        lease.assertMayCommit(id)
-        val marker = new Path(s"$path/_ledger/$id")
-        fs.mkdirs(marker.getParent)
-        fs.create(marker, false).close() // atomic: the commit is published
+        // the marker is the commit and its own claim: created
+        // exclusively with the lease's token, so a zombie holder (or a
+        // contender committing the same id) is rejected here and its
+        // renamed files stay markerless and sweep-revertible
+        lease.claim(new Path(s"$path/_ledger/$id"))
         fs.delete(new Path(staging), true)
       }
     }
@@ -1354,19 +1280,17 @@ object Stage {
     * crash mid-sweep leaves extra markers that the next compaction
     * removes — never a missing one. Called by [[Family.compact]] under
     * the root `lease`, so one maintenance op bounds both data and ledger
-    * fragmentation. A committed marker's create-exclusive refuses any
-    * second committer, so its commit fence is retired here.
+    * fragmentation.
     */
   def compactLedger(lease: Lease, path: String): Unit = {
     val (_, fs) = lease.dir(path)
     val ledger = new Path(s"$path/_ledger")
     if (!fs.exists(ledger)) return
     val entries = fs.listStatus(ledger).map(_.getPath)
-    lease.retireFences(entries.map(_.getName).toSeq)
     val high = highWaterIn(entries.map(_.getName), includeBatch = true)
     if (high < 0) return
-    val highMarker = new Path(ledger, s"high-$high")
-    if (!fs.exists(highMarker)) fs.create(highMarker, false).close()
+    // false when a crashed earlier fold already wrote it
+    createExclusiveWithContent(fs, new Path(ledger, s"high-$high"), lease.token)
     entries.foreach { p =>
       p.getName match {
         case BatchMarkerRe(n) if n.toLong <= high => fs.delete(p, false)
@@ -1507,10 +1431,9 @@ object Stage {
     val fs = fsFor(spark, root)
     fs.delete(new Path(root, "_ledger"), true)
     fs.delete(new Path(root, "_staging"), true)
-    // the rebuild boundary also retires commit fences: a wiped root may
-    // restart version numbering, and a stale flip-v* fence from the old
-    // life would wrongly reject the reborn index's first publishes under
-    // the strict primitive
+    // the rebuild boundary also drops every flip claim: a wiped root may
+    // restart version numbering, and a flip-v* claim from the old life
+    // would reject the reborn index's first publishes
     fs.delete(new Path(root, "_fence"), true)
   }
 

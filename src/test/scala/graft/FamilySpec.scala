@@ -369,6 +369,15 @@ class FamilySpec extends AnyFunSuite {
     c.append(part(3), p, Some(1L)) // the redelivery is a no-op
     val ingested = part(0, 1, 2, 3)
     servesLike(ingested, "exactly-once append delivered twice")
+    /** Every commit so far claimed with a lease token: each ledger marker
+      * holds one, and each flip claim names a version that exists. */
+    def claimsHold(step: String): Unit = {
+      assert(Claims.ledgerWithoutToken(p).isEmpty,
+        s"$step: markers without a lease token ${Claims.ledgerWithoutToken(p)}")
+      assert(Claims.orphanFlipClaims(p).isEmpty,
+        s"$step: flip claims of missing versions ${Claims.orphanFlipClaims(p)}")
+    }
+    claimsHold("appends")
     assert(!c.family.autoCompact(spark, p, maxFilesPerComponent = 100000))
     assert(c.family.autoCompact(spark, p, maxFilesPerComponent = 1))
     servesLike(ingested, "auto-compaction")
@@ -388,6 +397,7 @@ class FamilySpec extends AnyFunSuite {
       .as[Int].collect().forall(_ == 0))
     c.family.compact(spark, p)
     servesLike(effective, "compaction")
+    claimsHold("compaction")
   }
 
   test("tombstones are stored under the column their mask joins by") {
@@ -533,10 +543,26 @@ class FamilySpec extends AnyFunSuite {
       s"Stage.Lease instead): ${stray.map(_._3).mkString(", ")}")
     val stage = main.filter(_.toString.endsWith("graft/ops/Stage.scala"))
     assert(stage.size == 1)
-    val threadLocals = hits(stage, """.*\bnew\s+ThreadLocal\b.*""".r)
-      .filterNot(_._2.contains("fencingOverride"))
+    val threadLocals = hits(stage, """\bThreadLocal\b""".r)
     assert(threadLocals.isEmpty, "thread-bound lease state in Stage: " +
       threadLocals.map(_._1).mkString(", "))
+    // a member var of object Stage is process-global state that every
+    // lease of the JVM, on every thread, would share
+    val globals = hits(stage,
+      """(?m)^  (?:@volatile\s+)?(?:private(?:\[\w+\])?\s+)?var\s+\w+""".r)
+    assert(globals.isEmpty, "global mutable state in Stage: " +
+      globals.map(_._1).mkString(", "))
+    // the lock, the commit claims and the ledger's markers are created
+    // exclusively by one helper: Hadoop's LocalFileSystem create(f,
+    // false) checks and then creates, so two committers could both pass
+    val text = new String(java.nio.file.Files.readAllBytes(stage.head), "UTF-8")
+    val creates = """\bcreate\s*\([^()]*,\s*false\s*\)""".r
+      .findAllMatchIn(text).toList
+    val outside = creates.filterNot(m => DefRe.findAllMatchIn(text.take(m.start))
+        .map(_.group(1)).toSeq.lastOption.contains("createExclusiveWithContent"))
+      .map(m => s"${stage.head}:${text.take(m.start).count(_ == '\n') + 1}")
+    assert(creates.nonEmpty && outside.isEmpty, "create(…, false) outside " +
+      s"createExclusiveWithContent: ${outside.mkString(", ")}")
   }
 
   test("src/main ext and queries reach tombstones, ledgers and rebuilds only through Family") {

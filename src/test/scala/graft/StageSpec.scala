@@ -619,145 +619,178 @@ class StageSpec extends AnyFunSuite {
   }
 
   test("fencing: the strict primitive rejects the zombie INSIDE the re-read gap") {
-    // LockReRead's residual: a zombie whose lock re-read lands just
-    // BEFORE the reclaim passes the check and still renames — a few-ms
-    // window no re-read can close. ExclusiveCommitToken materializes
-    // the commit itself as a create-exclusive fence keyed by the commit
-    // id the contenders SHARE: both re-reads pass, exactly one owns the
-    // fence, the loser is rejected even inside the gap.
+    // a lock re-read leaves a gap: a zombie whose re-read lands just
+    // BEFORE the reclaim passes it and would still commit. The claim
+    // closes it — the commit is a create-exclusive file both contenders
+    // name: both re-reads pass, exactly one owns the claim, and the
+    // loser is rejected even inside the gap.
     val root = "target/graft-test-stage-fence-strict"
     fs(root).delete(new Path(root), true)
     fs(root).mkdirs(new Path(root))
-    val rootP = new Path(root)
     val lock = new Path(s"$root/_writer.lock")
+    val claim = new Path(s"$root/_ledger/batch-7")
     def writeLock(tok: String): Unit = {
       fs(root).delete(lock, false)
       val out = fs(root).create(lock, false)
       out.write(tok.getBytes("UTF-8"))
       out.close()
     }
-    // contender A (the reclaimer) commits first: fence claimed with its token
+    // contender A (the reclaimer) commits first: the claim holds its token
     writeLock("tok-reclaimer")
-    Stage.ExclusiveCommitToken.assertMayCommit(fs(root), rootP, lock,
-      "tok-reclaimer", "batch-7")
+    Stage.claimCommit(fs(root), lock, "tok-reclaimer", claim)
     // the zombie wakes inside its gap: model the read-before-reclaim
     // ordering by restoring ITS token on the lock, so the re-read half
-    // PASSES — only the fence can reject it now, and it must
+    // PASSES — only the claim can reject it now, and it must
     writeLock("tok-zombie")
     val boom = intercept[IllegalStateException] {
-      Stage.ExclusiveCommitToken.assertMayCommit(fs(root), rootP, lock,
-        "tok-zombie", "batch-7")
+      Stage.claimCommit(fs(root), lock, "tok-zombie", claim)
     }
-    assert(boom.getMessage.contains("fence"), s"$boom")
+    assert(boom.getMessage.contains("already claimed"), s"$boom")
     // a same-token re-commit (retry after a partial failure) passes
     writeLock("tok-reclaimer")
-    Stage.ExclusiveCommitToken.assertMayCommit(fs(root), rootP, lock,
-      "tok-reclaimer", "batch-7")
+    Stage.claimCommit(fs(root), lock, "tok-reclaimer", claim)
+    assert(new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(claim.toUri.getPath)), "UTF-8") == "tok-reclaimer")
     fs(root).delete(lock, false)
   }
 
-  test("fencing: strict primitive installed end-to-end — publishes work, retries clear stale fences") {
+  test("fencing: commits claim end to end; a crashed predecessor never wedges a retry") {
     val root = "target/graft-test-stage-fence-strict-e2e"
     fs(root).delete(new Path(root), true)
-    // thread-scoped install: suites run concurrently in one JVM, and a
-    // global flip here would change the primitive under their in-flight
-    // commits (it did — a CampaignSpec run failed exactly that way)
-    Stage.withFencing(Stage.ExclusiveCommitToken) {
-      // ordinary lifecycle under the strict primitive: rebuild, rewrite,
-      // exactly-once op — all commit normally (each owns its fence)
-      leased(root) { lease =>
-        Stage.publishRebuild(lease, root, Seq(1L, 2L).toDF("v"))
-        Stage.publishRewrite(lease, root, Seq(3L).toDF("v"))
-      }
-      assert(values(root) == Set(3L))
-      Stage.publishOnce(spark, root, "strict_op", Seq("data")) { staging =>
-        Seq(7L).toDF("v").write.parquet(s"$staging/data")
-      }
-      // a crashed predecessor's stale fence (fence present, marker
-      // absent) must not wedge a retry with a DIFFERENT token: the op
-      // clears it under the lease before staging
-      val staleFence = Stage.fencePath(new Path(root), "op-retried_op")
-      fs(root).mkdirs(staleFence.getParent)
-      val out = fs(root).create(staleFence, false)
-      out.write("tok-dead-writer".getBytes("UTF-8"))
-      out.close()
+    // ordinary lifecycle: rebuild, rewrite, exactly-once op — all commit
+    // normally, each owning its claim
+    leased(root) { lease =>
+      Stage.publishRebuild(lease, root, Seq(1L, 2L).toDF("v"))
+      Stage.publishRewrite(lease, root, Seq(3L).toDF("v"))
+    }
+    assert(values(root) == Set(3L))
+    Stage.publishOnce(spark, root, "strict_op", Seq("data")) { staging =>
+      Seq(7L).toDF("v").write.parquet(s"$staging/data")
+    }
+    // a predecessor that lost its lease after publishing its files,
+    // before its marker: the retry, under a different token, commits
+    def retried(lose: Boolean): Unit =
       Stage.publishOnce(spark, root, "retried_op", Seq("data")) { staging =>
         Seq(8L).toDF("v").write.parquet(s"$staging/data")
+        if (lose) imposterLock(root, "pid=1 host=elsewhere t=0 nonce=imposter")
       }
-      assert(fs(root).exists(new Path(s"$root/_ledger/op-retried_op")))
-    }
+    intercept[IllegalStateException](retried(lose = true))
+    fs(root).delete(new Path(s"$root/_writer.lock"), false)
+    assert(Stage.pendingOps(spark, root, Seq("data")) == Seq("retried_op"))
+    retried(lose = false)
+    assert(Stage.pendingOps(spark, root, Seq("data")).isEmpty)
+    assert(fs(root).exists(new Path(s"$root/_ledger/op-retried_op")))
+    assert(Claims.ledgerWithoutToken(root).isEmpty)
+    assert(values(s"$root/data") == Set(7L, 8L))
+    // a predecessor that died between its flip claim and the pointer
+    // write: its orphan version and claim hold the next number, and the
+    // retry, under a different token, flips past both
+    val data = new Path(s"$root/data")
+    val orphan = new Path(data, "v00000002")
+    Seq(9L).toDF("v").write.parquet(orphan.toString)
+    val dead = Stage.flipFence(root, data, "v00000002")
+    val out = fs(root).create(dead, false)
+    try out.write("tok-dead-writer".getBytes("UTF-8")) finally out.close()
+    leased(root)(Stage.publishRewrite(_, data.toString, Seq(10L).toDF("v")))
+    assert(values(data.toString) == Set(10L))
+    assert(!fs(root).exists(orphan) && !fs(root).exists(dead))
+    assert(Claims.orphanFlipClaims(root).isEmpty)
   }
 
-  test("fencing: the lease carries its acquire-time primitive onto Par threads") {
+  test("fencing: a vacuumed orphan version takes its dead claim along") {
+    // a flip that fails after its claim (an IO error in the pointer
+    // write, a killed JVM) leaves orphan vN and its claim; vacuum sweeps
+    // the orphan, the next publish recomputes vN — and must not meet the
+    // dead writer's claim
+    val root = "target/graft-test-stage-fence-orphan"
+    fs(root).delete(new Path(root), true)
+    val data = new Path(s"$root/data")
+    leased(root) { lease =>
+      Stage.publishRebuild(lease, data.toString, Seq(1L).toDF("v"))
+      Stage.publishRewrite(lease, data.toString, Seq(2L).toDF("v"))
+    }
+    val orphan = new Path(data, "v00000003")
+    Seq(9L).toDF("v").write.parquet(orphan.toString)
+    val dead = Stage.flipFence(root, data, "v00000003")
+    val out = fs(root).create(dead, false)
+    try out.write("tok-dead-writer".getBytes("UTF-8")) finally out.close()
+    leased(root)(Stage.vacuum(_, data.toString))
+    assert(!fs(root).exists(orphan))
+    leased(root)(Stage.publishRewrite(_, data.toString, Seq(3L).toDF("v")))
+    assert(Stage.resolve(spark, data.toString).endsWith("v00000003"))
+    assert(values(data.toString) == Set(3L))
+    assert(Claims.orphanFlipClaims(root).isEmpty,
+      s"${Claims.orphanFlipClaims(root)}")
+  }
+
+  test("fencing: the lease's claims reach its Par-thread flips") {
     // the text build and compaction flip every component from Par pool
-    // threads; a thread-scoped install must still fence each of them
+    // threads; each flip claims its version with the caller's lease
     val idx = "target/graft-test-stage-fence-par"
     fs(idx).delete(new Path(idx), true)
     val docs = Seq((1L, "alpha beta gamma"), (2L, "beta gamma delta"))
       .toDF("doc_id", "text")
-    val fenceDir = new Path(s"$idx/_fence")
-    Stage.withFencing(Stage.ExclusiveCommitToken)(Search.saveTextIndex(docs, idx))
-    // each flip created its fence (a LockReRead flip creates none), then
-    // retired it after its GC
-    assert(fs(idx).exists(fenceDir), "no Par-thread flip used the strict primitive")
-    assert(children(fenceDir.toString).isEmpty)
-    // a contender's fence on each flip the compaction will make: every
-    // Par-thread flip meets its fence, so none of them lands
     val comps = Seq("postings", "doclens", "stats")
-    comps.foreach { c =>
-      val f = Stage.fencePath(new Path(idx), s"flip-$c-v00000002")
+    Search.saveTextIndex(docs, idx)
+    assert(Claims.flipClaims(idx) == comps.map(c => s"flip-$c-v00000001").toSet)
+    // a contender's claim on each flip the compaction will make: every
+    // Par-thread flip meets its claim, so none of them lands
+    val contended = comps.map(c =>
+      Stage.flipFence(idx, new Path(s"$idx/$c"), "v00000002"))
+    contended.foreach { f =>
       val out = fs(idx).create(f, false)
       try out.write("tok-contender".getBytes("UTF-8")) finally out.close()
     }
     val boom = intercept[IllegalStateException] {
-      Stage.withFencing(Stage.ExclusiveCommitToken)(
-        Search.compactTextIndex(spark, idx))
+      Search.compactTextIndex(spark, idx)
     }
     assert(boom.getMessage.contains("already claimed"), s"$boom")
     comps.foreach(c =>
       assert(Stage.resolve(spark, s"$idx/$c").endsWith("v00000001"), c))
-    comps.foreach(c => fs(idx).delete(
-      Stage.fencePath(new Path(idx), s"flip-$c-v00000002"), false))
-    Stage.withFencing(Stage.ExclusiveCommitToken)(
-      Search.compactTextIndex(spark, idx))
-    assert(children(fenceDir.toString).isEmpty)
+    contended.foreach(fs(idx).delete(_, false))
+    Search.compactTextIndex(spark, idx)
+    comps.foreach(c =>
+      assert(!Stage.resolve(spark, s"$idx/$c").endsWith("v00000001"), c))
+    assert(Claims.orphanFlipClaims(idx).isEmpty,
+      s"${Claims.orphanFlipClaims(idx)}")
   }
 
-  test("fencing: spent fences retire — none left after compactLedger; a same-token retry still passes") {
+  test("fencing: a flip claim lives as its version does; a same-token retry passes") {
     val idx = "target/graft-test-stage-fence-retire"
     fs(idx).delete(new Path(idx), true)
     def batch(id: Long) = Seq((id, s"word$id shared text")).toDF("doc_id", "text")
-    val fenceDir = new Path(s"$idx/_fence")
-    def fences: Set[String] =
-      if (fs(idx).exists(fenceDir)) children(fenceDir.toString) else Set.empty
-    Stage.withFencing(Stage.ExclusiveCommitToken) {
-      Search.saveTextIndex(batch(0L), idx)
-      for (r <- 1L to 3L) {
-        Search.appendToTextIndex(batch(10 * r), idx, batchId = Some(r))
-        Search.appendToTextIndex(batch(10 * r + 1), idx) // a plain op
-        // before the fold: the two markers' fences (flips retire at once)
-        assert(fences.contains(s"batch-$r") &&
-          fences.filterNot(_ == s"batch-$r").forall(_.startsWith("op-append")) &&
-          fences.size == 2, s"$fences")
-        Search.compactTextIndex(spark, idx)
-        assert(fences.isEmpty, s"fences left after compaction $r: $fences")
-      }
+    Search.saveTextIndex(batch(0L), idx)
+    for (r <- 1L to 3L) {
+      Search.appendToTextIndex(batch(10 * r), idx, batchId = Some(r))
+      Search.appendToTextIndex(batch(10 * r + 1), idx) // a plain op
+      // the two markers are their own claims, each holding its lease's
+      // token; `_fence/` holds flip claims only
+      val ledger = children(s"$idx/_ledger")
+      assert(ledger.contains(s"batch-$r") &&
+        ledger.exists(_.startsWith("op-append")), s"$ledger")
+      assert(Claims.ledgerWithoutToken(idx).isEmpty)
+      assert(Claims.flipClaims(idx).forall(_.startsWith("flip-")))
+      Search.compactTextIndex(spark, idx)
+      // each compaction GCs the versions two flips back, with their claims
+      assert(Claims.orphanFlipClaims(idx).isEmpty,
+        s"claims left after compaction $r: ${Claims.orphanFlipClaims(idx)}")
+      assert(Claims.ledgerWithoutToken(idx).isEmpty)
     }
-    // a same-token retry of a retired commit passes again
-    Stage.withFencing(Stage.ExclusiveCommitToken)(leased(idx) { lease =>
+    assert(children(s"$idx/_ledger").contains("high-3"))
+    // a same-token retry of a committed claim passes, before and after a
+    // ledger fold (op markers survive it)
+    leased(idx) { lease =>
       val lock = new Path(s"$idx/_writer.lock")
       val tok = new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(lock.toUri.getPath)), "UTF-8")
-      def commit(): Unit = Stage.ExclusiveCommitToken.assertMayCommit(
-        fs(idx), new Path(idx), lock, tok, "op-retry")
+      def commit(): Unit = Stage.claimCommit(fs(idx), lock, tok,
+        new Path(s"$idx/_ledger/op-retry"))
       commit()
-      fs(idx).create(new Path(s"$idx/_ledger/op-retry"), false).close()
-      assert(fences == Set("op-retry"))
+      commit()
       Stage.compactLedger(lease, idx)
-      assert(fences.isEmpty)
+      assert(children(s"$idx/_ledger").contains("op-retry"))
       commit()
-      commit()
-    })
+    }
   }
 
   test("healthReport surfaces the writer lock in flight") {
